@@ -88,8 +88,8 @@ def hits(
     making every round associative-exact like pagerank()/kmeans. Overflow
     bound: raw sums are <= SCALE * max_weighted_degree and the normalize
     multiplies by SCALE again, so the method is exact while
-    max_in_degree <= ~9.2e12 (int64 / SCALE^2) — comfortably past any real
-    host graph; beyond that, drop SCALE to 1e3.
+    max_in_degree <= ~9.2e6 (int64 / SCALE^2). A hub with more in-links
+    than that overflows silently; for such graphs drop SCALE to 1e3.
 
     Scale posture: two map-side-combinable shuffles per round (the
     contribution groupBys on dst then src); the L-inf scalar attaches as a

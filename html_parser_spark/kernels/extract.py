@@ -1,21 +1,23 @@
-"""Vectorized extraction kernel: batched tokenize -> parent-stack span build.
+"""Extraction kernel: one compiled token scan -> parent-stack span build.
 
-This is the hot path that runs inside ``mapInArrow`` (one invocation per
-Arrow batch). Per document it makes exactly two array passes:
+This is the hot path that runs inside ``mapInArrow`` (one call per text
+span of each document). All character work is done by ``TOKEN_RE``, one
+compiled alternation of the reference tokenizer's regexes (built from
+``core.jsre``): the C regex engine walks the document token by token, with
+no string re-slicing (the reference's O(n²) ``advanceBy``, advance.ts:7),
+and Python only unpacks each token's groups and applies the tag-stack
+check. The tree is never materialized: the id/pid tree is isomorphic to
+this stack walk (SURVEY.md §1.1), so the span sequence is emitted directly.
 
-  pass 1 — tokenize: one left-to-right scan producing flat, columnar token
-           arrays (type / tag / payload), all character work done by compiled
-           regexes at integer offsets (no string re-slicing — the reference's
-           O(n²) ``advanceBy`` slicing, advance.ts:7, is replaced by cursor
-           arithmetic);
-  pass 2 — parent-stack build: a single walk over the token arrays with an
-           explicit tag stack, emitting the ordered span sequence directly
-           (the tree is never materialized — the id/pid tree is isomorphic to
-           this stack walk, SURVEY.md §1.1).
+TOKEN_RE's alternatives can never start at the same position, so each one
+fires exactly where the reference tokenizer applies the same regex; the
+final catch-all marks the first position where the reference throws or
+hangs, and ``_failure`` names the error from the characters there.
 
-Pass separation is REQUIRED for error parity: the reference tokenizes the
-whole source before building the tree (htmlParser.ts:26-33), so a tokenizer
-error late in the document must win over a tag-mismatch earlier in it.
+Error precedence: the reference tokenizes the whole source before building
+the tree (htmlParser.ts:26-33), so a tokenizer error late in the document
+must win over an earlier tag mismatch. A mismatch therefore only sets a
+flag and the scan continues to EOF or to a tokenizer failure.
 
 Semantics are pinned to ``core.oracle`` (itself pinned to the reference
 bundle); tests/test_kernel_vs_oracle.py asserts span-for-span equality.
@@ -23,16 +25,16 @@ bundle); tests/test_kernel_vs_oracle.py asserts span-for-span equality.
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass
-from typing import Any, Optional
+from typing import Any, Iterable, Optional
 
 from ..core.jsre import (
+    _JS_DOT_EXCL,
+    _WS,
     ATTR_RE,
-    CDATA_RE,
-    ELEMENT_RE,
     INTERP_RE,
     MEDIA_TAGS,
-    TEXT_RE,
     UNARY_TAGS,
 )
 from ..core.oracle import (
@@ -47,7 +49,40 @@ from ..core.oracle import (
     STATUS_OK,
 )
 
-# Compact token type codes (pass-1 output arrays)
+# One token per match; six groups (every group is paid for on every token,
+# so comment / CDATA / interpolation stay non-capturing):
+#   1 tag, 2 attrs   start tag: elementRE's second alternative behind a
+#                    '<' + ASCII letter guard. attrs runs greedily to the
+#                    '>', so a trailing '/' is the self-close mark; without
+#                    it, attrs equals elementRE's lazy group 3
+#   3 end            end tag with a non-empty name (elementRE's first
+#                    alternative)
+#   4 text           parseText's [^<>]+ where no other branch applies:
+#                    not '{{', second char not '/'
+#   (none)           comment (closed iff the '-->' search from pos+4
+#                    succeeds, else it swallows the rest), CDATA (']]'
+#                    close), interpolation
+#   5 undef          '</' that only elementRE's start alternative matches,
+#                    or an empty end-tag name: tagName is undefined or ''
+#                    -> always a tag mismatch
+#   6 bad            catch-all: the reference throws or hangs here; the
+#                    group holds the rest of the source
+TOKEN_RE = re.compile(
+    "<(?=[A-Za-z])([^>" + _WS + "/]*)[" + _WS + "]*([^<>]*)>"
+    "|</[" + _WS + "]*([^>" + _WS + "/]+)[" + _WS + "]*>"
+    r"|(?!\{\{)([^<>](?!/)[^<>]*)"
+    r"|<!--(?:[\s\S]*?-->|[\s\S]*)"
+    r"|<!\[CDATA\[[\s\S]*?\]\]"
+    r"|\{\{[" + _WS + "]*[^" + re.escape(_JS_DOT_EXCL) + "]*?[" + _WS + r"]*\}\}"
+    "|(</)[^<>]*>"
+    r"|([\s\S]+)"
+)
+
+# Documents up to this many chars are scanned with one findall list; longer
+# ones stream their tokens so a mega-doc never holds all of them at once.
+_FINDALL_MAX_CHARS = 1 << 16
+
+# Compact token type codes (_tokenize_arrays output)
 _T_TEXT = 0
 _T_OPEN = 1
 _T_VOID = 2
@@ -57,10 +92,6 @@ _T_END = 3
 _T_COMMENT = 4
 _T_CDATA = 5
 _T_INTERP = 6
-
-# sentinel distinguishing "end tag matched the start-tag regex alternative"
-# (tagName is JS undefined -> can never equal a real tag -> tag_mismatch)
-_UNDEF = object()
 
 
 @dataclass(frozen=True)
@@ -84,138 +115,82 @@ class _Fail(Exception):
         self.error = error
 
 
+def _failure(rest: str) -> tuple[str, str]:
+    """(status, error) for the source remaining at TOKEN_RE's catch-all."""
+    if rest.startswith("<![CDATA["):
+        return STATUS_ERROR, E_CDATA_UNCLOSED  # TypeError in the reference
+    if rest[0] == "<":
+        # '<!' not '<!--', '<' + non-letter, or elementRE never matching:
+        # the reference loops forever
+        return STATUS_DIVERGENT, E_DIVERGENT
+    if rest[1:2] == "/":
+        return STATUS_ERROR, E_NOT_DATA_MODE  # tokenize.ts:32-34 quirk
+    if rest.startswith("{{"):
+        return STATUS_ERROR, E_INTERP_UNCLOSED  # TypeError in the reference
+    return STATUS_DIVERGENT, E_DIVERGENT  # '>': empty text token, no advance
+
+
 def _tokenize_arrays(
     s: str, want_attrs: bool, keep_all: bool = False
 ) -> tuple[list[int], list[Optional[str]], list[Any], list[Any]]:
-    """Pass 1. Returns parallel arrays (types, tags, payloads, attrs).
+    """Tokenize one document into parallel arrays (types, tags, payloads,
+    attrs) by draining TOKEN_RE's matches; raises _Fail where the reference
+    throws or hangs.
 
     payloads: text content for _T_TEXT, src value for media _T_OPEN/_T_VOID.
-    Raises _Fail on reference-throw/reference-hang inputs.
+    _T_END tags are None when the reference's tagName is undefined or empty
+    (such an end tag can never match an open element).
 
-    keep_all=True additionally emits Comment/CDATA/Interpolation tokens
-    (payload = comment content per tokenize.ts:140-161 incl. the
-    unclosed-comment swallow-all, CDATA inner, raw interpolation match) for
-    full-parse consumers; the extraction path leaves it False and skips them
-    (they extract no spans), with zero cost on that hot path.
+    keep_all=True additionally emits Comment/CDATA/Interpolation tokens, with
+    payloads derived from the match text: comment content per
+    tokenize.ts:140-161 (an unclosed comment keeps the whole rest of the
+    source, '<!--' included), CDATA inner, and the (raw, inner)
+    interpolation pair. Without it they are skipped (they extract no spans).
     """
     types: list[int] = []
     tags: list[Any] = []
     payloads: list[Any] = []
     attrs_col: list[Any] = []
-    n = len(s)
-    pos = 0
-    # local bindings (hot loop)
-    element_match = ELEMENT_RE.match
-    text_match = TEXT_RE.match
-    starts = s.startswith
-    find = s.find
 
-    while pos < n:
-        c0 = s[pos]
-        if c0 == "<":
-            if starts("<![CDATA[", pos):
-                # DATA->CDATA toggle + parseCDATA (tokenize.ts:15-18,44-51,162-171)
-                m = CDATA_RE.match(s, pos)
-                if m is None:
-                    raise _Fail(STATUS_ERROR, E_CDATA_UNCLOSED)
-                if keep_all:
-                    types.append(_T_CDATA)
-                    tags.append(None)
-                    payloads.append(m.group(1))
-                    if want_attrs:
-                        attrs_col.append(None)
-                pos = m.end()  # CDATA contributes no span, no stack effect
-                continue
-            c1 = s[pos + 1] if pos + 1 < n else None
-            if c1 == "!":
-                if starts("<!--", pos):
-                    close = find("-->", pos + 4)
-                    if keep_all:
-                        types.append(_T_COMMENT)
-                        tags.append(None)
-                        # unclosed comment swallows the ENTIRE remaining
-                        # source including '<!--' (tokenize.ts:140-161)
-                        payloads.append(s[pos + 4 : close] if close >= 0 else s[pos:])
-                        if want_attrs:
-                            attrs_col.append(None)
-                    pos = close + 3 if close >= 0 else n  # comment: no span
-                    continue
-                # '<!' not '<!--' (e.g. <!DOCTYPE): parseText matches '' ->
-                # the reference loops forever (verified).
-                raise _Fail(STATUS_DIVERGENT, E_DIVERGENT)
-            if c1 is None or ("a" <= c1 <= "z") or ("A" <= c1 <= "Z"):
-                # parseStartTag; c1 None == JS /[a-zA-Z]/i.test(undefined)
-                m = element_match(s, pos)
-                if m is None or m.group(2) is None:
-                    raise _Fail(STATUS_DIVERGENT, E_DIVERGENT)  # no advance
-                tag = m.group(2)
-                self_close = m.group(4)
-                if self_close:
-                    if tag not in UNARY_TAGS:
-                        raise _Fail(STATUS_ERROR, E_ILLEGAL_SELF_CLOSE)
-                    types.append(_T_VOID)
-                else:
-                    types.append(_T_OPEN)
-                tags.append(tag)
-                if tag in MEDIA_TAGS:
-                    src = None
-                    for am in ATTR_RE.finditer(m.group(3)):
-                        if am.group(1) == "src":
-                            src = am.group(2) or am.group(3) or am.group(4)
-                            break
-                    payloads.append(src)
-                else:
-                    payloads.append(None)
-                if want_attrs:
-                    attrs_col.append(
-                        [
-                            (am.group(1), am.group(2) or am.group(3) or am.group(4))
-                            for am in ATTR_RE.finditer(m.group(3))
-                        ]
-                    )
-                pos = m.end()
-                continue
-            if c1 == "/":
-                m = element_match(s, pos)
-                if m is None:
-                    raise _Fail(STATUS_DIVERGENT, E_DIVERGENT)  # no advance
-                types.append(_T_END)
-                g1 = m.group(1)
-                tags.append(g1 if g1 is not None else _UNDEF)
-                payloads.append(None)
-                if want_attrs:
-                    attrs_col.append(None)
-                pos = m.end()
-                continue
-            # any other '<?': parseText matches '' -> hang
-            raise _Fail(STATUS_DIVERGENT, E_DIVERGENT)
-        # non-'<' position
-        if pos + 1 < n and s[pos + 1] == "/":
-            # tokenize.ts:32-34 quirk (operator precedence)
-            raise _Fail(STATUS_ERROR, E_NOT_DATA_MODE)
-        if c0 == "{" and pos + 1 < n and s[pos + 1] == "{":
-            m = INTERP_RE.match(s, pos)
-            if m is None:
-                raise _Fail(STATUS_ERROR, E_INTERP_UNCLOSED)
-            if keep_all:
-                types.append(_T_INTERP)
-                tags.append(None)
-                payloads.append((m.group(0), m.group(1)))  # (raw, inner)
-                if want_attrs:
-                    attrs_col.append(None)
-            pos = m.end()  # interpolation: no span
+    for m in TOKEN_RE.finditer(s):
+        tag, attrs, end, text, undef, bad = m.groups()
+        attr_list = None
+        if text:
+            t, tg, payload = _T_TEXT, None, text
+        elif tag:
+            if attrs.endswith("/"):
+                if tag not in UNARY_TAGS:
+                    raise _Fail(STATUS_ERROR, E_ILLEGAL_SELF_CLOSE)
+                t, tg, attrs = _T_VOID, tag, attrs[:-1]
+            else:
+                t, tg = _T_OPEN, tag
+            payload = _first_src_attr(attrs) if tag in MEDIA_TAGS else None
+            if want_attrs:
+                attr_list = [
+                    (am.group(1), am.group(2) or am.group(3) or am.group(4))
+                    for am in ATTR_RE.finditer(attrs)
+                ]
+        elif end or undef:
+            t, tg, payload = _T_END, end, None
+        elif bad:
+            raise _Fail(*_failure(bad))
+        elif not keep_all:
             continue
-        m = text_match(s, pos)
-        content = m.group(0)
-        if not content:
-            # '>' at pos: empty text token, no advance -> hang
-            raise _Fail(STATUS_DIVERGENT, E_DIVERGENT)
-        types.append(_T_TEXT)
-        tags.append(None)
-        payloads.append(content)
+        else:
+            raw = m.group()
+            tg = None
+            if raw[0] == "{":
+                t, payload = _T_INTERP, (raw, INTERP_RE.match(raw).group(1))
+            elif raw[2] == "-":
+                closed = len(raw) >= 7 and raw.endswith("-->")
+                t, payload = _T_COMMENT, (raw[4:-3] if closed else raw)
+            else:
+                t, payload = _T_CDATA, raw[9:-2]
+        types.append(t)
+        tags.append(tg)
+        payloads.append(payload)
         if want_attrs:
-            attrs_col.append(None)
-        pos = m.end()
+            attrs_col.append(attr_list)
 
     return types, tags, payloads, attrs_col
 
@@ -226,14 +201,12 @@ def extract_doc_spans(
     """Extract the ordered (kind, text, media_ref) span sequence of one HTML
     string. Never raises, never hangs. Fast path for tag-free payloads.
 
-    Fused single-pass variant of (_tokenize_arrays + parent-stack walk): the
-    token arrays are never materialized on this hot path. Error precedence is
-    preserved exactly (the reference tokenizes the WHOLE source before tree
-    building, htmlParser.ts:26-33): a tokenizer throw/hang anywhere must win
-    over an earlier tag mismatch, so on a tree error the scan CONTINUES
-    (collecting nothing) until EOF or a tokenizer failure. Equality with the
-    two-pass semantics is pinned by tests/test_kernel_vs_oracle.py and the
-    hypothesis + node-bundle fuzz suites.
+    Fused form of (_tokenize_arrays + parent-stack walk): one pass over
+    TOKEN_RE's tokens, no token arrays. An illegal self-close or a tokenizer
+    failure returns at once; a tag mismatch only sets a flag and the scan
+    goes on (see the module docstring). Equality with the oracle is pinned
+    by tests/test_kernel_vs_oracle.py and the hypothesis, edge-case and
+    node-bundle fuzz suites.
     """
     # Fast path: no markup metacharacters at all -> single text token.
     # ('/' excluded so the position-1 not_data_mode quirk can't fire,
@@ -241,80 +214,40 @@ def extract_doc_spans(
     if html and not any(c in html for c in "<>{/"):
         return [("text", html, None)], STATUS_OK, None
 
+    # Group tuples: non-participating groups are '' from findall and None
+    # from the stream, so every test below is on truthiness.
+    if len(html) <= _FINDALL_MAX_CHARS:
+        tokens: Iterable[tuple] = TOKEN_RE.findall(html)
+    else:
+        tokens = map(re.Match.groups, TOKEN_RE.finditer(html))
     spans: list[tuple[str, Optional[str], Optional[str]]] = []
-    stack: list[Any] = []
+    stack: list[str] = []
     tree_error = False  # first tag mismatch; finalized only at EOF
-    s = html
-    n = len(s)
-    pos = 0
-    element_match = ELEMENT_RE.match
-    text_match = TEXT_RE.match
-    starts = s.startswith
-    find = s.find
-
-    try:
-        while pos < n:
-            c0 = s[pos]
-            if c0 == "<":
-                if starts("<![CDATA[", pos):
-                    m = CDATA_RE.match(s, pos)
-                    if m is None:
-                        raise _Fail(STATUS_ERROR, E_CDATA_UNCLOSED)
-                    pos = m.end()
-                    continue
-                c1 = s[pos + 1] if pos + 1 < n else None
-                if c1 == "!":
-                    if starts("<!--", pos):
-                        close = find("-->", pos + 4)
-                        pos = close + 3 if close >= 0 else n
-                        continue
-                    raise _Fail(STATUS_DIVERGENT, E_DIVERGENT)
-                if c1 is None or ("a" <= c1 <= "z") or ("A" <= c1 <= "Z"):
-                    m = element_match(s, pos)
-                    if m is None or m.group(2) is None:
-                        raise _Fail(STATUS_DIVERGENT, E_DIVERGENT)
-                    tag = m.group(2)
-                    if m.group(4):  # self-closing
-                        if tag not in UNARY_TAGS:
-                            raise _Fail(STATUS_ERROR, E_ILLEGAL_SELF_CLOSE)
-                        if not tree_error and tag in MEDIA_TAGS:
-                            spans.append(("media", None, _first_src_attr(m.group(3))))
-                    elif not tree_error:
-                        if tag in MEDIA_TAGS:
-                            spans.append(("media", None, _first_src_attr(m.group(3))))
-                        stack.append(tag)
-                    pos = m.end()
-                    continue
-                if c1 == "/":
-                    m = element_match(s, pos)
-                    if m is None:
-                        raise _Fail(STATUS_DIVERGENT, E_DIVERGENT)
-                    if not tree_error:
-                        g1 = m.group(1)
-                        if g1 is None or not stack or stack[-1] != g1:
-                            tree_error = True  # keep scanning for tokenizer errors
-                        else:
-                            stack.pop()
-                    pos = m.end()
-                    continue
-                raise _Fail(STATUS_DIVERGENT, E_DIVERGENT)
-            if pos + 1 < n and s[pos + 1] == "/":
-                raise _Fail(STATUS_ERROR, E_NOT_DATA_MODE)
-            if c0 == "{" and pos + 1 < n and s[pos + 1] == "{":
-                m = INTERP_RE.match(s, pos)
-                if m is None:
-                    raise _Fail(STATUS_ERROR, E_INTERP_UNCLOSED)
-                pos = m.end()
-                continue
-            m = text_match(s, pos)
-            content = m.group(0)
-            if not content:
-                raise _Fail(STATUS_DIVERGENT, E_DIVERGENT)
+    for tag, attrs, end, text, undef, bad in tokens:
+        if text:
             if not tree_error:
-                spans.append(("text", content, None))
-            pos = m.end()
-    except _Fail as f:
-        return [], f.status, f.error
+                spans.append(("text", text, None))
+        elif tag:
+            if attrs.endswith("/"):  # self-closing: no stack effect
+                if tag not in UNARY_TAGS:
+                    return [], STATUS_ERROR, E_ILLEGAL_SELF_CLOSE
+                if not tree_error and tag in MEDIA_TAGS:
+                    spans.append(("media", None, _first_src_attr(attrs[:-1])))
+            elif not tree_error:
+                if tag in MEDIA_TAGS:
+                    spans.append(("media", None, _first_src_attr(attrs)))
+                stack.append(tag)
+        elif end:
+            if not tree_error:
+                if stack and stack[-1] == end:
+                    stack.pop()
+                else:
+                    tree_error = True
+        elif undef:
+            tree_error = True
+        elif bad:
+            return [], *_failure(bad)
+        # else comment / CDATA / interpolation: no span, no stack effect
 
     if tree_error:
         return [], STATUS_ERROR, E_TAG_MISMATCH

@@ -3,10 +3,10 @@
 Boilerplate stripping over the parsed token stream, à la Readability /
 Boilerpipe (Kohlschütter et al., WSDM 2010): tag-based subtree pruning,
 class/id token scoring, then block-level text-density + link-density
-classification. Runs entirely inside the mapInPandas kernel (no extra
-JVM<->Python crossing): it reuses the pass-1 token arrays from
-``kernels.extract._tokenize_arrays`` and replaces the strict span walk with a
-scored walk.
+classification. Runs entirely inside the extraction kernel (no extra
+JVM<->Python crossing): it reuses the strict kernel's tokenizer,
+``kernels.extract._tokenize_arrays`` (one compiled TOKEN_RE scan), and
+replaces the strict span walk with a scored walk.
 
 This branch is NOT covered by the reference-equality contract (the reference
 has no main-content notion — SURVEY.md §2.1 'extraction semantics'); it is a
@@ -91,7 +91,7 @@ def extract_main_spans(
     """Main-content spans of one HTML string: (kind, text, media_ref) triples.
 
     Parse errors/divergences surface exactly as in the strict kernel (same
-    pass-1 tokenizer), so status semantics stay aligned with the contract.
+    tokenizer), so status semantics stay aligned with the contract.
     """
     try:
         types, tags, payloads, attrs_col = _tokenize_arrays(html, want_attrs=True)

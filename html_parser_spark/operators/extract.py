@@ -11,7 +11,9 @@ Output table:
 
 Scale notes (100 TB / 1000 executors):
 - Exactly ONE JVM->Python Arrow crossing on the hot path: tokenize + tree
-  build + extraction are fused in a single mapInArrow stage (SURVEY.md §7.3);
+  build + extraction are fused in a single mapInArrow stage (SURVEY.md §7.3),
+  one compiled token scan plus a tag-stack walk per document
+  (kernels/extract.py);
   the crossing moves flat Arrow child arrays, never per-span Python dicts
   (the pandas crossing is kept as a tested fallback, use_arrow=False).
 - Skew: mega-documents are row-atomic, so the defense is (a) salted
@@ -38,6 +40,7 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import zlib
 from typing import Iterator, Optional
 
 from pyspark.sql import DataFrame
@@ -237,8 +240,6 @@ def _process_arrow_batch(pa, batch, heur, n_buckets, schema):
 def _stable_bucket(doc_id: Optional[str], n_buckets: int) -> int:
     # Stable across runs and Python processes (NOT hash(), which is seeded).
     # Null doc_ids (dirty upstream data) deterministically land in bucket 0.
-    import zlib
-
     if doc_id is None:
         return 0
     return zlib.crc32(doc_id.encode("utf-8")) % n_buckets

@@ -1,0 +1,112 @@
+"""Seeded edge-case differential test: the TOKEN_RE kernel against the
+oracle on strings built from pieces that the hypothesis soup alphabet
+rarely or never produces (JS-only whitespace, comment and end-tag edges,
+brace edges, doctype / processing-instruction openers, case-sensitive void
+tags). Runs both ways of draining the scanner: the findall list used for
+ordinary documents and the token stream used above _FINDALL_MAX_CHARS.
+
+Also pins the stream's memory bound on a mega-doc.
+"""
+
+from __future__ import annotations
+
+import random
+import tracemalloc
+
+import pytest
+
+from html_parser_spark.core import oracle
+from html_parser_spark.kernels import extract as kext
+from html_parser_spark.operators.parse import parse_one, parse_one_flat
+
+EDGE_PIECES = (
+    # JS \s whitespace, spelled out in core/jsre (Python's \s lacks U+FEFF)
+    "\u00a0", "\ufeff", "\u2028", "<p\u00a0class=x>", "</p\ufeff>", "{{\u2028a }}",
+    # comment edges: the '-->' search starts 4 chars in
+    "<!-->", "<!--->", "<!---->", "<!-- c -->", "-->",
+    # tag-name and end-tag edges
+    "<a<b>", "</ a b>", "</>", "</ >", "</a/>", "<a/", "</a", "<1", "<",
+    # brace edges
+    "{/", "{", "{{", "{{ x }}", "}}", "{{a\nb}}",
+    # other openers and case-sensitive void tags
+    "<!DOCTYPE html>", "<?xml?>", "a/", "ab/c", "<IMG/>", "<source src='s'/>",
+    "<img src=\"i\">", "<embed src=e/>", "<img src=x//>", "<br />", "<a/b>",
+    "<![CDATA[x]]", "<![CDATA[",
+    # benign filler so a good share of strings parse
+    "<a>", "</a>", "<b>", "</b>", "<p>", "</p>", "x", "ab", " ", "\n",
+)
+N_CASES = 50_000
+
+
+def _cases() -> list[str]:
+    rng = random.Random(20260417)
+    return [
+        "".join(rng.choice(EDGE_PIECES) for _ in range(rng.randint(0, 8)))
+        for _ in range(N_CASES)
+    ]
+
+
+def _flat_rows(html: str):
+    cols = [[] for _ in range(10)]
+    n_nodes, status, error = parse_one_flat(html, *cols)
+    if n_nodes < 0:
+        return None, status, error
+    ids, pids, kinds, tags, contents, inners, unaries, names, values, lens = cols
+    rows, ai = [], 0
+    for j in range(n_nodes):
+        attrs = None
+        if lens[j] >= 0:
+            attrs = [
+                {"name": names[ai + k], "value": values[ai + k]} for k in range(lens[j])
+            ]
+            ai += lens[j]
+        rows.append({
+            "id": ids[j], "pid": pids[j], "kind": kinds[j], "tag": tags[j],
+            "content": contents[j], "inner": inners[j], "attrs": attrs,
+            "unary": unaries[j],
+        })
+    return rows, status, error
+
+
+@pytest.fixture(params=["findall", "stream"])
+def drain(request, monkeypatch):
+    if request.param == "stream":
+        monkeypatch.setattr(kext, "_FINDALL_MAX_CHARS", -1)
+    return request.param
+
+
+def test_edge_pieces_kernel_equals_oracle(drain):
+    statuses = {"ok": 0, "error": 0, "divergent": 0}
+    for html in _cases():
+        want = oracle.parse_and_extract(html)
+        spans, status, error = kext.extract_doc_spans(html)
+        assert (status, error) == (want.status, want.error), repr(html)
+        assert spans == want.spans, repr(html)
+        statuses[status] += 1
+    # every outcome class is exercised in volume
+    assert min(statuses.values()) > N_CASES // 20, statuses
+
+
+def test_edge_pieces_parse_flat_equals_oracle_form():
+    for html in _cases()[: N_CASES // 2]:
+        assert _flat_rows(html) == parse_one(html), repr(html)
+
+
+def test_mega_doc_streams_in_bounded_memory():
+    """A ~1 MB list/table document must not hold all its tokens at once:
+    the traced peak stays under twice the size of the returned spans."""
+    block = "".join(
+        f"<ul><li><a href=x>item {i}</a></li><li>b</li></ul>"
+        f"<table><tr><td><p>cell {i}</p></td><td>c</td></tr></table>"
+        for i in range(60)
+    )
+    html = "<div>" + block * 150 + "</div>"
+    assert len(html) > 900_000
+    tracemalloc.start()
+    try:
+        spans, status, _ = kext.extract_doc_spans(html)
+        retained, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert status == "ok" and len(spans) > 30_000
+    assert peak < 2 * retained, (peak, retained)

@@ -23,7 +23,8 @@ from html_parser_spark.operators.serialize import serialize_one
 
 sys.setrecursionlimit(100_000)
 
-SOUP_ALPHABET = "<>/!{}-= \"'abPdiv[]CDATA&;汉🎈\n\t."
+# U+00A0 and U+FEFF are JS \s whitespace (Python's \s lacks U+FEFF)
+SOUP_ALPHABET = "<>/!{}-= \"'abPdiv[]CDATA&;汉🎈\n\t.\u00a0\ufeff"
 
 soup = st.text(alphabet=SOUP_ALPHABET, min_size=0, max_size=60)
 

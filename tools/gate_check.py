@@ -10,6 +10,9 @@ here without re-running the query).
 Usage: PYTHONPATH=/root/repo python tools/gate_check.py [--json OUT] [sf_dir] [query ...]
 With no positional arguments, runs BOTH sf0.01 and sf0.1 (type drift and
 int64 headroom bugs only show up under typed hashing or bigger data).
+sf_dir is a directory path, or a scale factor ('0.01', 'sf0.01', 'SF_0.01')
+naming a sibling of the default sf directories. A missing directory or a
+query name not in the registry exits with status 2 before Spark starts.
 --json OUT additionally writes a driver-style correctness record per query
 (rows_match / schema_match / hash_match / spark_rows / oracle_rows / err,
 keyed by query name; multi-sf runs record the worst cell per query) so each
@@ -20,6 +23,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -82,6 +86,16 @@ def type_drift(spark_df, con, sql) -> list[str]:
         if want is not None and got is not None and got not in want:
             out.append(f"{f.name}: spark {f.dataType.simpleString()} vs oracle {got}")
     return out
+
+
+_SF_SPELLING = re.compile(r"(?:sf[_-]?)?(\d*\.?\d+)", re.IGNORECASE)
+
+
+def scale_factor_dir(testdata: str, arg: str) -> str | None:
+    """'0.01', 'sf0.01', 'SF0.01', 'sf_0.01', 'sf.01' -> <testdata>/sf0.01;
+    None when ``arg`` does not spell a scale factor."""
+    m = _SF_SPELLING.fullmatch(arg)
+    return os.path.join(testdata, f"sf{float(m.group(1)):g}") if m else None
 
 
 def run_gate(spark, sf_dir: str, only: set[str], records: dict | None = None) -> int:
@@ -192,12 +206,22 @@ def main():
         i = argv.index("--json")
         json_out = argv[i + 1]
         argv = argv[:i] + argv[i + 2 :]
-    if argv:
+    only = set(argv[1:])
+    if argv and (os.sep in argv[0] or os.path.isdir(argv[0])):
         sf_dirs = [argv[0]]
-        only = set(argv[1:])
     else:
         sf_dirs = ["/root/testdata/sf0.01", "/root/testdata/sf0.1"]
-        only = set()
+        if argv:
+            resolved = scale_factor_dir(os.path.dirname(sf_dirs[0]), argv[0])
+            sf_dirs = [resolved or argv[0]]
+    missing = [d for d in sf_dirs if not os.path.isdir(d)]
+    unknown = sorted(only - set(entrymod.queries()))
+    if missing or unknown:
+        for d in missing:
+            print(f"gate_check: no such sf directory: {d}", file=sys.stderr)
+        for q in unknown:
+            print(f"gate_check: unknown query (not in queries()): {q}", file=sys.stderr)
+        sys.exit(2)
 
     from pyspark.sql import SparkSession
 
