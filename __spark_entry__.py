@@ -606,7 +606,7 @@ def q_text_tfidf(spark, sf_dir):
 def q_source_warc(spark, sf_dir):
     """WARC container round trip (sources/warc.py): pack the documents
     table into multi-record gzipped WARC files (one groupBy), split them
-    back into records with one mapInPandas crossing, and emit per-record
+    back into records with one mapInArrow crossing, and emit per-record
     facts — the header-declared length and the md5 of the actual payload
     BYTES, so the oracle's closed-form (length(text), md5(text)) verifies
     both the container writer and the reader end-to-end."""

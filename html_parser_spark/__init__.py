@@ -8,7 +8,9 @@ Public surface:
                                        (mapInArrow; salted repartition opt-in)
   operators.extract.exploded_spans     one-row-per-span view
   operators.serialize.serialize_html   reference-quirk-exact HTML generate
-  operators.diff.diff_documents        BFS positional pair diff (cogrouped)
+  operators.diff.diff_documents        BFS positional pair diff (full outer
+                                       join + one mapInArrow)
+  operators.arrow_rows.map_rows        the one row-at-a-time Python crossing
   operators.multimodal.media_metadata  binary-column metadata kernel
   operators.layout.route_media/parse_layout   PDF/layout branch
   functions.text                       lang-ID / quality / tokens / fingerprint

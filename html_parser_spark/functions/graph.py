@@ -89,7 +89,10 @@ def hits(
     bound: raw sums are <= SCALE * max_weighted_degree and the normalize
     multiplies by SCALE again, so the method is exact while
     max_in_degree <= ~9.2e6 (int64 / SCALE^2). A hub with more in-links
-    than that overflows silently; for such graphs drop SCALE to 1e3.
+    than that overflows bigint; under ANSI mode (spark.sql.ansi.enabled,
+    the Spark 4 default, pinned by session.apply_scale_confs) the query
+    then fails with ARITHMETIC_OVERFLOW instead of returning wrapped
+    ranks. For such graphs drop SCALE to 1e3.
 
     Scale posture: two map-side-combinable shuffles per round (the
     contribution groupBys on dst then src); the L-inf scalar attaches as a

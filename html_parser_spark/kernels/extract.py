@@ -270,14 +270,15 @@ def process_document_flat(
     out_texts: list[Optional[str]],
     out_mrefs: list[Optional[str]],
 ) -> tuple[int, str, Optional[str], int]:
-    """process_document, columnar form: append this document's extracted
-    spans to the shared flat output lists (per-span order is the position
-    within the document, i.e. 0..n-1 — the caller reconstructs it from the
-    returned count). Returns (n_spans, status, error, n_text_chars).
+    """Process one interleaved document (parallel input-span arrays):
+    append its extracted spans to the shared flat output lists (per-span
+    order is the position within the document, i.e. 0..n-1 — the caller
+    reconstructs it from the returned count). Returns (n_spans, status,
+    error, n_text_chars).
 
-    Same semantics as process_document (pinned by test_kernel_vs_oracle):
-    on the first failing text span, earlier appended spans are KEPT and the
-    status reflects the failure.
+    Same semantics as core/oracle.process_document (pinned by
+    test_kernel_vs_oracle): on the first failing text span, earlier
+    appended spans are KEPT and the status reflects the failure.
     """
     n0 = len(out_kinds)
     n_chars = 0
@@ -297,34 +298,3 @@ def process_document_flat(
             if t is not None:
                 n_chars += len(t)
     return len(out_kinds) - n0, STATUS_OK, None, n_chars
-
-
-def process_document(
-    kinds: list[str],
-    texts: list[Optional[str]],
-    media_refs: list[Optional[str]],
-) -> tuple[list[dict[str, Any]], str, Optional[str], int]:
-    """Process one interleaved document (parallel input-span arrays).
-
-    Returns (out_spans, status, error, n_text_chars); out_spans are dicts
-    {kind, text, media_ref, order}. Mirrors oracle.process_document: on the
-    first failing text span, earlier spans are kept and status reflects the
-    failure.
-    """
-    out: list[dict[str, Any]] = []
-    order = 0
-    n_chars = 0
-    for kind, text, mref in zip(kinds, texts, media_refs):
-        if kind == "media":
-            out.append({"kind": "media", "text": None, "media_ref": mref, "order": order})
-            order += 1
-            continue
-        spans, status, error = extract_doc_spans(text if text is not None else "")
-        if status != STATUS_OK:
-            return out, status, error, n_chars
-        for k, t, mr in spans:
-            out.append({"kind": k, "text": t, "media_ref": mr, "order": order})
-            if t is not None:
-                n_chars += len(t)
-            order += 1
-    return out, STATUS_OK, None, n_chars

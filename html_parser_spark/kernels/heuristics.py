@@ -234,8 +234,9 @@ def extract_main_content(
 ) -> list[dict[str, Any]]:
     """Document-level main-content extraction over interleaved input spans.
 
-    Same interleaving contract as kernels.extract.process_document: input
-    media spans pass through; text spans are reduced to their main content.
+    Same interleaving contract as kernels.extract.process_document_flat:
+    input media spans pass through; text spans are reduced to their main
+    content.
     Failing text spans contribute nothing (the strict pipeline already
     reported their status; the heuristic branch is best-effort per span).
     """

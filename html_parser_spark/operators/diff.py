@@ -11,17 +11,16 @@ Scale shape: the doc_id join is the pipeline's only required shuffle beyond
 salting (SURVEY.md §3.2). Pairing uses a relational FULL OUTER join followed
 by ONE batched Python crossing — not cogroup/applyInPandas, which
 materializes a pandas group per doc_id (one-row frames; measured ~10x slower
-at 5k docs and pathological at 1e9 pairs). The crossing is mapInArrow by
-default: the input is flat strings and the only nested output
-(attr_changes list<struct>) is rebuilt from flat child arrays + offsets,
-never per-row dict lists (same pattern as operators/extract.py; pandas twin
-kept as use_arrow=False). Unpaired rows surface with status 'missing_old' /
-'missing_new' (never dropped rows).
+at 5k docs and pathological at 1e9 pairs). The crossing is mapInArrow: the
+input is flat strings and the only nested output (attr_changes
+list<struct>) is rebuilt from flat child arrays + offsets, never per-row
+dict lists (same pattern as operators/extract.py). Unpaired rows surface
+with status 'missing_old' / 'missing_new' (never dropped rows).
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -111,7 +110,6 @@ def diff_documents(
     df_old: DataFrame,
     html_col: str = "html",
     id_col: str = "doc_id",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """(doc_id, html) x2 -> (doc_id, diff_html, status, error, n_ins, n_del,
     attr_changes)."""
@@ -127,33 +125,15 @@ def diff_documents(
         "doc_id",
         "full_outer",
     )
-    if use_arrow:
-        return paired.mapInArrow(_arrow_kernel, schema=DIFF_SCHEMA)
-    return paired.mapInPandas(_pandas_kernel, schema=DIFF_SCHEMA)
+    return paired.mapInArrow(_arrow_kernel, schema=DIFF_SCHEMA)
 
 
 def _arrow_kernel(batches):
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    change_t = pa.struct(
-        [
-            pa.field("node_id", pa.int32()),
-            pa.field("change", pa.string()),
-            pa.field("name", pa.string()),
-            pa.field("value", pa.string()),
-        ]
-    )
-    schema = pa.schema(
-        [
-            pa.field("doc_id", pa.string()),
-            pa.field("diff_html", pa.string()),
-            pa.field("status", pa.string()),
-            pa.field("error", pa.string()),
-            pa.field("n_ins", pa.int32()),
-            pa.field("n_del", pa.int32()),
-            pa.field("attr_changes", pa.list_(change_t)),
-        ]
-    )
+    schema = to_arrow_schema(DIFF_SCHEMA)
+    changes_t = schema.field("attr_changes").type
     for batch in batches:
         doc_arr = batch.column(batch.schema.get_field_index("doc_id"))
         if doc_arr.type != pa.string():
@@ -191,10 +171,13 @@ def _arrow_kernel(batches):
                 pa.array(ac_names, pa.string()),
                 pa.array(ac_values, pa.string()),
             ],
-            fields=list(change_t),
+            fields=list(changes_t.value_type),
         )
         changes_arr = pa.ListArray.from_arrays(
-            pa.array(ac_offs, pa.int32()), change_struct, mask=pa.array(ac_mask)
+            pa.array(ac_offs, pa.int32()),
+            change_struct,
+            type=changes_t,
+            mask=pa.array(ac_mask, pa.bool_()),
         )
         yield pa.RecordBatch.from_arrays(
             [
@@ -207,42 +190,6 @@ def _arrow_kernel(batches):
                 changes_arr,
             ],
             schema=schema,
-        )
-
-
-def _pandas_kernel(batches):  # Iterator[pd.DataFrame] -> Iterator[pd.DataFrame]
-    import pandas as pd
-
-    for pdf in batches:
-        htmls, statuses, errors, ins_l, del_l, changes = [], [], [], [], [], []
-        for new_html, old_html in zip(pdf["new_html"], pdf["old_html"]):
-            html, status, error, n_ins, n_del, attr_rows = _diff_one(
-                new_html if new_html is not None else None,
-                old_html if old_html is not None else None,
-            )
-            htmls.append(html)
-            statuses.append(status)
-            errors.append(error)
-            ins_l.append(n_ins)
-            del_l.append(n_del)
-            changes.append(
-                None
-                if attr_rows is None
-                else [
-                    {"node_id": nid, "change": c, "name": n, "value": v}
-                    for nid, c, n, v in attr_rows
-                ]
-            )
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "diff_html": htmls,
-                "status": statuses,
-                "error": errors,
-                "n_ins": pd.array(ins_l, dtype="int32"),
-                "n_del": pd.array(del_l, dtype="int32"),
-                "attr_changes": changes,
-            }
         )
 
 

@@ -15,7 +15,8 @@ Scale notes (100 TB / 1000 executors):
   one compiled token scan plus a tag-stack walk per document
   (kernels/extract.py);
   the crossing moves flat Arrow child arrays, never per-span Python dicts
-  (the pandas crossing is kept as a tested fallback, use_arrow=False).
+  (this and the parse/diff kernels are the only hand-built Arrow rebuilds;
+  every flat-row kernel goes through operators/arrow_rows.map_rows).
 - Skew: mega-documents are row-atomic, so the defense is (a) salted
   repartitioning — salt_by='hash' spreads docs uniformly on the raw
   xxhash64(doc_id); salt_by='bytes' is SIZE-WEIGHTED: an AQE REBALANCE on
@@ -41,7 +42,7 @@ Scale notes (100 TB / 1000 executors):
 from __future__ import annotations
 
 import zlib
-from typing import Iterator, Optional
+from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -54,7 +55,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..kernels.extract import ExtractOptions, process_document
+from ..kernels.extract import ExtractOptions
 
 SPAN_STRUCT = StructType(
     [
@@ -94,46 +95,6 @@ INPUT_SCHEMA = StructType(
 )
 
 
-def _kernel_factory(options: ExtractOptions, n_buckets: int):
-    heur = None
-    if options.mode == "main":
-        from ..kernels.heuristics import extract_main_content as heur  # noqa: F811
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        for pdf in batches:
-            yield _process_batch(pd, pdf, heur, n_buckets)
-
-    return kernel
-
-
-def _arrow_span_schema(pa):
-    return pa.schema(
-        [
-            pa.field("doc_id", pa.string()),
-            pa.field(
-                "spans",
-                pa.list_(
-                    pa.struct(
-                        [
-                            pa.field("kind", pa.string()),
-                            pa.field("text", pa.string()),
-                            pa.field("media_ref", pa.string()),
-                            pa.field("order", pa.int32()),
-                        ]
-                    )
-                ),
-            ),
-            pa.field("status", pa.string()),
-            pa.field("error", pa.string()),
-            pa.field("n_spans", pa.int32()),
-            pa.field("n_text_chars", pa.int64()),
-            pa.field("partition_id", pa.int32()),
-        ]
-    )
-
-
 def _arrow_kernel_factory(options: ExtractOptions, n_buckets: int):
     heur = None
     if options.mode == "main":
@@ -141,8 +102,9 @@ def _arrow_kernel_factory(options: ExtractOptions, n_buckets: int):
 
     def kernel(batches):
         import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-        schema = _arrow_span_schema(pa)
+        schema = to_arrow_schema(EXTRACT_SCHEMA)
         for batch in batches:
             yield _process_arrow_batch(pa, batch, heur, n_buckets, schema)
 
@@ -155,9 +117,9 @@ def _process_arrow_batch(pa, batch, heur, n_buckets, schema):
     list<struct> column is decomposed into its flat child arrays (one C
     pass per column), per-document slices are cut by the list offsets, and
     the output list<struct> is rebuilt from flat arrays + offsets. This
-    roughly halves crossing overhead vs the pandas path (measured in
-    BASELINE.md); the pandas kernel (_process_batch) remains the semantic
-    twin and both are pinned to the same oracle by test_spark_extract."""
+    roughly halved crossing overhead vs the former pandas path (measured in
+    BASELINE.md); the output is pinned to core/oracle by
+    tests/test_spark_extract.py."""
     from ..kernels.extract import process_document_flat
 
     idx_doc = batch.schema.get_field_index("doc_id")
@@ -213,6 +175,7 @@ def _process_arrow_batch(pa, batch, heur, n_buckets, schema):
         n_chars_l.append(n_chars)
         part_ids.append(_stable_bucket(doc_ids[i], n_buckets))
 
+    spans_t = schema.field("spans").type
     span_struct = pa.StructArray.from_arrays(
         [
             pa.array(out_kinds, pa.string()),
@@ -220,9 +183,11 @@ def _process_arrow_batch(pa, batch, heur, n_buckets, schema):
             pa.array(out_mrefs, pa.string()),
             pa.array(out_orders, pa.int32()),
         ],
-        fields=list(schema.field("spans").type.value_type),
+        fields=list(spans_t.value_type),
     )
-    spans_out = pa.ListArray.from_arrays(pa.array(out_offsets, pa.int32()), span_struct)
+    spans_out = pa.ListArray.from_arrays(
+        pa.array(out_offsets, pa.int32()), span_struct, type=spans_t
+    )
     return pa.RecordBatch.from_arrays(
         [
             doc_arr,
@@ -245,44 +210,11 @@ def _stable_bucket(doc_id: Optional[str], n_buckets: int) -> int:
     return zlib.crc32(doc_id.encode("utf-8")) % n_buckets
 
 
-def _process_batch(pd, pdf, heur, n_buckets):
-    doc_ids = pdf["doc_id"].tolist()
-    spans_col = pdf["spans"].tolist()
-    out_spans, statuses, errors, n_spans_l, n_chars_l, part_ids = [], [], [], [], [], []
-    for doc_id, in_spans in zip(doc_ids, spans_col):
-        if in_spans is None:
-            in_spans = []
-        kinds = [s["kind"] for s in in_spans]
-        texts = [s["text"] for s in in_spans]
-        mrefs = [s["media_ref"] for s in in_spans]
-        spans, status, error, n_chars = process_document(kinds, texts, mrefs)
-        if heur is not None and status == "ok":
-            spans = heur(kinds, texts, mrefs)
-        out_spans.append(spans)
-        statuses.append(status)
-        errors.append(error)
-        n_spans_l.append(len(spans))
-        n_chars_l.append(n_chars)
-        part_ids.append(_stable_bucket(doc_id, n_buckets))
-    return pd.DataFrame(
-        {
-            "doc_id": doc_ids,
-            "spans": out_spans,
-            "status": statuses,
-            "error": errors,
-            "n_spans": pd.array(n_spans_l, dtype="int32"),
-            "n_text_chars": pd.array(n_chars_l, dtype="int64"),
-            "partition_id": pd.array(part_ids, dtype="int32"),
-        }
-    )
-
-
 def extract_spans(
     df: DataFrame,
     options: Optional[ExtractOptions] = None,
     salt_partitions: Optional[int] = None,
     n_buckets: int = 1024,
-    use_arrow: bool = True,
     salt_by: str = "hash",
 ) -> DataFrame:
     """The flagship operator: interleaved docs -> ordered extracted spans.
@@ -293,9 +225,6 @@ def extract_spans(
     shuffle bytes, mega-docs isolated; partition count follows
     spark.sql.adaptive.advisoryPartitionSizeInBytes rather than
     salt_partitions). n_buckets: lineage bucket count.
-    use_arrow: mapInArrow crossing (default — avoids per-span dict
-    materialization on both sides); False selects the pandas crossing
-    (semantic twin, kept for comparison and as a fallback).
     """
     options = options or ExtractOptions()
     missing = {"doc_id", "spans"} - set(df.columns)
@@ -320,9 +249,7 @@ def extract_spans(
         # leave ~1/e of the partitions empty (verified) — hash the raw
         # 64-bit doc hash instead
         df = df.repartition(salt_partitions, F.xxhash64(F.col("doc_id")))
-    if use_arrow:
-        return df.mapInArrow(_arrow_kernel_factory(options, n_buckets), schema=EXTRACT_SCHEMA)
-    return df.mapInPandas(_kernel_factory(options, n_buckets), schema=EXTRACT_SCHEMA)
+    return df.mapInArrow(_arrow_kernel_factory(options, n_buckets), schema=EXTRACT_SCHEMA)
 
 
 def exploded_spans(df_extracted: DataFrame) -> DataFrame:

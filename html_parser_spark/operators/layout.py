@@ -26,7 +26,8 @@ multi-MB documents (same mega-row guidance as the extraction kernel).
 
 from __future__ import annotations
 
-from typing import Callable, Iterator
+import zlib
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -39,6 +40,7 @@ from pyspark.sql.types import (
 )
 
 from ..core.pdf import pdf_text_blocks, synth_pdf
+from .arrow_rows import map_rows
 
 LAYOUT_TYPES = ("pdf", "docx", "ps")  # extensions routed to the layout parser
 
@@ -50,6 +52,14 @@ LAYOUT_SCHEMA = StructType(
         StructField("block_order", IntegerType()),
         StructField("block_kind", StringType()),  # 'text' | 'table' | 'figure'
         StructField("content", StringType()),
+    ]
+)
+
+PDF_PAYLOAD_SCHEMA = StructType(
+    [
+        StructField("doc_id", StringType()),
+        StructField("media_ref", StringType()),
+        StructField("payload", BinaryType()),
     ]
 )
 
@@ -90,53 +100,20 @@ def attach_pdf(docs: DataFrame) -> DataFrame:
     closed-form SQL oracle. With real data the payload column comes from
     the lake instead."""
 
-    def kernel(batches):
-        import zlib
+    def rows(doc_id, text):
+        text = text or ""
+        title = " ".join(text.split(" ")[:3])
+        # deterministic id-derived variant (works for any id shape);
+        # the container never changes the extracted blocks, so the
+        # SQL oracle is independent of it
+        v = zlib.crc32(str(doc_id).encode("utf-8")) % 3
+        payload = synth_pdf([[title], [text]], compress=v >= 1, objstm=v == 2)
+        return [(str(doc_id), f"synth://{doc_id}.pdf", payload)]
 
-        import pyarrow as pa
-
-        schema = pa.schema(
-            [
-                pa.field("doc_id", pa.string()),
-                pa.field("media_ref", pa.string()),
-                pa.field("payload", pa.binary()),
-            ]
-        )
-        for batch in batches:
-            ids = batch.column(batch.schema.get_field_index("doc_id")).to_pylist()
-            texts = batch.column(batch.schema.get_field_index("text")).to_pylist()
-            refs, payloads = [], []
-            for doc_id, text in zip(ids, texts):
-                text = text or ""
-                title = " ".join(text.split(" ")[:3])
-                refs.append(f"synth://{doc_id}.pdf")
-                # deterministic id-derived variant (works for any id shape);
-                # the container never changes the extracted blocks, so the
-                # SQL oracle is independent of it
-                v = zlib.crc32(str(doc_id).encode("utf-8")) % 3
-                payloads.append(
-                    synth_pdf(
-                        [[title], [text]], compress=v >= 1, objstm=v == 2
-                    )
-                )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([str(i) for i in ids], pa.string()),
-                    pa.array(refs, pa.string()),
-                    pa.array(payloads, pa.binary()),
-                ],
-                schema=schema,
-            )
-
-    out_schema = StructType(
-        [
-            StructField("doc_id", StringType()),
-            StructField("media_ref", StringType()),
-            StructField("payload", BinaryType()),
-        ]
-    )
-    return docs.select(F.col("doc_id").cast("string").alias("doc_id"), "text").mapInArrow(
-        kernel, schema=out_schema
+    return map_rows(
+        docs.select(F.col("doc_id").cast("string").alias("doc_id"), "text"),
+        rows,
+        PDF_PAYLOAD_SCHEMA,
     )
 
 
@@ -150,57 +127,23 @@ def parse_layout_payloads(
     """REAL layout parse over (doc_id, media_ref, payload: binary) rows —
     the default kernel is the pure-Python PDF text extractor
     (core/pdf.pdf_text_blocks); swap `layout_parser=` for other formats.
-    One mapInArrow crossing; bytes stay in Arrow buffers until the kernel
-    reads them; malformed payloads yield zero block rows (never fail the
-    stage)."""
+    One mapInArrow crossing (map_rows): the bytes move in Arrow batches and
+    become Python bytes once per batch; malformed payloads yield zero
+    block rows (never fail the stage)."""
 
-    def kernel(batches):
-        import pyarrow as pa
+    def rows(doc_id, ref, p):
+        blocks = layout_parser(bytes(p) if p is not None else b"")
+        return [(str(doc_id), ref) + tuple(b) for b in blocks]
 
-        schema = pa.schema(
-            [
-                pa.field("doc_id", pa.string()),
-                pa.field("media_ref", pa.string()),
-                pa.field("page", pa.int32()),
-                pa.field("block_order", pa.int32()),
-                pa.field("block_kind", pa.string()),
-                pa.field("content", pa.string()),
-            ]
-        )
-        for batch in batches:
-            # the operator's select below normalizes the column names
-            ids = batch.column(batch.schema.get_field_index("doc_id")).to_pylist()
-            refs = batch.column(batch.schema.get_field_index("media_ref")).to_pylist()
-            payloads = batch.column(batch.schema.get_field_index("payload"))
-            doc_ids, mrefs, pages, orders, kinds, contents = [], [], [], [], [], []
-            for j, (doc_id, ref) in enumerate(zip(ids, refs)):
-                p = payloads[j].as_py()
-                for page, order, kind, content in layout_parser(
-                    bytes(p) if p is not None else b""
-                ):
-                    doc_ids.append(str(doc_id))
-                    mrefs.append(ref)
-                    pages.append(page)
-                    orders.append(order)
-                    kinds.append(kind)
-                    contents.append(content)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(doc_ids, pa.string()),
-                    pa.array(mrefs, pa.string()),
-                    pa.array(pages, pa.int32()),
-                    pa.array(orders, pa.int32()),
-                    pa.array(kinds, pa.string()),
-                    pa.array(contents, pa.string()),
-                ],
-                schema=schema,
-            )
-
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(ref_col).alias("media_ref"),
-        F.col(payload_col).alias("payload"),
-    ).mapInArrow(kernel, schema=LAYOUT_SCHEMA)
+    return map_rows(
+        df.select(
+            F.col(id_col).alias("doc_id"),
+            F.col(ref_col).alias("media_ref"),
+            F.col(payload_col).alias("payload"),
+        ),
+        rows,
+        LAYOUT_SCHEMA,
+    )
 
 
 def fake_layout_parser(media_ref: str) -> list[tuple[int, int, str, str]]:
@@ -228,29 +171,8 @@ def parse_layout(
     (doc_id, media_ref) rows with a pluggable kernel (default: the
     deterministic md5-fake). The REAL byte-level path is
     parse_layout_payloads."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        for pdf in batches:
-            doc_ids, mrefs, pages, orders, kinds, contents = [], [], [], [], [], []
-            for doc_id, ref in zip(pdf["doc_id"], pdf["media_ref"]):
-                for page, order, kind, content in layout_parser(ref):
-                    doc_ids.append(doc_id)
-                    mrefs.append(ref)
-                    pages.append(page)
-                    orders.append(order)
-                    kinds.append(kind)
-                    contents.append(content)
-            yield pd.DataFrame(
-                {
-                    "doc_id": doc_ids,
-                    "media_ref": mrefs,
-                    "page": pd.array(pages, dtype="int32"),
-                    "block_order": pd.array(orders, dtype="int32"),
-                    "block_kind": kinds,
-                    "content": contents,
-                }
-            )
-
-    return refs.select("doc_id", "media_ref").mapInPandas(kernel, schema=LAYOUT_SCHEMA)
+    return map_rows(
+        refs.select("doc_id", "media_ref"),
+        lambda doc_id, ref: [(doc_id, ref) + tuple(b) for b in layout_parser(ref)],
+        LAYOUT_SCHEMA,
+    )

@@ -17,11 +17,16 @@ seam, not a fake decode.
 (unhex(md5(text))) so the metadata kernel output has a closed-form SQL
 oracle; `attach_bmp` synthesizes a real BMP per document the same way.
 With real data you'd read the bytes from the lake instead.
+
+Every kernel crosses into Python through operators/arrow_rows.map_rows:
+the synthesizers via `_attach` (one payload per document), the decoders
+via `_decode` (zero or more rows per payload).
 """
 
 from __future__ import annotations
 
-from typing import Callable, Iterator, Optional
+import hashlib
+from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -34,6 +39,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .arrow_rows import map_rows
+
 MEDIA_META_SCHEMA = StructType(
     [
         StructField("doc_id", StringType()),
@@ -44,6 +51,43 @@ MEDIA_META_SCHEMA = StructType(
         StructField("checksum", LongType()),  # first 4 bytes as big-endian uint32
     ]
 )
+
+PAYLOAD_SCHEMA = StructType(
+    [StructField("doc_id", StringType()), StructField("payload", BinaryType())]
+)
+
+
+def _md5(text: str) -> bytes:
+    return hashlib.md5(text.encode("utf-8")).digest()
+
+
+def _attach(docs: DataFrame, payload_fn: Callable[[str], bytes]) -> DataFrame:
+    """documents -> (doc_id, payload: binary), payload = payload_fn(text)
+    with a null text read as ''."""
+    return map_rows(
+        docs.select(F.col("doc_id").cast("string").alias("doc_id"), "text"),
+        lambda doc_id, text: [(str(doc_id), payload_fn(text or ""))],
+        PAYLOAD_SCHEMA,
+    )
+
+
+def _decode(
+    df: DataFrame,
+    payload_col: str,
+    id_col: str,
+    rows_fn: Callable[[bytes], Iterable[tuple]],
+    schema: StructType,
+) -> DataFrame:
+    """(id, payload) -> schema rows: rows_fn(bytes) yields each output row
+    after its leading doc_id; a null payload is read as b''."""
+    return map_rows(
+        df.select(F.col(id_col).alias("doc_id"), F.col(payload_col).alias("payload")),
+        lambda doc_id, p: [
+            (str(doc_id),) + row
+            for row in rows_fn(bytes(p) if p is not None else b"")
+        ],
+        schema,
+    )
 
 
 def attach_payload(docs: DataFrame) -> DataFrame:
@@ -98,37 +142,11 @@ def attach_bmp(docs: DataFrame) -> DataFrame:
     SQL oracle."""
     from ..core.image import synth_bmp
 
-    def kernel(batches):
-        import hashlib
+    def payload(text):
+        b = _md5(text)
+        return synth_bmp(4 + b[0] % 13, 4 + b[1] % 13, (b[2], b[3], b[4]))
 
-        import pyarrow as pa
-
-        schema = pa.schema(
-            [pa.field("doc_id", pa.string()), pa.field("payload", pa.binary())]
-        )
-        for batch in batches:
-            ids = batch.column(batch.schema.get_field_index("doc_id")).to_pylist()
-            texts = batch.column(batch.schema.get_field_index("text")).to_pylist()
-            payloads = []
-            for text in texts:
-                b = hashlib.md5((text or "").encode("utf-8")).digest()
-                payloads.append(
-                    synth_bmp(4 + b[0] % 13, 4 + b[1] % 13, (b[2], b[3], b[4]))
-                )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([str(i) for i in ids], pa.string()),
-                    pa.array(payloads, pa.binary()),
-                ],
-                schema=schema,
-            )
-
-    out_schema = StructType(
-        [StructField("doc_id", StringType()), StructField("payload", BinaryType())]
-    )
-    return docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    ).mapInArrow(kernel, schema=out_schema)
+    return _attach(docs, payload)
 
 
 def attach_png(docs: DataFrame) -> DataFrame:
@@ -142,42 +160,13 @@ def attach_png(docs: DataFrame) -> DataFrame:
     decode output has a closed-form SQL oracle."""
     from ..core.image import synth_png
 
-    def kernel(batches):
-        import hashlib
-
-        import pyarrow as pa
-
-        schema = pa.schema(
-            [pa.field("doc_id", pa.string()), pa.field("payload", pa.binary())]
+    def payload(text):
+        c = _md5(text + "png")
+        return synth_png(
+            4 + c[0] % 13, 4 + c[1] % 13, (c[2], c[3], c[4]), rgba=c[5] % 2 == 1
         )
-        for batch in batches:
-            ids = batch.column(batch.schema.get_field_index("doc_id")).to_pylist()
-            texts = batch.column(batch.schema.get_field_index("text")).to_pylist()
-            payloads = []
-            for text in texts:
-                c = hashlib.md5(((text or "") + "png").encode("utf-8")).digest()
-                payloads.append(
-                    synth_png(
-                        4 + c[0] % 13,
-                        4 + c[1] % 13,
-                        (c[2], c[3], c[4]),
-                        rgba=c[5] % 2 == 1,
-                    )
-                )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([str(i) for i in ids], pa.string()),
-                    pa.array(payloads, pa.binary()),
-                ],
-                schema=schema,
-            )
 
-    out_schema = StructType(
-        [StructField("doc_id", StringType()), StructField("payload", BinaryType())]
-    )
-    return docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    ).mapInArrow(kernel, schema=out_schema)
+    return _attach(docs, payload)
 
 
 def attach_gif(docs: DataFrame) -> DataFrame:
@@ -192,43 +181,17 @@ def attach_gif(docs: DataFrame) -> DataFrame:
     exercises the 4-pass reorder."""
     from ..core.gif import synth_gif
 
-    def kernel(batches):
-        import hashlib
-
-        import pyarrow as pa
-
-        schema = pa.schema(
-            [pa.field("doc_id", pa.string()), pa.field("payload", pa.binary())]
+    def payload(text):
+        d = _md5(text + "gif")
+        return synth_gif(
+            4 + d[0] % 13,
+            4 + d[1] % 13,
+            (d[2], d[3], d[4]),
+            interlace=d[5] % 2 == 1,
+            frames=1 + d[6] % 4,
         )
-        for batch in batches:
-            ids = batch.column(batch.schema.get_field_index("doc_id")).to_pylist()
-            texts = batch.column(batch.schema.get_field_index("text")).to_pylist()
-            payloads = []
-            for text in texts:
-                d = hashlib.md5(((text or "") + "gif").encode("utf-8")).digest()
-                payloads.append(
-                    synth_gif(
-                        4 + d[0] % 13,
-                        4 + d[1] % 13,
-                        (d[2], d[3], d[4]),
-                        interlace=d[5] % 2 == 1,
-                        frames=1 + d[6] % 4,
-                    )
-                )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([str(i) for i in ids], pa.string()),
-                    pa.array(payloads, pa.binary()),
-                ],
-                schema=schema,
-            )
 
-    out_schema = StructType(
-        [StructField("doc_id", StringType()), StructField("payload", BinaryType())]
-    )
-    return docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    ).mapInArrow(kernel, schema=out_schema)
+    return _attach(docs, payload)
 
 
 def attach_jpeg(docs: DataFrame) -> DataFrame:
@@ -241,37 +204,11 @@ def attach_jpeg(docs: DataFrame) -> DataFrame:
     Deterministic bytes."""
     from ..core.jpeg import synth_jpeg
 
-    def kernel(batches):
-        import hashlib
+    def payload(text):
+        e = _md5(text + "jpg")
+        return synth_jpeg(8 * (1 + e[0] % 6), 8 * (1 + e[1] % 6), (e[2], e[3], e[4]))
 
-        import pyarrow as pa
-
-        schema = pa.schema(
-            [pa.field("doc_id", pa.string()), pa.field("payload", pa.binary())]
-        )
-        for batch in batches:
-            ids = batch.column(batch.schema.get_field_index("doc_id")).to_pylist()
-            texts = batch.column(batch.schema.get_field_index("text")).to_pylist()
-            payloads = []
-            for text in texts:
-                e = hashlib.md5(((text or "") + "jpg").encode("utf-8")).digest()
-                payloads.append(
-                    synth_jpeg(8 * (1 + e[0] % 6), 8 * (1 + e[1] % 6), (e[2], e[3], e[4]))
-                )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([str(i) for i in ids], pa.string()),
-                    pa.array(payloads, pa.binary()),
-                ],
-                schema=schema,
-            )
-
-    out_schema = StructType(
-        [StructField("doc_id", StringType()), StructField("payload", BinaryType())]
-    )
-    return docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    ).mapInArrow(kernel, schema=out_schema)
+    return _attach(docs, payload)
 
 
 def attach_progressive_jpeg(docs: DataFrame) -> DataFrame:
@@ -287,39 +224,13 @@ def attach_progressive_jpeg(docs: DataFrame) -> DataFrame:
     Deterministic bytes."""
     from ..core.jpeg import synth_progressive_jpeg
 
-    def kernel(batches):
-        import hashlib
-
-        import pyarrow as pa
-
-        schema = pa.schema(
-            [pa.field("doc_id", pa.string()), pa.field("payload", pa.binary())]
+    def payload(text):
+        f = _md5(text + "jpp")
+        return synth_progressive_jpeg(
+            8 * (1 + f[0] % 6), 8 * (1 + f[1] % 6), (f[2], f[3], f[4])
         )
-        for batch in batches:
-            ids = batch.column(batch.schema.get_field_index("doc_id")).to_pylist()
-            texts = batch.column(batch.schema.get_field_index("text")).to_pylist()
-            payloads = []
-            for text in texts:
-                f = hashlib.md5(((text or "") + "jpp").encode("utf-8")).digest()
-                payloads.append(
-                    synth_progressive_jpeg(
-                        8 * (1 + f[0] % 6), 8 * (1 + f[1] % 6), (f[2], f[3], f[4])
-                    )
-                )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([str(i) for i in ids], pa.string()),
-                    pa.array(payloads, pa.binary()),
-                ],
-                schema=schema,
-            )
 
-    out_schema = StructType(
-        [StructField("doc_id", StringType()), StructField("payload", BinaryType())]
-    )
-    return docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    ).mapInArrow(kernel, schema=out_schema)
+    return _attach(docs, payload)
 
 
 GIF_FRAME_STATS_SCHEMA = StructType(
@@ -342,51 +253,16 @@ def gif_frame_stats(
     k-th frame of a long animation is wanted, like Y4M frame sampling)
     plus first-frame dimensions from a real decode. Malformed payloads
     surface outcome='undecodable', never a stage failure."""
+    from ..core.gif import decode_gif, gif_frame_count
 
-    def kernel(batches):
-        import pyarrow as pa
+    def rows(data):
+        nf = gif_frame_count(data)
+        img = decode_gif(data) if nf else None
+        if nf and img is not None:
+            return [("decoded", nf, img.shape[1], img.shape[0])]
+        return [("undecodable", 0, 0, 0)]
 
-        from ..core.gif import decode_gif, gif_frame_count
-
-        schema = pa.schema(
-            [
-                pa.field("doc_id", pa.string()),
-                pa.field("outcome", pa.string()),
-                pa.field("n_frames", pa.int32()),
-                pa.field("width", pa.int32()),
-                pa.field("height", pa.int32()),
-            ]
-        )
-        for batch in batches:
-            ids = batch.column(batch.schema.get_field_index("doc_id")).to_pylist()
-            payloads = batch.column(batch.schema.get_field_index("payload"))
-            out = {k: [] for k in ("id", "oc", "nf", "w", "h")}
-            for j, doc_id in enumerate(ids):
-                p = payloads[j].as_py()
-                data = bytes(p) if p is not None else b""
-                nf = gif_frame_count(data)
-                img = decode_gif(data) if nf else None
-                if nf and img is not None:
-                    row = ("decoded", nf, img.shape[1], img.shape[0])
-                else:
-                    row = ("undecodable", 0, 0, 0)
-                out["id"].append(str(doc_id))
-                for k, v in zip(("oc", "nf", "w", "h"), row):
-                    out[k].append(v)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out["id"], pa.string()),
-                    pa.array(out["oc"], pa.string()),
-                    pa.array(out["nf"], pa.int32()),
-                    pa.array(out["w"], pa.int32()),
-                    pa.array(out["h"], pa.int32()),
-                ],
-                schema=schema,
-            )
-
-    return df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("payload")
-    ).mapInArrow(kernel, schema=GIF_FRAME_STATS_SCHEMA)
+    return _decode(df, payload_col, id_col, rows, GIF_FRAME_STATS_SCHEMA)
 
 
 IMAGE_FEATURES_SCHEMA = StructType(
@@ -416,76 +292,24 @@ def image_features(
     outcome='codec_unavailable'; malformed bytes or unsupported
     depths (sub-8-bit/16-bit PNG) 'undecodable' — the stage never
     fails on bad media."""
+    from ..core.gif import decode_gif
+    from ..core.image import decode_bmp, decode_png, sniff_format
+    from ..core.jpeg import decode_jpeg
 
-    def kernel(batches):
-        import pyarrow as pa
+    decoders = {"bmp": decode_bmp, "png": decode_png, "gif": decode_gif, "jpeg": decode_jpeg}
 
-        from ..core.gif import decode_gif
-        from ..core.image import decode_bmp, decode_png, sniff_format
-        from ..core.jpeg import decode_jpeg
+    def rows(data):
+        fmt = sniff_format(data)
+        img = decoders[fmt](data) if fmt in decoders else None
+        if img is not None:
+            h, w = img.shape[:2]
+            sums = img[:, :, :3].reshape(-1, 3).sum(axis=0, dtype="int64")
+            return [(fmt, "decoded", w, h, w * h, int(sums[0]), int(sums[1]), int(sums[2]))]
+        if fmt == "jpeg":
+            return [(fmt, "codec_unavailable", 0, 0, 0, 0, 0, 0)]
+        return [(fmt, "undecodable", 0, 0, 0, 0, 0, 0)]
 
-        schema = pa.schema(
-            [
-                pa.field("doc_id", pa.string()),
-                pa.field("format", pa.string()),
-                pa.field("outcome", pa.string()),
-                pa.field("width", pa.int32()),
-                pa.field("height", pa.int32()),
-                pa.field("n_px", pa.int32()),
-                pa.field("sum_r", pa.int64()),
-                pa.field("sum_g", pa.int64()),
-                pa.field("sum_b", pa.int64()),
-            ]
-        )
-        for batch in batches:
-            # the operator's select below normalizes the column names
-            ids = batch.column(batch.schema.get_field_index("doc_id")).to_pylist()
-            payloads = batch.column(batch.schema.get_field_index("payload"))
-            out = {k: [] for k in ("id", "fmt", "oc", "w", "h", "n", "r", "g", "b")}
-            for j, doc_id in enumerate(ids):
-                p = payloads[j].as_py()
-                data = bytes(p) if p is not None else b""
-                fmt = sniff_format(data)
-                if fmt == "bmp":
-                    img = decode_bmp(data)
-                elif fmt == "png":
-                    img = decode_png(data)
-                elif fmt == "gif":
-                    img = decode_gif(data)
-                elif fmt == "jpeg":
-                    img = decode_jpeg(data)
-                else:
-                    img = None
-                if img is not None:
-                    h, w = img.shape[:2]
-                    sums = img[:, :, :3].reshape(-1, 3).sum(axis=0, dtype="int64")
-                    row = ("decoded", w, h, w * h, int(sums[0]), int(sums[1]), int(sums[2]))
-                elif fmt == "jpeg":
-                    row = ("codec_unavailable", 0, 0, 0, 0, 0, 0)
-                else:
-                    row = ("undecodable", 0, 0, 0, 0, 0, 0)
-                out["id"].append(str(doc_id))
-                out["fmt"].append(fmt)
-                for k, v in zip(("oc", "w", "h", "n", "r", "g", "b"), row):
-                    out[k].append(v)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out["id"], pa.string()),
-                    pa.array(out["fmt"], pa.string()),
-                    pa.array(out["oc"], pa.string()),
-                    pa.array(out["w"], pa.int32()),
-                    pa.array(out["h"], pa.int32()),
-                    pa.array(out["n"], pa.int32()),
-                    pa.array(out["r"], pa.int64()),
-                    pa.array(out["g"], pa.int64()),
-                    pa.array(out["b"], pa.int64()),
-                ],
-                schema=schema,
-            )
-
-    return df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("payload")
-    ).mapInArrow(kernel, schema=IMAGE_FEATURES_SCHEMA)
+    return _decode(df, payload_col, id_col, rows, IMAGE_FEATURES_SCHEMA)
 
 
 def fake_decoder(payload: bytes) -> dict:
@@ -514,42 +338,16 @@ def attach_wav(docs: DataFrame) -> DataFrame:
     so energy has the closed form amplitude * n_samples * channels)."""
     from ..core.av import synth_wav
 
-    def kernel(batches):
-        import hashlib
-
-        import pyarrow as pa
-
-        schema = pa.schema(
-            [pa.field("doc_id", pa.string()), pa.field("payload", pa.binary())]
+    def payload(text):
+        b = _md5(text)
+        return synth_wav(
+            n_samples=500 + 4 * b[5],
+            rate=_WAV_RATES[b[6] % 3],
+            amplitude=1 + 4 * b[7],
+            channels=1 + b[8] % 2,
         )
-        for batch in batches:
-            ids = batch.column(batch.schema.get_field_index("doc_id")).to_pylist()
-            texts = batch.column(batch.schema.get_field_index("text")).to_pylist()
-            payloads = []
-            for text in texts:
-                b = hashlib.md5((text or "").encode("utf-8")).digest()
-                payloads.append(
-                    synth_wav(
-                        n_samples=500 + 4 * b[5],
-                        rate=_WAV_RATES[b[6] % 3],
-                        amplitude=1 + 4 * b[7],
-                        channels=1 + b[8] % 2,
-                    )
-                )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([str(i) for i in ids], pa.string()),
-                    pa.array(payloads, pa.binary()),
-                ],
-                schema=schema,
-            )
 
-    out_schema = StructType(
-        [StructField("doc_id", StringType()), StructField("payload", BinaryType())]
-    )
-    return docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    ).mapInArrow(kernel, schema=out_schema)
+    return _attach(docs, payload)
 
 
 def audio_features(
@@ -559,56 +357,17 @@ def audio_features(
     decodes to rate/channels/sample-count + integer absolute energy; codec
     formats (MP3 magic) surface outcome='codec_unavailable'; garbage
     'undecodable'. The stage never fails on bad media."""
+    from ..core.av import decode_wav
 
-    def kernel(batches):
-        import pyarrow as pa
+    def rows(data):
+        d = decode_wav(data)
+        if d is not None:
+            return [("wav", "decoded", d["rate"], d["channels"], d["n_samples"], d["sum_abs"])]
+        if data[:3] == b"ID3" or data[:2] == b"\xff\xfb":
+            return [("mp3", "codec_unavailable", 0, 0, 0, 0)]
+        return [("unknown", "undecodable", 0, 0, 0, 0)]
 
-        from ..core.av import decode_wav
-
-        schema = pa.schema(
-            [
-                pa.field("doc_id", pa.string()),
-                pa.field("format", pa.string()),
-                pa.field("outcome", pa.string()),
-                pa.field("rate", pa.int32()),
-                pa.field("channels", pa.int32()),
-                pa.field("n_samples", pa.int32()),
-                pa.field("sum_abs", pa.int64()),
-            ]
-        )
-        for batch in batches:
-            ids = batch.column(batch.schema.get_field_index("doc_id")).to_pylist()
-            payloads = batch.column(batch.schema.get_field_index("payload"))
-            cols = {k: [] for k in ("id", "fmt", "oc", "rate", "ch", "n", "e")}
-            for j, doc_id in enumerate(ids):
-                p = payloads[j].as_py()
-                data = bytes(p) if p is not None else b""
-                d = decode_wav(data)
-                if d is not None:
-                    row = ("wav", "decoded", d["rate"], d["channels"], d["n_samples"], d["sum_abs"])
-                elif data[:3] == b"ID3" or data[:2] == b"\xff\xfb":
-                    row = ("mp3", "codec_unavailable", 0, 0, 0, 0)
-                else:
-                    row = ("unknown", "undecodable", 0, 0, 0, 0)
-                cols["id"].append(str(doc_id))
-                for k, v in zip(("fmt", "oc", "rate", "ch", "n", "e"), row):
-                    cols[k].append(v)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(cols["id"], pa.string()),
-                    pa.array(cols["fmt"], pa.string()),
-                    pa.array(cols["oc"], pa.string()),
-                    pa.array(cols["rate"], pa.int32()),
-                    pa.array(cols["ch"], pa.int32()),
-                    pa.array(cols["n"], pa.int32()),
-                    pa.array(cols["e"], pa.int64()),
-                ],
-                schema=schema,
-            )
-
-    return df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("payload")
-    ).mapInArrow(kernel, schema=AUDIO_FEATURES_SCHEMA)
+    return _decode(df, payload_col, id_col, rows, AUDIO_FEATURES_SCHEMA)
 
 
 VIDEO_FRAME_SCHEMA = StructType(
@@ -629,39 +388,14 @@ def attach_y4m(docs: DataFrame) -> DataFrame:
     bytes 9..12: luma of frame f = (b12 + 40*f) % 256)."""
     from ..core.av import synth_y4m
 
-    def kernel(batches):
-        import hashlib
+    def payload(text):
+        b = _md5(text)
+        n_frames = 2 + b[9] % 4
+        w = 2 * (2 + b[10] % 7)
+        h = 2 * (2 + b[11] % 5)
+        return synth_y4m(w, h, [(b[12] + 40 * f) % 256 for f in range(n_frames)])
 
-        import pyarrow as pa
-
-        schema = pa.schema(
-            [pa.field("doc_id", pa.string()), pa.field("payload", pa.binary())]
-        )
-        for batch in batches:
-            ids = batch.column(batch.schema.get_field_index("doc_id")).to_pylist()
-            texts = batch.column(batch.schema.get_field_index("text")).to_pylist()
-            payloads = []
-            for text in texts:
-                b = hashlib.md5((text or "").encode("utf-8")).digest()
-                n_frames = 2 + b[9] % 4
-                w = 2 * (2 + b[10] % 7)
-                h = 2 * (2 + b[11] % 5)
-                lumas = [(b[12] + 40 * f) % 256 for f in range(n_frames)]
-                payloads.append(synth_y4m(w, h, lumas))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([str(i) for i in ids], pa.string()),
-                    pa.array(payloads, pa.binary()),
-                ],
-                schema=schema,
-            )
-
-    out_schema = StructType(
-        [StructField("doc_id", StringType()), StructField("payload", BinaryType())]
-    )
-    return docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    ).mapInArrow(kernel, schema=out_schema)
+    return _attach(docs, payload)
 
 
 def video_frame_sample(
@@ -676,55 +410,19 @@ def video_frame_sample(
     cost of sampling is paid ONLY for sampled frames, which is the property
     that matters for multi-GB videos. One output row per sampled frame;
     malformed payloads yield zero rows."""
+    from ..core.av import y4m_info, y4m_sample_frames
 
-    def kernel(batches):
-        import pyarrow as pa
+    def rows(data):
+        info = y4m_info(data)
+        frames = y4m_sample_frames(data, every) if info else None
+        if not info or frames is None:
+            return []
+        return [
+            (info["width"], info["height"], info["n_frames"], fr["frame"], fr["sum_y"])
+            for fr in frames
+        ]
 
-        from ..core.av import y4m_info, y4m_sample_frames
-
-        schema = pa.schema(
-            [
-                pa.field("doc_id", pa.string()),
-                pa.field("width", pa.int32()),
-                pa.field("height", pa.int32()),
-                pa.field("n_frames", pa.int32()),
-                pa.field("frame", pa.int32()),
-                pa.field("sum_y", pa.int64()),
-            ]
-        )
-        for batch in batches:
-            ids = batch.column(batch.schema.get_field_index("doc_id")).to_pylist()
-            payloads = batch.column(batch.schema.get_field_index("payload"))
-            cols = {k: [] for k in ("id", "w", "h", "nf", "f", "y")}
-            for j, doc_id in enumerate(ids):
-                p = payloads[j].as_py()
-                data = bytes(p) if p is not None else b""
-                info = y4m_info(data)
-                frames = y4m_sample_frames(data, every) if info else None
-                if not info or frames is None:
-                    continue
-                for fr in frames:
-                    cols["id"].append(str(doc_id))
-                    cols["w"].append(info["width"])
-                    cols["h"].append(info["height"])
-                    cols["nf"].append(info["n_frames"])
-                    cols["f"].append(fr["frame"])
-                    cols["y"].append(fr["sum_y"])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(cols["id"], pa.string()),
-                    pa.array(cols["w"], pa.int32()),
-                    pa.array(cols["h"], pa.int32()),
-                    pa.array(cols["nf"], pa.int32()),
-                    pa.array(cols["f"], pa.int32()),
-                    pa.array(cols["y"], pa.int64()),
-                ],
-                schema=schema,
-            )
-
-    return df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("payload")
-    ).mapInArrow(kernel, schema=VIDEO_FRAME_SCHEMA)
+    return _decode(df, payload_col, id_col, rows, VIDEO_FRAME_SCHEMA)
 
 
 def media_metadata(
@@ -737,38 +435,25 @@ def media_metadata(
     (default: the deterministic fake used by the closed-form gate; the REAL
     decode paths are image_features / audio_features / video_frame_sample).
 
-    One mapInPandas crossing; bytes stay in Arrow buffers until the kernel
-    touches them. Batch size is governed by
+    One mapInArrow crossing (map_rows): the bytes move in Arrow batches
+    and become Python bytes once per batch. Batch size is governed by
     spark.sql.execution.arrow.maxRecordsPerBatch — size it down for
     multi-MB media blobs (same mega-row guidance as the extraction kernel).
     """
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        for pdf in batches:
-            ids, nb, magic, w, h, cks = [], [], [], [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                b = bytes(payload) if payload is not None else b""
-                d = decoder(b)
-                ids.append(str(doc_id))
-                nb.append(len(b))
-                magic.append(b[:4].hex())
-                w.append(int(d.get("width", 0)))
-                h.append(int(d.get("height", 0)))
-                cks.append(int.from_bytes(b[:4], "big") if len(b) >= 4 else 0)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_bytes": pd.array(nb, dtype="int32"),
-                    "magic": magic,
-                    "width": pd.array(w, dtype="int32"),
-                    "height": pd.array(h, dtype="int32"),
-                    "checksum": pd.array(cks, dtype="int64"),
-                }
+    def rows(b):
+        d = decoder(b)
+        return [
+            (
+                len(b),
+                b[:4].hex(),
+                int(d.get("width", 0)),
+                int(d.get("height", 0)),
+                int.from_bytes(b[:4], "big") if len(b) >= 4 else 0,
             )
+        ]
 
-    return df.mapInPandas(kernel, schema=MEDIA_META_SCHEMA)
+    return _decode(df, payload_col, id_col, rows, MEDIA_META_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -800,42 +485,16 @@ def attach_mp3(docs: DataFrame) -> DataFrame:
     f3 is odd."""
     from ..core.av import synth_mp3
 
-    def kernel(batches):
-        import hashlib
-
-        import pyarrow as pa
-
-        schema = pa.schema(
-            [pa.field("doc_id", pa.string()), pa.field("payload", pa.binary())]
+    def payload(text):
+        b = _md5(text + "mp3")
+        return synth_mp3(
+            n_frames=3 + b[0] % 6,
+            bitrate_idx=1 + b[1] % 14,
+            rate_idx=b[2] % 3,
+            id3_size=b[4] if b[3] % 2 else None,
         )
-        for batch in batches:
-            ids = batch.column(batch.schema.get_field_index("doc_id")).to_pylist()
-            texts = batch.column(batch.schema.get_field_index("text")).to_pylist()
-            payloads = []
-            for text in texts:
-                b = hashlib.md5(((text or "") + "mp3").encode("utf-8")).digest()
-                payloads.append(
-                    synth_mp3(
-                        n_frames=3 + b[0] % 6,
-                        bitrate_idx=1 + b[1] % 14,
-                        rate_idx=b[2] % 3,
-                        id3_size=b[4] if b[3] % 2 else None,
-                    )
-                )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([str(i) for i in ids], pa.string()),
-                    pa.array(payloads, pa.binary()),
-                ],
-                schema=schema,
-            )
 
-    out_schema = StructType(
-        [StructField("doc_id", StringType()), StructField("payload", BinaryType())]
-    )
-    return docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    ).mapInArrow(kernel, schema=out_schema)
+    return _attach(docs, payload)
 
 
 def mp3_frame_stats(
@@ -846,50 +505,19 @@ def mp3_frame_stats(
     duration WITHOUT decoding audio (payload Huffman data still needs a
     codec — audio_features keeps that seam explicit). Malformed input
     degrades to outcome='unparseable'; the stage never fails."""
+    from ..core.av import mp3_info
 
-    def kernel(batches):
-        import pyarrow as pa
+    def rows(data):
+        d = mp3_info(data)
+        if d is None:
+            return [("mp3", "unparseable", 0, 0, 0, 0, 0, 0, 0)]
+        return [(
+            "mp3", "parsed", d["bitrate_kbps"], d["sample_rate"],
+            d["n_frames"], d["duration_us"], d["n_bytes"],
+            d["has_id3"], d["is_cbr"],
+        )]
 
-        from ..core.av import mp3_info
-
-        schema = pa.schema(
-            [
-                pa.field("doc_id", pa.string()),
-                pa.field("format", pa.string()),
-                pa.field("outcome", pa.string()),
-                pa.field("bitrate_kbps", pa.int32()),
-                pa.field("sample_rate", pa.int32()),
-                pa.field("n_frames", pa.int32()),
-                pa.field("duration_us", pa.int64()),
-                pa.field("n_bytes", pa.int64()),
-                pa.field("has_id3", pa.int32()),
-                pa.field("is_cbr", pa.int32()),
-            ]
-        )
-        for batch in batches:
-            ids = batch.column(batch.schema.get_field_index("doc_id")).to_pylist()
-            payloads = batch.column(batch.schema.get_field_index("payload"))
-            cols = [[] for _ in range(10)]
-            for j, doc_id in enumerate(ids):
-                p = payloads[j].as_py()
-                d = mp3_info(bytes(p) if p is not None else b"")
-                if d is None:
-                    row = ("mp3", "unparseable", 0, 0, 0, 0, 0, 0, 0)
-                else:
-                    row = (
-                        "mp3", "parsed", d["bitrate_kbps"], d["sample_rate"],
-                        d["n_frames"], d["duration_us"], d["n_bytes"],
-                        d["has_id3"], d["is_cbr"],
-                    )
-                for c, v in zip(cols, (str(doc_id),) + row):
-                    c.append(v)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema
-            )
-
-    return df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("payload")
-    ).mapInArrow(kernel, schema=MP3_META_SCHEMA)
+    return _decode(df, payload_col, id_col, rows, MP3_META_SCHEMA)
 
 
 MP4_META_SCHEMA = StructType(
@@ -907,6 +535,8 @@ MP4_META_SCHEMA = StructType(
     ]
 )
 
+_MP4_SCALES = (600, 1000, 90000)
+
 
 def attach_mp4(docs: DataFrame) -> DataFrame:
     """documents -> (doc_id, payload) with a structurally correct
@@ -916,45 +546,17 @@ def attach_mp4(docs: DataFrame) -> DataFrame:
     duration = 100 + 10*g3 units, n_samples = 1 + g4%50."""
     from ..core.av import synth_mp4
 
-    _SCALES = (600, 1000, 90000)
-
-    def kernel(batches):
-        import hashlib
-
-        import pyarrow as pa
-
-        schema = pa.schema(
-            [pa.field("doc_id", pa.string()), pa.field("payload", pa.binary())]
+    def payload(text):
+        b = _md5(text + "mp4")
+        return synth_mp4(
+            width=16 * (1 + b[0] % 40),
+            height=16 * (1 + b[1] % 30),
+            timescale=_MP4_SCALES[b[2] % 3],
+            duration=100 + 10 * b[3],
+            n_samples=1 + b[4] % 50,
         )
-        for batch in batches:
-            ids = batch.column(batch.schema.get_field_index("doc_id")).to_pylist()
-            texts = batch.column(batch.schema.get_field_index("text")).to_pylist()
-            payloads = []
-            for text in texts:
-                b = hashlib.md5(((text or "") + "mp4").encode("utf-8")).digest()
-                payloads.append(
-                    synth_mp4(
-                        width=16 * (1 + b[0] % 40),
-                        height=16 * (1 + b[1] % 30),
-                        timescale=_SCALES[b[2] % 3],
-                        duration=100 + 10 * b[3],
-                        n_samples=1 + b[4] % 50,
-                    )
-                )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([str(i) for i in ids], pa.string()),
-                    pa.array(payloads, pa.binary()),
-                ],
-                schema=schema,
-            )
 
-    out_schema = StructType(
-        [StructField("doc_id", StringType()), StructField("payload", BinaryType())]
-    )
-    return docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    ).mapInArrow(kernel, schema=out_schema)
+    return _attach(docs, payload)
 
 
 def mp4_box_stats(
@@ -965,50 +567,19 @@ def mp4_box_stats(
     at 100 TB this is a handful of range-reads per object, never a full
     scan. Sample DATA stays codec_unavailable territory by design.
     Malformed input degrades to outcome='unparseable'."""
+    from ..core.av import mp4_info
 
-    def kernel(batches):
-        import pyarrow as pa
+    def rows(data):
+        d = mp4_info(data)
+        if d is None:
+            return [("mp4", "unparseable", "", 0, 0, 0, 0, 0, 0)]
+        return [(
+            "mp4", "parsed", d["brand"], d["width"], d["height"],
+            d["timescale"], d["duration_us"], d["n_tracks"],
+            d["n_samples"],
+        )]
 
-        from ..core.av import mp4_info
-
-        schema = pa.schema(
-            [
-                pa.field("doc_id", pa.string()),
-                pa.field("format", pa.string()),
-                pa.field("outcome", pa.string()),
-                pa.field("brand", pa.string()),
-                pa.field("width", pa.int32()),
-                pa.field("height", pa.int32()),
-                pa.field("timescale", pa.int32()),
-                pa.field("duration_us", pa.int64()),
-                pa.field("n_tracks", pa.int32()),
-                pa.field("n_samples", pa.int32()),
-            ]
-        )
-        for batch in batches:
-            ids = batch.column(batch.schema.get_field_index("doc_id")).to_pylist()
-            payloads = batch.column(batch.schema.get_field_index("payload"))
-            cols = [[] for _ in range(10)]
-            for j, doc_id in enumerate(ids):
-                p = payloads[j].as_py()
-                d = mp4_info(bytes(p) if p is not None else b"")
-                if d is None:
-                    row = ("mp4", "unparseable", "", 0, 0, 0, 0, 0, 0)
-                else:
-                    row = (
-                        "mp4", "parsed", d["brand"], d["width"], d["height"],
-                        d["timescale"], d["duration_us"], d["n_tracks"],
-                        d["n_samples"],
-                    )
-                for c, v in zip(cols, (str(doc_id),) + row):
-                    c.append(v)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema
-            )
-
-    return df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("payload")
-    ).mapInArrow(kernel, schema=MP4_META_SCHEMA)
+    return _decode(df, payload_col, id_col, rows, MP4_META_SCHEMA)
 
 
 EXIF_META_SCHEMA = StructType(
@@ -1043,54 +614,27 @@ def attach_exif_jpeg(docs: DataFrame) -> DataFrame:
     from ..core.exif import synth_exif_app1
     from ..core.jpeg import synth_jpeg
 
-    def kernel(batches):
-        import hashlib
-
-        import pyarrow as pa
-
-        schema = pa.schema(
-            [pa.field("doc_id", pa.string()), pa.field("payload", pa.binary())]
+    def payload(text):
+        e = _md5(text + "exif0")
+        f = _md5(text + "exif1")
+        app1 = synth_exif_app1(
+            byte_order="II" if e[0] % 2 == 0 else "MM",
+            orientation=1 + e[1] % 8,
+            make=f"cam-{e[2]:02x}",
+            datetime_str=(
+                f"{2000 + e[3] % 26:04d}:{1 + e[4] % 12:02d}:"
+                f"{1 + e[5] % 28:02d} {e[6] % 24:02d}:"
+                f"{e[7] % 60:02d}:{e[8] % 60:02d}"
+            ),
+            lat_ref="N" if f[0] % 2 == 0 else "S",
+            lat_dms=(f[1] % 90, f[2] % 60, f[3] % 60),
+            lon_ref="E" if f[4] % 2 == 0 else "W",
+            lon_dms=(f[5] % 180, f[6] % 60, f[7] % 60),
         )
-        for batch in batches:
-            ids = batch.column(batch.schema.get_field_index("doc_id")).to_pylist()
-            texts = batch.column(batch.schema.get_field_index("text")).to_pylist()
-            payloads = []
-            for text in texts:
-                t = text or ""
-                e = hashlib.md5((t + "exif0").encode("utf-8")).digest()
-                f = hashlib.md5((t + "exif1").encode("utf-8")).digest()
-                app1 = synth_exif_app1(
-                    byte_order="II" if e[0] % 2 == 0 else "MM",
-                    orientation=1 + e[1] % 8,
-                    make=f"cam-{e[2]:02x}",
-                    datetime_str=(
-                        f"{2000 + e[3] % 26:04d}:{1 + e[4] % 12:02d}:"
-                        f"{1 + e[5] % 28:02d} {e[6] % 24:02d}:"
-                        f"{e[7] % 60:02d}:{e[8] % 60:02d}"
-                    ),
-                    lat_ref="N" if f[0] % 2 == 0 else "S",
-                    lat_dms=(f[1] % 90, f[2] % 60, f[3] % 60),
-                    lon_ref="E" if f[4] % 2 == 0 else "W",
-                    lon_dms=(f[5] % 180, f[6] % 60, f[7] % 60),
-                )
-                jpg = synth_jpeg(
-                    8 * (1 + e[9] % 6), 8 * (1 + e[10] % 6), (e[11], e[12], e[13])
-                )
-                payloads.append(jpg[:2] + app1 + jpg[2:])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([str(i) for i in ids], pa.string()),
-                    pa.array(payloads, pa.binary()),
-                ],
-                schema=schema,
-            )
+        jpg = synth_jpeg(8 * (1 + e[9] % 6), 8 * (1 + e[10] % 6), (e[11], e[12], e[13]))
+        return jpg[:2] + app1 + jpg[2:]
 
-    out_schema = StructType(
-        [StructField("doc_id", StringType()), StructField("payload", BinaryType())]
-    )
-    return docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    ).mapInArrow(kernel, schema=out_schema)
+    return _attach(docs, payload)
 
 
 def exif_meta_stats(
@@ -1102,56 +646,21 @@ def exif_meta_stats(
     100 TB, the commonest image-metadata query a training pipeline runs.
     Degrades per row: no JPEG -> 'unparseable', JPEG without an Exif APP1
     -> 'no_exif' (fields null)."""
+    from ..core.exif import exif_info
 
-    def kernel(batches):
-        import pyarrow as pa
+    def rows(data):
+        d = exif_info(data)
+        if d is None:
+            return [("jpeg", "unparseable") + (None,) * 9]
+        if d["byte_order"] is None:
+            return [("jpeg", "no_exif") + (None,) * 7 + (d["width"], d["height"])]
+        return [(
+            "jpeg", "parsed", d["byte_order"], d["orientation"],
+            d["make"], d["datetime"], d["lat_udeg"],
+            d["lon_udeg"], d["n_ifd0"], d["width"], d["height"],
+        )]
 
-        from ..core.exif import exif_info
-
-        schema = pa.schema(
-            [
-                pa.field("doc_id", pa.string()),
-                pa.field("format", pa.string()),
-                pa.field("outcome", pa.string()),
-                pa.field("byte_order", pa.string()),
-                pa.field("orientation", pa.int32()),
-                pa.field("make", pa.string()),
-                pa.field("dt", pa.string()),
-                pa.field("lat_udeg", pa.int64()),
-                pa.field("lon_udeg", pa.int64()),
-                pa.field("n_ifd0", pa.int32()),
-                pa.field("width", pa.int32()),
-                pa.field("height", pa.int32()),
-            ]
-        )
-        for batch in batches:
-            ids = batch.column(batch.schema.get_field_index("doc_id")).to_pylist()
-            payloads = batch.column(batch.schema.get_field_index("payload"))
-            cols = [[] for _ in range(12)]
-            for j, doc_id in enumerate(ids):
-                p = payloads[j].as_py()
-                d = exif_info(bytes(p) if p is not None else b"")
-                if d is None:
-                    row = ("jpeg", "unparseable", None, None, None, None,
-                           None, None, None, None, None)
-                elif d["byte_order"] is None:
-                    row = ("jpeg", "no_exif", None, None, None, None, None,
-                           None, None, d["width"], d["height"])
-                else:
-                    row = (
-                        "jpeg", "parsed", d["byte_order"], d["orientation"],
-                        d["make"], d["datetime"], d["lat_udeg"],
-                        d["lon_udeg"], d["n_ifd0"], d["width"], d["height"],
-                    )
-                for c, v in zip(cols, (str(doc_id),) + row):
-                    c.append(v)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema
-            )
-
-    return df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("payload")
-    ).mapInArrow(kernel, schema=EXIF_META_SCHEMA)
+    return _decode(df, payload_col, id_col, rows, EXIF_META_SCHEMA)
 
 
 ID3_META_SCHEMA = StructType(
@@ -1181,49 +690,30 @@ def attach_mp3_id3(docs: DataFrame) -> DataFrame:
     g10 bitrate_idx 1+%14, g11 rate_idx %3. Deterministic bytes."""
     from ..core.av import synth_id3v2, synth_mp3
 
-    def kernel(batches):
-        import hashlib
-
-        import pyarrow as pa
-
-        schema = pa.schema(
-            [pa.field("doc_id", pa.string()), pa.field("payload", pa.binary())]
+    def payload(text):
+        g = _md5(text + "id3")
+        hx = g.hex()
+        ver = 3 if g[0] % 2 == 0 else 4
+        fields = {
+            "TIT2": f"trk-{hx[4:8]}",
+            "TPE1": f"artist-{g[4] % 40}",
+            "TALB": f"alb-{g[5] % 12}",
+            ("TDRC" if ver == 4 else "TYER"): str(1970 + g[6] % 55),
+            "TRCK": str(1 + g[7] % 20),
+        }
+        tag = synth_id3v2(
+            fields, version=ver, encoding=(0, 1, 3)[g[1] % 3], padding=g[8] % 50
         )
-        for batch in batches:
-            ids = batch.column(batch.schema.get_field_index("doc_id")).to_pylist()
-            texts = batch.column(batch.schema.get_field_index("text")).to_pylist()
-            payloads = []
-            for text in texts:
-                t = text or ""
-                g = hashlib.md5((t + "id3").encode("utf-8")).digest()
-                hx = g.hex()
-                ver = 3 if g[0] % 2 == 0 else 4
-                fields = {
-                    "TIT2": f"trk-{hx[4:8]}",
-                    "TPE1": f"artist-{g[4] % 40}",
-                    "TALB": f"alb-{g[5] % 12}",
-                    ("TDRC" if ver == 4 else "TYER"): str(1970 + g[6] % 55),
-                    "TRCK": str(1 + g[7] % 20),
-                }
-                tag = synth_id3v2(
-                    fields, version=ver, encoding=(0, 1, 3)[g[1] % 3],
-                    padding=g[8] % 50,
-                )
-                payloads.append(tag + synth_mp3(1 + g[9] % 40, 1 + g[10] % 14, g[11] % 3))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([str(i) for i in ids], pa.string()),
-                    pa.array(payloads, pa.binary()),
-                ],
-                schema=schema,
-            )
+        return tag + synth_mp3(1 + g[9] % 40, 1 + g[10] % 14, g[11] % 3)
 
-    out_schema = StructType(
-        [StructField("doc_id", StringType()), StructField("payload", BinaryType())]
-    )
-    return docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    ).mapInArrow(kernel, schema=out_schema)
+    return _attach(docs, payload)
+
+
+def _int_or_none(s):
+    try:
+        return int(s) if s is not None else None
+    except ValueError:
+        return None
 
 
 def id3_meta_stats(
@@ -1233,67 +723,25 @@ def id3_meta_stats(
     (core/av.id3v2_text_frames + mp3_info) — header-only, audio payload
     never read. Degrades per row: no MP3 stream at all -> 'unparseable';
     a valid stream without a leading tag -> 'no_tag' (tag fields null)."""
+    from ..core.av import id3v2_text_frames, mp3_info
 
-    def kernel(batches):
-        import pyarrow as pa
+    def rows(raw):
+        m = mp3_info(raw)
+        tag = id3v2_text_frames(raw)
+        if m is None and tag is None:
+            return [("mp3", "unparseable") + (None,) * 8]
+        if tag is None:
+            return [("mp3", "no_tag") + (None,) * 7 + (m["n_frames"],)]
+        fr = tag["frames"]
+        return [(
+            "mp3", "parsed", tag["version"], tag["tag_bytes"],
+            fr.get("TIT2"), fr.get("TPE1"), fr.get("TALB"),
+            _int_or_none(fr.get("TDRC") or fr.get("TYER")),
+            _int_or_none(fr.get("TRCK")),
+            m["n_frames"] if m else 0,
+        )]
 
-        from ..core.av import id3v2_text_frames, mp3_info
-
-        schema = pa.schema(
-            [
-                pa.field("doc_id", pa.string()),
-                pa.field("format", pa.string()),
-                pa.field("outcome", pa.string()),
-                pa.field("version", pa.int32()),
-                pa.field("tag_bytes", pa.int32()),
-                pa.field("title", pa.string()),
-                pa.field("artist", pa.string()),
-                pa.field("album", pa.string()),
-                pa.field("year", pa.int32()),
-                pa.field("track", pa.int32()),
-                pa.field("n_frames", pa.int32()),
-            ]
-        )
-
-        def _int(s):
-            try:
-                return int(s) if s is not None else None
-            except ValueError:
-                return None
-
-        for batch in batches:
-            ids = batch.column(batch.schema.get_field_index("doc_id")).to_pylist()
-            payloads = batch.column(batch.schema.get_field_index("payload"))
-            cols = [[] for _ in range(11)]
-            for j, doc_id in enumerate(ids):
-                p = payloads[j].as_py()
-                raw = bytes(p) if p is not None else b""
-                m = mp3_info(raw)
-                tag = id3v2_text_frames(raw)
-                if m is None and tag is None:
-                    row = ("mp3", "unparseable", None, None, None, None,
-                           None, None, None, None)
-                elif tag is None:
-                    row = ("mp3", "no_tag", None, None, None, None, None,
-                           None, None, m["n_frames"])
-                else:
-                    fr = tag["frames"]
-                    row = (
-                        "mp3", "parsed", tag["version"], tag["tag_bytes"],
-                        fr.get("TIT2"), fr.get("TPE1"), fr.get("TALB"),
-                        _int(fr.get("TDRC") or fr.get("TYER")),
-                        _int(fr.get("TRCK")),
-                        m["n_frames"] if m else 0,
-                    )
-                for c, v in zip(cols, (str(doc_id),) + row):
-                    c.append(v)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema
-            )
-
-    return df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("payload")
-    ).mapInArrow(kernel, schema=ID3_META_SCHEMA)
+    return _decode(df, payload_col, id_col, rows, ID3_META_SCHEMA)
 
 
 WEBP_META_SCHEMA = StructType(
@@ -1329,48 +777,21 @@ def attach_webp(docs: DataFrame) -> DataFrame:
       vp8x: 48 + filler + (filler % 2)."""
     from ..core.webp import synth_webp
 
-    def kernel(batches):
-        import hashlib
-
-        import pyarrow as pa
-
-        schema = pa.schema(
-            [pa.field("doc_id", pa.string()), pa.field("payload", pa.binary())]
+    def payload(text):
+        w = _md5(text + "webp")
+        return synth_webp(
+            ("vp8", "vp8l", "vp8x")[w[0] % 3],
+            1 + w[1] + 256 * (w[2] % 63),
+            1 + w[3] + 256 * (w[4] % 63),
+            alpha=w[5] % 2,
+            anim=w[6] % 2,
+            exif=w[7] % 2,
+            icc=w[8] % 2,
+            xmp=w[9] % 2,
+            filler=w[10] % 64,
         )
-        for batch in batches:
-            ids = batch.column(batch.schema.get_field_index("doc_id")).to_pylist()
-            texts = batch.column(batch.schema.get_field_index("text")).to_pylist()
-            payloads = []
-            for text in texts:
-                w = hashlib.md5(((text or "") + "webp").encode("utf-8")).digest()
-                variant = ("vp8", "vp8l", "vp8x")[w[0] % 3]
-                payloads.append(
-                    synth_webp(
-                        variant,
-                        1 + w[1] + 256 * (w[2] % 63),
-                        1 + w[3] + 256 * (w[4] % 63),
-                        alpha=w[5] % 2,
-                        anim=w[6] % 2,
-                        exif=w[7] % 2,
-                        icc=w[8] % 2,
-                        xmp=w[9] % 2,
-                        filler=w[10] % 64,
-                    )
-                )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([str(i) for i in ids], pa.string()),
-                    pa.array(payloads, pa.binary()),
-                ],
-                schema=schema,
-            )
 
-    out_schema = StructType(
-        [StructField("doc_id", StringType()), StructField("payload", BinaryType())]
-    )
-    return docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    ).mapInArrow(kernel, schema=out_schema)
+    return _attach(docs, payload)
 
 
 def webp_meta_stats(
@@ -1381,54 +802,20 @@ def webp_meta_stats(
     decoding any coefficient data — a bounded range-read per object at
     100 TB. Non-WebP bytes degrade to 'unparseable' rows (fields null),
     never a raised exception mid-scan."""
+    from ..core.webp import webp_info
 
-    def kernel(batches):
-        import pyarrow as pa
+    def rows(data):
+        d = webp_info(data)
+        if d is None:
+            return [("webp", "unparseable") + (None,) * 9]
+        return [(
+            "webp", "parsed", d["variant"], d["width"],
+            d["height"], d["has_alpha"], d["has_anim"],
+            d["has_exif"], d["has_icc"], d["has_xmp"],
+            d["riff_bytes"],
+        )]
 
-        from ..core.webp import webp_info
-
-        schema = pa.schema(
-            [
-                pa.field("doc_id", pa.string()),
-                pa.field("format", pa.string()),
-                pa.field("outcome", pa.string()),
-                pa.field("variant", pa.string()),
-                pa.field("width", pa.int32()),
-                pa.field("height", pa.int32()),
-                pa.field("has_alpha", pa.int32()),
-                pa.field("has_anim", pa.int32()),
-                pa.field("has_exif", pa.int32()),
-                pa.field("has_icc", pa.int32()),
-                pa.field("has_xmp", pa.int32()),
-                pa.field("riff_bytes", pa.int32()),
-            ]
-        )
-        for batch in batches:
-            ids = batch.column(batch.schema.get_field_index("doc_id")).to_pylist()
-            payloads = batch.column(batch.schema.get_field_index("payload"))
-            cols = [[] for _ in range(12)]
-            for j, doc_id in enumerate(ids):
-                p = payloads[j].as_py()
-                d = webp_info(bytes(p) if p is not None else b"")
-                if d is None:
-                    row = ("webp", "unparseable", None, None, None, None,
-                           None, None, None, None, None)
-                else:
-                    row = (
-                        "webp", "parsed", d["variant"], d["width"],
-                        d["height"], d["has_alpha"], d["has_anim"],
-                        d["has_exif"], d["has_icc"], d["has_xmp"],
-                        d["riff_bytes"],
-                    )
-                for c, v in zip(cols, (str(doc_id),) + row):
-                    c.append(v)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema
-            )
-
-    return df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("payload")
-    ).mapInArrow(kernel, schema=WEBP_META_SCHEMA)
+    return _decode(df, payload_col, id_col, rows, WEBP_META_SCHEMA)
 
 
 WEBP_FRAMES_SCHEMA = StructType(
@@ -1459,59 +846,28 @@ def attach_webp_anim(docs: DataFrame) -> DataFrame:
     y = 2*(b[2i+1] % 128) (stored halved by the container)."""
     from ..core.webp import synth_webp
 
-    def kernel(batches):
-        import hashlib
+    def payload(text):
+        a = _md5(text + "webpa")
+        b = _md5(text + "webpf")
+        w = 1 + a[1] + 256 * (a[2] % 63)
+        h = 1 + a[3] + 256 * (a[4] % 63)
+        if a[0] % 5 == 0:
+            return synth_webp("vp8", w, h)
+        frames = [
+            {
+                "x": 2 * (b[2 * i] % 128),
+                "y": 2 * (b[2 * i + 1] % 128),
+                "w": w,
+                "h": h,
+                "duration_ms": 10 * (1 + a[5 + i] % 25),
+                "blend": (a[10] >> i) & 1,
+                "dispose": (a[11] >> i) & 1,
+            }
+            for i in range(1 + a[12] % 4)
+        ]
+        return synth_webp("vp8x", w, h, anim=1, frames=frames, loop_count=a[9] % 10)
 
-        import pyarrow as pa
-
-        schema = pa.schema(
-            [pa.field("doc_id", pa.string()), pa.field("payload", pa.binary())]
-        )
-        for batch in batches:
-            ids = batch.column(batch.schema.get_field_index("doc_id")).to_pylist()
-            texts = batch.column(batch.schema.get_field_index("text")).to_pylist()
-            payloads = []
-            for text in texts:
-                t = text or ""
-                a = hashlib.md5((t + "webpa").encode("utf-8")).digest()
-                b = hashlib.md5((t + "webpf").encode("utf-8")).digest()
-                w = 1 + a[1] + 256 * (a[2] % 63)
-                h = 1 + a[3] + 256 * (a[4] % 63)
-                if a[0] % 5 == 0:
-                    payloads.append(synth_webp("vp8", w, h))
-                    continue
-                nf = 1 + a[12] % 4
-                frames = [
-                    {
-                        "x": 2 * (b[2 * i] % 128),
-                        "y": 2 * (b[2 * i + 1] % 128),
-                        "w": w,
-                        "h": h,
-                        "duration_ms": 10 * (1 + a[5 + i] % 25),
-                        "blend": (a[10] >> i) & 1,
-                        "dispose": (a[11] >> i) & 1,
-                    }
-                    for i in range(nf)
-                ]
-                payloads.append(
-                    synth_webp(
-                        "vp8x", w, h, anim=1, frames=frames, loop_count=a[9] % 10
-                    )
-                )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([str(i) for i in ids], pa.string()),
-                    pa.array(payloads, pa.binary()),
-                ],
-                schema=schema,
-            )
-
-    out_schema = StructType(
-        [StructField("doc_id", StringType()), StructField("payload", BinaryType())]
-    )
-    return docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    ).mapInArrow(kernel, schema=out_schema)
+    return _attach(docs, payload)
 
 
 def webp_frame_stats(
@@ -1522,57 +878,24 @@ def webp_frame_stats(
     a frame-offset checksum — from the 16-byte ANMF headers only, frame
     payloads skipped via chunk lengths (range-read posture). Static WebPs
     degrade to 'not_animated', non-WebP bytes to 'unparseable'."""
+    from ..core.webp import webp_frames, webp_info
 
-    def kernel(batches):
-        import pyarrow as pa
+    def rows(raw):
+        d = webp_frames(raw)
+        if d is not None:
+            fr = d["frames"]
+            return [(
+                "webp", "animated", len(fr), d["loop_count"],
+                sum(f["duration_ms"] for f in fr),
+                sum(f["blend"] for f in fr),
+                sum(f["dispose"] for f in fr),
+                sum(f["x"] + f["y"] for f in fr),
+            )]
+        if webp_info(raw) is not None:
+            return [("webp", "not_animated") + (None,) * 6]
+        return [("webp", "unparseable") + (None,) * 6]
 
-        from ..core.webp import webp_frames, webp_info
-
-        schema = pa.schema(
-            [
-                pa.field("doc_id", pa.string()),
-                pa.field("format", pa.string()),
-                pa.field("outcome", pa.string()),
-                pa.field("n_frames", pa.int32()),
-                pa.field("loop_count", pa.int32()),
-                pa.field("total_duration_ms", pa.int32()),
-                pa.field("n_blend", pa.int32()),
-                pa.field("n_dispose", pa.int32()),
-                pa.field("sum_xy", pa.int32()),
-            ]
-        )
-        for batch in batches:
-            ids = batch.column(batch.schema.get_field_index("doc_id")).to_pylist()
-            payloads = batch.column(batch.schema.get_field_index("payload"))
-            cols = [[] for _ in range(9)]
-            for j, doc_id in enumerate(ids):
-                p = payloads[j].as_py()
-                raw = bytes(p) if p is not None else b""
-                d = webp_frames(raw)
-                if d is not None:
-                    fr = d["frames"]
-                    row = (
-                        "webp", "animated", len(fr), d["loop_count"],
-                        sum(f["duration_ms"] for f in fr),
-                        sum(f["blend"] for f in fr),
-                        sum(f["dispose"] for f in fr),
-                        sum(f["x"] + f["y"] for f in fr),
-                    )
-                elif webp_info(raw) is not None:
-                    row = ("webp", "not_animated", None, None, None, None,
-                           None, None)
-                else:
-                    row = ("webp", "unparseable", None, None, None, None,
-                           None, None)
-                for c, v in zip(cols, (str(doc_id),) + row):
-                    c.append(v)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema
-            )
-
-    return df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("payload")
-    ).mapInArrow(kernel, schema=WEBP_FRAMES_SCHEMA)
+    return _decode(df, payload_col, id_col, rows, WEBP_FRAMES_SCHEMA)
 
 
 AVIF_META_SCHEMA = StructType(
@@ -1608,46 +931,20 @@ def attach_avif(docs: DataFrame) -> DataFrame:
       n_items    = 1 + alpha."""
     from ..core.avif import synth_avif
 
-    def kernel(batches):
-        import hashlib
-
-        import pyarrow as pa
-
-        schema = pa.schema(
-            [pa.field("doc_id", pa.string()), pa.field("payload", pa.binary())]
+    def payload(text):
+        v = _md5(text + "avif")
+        alpha = v[6] % 2
+        return synth_avif(
+            1 + v[0] + 256 * (v[1] % 64),
+            1 + v[2] + 256 * (v[3] % 64),
+            bit_depth=(8, 10, 12)[v[4] % 3],
+            rotation=v[5] % 4,
+            alpha=alpha,
+            filler=v[7] % 64,
+            alpha_filler=(v[8] % 32) if alpha else 0,
         )
-        for batch in batches:
-            ids = batch.column(batch.schema.get_field_index("doc_id")).to_pylist()
-            texts = batch.column(batch.schema.get_field_index("text")).to_pylist()
-            payloads = []
-            for text in texts:
-                v = hashlib.md5(((text or "") + "avif").encode("utf-8")).digest()
-                alpha = v[6] % 2
-                payloads.append(
-                    synth_avif(
-                        1 + v[0] + 256 * (v[1] % 64),
-                        1 + v[2] + 256 * (v[3] % 64),
-                        bit_depth=(8, 10, 12)[v[4] % 3],
-                        rotation=v[5] % 4,
-                        alpha=alpha,
-                        filler=v[7] % 64,
-                        alpha_filler=(v[8] % 32) if alpha else 0,
-                    )
-                )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([str(i) for i in ids], pa.string()),
-                    pa.array(payloads, pa.binary()),
-                ],
-                schema=schema,
-            )
 
-    out_schema = StructType(
-        [StructField("doc_id", StringType()), StructField("payload", BinaryType())]
-    )
-    return docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    ).mapInArrow(kernel, schema=out_schema)
+    return _attach(docs, payload)
 
 
 def avif_meta_stats(
@@ -1660,52 +957,17 @@ def avif_meta_stats(
     coefficient payload is the documented codec seam and is never
     decoded. Non-AVIF bytes degrade to 'unparseable' rows (fields null),
     never a raised exception mid-scan."""
+    from ..core.avif import avif_info
 
-    def kernel(batches):
-        import pyarrow as pa
+    def rows(data):
+        d = avif_info(data)
+        if d is None:
+            return [("avif", "unparseable") + (None,) * 10]
+        return [(
+            "avif", "parsed", d["brand"], d["codec"], d["width"],
+            d["height"], d["bit_depth"], d["rotation"],
+            d["n_items"], d["has_alpha"], d["mdat_bytes"],
+            d["file_bytes"],
+        )]
 
-        from ..core.avif import avif_info
-
-        schema = pa.schema(
-            [
-                pa.field("doc_id", pa.string()),
-                pa.field("format", pa.string()),
-                pa.field("outcome", pa.string()),
-                pa.field("brand", pa.string()),
-                pa.field("codec", pa.string()),
-                pa.field("width", pa.int32()),
-                pa.field("height", pa.int32()),
-                pa.field("bit_depth", pa.int32()),
-                pa.field("rotation", pa.int32()),
-                pa.field("n_items", pa.int32()),
-                pa.field("has_alpha", pa.int32()),
-                pa.field("mdat_bytes", pa.int32()),
-                pa.field("file_bytes", pa.int32()),
-            ]
-        )
-        for batch in batches:
-            ids = batch.column(batch.schema.get_field_index("doc_id")).to_pylist()
-            payloads = batch.column(batch.schema.get_field_index("payload"))
-            cols = [[] for _ in range(13)]
-            for j, doc_id in enumerate(ids):
-                p = payloads[j].as_py()
-                d = avif_info(bytes(p) if p is not None else b"")
-                if d is None:
-                    row = ("avif", "unparseable", None, None, None, None,
-                           None, None, None, None, None, None)
-                else:
-                    row = (
-                        "avif", "parsed", d["brand"], d["codec"], d["width"],
-                        d["height"], d["bit_depth"], d["rotation"],
-                        d["n_items"], d["has_alpha"], d["mdat_bytes"],
-                        d["file_bytes"],
-                    )
-                for c, v in zip(cols, (str(doc_id),) + row):
-                    c.append(v)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema
-            )
-
-    return df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("payload")
-    ).mapInArrow(kernel, schema=AVIF_META_SCHEMA)
+    return _decode(df, payload_col, id_col, rows, AVIF_META_SCHEMA)

@@ -15,16 +15,15 @@ quirks preserved including value=NULL for quoted-empty, tokenize.ts:103-120;
 Interpolation keeps the reference's [raw, inner] pair, tokenize.ts:172-182,
 as content=raw / inner=trimmed-inner).
 
-Crossing: mapInArrow over flat child arrays by default — per-node Python
-dicts are never materialized on either side (same pattern as
-operators/extract.py, measured 1.7x there); the pandas crossing is kept as
-the semantic twin (use_arrow=False) and both are pinned to the same output
-by tests/test_parse_nodes.py.
+Crossing: mapInArrow over flat child arrays — per-node Python dicts are
+never materialized on either side (same pattern as operators/extract.py,
+measured 1.7x there); the output is pinned to the oracle-based parse_one
+by tests/test_arrow_crossings.py and tests/test_parse_nodes.py.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Optional
+from typing import Any, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -95,7 +94,8 @@ _KIND_BY_TYPE = {
 
 def parse_one(html: str) -> tuple[Optional[list[dict[str, Any]]], str, Optional[str]]:
     """Tokenize + parent-stack build -> flat node rows (document order).
-    Dict-rows form (pandas twin); parse_one_flat is the hot-path equivalent."""
+    Dict-rows test reference built on core/oracle.tokenize; parse_one_flat
+    is the kernel's equivalent and is pinned to it by the tests."""
     try:
         tokens = tokenize(html)
     except Divergence:
@@ -218,30 +218,6 @@ def parse_one_flat(
     return len(ids) - mark_n, "ok", None
 
 
-def _arrow_parse_schema(pa):
-    attr_t = pa.struct([pa.field("name", pa.string()), pa.field("value", pa.string())])
-    node_t = pa.struct(
-        [
-            pa.field("id", pa.int32()),
-            pa.field("pid", pa.int32()),
-            pa.field("kind", pa.string()),
-            pa.field("tag", pa.string()),
-            pa.field("content", pa.string()),
-            pa.field("inner", pa.string()),
-            pa.field("attrs", pa.list_(attr_t)),
-            pa.field("unary", pa.bool_()),
-        ]
-    )
-    return pa.schema(
-        [
-            pa.field("doc_id", pa.string()),
-            pa.field("nodes", pa.list_(node_t)),
-            pa.field("status", pa.string()),
-            pa.field("error", pa.string()),
-        ]
-    )
-
-
 def _offsets_and_mask(pa, lens: list) -> tuple:
     """(offsets, mask) arrays from per-entry lengths (-1 = null entry)."""
     offs = [0]
@@ -260,9 +236,11 @@ def _offsets_and_mask(pa, lens: list) -> tuple:
 def _arrow_kernel_factory(html_col: str, id_col: str):
     def kernel(batches):
         import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-        schema = _arrow_parse_schema(pa)
-        node_type = schema.field("nodes").type.value_type
+        schema = to_arrow_schema(PARSE_SCHEMA)
+        nodes_type = schema.field("nodes").type
+        node_type = nodes_type.value_type
         attr_type = node_type.field("attrs").type
         for batch in batches:
             doc_arr = batch.column(batch.schema.get_field_index(id_col))
@@ -298,7 +276,9 @@ def _arrow_kernel_factory(html_col: str, id_col: str):
                 fields=list(attr_type.value_type),
             )
             a_offs, a_mask = _offsets_and_mask(pa, attr_lens)
-            attrs_arr = pa.ListArray.from_arrays(a_offs, attr_struct, mask=a_mask)
+            attrs_arr = pa.ListArray.from_arrays(
+                a_offs, attr_struct, type=attr_type, mask=a_mask
+            )
             node_struct = pa.StructArray.from_arrays(
                 [
                     pa.array(ids, pa.int32()),
@@ -313,7 +293,9 @@ def _arrow_kernel_factory(html_col: str, id_col: str):
                 fields=list(node_type),
             )
             n_offs, n_mask = _offsets_and_mask(pa, node_lens)
-            nodes_arr = pa.ListArray.from_arrays(n_offs, node_struct, mask=n_mask)
+            nodes_arr = pa.ListArray.from_arrays(
+                n_offs, node_struct, type=nodes_type, mask=n_mask
+            )
             yield pa.RecordBatch.from_arrays(
                 [
                     doc_arr,
@@ -331,30 +313,9 @@ def parse_nodes(
     df: DataFrame,
     html_col: str = "html",
     id_col: str = "doc_id",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """(doc_id, html) -> (doc_id, nodes[], status, error)."""
-    if use_arrow:
-        return df.mapInArrow(
-            _arrow_kernel_factory(html_col, id_col), schema=PARSE_SCHEMA
-        )
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        for pdf in batches:
-            ids, nodes_col, statuses, errors = [], [], [], []
-            for doc_id, html in zip(pdf[id_col], pdf[html_col]):
-                nodes, status, error = parse_one(html if html is not None else "")
-                ids.append(str(doc_id))
-                nodes_col.append(nodes)
-                statuses.append(status)
-                errors.append(error)
-            yield pd.DataFrame(
-                {"doc_id": ids, "nodes": nodes_col, "status": statuses, "error": errors}
-            )
-
-    return df.mapInPandas(kernel, schema=PARSE_SCHEMA)
+    return df.mapInArrow(_arrow_kernel_factory(html_col, id_col), schema=PARSE_SCHEMA)
 
 
 def exploded_nodes(df_parsed: DataFrame) -> DataFrame:

@@ -9,18 +9,18 @@ Parses each text span and re-serializes it with the reference's exact quirks
   - missing attr values serialize as the literal string 'undefined'
   - attrs keep source order and duplicates
 
-One Python crossing (mapInArrow by default — all four output columns are
-flat scalars, so the batch is rebuilt from plain arrays with no per-row dict
-materialization; the pandas crossing is kept as the semantic twin,
-use_arrow=False); error/divergent rows surface as status columns,
-html_out = NULL (kernel shares the pass-1 tokenizer with extraction).
+One Python crossing (operators/arrow_rows.map_rows: all four output columns
+are flat scalars, so one row tuple per document is all the kernel returns);
+error/divergent rows surface as status columns, html_out = NULL (kernel
+shares the pass-1 tokenizer with extraction).
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from ..core.oracle import STATUS_OK
@@ -32,6 +32,7 @@ from ..kernels.extract import (
     _T_VOID,
     _tokenize_arrays,
 )
+from .arrow_rows import map_rows
 
 SERIALIZE_SCHEMA = StructType(
     [
@@ -85,61 +86,10 @@ def serialize_html(
     df: DataFrame,
     html_col: str = "html",
     id_col: str = "doc_id",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """(id, html) -> (doc_id, html_out, status, error)."""
-    if use_arrow:
-
-        def arrow_kernel(batches):
-            import pyarrow as pa
-
-            schema = pa.schema(
-                [
-                    pa.field("doc_id", pa.string()),
-                    pa.field("html_out", pa.string()),
-                    pa.field("status", pa.string()),
-                    pa.field("error", pa.string()),
-                ]
-            )
-            for batch in batches:
-                doc_arr = batch.column(batch.schema.get_field_index(id_col))
-                if doc_arr.type != pa.string():
-                    doc_arr = doc_arr.cast(pa.string())
-                outs, statuses, errors = [], [], []
-                for h in batch.column(batch.schema.get_field_index(html_col)).to_pylist():
-                    o, s, e = serialize_one(h if h is not None else "")
-                    outs.append(o)
-                    statuses.append(s)
-                    errors.append(e)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        doc_arr,
-                        pa.array(outs, pa.string()),
-                        pa.array(statuses, pa.string()),
-                        pa.array(errors, pa.string()),
-                    ],
-                    schema=schema,
-                )
-
-        return df.mapInArrow(arrow_kernel, schema=SERIALIZE_SCHEMA)
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        for pdf in batches:
-            outs, statuses, errors = [], [], []
-            for h in pdf[html_col]:
-                o, s, e = serialize_one(h if h is not None else "")
-                outs.append(o)
-                statuses.append(s)
-                errors.append(e)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype(str),
-                    "html_out": outs,
-                    "status": statuses,
-                    "error": errors,
-                }
-            )
-
-    return df.mapInPandas(kernel, schema=SERIALIZE_SCHEMA)
+    return map_rows(
+        df.select(F.col(id_col).cast("string"), html_col),
+        lambda doc_id, h: [(doc_id,) + serialize_one(h if h is not None else "")],
+        SERIALIZE_SCHEMA,
+    )

@@ -5,10 +5,11 @@ Spark-first.
 The reference runs an enter/exit plugin protocol over a mutable tree
 (transform.ts:12-88); on Spark, plugin *composition* belongs to the driver
 (each stage is a DataFrame op — SURVEY.md §2.2), and per-document rewrites
-operate on the extracted span stream inside ONE mapInPandas stage. A plugin
-is `list[Span] -> list[Span]` (Span = {kind,text,media_ref,order}); plugins
-compose in registry order; `order` is reassigned after the chain so the
-output invariant (dense 0-based document order) always holds.
+operate on the extracted span stream inside ONE mapInArrow stage
+(operators/arrow_rows.map_rows). A plugin is `list[Span] -> list[Span]`
+(Span = {kind,text,media_ref,order}); plugins compose in registry order;
+`order` is reassigned after the chain so the output invariant (dense 0-based
+document order) always holds.
 
 Built-in plugins cover the common training-data rewrites; `directiveTransforms`
 from the reference is declared-but-unused there (transform.ts:26-31) and has
@@ -18,10 +19,11 @@ no equivalent here by design.
 from __future__ import annotations
 
 import re
-from typing import Any, Callable, Iterator, Sequence
+from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame
 
+from .arrow_rows import map_rows
 from .extract import EXTRACT_SCHEMA
 
 Span = dict  # {kind, text, media_ref, order}
@@ -98,30 +100,19 @@ def transform_spans(
     untouched — plugins only see successful extractions)."""
     plugins = list(plugins)
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
+    def rows(doc_id, spans, status, error, _n_spans, _n_chars, partition_id):
+        if status != "ok" or spans is None:
+            spans = list(spans) if spans is not None else []
+        else:
+            for p in plugins:
+                spans = p(spans)
+            for i, s in enumerate(spans):  # reassign dense order
+                s["order"] = i
+        n_chars = sum(
+            len(s["text"]) for s in spans if s["kind"] == "text" and s["text"] is not None
+        )
+        return [(doc_id, spans, status, error, len(spans), n_chars, partition_id)]
 
-        for pdf in batches:
-            new_spans, n_spans_l, n_chars_l = [], [], []
-            for spans, status in zip(pdf["spans"], pdf["status"]):
-                if status != "ok" or spans is None:
-                    spans = list(spans) if spans is not None else []
-                else:
-                    spans = [dict(s) for s in spans]
-                    for p in plugins:
-                        spans = p(spans)
-                    for i, s in enumerate(spans):  # reassign dense order
-                        s["order"] = i
-                new_spans.append(spans)
-                n_spans_l.append(len(spans))
-                n_chars_l.append(
-                    sum(len(s["text"]) for s in spans
-                        if s["kind"] == "text" and s["text"] is not None)
-                )
-            out = pdf.copy()
-            out["spans"] = new_spans
-            out["n_spans"] = pd.array(n_spans_l, dtype="int32")
-            out["n_text_chars"] = pd.array(n_chars_l, dtype="int64")
-            yield out
-
-    return df_extracted.mapInPandas(kernel, schema=EXTRACT_SCHEMA)
+    return map_rows(
+        df_extracted.select(*EXTRACT_SCHEMA.names), rows, EXTRACT_SCHEMA
+    )

@@ -27,6 +27,11 @@ SCALE_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
+    # The integer rank paths (functions/graph pagerank/hits) rely on ANSI
+    # arithmetic: a bigint overflow raises ARITHMETIC_OVERFLOW instead of
+    # wrapping into a wrong rank. This is the Spark 4 default; pinning it
+    # keeps it true whatever the deployment's default.
+    "spark.sql.ansi.enabled": "true",
     # NOT set here: spark.sql.execution.arrow.maxRecordsPerBatch. Measured
     # both ways — 4096 beat the 10k default at local[32] with 128 input
     # partitions (7.14 -> 6.58 s), but REGRESSED the scaling protocol's

@@ -10,7 +10,7 @@ Two halves, mirroring the PDF branch (core/pdf.py synth/read):
                     documents table, entirely in Spark expressions (one
                     groupBy) — the test/bench fixture, no external data.
   warc_records      split WARC bytes into records distributively via ONE
-                    mapInPandas crossing: a pure-Python scanner per file
+                    mapInArrow crossing: a pure-Python scanner per file
                     blob — header parse, Content-Length payload slicing,
                     per-record gzip members (the .warc.gz layout) — that
                     degrades per record (status column), never raises.
@@ -22,7 +22,7 @@ warc_records applies unchanged. Parallelism is per-file (Common Crawl
 files are ~1 GB: 100k files = 100k tasks); records inside a file are
 scanned sequentially exactly once, payloads are never copied twice, and
 untouched trailing bytes after a truncation are skipped, not re-scanned.
-No shuffle anywhere: scan -> mapInPandas -> downstream.
+No shuffle anywhere: scan -> mapInArrow -> downstream.
 """
 
 from __future__ import annotations
@@ -36,12 +36,21 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
+
+from ..operators.arrow_rows import map_rows
 
 URL_PREFIX = "https://corpus.example"
 
-RECORD_SCHEMA = (
-    "url string, warc_type string, content_length int, payload_len int, "
-    "payload_md5 string, status string"
+RECORD_SCHEMA = StructType(
+    [
+        StructField("url", StringType()),
+        StructField("warc_type", StringType()),
+        StructField("content_length", IntegerType()),
+        StructField("payload_len", IntegerType()),
+        StructField("payload_md5", StringType()),
+        StructField("status", StringType()),
+    ]
 )
 
 # one WARC record per document, as a SQL expression (mirrored by the
@@ -154,30 +163,12 @@ def _scan_records(blob: bytes) -> Iterator[tuple]:
 
 def warc_records(files: DataFrame, content_col: str = "content") -> DataFrame:
     """Split WARC file blobs into per-record rows (RECORD_SCHEMA) with ONE
-    mapInPandas crossing. Input needs only ``content_col`` (binary); extra
-    columns are dropped (project path/file_id back by joining downstream
-    if per-file lineage is needed)."""
-    src = files.select(F.col(content_col).alias("content"))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "url",
-            "warc_type",
-            "content_length",
-            "payload_len",
-            "payload_md5",
-            "status",
-        ]
-        for pdf in batches:
-            rows = [
-                rec
-                for blob in pdf["content"]
-                if blob is not None
-                for rec in _scan_records(bytes(blob))
-            ]
-            out = pd.DataFrame(rows, columns=cols)
-            out["content_length"] = out["content_length"].astype("Int32")
-            out["payload_len"] = out["payload_len"].astype("Int32")
-            yield out
-
-    return src.mapInPandas(gen, RECORD_SCHEMA)
+    mapInArrow crossing (map_rows). Input needs only ``content_col``
+    (binary); extra columns are dropped (project path/file_id back by
+    joining downstream if per-file lineage is needed). A null blob yields
+    no rows."""
+    return map_rows(
+        files.select(F.col(content_col).alias("content")),
+        lambda blob: _scan_records(bytes(blob)) if blob is not None else (),
+        RECORD_SCHEMA,
+    )

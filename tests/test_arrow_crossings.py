@@ -1,11 +1,13 @@
 """The mapInArrow crossings (parse_nodes / serialize_html / diff_documents)
-must produce EXACTLY the same rows as their pandas twins — including nested
-attrs, null columns for error docs, and the attr_changes column — over a
-corpus that exercises ok/error/divergent statuses and every attr quirk."""
+must produce EXACTLY the rows of their oracle-based references (parse_one,
+core/oracle.generate, core/diff.diff_pair) — including nested attrs, null
+columns for error docs, and the attr_changes column — over a corpus that
+exercises ok/error/divergent statuses and every attr quirk."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from html_parser_spark.core import oracle
+from html_parser_spark.core.diff import diff_pair
 
 DOCS = [
     ("d1", '<div data-x-id="a1" keep="k"><p class="" nameonly>hi</p><img src=u alt=/></div>'),
@@ -27,11 +29,16 @@ def _sorted_rows(df):
 
 
 def test_parse_nodes_arrow_equals_pandas(spark):
-    from html_parser_spark.operators.parse import parse_nodes
+    """parse_nodes equals parse_one (the test reference built on
+    core/oracle.tokenize) row for row."""
+    from html_parser_spark.operators.parse import parse_nodes, parse_one
 
-    a = _sorted_rows(parse_nodes(_df(spark), use_arrow=True))
-    p = _sorted_rows(parse_nodes(_df(spark), use_arrow=False))
-    assert a == p
+    a = _sorted_rows(parse_nodes(_df(spark)))
+    want = []
+    for doc_id, html in sorted(DOCS):
+        nodes, status, error = parse_one(html if html is not None else "")
+        want.append({"doc_id": doc_id, "nodes": nodes, "status": status, "error": error})
+    assert a == want
     by_id = {r["doc_id"]: r for r in a}
     assert by_id["d4"]["status"] == "error" and by_id["d4"]["nodes"] is None
     # attr quirks through the arrow crossing
@@ -52,12 +59,28 @@ def test_parse_nodes_arrow_equals_pandas(spark):
     ]
 
 
+def _generate_ref(html):
+    """(html_out, status, error) from core/oracle: parse_html + generate."""
+    try:
+        root = oracle.parse_html(html)
+    except oracle.Divergence:
+        return None, oracle.STATUS_DIVERGENT, oracle.E_DIVERGENT
+    except oracle.ParseError as e:
+        return None, oracle.STATUS_ERROR, e.code
+    return oracle.generate(root), oracle.STATUS_OK, None
+
+
 def test_serialize_arrow_equals_pandas(spark):
+    """serialize_html equals core/oracle.generate(parse_html(html))."""
     from html_parser_spark.operators.serialize import serialize_html
 
-    a = _sorted_rows(serialize_html(_df(spark), use_arrow=True))
-    p = _sorted_rows(serialize_html(_df(spark), use_arrow=False))
-    assert a == p
+    a = _sorted_rows(serialize_html(_df(spark)))
+    want = [
+        dict(zip(("doc_id", "html_out", "status", "error"),
+                 (doc_id,) + _generate_ref(html if html is not None else "")))
+        for doc_id, html in sorted(DOCS)
+    ]
+    assert a == want
     by_id = {r["doc_id"]: r for r in a}
     assert by_id["d1"]["html_out"] == (
         '<div id="a1" keep="k"><p class="undefined">hi</p>'
@@ -78,9 +101,21 @@ def test_diff_arrow_equals_pandas(spark):
         ],
         "doc_id string, html string",
     )
-    a = _sorted_rows(diff_documents(new, old, use_arrow=True))
-    p = _sorted_rows(diff_documents(new, old, use_arrow=False))
-    assert a == p
+    a = _sorted_rows(diff_documents(new, old))
+    # every paired row equals core/diff.diff_pair (parse old, parse new,
+    # transform, serialize); unpaired rows carry the missing_* status
+    old_by_id = {r["doc_id"]: r["html"] for r in old.collect()}
+    new_by_id = dict(DOCS)
+    assert [r["doc_id"] for r in a] == sorted(set(old_by_id) | set(new_by_id))
+    for r in a:
+        n, o = new_by_id.get(r["doc_id"]), old_by_id.get(r["doc_id"])
+        got = (r["diff_html"], r["status"], r["error"])
+        if n is None:
+            assert got == (None, "missing_new", None)
+        elif o is None:
+            assert got == (None, "missing_old", None)
+        else:
+            assert got == diff_pair(n, o), r["doc_id"]
     by_id = {r["doc_id"]: r for r in a}
     # attrs-only change on the div: updated id (a0->a1), removed extra
     changes = [

@@ -3,6 +3,9 @@ on hand-built graphs (hub star, chain, dangling nodes)."""
 
 from __future__ import annotations
 
+import pytest
+from pyspark.sql import functions as F
+
 from html_parser_spark.functions.graph import PR_SCALE, pagerank
 
 
@@ -96,3 +99,21 @@ def test_hits_empty_edges_all_zero(spark):
     rows = hits(ndf, edf).collect()
     assert len(rows) == 3
     assert all(r.auth_micro == 0 and r.hub_micro == 0 for r in rows)
+
+
+
+def test_ansi_mode_makes_rank_overflow_loud(spark):
+    """Sessions built through session.apply_scale_confs run with ANSI
+    arithmetic, so the hits normalize step (raw sum * SCALE div max) fails
+    loudly past its ~9.2e6 in-degree bound instead of wrapping."""
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    step = F.expr(f"cast(coalesce(ar, 0) * {PR_SCALE} div amax as bigint)")
+
+    def normalize(in_links):
+        # the raw authority sum of a hub with `in_links` full-weight in-links
+        df = spark.createDataFrame([(in_links * PR_SCALE, 1)], "ar long, amax long")
+        return df.select(step).collect()[0][0]
+
+    assert normalize(9_200_000) == 9_200_000 * PR_SCALE * PR_SCALE
+    with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+        normalize(9_300_000)

@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 
 from html_parser_spark.core import oracle
-from html_parser_spark.kernels.extract import extract_doc_spans, process_document
+from html_parser_spark.kernels.extract import extract_doc_spans, process_document_flat
 from html_parser_spark.sources.fixtures import FIXTURES, synth_docs
 
 
@@ -35,11 +35,16 @@ def test_kernel_matches_oracle_on_seeded_corpus():
         kinds = [s[0] for s in in_spans]
         texts = [s[1] for s in in_spans]
         mrefs = [s[2] for s in in_spans]
-        got_spans, got_status, got_error, _ = process_document(kinds, texts, mrefs)
+        fk, ft, fm = [], [], []
+        n_sp, got_status, got_error, n_chars = process_document_flat(
+            kinds, texts, mrefs, fk, ft, fm
+        )
         assert got_status == want_status, doc_id
         assert got_error == want_error, doc_id
-        got_tuples = [(s["kind"], s["text"], s["media_ref"], s["order"]) for s in got_spans]
+        assert n_sp == len(fk)
+        got_tuples = [(k, t, m, i) for i, (k, t, m) in enumerate(zip(fk, ft, fm))]
         assert got_tuples == want_spans, doc_id
+        assert n_chars == sum(len(t) for t in ft if t is not None), doc_id
         n_checked += 1
     assert n_checked == 2000
 

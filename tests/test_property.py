@@ -160,20 +160,19 @@ _in_doc = st.lists(_in_span, min_size=0, max_size=5)
 @given(_in_doc)
 def test_flat_kernel_equals_dict_kernel(spans):
     """process_document_flat (the mapInArrow crossing's form) must agree with
-    process_document (the pandas crossing's form) on arbitrary interleaved
-    documents: same spans in the same order, same status/error/char count."""
-    from html_parser_spark.kernels.extract import process_document, process_document_flat
+    core/oracle.process_document on arbitrary interleaved documents: same
+    spans in the same order, same status/error, and n_chars equal to the
+    total text length of the spans it kept."""
+    from html_parser_spark.kernels.extract import process_document_flat
 
     kinds = [k for k, _, _ in spans]
     texts = [t for _, t, _ in spans]
     mrefs = [m for _, _, m in spans]
-    want_spans, want_status, want_error, want_chars = process_document(kinds, texts, mrefs)
+    want_spans, want_status, want_error = oracle.process_document(spans)
     fk, ft, fm = [], [], []
     n_sp, status, error, n_chars = process_document_flat(kinds, texts, mrefs, fk, ft, fm)
-    assert (status, error, n_chars) == (want_status, want_error, want_chars)
+    assert (status, error) == (want_status, want_error)
     assert n_sp == len(want_spans) == len(fk)
-    got = [
-        {"kind": k, "text": t, "media_ref": m, "order": i}
-        for i, (k, t, m) in enumerate(zip(fk, ft, fm))
-    ]
+    got = [(k, t, m, i) for i, (k, t, m) in enumerate(zip(fk, ft, fm))]
     assert got == want_spans
+    assert n_chars == sum(len(t) for t in ft if t is not None)

@@ -1,8 +1,10 @@
-"""End-to-end Spark extraction: the mapInPandas pipeline must reproduce the
+"""End-to-end Spark extraction: the mapInArrow pipeline must reproduce the
 oracle span-for-span over the interleaved input table (the per-row invariant:
 span-sequence equality on (kind, text, media_ref, order))."""
 
 from __future__ import annotations
+
+import zlib
 
 import pytest
 
@@ -77,10 +79,33 @@ def test_partition_metrics_totals(extracted):
     assert agg[1] > 0 and agg[2] > 0
 
 
+def _oracle_row(doc_id, in_spans, main):
+    """The extract_spans row core/oracle predicts for one input row: spans,
+    status and error from oracle.process_document (main mode: the spans of
+    an ok document come from extract_main_content instead), n_text_chars =
+    the strict spans' text length, partition_id = crc32(doc_id) % 1024 with
+    a null id in bucket 0."""
+    from html_parser_spark.kernels.heuristics import extract_main_content
+
+    in_spans = in_spans or []
+    kinds = [s["kind"] for s in in_spans]
+    texts = [s["text"] for s in in_spans]
+    mrefs = [s["media_ref"] for s in in_spans]
+    spans, status, error = oracle.process_document(list(zip(kinds, texts, mrefs)))
+    n_chars = sum(len(t) for _k, t, _m, _o in spans if t is not None)
+    if main and status == "ok":
+        spans = [
+            (s["kind"], s["text"], s["media_ref"], s["order"])
+            for s in extract_main_content(kinds, texts, mrefs)
+        ]
+    bucket = 0 if doc_id is None else zlib.crc32(doc_id.encode("utf-8")) % 1024
+    return (doc_id, status, error, len(spans), n_chars, bucket, tuple(spans))
+
+
 def test_arrow_and_pandas_crossings_are_twins(spark):
-    """extract_spans(use_arrow=True|False) must be bit-identical — including
-    on dirty upstream rows (null doc_id / null spans / empty spans / null
-    span text) and in heuristics mode."""
+    """extract_spans must equal the core/oracle prediction row for row —
+    including on dirty upstream rows (null doc_id / null spans / empty
+    spans / null span text) and in heuristics mode, salted and unsalted."""
     from html_parser_spark.kernels.extract import ExtractOptions
 
     docs = _to_rows(synth_docs(150, seed=23, mega_doc_rate=0.02))
@@ -91,6 +116,10 @@ def test_arrow_and_pandas_crossings_are_twins(spark):
         ("nulltext", [{"kind": "text", "text": None, "media_ref": None, "offset": 0}]),
         ("nullmedia", [{"kind": "media", "text": None, "media_ref": None, "offset": 0}]),
     ]
+    # plus the HTML fixtures, so error and divergent rows are compared too
+    docs += _to_rows(
+        (f"fx-{fid}", [("text", html, None, 0)]) for fid, _cat, html, _status in FIXTURES
+    )
     df = spark.createDataFrame(docs, schema=INPUT_SCHEMA)
 
     def key(r):
@@ -101,10 +130,12 @@ def test_arrow_and_pandas_crossings_are_twins(spark):
         )
 
     for opts in (None, ExtractOptions(mode="main")):
+        main = opts is not None
+        want = sorted((_oracle_row(d, sp, main) for d, sp in docs), key=str)
+        assert {w[1] for w in want} == {"ok", "error", "divergent"}
         for salt in (None, 8):
-            a = sorted((key(r) for r in extract_spans(df, options=opts, salt_partitions=salt, use_arrow=True).collect()), key=str)
-            p = sorted((key(r) for r in extract_spans(df, options=opts, salt_partitions=salt, use_arrow=False).collect()), key=str)
-            assert a == p
+            got = sorted((key(r) for r in extract_spans(df, options=opts, salt_partitions=salt).collect()), key=str)
+            assert got == want
 
 
 def test_partition_id_stable_across_runs(spark, extracted):

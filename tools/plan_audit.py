@@ -9,7 +9,10 @@ assert the plan properties the engine is designed around:
   - aggregations are map-side partial (partial_ + final HashAggregate)
   - narrow text functions have NO exchange at all
 
-Writes PLANS_AUDIT.md. Exits non-zero if an assertion fails.
+Usage: python tools/plan_audit.py [sf_dir]   (a directory path, or a scale
+factor such as '0.01' / 'sf0.01' naming a sibling of the default sf0.01
+directory). Writes PLANS_AUDIT.md. Exits 1 if an assertion fails, 2 on a
+missing sf directory (before Spark starts).
 """
 
 from __future__ import annotations
@@ -30,8 +33,21 @@ def explain_str(df) -> str:
     return buf.getvalue()
 
 
+DEFAULT_SF_DIR = "/root/testdata/sf0.01"
+
+
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    from gate_check import scale_factor_dir
+
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else DEFAULT_SF_DIR
+    if not (os.sep in sf_dir or os.path.isdir(sf_dir)):
+        # a bare scale factor ('0.01', 'sf0.01') names a sibling of the
+        # default sf directory, resolved exactly as tools/gate_check.py does
+        sf_dir = scale_factor_dir(os.path.dirname(DEFAULT_SF_DIR), sf_dir) or sf_dir
+    if not os.path.isdir(sf_dir):
+        print(f"plan_audit: no such sf directory: {sf_dir}", file=sys.stderr)
+        return 2
+
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as E
@@ -451,9 +467,10 @@ def main() -> int:
              "before the exchange)",
              lambda p: "partial_collect_list" in p),
             ("exactly two Python crossings: the gzip writer and the record "
-             "scanner (ArrowEvalPython + MapInPandas)",
+             "scanner (one ArrowEvalPython + one MapInArrow, no MapInPandas)",
              lambda p: len(re.findall(r"\(\d+\) ArrowEvalPython\b", p)) == 1
-             and len(re.findall(r"\(\d+\) MapInPandas\b", p)) == 1),
+             and len(re.findall(r"\(\d+\) MapInArrow\b", p)) == 1
+             and "MapInPandas" not in p),
         ],
     )
 
