@@ -1,7 +1,10 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 `queries()` exposes every implemented capability (SURVEY.md §2 + the
-training-data-pipeline operators) as (spark, sf_dir) -> DataFrame;
+training-data-pipeline operators) as (spark, sf_dir) -> DataFrame. Each
+call opens a fresh cache scope (html_parser_spark/cache.py) that holds
+the query's persisted intermediates until the next entry is called, so
+run one query at a time and act on its result before calling the next;
 `oracle_sql()` holds the DuckDB-runnable reconstruction of the SAME answer
 from first principles, so the Spark kernels are verified end-to-end:
 
@@ -36,6 +39,7 @@ from first principles, so the Spark kernels are verified end-to-end:
 
 from __future__ import annotations
 
+import functools
 import os
 import sys
 from collections.abc import Callable
@@ -46,6 +50,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from html_parser_spark import cache
 from html_parser_spark.functions import dedup as DD
 from html_parser_spark.functions import joins as JN
 from html_parser_spark.functions.clustering import (
@@ -288,8 +293,7 @@ def q_graph_domain_pagerank(spark, sf_dir):
         F.col("doc_id").cast("string").alias("doc_id"),
         F.expr(hid.format(h="host_canon")).alias("src"),
     )
-    links = q_extract_links(spark, sf_dir)
-    dst = links.select(
+    dst = q_extract_links(spark, sf_dir).select(
         "doc_id",
         F.expr(
             hid.format(h="regexp_extract(href_canon, '://([^/]*)', 1)")
@@ -297,12 +301,7 @@ def q_graph_domain_pagerank(spark, sf_dir):
     )
     edges = src.join(dst, "doc_id").select("src", "dst")
     nodes = spark.range(10).select(F.col("id").alias("node"))
-    res = pagerank(nodes, edges)
-    # DD._unpersist_with CONTRACT: keep the links df alive or its parse
-    # cache GC-unpersists before the action and the kernel re-runs per
-    # consumer branch.
-    res._keepalive_links = links
-    return res
+    return pagerank(nodes, edges)
 
 
 def q_text_tokens_multiscript(spark, sf_dir):
@@ -359,7 +358,7 @@ def q_extract_links(spark, sf_dir):
     )
     # persisted: the parse kernel feeds the node table AND the attr table;
     # without the barrier each consumer re-runs the Python crossing
-    parsed = parse_nodes(df).persist()
+    parsed = cache.persist(parse_nodes(df))
     nodes = exploded_nodes(parsed).where("status = 'ok'")
     anchors = nodes.where("tag = 'a'").select(
         "doc_id",
@@ -384,14 +383,13 @@ def q_extract_links(spark, sf_dir):
         .join(texts, ["doc_id", "a_id"])
         .select("doc_id", "link_idx", "href", "anchor_text")
     )
-    out = canonicalize_urls(links, "href").select(
+    return canonicalize_urls(links, "href").select(
         "doc_id",
         "link_idx",
         "href",
         F.col("url_canon").alias("href_canon"),
         "anchor_text",
     )
-    return DD._unpersist_with(out, parsed)
 
 
 def q_web_anchor_text(spark, sf_dir):
@@ -405,14 +403,7 @@ def q_web_anchor_text(spark, sf_dir):
     min(struct(-cnt, anchor)) tie-break is pinned exactly."""
     from html_parser_spark.functions.url import anchor_stats
 
-    links = q_extract_links(spark, sf_dir)
-    res = anchor_stats(links)
-    # DD._unpersist_with CONTRACT: deriving a child and dropping `links`
-    # would GC-unpersist the parse cache before any action runs, and the
-    # kernel would execute once per consumer branch (3x). Tie its lifetime
-    # to the result instead.
-    res._keepalive_links = links
-    return res
+    return anchor_stats(q_extract_links(spark, sf_dir))
 
 
 def q_web_crawl_delta(spark, sf_dir):
@@ -884,9 +875,9 @@ def q_sketch_bloom(spark, sf_dir):
     # persisted: the trigram table feeds the filter build, the probe, AND
     # the exact-count join — without the barrier the explode+md5 chain
     # runs three times over the corpus
-    tri = docs.selectExpr(
-        "doc_id", f"explode(array_distinct({_BLOOM_TRIGRAMS})) as g"
-    ).persist()
+    tri = cache.persist(
+        docs.selectExpr("doc_id", f"explode(array_distinct({_BLOOM_TRIGRAMS})) as g")
+    )
     bench = tri.where("doc_id % 200 = 0").select("g").distinct()
     bloom = SK.bloom_build(bench, "g")
     # ONE pass over the trigram table serves all three counts: the exact
@@ -902,12 +893,11 @@ def q_sketch_bloom(spark, sf_dir):
         F.expr("cast(sum(bloom_hit) as int)").alias("n_bloom_hits"),
         F.expr("cast(sum(coalesce(_inb, 0)) as int)").alias("n_exact"),
     )
-    out = (
+    return (
         docs.select("doc_id")
         .join(per_doc, on="doc_id", how="left")
         .na.fill({"n_shingles": 0, "n_bloom_hits": 0, "n_exact": 0})
     )
-    return DD._unpersist_with(out, tri)
 
 
 def q_graph_pagerank(spark, sf_dir):
@@ -2248,8 +2238,23 @@ def q_sketch_hll_user_minutes(spark, sf_dir):
     return SK.hll_distinct(_events_utc(spark, sf_dir), key, ["event_type"])
 
 
+def _scoped(fn: Callable[[SparkSession, str], DataFrame]):
+    """A registry entry owns its query's cache scope: each call closes the
+    session's open scope (releasing the previous query's caches) and opens
+    a fresh one, which stays open after the call returns so the caller's
+    action on the lazy result reads live caches. Composed q_ functions call
+    each other directly and share the caller's scope."""
+
+    @functools.wraps(fn)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        cache.open_scope(spark)
+        return fn(spark, sf_dir)
+
+    return run
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
+    registry = {
         # Round-5 rotation (VERDICT r04 item 1): the driver samples a
         # 50-entry PREFIX of this dict. The prefix holds, in order:
         # (a) the three plans RESHAPED in round 4 (kmeans row-local argmin,
@@ -2386,6 +2391,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sketch_hll_users": q_sketch_hll_users,
         "sketch_hll_user_minutes": q_sketch_hll_user_minutes,
     }
+    return {name: _scoped(fn) for name, fn in registry.items()}
 
 
 # ---------------------------------------------------------------------------

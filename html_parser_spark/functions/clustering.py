@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import cache
+
 K_DEFAULT = 8
 SCALE = 1000.0
 
@@ -108,12 +110,10 @@ def kmeans_assign(
     """Fixed-round Lloyd k-means; returns the FINAL assignment
     (vec_id, cluster int, dist double) after `n_iter` update rounds —
     dist is the squared distance in the quantized (x1000) space."""
-    from .dedup import _unpersist_with
-
     # persisted: every iteration's assignment pass re-reads the vectors
     # (n_iter + 1 passes); without the cache each pass re-scans the source
-    # and re-quantizes. Released when the result is garbage-collected.
-    vecs = quantized_vectors(embs).persist()
+    # and re-quantizes. Released when the caller's cache scope closes.
+    vecs = cache.persist(quantized_vectors(embs))
     cents = vecs.where(F.col("vec_id") < k).select(
         F.col("vec_id").cast("int").alias("cid"), F.col("codes").alias("cent")
     )
@@ -121,9 +121,7 @@ def kmeans_assign(
         assigned = _assign(vecs, cents)
         cents = _update(assigned, cents, dim)
     final = _assign(vecs, cents)
-    return _unpersist_with(
-        final.select("vec_id", F.col("cid").alias("cluster"), "dist"), vecs
-    )
+    return final.select("vec_id", F.col("cid").alias("cluster"), "dist")
 
 
 def kmeans_chain_sql(
@@ -231,12 +229,15 @@ def semantic_dedup(
     uses the same regime; AQE skew-join splits any runaway cluster). The
     corpus-side join of assignments back to embeddings is one
     co-partitioned shuffle; everything downstream touches only pairs."""
-    from .dedup import _DOT, _NORM2, _unpersist_with
+    from .dedup import _DOT, _NORM2
 
     assigned = kmeans_assign(embs, k, n_iter, dim)
     # persisted: the pair step reads base twice (self-join) and the final
-    # keep projection a third time; released with the result (weakref)
-    base = assigned.join(embs.select("vec_id", "embedding"), "vec_id").persist()
+    # keep projection a third time; released, with kmeans_assign's vector
+    # cache, when the caller's cache scope closes
+    base = cache.persist(
+        assigned.join(embs.select("vec_id", "embedding"), "vec_id")
+    )
 
     a, b = base.alias("a"), base.alias("b")
     dot = _DOT.format(a="a.embedding", b="b.embedding")
@@ -274,14 +275,13 @@ def semantic_dedup(
         .groupBy("vec_id")
         .agg(F.count("*").alias("n_dups"), F.max("lost").alias("lost"))
     )
-    result = base.join(stats, "vec_id", "left").select(
+    return base.join(stats, "vec_id", "left").select(
         "vec_id",
         "cluster",
         "dist",
         F.coalesce("n_dups", F.lit(0)).cast("int").alias("n_dups"),
         (1 - F.coalesce("lost", F.lit(0))).cast("int").alias("keep"),
     )
-    return _unpersist_with(result, base)
 
 
 def semantic_dedup_oracle_sql(

@@ -25,68 +25,12 @@ SQL-oracle-checkable at any sf.
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import cache
 from .text import WORD_HASH
 
-
-# Live references per cached ANALYZED plan (applicationId, semanticHash):
-# Spark's CacheManager keys cache entries by plan, not by DataFrame object,
-# so two queries that persist structurally identical plans SHARE one entry
-# (the second .persist() is a no-op). A per-object finalizer would then
-# unpersist the shared entry when the FIRST result dies, silently uncaching
-# the still-live second query (observed: gate loops that rebuild
-# extract_links re-ran the parse kernel 3x after the previous iteration's
-# result was GC'd). Refcounting by semantic hash makes release happen only
-# when the LAST registered owner dies.
-_CACHE_REFS: dict = {}
-
-
-def _unpersist_with(result: DataFrame, cached: DataFrame) -> DataFrame:
-    """Tie `cached`'s lifetime to `result`: when the returned DataFrame is
-    garbage-collected, drop the cached intermediate from the cache manager
-    (refcounted across structurally identical plans — see _CACHE_REFS).
-
-    The pair functions persist their shingle table (it feeds 3-4 consumers in
-    one plan) but return lazily, so they cannot unpersist after the action
-    themselves. Without cleanup, repeated calls in a long-lived session/driver
-    loop accumulate cached tables. A weakref finalizer gives deterministic
-    release in loops (each iteration drops the previous result) without
-    forcing eager evaluation inside a lazy API. Callers that want immediate
-    release can simply `del` the result (or let it fall out of scope).
-
-    CONTRACT: hold the returned DataFrame object itself across all actions.
-    Deriving a child plan (`result.where(...)`) and dropping the original
-    reference lets GC unpersist the cache mid-use — still correct (Spark
-    recomputes) but the persist benefit silently vanishes. Keep `result`
-    alive, run actions, then drop it."""
-    jdf = cached._jdf
-    try:
-        key = (
-            cached.sparkSession.sparkContext.applicationId,
-            jdf.queryExecution().analyzed().semanticHash(),
-        )
-        _CACHE_REFS[key] = _CACHE_REFS.get(key, 0) + 1
-    except Exception:  # py4j hiccup: fall back to unrefcounted release
-        key = None
-
-    def _cleanup(jdf=jdf, key=key):
-        try:  # session may already be stopped at interpreter shutdown
-            if key is not None:
-                left = _CACHE_REFS.get(key, 1) - 1
-                if left > 0:  # a sibling with the same cached plan is live
-                    _CACHE_REFS[key] = left
-                    return
-                _CACHE_REFS.pop(key, None)
-            jdf.unpersist(False)
-        except Exception:
-            pass
-
-    weakref.finalize(result, _cleanup)
-    return result
 
 EXACT_OFFSET = 1_000_000  # doc_id offset for planted exact copies
 NEAR_OFFSET = 2_000_000  # doc_id offset for planted near copies (last word dropped)
@@ -233,9 +177,9 @@ def jaccard_pairs(
     path; this operator is the exact-within-block reference.
 
     The shingle set feeds three consumers (two join sides + sizes), so it is
-    persisted for the duration of the computation and released when the
-    returned DataFrame is garbage-collected (_unpersist_with)."""
-    sh = shingles(corpus).persist()
+    persisted through `cache.persist` and released when the caller's cache
+    scope closes."""
+    sh = cache.persist(shingles(corpus))
     sizes = _doc_sizes(sh)
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
@@ -250,7 +194,7 @@ def jaccard_pairs(
     )
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
-    result = (
+    return (
         inter.join(sa, "doc_a")
         .join(sb, "doc_b")
         .select(
@@ -262,7 +206,6 @@ def jaccard_pairs(
         )
         .where(F.col("jacc_permille") >= threshold_permille)
     )
-    return _unpersist_with(result, sh)
 
 
 MINHASH_P = 2147483647  # 2^31-1: a*(g%P)+b < 2^62, no int64 overflow
@@ -387,10 +330,13 @@ def minhash_lsh_pairs(
         co-partitioned shuffle joins when the candidate set outgrows a
         broadcast — the driver-side collect term stays bounded at any
         corpus size. The DEFAULT is False (always shuffle-verify): that
-        path is both scale-safe and LAZY — auto's sizing runs count()/agg
-        actions and persists intermediates at plan-CONSTRUCTION time, so a
-        caller that only builds/explains the plan would leak persisted RDDs
-        (ADVICE r04). The gate/bench call sites opt into auto explicitly.
+        path is both scale-safe and LAZY — auto's sizing runs a count()
+        action at plan-CONSTRUCTION time. The gate/bench call sites opt
+        into auto explicitly.
+    The three intermediates (shingle arrays, candidates, candidate arrays)
+    persist through `cache.persist` and are released when the caller's
+    cache scope closes, so a plan-only caller leaks nothing on either path;
+    with no scope open they are recomputed per consumer branch.
     Mega-doc caveat: the per-doc array form assumes a bounded document size
     (the extraction pipeline upstream enforces this); for pathological
     single-doc shingle sets beyond executor row limits, the exploded
@@ -420,7 +366,7 @@ def minhash_lsh_pairs(
             F.count("*").alias("n"),
             F.coalesce(F.sum(F.expr("size(garr)")), F.lit(0)).alias("slots"),
         )
-    garr_all = garr_all.persist()
+    garr_all = cache.persist(garr_all)
     garr = garr_all.where(
         F.expr("size(garr) > 0")  # docs with <3 words have no shingles (the
         # exploded form drops them implicitly; here it also keeps the empty
@@ -460,14 +406,13 @@ def minhash_lsh_pairs(
             ).alias("dropped_doc_slots"),
         )
     # persisted: the pair set feeds the candidate-doc semi-join and the final
-    # verify join; small by construction; released with the result
-    candidates = (
+    # verify join; small by construction
+    candidates = cache.persist(
         buckets.where((F.expr("size(ids)") > 1) & (F.expr("size(ids)") <= max_bucket))
         .select(F.expr("array_sort(ids)").alias("ids_s"))
         .select(F.explode(F.expr(pair_expr)).alias("p"))
         .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
         .distinct()
-        .persist()
     )
     # verification restricted to CANDIDATES (the whole point of LSH): shrink
     # the array table to candidate docs (broadcast semi-join — narrow over
@@ -497,9 +442,10 @@ def minhash_lsh_pairs(
     # session's autoBroadcastJoinThreshold. True/False force one path
     # (tests pin that both produce identical pairs). Auto makes the call
     # EAGER at the candidate stage — fine for pipeline-terminal callers
-    # that always act on the result (gate/bench opt in), wrong as the
-    # default: a plan-only caller would leak the persisted intermediates,
-    # so the default is the lazy scale-safe shuffle path (False).
+    # that always act on the result (gate/bench opt in). The persisted
+    # intermediates belong to the caller's cache scope, so a plan-only
+    # caller does not leak them either; the default stays the lazy
+    # scale-safe shuffle path (False), which runs no job at build time.
     if auto:
         thr = _broadcast_threshold_bytes(corpus.sparkSession)
         # ONE sizing action per pass (round-5 floor work; the old shape ran
@@ -524,14 +470,13 @@ def minhash_lsh_pairs(
         bcast_ids = broadcast_verify
         bcast_arr = broadcast_verify
     maybe_bcast_ids = F.broadcast if bcast_ids else (lambda df: df)
-    cand_arr = (
+    cand_arr = cache.persist(
         garr.join(maybe_bcast_ids(cand_ids), "doc_id", "left_semi")
         .withColumn("sz", F.expr("cast(size(garr) as bigint)"))
-        .persist()
     )
     maybe_bcast = F.broadcast if bcast_arr else (lambda df: df)
     ca, cb = cand_arr.alias("ca"), cand_arr.alias("cb")
-    result = (
+    return (
         candidates.join(maybe_bcast(ca), F.col("doc_a") == F.col("ca.doc_id"))
         .join(maybe_bcast(cb), F.col("doc_b") == F.col("cb.doc_id"))
         .select(
@@ -552,9 +497,6 @@ def minhash_lsh_pairs(
         )
         .where(F.col("jacc_permille") >= threshold_permille)
     )
-    for cached in (garr_all, candidates, cand_arr):
-        result = _unpersist_with(result, cached)
-    return result
 
 
 def decontaminate(
@@ -832,13 +774,17 @@ def fuzzy_join(
     pairs WITHIN one corpus are never proposed (the bucket expansion is
     left-ids x right-ids, not all-pairs), so a table joined against a
     small reference set does candidate work proportional to the matches,
-    not to its own near-dup structure."""
+    not to its own near-dup structure.
+
+    The shingle arrays, the candidates and both sides' candidate arrays
+    persist through `cache.persist` and are released when the caller's
+    cache scope closes."""
     u = left.selectExpr("0 as side", "doc_id", "text").unionByName(
         right.selectExpr("1 as side", "doc_id", "text")
     )
-    garr_all = u.select(
-        "side", "doc_id", F.expr(shingle_array_expr()).alias("garr")
-    ).persist()
+    garr_all = cache.persist(
+        u.select("side", "doc_id", F.expr(shingle_array_expr()).alias("garr"))
+    )
     garr = garr_all.where(F.expr("size(garr) > 0"))
     sig_cols = [
         F.expr(
@@ -866,7 +812,7 @@ def fuzzy_join(
         "transform(filter(ids, x -> x.side = 1), "
         "b -> struct(a.doc_id as left_id, b.doc_id as right_id))))"
     )
-    candidates = (
+    candidates = cache.persist(
         bands.groupBy("band", "key")
         .agg(F.collect_list(F.struct("side", "doc_id")).alias("ids"))
         .where(
@@ -875,9 +821,8 @@ def fuzzy_join(
         .select(F.explode(F.expr(pair_expr)).alias("p"))
         .select("p.left_id", "p.right_id")
         .distinct()
-        .persist()
     )
-    la = (
+    la = cache.persist(
         garr.where("side = 0")
         .join(
             F.broadcast(candidates.select(F.col("left_id").alias("doc_id"))),
@@ -885,9 +830,8 @@ def fuzzy_join(
             "left_semi",
         )
         .withColumn("sz", F.expr("cast(size(garr) as bigint)"))
-        .persist()
     )
-    rb = (
+    rb = cache.persist(
         garr.where("side = 1")
         .join(
             F.broadcast(candidates.select(F.col("right_id").alias("doc_id"))),
@@ -895,9 +839,8 @@ def fuzzy_join(
             "left_semi",
         )
         .withColumn("sz", F.expr("cast(size(garr) as bigint)"))
-        .persist()
     )
-    result = (
+    return (
         candidates.join(
             F.broadcast(la.alias("la")), F.col("left_id") == F.col("la.doc_id")
         )
@@ -924,9 +867,6 @@ def fuzzy_join(
         )
         .where(F.col("jacc_permille") >= threshold_permille)
     )
-    for cached in (garr_all, candidates, la, rb):
-        result = _unpersist_with(result, cached)
-    return result
 
 
 # ---------------------------------------------------------------------------

@@ -77,15 +77,6 @@ def quality(docs: DataFrame, keep: tuple = ()) -> DataFrame:
     )
 
 
-def token_count(docs: DataFrame) -> DataFrame:
-    """(doc_id, n_ws_tokens, n_bpe_tokens) — whitespace + subword estimate."""
-    return with_words(docs).select(
-        "doc_id",
-        F.expr("size(words)").alias("n_ws_tokens"),
-        F.expr("aggregate(words, 0L, (s, w) -> s + div(length(w) + 3, 4))").alias("n_bpe_tokens"),
-    )
-
-
 def doc_frequency(docs: DataFrame, top_n: int = 0) -> DataFrame:
     """(term, df): per-term DOCUMENT frequency over the corpus (distinct
     words per doc, so a term counts once per document). top_n > 0 keeps the

@@ -92,10 +92,6 @@ FIXTURES: list[tuple[str, str, str, str]] = [
 ]
 
 
-def ok_fixtures() -> list[tuple[str, str, str, str]]:
-    return [f for f in FIXTURES if f[3] == OK]
-
-
 # ---------------------------------------------------------------------------
 # Deterministic interleaved-document synthesis (the bench/pipeline corpus)
 # ---------------------------------------------------------------------------

@@ -8,11 +8,6 @@ arriving interleaved-doc feed.
     -> the SAME fused mapInArrow kernel (stateless: per-doc extraction
        needs no cross-batch state, so it streams unchanged)
     -> writeStream parquet + checkpointLocation (exactly-once file sink)
-
-plus a watermarked, windowed metrics stream (docs/spans/errors per minute) —
-the streaming analogue of partition_metrics. Late rows beyond the watermark
-are dropped by Spark's state eviction, bounding state size on a 1000-executor
-continuous run.
 """
 
 from __future__ import annotations
@@ -20,7 +15,6 @@ from __future__ import annotations
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..kernels.extract import ExtractOptions
@@ -61,31 +55,3 @@ def start_extract_sink(
         writer = writer.trigger(availableNow=True)
     return writer.start()
 
-
-def metrics_stream(extracted: DataFrame, window: str = "1 minute") -> DataFrame:
-    """Watermarked per-window extraction metrics (arrival time — the input
-    shape carries no event time). State is bounded by the 2-window watermark."""
-    with_ts = extracted.withColumn("ingest_ts", F.current_timestamp())
-    return (
-        with_ts.withWatermark("ingest_ts", "2 minutes")
-        .groupBy(F.window("ingest_ts", window).alias("win"), F.col("status"))
-        .agg(
-            F.count("*").alias("doc_count"),
-            F.sum("n_spans").alias("span_count"),
-            F.sum("n_text_chars").alias("text_chars"),
-        )
-    )
-
-
-def start_metrics_sink(
-    metrics: DataFrame, output_dir: str, checkpoint_dir: str, available_now: bool = True
-) -> StreamingQuery:
-    writer = (
-        metrics.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

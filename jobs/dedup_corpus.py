@@ -57,6 +57,7 @@ def main(argv=None, spark=None) -> int:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from html_parser_spark import cache
     from html_parser_spark.functions import dedup as DD
     from html_parser_spark.session import apply_scale_confs
 
@@ -68,47 +69,46 @@ def main(argv=None, spark=None) -> int:
         spark.sparkContext.setLogLevel("WARN")
     t0 = time.time()
 
-    docs = spark.read.parquet(args.input).select("doc_id", "text")
-    # the corpus feeds three consumers (pairs, exact, survivor base):
-    # cache the input projection once
-    docs.persist()
-    n_docs = docs.count()
+    with cache.scope(spark):
+        # the corpus feeds three consumers (pairs, exact, survivor base):
+        # cache the input projection once
+        docs = cache.persist(spark.read.parquet(args.input).select("doc_id", "text"))
+        n_docs = docs.count()
 
-    from pyspark.sql import Observation
+        from pyspark.sql import Observation
 
-    obs = Observation("lsh_coverage")
-    pairs = DD.minhash_lsh_pairs(
-        docs,
-        threshold_permille=args.threshold_permille,
-        max_bucket=args.max_bucket,
-        observation=obs,
-    )
-    pairs.write.mode("overwrite").parquet(os.path.join(args.output, "pairs"))
-    pairs = spark.read.parquet(os.path.join(args.output, "pairs"))
-
-    clusters = DD.connected_components(pairs)
-    clusters.write.mode("overwrite").parquet(os.path.join(args.output, "clusters"))
-    clusters = spark.read.parquet(os.path.join(args.output, "clusters"))
-
-    survivors = (
-        docs.select("doc_id")
-        .join(clusters, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.expr("coalesce(rep_doc_id, doc_id)").alias("rep_doc_id"),
-            F.expr("cast(rep_doc_id is null or rep_doc_id = doc_id as boolean)").alias(
-                "keep"
-            ),
+        obs = Observation("lsh_coverage")
+        pairs = DD.minhash_lsh_pairs(
+            docs,
+            threshold_permille=args.threshold_permille,
+            max_bucket=args.max_bucket,
+            observation=obs,
         )
-    )
-    survivors.write.mode("overwrite").parquet(os.path.join(args.output, "survivors"))
-    survivors = spark.read.parquet(os.path.join(args.output, "survivors"))
+        pairs.write.mode("overwrite").parquet(os.path.join(args.output, "pairs"))
+        pairs = spark.read.parquet(os.path.join(args.output, "pairs"))
 
-    n_pairs = pairs.count()
-    n_clusters = clusters.select("rep_doc_id").distinct().count()
-    n_dropped = survivors.where("not keep").count()
-    exact_groups = DD.exact_groups(docs).count()
-    docs.unpersist()
+        clusters = DD.connected_components(pairs)
+        clusters.write.mode("overwrite").parquet(os.path.join(args.output, "clusters"))
+        clusters = spark.read.parquet(os.path.join(args.output, "clusters"))
+
+        survivors = (
+            docs.select("doc_id")
+            .join(clusters, "doc_id", "left")
+            .select(
+                "doc_id",
+                F.expr("coalesce(rep_doc_id, doc_id)").alias("rep_doc_id"),
+                F.expr("cast(rep_doc_id is null or rep_doc_id = doc_id as boolean)").alias(
+                    "keep"
+                ),
+            )
+        )
+        survivors.write.mode("overwrite").parquet(os.path.join(args.output, "survivors"))
+        survivors = spark.read.parquet(os.path.join(args.output, "survivors"))
+
+        n_pairs = pairs.count()
+        n_clusters = clusters.select("rep_doc_id").distinct().count()
+        n_dropped = survivors.where("not keep").count()
+        exact_groups = DD.exact_groups(docs).count()
 
     metrics = {
         "n_docs": n_docs,

@@ -91,11 +91,15 @@ def type_drift(spark_df, con, sql) -> list[str]:
 _SF_SPELLING = re.compile(r"(?:sf[_-]?)?(\d*\.?\d+)", re.IGNORECASE)
 
 
-def scale_factor_dir(testdata: str, arg: str) -> str | None:
-    """'0.01', 'sf0.01', 'SF0.01', 'sf_0.01', 'sf.01' -> <testdata>/sf0.01;
-    None when ``arg`` does not spell a scale factor."""
+def scale_factor_dir(testdata: str, arg: str) -> str:
+    """'0.01', 'sf0.01', 'SF0.01', 'sf_0.01', 'sf.01' -> <testdata>/sf0.01.
+    A path (it has a separator or names a directory) and anything that does
+    not spell a scale factor come back unchanged, for the caller's
+    existence check to accept or reject."""
     m = _SF_SPELLING.fullmatch(arg)
-    return os.path.join(testdata, f"sf{float(m.group(1)):g}") if m else None
+    if os.sep in arg or os.path.isdir(arg) or not m:
+        return arg
+    return os.path.join(testdata, f"sf{float(m.group(1)):g}")
 
 
 def run_gate(spark, sf_dir: str, only: set[str], records: dict | None = None) -> int:
@@ -212,8 +216,7 @@ def main():
     else:
         sf_dirs = ["/root/testdata/sf0.01", "/root/testdata/sf0.1"]
         if argv:
-            resolved = scale_factor_dir(os.path.dirname(sf_dirs[0]), argv[0])
-            sf_dirs = [resolved or argv[0]]
+            sf_dirs = [scale_factor_dir(os.path.dirname(sf_dirs[0]), argv[0])]
     missing = [d for d in sf_dirs if not os.path.isdir(d)]
     unknown = sorted(only - set(entrymod.queries()))
     if missing or unknown:

@@ -39,11 +39,10 @@ DEFAULT_SF_DIR = "/root/testdata/sf0.01"
 def main() -> int:
     from gate_check import scale_factor_dir
 
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else DEFAULT_SF_DIR
-    if not (os.sep in sf_dir or os.path.isdir(sf_dir)):
-        # a bare scale factor ('0.01', 'sf0.01') names a sibling of the
-        # default sf directory, resolved exactly as tools/gate_check.py does
-        sf_dir = scale_factor_dir(os.path.dirname(DEFAULT_SF_DIR), sf_dir) or sf_dir
+    arg = sys.argv[1] if len(sys.argv) > 1 else DEFAULT_SF_DIR
+    # a bare scale factor ('0.01', 'sf0.01') names a sibling of the default
+    # sf directory, resolved exactly as tools/gate_check.py does
+    sf_dir = scale_factor_dir(os.path.dirname(DEFAULT_SF_DIR), arg)
     if not os.path.isdir(sf_dir):
         print(f"plan_audit: no such sf directory: {sf_dir}", file=sys.stderr)
         return 2
@@ -171,32 +170,34 @@ def main() -> int:
     # (the auto path materializes the candidate cache eagerly to size it, so
     # its formatted plan re-prints each cached subtree under every
     # InMemoryTableScan and raw node counts no longer mean "shuffles
-    # executed")
+    # executed"). A direct library call, so the audit owns its cache scope.
+    from html_parser_spark import cache
     from html_parser_spark.functions import dedup as DD
 
     lsh_corpus = DD.plant_dups(
         spark.read.parquet(f"{sf_dir}/documents.parquet")
     )
-    audit(
-        "dedup_minhash_lsh",
-        DD.minhash_lsh_pairs(lsh_corpus, broadcast_verify=True),
-        [
-            ("TWO shuffles total (bucket groupBy + pair distinct): "
-             "signatures and sizes are narrow array projections, never an "
-             "explode + groupBy",
-             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 2),
-            ("verification is candidate-bounded: broadcast semi-join shrink "
-             "+ broadcast array attach (the corpus-wide shingle set is "
-             "never shuffled or joined wide)",
-             lambda p: p.count("BroadcastHashJoin") >= 2 and "LeftSemi" in p),
-            ("one shingle pass over the corpus: the array table is computed "
-             "once per union leg and cached (no expression re-inlining)",
-             lambda p: p.count("conv(substr(md5") <= 3),
-            ("candidates from one groupBy on (band,key), not a bands "
-             "self-join (no join of the band table with itself)",
-             lambda p: "collect_list" in p),
-        ],
-    )
+    with cache.scope(spark):
+        audit(
+            "dedup_minhash_lsh",
+            DD.minhash_lsh_pairs(lsh_corpus, broadcast_verify=True),
+            [
+                ("TWO shuffles total (bucket groupBy + pair distinct): "
+                 "signatures and sizes are narrow array projections, never an "
+                 "explode + groupBy",
+                 lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 2),
+                ("verification is candidate-bounded: broadcast semi-join shrink "
+                 "+ broadcast array attach (the corpus-wide shingle set is "
+                 "never shuffled or joined wide)",
+                 lambda p: p.count("BroadcastHashJoin") >= 2 and "LeftSemi" in p),
+                ("one shingle pass over the corpus: the array table is computed "
+                 "once per union leg and cached (no expression re-inlining)",
+                 lambda p: p.count("conv(substr(md5") <= 3),
+                ("candidates from one groupBy on (band,key), not a bands "
+                 "self-join (no join of the band table with itself)",
+                 lambda p: "collect_list" in p),
+            ],
+        )
 
     audit(
         "dedup_minhash_lsh (auto verify path, the gate/bench default)",

@@ -28,7 +28,8 @@ min/min efficiency by ~0.05 (observed), while the medians of 9 interleaved
 trials are stable. Min walls are recorded alongside for transparency.
 
 Usage: python tools/scaling_bench.py [--n 4] [--amplify 300]
-       [--minhash-docs 300000] [--ops extract,parse,minhash] [--sf-dir ...]
+       [--minhash-docs 300000] [--ops extract,parse,minhash]
+       [--sf-dir 0.1 | sf0.1 | <dir>]
 """
 
 from __future__ import annotations
@@ -83,6 +84,14 @@ def main() -> int:
     )
     args = ap.parse_args()
     ops = args.ops.split(",")
+    # '0.1', 'sf0.1' or a path, resolved as tools/gate_check.py does; a
+    # missing directory exits before any Spark process starts
+    from gate_check import scale_factor_dir
+
+    sf_dir = scale_factor_dir(os.path.dirname(ap.get_default("sf_dir")), args.sf_dir)
+    if not os.path.isdir(sf_dir):
+        print(f"scaling_bench: no such sf directory: {sf_dir}", file=sys.stderr)
+        return 2
 
     os.makedirs(args.workdir, exist_ok=True)
     interleaved_dir = f"{args.workdir}/input_interleaved"
@@ -106,7 +115,7 @@ spark = apply_scale_confs(SparkSession.builder.master("local[8]").config("spark.
 # driver.memory matches the measured runs: the default 1g heap OOMs the
 # input shuffle once --minhash-docs goes past ~1M (2.4M probe = ~5 GB)
 spark.sparkContext.setLogLevel("ERROR")
-docs = spark.read.parquet({args.sf_dir!r} + "/documents.parquet")
+docs = spark.read.parquet({sf_dir!r} + "/documents.parquet")
 reps = spark.range({args.amplify}).select(F.col("id").alias("rep"))
 docs = docs.crossJoin(reps).select((F.col("doc_id") * {args.amplify} + F.col("rep")).alias("doc_id"), "text", "source")
 interleaved_from_documents(docs).repartition(64).write.parquet({interleaved_dir!r})
