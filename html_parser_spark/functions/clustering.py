@@ -22,15 +22,18 @@ array_min-over-structs expression (no window, no k-fold row expansion —
 the corpus NEVER shuffles); the update is a map-side-combinable
 groupBy(cid) over 64 per-dim sums (k x 64 numbers of state per
 executor). Per iteration the corpus is read once and shuffles only the
-k x 64 partials. Fixed iteration count keeps the plan finite (lineage
-grows per round — at production depth, localCheckpoint per round like
-functions/dedup.connected_components). Seeds are the first k vec_ids
+k x 64 partials. Each round reads the previous centroids twice (the
+assignment's broadcast array and the update's carry-over side), so every
+round's centroids go through `cache.persist`: inside the caller's cache
+scope the next round reads k cached rows and the plan stays one round
+deep at any n_iter; outside a scope the rows are the same, but round r
+re-expands 2^r seed chains. Seeds are the first k vec_ids
 (deterministic); k-means|| sampling would slot in as a seed provider.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import cache
@@ -82,20 +85,15 @@ def _assign(vecs: DataFrame, cents: DataFrame) -> DataFrame:
 def _update(assigned: DataFrame, seeds: DataFrame, dim: int) -> DataFrame:
     """New centroids = per-dim mean of members (exact-int sums, one
     division); clusters that lost every member keep their previous
-    centroid (deterministic, mirrors the oracle's LEFT JOIN)."""
+    centroid (deterministic, mirrors the oracle's LEFT JOIN). The per-dim
+    sums and means are expression strings: built from Column objects they
+    took ~640 py4j calls per round at 64 dims (0.6-1.7 s of driver time)."""
     sums = assigned.groupBy("cid").agg(
-        F.count("*").alias("n"),
-        *[
-            F.sum(F.element_at("codes", d + 1)).alias(f"s{d}")
-            for d in range(dim)
-        ],
+        F.expr("count(*) as n"),
+        *[F.expr(f"sum(element_at(codes, {d + 1})) as s{d}") for d in range(dim)],
     )
-    new_cent = sums.select(
-        "cid",
-        F.array(
-            *[F.col(f"s{d}") / F.col("n").cast("double") for d in range(dim)]
-        ).alias("new_cent"),
-    )
+    means = ", ".join(f"s{d} / cast(n as double)" for d in range(dim))
+    new_cent = sums.selectExpr("cid", f"array({means}) as new_cent")
     # broadcast: both sides are k rows, but without the hint the planner
     # saw unsized aggregation outputs and planned a SortMergeJoin per round
     # (two sort stages over 8 rows — pure plan-depth cost, VERDICT r03 #4)
@@ -114,12 +112,14 @@ def kmeans_assign(
     # (n_iter + 1 passes); without the cache each pass re-scans the source
     # and re-quantizes. Released when the caller's cache scope closes.
     vecs = cache.persist(quantized_vectors(embs))
-    cents = vecs.where(F.col("vec_id") < k).select(
-        F.col("vec_id").cast("int").alias("cid"), F.col("codes").alias("cent")
+    # centroids: the next round reads them twice (module docstring)
+    cents = cache.persist(
+        vecs.where(F.col("vec_id") < k).select(
+            F.col("vec_id").cast("int").alias("cid"), F.col("codes").alias("cent")
+        )
     )
     for _ in range(n_iter):
-        assigned = _assign(vecs, cents)
-        cents = _update(assigned, cents, dim)
+        cents = cache.persist(_update(_assign(vecs, cents), cents, dim))
     final = _assign(vecs, cents)
     return final.select("vec_id", F.col("cid").alias("cluster"), "dist")
 
@@ -233,16 +233,18 @@ def semantic_dedup(
 
     assigned = kmeans_assign(embs, k, n_iter, dim)
     # persisted: the pair step reads base twice (self-join) and the final
-    # keep projection a third time; released, with kmeans_assign's vector
-    # cache, when the caller's cache scope closes
+    # keep projection a third time; released, with kmeans_assign's caches,
+    # when the caller's cache scope closes. n2 is each vector's squared
+    # norm, folded once here instead of twice per pair (same fold on the
+    # same operands, so cos is bit-identical)
     base = cache.persist(
-        assigned.join(embs.select("vec_id", "embedding"), "vec_id")
+        assigned.join(embs.select("vec_id", "embedding"), "vec_id").withColumn(
+            "n2", F.expr(_NORM2.format(a="embedding"))
+        )
     )
 
     a, b = base.alias("a"), base.alias("b")
     dot = _DOT.format(a="a.embedding", b="b.embedding")
-    na2 = _NORM2.format(a="a.embedding")
-    nb2 = _NORM2.format(a="b.embedding")
     pairs = (
         a.join(
             b,
@@ -254,7 +256,7 @@ def semantic_dedup(
             F.col("b.vec_id").alias("vb"),
             F.col("a.dist").alias("da"),
             F.col("b.dist").alias("db"),
-            F.expr(f"{dot} / (sqrt({na2}) * sqrt({nb2}))").alias("cos"),
+            F.expr(f"{dot} / (sqrt(a.n2) * sqrt(b.n2))").alias("cos"),
         )
         .where(F.col("cos") >= min_cos)
     )

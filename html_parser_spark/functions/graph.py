@@ -15,8 +15,11 @@ aggregation order equals the oracle's. Fixed damping 850 permille:
 
 Scale posture: one shuffle per iteration (the groupBy(dst) of
 contributions, map-side combinable) plus the broadcast-able out-degree
-join; iteration count is fixed, and at production depth each round would
-localCheckpoint like connected_components to truncate lineage. The
+join; iteration count is fixed. Cache rule: whatever a loop reads more
+than once goes through `cache.persist` (released by the caller's cache
+scope; outside a scope Spark recomputes the same rows) — pagerank's
+loop-invariant degree-joined edge table, and each HITS half-round's
+scores, which the next half-round and its L-inf scalar both read. The
 standard convergence loop just wraps this with a delta check.
 """
 
@@ -24,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .. import cache
 
 PR_SCALE = 1_000_000
 PR_DAMPING_PERMILLE = 850
@@ -35,15 +40,18 @@ def pagerank(
     n_iter: int = 3,
     damping_permille: int = PR_DAMPING_PERMILLE,
 ) -> DataFrame:
-    """nodes: (node bigint); edges: (src, dst). Returns (node,
-    pr_micro bigint, in_deg int) after `n_iter` exact integer rounds.
-    Dangling mass is dropped (nodes with no out-edges contribute
+    """nodes: (node bigint); edges: (src, dst), src never null. Returns
+    (node, pr_micro bigint, in_deg int) after `n_iter` exact integer
+    rounds. Dangling mass is dropped (nodes with no out-edges contribute
     nothing), matching the simple formulation the oracle mirrors."""
     base = (1000 - damping_permille) * (PR_SCALE // 1000)
     deg = edges.groupBy("src").agg(
         F.expr("cast(count(*) as bigint)").alias("out_deg")
     )
-    ed = edges.join(F.broadcast(deg), on="src")
+    # loop-invariant: every round joins it, and in a composed query `edges`
+    # is a whole extraction chain that would otherwise re-plan and re-run
+    # per round. Released when the caller's cache scope closes.
+    ed = cache.persist(edges.join(F.broadcast(deg), on="src"))
     pr = nodes.select("node", F.lit(PR_SCALE).cast("bigint").alias("pr_micro"))
     for _ in range(n_iter):
         contrib = (
@@ -61,7 +69,7 @@ def pagerank(
                 "div 1000 as bigint)"
             ).alias("pr_micro"),
         )
-    in_deg = edges.groupBy("dst").agg(
+    in_deg = ed.groupBy("dst").agg(
         F.expr("cast(count(*) as int)").alias("in_deg")
     )
     return pr.join(in_deg, pr["node"] == in_deg["dst"], "left").select(
@@ -96,10 +104,10 @@ def hits(
 
     Scale posture: two map-side-combinable shuffles per round (the
     contribution groupBys on dst then src); the L-inf scalar attaches as a
-    broadcast one-row cross join, never a single-partition window. A
-    production-depth loop would persist + localCheckpoint each round like
-    connected_components; at the fixed depths used here lineage stays
-    shallow enough to skip it.
+    broadcast one-row cross join, never a single-partition window. Each
+    half-round's scores are read twice by the next (its join and, through
+    the raw sums, its L-inf scalar), so they go through `cache.persist`
+    and the plan stays one half-round deep instead of doubling per round.
     """
     hub = nodes.select(
         "node", F.lit(PR_SCALE).cast("bigint").alias("hub_micro")
@@ -115,7 +123,7 @@ def hits(
         amax = a_raw.agg(
             F.expr("cast(greatest(max(ar), 1) as bigint)").alias("amax")
         )
-        auth = (
+        auth = cache.persist(
             nodes.join(a_raw, nodes["node"] == a_raw["dst"], "left")
             .crossJoin(F.broadcast(amax))
             .select(
@@ -134,7 +142,7 @@ def hits(
         hmax = h_raw.agg(
             F.expr("cast(greatest(max(hr), 1) as bigint)").alias("hmax")
         )
-        hub = (
+        hub = cache.persist(
             nodes.join(h_raw, nodes["node"] == h_raw["src"], "left")
             .crossJoin(F.broadcast(hmax))
             .select(

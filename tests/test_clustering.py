@@ -5,7 +5,9 @@ a seeded random corpus (the gate re-checks on the real tables)."""
 from __future__ import annotations
 
 import duckdb
+import pytest
 
+from html_parser_spark import cache
 from html_parser_spark.functions.clustering import (
     kmeans_assign,
     kmeans_oracle_sql,
@@ -150,3 +152,84 @@ def test_semantic_dedup_matches_oracle_on_seeded_corpus(spark):
     # every planted copy loses to its original (tie -> larger id drops)
     keep = {v: k for v, _, _, _, k in got}
     assert all(keep[100 + i] == 0 for i in range(0, 40, 5))
+
+
+def _seeded_corpus(spark, n=60, dim=8):
+    import random
+
+    import numpy as np
+
+    rng = random.Random(11)
+    rows = [
+        (i, [float(np.float32(rng.uniform(-1, 1))) for _ in range(dim)])
+        for i in range(n)
+    ]
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE TABLE embeddings AS SELECT "
+        f"UNNEST(range({n})) AS vec_id, UNNEST($vecs) AS embedding",
+        {"vecs": [v for _, v in rows]},
+    )
+    return _embs(spark, rows, dim), con
+
+
+@pytest.mark.parametrize("n_iter", [1, 2, 3, 4])
+def test_kmeans_rows_same_in_and_out_of_cache_scope(spark, n_iter):
+    """Each round's centroids are persisted inside a cache scope and
+    recomputed outside one: both must give the oracle's exact rows."""
+    embs, con = _seeded_corpus(spark)
+
+    def rows():
+        return sorted(map(tuple, kmeans_assign(embs, k=4, n_iter=n_iter, dim=8).collect()))
+
+    with cache.scope(spark):
+        scoped = rows()
+    unscoped = rows()
+    oracle = sorted(
+        map(tuple, con.execute(kmeans_oracle_sql(k=4, n_iter=n_iter, dim=8)).fetchall())
+    )
+    assert scoped == unscoped == oracle
+
+
+def _seq(s) -> list:
+    return [s.apply(i) for i in range(s.size())]
+
+
+def _top_level_nodes(plan, seen: set):
+    """Nodes of an executed plan through adaptive plans, query stages and
+    subqueries, but not into the plan cached behind an InMemoryTableScan."""
+    if plan.id() in seen:
+        return
+    seen.add(plan.id())
+    yield plan
+    kids = _seq(plan.children()) + _seq(plan.subqueries())
+    kind = plan.getClass().getSimpleName()
+    if kind == "AdaptiveSparkPlanExec":
+        kids.append(plan.executedPlan())
+    elif kind.endswith("QueryStageExec"):
+        kids.append(plan.plan())
+    for k in kids:
+        yield from _top_level_nodes(k, seen)
+
+
+def test_kmeans_plan_does_not_grow_with_rounds(spark):
+    """Inside a cache scope a round's plan reads the previous centroids from
+    the cache, so the final plan holds one round's aggregates and exchanges
+    whatever n_iter is (without the per-round cache, round r re-expands
+    every earlier round)."""
+    embs, _ = _seeded_corpus(spark)
+
+    def wide_nodes(n_iter):
+        with cache.scope(spark):
+            df = kmeans_assign(embs, k=4, n_iter=n_iter, dim=8)
+            df.collect()
+            plan = df._jdf.queryExecution().executedPlan()
+            return sum(
+                1
+                for n in _top_level_nodes(plan, set())
+                if "HashAggregate" in n.nodeName() or "Exchange" in n.nodeName()
+            )
+
+    at2, at4 = wide_nodes(2), wide_nodes(4)
+    assert at2 > 0
+    assert at4 <= at2, f"plan grows with rounds: {at2} wide nodes at 2, {at4} at 4"

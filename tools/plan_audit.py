@@ -33,6 +33,13 @@ def explain_str(df) -> str:
     return buf.getvalue()
 
 
+def stable_ids(plan: str) -> str:
+    """Blank expression ids (`doc_id#123L`) and exchange plan ids: both come
+    from JVM-wide counters that shift whenever an earlier query builds a
+    node more or less, so PLANS_AUDIT.md would change on every run."""
+    return re.sub(r"(#|plan_id=)\d+", r"\1_", plan)
+
+
 DEFAULT_SF_DIR = "/root/testdata/sf0.01"
 
 
@@ -953,7 +960,7 @@ def main() -> int:
         out.append(f"\n## {name}\n")
         for desc, ok in results:
             out.append(f"- {'PASS' if ok else 'FAIL'}: {desc}")
-        out.append("\n```\n" + plan.strip()[:4000] + "\n```")
+        out.append("\n```\n" + stable_ids(plan.strip())[:4000] + "\n```")
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS_AUDIT.md"), "w") as f:
         f.write("\n".join(out) + "\n")
     for name, _, results in checks:
