@@ -87,7 +87,7 @@ def _update(assigned: DataFrame, seeds: DataFrame, dim: int) -> DataFrame:
     division); clusters that lost every member keep their previous
     centroid (deterministic, mirrors the oracle's LEFT JOIN). The per-dim
     sums and means are expression strings: built from Column objects they
-    took ~640 py4j calls per round at 64 dims (0.6-1.7 s of driver time)."""
+    took ~640 py4j calls per round at 64 dims (0.6-1.7 s of plan building)."""
     sums = assigned.groupBy("cid").agg(
         F.expr("count(*) as n"),
         *[F.expr(f"sum(element_at(codes, {d + 1})) as s{d}") for d in range(dim)],
