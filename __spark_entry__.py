@@ -181,11 +181,9 @@ def q_dedup_jaccard(spark, sf_dir):
 
 
 def q_dedup_minhash_lsh(spark, sf_dir):
-    # gate/bench are pipeline-terminal: opt into the eager auto verify-path
-    # (the library default stays the lazy shuffle path — ADVICE r04)
-    return DD.minhash_lsh_pairs(
-        DD.plant_dups(_docs(spark, sf_dir)), broadcast_verify=None
-    )
+    # minhash_lsh_pairs runs no job while its plan is built; AQE picks the
+    # verify joins' strategy from the cached stage sizes when it executes
+    return DD.minhash_lsh_pairs(DD.plant_dups(_docs(spark, sf_dir)))
 
 
 def q_fuzzy_join(spark, sf_dir):
@@ -208,9 +206,7 @@ def q_dedup_clusters(spark, sf_dir):
     (O(log n) rounds). rep_doc_id = component min = canonical survivor;
     the oracle mirrors it with a DuckDB recursive CTE over the same
     pair set."""
-    pairs = DD.minhash_lsh_pairs(
-        DD.plant_dups(_docs(spark, sf_dir)), broadcast_verify=None
-    )
+    pairs = DD.minhash_lsh_pairs(DD.plant_dups(_docs(spark, sf_dir)))
     return DD.connected_components(pairs)
 
 
@@ -2508,8 +2504,9 @@ def _sign_bucket_d(col: str, bits: int = 16) -> str:
 
 
 def _minhash_select_d(k: int) -> str:
-    """Mirror of functions/dedup.minhash_signatures: linear-permutation
-    MinHash mins as one aggregation (identical int64 arithmetic)."""
+    """Mirror of the min-hashes in functions/dedup.band_key_exprs:
+    linear-permutation MinHash mins as one aggregation over the exploded
+    shingles (identical int64 arithmetic)."""
     p = DD.MINHASH_P
     cols = [
         f"MIN(({a} * (g % {p}) + {b}) % {p}) AS mh{i}"

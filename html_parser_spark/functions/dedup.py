@@ -8,10 +8,12 @@ arithmetic), and shuffle-conscious:
                low-cardinality column (source) so the join never goes
                quadratic in the corpus; at 100 TB you run minhash_lsh first
                and feed ONLY candidate pairs here.
-  - minhash:   k min-hashes from md5(seed|shingle); banded LSH buckets ->
-               candidate pairs via ONE bucket groupBy + in-bucket expansion,
-               broadcast-semi-joined verification (the scale path: shuffle
-               is O(docs*k), candidates O(near-dups)).
+  - minhash:   k linear-permutation min-hashes over the hashed shingles;
+               banded LSH buckets -> candidate pairs via ONE bucket
+               groupBy + in-bucket expansion, semi-join-shrunk
+               verification (the scale path: shuffle is O(docs*k),
+               candidates O(near-dups)); fuzzy_join is its cross-table
+               face on the same core.
   - simhash:   32-bit sign-aggregated word-hash fingerprint computed in ONE
                per-doc fold (shuffle-free narrow projection); hamming-close
                docs collide on the integer.
@@ -25,7 +27,7 @@ SQL-oracle-checkable at any sf.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .. import cache
@@ -225,62 +227,143 @@ def minhash_params(k: int = MINHASH_K) -> list[tuple[int, int]]:
     return params
 
 
-def minhash_signatures_from(sh: DataFrame, k: int = MINHASH_K) -> DataFrame:
-    """Wide signature from an existing shingle table (doc_id, g)."""
-    aggs = [
-        F.expr(f"min(pmod({a}L * pmod(g, {MINHASH_P}L) + {b}L, {MINHASH_P}L))").alias(
-            f"mh{i}"
-        )
-        for i, (a, b) in enumerate(minhash_params(k))
+def band_key_exprs(
+    garr: str, k: int = MINHASH_K, rows_per_band: int = LSH_ROWS_PER_BAND
+) -> list[str]:
+    """The LSH band keys of a shingle-array SQL expression, one SQL
+    expression per band: key = md5 of the band's min-hashes joined in order,
+    where min-hash i is array_min of the permutation h_i over the array — a
+    narrow projection (no explode, no groupBy), and each min-hash is
+    computed in exactly one band. The batch paths pass their cached `garr`
+    column; the streaming path (streaming/stateful.band_keys_expr) passes
+    `shingle_array_expr()` itself, so both bucket identically."""
+    mh = [
+        f"array_min(transform({garr}, g -> "
+        f"pmod({a}L * pmod(g, {MINHASH_P}L) + {b}L, {MINHASH_P}L)))"
+        for a, b in minhash_params(k)
     ]
-    return sh.groupBy("doc_id").agg(*aggs)
+    r = rows_per_band
+    return [
+        f"md5(concat_ws('|', {', '.join(mh[i:i + r])}))"
+        for i in range(0, k // r * r, r)
+    ]
 
 
-def minhash_signatures(corpus: DataFrame, k: int = MINHASH_K) -> DataFrame:
-    """(doc_id, mh0..mh{k-1}): all k min-hashes in ONE aggregation pass —
-    pure int64 arithmetic (no explode, no string hashing): ~8x less shuffle
-    input than the explode-per-permutation formulation."""
-    return minhash_signatures_from(shingles(corpus), k)
+def _shingle_arrays(df: DataFrame, *keep: str) -> DataFrame:
+    """(*keep, garr) for every doc with at least one shingle. Persisted: the
+    array table feeds the band path AND the verify path, and without the
+    cache barrier Catalyst inlines the shingle expression into every
+    consumer branch (x3 again under plant_dups-style unions — measured 18
+    md5 passes); the filter sits ABOVE the cache so predicate pushdown
+    cannot substitute the alias either. Docs with <3 words have no shingles
+    (the exploded form drops them implicitly; here the filter also keeps
+    them from colliding into one degenerate bucket)."""
+    garr = cache.persist(
+        df.select(*keep, F.expr(shingle_array_expr()).alias("garr"))
+    )
+    return garr.where(F.expr("size(garr) > 0"))
 
 
-def lsh_band_keys(
-    sigs: DataFrame, k: int = MINHASH_K, rows_per_band: int = LSH_ROWS_PER_BAND
+def _lsh_candidates(
+    garr: DataFrame,
+    ids: Column,
+    pair_expr: str,
+    k: int,
+    rows_per_band: int,
+    max_bucket: int,
+    observation=None,
 ) -> DataFrame:
-    """(doc_id, band, key): banded signature keys from the wide signature;
-    key = md5 of the band's min-hashes joined in order."""
-    n_bands = k // rows_per_band
-    cells = []
-    for band in range(n_bands):
-        cols = ", ".join(f"mh{band * rows_per_band + r}" for r in range(rows_per_band))
-        cells.append(f"{band}, md5(concat_ws('|', {cols}))")
-    return sigs.select(
-        "doc_id",
-        F.expr(f"stack({n_bands}, {', '.join(cells)}) as (band, key)"),
+    """Distinct candidate pairs from ONE groupBy on (band, key): each
+    bucket's members aggregate to `ids`, and `pair_expr` expands them to
+    struct pairs in-bucket — no bands self-join (which would shuffle the
+    band table twice and build a join hash table for data that is 99%
+    singleton buckets). Buckets over `max_bucket` members are dropped
+    (boilerplate docs sharing a signature would expand quadratically) and
+    counted by `observation` when one is given. Persisted: the pairs feed
+    the candidate-array shrink and the verify join."""
+    keys = band_key_exprs("garr", k, rows_per_band)
+    cells = ", ".join(f"{band}, {key}" for band, key in enumerate(keys))
+    buckets = (
+        garr.select("*", F.expr(f"stack({len(keys)}, {cells}) as (band, key)"))
+        .groupBy("band", "key")
+        .agg(ids.alias("ids"))
+    )
+    if observation is not None:
+        dropped = f"size(ids) > {max_bucket}"
+        buckets = buckets.observe(
+            observation,
+            F.expr(f"coalesce(sum(case when {dropped} then 1 else 0 end), 0)")
+            .alias("dropped_buckets"),
+            F.expr(f"coalesce(sum(case when {dropped} then size(ids) else 0 end), 0)")
+            .alias("dropped_doc_slots"),
+        )
+    return cache.persist(
+        buckets.where(F.expr(f"size(ids) > 1 and size(ids) <= {max_bucket}"))
+        .select(F.explode(F.expr(pair_expr)).alias("p"))
+        .select("p.*")
+        .distinct()
     )
 
 
-def _broadcast_threshold_bytes(spark) -> int:
-    """The session's autoBroadcastJoinThreshold as plain bytes (the conf
-    accepts '10MB' / '10485760b' / bare numbers; -1 = broadcast disabled)."""
-    s = str(spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760"))
-    s = s.strip().lower()
-    mult = 1
-    # longest suffix first: Spark's byte-conf parser accepts k/m/g/t/p and
-    # kb/mb/gb/tb/pb (and bare b); checking "tb" before "t"/"b" matters
-    for suf, m in (
-        ("kb", 1024), ("mb", 1024**2), ("gb", 1024**3),
-        ("tb", 1024**4), ("pb", 1024**5),
-        ("k", 1024), ("m", 1024**2), ("g", 1024**3),
-        ("t", 1024**4), ("p", 1024**5), ("b", 1),
-    ):
-        if s.endswith(suf):
-            s, mult = s[: -len(suf)], m
-            break
-    try:
-        n = int(s)
-    except ValueError:  # unparseable conf value: fall back to Spark's default
-        return 10 * 1024**2
-    return n * mult if n >= 0 else 0
+def _verify_candidates(
+    candidates: DataFrame,
+    a_col: str,
+    b_col: str,
+    a_arr: DataFrame,
+    b_arr: DataFrame,
+    threshold_permille: int,
+) -> DataFrame:
+    """Exact Jaccard over the candidate pairs only (the whole point of LSH):
+    (a_col, b_col, inter, union_sz, jacc_permille), jacc >= threshold.
+    Each side's array table shrinks to its candidate docs (a semi-join
+    narrow over the corpus scan; one shrink when both sides are the same
+    table), and the cached candidate arrays attach to the pairs by doc_id.
+    No join hints: AQE picks broadcast or shuffle per join from the stage
+    sizes against the session's autoBroadcastJoinThreshold.
+    Sizes and intersections are bigint: size() is int32, but the output
+    contract (shared with jaccard_pairs' count(*) form and the SQL oracle)
+    is bigint — the driver hashes TYPED frames."""
+
+    def ids(col: str) -> DataFrame:
+        return candidates.select(F.col(col).alias("doc_id"))
+
+    def shrink(arr: DataFrame, keep: DataFrame) -> DataFrame:
+        # persisted: without the cache barrier each attach join re-runs the
+        # whole semi-join subplan (AQE does not reuse those exchanges —
+        # observed 4 BroadcastExchanges, 2 full array-table passes)
+        return cache.persist(
+            arr.join(keep, "doc_id", "left_semi").withColumn(
+                "sz", F.expr("cast(size(garr) as bigint)")
+            )
+        )
+
+    if a_arr is b_arr:
+        # no distinct: a semi-join build side tolerates duplicate keys
+        ca = cb = shrink(a_arr, ids(a_col).union(ids(b_col)))
+    else:
+        ca, cb = shrink(a_arr, ids(a_col)), shrink(b_arr, ids(b_col))
+    ca, cb = ca.alias("ca"), cb.alias("cb")
+    return (
+        candidates.join(ca, F.col(a_col) == F.col("ca.doc_id"))
+        .join(cb, F.col(b_col) == F.col("cb.doc_id"))
+        .select(
+            a_col,
+            b_col,
+            F.expr("cast(size(array_intersect(ca.garr, cb.garr)) as bigint)").alias(
+                "inter"
+            ),
+            F.col("ca.sz").alias("sz_a"),
+            F.col("cb.sz").alias("sz_b"),
+        )
+        .select(
+            a_col,
+            b_col,
+            "inter",
+            F.expr("sz_a + sz_b - inter").alias("union_sz"),
+            F.expr("div(1000 * inter, sz_a + sz_b - inter)").alias("jacc_permille"),
+        )
+        .where(F.col("jacc_permille") >= threshold_permille)
+    )
 
 
 def minhash_lsh_pairs(
@@ -290,7 +373,6 @@ def minhash_lsh_pairs(
     threshold_permille: int = JACCARD_THRESHOLD_PERMILLE,
     max_bucket: int = 10_000,
     observation=None,
-    broadcast_verify: bool | None = False,
 ) -> DataFrame:
     """MinHash+LSH near-dup detection (the 100 TB scale path): banded bucket
     grouping proposes candidates, exact Jaccard verifies — restricted to the
@@ -301,201 +383,50 @@ def minhash_lsh_pairs(
     duplicates (the driver's documents table contains planted near-dups
     across sources — verified: LSH finds them, blocked Jaccard cannot).
 
-    Scale shape (the parts that matter at 10^12 docs), round-3 fused form —
-    TWO shuffles total, everything else narrow or broadcast:
+    Scale shape (the parts that matter at 10^12 docs) — TWO shuffles total
+    when the verify joins broadcast:
       - signatures and doc sizes are NARROW PROJECTIONS over the per-doc
         shingle array (array_min over a transform), not an explode + groupBy:
-        a doc's shingles never leave its row, so the old signature shuffle
-        and the explode are gone entirely;
+        a doc's shingles never leave its row;
       - candidates come from ONE groupBy on (band, key) + an in-bucket pair
-        expansion — not a bands self-join (which shuffles the band table
-        twice and builds a join hash table for data that is 99% singleton
-        buckets); the only other shuffle is the pair distinct;
-      - max_bucket drops degenerate buckets (boilerplate/empty docs sharing
-        a signature would expand quadratically; >max_bucket docs in one
-        bucket means the pairs are near-identical junk better handled by
-        exact dedup). Pass an `observation` (pyspark.sql.Observation) to
-        COUNT the loss: it records `dropped_buckets` and `dropped_doc_slots`
+        expansion; the only other shuffle is the pair distinct;
+      - max_bucket drops degenerate buckets (>max_bucket docs in one bucket
+        means the pairs are near-identical junk better handled by exact
+        dedup). Pass an `observation` (pyspark.sql.Observation) to COUNT
+        the loss: it records `dropped_buckets` and `dropped_doc_slots`
         (bucket-membership slots, a doc dropped from several bands counts
         once per band) when the candidate set materializes — no silent
         coverage loss at scale;
       - verification is array_intersect over the candidate docs' shingle
-        arrays, attached via one broadcast semi-join + one broadcast hash
-        join per side (the two BroadcastExchanges are identical subplans, so
-        Spark reuses one): the corpus-wide shingle set is never shuffled and
-        never joined wide. Cost O(candidate docs x shingles);
-      - verify-path selection: broadcast_verify=None AUTO-SWITCHES — the
-        candidate tables are sized against the session's
-        autoBroadcastJoinThreshold and the verify joins fall back to
-        co-partitioned shuffle joins when the candidate set outgrows a
-        broadcast — the driver-side collect term stays bounded at any
-        corpus size. The DEFAULT is False (always shuffle-verify): that
-        path is both scale-safe and LAZY — auto's sizing runs a count()
-        action at plan-CONSTRUCTION time. The gate/bench call sites opt
-        into auto explicitly.
+        arrays: the corpus-wide shingle set is never shuffled and never
+        joined wide. Cost O(candidate docs x shingles). AQE picks each
+        verify join's strategy from the cached stage sizes.
     The three intermediates (shingle arrays, candidates, candidate arrays)
     persist through `cache.persist` and are released when the caller's
-    cache scope closes, so a plan-only caller leaks nothing on either path;
-    with no scope open they are recomputed per consumer branch.
+    cache scope closes; with no scope open they are recomputed per consumer
+    branch. Building the plan runs no job.
     Mega-doc caveat: the per-doc array form assumes a bounded document size
     (the extraction pipeline upstream enforces this); for pathological
     single-doc shingle sets beyond executor row limits, the exploded
     jaccard_pairs path degrades more gracefully."""
-    # persisted: the array table feeds the band path AND the verify path, and
-    # without the cache barrier Catalyst inlines the shingle expression into
-    # every consumer branch (x3 again under plant_dups-style unions — measured
-    # 18 md5 passes); the filter sits ABOVE the cache so predicate pushdown
-    # cannot substitute the alias either. Rows are doc_id + ~|doc| bigints —
-    # strictly smaller than the exploded (doc, g) table the join-verify
-    # formulation cached.
-    auto = broadcast_verify is None
-    garr_all = corpus.select(
-        "doc_id", F.expr(shingle_array_expr()).alias("garr")
-    )
-    if auto:
-        # shingle-volume stats recorded DURING the one mandatory sizing
-        # action (candidates.count() below, which materializes this cache
-        # anyway) — they replace what used to be a second driver action
-        # (an agg over the persisted candidate arrays): one fewer job per
-        # pass, pure fixed-cost reduction (round-5 LSH floor work)
-        from pyspark.sql import Observation
-
-        garr_obs = Observation("lsh-garr-stats")
-        garr_all = garr_all.observe(
-            garr_obs,
-            F.count("*").alias("n"),
-            F.coalesce(F.sum(F.expr("size(garr)")), F.lit(0)).alias("slots"),
-        )
-    garr_all = cache.persist(garr_all)
-    garr = garr_all.where(
-        F.expr("size(garr) > 0")  # docs with <3 words have no shingles (the
-        # exploded form drops them implicitly; here it also keeps the empty
-        # docs from colliding into one degenerate bucket)
-    )
-    sig_cols = [
-        F.expr(
-            f"array_min(transform(garr, g -> "
-            f"pmod({a}L * pmod(g, {MINHASH_P}L) + {b}L, {MINHASH_P}L)))"
-        ).alias(f"mh{i}")
-        for i, (a, b) in enumerate(minhash_params(k))
-    ]
-    bands = lsh_band_keys(garr.select("doc_id", *sig_cols), k, rows_per_band)
-    # ids_s is re-evaluated per outer lambda element (expression, not a bound
-    # column) — bounded by max_bucket, and real buckets are tiny; the O(n^2)
-    # pair output is the actual product here, unlike the split-indexing trap
+    garr = _shingle_arrays(corpus, "doc_id")
+    # ids arrive sorted, so each pair is emitted once as (smaller, larger)
     pair_expr = (
-        "flatten(transform(ids_s, (a, i) -> "
-        "transform(slice(ids_s, i + 2, greatest(size(ids_s) - i - 1, 0)), "
+        "flatten(transform(ids, (a, i) -> "
+        "transform(slice(ids, i + 2, greatest(size(ids) - i - 1, 0)), "
         "b -> struct(a as doc_a, b as doc_b))))"
     )
-    buckets = bands.groupBy("band", "key").agg(F.collect_list("doc_id").alias("ids"))
-    if observation is not None:
-        buckets = buckets.observe(
-            observation,
-            F.coalesce(
-                F.sum(F.expr(f"case when size(ids) > {max_bucket} then 1 else 0 end")),
-                F.lit(0),
-            ).alias("dropped_buckets"),
-            F.coalesce(
-                F.sum(
-                    F.expr(
-                        f"case when size(ids) > {max_bucket} then size(ids) else 0 end"
-                    )
-                ),
-                F.lit(0),
-            ).alias("dropped_doc_slots"),
-        )
-    # persisted: the pair set feeds the candidate-doc semi-join and the final
-    # verify join; small by construction
-    candidates = cache.persist(
-        buckets.where((F.expr("size(ids)") > 1) & (F.expr("size(ids)") <= max_bucket))
-        .select(F.expr("array_sort(ids)").alias("ids_s"))
-        .select(F.explode(F.expr(pair_expr)).alias("p"))
-        .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
-        .distinct()
+    candidates = _lsh_candidates(
+        garr,
+        F.array_sort(F.collect_list("doc_id")),
+        pair_expr,
+        k,
+        rows_per_band,
+        max_bucket,
+        observation,
     )
-    # verification restricted to CANDIDATES (the whole point of LSH): shrink
-    # the array table to candidate docs (broadcast semi-join — narrow over
-    # the corpus scan), then attach each side's array by broadcast hash join
-    # no distinct: a semi-join build side tolerates duplicate keys, and the
-    # dedup would cost one more shuffle stage for a table that is tiny anyway
-    cand_ids = candidates.select(F.col("doc_a").alias("doc_id")).union(
-        candidates.select(F.col("doc_b").alias("doc_id"))
-    )
-    # bigint sizes/intersections: size() is int32, but the operator's output
-    # contract (shared with jaccard_pairs' count(*) form and the SQL oracle)
-    # is bigint — the driver hashes TYPED frames, so int32 here is a red gate
-    # persisted: cand_arr is referenced by BOTH join sides, and without the
-    # cache barrier each side re-runs the whole semi-join subplan (AQE does
-    # not reuse the exchanges here — observed 4 BroadcastExchanges, 2 full
-    # array-table passes); the table is O(candidate docs), i.e. tiny
-    # broadcast_verify: at bench scale the candidate tables are kilobytes and
-    # the explicit hints keep the big array table from ever shuffling. At
-    # 10^12 docs the candidate set itself is large — a 1.2M-doc probe showed
-    # the broadcast's driver-side collect growing the pipeline's FIXED cost
-    # (BASELINE.md) — so large candidate sets must verify via co-partitioned
-    # shuffle joins instead (output identical; pinned by test_dedup_metrics).
-    # broadcast_verify=None AUTO-SWITCHES: it sizes the candidate tables
-    # with bounded actions on the already-persisted intermediates (the
-    # verify plan consumes both caches anyway, so the stats passes add no
-    # extra heavy compute) and broadcasts only while the estimate fits the
-    # session's autoBroadcastJoinThreshold. True/False force one path
-    # (tests pin that both produce identical pairs). Auto makes the call
-    # EAGER at the candidate stage — fine for pipeline-terminal callers
-    # that always act on the result (gate/bench opt in). The persisted
-    # intermediates belong to the caller's cache scope, so a plan-only
-    # caller does not leak them either; the default stays the lazy
-    # scale-safe shuffle path (False), which runs no job at build time.
-    if auto:
-        thr = _broadcast_threshold_bytes(corpus.sparkSession)
-        # ONE sizing action per pass (round-5 floor work; the old shape ran
-        # a second agg job over the persisted candidate arrays): the count
-        # materializes the garr cache and the candidate cache, and the
-        # observation attached to garr_all records corpus shingle stats on
-        # the way through.
-        # candidate-id bytes: 2 id slots per pair, ~48 B per slot (string
-        # ids + row overhead) — the semi-join build side
-        n_pairs = candidates.count()
-        bcast_ids = 2 * n_pairs * 48 <= thr
-        # candidate-array bytes: 8 B per shingle hash + ~56 B per row — the
-        # verify-join build side (the driver-collect term that grew F in
-        # the 1.2M-doc probe). Estimated as 2*n_pairs candidate rows at the
-        # corpus-average shingle count: an UPPER bound on the true table
-        # (shared docs dedupe in the semi-join), so the estimate errs
-        # toward the scale-safe shuffle path.
-        g = garr_obs.get
-        avg_slots = (g["slots"] / g["n"]) if g["n"] else 0.0
-        bcast_arr = 2 * n_pairs * (avg_slots * 8 + 56) <= thr
-    else:
-        bcast_ids = broadcast_verify
-        bcast_arr = broadcast_verify
-    maybe_bcast_ids = F.broadcast if bcast_ids else (lambda df: df)
-    cand_arr = cache.persist(
-        garr.join(maybe_bcast_ids(cand_ids), "doc_id", "left_semi")
-        .withColumn("sz", F.expr("cast(size(garr) as bigint)"))
-    )
-    maybe_bcast = F.broadcast if bcast_arr else (lambda df: df)
-    ca, cb = cand_arr.alias("ca"), cand_arr.alias("cb")
-    return (
-        candidates.join(maybe_bcast(ca), F.col("doc_a") == F.col("ca.doc_id"))
-        .join(maybe_bcast(cb), F.col("doc_b") == F.col("cb.doc_id"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.expr("cast(size(array_intersect(ca.garr, cb.garr)) as bigint)").alias(
-                "inter"
-            ),
-            F.col("ca.sz").alias("sz_a"),
-            F.col("cb.sz").alias("sz_b"),
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            "inter",
-            F.expr("sz_a + sz_b - inter").alias("union_sz"),
-            F.expr("div(1000 * inter, sz_a + sz_b - inter)").alias("jacc_permille"),
-        )
-        .where(F.col("jacc_permille") >= threshold_permille)
+    return _verify_candidates(
+        candidates, "doc_a", "doc_b", garr, garr, threshold_permille
     )
 
 
@@ -776,96 +707,37 @@ def fuzzy_join(
     small reference set does candidate work proportional to the matches,
     not to its own near-dup structure.
 
-    The shingle arrays, the candidates and both sides' candidate arrays
-    persist through `cache.persist` and are released when the caller's
-    cache scope closes."""
+    Signatures, buckets and verification are minhash_lsh_pairs' own core;
+    only the in-bucket expansion and the `side` column differ. AQE picks
+    each verify join's strategy, so a candidate set too large to broadcast
+    verifies by shuffle. The shingle arrays, the candidates and both sides'
+    candidate arrays persist through `cache.persist` and are released when
+    the caller's cache scope closes."""
     u = left.selectExpr("0 as side", "doc_id", "text").unionByName(
         right.selectExpr("1 as side", "doc_id", "text")
     )
-    garr_all = cache.persist(
-        u.select("side", "doc_id", F.expr(shingle_array_expr()).alias("garr"))
-    )
-    garr = garr_all.where(F.expr("size(garr) > 0"))
-    sig_cols = [
-        F.expr(
-            f"array_min(transform(garr, g -> "
-            f"pmod({a}L * pmod(g, {MINHASH_P}L) + {b}L, {MINHASH_P}L)))"
-        ).alias(f"mh{i}")
-        for i, (a, b) in enumerate(minhash_params(k))
-    ]
-    n_bands = k // rows_per_band
-    cells = []
-    for band in range(n_bands):
-        cols = ", ".join(
-            f"mh{band * rows_per_band + r}" for r in range(rows_per_band)
-        )
-        cells.append(f"{band}, md5(concat_ws('|', {cols}))")
-    bands = garr.select("side", "doc_id", *sig_cols).select(
-        "side",
-        "doc_id",
-        F.expr(f"stack({n_bands}, {', '.join(cells)}) as (band, key)"),
-    )
-    # one (band,key) groupBy proposes candidates; expansion is the CROSS
-    # product of the bucket's left ids x right ids only
+    garr = _shingle_arrays(u, "side", "doc_id")
+    # expansion is the CROSS product of the bucket's left ids x right ids only
     pair_expr = (
         "flatten(transform(filter(ids, x -> x.side = 0), a -> "
         "transform(filter(ids, x -> x.side = 1), "
         "b -> struct(a.doc_id as left_id, b.doc_id as right_id))))"
     )
-    candidates = cache.persist(
-        bands.groupBy("band", "key")
-        .agg(F.collect_list(F.struct("side", "doc_id")).alias("ids"))
-        .where(
-            (F.expr("size(ids)") > 1) & (F.expr("size(ids)") <= max_bucket)
-        )
-        .select(F.explode(F.expr(pair_expr)).alias("p"))
-        .select("p.left_id", "p.right_id")
-        .distinct()
+    candidates = _lsh_candidates(
+        garr,
+        F.collect_list(F.struct("side", "doc_id")),
+        pair_expr,
+        k,
+        rows_per_band,
+        max_bucket,
     )
-    la = cache.persist(
-        garr.where("side = 0")
-        .join(
-            F.broadcast(candidates.select(F.col("left_id").alias("doc_id"))),
-            "doc_id",
-            "left_semi",
-        )
-        .withColumn("sz", F.expr("cast(size(garr) as bigint)"))
-    )
-    rb = cache.persist(
-        garr.where("side = 1")
-        .join(
-            F.broadcast(candidates.select(F.col("right_id").alias("doc_id"))),
-            "doc_id",
-            "left_semi",
-        )
-        .withColumn("sz", F.expr("cast(size(garr) as bigint)"))
-    )
-    return (
-        candidates.join(
-            F.broadcast(la.alias("la")), F.col("left_id") == F.col("la.doc_id")
-        )
-        .join(
-            F.broadcast(rb.alias("rb")), F.col("right_id") == F.col("rb.doc_id")
-        )
-        .select(
-            "left_id",
-            "right_id",
-            F.expr(
-                "cast(size(array_intersect(la.garr, rb.garr)) as bigint)"
-            ).alias("inter"),
-            F.col("la.sz").alias("sz_a"),
-            F.col("rb.sz").alias("sz_b"),
-        )
-        .select(
-            "left_id",
-            "right_id",
-            "inter",
-            F.expr("sz_a + sz_b - inter").alias("union_sz"),
-            F.expr("div(1000 * inter, sz_a + sz_b - inter)").alias(
-                "jacc_permille"
-            ),
-        )
-        .where(F.col("jacc_permille") >= threshold_permille)
+    return _verify_candidates(
+        candidates,
+        "left_id",
+        "right_id",
+        garr.where("side = 0"),
+        garr.where("side = 1"),
+        threshold_permille,
     )
 
 

@@ -138,25 +138,13 @@ def _banded_fn(
 
 def band_keys_expr(k: int = 8, rows_per_band: int = 2) -> list[str]:
     """One SQL expression PER BAND computing the banded MinHash key of a
-    `text` column — the streaming-compatible (pure-projection) face of
-    functions/dedup's signature+banding pipeline: same shingle hashing, same
-    (a, b) permutation family, same md5-of-joined-minhashes band keys, so a
-    streaming run and a batch minhash_lsh_pairs run bucket identically."""
-    from ..functions.dedup import MINHASH_P, minhash_params, shingle_array_expr
+    `text` column: functions/dedup.band_key_exprs — the one signature and
+    band builder the batch minhash_lsh_pairs / fuzzy_join use — applied to
+    the shingle expression itself instead of a cached array column, so a
+    streaming run and a batch run bucket identically."""
+    from ..functions.dedup import band_key_exprs, shingle_array_expr
 
-    garr = shingle_array_expr()
-    mh = [
-        f"array_min(transform({garr}, g -> "
-        f"pmod({a}L * pmod(g, {MINHASH_P}L) + {b}L, {MINHASH_P}L)))"
-        for a, b in minhash_params(k)
-    ]
-    n_bands = k // rows_per_band
-    return [
-        "md5(concat_ws('|', "
-        + ", ".join(mh[band * rows_per_band + r] for r in range(rows_per_band))
-        + "))"
-        for band in range(n_bands)
-    ]
+    return band_key_exprs(shingle_array_expr(), k, rows_per_band)
 
 
 def dedup_stream_banded(

@@ -78,16 +78,12 @@ def main(argv=None) -> int:
             return importance_resample(df, "source in ('s0', 's1')", top_k=10_000)
         from html_parser_spark.functions.dedup import minhash_lsh_pairs
 
-        # scaling protocol opts into the eager auto verify-path (library
-        # default is the lazy shuffle path — ADVICE r04)
-        return minhash_lsh_pairs(df, broadcast_verify=None)
+        return minhash_lsh_pairs(df)
 
     def one_pass() -> float:
-        # t0 BEFORE build: minhash's auto verify-path selection runs bounded
-        # stats actions at plan-construction time that materialize the
-        # candidate caches — timing only the final write would exclude the
-        # candidate pipeline (the bulk of the LSH work) from the wall. The
-        # pass owns the cache scope, so its caches are gone before the next.
+        # the wall covers plan building and the write; building runs no job,
+        # so all of the LSH work is inside the write. The pass owns the cache
+        # scope, so its caches are gone before the next.
         t0 = time.time()
         with cache.scope(spark):
             build_out().write.format("noop").mode("overwrite").save()

@@ -1,10 +1,13 @@
 """minhash_lsh_pairs coverage accounting: `max_bucket` drops degenerate LSH
 buckets (quadratic-junk protection), and a production run must be able to SEE
 that loss — the optional Observation records dropped_buckets and
-dropped_doc_slots when the candidate set materializes."""
+dropped_doc_slots when the candidate set materializes. Also the LSH core's
+verify joins: no hints, AQE picks them from the session threshold, and
+building either operator's plan runs no job."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Observation
 
 from html_parser_spark.functions import dedup as DD
@@ -76,82 +79,65 @@ def test_fuzzy_join_cross_table_only(spark):
     assert not any(3 == l or r == 103 for l, r in got)
 
 
-def test_broadcast_verify_switch_identical_output(spark):
-    """broadcast_verify=False (the 10^12-doc verify shape: co-partitioned
-    shuffle joins, no driver-side candidate collect) returns exactly the
-    pairs the default broadcast form returns, and strips every broadcast
-    hint from the plan."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    corpus = DD.plant_dups(docs)
-
-    def pairs(bv):
-        df = DD.minhash_lsh_pairs(corpus, broadcast_verify=bv)
-        rows = {tuple(r) for r in df.collect()}
-        hints = df._jdf.queryExecution().analyzed().toString().count("broadcast")
-        return rows, hints
-
-    with_b, hints_b = pairs(True)
-    without_b, hints_n = pairs(False)
-    assert with_b == without_b and len(with_b) > 0
-    assert hints_b > 0 and hints_n == 0
+def _planted(spark):
+    return DD.plant_dups(
+        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    )
 
 
-def test_auto_verify_path_switches_on_threshold(spark):
-    """broadcast_verify=None sizes the candidate tables against the session's
-    autoBroadcastJoinThreshold: the default 10MB threshold picks the broadcast
-    plan at fixture scale; a 1-byte threshold forces the shuffle-join twin.
-    Both return identical pairs."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    corpus = DD.plant_dups(docs)
+def _lsh_pairs(corpus, fn):
+    """One of the two LSH-core operators: minhash_lsh_pairs over the whole
+    corpus, or fuzzy_join of the planted copies against the originals."""
+    if fn == "minhash_lsh_pairs":
+        return DD.minhash_lsh_pairs(corpus)
+    return DD.fuzzy_join(
+        corpus.where(f"doc_id < {DD.EXACT_OFFSET}"),
+        corpus.where(f"doc_id >= {DD.EXACT_OFFSET}"),
+    )
 
-    def pairs_auto():
-        df = DD.minhash_lsh_pairs(corpus, broadcast_verify=None)  # auto
-        rows = {tuple(r) for r in df.collect()}
-        hints = df._jdf.queryExecution().analyzed().toString().count("broadcast")
-        return rows, hints
+
+LSH_OPS = ["minhash_lsh_pairs", "fuzzy_join"]
+
+
+@pytest.mark.parametrize("fn", LSH_OPS)
+def test_verify_join_follows_session_threshold(spark, fn):
+    """No join hints and no sizing in Python: AQE picks the verify joins
+    from the stage sizes against the session's autoBroadcastJoinThreshold.
+    At the default threshold the executed plan broadcasts (>=2
+    BroadcastHashJoin, no SortMergeJoin); with broadcasting disabled it
+    shuffles (SortMergeJoin, no BroadcastHashJoin). Both give the same,
+    non-empty rows."""
+    from html_parser_spark import cache
+
+    corpus = _planted(spark)
+
+    def run():
+        # own scope per run: a cache filled under one threshold would carry
+        # its join choice into the other run
+        with cache.scope(spark):
+            df = _lsh_pairs(corpus, fn)
+            rows = {tuple(r) for r in df.collect()}
+            return rows, df._jdf.queryExecution().executedPlan().toString()
 
     thr_key = "spark.sql.autoBroadcastJoinThreshold"
     old = spark.conf.get(thr_key)
-    rows_big, hints_big = pairs_auto()
+    rows_b, plan_b = run()
     try:
-        spark.conf.set(thr_key, "1b")
-        rows_tiny, hints_tiny = pairs_auto()
+        spark.conf.set(thr_key, "-1")
+        rows_s, plan_s = run()
     finally:
         spark.conf.set(thr_key, old)
-    assert rows_big == rows_tiny and len(rows_big) > 0
-    assert hints_big > 0 and hints_tiny == 0
+    assert rows_b == rows_s and len(rows_b) > 0
+    assert plan_b.count("BroadcastHashJoin") >= 2 and "SortMergeJoin" not in plan_b
+    assert "SortMergeJoin" in plan_s and "BroadcastHashJoin" not in plan_s
 
 
-def test_broadcast_threshold_parse():
-    class _FakeConf:
-        def __init__(self, v):
-            self.v = v
-
-        def get(self, key, default=None):
-            return self.v
-
-    class _FakeSpark:
-        def __init__(self, v):
-            self.conf = _FakeConf(v)
-
-    f = DD._broadcast_threshold_bytes
-    assert f(_FakeSpark("10485760b")) == 10 * 1024**2
-    assert f(_FakeSpark("10MB")) == 10 * 1024**2
-    assert f(_FakeSpark("512k")) == 512 * 1024
-    assert f(_FakeSpark("1g")) == 1024**3
-    assert f(_FakeSpark("1048576")) == 1024**2
-    assert f(_FakeSpark("-1")) == 0  # broadcast disabled -> never broadcast
-
-
-def test_default_construction_is_lazy(spark):
-    """The library default (broadcast_verify=False) must not run ANY Spark
-    jobs at plan-construction time — auto's sizing actions are opt-in at
-    pipeline-terminal call sites only (ADVICE r04: eager construction leaks
-    persisted intermediates for plan-only callers)."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    corpus = DD.plant_dups(docs)
+@pytest.mark.parametrize("fn", LSH_OPS)
+def test_default_construction_is_lazy(spark, fn):
+    """Building the plan must not run ANY Spark job: a plan-only caller
+    (build + explain, never execute) costs nothing and fills no cache."""
+    corpus = _planted(spark)
     dag = spark.sparkContext._jsc.sc().dagScheduler()
     before = dag.nextJobId()
-    df = DD.minhash_lsh_pairs(corpus)
-    df.explain()  # plan-only caller: build + explain, never execute
+    _lsh_pairs(corpus, fn).explain()
     assert dag.nextJobId() == before

@@ -173,53 +173,34 @@ def main() -> int:
         ],
     )
 
-    # structural pins run on the FORCED broadcast path: it is lazily planned
-    # (the auto path materializes the candidate cache eagerly to size it, so
-    # its formatted plan re-prints each cached subtree under every
-    # InMemoryTableScan and raw node counts no longer mean "shuffles
-    # executed"). A direct library call, so the audit owns its cache scope.
-    from html_parser_spark import cache
-    from html_parser_spark.functions import dedup as DD
-
-    lsh_corpus = DD.plant_dups(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-    )
-    with cache.scope(spark):
-        audit(
-            "dedup_minhash_lsh",
-            DD.minhash_lsh_pairs(lsh_corpus, broadcast_verify=True),
-            [
-                ("TWO shuffles total (bucket groupBy + pair distinct): "
-                 "signatures and sizes are narrow array projections, never an "
-                 "explode + groupBy",
-                 lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 2),
-                ("verification is candidate-bounded: broadcast semi-join shrink "
-                 "+ broadcast array attach (the corpus-wide shingle set is "
-                 "never shuffled or joined wide)",
-                 lambda p: p.count("BroadcastHashJoin") >= 2 and "LeftSemi" in p),
-                ("one shingle pass over the corpus: the array table is computed "
-                 "once per union leg and cached (no expression re-inlining)",
-                 lambda p: p.count("conv(substr(md5") <= 3),
-                ("candidates from one groupBy on (band,key), not a bands "
-                 "self-join (no join of the band table with itself)",
-                 lambda p: "collect_list" in p),
-            ],
-        )
-
     audit(
-        "dedup_minhash_lsh (auto verify path, the gate/bench default)",
+        "dedup_minhash_lsh",
         qs["dedup_minhash_lsh"](spark, sf_dir),
         [
-            ("small candidate set auto-selects the broadcast verify "
-             "(both attach joins are BroadcastHashJoin, no SortMergeJoin)",
+            ("TWO shuffles total (bucket groupBy + pair distinct): "
+             "signatures and sizes are narrow array projections, never an "
+             "explode + groupBy",
+             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 2),
+            ("verification is candidate-bounded: broadcast semi-join shrink "
+             "+ broadcast array attach (the corpus-wide shingle set is "
+             "never shuffled or joined wide)",
+             lambda p: p.count("BroadcastHashJoin") >= 2 and "LeftSemi" in p),
+            ("one shingle pass over the corpus: the array table is computed "
+             "once per union leg and cached (no expression re-inlining)",
+             lambda p: p.count("conv(substr(md5") <= 3),
+            ("candidates from one groupBy on (band,key), not a bands "
+             "self-join (no join of the band table with itself)",
+             lambda p: "collect_list" in p),
+            ("small candidate set: AQE's join selection broadcasts both "
+             "attach joins (no hint; both are BroadcastHashJoin, no "
+             "SortMergeJoin)",
              lambda p: p.count("BroadcastHashJoin") >= 2
              and "SortMergeJoin" not in p),
             ("candidate pairs and candidate arrays read from cache in the "
-             "verify plan (the sizing actions warmed them — no recompute)",
+             "verify plan (no recompute per consumer branch)",
              lambda p: "InMemoryTableScan" in p),
             ("shingle expression still never re-inlined per consumer "
-             "branch (md5 passes bounded by the 3 union legs even with "
-             "cached subtree re-printing)",
+             "branch (md5 passes bounded by the 3 union legs)",
              lambda p: p.count("conv(substr(md5") <= 3),
         ],
     )
