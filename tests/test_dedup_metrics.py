@@ -99,19 +99,17 @@ def _lsh_pairs(corpus, fn):
 LSH_OPS = ["minhash_lsh_pairs", "fuzzy_join"]
 
 
-@pytest.mark.parametrize("fn", LSH_OPS)
-def test_verify_join_follows_session_threshold(spark, fn):
-    """No join hints and no sizing in Python: AQE picks the verify joins
-    from the stage sizes against the session's autoBroadcastJoinThreshold.
-    At the default threshold the executed plan broadcasts (>=2
-    BroadcastHashJoin, no SortMergeJoin); with broadcasting disabled it
-    shuffles (SortMergeJoin, no BroadcastHashJoin). Both give the same,
-    non-empty rows."""
+@pytest.fixture(scope="module")
+def threshold_runs(spark):
+    """Each LSH-core operator run twice: at the session's default
+    autoBroadcastJoinThreshold and with broadcasting disabled ("-1"). Maps
+    the operator name to (rows, executed plan) per run. No join hints and
+    no sizing in Python: AQE picks the verify joins from the stage sizes."""
     from html_parser_spark import cache
 
     corpus = _planted(spark)
 
-    def run():
+    def run(fn):
         # own scope per run: a cache filled under one threshold would carry
         # its join choice into the other run
         with cache.scope(spark):
@@ -121,15 +119,35 @@ def test_verify_join_follows_session_threshold(spark, fn):
 
     thr_key = "spark.sql.autoBroadcastJoinThreshold"
     old = spark.conf.get(thr_key)
-    rows_b, plan_b = run()
+    out = {fn: {"broadcast": run(fn)} for fn in LSH_OPS}
     try:
         spark.conf.set(thr_key, "-1")
-        rows_s, plan_s = run()
+        for fn in LSH_OPS:
+            out[fn]["shuffle"] = run(fn)
     finally:
         spark.conf.set(thr_key, old)
-    assert rows_b == rows_s and len(rows_b) > 0
-    assert plan_b.count("BroadcastHashJoin") >= 2 and "SortMergeJoin" not in plan_b
-    assert "SortMergeJoin" in plan_s and "BroadcastHashJoin" not in plan_s
+    return out
+
+
+def test_broadcast_verify_switch_identical_output(threshold_runs):
+    """The shuffle-join verify shape (broadcasting disabled: co-partitioned
+    joins, no driver-side candidate collect) returns exactly the rows the
+    broadcast shape returns, for both operators."""
+    for fn, runs in threshold_runs.items():
+        rows_b, rows_s = runs["broadcast"][0], runs["shuffle"][0]
+        assert rows_b == rows_s and len(rows_b) > 0, fn
+
+
+def test_auto_verify_path_switches_on_threshold(threshold_runs):
+    """The verify joins follow the session threshold on the executed plan:
+    the default threshold broadcasts at fixture scale (>=2
+    BroadcastHashJoin, no SortMergeJoin); with broadcasting disabled they
+    shuffle (SortMergeJoin, no BroadcastHashJoin)."""
+    for fn, runs in threshold_runs.items():
+        plan_b, plan_s = runs["broadcast"][1], runs["shuffle"][1]
+        assert plan_b.count("BroadcastHashJoin") >= 2, fn
+        assert "SortMergeJoin" not in plan_b, fn
+        assert "SortMergeJoin" in plan_s and "BroadcastHashJoin" not in plan_s, fn
 
 
 @pytest.mark.parametrize("fn", LSH_OPS)
