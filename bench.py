@@ -3,7 +3,10 @@
 Prints ONE JSON line:
   {"metric": "extract_wall_sec", "value": <sec>, "unit": "sec",
    "queries": {...per-query sec...}, "sf": <sf>,
-   "docs_per_sec": N, "spans_per_sec": N, "mb_per_sec": N, "cpus": N}
+   "docs_per_sec": N, "spans_per_sec": N, "mb_per_sec": N, "cpus": N,
+   "docs_per_sec_per_core": N, "mb_per_sec_per_core": N,
+   "synth": {"n_docs": N, "docs_per_sec": N, "mb_per_sec": N,
+             "docs_per_sec_per_core": N, "mb_per_sec_per_core": N, ...}}
 
 The stdout line is kept under the driver's 2000-char tail buffer by
 truncating the per-query dict to the slowest cells when needed; the FULL
@@ -24,6 +27,12 @@ within ~7% of the asymptotic sustained rate (0.1M docs measures mostly the
 memory pressure). Wall is min-of-3 measured passes after one warm-up — the
 host carries bursty external load. All timings use the noop sink so every
 operator fully executes (a bare count() would let Catalyst prune the work).
+
+That corpus is a fixed 3-span template per doc. The second headline
+("synth") runs the same kernel, measured the same way, over the FIXTURES.md
+section 1 shape (`sources.fixtures.synth_docs`: nested markup, comments,
+interpolation, 1-64 interleaved spans per doc, mega-docs), generated on the
+executors (one seeded slice per partition) and cached.
 """
 
 from __future__ import annotations
@@ -33,6 +42,60 @@ import os
 import re
 import sys
 import time
+
+
+# synth headline size: about 70 MB of text with ~20 mega-docs
+SYNTH_DOCS = 20_000
+
+
+def _min_wall(run, passes: int = 3) -> tuple[float, list[float]]:
+    """One warm-up (JVM + Python workers), then min-of-``passes``."""
+    run()
+    walls = []
+    for _ in range(passes):
+        t0 = time.time()
+        run()
+        walls.append(time.time() - t0)
+    return min(walls), walls
+
+
+def _synth_headline(spark, cpus: int, n_docs: int, noop) -> dict:
+    """extract_spans throughput over ``n_docs`` synth_docs rows (FIXTURES.md
+    section 1 shape), in total and per core."""
+    from pyspark.sql import functions as F
+
+    from html_parser_spark.operators.extract import INPUT_SCHEMA, extract_spans
+    from html_parser_spark.sources.fixtures import synth_docs
+
+    parts = cpus * 4
+    per_part = -(-n_docs // parts)
+
+    def gen(p):
+        n = min(per_part, n_docs - p * per_part)
+        for doc_id, spans in synth_docs(max(n, 0), seed=p):
+            yield f"{p}-{doc_id}", spans
+
+    rdd = spark.sparkContext.parallelize(range(parts), parts).flatMap(gen)
+    docs = spark.createDataFrame(rdd, INPUT_SCHEMA).cache()
+    n = docs.count()
+    n_bytes = docs.select(
+        F.aggregate(
+            "spans", F.lit(0).cast("long"),
+            lambda acc, s: acc + F.coalesce(F.length(s.text), F.lit(0)),
+        ).alias("b")
+    ).agg(F.sum("b")).collect()[0][0] or 0
+    wall, walls = _min_wall(lambda: noop(extract_spans(docs)))
+    docs.unpersist()
+    return {
+        "n_docs": n,
+        "mb": round(n_bytes / 1e6, 1),
+        "wall_sec": round(wall, 3),
+        "walls": [round(w, 3) for w in walls],
+        "docs_per_sec": round(n / wall, 1),
+        "mb_per_sec": round(n_bytes / 1e6 / wall, 2),
+        "docs_per_sec_per_core": round(n / wall / cpus, 1),
+        "mb_per_sec_per_core": round(n_bytes / 1e6 / wall / cpus, 3),
+    }
 
 
 def main() -> None:
@@ -84,15 +147,9 @@ def main() -> None:
     total_bytes = docs.agg(F.sum(F.length("text"))).collect()[0][0] or 0
 
     interleaved = interleaved_from_documents(docs)
-    # warm-up (JVM + Python workers), then min-of-3 measured passes
-    noop(extract_spans(interleaved))
-    walls = []
-    for _ in range(3):
-        t0 = time.time()
-        noop(extract_spans(interleaved))
-        walls.append(time.time() - t0)
-    extract_sec = min(walls)
+    extract_sec, walls = _min_wall(lambda: noop(extract_spans(interleaved)))
     n_spans = 5 * n_docs  # closed-form for the wrap (sources/interleave.py)
+    synth = _synth_headline(spark, cpus, SYNTH_DOCS, noop)
 
     # ---- per-query timings ----------------------------------------------
     # documented NON-scale reference paths (kept for exactness cross-checks;
@@ -157,6 +214,9 @@ def main() -> None:
         "docs_per_sec": round(n_docs / extract_sec, 1),
         "spans_per_sec": round(n_spans / extract_sec, 1),
         "mb_per_sec": round(total_bytes / 1e6 / extract_sec, 2),
+        "docs_per_sec_per_core": round(n_docs / extract_sec / cpus, 1),
+        "mb_per_sec_per_core": round(total_bytes / 1e6 / extract_sec / cpus, 3),
+        "synth": synth,
         "cpus": cpus,
         "amplify": amplify,
         "walls": [round(w, 3) for w in walls],

@@ -235,8 +235,8 @@ def band_key_exprs(
     where min-hash i is array_min of the permutation h_i over the array — a
     narrow projection (no explode, no groupBy), and each min-hash is
     computed in exactly one band. The batch paths pass their cached `garr`
-    column; the streaming path (streaming/stateful.band_keys_expr) passes
-    `shingle_array_expr()` itself, so both bucket identically."""
+    column; the streaming path (streaming/stateful.band_rows) passes its
+    projected `garr` column, so both bucket identically."""
     mh = [
         f"array_min(transform({garr}, g -> "
         f"pmod({a}L * pmod(g, {MINHASH_P}L) + {b}L, {MINHASH_P}L)))"

@@ -1,8 +1,8 @@
-"""Extraction kernel: one compiled token scan -> parent-stack span build.
+"""Extraction kernel: a two-level token scan -> parent-stack span build.
 
 This is the hot path that runs inside ``mapInArrow`` (one call per text
-span of each document). All character work is done by ``TOKEN_RE``, one
-compiled alternation of the reference tokenizer's regexes (built from
+span of each document). The tokenizer is ``TOKEN_RE``, one compiled
+alternation of the reference tokenizer's regexes (built from
 ``core.jsre``): the C regex engine walks the document token by token, with
 no string re-slicing (the reference's O(n²) ``advanceBy``, advance.ts:7),
 and Python only unpacks each token's groups and applies the tag-stack
@@ -13,6 +13,33 @@ TOKEN_RE's alternatives can never start at the same position, so each one
 fires exactly where the reference tokenizer applies the same regex; the
 final catch-all marks the first position where the reference throws or
 hangs, and ``_failure`` names the error from the characters there.
+
+Two levels. ``extract_doc_spans`` first splits the document on tag pieces
+(``<``, no bracket, ``>``) with one-group ``re.split``, which is cheaper in
+C than TOKEN_RE's eight-way alternation, and walks the pieces:
+
+- Gate: a chunk is walked only if its tag-piece count equals both its
+  ``<`` count and its ``>`` count, so no bracket sits in a text piece.
+  It is checked per chunk, before the chunk's first piece: a stray bracket
+  is a token boundary or a failure for TOKEN_RE, and an illegal self-close
+  later in the same chunk must not outrank it.
+- Text pieces hold no bracket, so each is one TOKEN_RE text token, unless
+  it starts with ``{{`` (rescanned alone with TOKEN_RE: with no bracket
+  inside it yields the tokens it yields in context, or fails) or its
+  second char is ``/`` (the not_data_mode quirk).
+- Tag pieces are decoded once per distinct piece (``_decode_tag``, a
+  bounded dict) by a full match of TOKEN_RE's start- or end-tag branch:
+  open, void, illegal self-close, end, or undefined end; a closed comment
+  is skipped.
+- Fallback rule: anything else (a failed gate, a ``/`` text, a failing
+  ``{{`` rescan, an unclosed comment, ``<!``, CDATA, ``<`` + non-letter)
+  sends the WHOLE document through the TOKEN_RE path, which is the
+  reference of the split path and handles every hazard.
+
+A mega-doc is split in chunks of about ``_SPLIT_CHUNK_CHARS``, each cut
+just after a ``>``, so a tag piece never straddles a cut and the piece
+list stays bounded; the TOKEN_RE path streams documents longer than
+``_FINDALL_MAX_CHARS``.
 
 Error precedence: the reference tokenizes the whole source before building
 the tree (htmlParser.ts:26-33), so a tokenizer error late in the document
@@ -67,10 +94,12 @@ from ..core.oracle import (
 #                    -> always a tag mismatch
 #   6 bad            catch-all: the reference throws or hangs here; the
 #                    group holds the rest of the source
+_START_TAG = "<(?=[A-Za-z])([^>" + _WS + "/]*)[" + _WS + "]*([^<>]*)>"
+_END_TAG = "</[" + _WS + "]*([^>" + _WS + "/]+)[" + _WS + "]*>"
 TOKEN_RE = re.compile(
-    "<(?=[A-Za-z])([^>" + _WS + "/]*)[" + _WS + "]*([^<>]*)>"
-    "|</[" + _WS + "]*([^>" + _WS + "/]+)[" + _WS + "]*>"
-    r"|(?!\{\{)([^<>](?!/)[^<>]*)"
+    _START_TAG
+    + "|" + _END_TAG
+    + r"|(?!\{\{)([^<>](?!/)[^<>]*)"
     r"|<!--(?:[\s\S]*?-->|[\s\S]*)"
     r"|<!\[CDATA\[[\s\S]*?\]\]"
     r"|\{\{[" + _WS + "]*[^" + re.escape(_JS_DOT_EXCL) + "]*?[" + _WS + r"]*\}\}"
@@ -81,6 +110,27 @@ TOKEN_RE = re.compile(
 # Documents up to this many chars are scanned with one findall list; longer
 # ones stream their tokens so a mega-doc never holds all of them at once.
 _FINDALL_MAX_CHARS = 1 << 16
+
+# Split path (extract_doc_spans only). A tag piece is '<', no bracket, '>';
+# splitting on it with one group alternates text and tag pieces. A
+# document is split in chunks of about this many chars, each cut just
+# after a '>', so a mega-doc never holds all of its pieces at once.
+_SPLIT_RE = re.compile(r"(<[^<>]*>)")
+_SPLIT_CHUNK_CHARS = 1 << 16
+_START_TAG_RE = re.compile(_START_TAG)
+_END_TAG_RE = re.compile(_END_TAG)
+
+# Decoded tag pieces, (kind, name, media span). A piece always decodes the
+# same, so one memo serves every call in the worker; bounded, cleared when
+# full (documents with ever-new attribute values must not grow it).
+_P_OPEN = 0  # push name; media span if a media tag
+_P_END = 1  # pop name, or a tag mismatch
+_P_VOID = 2  # no stack effect; media span if any (comments, pad piece)
+_P_UNDEF = 3  # end tag whose name is undefined or empty: a tag mismatch
+_P_ILLEGAL = 4  # self-closed non-void tag
+_P_HAZARD = 5  # not decoded here: the document takes the TOKEN_RE path
+_TAG_CACHE: dict[str, tuple] = {}
+_TAG_CACHE_MAX = 1 << 12
 
 # Compact token type codes (_tokenize_arrays output)
 _T_TEXT = 0
@@ -195,25 +245,118 @@ def _tokenize_arrays(
     return types, tags, payloads, attrs_col
 
 
-def extract_doc_spans(
+def _decode_tag(piece: str) -> tuple:
+    """(kind, name, media span) of one tag piece, exactly as TOKEN_RE reads
+    it in context. The piece holds no bracket but its own two, so the one
+    token TOKEN_RE matches at its '<' is the whole piece."""
+    if not piece:  # pads the last text piece of a chunk
+        return _P_VOID, None, None
+    c = piece[1]
+    if c == "/":
+        m = _END_TAG_RE.fullmatch(piece)
+        return (_P_END, m.group(1), None) if m else (_P_UNDEF, None, None)
+    if c == "!":
+        # a closed comment; '<!-->' / '<!--->' are not closed (the '-->'
+        # search starts 4 chars in) and swallow the rest of the document
+        if len(piece) >= 7 and piece.startswith("<!--") and piece.endswith("-->"):
+            return _P_VOID, None, None
+        return _P_HAZARD, None, None
+    m = _START_TAG_RE.fullmatch(piece)
+    if m is None:  # '<' + non-letter
+        return _P_HAZARD, None, None
+    tag, attrs = m.groups()
+    kind = _P_OPEN
+    if attrs.endswith("/"):
+        if tag not in UNARY_TAGS:
+            return _P_ILLEGAL, None, None
+        kind, attrs = _P_VOID, attrs[:-1]
+    media = ("media", None, _first_src_attr(attrs)) if tag in MEDIA_TAGS else None
+    return kind, tag, media
+
+
+def _split_scan(
+    html: str,
+) -> Optional[tuple[list[tuple[str, Optional[str], Optional[str]]], str, Optional[str]]]:
+    """extract_doc_spans over tag pieces, or None where a chunk holds
+    anything the piece decoder does not prove equal to TOKEN_RE's reading
+    (the caller then rescans the whole document with TOKEN_RE)."""
+    spans: list[tuple[str, Optional[str], Optional[str]]] = []
+    stack: list[str] = []
+    tree_error = False  # first tag mismatch; finalized only at EOF
+    cache = _TAG_CACHE
+    n = len(html)
+    start = 0
+    while start < n:
+        if n - start <= _SPLIT_CHUNK_CHARS:
+            stop = n
+        else:
+            stop = html.rfind(">", start, start + _SPLIT_CHUNK_CHARS) + 1
+            if not stop:
+                # no '>' in the window: cut after the next one, if any
+                stop = html.find(">", start + _SPLIT_CHUNK_CHARS) + 1 or n
+        chunk = html[start:stop] if start or stop < n else html
+        start = stop
+        parts = _SPLIT_RE.split(chunk)
+        # Every bracket of the chunk must sit in a tag piece before any of
+        # it is walked: a stray '<' or '>' is a TOKEN_RE token boundary (or
+        # failure) that an illegal self-close later in the chunk must not
+        # outrank.
+        n_tags = len(parts) >> 1
+        if chunk.count("<") != n_tags or chunk.count(">") != n_tags:
+            return None
+        parts.append("")
+        it = iter(parts)
+        for text, piece in zip(it, it):
+            if text:
+                # a text piece is one TOKEN_RE text token unless it starts
+                # with '{{' (interpolation) or its second char is '/'
+                if text[1:2] == "/":
+                    return None
+                if text.startswith("{{"):
+                    # no bracket inside: in context TOKEN_RE reads the same
+                    # tokens as here, unless it fails
+                    for _t, _a, _e, sub, _u, bad in TOKEN_RE.findall(text):
+                        if bad:
+                            return None
+                        if sub and not tree_error:
+                            spans.append(("text", sub, None))
+                elif not tree_error:
+                    spans.append(("text", text, None))
+            d = cache.get(piece)
+            if d is None:
+                if len(cache) >= _TAG_CACHE_MAX:
+                    cache.clear()
+                d = cache[piece] = _decode_tag(piece)
+            kind, name, media = d
+            if kind == _P_OPEN:
+                if not tree_error:
+                    if media:
+                        spans.append(media)
+                    stack.append(name)
+            elif kind == _P_END:
+                # a mismatch may pop: the stack is dead once it is flagged
+                if not tree_error and (not stack or stack.pop() != name):
+                    tree_error = True
+            elif kind == _P_VOID:
+                if media and not tree_error:
+                    spans.append(media)
+            elif kind == _P_UNDEF:
+                tree_error = True
+            elif kind == _P_ILLEGAL:
+                return [], STATUS_ERROR, E_ILLEGAL_SELF_CLOSE
+            else:
+                return None
+
+    if tree_error:
+        return [], STATUS_ERROR, E_TAG_MISMATCH
+    return spans, STATUS_OK, None
+
+
+def _token_scan(
     html: str,
 ) -> tuple[list[tuple[str, Optional[str], Optional[str]]], str, Optional[str]]:
-    """Extract the ordered (kind, text, media_ref) span sequence of one HTML
-    string. Never raises, never hangs. Fast path for tag-free payloads.
-
-    Fused form of (_tokenize_arrays + parent-stack walk): one pass over
-    TOKEN_RE's tokens, no token arrays. An illegal self-close or a tokenizer
-    failure returns at once; a tag mismatch only sets a flag and the scan
-    goes on (see the module docstring). Equality with the oracle is pinned
-    by tests/test_kernel_vs_oracle.py and the hypothesis, edge-case and
-    node-bundle fuzz suites.
-    """
-    # Fast path: no markup metacharacters at all -> single text token.
-    # ('/' excluded so the position-1 not_data_mode quirk can't fire,
-    # '{'/'<'/'>' excluded so no other branch can trigger.)
-    if html and not any(c in html for c in "<>{/"):
-        return [("text", html, None)], STATUS_OK, None
-
+    """extract_doc_spans by draining TOKEN_RE: one pass over its tokens,
+    no token arrays."""
     # Group tuples: non-participating groups are '' from findall and None
     # from the stream, so every test below is on truthiness.
     if len(html) <= _FINDALL_MAX_CHARS:
@@ -253,6 +396,28 @@ def extract_doc_spans(
         return [], STATUS_ERROR, E_TAG_MISMATCH
     # unclosed elements at EOF are silently kept (htmlParser.ts:108-119)
     return spans, STATUS_OK, None
+
+
+def extract_doc_spans(
+    html: str,
+) -> tuple[list[tuple[str, Optional[str], Optional[str]]], str, Optional[str]]:
+    """Extract the ordered (kind, text, media_ref) span sequence of one HTML
+    string. Never raises, never hangs.
+
+    Two levels (see the module docstring): the split path walks tag pieces
+    and returns None at the first chunk or piece it cannot prove safe; the
+    whole document then goes through the TOKEN_RE path. An illegal
+    self-close or a tokenizer failure returns at once; a tag mismatch only
+    sets a flag and the scan goes on. Equality with the oracle is pinned
+    by tests/test_kernel_vs_oracle.py and the hypothesis, edge-case and
+    node-bundle fuzz suites.
+    """
+    # Fast path: no markup metacharacters at all -> single text token.
+    # ('/' excluded so the position-1 not_data_mode quirk can't fire,
+    # '{'/'<'/'>' excluded so no other branch can trigger.)
+    if html and not any(c in html for c in "<>{/"):
+        return [("text", html, None)], STATUS_OK, None
+    return _split_scan(html) or _token_scan(html)
 
 
 def _first_src_attr(attrs_str: str) -> Optional[str]:

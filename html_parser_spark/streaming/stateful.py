@@ -136,15 +136,22 @@ def _banded_fn(
     )
 
 
-def band_keys_expr(k: int = 8, rows_per_band: int = 2) -> list[str]:
-    """One SQL expression PER BAND computing the banded MinHash key of a
-    `text` column: functions/dedup.band_key_exprs — the one signature and
-    band builder the batch minhash_lsh_pairs / fuzzy_join use — applied to
-    the shingle expression itself instead of a cached array column, so a
-    streaming run and a batch run bucket identically."""
+def band_rows(df: DataFrame, k: int = 8, rows_per_band: int = 2) -> DataFrame:
+    """(doc_id, band, content_key): one row per LSH band of every doc with
+    at least 3 words. The shingle array is projected once as a `garr`
+    column and functions/dedup.band_key_exprs — the one signature and band
+    builder the batch minhash_lsh_pairs / fuzzy_join use — reads it, so a
+    streaming run and a batch run bucket identically and each doc's array
+    is built once, not once per min-hash."""
     from ..functions.dedup import band_key_exprs, shingle_array_expr
 
-    return band_key_exprs(shingle_array_expr(), k, rows_per_band)
+    keys = band_key_exprs("garr", k, rows_per_band)
+    cells = ", ".join(f"{band}, {key}" for band, key in enumerate(keys))
+    return (
+        df.where(F.expr("size(split(text, ' ')) >= 3"))
+        .select("doc_id", F.expr(shingle_array_expr()).alias("garr"))
+        .select("doc_id", F.expr(f"stack({len(keys)}, {cells}) as (band, content_key)"))
+    )
 
 
 def dedup_stream_banded(
@@ -164,13 +171,7 @@ def dedup_stream_banded(
     State is per (band, key): n_bands entries per unique signature region,
     sharded by groupBy hash — the streaming analogue of the batch bucket
     groupBy, so no executor ever holds the global seen-set."""
-    exprs = band_keys_expr(k, rows_per_band)
-    n_bands = len(exprs)
-    stacked = ", ".join(f"{b}, {e}" for b, e in enumerate(exprs))
-    keyed = stream_df.where(F.expr("size(split(text, ' ')) >= 3")).select(
-        F.col("doc_id"),
-        F.expr(f"stack({n_bands}, {stacked}) as (band, content_key)"),
-    )
+    keyed = band_rows(stream_df, k, rows_per_band)
     return keyed.groupBy("band", "content_key").applyInPandasWithState(
         _banded_fn,
         outputStructType=BANDED_OUT_SCHEMA,

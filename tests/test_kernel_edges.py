@@ -1,11 +1,14 @@
-"""Seeded edge-case differential test: the TOKEN_RE kernel against the
+"""Seeded edge-case differential test: the two-level kernel against the
 oracle on strings built from pieces that the hypothesis soup alphabet
 rarely or never produces (JS-only whitespace, comment and end-tag edges,
 brace edges, doctype / processing-instruction openers, case-sensitive void
-tags). Runs both ways of draining the scanner: the findall list used for
-ordinary documents and the token stream used above _FINDALL_MAX_CHARS.
+tags). Runs every way of draining the scanner: the TOKEN_RE path's findall
+list used for ordinary documents and its token stream used above
+_FINDALL_MAX_CHARS, and the split path with its chunk shrunk to 1 and to 7
+chars (every cut lands just after a '>'). The corpus must send documents
+down both the split path and the TOKEN_RE fallback, each in volume.
 
-Also pins the stream's memory bound on a mega-doc.
+Also pins the memory bound on a mega-doc, on both paths.
 """
 
 from __future__ import annotations
@@ -68,14 +71,36 @@ def _flat_rows(html: str):
     return rows, status, error
 
 
-@pytest.fixture(params=["findall", "stream"])
+@pytest.fixture(params=["findall", "stream", "split1", "split7"])
 def drain(request, monkeypatch):
     if request.param == "stream":
         monkeypatch.setattr(kext, "_FINDALL_MAX_CHARS", -1)
+    elif request.param.startswith("split"):
+        monkeypatch.setattr(kext, "_SPLIT_CHUNK_CHARS", int(request.param[5:]))
     return request.param
 
 
-def test_edge_pieces_kernel_equals_oracle(drain):
+@pytest.fixture
+def paths(monkeypatch):
+    """Counts the documents each scan level returns."""
+    counts = {"split": 0, "token": 0}
+    split_scan, token_scan = kext._split_scan, kext._token_scan
+
+    def counted_split(html):
+        out = split_scan(html)
+        counts["split"] += out is not None
+        return out
+
+    def counted_token(html):
+        counts["token"] += 1
+        return token_scan(html)
+
+    monkeypatch.setattr(kext, "_split_scan", counted_split)
+    monkeypatch.setattr(kext, "_token_scan", counted_token)
+    return counts
+
+
+def test_edge_pieces_kernel_equals_oracle(drain, paths):
     statuses = {"ok": 0, "error": 0, "divergent": 0}
     for html in _cases():
         want = oracle.parse_and_extract(html)
@@ -83,8 +108,9 @@ def test_edge_pieces_kernel_equals_oracle(drain):
         assert (status, error) == (want.status, want.error), repr(html)
         assert spans == want.spans, repr(html)
         statuses[status] += 1
-    # every outcome class is exercised in volume
+    # every outcome class and both scan levels are exercised in volume
     assert min(statuses.values()) > N_CASES // 20, statuses
+    assert min(paths.values()) > N_CASES // 20, paths
 
 
 def test_edge_pieces_parse_flat_equals_oracle_form():
@@ -92,9 +118,7 @@ def test_edge_pieces_parse_flat_equals_oracle_form():
         assert _flat_rows(html) == parse_one(html), repr(html)
 
 
-def test_mega_doc_streams_in_bounded_memory():
-    """A ~1 MB list/table document must not hold all its tokens at once:
-    the traced peak stays under twice the size of the returned spans."""
+def _mega_doc() -> str:
     block = "".join(
         f"<ul><li><a href=x>item {i}</a></li><li>b</li></ul>"
         f"<table><tr><td><p>cell {i}</p></td><td>c</td></tr></table>"
@@ -102,6 +126,24 @@ def test_mega_doc_streams_in_bounded_memory():
     )
     html = "<div>" + block * 150 + "</div>"
     assert len(html) > 900_000
+    return html
+
+
+def test_mega_doc_streams_in_bounded_memory(paths):
+    """A ~1 MB list/table document must not hold all its pieces at once:
+    the traced peak stays under twice the size of the returned spans."""
+    _assert_bounded(_mega_doc())
+    assert paths == {"split": 1, "token": 0}
+
+
+def test_mega_doc_fallback_streams_in_bounded_memory(paths, monkeypatch):
+    """The same bound on the TOKEN_RE path, which streams its tokens."""
+    monkeypatch.setattr(kext, "_split_scan", lambda html: None)
+    _assert_bounded(_mega_doc())
+    assert paths["token"] == 1
+
+
+def _assert_bounded(html: str) -> None:
     tracemalloc.start()
     try:
         spans, status, _ = kext.extract_doc_spans(html)

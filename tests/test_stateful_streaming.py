@@ -229,3 +229,35 @@ def test_canonical_url_dedup_streaming(spark, tmp_path):
     run_once()
     got2 = {r["doc_id"] for r in spark.read.parquet(out_dir).collect()}
     assert got2 == {"d1", "d2", "d5"}
+
+
+def test_band_rows_build_the_shingle_array_once(spark):
+    """The banded keys project each doc's shingle array once (one md5
+    trigram pass in the executed plan, not one per min-hash), and the keys
+    are string-identical to the band keys over the inline shingle
+    expression."""
+    from pyspark.sql import functions as F
+
+    from html_parser_spark.functions.dedup import band_key_exprs, shingle_array_expr
+    from html_parser_spark.streaming.stateful import band_rows
+
+    docs = [
+        ("d1", "alpha beta gamma delta epsilon zeta"),
+        ("d2", "too short"),
+        ("d3", "one two three four five"),
+    ]
+    df = spark.createDataFrame(docs, DOC_SCHEMA)
+    keyed = band_rows(df)
+    plan = keyed._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("conv(substr(md5") == 1, plan
+
+    inline = band_key_exprs(shingle_array_expr())
+    want = {
+        (r["doc_id"], band, r[f"k{band}"])
+        for r in df.where(F.expr("size(split(text, ' ')) >= 3"))
+        .select("doc_id", *[F.expr(e).alias(f"k{b}") for b, e in enumerate(inline)])
+        .collect()
+        for band in range(len(inline))
+    }
+    got = {(r["doc_id"], r["band"], r["content_key"]) for r in keyed.collect()}
+    assert got == want and len(got) == 2 * len(inline)

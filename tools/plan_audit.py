@@ -34,10 +34,11 @@ def explain_str(df) -> str:
 
 
 def stable_ids(plan: str) -> str:
-    """Blank expression ids (`doc_id#123L`) and exchange plan ids: both come
-    from JVM-wide counters that shift whenever an earlier query builds a
-    node more or less, so PLANS_AUDIT.md would change on every run."""
-    return re.sub(r"(#|plan_id=)\d+", r"\1_", plan)
+    """Blank expression ids (`doc_id#123L`), exchange plan ids and RDD ids
+    (`MapPartitionsRDD[144]`): all come from JVM-wide counters that shift
+    whenever an earlier query builds a node more or less, so PLANS_AUDIT.md
+    would change on every run."""
+    return re.sub(r"(#|plan_id=|RDD\[)\d+", r"\1_", plan)
 
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.01"
