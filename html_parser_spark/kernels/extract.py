@@ -156,7 +156,6 @@ class ExtractOptions:
     """
 
     mode: str = "strict"
-    parse_all_attrs: bool = False  # keep per-element attrs (diff/heuristics)
 
 
 class _Fail(Exception):

@@ -8,9 +8,14 @@ once per batch (`to_pylist`), the Arrow schema derived from the Spark
 StructType (never hand-copied), and the output batch built column by
 column with the field's Arrow type.
 
-The three nested hot paths (operators/extract, parse, diff) keep their
-hand-built flat child-array rebuild instead; every other kernel goes
-through here.
+Output values may nest: an array is a Python list (None for a null
+array), and a struct value is either a dict keyed by field name or a
+tuple in field order, at any depth — parse's list<struct<...,
+list<struct>>> nodes column is built this way by pyarrow, in C++.
+
+Only operators/extract keeps a hand-built flat child-array rebuild (its
+input is a list<struct> column it decomposes without per-span objects);
+every other kernel goes through here.
 """
 
 from __future__ import annotations

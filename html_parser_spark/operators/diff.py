@@ -11,11 +11,12 @@ Scale shape: the doc_id join is the pipeline's only required shuffle beyond
 salting (SURVEY.md §3.2). Pairing uses a relational FULL OUTER join followed
 by ONE batched Python crossing — not cogroup/applyInPandas, which
 materializes a pandas group per doc_id (one-row frames; measured ~10x slower
-at 5k docs and pathological at 1e9 pairs). The crossing is mapInArrow: the
-input is flat strings and the only nested output (attr_changes
-list<struct>) is rebuilt from flat child arrays + offsets, never per-row
-dict lists (same pattern as operators/extract.py). Unpaired rows surface
-with status 'missing_old' / 'missing_new' (never dropped rows).
+at 5k docs and pathological at 1e9 pairs). The crossing is
+operators/arrow_rows.map_rows: the input is flat strings and the only
+nested output (attr_changes list<struct>) is the kernel's list of
+(node_id, change, name, value) tuples, built into Arrow by pyarrow.
+Unpaired rows surface with status 'missing_old' / 'missing_new' (never
+dropped rows).
 """
 
 from __future__ import annotations
@@ -41,6 +42,7 @@ from ..core.diff import (
     transform_diff,
 )
 from ..core.oracle import Divergence, ParseError, parse_html
+from .arrow_rows import map_rows
 
 ATTR_CHANGE_STRUCT = StructType(
     [
@@ -125,72 +127,7 @@ def diff_documents(
         "doc_id",
         "full_outer",
     )
-    return paired.mapInArrow(_arrow_kernel, schema=DIFF_SCHEMA)
-
-
-def _arrow_kernel(batches):
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    schema = to_arrow_schema(DIFF_SCHEMA)
-    changes_t = schema.field("attr_changes").type
-    for batch in batches:
-        doc_arr = batch.column(batch.schema.get_field_index("doc_id"))
-        if doc_arr.type != pa.string():
-            doc_arr = doc_arr.cast(pa.string())
-        news = batch.column(batch.schema.get_field_index("new_html")).to_pylist()
-        olds = batch.column(batch.schema.get_field_index("old_html")).to_pylist()
-        htmls, statuses, errors, ins_l, del_l = [], [], [], [], []
-        ac_nids: list = []
-        ac_changes: list = []
-        ac_names: list = []
-        ac_values: list = []
-        ac_offs = [0]
-        ac_mask = []
-        for new_html, old_html in zip(news, olds):
-            html, status, error, n_ins, n_del, attr_rows = _diff_one(new_html, old_html)
-            htmls.append(html)
-            statuses.append(status)
-            errors.append(error)
-            ins_l.append(n_ins)
-            del_l.append(n_del)
-            if attr_rows is None:
-                ac_mask.append(True)
-            else:
-                ac_mask.append(False)
-                for nid, change, name, value in attr_rows:
-                    ac_nids.append(nid)
-                    ac_changes.append(change)
-                    ac_names.append(name)
-                    ac_values.append(value)
-            ac_offs.append(len(ac_nids))
-        change_struct = pa.StructArray.from_arrays(
-            [
-                pa.array(ac_nids, pa.int32()),
-                pa.array(ac_changes, pa.string()),
-                pa.array(ac_names, pa.string()),
-                pa.array(ac_values, pa.string()),
-            ],
-            fields=list(changes_t.value_type),
-        )
-        changes_arr = pa.ListArray.from_arrays(
-            pa.array(ac_offs, pa.int32()),
-            change_struct,
-            type=changes_t,
-            mask=pa.array(ac_mask, pa.bool_()),
-        )
-        yield pa.RecordBatch.from_arrays(
-            [
-                doc_arr,
-                pa.array(htmls, pa.string()),
-                pa.array(statuses, pa.string()),
-                pa.array(errors, pa.string()),
-                pa.array(ins_l, pa.int32()),
-                pa.array(del_l, pa.int32()),
-                changes_arr,
-            ],
-            schema=schema,
-        )
+    return map_rows(paired, lambda d, n, o: [(d,) + _diff_one(n, o)], DIFF_SCHEMA)
 
 
 def exploded_attr_changes(df_diffed: DataFrame) -> DataFrame:

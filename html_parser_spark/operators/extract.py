@@ -15,8 +15,9 @@ Scale notes (100 TB / 1000 executors):
   one compiled token scan plus a tag-stack walk per document
   (kernels/extract.py);
   the crossing moves flat Arrow child arrays, never per-span Python dicts
-  (this and the parse/diff kernels are the only hand-built Arrow rebuilds;
-  every flat-row kernel goes through operators/arrow_rows.map_rows).
+  (this is the package's only hand-built Arrow rebuild: its list<struct>
+  input is decomposed without per-span objects, which measured faster than
+  operators/arrow_rows.map_rows; every other kernel goes through map_rows).
 - Skew: mega-documents are row-atomic, so the defense is (a) salted
   repartitioning — salt_by='hash' spreads docs uniformly on the raw
   xxhash64(doc_id); salt_by='bytes' is SIZE-WEIGHTED: an AQE REBALANCE on
@@ -233,6 +234,8 @@ def extract_spans(
             f"extract_spans input is missing column(s) {sorted(missing)}; "
             "expected (doc_id: string, spans: array<struct<kind,text,media_ref,offset>>)"
         )
+    if options.mode not in ("strict", "main"):
+        raise ValueError(f"options.mode must be 'strict' or 'main', got {options.mode!r}")
     if salt_by not in ("hash", "bytes"):
         raise ValueError(f"salt_by must be 'hash' or 'bytes', got {salt_by!r}")
     if salt_by == "bytes":

@@ -15,10 +15,12 @@ quirks preserved including value=NULL for quoted-empty, tokenize.ts:103-120;
 Interpolation keeps the reference's [raw, inner] pair, tokenize.ts:172-182,
 as content=raw / inner=trimmed-inner).
 
-Crossing: mapInArrow over flat child arrays — per-node Python dicts are
-never materialized on either side (same pattern as operators/extract.py,
-measured 1.7x there); the output is pinned to the oracle-based parse_one
-by tests/test_arrow_crossings.py and tests/test_parse_nodes.py.
+Crossing: operators/arrow_rows.map_rows. The kernel returns each
+document's nodes as tuples in NODE_STRUCT order and pyarrow builds the
+nested list<struct<..., list<struct>>> column from them; the input is a
+flat string, so a hand-built rebuild would buy nothing. The output is
+pinned to the oracle-based parse_one by tests/test_arrow_crossings.py and
+tests/test_parse_nodes.py.
 """
 
 from __future__ import annotations
@@ -26,6 +28,7 @@ from __future__ import annotations
 from typing import Any, Optional
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -59,6 +62,7 @@ from ..kernels.extract import (
     _T_VOID,
     _tokenize_arrays,
 )
+from .arrow_rows import map_rows
 
 ATTR_STRUCT = StructType(
     [StructField("name", StringType()), StructField("value", StringType())]
@@ -95,7 +99,8 @@ _KIND_BY_TYPE = {
 def parse_one(html: str) -> tuple[Optional[list[dict[str, Any]]], str, Optional[str]]:
     """Tokenize + parent-stack build -> flat node rows (document order).
     Dict-rows test reference built on core/oracle.tokenize; parse_one_flat
-    is the kernel's equivalent and is pinned to it by the tests."""
+    is the kernel's tuple-rows equivalent and is pinned to it by the
+    tests."""
     try:
         tokens = tokenize(html)
     except Divergence:
@@ -149,164 +154,39 @@ def parse_one(html: str) -> tuple[Optional[list[dict[str, Any]]], str, Optional[
     return nodes, "ok", None
 
 
-def parse_one_flat(
-    html: str,
-    ids: list,
-    pids: list,
-    kinds: list,
-    tags: list,
-    contents: list,
-    inners: list,
-    unaries: list,
-    attr_names: list,
-    attr_values: list,
-    attr_lens: list,
-) -> tuple[int, str, Optional[str]]:
-    """parse_one, columnar form: append this document's node rows to the
-    shared flat output lists (attr_lens gets one entry per node: the attr
-    count for Elements, -1 = null attrs for leaves). Returns
-    (n_nodes | -1 on failure, status, error); on failure all appended rows
-    are rolled back (the nodes column is NULL for error docs)."""
-    mark_n, mark_a = len(ids), len(attr_names)
+def parse_one_flat(html: str) -> tuple[Optional[list[tuple]], str, Optional[str]]:
+    """parse_one, kernel form: the same rows as tuples in NODE_STRUCT order
+    (id, pid, kind, tag, content, inner, attrs, unary), built on the
+    keep_all array tokenizer. attrs is the tokenizer's (name, value) list
+    for Elements and None for leaves. A failure returns (None, status,
+    error): the nodes column is NULL for error docs."""
     try:
         types, tg, payloads, attrs_col = _tokenize_arrays(
             html, want_attrs=True, keep_all=True
         )
     except _Fail as f:
-        return -1, f.status, f.error
+        return None, f.status, f.error
 
+    nodes: list[tuple] = []
     stack: list[tuple[int, Any]] = [(1, "")]
-    next_id = 2
+    nid = 1
     for i, t in enumerate(types):
         if t == _T_END:
             if len(stack) == 1 or stack[-1][1] != tg[i]:
-                del ids[mark_n:], pids[mark_n:], kinds[mark_n:], tags[mark_n:]
-                del contents[mark_n:], inners[mark_n:], unaries[mark_n:]
-                del attr_lens[mark_n:], attr_names[mark_a:], attr_values[mark_a:]
-                return -1, "error", "tag_mismatch"
+                return None, "error", "tag_mismatch"
             stack.pop()
             continue
-        nid = next_id
-        next_id += 1
-        ids.append(nid)
-        pids.append(stack[-1][0])
+        nid += 1
+        pid = stack[-1][0]
         if t == _T_OPEN or t == _T_VOID:
-            kinds.append(ELEMENT)
-            tags.append(tg[i])
-            contents.append(None)
-            inners.append(None)
-            unaries.append(t == _T_VOID)
-            al = attrs_col[i]
-            for nm, v in al:
-                attr_names.append(nm)
-                attr_values.append(v)
-            attr_lens.append(len(al))
+            nodes.append((nid, pid, ELEMENT, tg[i], None, None, attrs_col[i], t == _T_VOID))
             if t == _T_OPEN:
                 stack.append((nid, tg[i]))
         else:
-            kinds.append(_KIND_BY_TYPE[t])
-            tags.append(None)
-            if t == _T_INTERP:
-                raw, inner = payloads[i]
-                contents.append(raw)
-                inners.append(inner)
-            else:
-                contents.append(payloads[i])
-                inners.append(None)
-            unaries.append(None)
-            attr_lens.append(-1)
-    return len(ids) - mark_n, "ok", None
-
-
-def _offsets_and_mask(pa, lens: list) -> tuple:
-    """(offsets, mask) arrays from per-entry lengths (-1 = null entry)."""
-    offs = [0]
-    mask = []
-    total = 0
-    for ln in lens:
-        if ln < 0:
-            mask.append(True)
-        else:
-            mask.append(False)
-            total += ln
-        offs.append(total)
-    return pa.array(offs, pa.int32()), pa.array(mask, pa.bool_())
-
-
-def _arrow_kernel_factory(html_col: str, id_col: str):
-    def kernel(batches):
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        schema = to_arrow_schema(PARSE_SCHEMA)
-        nodes_type = schema.field("nodes").type
-        node_type = nodes_type.value_type
-        attr_type = node_type.field("attrs").type
-        for batch in batches:
-            doc_arr = batch.column(batch.schema.get_field_index(id_col))
-            if doc_arr.type != pa.string():
-                doc_arr = doc_arr.cast(pa.string())
-            htmls = batch.column(batch.schema.get_field_index(html_col)).to_pylist()
-
-            ids: list = []
-            pids: list = []
-            kinds: list = []
-            tags: list = []
-            contents: list = []
-            inners: list = []
-            unaries: list = []
-            attr_names: list = []
-            attr_values: list = []
-            attr_lens: list = []
-            node_lens: list = []
-            statuses: list = []
-            errors: list = []
-            for html in htmls:
-                n_nodes, status, error = parse_one_flat(
-                    html if html is not None else "",
-                    ids, pids, kinds, tags, contents, inners, unaries,
-                    attr_names, attr_values, attr_lens,
-                )
-                node_lens.append(n_nodes)
-                statuses.append(status)
-                errors.append(error)
-
-            attr_struct = pa.StructArray.from_arrays(
-                [pa.array(attr_names, pa.string()), pa.array(attr_values, pa.string())],
-                fields=list(attr_type.value_type),
-            )
-            a_offs, a_mask = _offsets_and_mask(pa, attr_lens)
-            attrs_arr = pa.ListArray.from_arrays(
-                a_offs, attr_struct, type=attr_type, mask=a_mask
-            )
-            node_struct = pa.StructArray.from_arrays(
-                [
-                    pa.array(ids, pa.int32()),
-                    pa.array(pids, pa.int32()),
-                    pa.array(kinds, pa.string()),
-                    pa.array(tags, pa.string()),
-                    pa.array(contents, pa.string()),
-                    pa.array(inners, pa.string()),
-                    attrs_arr,
-                    pa.array(unaries, pa.bool_()),
-                ],
-                fields=list(node_type),
-            )
-            n_offs, n_mask = _offsets_and_mask(pa, node_lens)
-            nodes_arr = pa.ListArray.from_arrays(
-                n_offs, node_struct, type=nodes_type, mask=n_mask
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    doc_arr,
-                    nodes_arr,
-                    pa.array(statuses, pa.string()),
-                    pa.array(errors, pa.string()),
-                ],
-                schema=schema,
-            )
-
-    return kernel
+            # Interpolation keeps the reference's [raw, inner] pair
+            content, inner = payloads[i] if t == _T_INTERP else (payloads[i], None)
+            nodes.append((nid, pid, _KIND_BY_TYPE[t], None, content, inner, None, None))
+    return nodes, "ok", None
 
 
 def parse_nodes(
@@ -315,13 +195,15 @@ def parse_nodes(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """(doc_id, html) -> (doc_id, nodes[], status, error)."""
-    return df.mapInArrow(_arrow_kernel_factory(html_col, id_col), schema=PARSE_SCHEMA)
+    return map_rows(
+        df.select(F.col(id_col).cast("string"), html_col),
+        lambda doc_id, h: [(doc_id,) + parse_one_flat(h if h is not None else "")],
+        PARSE_SCHEMA,
+    )
 
 
 def exploded_nodes(df_parsed: DataFrame) -> DataFrame:
     """One row per node (SQL-comparable form)."""
-    from pyspark.sql import functions as F
-
     return df_parsed.select(
         "doc_id", "status", F.explode("nodes").alias("n")
     ).select(
@@ -341,8 +223,6 @@ def exploded_attrs(df_parsed: DataFrame) -> DataFrame:
     (attr quirks surface as name/value columns: valueless dropped, hyphenated
     names truncated to the last \\w+ run, quoted-empty -> NULL value,
     unquoted-empty -> '' — tokenize.ts:103-120)."""
-    from pyspark.sql import functions as F
-
     return (
         df_parsed.select("doc_id", F.explode("nodes").alias("n"))
         .where(F.col("n.attrs").isNotNull())

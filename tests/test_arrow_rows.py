@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
+    BooleanType,
     IntegerType,
     LongType,
     StringType,
@@ -69,20 +70,53 @@ def test_null_string_and_binary_inputs(spark):
 
 
 def test_list_of_struct_output(spark):
+    """Struct values may be dicts or tuples in field order, and may nest a
+    list<struct> (parse's node shape: attrs inside each node); a null list
+    and an empty list stay distinct at every level."""
     item = StructType([StructField("word", StringType()), StructField("pos", IntegerType())])
+    attr = StructType([StructField("name", StringType()), StructField("value", StringType())])
+    node = StructType(
+        [
+            StructField("id", IntegerType()),
+            StructField("attrs", ArrayType(attr)),
+            StructField("unary", BooleanType()),
+        ]
+    )
     schema = StructType(
-        [StructField("doc", StringType()), StructField("words", ArrayType(item))]
+        [
+            StructField("doc", StringType()),
+            StructField("words", ArrayType(item)),
+            StructField("tuples", ArrayType(item)),
+            StructField("nodes", ArrayType(node)),
+        ]
     )
     df = spark.createDataFrame([("d1", "a b"), ("d2", ""), ("d3", None)], "doc string, text string")
+    d1_nodes = [(2, [("href", "u"), ("title", None)], False), (3, None, None), (4, [], True)]
 
     def words(doc, text):
         if text is None:
-            return [(doc, None)]
-        return [(doc, [{"word": w, "pos": i} for i, w in enumerate(text.split())])]
+            return [(doc, None, None, None)]
+        ws = text.split()
+        return [
+            (
+                doc,
+                [{"word": w, "pos": i} for i, w in enumerate(ws)],
+                [(w, i) for i, w in enumerate(ws)],
+                d1_nodes if ws else [],
+            )
+        ]
 
-    got = {r["doc"]: r["words"] for r in map_rows(df, words, schema).collect()}
-    assert [(w["word"], w["pos"]) for w in got["d1"]] == [("a", 0), ("b", 1)]
-    assert got["d2"] == [] and got["d3"] is None
+    out = map_rows(df, words, schema)
+    assert out.schema == schema
+    got = {r["doc"]: r for r in out.collect()}
+    for col in ("words", "tuples"):
+        assert [(w["word"], w["pos"]) for w in got["d1"][col]] == [("a", 0), ("b", 1)]
+    assert [
+        (n["id"], None if n["attrs"] is None else [tuple(a) for a in n["attrs"]], n["unary"])
+        for n in got["d1"]["nodes"]
+    ] == d1_nodes
+    for col in ("words", "tuples", "nodes"):
+        assert got["d2"][col] == [] and got["d3"][col] is None
 
 
 def test_result_schema_is_the_struct_type_passed_in(spark):

@@ -20,7 +20,7 @@ import pytest
 
 from html_parser_spark.core import oracle
 from html_parser_spark.kernels import extract as kext
-from html_parser_spark.operators.parse import parse_one, parse_one_flat
+from html_parser_spark.operators.parse import NODE_STRUCT, parse_one, parse_one_flat
 
 EDGE_PIECES = (
     # JS \s whitespace, spelled out in core/jsre (Python's \s lacks U+FEFF)
@@ -50,24 +50,19 @@ def _cases() -> list[str]:
 
 
 def _flat_rows(html: str):
-    cols = [[] for _ in range(10)]
-    n_nodes, status, error = parse_one_flat(html, *cols)
-    if n_nodes < 0:
+    """parse_one_flat in parse_one's dict form: (rows | None, status, error),
+    each tuple row checked for NODE_STRUCT's arity."""
+    nodes, status, error = parse_one_flat(html)
+    if nodes is None:
         return None, status, error
-    ids, pids, kinds, tags, contents, inners, unaries, names, values, lens = cols
-    rows, ai = [], 0
-    for j in range(n_nodes):
-        attrs = None
-        if lens[j] >= 0:
-            attrs = [
-                {"name": names[ai + k], "value": values[ai + k]} for k in range(lens[j])
-            ]
-            ai += lens[j]
-        rows.append({
-            "id": ids[j], "pid": pids[j], "kind": kinds[j], "tag": tags[j],
-            "content": contents[j], "inner": inners[j], "attrs": attrs,
-            "unary": unaries[j],
-        })
+    names = NODE_STRUCT.fieldNames()
+    rows = []
+    for n in nodes:
+        assert len(n) == len(names), repr(html)
+        row = dict(zip(names, n))
+        if row["attrs"] is not None:
+            row["attrs"] = [{"name": nm, "value": v} for nm, v in row["attrs"]]
+        rows.append(row)
     return rows, status, error
 
 

@@ -54,38 +54,14 @@ def test_parse_one_matches_oracle_flat():
 
 
 def test_parse_one_flat_equals_dict_form():
-    """The columnar kernel (parse_one_flat, the mapInArrow crossing) must
-    produce exactly the dict form's rows — same statuses, same truncation-on-
-    error rollback — for every fixture."""
-    from html_parser_spark.operators.parse import parse_one_flat
+    """The kernel form (parse_one_flat: tuple rows in NODE_STRUCT order,
+    which map_rows builds into the nodes column) must produce exactly the
+    dict form's rows — same statuses, None on failure — for every
+    fixture."""
+    from tests.test_kernel_edges import _flat_rows
 
     for fid, _cat, html, _exp in FIXTURES:
-        want_nodes, want_status, want_error = parse_one(html)
-        cols = [[] for _ in range(10)]
-        n_nodes, status, error = parse_one_flat(html, *cols)
-        (ids, pids, kinds, tags, contents, inners, unaries,
-         attr_names, attr_values, attr_lens) = cols
-        assert (status, error) == (want_status, want_error), fid
-        if want_nodes is None:
-            assert n_nodes == -1 and not ids and not attr_names, fid
-            continue
-        assert n_nodes == len(want_nodes), fid
-        ai = 0
-        for j, w in enumerate(want_nodes):
-            attrs = None
-            if attr_lens[j] >= 0:
-                attrs = [
-                    {"name": attr_names[ai + k], "value": attr_values[ai + k]}
-                    for k in range(attr_lens[j])
-                ]
-                ai += attr_lens[j]
-            got = {
-                "id": ids[j], "pid": pids[j], "kind": kinds[j], "tag": tags[j],
-                "content": contents[j], "inner": inners[j], "attrs": attrs,
-                "unary": unaries[j],
-            }
-            assert got == w, (fid, j)
-        assert ai == len(attr_names), fid
+        assert _flat_rows(html) == parse_one(html), fid
 
 
 def test_document_order_is_ascending_id():

@@ -113,38 +113,13 @@ def test_parse_nodes_roundtrip_document_order(html):
 @settings(max_examples=300, deadline=None)
 @given(st.one_of(soup, html_doc()))
 def test_parse_flat_equals_dict_fuzz(html):
-    """parse_one_flat (the mapInArrow crossing's columnar form, running on
-    the keep_all array tokenizer) must agree with parse_one (oracle.tokenize
-    dict form) on ARBITRARY inputs — statuses, node rows, attrs, the
-    [raw, inner] interpolation pair, and error rollback."""
-    from html_parser_spark.operators.parse import parse_one_flat
+    """parse_one_flat (the parse kernel's tuple form, running on the keep_all
+    array tokenizer) must agree with parse_one (oracle.tokenize dict form)
+    on ARBITRARY inputs — statuses, node rows, attrs, the [raw, inner]
+    interpolation pair, and None on failure."""
+    from tests.test_kernel_edges import _flat_rows
 
-    want_nodes, want_status, want_error = parse_one(html)
-    cols = [[] for _ in range(10)]
-    n_nodes, status, error = parse_one_flat(html, *cols)
-    (ids, pids, kinds, tags, contents, inners, unaries,
-     attr_names, attr_values, attr_lens) = cols
-    assert (status, error) == (want_status, want_error), repr(html)
-    if want_nodes is None:
-        assert n_nodes == -1 and not ids and not attr_names, repr(html)
-        return
-    assert n_nodes == len(want_nodes), repr(html)
-    ai = 0
-    for j, w in enumerate(want_nodes):
-        attrs = None
-        if attr_lens[j] >= 0:
-            attrs = [
-                {"name": attr_names[ai + k], "value": attr_values[ai + k]}
-                for k in range(attr_lens[j])
-            ]
-            ai += attr_lens[j]
-        got = {
-            "id": ids[j], "pid": pids[j], "kind": kinds[j], "tag": tags[j],
-            "content": contents[j], "inner": inners[j], "attrs": attrs,
-            "unary": unaries[j],
-        }
-        assert got == w, (repr(html), j)
-    assert ai == len(attr_names), repr(html)
+    assert _flat_rows(html) == parse_one(html), repr(html)
 
 
 # interleaved-document generator: a mix of media spans (possibly null refs)

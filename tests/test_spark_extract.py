@@ -145,3 +145,13 @@ def test_partition_id_stable_across_runs(spark, extracted):
     out2 = extract_spans(df2)  # no salting this time: bucket must not depend on layout
     second = {r["doc_id"]: r["partition_id"] for r in out2.select("doc_id", "partition_id").collect()}
     assert first == second
+
+
+@pytest.mark.parametrize("mode", ["Main", "STRICT", "mian", ""])
+def test_unknown_mode_is_rejected_before_planning(spark, mode):
+    """A typo in options.mode must not silently run strict extraction."""
+    from html_parser_spark.kernels.extract import ExtractOptions
+
+    df = spark.createDataFrame([], schema=INPUT_SCHEMA)
+    with pytest.raises(ValueError, match="options.mode"):
+        extract_spans(df, options=ExtractOptions(mode=mode))

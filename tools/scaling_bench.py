@@ -30,6 +30,9 @@ trials are stable. Min walls are recorded alongside for transparency.
 Usage: python tools/scaling_bench.py [--n 4] [--amplify 300]
        [--minhash-docs 300000] [--ops extract,parse,minhash]
        [--sf-dir 0.1 | sf0.1 | <dir>]
+
+Exits 2 before any Spark process starts when 4N exceeds the cores this
+process may run on (os.sched_getaffinity) or the sf directory is missing.
 """
 
 from __future__ import annotations
@@ -40,6 +43,7 @@ import os
 import shutil
 import subprocess
 import sys
+from typing import Optional
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -47,6 +51,18 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def sh(cmd, **kw):
     print("+", " ".join(cmd), file=sys.stderr)
     return subprocess.run(cmd, check=True, capture_output=True, text=True, **kw)
+
+
+def host_refusal(n: int, usable_cores: int) -> Optional[str]:
+    """Why a host with `usable_cores` cores cannot run the N vs 4N protocol
+    at N=n, or None when it can. 4N above the usable cores would measure an
+    oversubscribed ratio, not scaling. (No memory check: the 16g JVM
+    heap is reserved, not committed up front.)"""
+    if n < 1:
+        return f"--n must be >= 1, got {n}"
+    if 4 * n > usable_cores:
+        return f"4N = {4 * n} cores exceeds the {usable_cores} usable cores of this host"
+    return None
 
 
 def main() -> int:
@@ -83,6 +99,10 @@ def main() -> int:
         "minhash run — should NOT overwrite the protocol file)",
     )
     args = ap.parse_args()
+    refusal = host_refusal(args.n, len(os.sched_getaffinity(0)))
+    if refusal:
+        print(f"scaling_bench: {refusal}", file=sys.stderr)
+        return 2
     ops = args.ops.split(",")
     # '0.1', 'sf0.1' or a path, resolved as tools/gate_check.py does; a
     # missing directory exits before any Spark process starts
