@@ -1,22 +1,36 @@
-"""Extraction kernel: a two-level token scan -> parent-stack span build.
+"""Extraction kernel: one token record, one tag decoder, two scan levels.
 
 This is the hot path that runs inside ``mapInArrow`` (one call per text
 span of each document). The tokenizer is ``TOKEN_RE``, one compiled
 alternation of the reference tokenizer's regexes (built from
 ``core.jsre``): the C regex engine walks the document token by token, with
 no string re-slicing (the reference's O(n²) ``advanceBy``, advance.ts:7),
-and Python only unpacks each token's groups and applies the tag-stack
-check. The tree is never materialized: the id/pid tree is isomorphic to
-this stack walk (SURVEY.md §1.1), so the span sequence is emitted directly.
+and Python only dispatches on each token and applies the tag-stack check.
+The tree is never materialized: the id/pid tree is isomorphic to this
+stack walk (SURVEY.md §1.1), so the span sequence is emitted directly.
 
 TOKEN_RE's alternatives can never start at the same position, so each one
 fires exactly where the reference tokenizer applies the same regex; the
 final catch-all marks the first position where the reference throws or
 hangs, and ``_failure`` names the error from the characters there.
 
-Two levels. ``extract_doc_spans`` first splits the document on tag pieces
-(``<``, no bracket, ``>``) with one-group ``re.split``, which is cheaper in
-C than TOKEN_RE's eight-way alternation, and walks the pieces:
+Every scan reads one token record, ``(code, name, payload, attrs)``:
+
+- ``_tokens(html)`` is the one TOKEN_RE drain, a generator (so it always
+  streams): text, comment, CDATA and interpolation records, and every tag
+  match decoded by ``_decode_tag``; it raises ``_Fail`` where the
+  reference throws or hangs. parse, serialize and heuristics consume it;
+  ``_token_scan`` walks it for the strict spans.
+- ``_decode_tag(piece)`` is the one tag decoder, memoized per distinct
+  piece in the bounded ``_TAG_CACHE``: open, void, illegal self-close, end
+  (name ``None`` when the reference's tagName is undefined or empty, an
+  always-mismatch), closed comment, or hazard. A tag's payload is its
+  media span, its attrs the ``(name, value)`` tuple ``ATTR_RE`` reads,
+  built once per distinct piece and never mutated.
+
+Two levels for ``extract_doc_spans``. It first splits the document on tag
+pieces (``<``, no bracket, ``>``) with one-group ``re.split``, which is
+cheaper in C than TOKEN_RE's eight-way alternation, and walks the pieces:
 
 - Gate: a chunk is walked only if its tag-piece count equals both its
   ``<`` count and its ``>`` count, so no bracket sits in a text piece.
@@ -24,27 +38,25 @@ C than TOKEN_RE's eight-way alternation, and walks the pieces:
   is a token boundary or a failure for TOKEN_RE, and an illegal self-close
   later in the same chunk must not outrank it.
 - Text pieces hold no bracket, so each is one TOKEN_RE text token, unless
-  it starts with ``{{`` (rescanned alone with TOKEN_RE: with no bracket
-  inside it yields the tokens it yields in context, or fails) or its
-  second char is ``/`` (the not_data_mode quirk).
-- Tag pieces are decoded once per distinct piece (``_decode_tag``, a
-  bounded dict) by a full match of TOKEN_RE's start- or end-tag branch:
-  open, void, illegal self-close, end, or undefined end; a closed comment
-  is skipped.
+  it starts with ``{{`` (rescanned alone through ``_tokens``: with no
+  bracket inside it yields the tokens it yields in context, or fails) or
+  its second char is ``/`` (the not_data_mode quirk).
+- Tag pieces go through the memo (looked up inline: a call per piece
+  costs the strict path about 5%); a closed comment is skipped.
 - Fallback rule: anything else (a failed gate, a ``/`` text, a failing
   ``{{`` rescan, an unclosed comment, ``<!``, CDATA, ``<`` + non-letter)
-  sends the WHOLE document through the TOKEN_RE path, which is the
+  sends the WHOLE document through ``_token_scan``, which is the
   reference of the split path and handles every hazard.
 
 A mega-doc is split in chunks of about ``_SPLIT_CHUNK_CHARS``, each cut
 just after a ``>``, so a tag piece never straddles a cut and the piece
-list stays bounded; the TOKEN_RE path streams documents longer than
-``_FINDALL_MAX_CHARS``.
+list stays bounded.
 
 Error precedence: the reference tokenizes the whole source before building
 the tree (htmlParser.ts:26-33), so a tokenizer error late in the document
 must win over an earlier tag mismatch. A mismatch therefore only sets a
-flag and the scan continues to EOF or to a tokenizer failure.
+flag and the scan continues to EOF or to a tokenizer failure; the other
+consumers take ``list(_tokens(html))`` before they walk it.
 
 Semantics are pinned to ``core.oracle`` (itself pinned to the reference
 bundle); tests/test_kernel_vs_oracle.py asserts span-for-span equality.
@@ -54,13 +66,12 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass
-from typing import Any, Iterable, Optional
+from typing import Iterator, Optional
 
 from ..core.jsre import (
     _JS_DOT_EXCL,
     _WS,
     ATTR_RE,
-    INTERP_RE,
     MEDIA_TAGS,
     UNARY_TAGS,
 )
@@ -107,10 +118,6 @@ TOKEN_RE = re.compile(
     r"|([\s\S]+)"
 )
 
-# Documents up to this many chars are scanned with one findall list; longer
-# ones stream their tokens so a mega-doc never holds all of them at once.
-_FINDALL_MAX_CHARS = 1 << 16
-
 # Split path (extract_doc_spans only). A tag piece is '<', no bracket, '>';
 # splitting on it with one group alternates text and tag pieces. A
 # document is split in chunks of about this many chars, each cut just
@@ -120,28 +127,22 @@ _SPLIT_CHUNK_CHARS = 1 << 16
 _START_TAG_RE = re.compile(_START_TAG)
 _END_TAG_RE = re.compile(_END_TAG)
 
-# Decoded tag pieces, (kind, name, media span). A piece always decodes the
-# same, so one memo serves every call in the worker; bounded, cleared when
-# full (documents with ever-new attribute values must not grow it).
-_P_OPEN = 0  # push name; media span if a media tag
-_P_END = 1  # pop name, or a tag mismatch
-_P_VOID = 2  # no stack effect; media span if any (comments, pad piece)
-_P_UNDEF = 3  # end tag whose name is undefined or empty: a tag mismatch
-_P_ILLEGAL = 4  # self-closed non-void tag
-_P_HAZARD = 5  # not decoded here: the document takes the TOKEN_RE path
+# Token codes: the first field of every token record
+_T_TEXT = 0  # payload: the text
+_T_OPEN = 1  # push name; payload: media span if a media tag
+_T_VOID = 2  # no stack effect; payload: media span if a media tag
+_T_END = 3  # pop name; name None (undefined or empty) always mismatches
+_T_COMMENT = 4  # payload: comment content (no span, no stack effect)
+_T_CDATA = 5  # payload: CDATA inner
+_T_INTERP = 6  # payload: the raw '{{...}}' (parse derives the inner)
+_T_ILLEGAL = 7  # self-closed non-void tag
+_T_HAZARD = 8  # a piece TOKEN_RE does not read as one tag: split fallback
+
+# Decoded tag pieces. A piece always decodes the same, so one memo serves
+# every call in the worker; bounded, cleared when full (documents with
+# ever-new attribute values must not grow it).
 _TAG_CACHE: dict[str, tuple] = {}
 _TAG_CACHE_MAX = 1 << 12
-
-# Compact token type codes (_tokenize_arrays output)
-_T_TEXT = 0
-_T_OPEN = 1
-_T_VOID = 2
-_T_END = 3
-# emitted only with keep_all=True (full-parse consumers; the extraction walk
-# never sees them — Comment/CDATA/Interpolation extract no spans)
-_T_COMMENT = 4
-_T_CDATA = 5
-_T_INTERP = 6
 
 
 @dataclass(frozen=True)
@@ -179,98 +180,70 @@ def _failure(rest: str) -> tuple[str, str]:
     return STATUS_DIVERGENT, E_DIVERGENT  # '>': empty text token, no advance
 
 
-def _tokenize_arrays(
-    s: str, want_attrs: bool, keep_all: bool = False
-) -> tuple[list[int], list[Optional[str]], list[Any], list[Any]]:
-    """Tokenize one document into parallel arrays (types, tags, payloads,
-    attrs) by draining TOKEN_RE's matches; raises _Fail where the reference
-    throws or hangs.
-
-    payloads: text content for _T_TEXT, src value for media _T_OPEN/_T_VOID.
-    _T_END tags are None when the reference's tagName is undefined or empty
-    (such an end tag can never match an open element).
-
-    keep_all=True additionally emits Comment/CDATA/Interpolation tokens, with
-    payloads derived from the match text: comment content per
-    tokenize.ts:140-161 (an unclosed comment keeps the whole rest of the
-    source, '<!--' included), CDATA inner, and the (raw, inner)
-    interpolation pair. Without it they are skipped (they extract no spans).
-    """
-    types: list[int] = []
-    tags: list[Any] = []
-    payloads: list[Any] = []
-    attrs_col: list[Any] = []
-
-    for m in TOKEN_RE.finditer(s):
-        tag, attrs, end, text, undef, bad = m.groups()
-        attr_list = None
-        if text:
-            t, tg, payload = _T_TEXT, None, text
-        elif tag:
-            if attrs.endswith("/"):
-                if tag not in UNARY_TAGS:
-                    raise _Fail(STATUS_ERROR, E_ILLEGAL_SELF_CLOSE)
-                t, tg, attrs = _T_VOID, tag, attrs[:-1]
-            else:
-                t, tg = _T_OPEN, tag
-            payload = _first_src_attr(attrs) if tag in MEDIA_TAGS else None
-            if want_attrs:
-                attr_list = [
-                    (am.group(1), am.group(2) or am.group(3) or am.group(4))
-                    for am in ATTR_RE.finditer(attrs)
-                ]
-        elif end or undef:
-            t, tg, payload = _T_END, end, None
-        elif bad:
-            raise _Fail(*_failure(bad))
-        elif not keep_all:
-            continue
-        else:
-            raw = m.group()
-            tg = None
-            if raw[0] == "{":
-                t, payload = _T_INTERP, (raw, INTERP_RE.match(raw).group(1))
-            elif raw[2] == "-":
-                closed = len(raw) >= 7 and raw.endswith("-->")
-                t, payload = _T_COMMENT, (raw[4:-3] if closed else raw)
-            else:
-                t, payload = _T_CDATA, raw[9:-2]
-        types.append(t)
-        tags.append(tg)
-        payloads.append(payload)
-        if want_attrs:
-            attrs_col.append(attr_list)
-
-    return types, tags, payloads, attrs_col
-
-
 def _decode_tag(piece: str) -> tuple:
-    """(kind, name, media span) of one tag piece, exactly as TOKEN_RE reads
-    it in context. The piece holds no bracket but its own two, so the one
-    token TOKEN_RE matches at its '<' is the whole piece."""
-    if not piece:  # pads the last text piece of a chunk
-        return _P_VOID, None, None
+    """The token record (code, name, media span, attrs) of one tag piece,
+    exactly as TOKEN_RE reads it in context; stored in the memo. A split
+    piece holds no bracket but its own two, and a TOKEN_RE tag match
+    decodes by a full match of its own branch, so either reads whole."""
     c = piece[1]
     if c == "/":
         m = _END_TAG_RE.fullmatch(piece)
-        return (_P_END, m.group(1), None) if m else (_P_UNDEF, None, None)
-    if c == "!":
+        d: tuple = (_T_END, m and m.group(1), None, None)
+    elif c == "!":
         # a closed comment; '<!-->' / '<!--->' are not closed (the '-->'
         # search starts 4 chars in) and swallow the rest of the document
         if len(piece) >= 7 and piece.startswith("<!--") and piece.endswith("-->"):
-            return _P_VOID, None, None
-        return _P_HAZARD, None, None
-    m = _START_TAG_RE.fullmatch(piece)
-    if m is None:  # '<' + non-letter
-        return _P_HAZARD, None, None
-    tag, attrs = m.groups()
-    kind = _P_OPEN
-    if attrs.endswith("/"):
-        if tag not in UNARY_TAGS:
-            return _P_ILLEGAL, None, None
-        kind, attrs = _P_VOID, attrs[:-1]
-    media = ("media", None, _first_src_attr(attrs)) if tag in MEDIA_TAGS else None
-    return kind, tag, media
+            d = (_T_COMMENT, None, piece[4:-3], None)
+        else:
+            d = (_T_HAZARD, None, None, None)
+    elif (m := _START_TAG_RE.fullmatch(piece)) is None:  # '<' + non-letter
+        d = (_T_HAZARD, None, None, None)
+    else:
+        tag, attrs = m.groups()
+        code = _T_OPEN
+        if attrs.endswith("/"):
+            code, attrs = (_T_VOID if tag in UNARY_TAGS else _T_ILLEGAL), attrs[:-1]
+        pairs = tuple(
+            (am.group(1), am.group(2) or am.group(3) or am.group(4))
+            for am in ATTR_RE.finditer(attrs)
+        )
+        media = None
+        if tag in MEDIA_TAGS:
+            media = ("media", None, next((v for n, v in pairs if n == "src"), None))
+        d = (code, tag, media, pairs)
+    if len(_TAG_CACHE) >= _TAG_CACHE_MAX:
+        _TAG_CACHE.clear()
+    _TAG_CACHE[piece] = d
+    return d
+
+
+def _tokens(html: str) -> Iterator[tuple]:
+    """The token records of one document, drained from TOKEN_RE in order;
+    raises _Fail where the reference throws or hangs."""
+    cache = _TAG_CACHE
+    for m in TOKEN_RE.finditer(html):
+        g = m.lastindex
+        if g == 4:
+            yield _T_TEXT, None, m.group(4), None
+        elif g is None:  # comment, CDATA or interpolation
+            raw = m.group()
+            if raw[0] == "{":
+                yield _T_INTERP, None, raw, None
+            elif raw[2] == "-":
+                # tokenize.ts:140-161: an unclosed comment keeps the whole
+                # rest of the source, '<!--' included
+                closed = len(raw) >= 7 and raw.endswith("-->")
+                yield _T_COMMENT, None, (raw[4:-3] if closed else raw), None
+            else:
+                yield _T_CDATA, None, raw[9:-2], None
+        elif g == 6:
+            raise _Fail(*_failure(m.group(6)))
+        else:  # start tag, end tag or undefined end tag
+            piece = m.group()
+            d = cache.get(piece) or _decode_tag(piece)
+            if d[0] == _T_ILLEGAL:
+                raise _Fail(STATUS_ERROR, E_ILLEGAL_SELF_CLOSE)
+            yield d
 
 
 def _split_scan(
@@ -303,7 +276,7 @@ def _split_scan(
         n_tags = len(parts) >> 1
         if chunk.count("<") != n_tags or chunk.count(">") != n_tags:
             return None
-        parts.append("")
+        parts.append("<!---->")  # pads the last text piece: an empty comment
         it = iter(parts)
         for text, piece in zip(it, it):
             if text:
@@ -314,37 +287,32 @@ def _split_scan(
                 if text.startswith("{{"):
                     # no bracket inside: in context TOKEN_RE reads the same
                     # tokens as here, unless it fails
-                    for _t, _a, _e, sub, _u, bad in TOKEN_RE.findall(text):
-                        if bad:
-                            return None
-                        if sub and not tree_error:
-                            spans.append(("text", sub, None))
+                    try:
+                        for code, _n, sub, _a in _tokens(text):
+                            if code == _T_TEXT and not tree_error:
+                                spans.append(("text", sub, None))
+                    except _Fail:
+                        return None
                 elif not tree_error:
                     spans.append(("text", text, None))
-            d = cache.get(piece)
-            if d is None:
-                if len(cache) >= _TAG_CACHE_MAX:
-                    cache.clear()
-                d = cache[piece] = _decode_tag(piece)
-            kind, name, media = d
-            if kind == _P_OPEN:
+            code, name, media, _a = cache.get(piece) or _decode_tag(piece)
+            if code == _T_OPEN:
                 if not tree_error:
                     if media:
                         spans.append(media)
                     stack.append(name)
-            elif kind == _P_END:
+            elif code == _T_END:
                 # a mismatch may pop: the stack is dead once it is flagged
                 if not tree_error and (not stack or stack.pop() != name):
                     tree_error = True
-            elif kind == _P_VOID:
+            elif code == _T_VOID:
                 if media and not tree_error:
                     spans.append(media)
-            elif kind == _P_UNDEF:
-                tree_error = True
-            elif kind == _P_ILLEGAL:
+            elif code == _T_ILLEGAL:
                 return [], STATUS_ERROR, E_ILLEGAL_SELF_CLOSE
-            else:
+            elif code == _T_HAZARD:
                 return None
+            # else a closed comment: no span, no stack effect
 
     if tree_error:
         return [], STATUS_ERROR, E_TAG_MISMATCH
@@ -354,42 +322,30 @@ def _split_scan(
 def _token_scan(
     html: str,
 ) -> tuple[list[tuple[str, Optional[str], Optional[str]]], str, Optional[str]]:
-    """extract_doc_spans by draining TOKEN_RE: one pass over its tokens,
-    no token arrays."""
-    # Group tuples: non-participating groups are '' from findall and None
-    # from the stream, so every test below is on truthiness.
-    if len(html) <= _FINDALL_MAX_CHARS:
-        tokens: Iterable[tuple] = TOKEN_RE.findall(html)
-    else:
-        tokens = map(re.Match.groups, TOKEN_RE.finditer(html))
+    """extract_doc_spans by walking _tokens: one streamed pass, so a
+    mega-doc never holds all of its tokens at once."""
     spans: list[tuple[str, Optional[str], Optional[str]]] = []
     stack: list[str] = []
     tree_error = False  # first tag mismatch; finalized only at EOF
-    for tag, attrs, end, text, undef, bad in tokens:
-        if text:
-            if not tree_error:
-                spans.append(("text", text, None))
-        elif tag:
-            if attrs.endswith("/"):  # self-closing: no stack effect
-                if tag not in UNARY_TAGS:
-                    return [], STATUS_ERROR, E_ILLEGAL_SELF_CLOSE
-                if not tree_error and tag in MEDIA_TAGS:
-                    spans.append(("media", None, _first_src_attr(attrs[:-1])))
-            elif not tree_error:
-                if tag in MEDIA_TAGS:
-                    spans.append(("media", None, _first_src_attr(attrs)))
-                stack.append(tag)
-        elif end:
-            if not tree_error:
-                if stack and stack[-1] == end:
-                    stack.pop()
-                else:
+    try:
+        for code, name, payload, _a in _tokens(html):
+            if code == _T_TEXT:
+                if not tree_error:
+                    spans.append(("text", payload, None))
+            elif code == _T_OPEN:
+                if not tree_error:
+                    if payload:
+                        spans.append(payload)
+                    stack.append(name)
+            elif code == _T_END:
+                if not tree_error and (not stack or stack.pop() != name):
                     tree_error = True
-        elif undef:
-            tree_error = True
-        elif bad:
-            return [], *_failure(bad)
-        # else comment / CDATA / interpolation: no span, no stack effect
+            elif code == _T_VOID:
+                if payload and not tree_error:
+                    spans.append(payload)
+            # else comment / CDATA / interpolation: no span, no stack effect
+    except _Fail as f:
+        return [], f.status, f.error
 
     if tree_error:
         return [], STATUS_ERROR, E_TAG_MISMATCH
@@ -417,13 +373,6 @@ def extract_doc_spans(
     if html and not any(c in html for c in "<>{/"):
         return [("text", html, None)], STATUS_OK, None
     return _split_scan(html) or _token_scan(html)
-
-
-def _first_src_attr(attrs_str: str) -> Optional[str]:
-    for am in ATTR_RE.finditer(attrs_str):
-        if am.group(1) == "src":
-            return am.group(2) or am.group(3) or am.group(4)
-    return None
 
 
 def process_document_flat(

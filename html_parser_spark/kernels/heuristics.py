@@ -4,9 +4,10 @@ Boilerplate stripping over the parsed token stream, à la Readability /
 Boilerpipe (Kohlschütter et al., WSDM 2010): tag-based subtree pruning,
 class/id token scoring, then block-level text-density + link-density
 classification. Runs entirely inside the extraction kernel (no extra
-JVM<->Python crossing): it reuses the strict kernel's tokenizer,
-``kernels.extract._tokenize_arrays`` (one compiled TOKEN_RE scan), and
-replaces the strict span walk with a scored walk.
+JVM<->Python crossing): it walks the strict kernel's token records,
+``kernels.extract._tokens`` (one TOKEN_RE drain; each distinct tag's
+name, media span and attrs decoded once by the shared tag memo), with a
+scored walk instead of the strict span walk.
 
 This branch is NOT covered by the reference-equality contract (the reference
 has no main-content notion — SURVEY.md §2.1 'extraction semantics'); it is a
@@ -14,7 +15,7 @@ deterministic, documented heuristic validated by its own fixture tests
 (tests/test_heuristics.py).
 
 Pipeline per text span:
-  1. tokenize (shared kernel, attrs kept);
+  1. tokenize (shared kernel's token records, attrs included);
   2. subtree prune: drop everything under STRIP_TAGS (script/style/template/
      noscript/iframe/svg) and BOILERPLATE_TAGS (nav/header/footer/aside/form/
      ... — unconditionally: semantic chrome tags are chrome wherever they
@@ -42,8 +43,8 @@ from __future__ import annotations
 import re
 from typing import Any, Optional
 
-from .extract import _Fail, _T_END, _T_OPEN, _T_TEXT, _T_VOID, _tokenize_arrays
-from ..core.oracle import STATUS_OK
+from .extract import _Fail, _T_END, _T_OPEN, _T_TEXT, _T_VOID, _tokens
+from ..core.oracle import E_TAG_MISMATCH, STATUS_ERROR, STATUS_OK
 
 # Subtrees that never contain main content.
 STRIP_TAGS = frozenset(
@@ -74,7 +75,7 @@ MIN_BLOCK_WORDS = 3
 MIN_TEXT_DENSITY = 2.0  # words per (1 + inline tag): below = markup soup
 
 
-def _class_id_signal(attrs: list[tuple[str, Optional[str]]]) -> int:
+def _class_id_signal(attrs: tuple[tuple[str, Optional[str]], ...]) -> int:
     """-1 boilerplate, +1 content-protected, 0 neutral, from class/id tokens."""
     for name, value in attrs:
         if name in ("class", "id") and value:
@@ -94,7 +95,7 @@ def extract_main_spans(
     tokenizer), so status semantics stay aligned with the contract.
     """
     try:
-        types, tags, payloads, attrs_col = _tokenize_arrays(html, want_attrs=True)
+        tokens = list(_tokens(html))  # a tokenizer failure outranks a mismatch
     except _Fail as f:
         return [], f.status, f.error
 
@@ -110,19 +111,17 @@ def extract_main_spans(
         if blocks[-1]["spans"] or blocks[-1]["words"]:
             blocks.append({"spans": [], "words": 0, "link_words": 0, "tags": 0})
 
-    for i, t in enumerate(types):
-        if t == _T_TEXT:
+    for code, tag, payload, attrs in tokens:
+        if code == _T_TEXT:
             if drop_depth:
                 continue
-            text = payloads[i]
-            w = len(text.split())
+            w = len(payload.split())
             b = blocks[-1]
-            b["spans"].append(("text", text, None))
+            b["spans"].append(("text", payload, None))
             b["words"] += w
             if link_depth:
                 b["link_words"] += w
-        elif t == _T_OPEN or t == _T_VOID:
-            tag = tags[i]
+        elif code == _T_OPEN or code == _T_VOID:
             low = tag.lower()
             protected = stack[-1][2] if stack else False
             dropped = drop_depth > 0
@@ -130,7 +129,7 @@ def extract_main_spans(
                 if low in STRIP_TAGS:
                     dropped = True
                 else:
-                    sig = _class_id_signal(attrs_col[i] or [])
+                    sig = _class_id_signal(attrs)
                     if low in BOILERPLATE_TAGS:
                         # explicit semantic chrome tags drop unconditionally
                         dropped = True
@@ -138,13 +137,13 @@ def extract_main_spans(
                         protected = True
                     elif sig == -1 and not protected:
                         dropped = True
-            if t == _T_VOID:
+            # payload: the media span of a media tag; kept only with a src
+            media = payload if payload and payload[2] is not None else None
+            if code == _T_VOID:
                 # void element: media emit only; no stack effect
-                if not dropped and payloads[i] is not None:
-                    blocks[-1]["spans"].append(("media", None, payloads[i]))
+                if not dropped and media:
+                    blocks[-1]["spans"].append(media)
                 continue
-            if dropped and drop_depth == 0:
-                pass  # this element starts the dropped subtree
             stack.append((tag, dropped, protected))
             if dropped:
                 drop_depth += 1
@@ -155,13 +154,11 @@ def extract_main_spans(
                     open_block()
                 else:
                     blocks[-1]["tags"] += 1  # inline tag inside the block
-                if payloads[i] is not None:  # media open tag (img etc. unslashed
-                    blocks[-1]["spans"].append(("media", None, payloads[i]))
-        else:  # _T_END — tokenizer guarantees tag match was validated upstream
-            if not stack or stack[-1][0] != tags[i]:
-                # strict walk would have errored; mirror it
-                from ..core.oracle import E_TAG_MISMATCH, STATUS_ERROR
-
+                if media:  # media open tag (img etc. unslashed)
+                    blocks[-1]["spans"].append(media)
+        elif code == _T_END:
+            if not stack or stack[-1][0] != tag:
+                # the strict walk errors here; mirror it
                 return [], STATUS_ERROR, E_TAG_MISMATCH
             tag, dropped, _prot = stack.pop()
             if dropped:

@@ -15,6 +15,11 @@ quirks preserved including value=NULL for quoted-empty, tokenize.ts:103-120;
 Interpolation keeps the reference's [raw, inner] pair, tokenize.ts:172-182,
 as content=raw / inner=trimmed-inner).
 
+Kernel: parse_one_flat walks the extraction kernel's token records
+(``kernels.extract._tokens``: one TOKEN_RE drain; each distinct tag's name
+and attrs tuple decoded once by the shared tag memo), listed in full
+before the walk so a tokenizer failure outranks an earlier tag mismatch.
+
 Crossing: operators/arrow_rows.map_rows. The kernel returns each
 document's nodes as tuples in NODE_STRUCT order and pyarrow builds the
 nested list<struct<..., list<struct>>> column from them; the input is a
@@ -38,6 +43,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..core.jsre import INTERP_RE
 from ..core.oracle import (
     CDATA,
     COMMENT,
@@ -60,7 +66,7 @@ from ..kernels.extract import (
     _T_OPEN,
     _T_TEXT,
     _T_VOID,
-    _tokenize_arrays,
+    _tokens,
 )
 from .arrow_rows import map_rows
 
@@ -157,35 +163,33 @@ def parse_one(html: str) -> tuple[Optional[list[dict[str, Any]]], str, Optional[
 def parse_one_flat(html: str) -> tuple[Optional[list[tuple]], str, Optional[str]]:
     """parse_one, kernel form: the same rows as tuples in NODE_STRUCT order
     (id, pid, kind, tag, content, inner, attrs, unary), built on the
-    keep_all array tokenizer. attrs is the tokenizer's (name, value) list
-    for Elements and None for leaves. A failure returns (None, status,
-    error): the nodes column is NULL for error docs."""
+    kernel's token records. attrs is the decoded (name, value) tuple for
+    Elements and None for leaves. A failure returns (None, status, error):
+    the nodes column is NULL for error docs."""
     try:
-        types, tg, payloads, attrs_col = _tokenize_arrays(
-            html, want_attrs=True, keep_all=True
-        )
+        tokens = list(_tokens(html))  # a tokenizer failure outranks a mismatch
     except _Fail as f:
         return None, f.status, f.error
 
     nodes: list[tuple] = []
     stack: list[tuple[int, Any]] = [(1, "")]
     nid = 1
-    for i, t in enumerate(types):
-        if t == _T_END:
-            if len(stack) == 1 or stack[-1][1] != tg[i]:
+    for code, name, payload, attrs in tokens:
+        if code == _T_END:
+            if len(stack) == 1 or stack[-1][1] != name:
                 return None, "error", "tag_mismatch"
             stack.pop()
             continue
         nid += 1
         pid = stack[-1][0]
-        if t == _T_OPEN or t == _T_VOID:
-            nodes.append((nid, pid, ELEMENT, tg[i], None, None, attrs_col[i], t == _T_VOID))
-            if t == _T_OPEN:
-                stack.append((nid, tg[i]))
+        if code == _T_OPEN or code == _T_VOID:
+            nodes.append((nid, pid, ELEMENT, name, None, None, attrs, code == _T_VOID))
+            if code == _T_OPEN:
+                stack.append((nid, name))
         else:
             # Interpolation keeps the reference's [raw, inner] pair
-            content, inner = payloads[i] if t == _T_INTERP else (payloads[i], None)
-            nodes.append((nid, pid, _KIND_BY_TYPE[t], None, content, inner, None, None))
+            inner = INTERP_RE.match(payload).group(1) if code == _T_INTERP else None
+            nodes.append((nid, pid, _KIND_BY_TYPE[code], None, payload, inner, None, None))
     return nodes, "ok", None
 
 

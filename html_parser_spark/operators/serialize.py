@@ -11,8 +11,11 @@ Parses each text span and re-serializes it with the reference's exact quirks
 
 One Python crossing (operators/arrow_rows.map_rows: all four output columns
 are flat scalars, so one row tuple per document is all the kernel returns);
-error/divergent rows surface as status columns, html_out = NULL (kernel
-shares the pass-1 tokenizer with extraction).
+error/divergent rows surface as status columns, html_out = NULL. The kernel
+walks the extraction kernel's token records (``kernels.extract._tokens``:
+one TOKEN_RE drain, each distinct tag's attrs decoded once), listed in
+full before the walk so a tokenizer failure outranks an earlier tag
+mismatch.
 """
 
 from __future__ import annotations
@@ -23,15 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from ..core.oracle import STATUS_OK
-from ..kernels.extract import (
-    _Fail,
-    _T_END,
-    _T_OPEN,
-    _T_TEXT,
-    _T_VOID,
-    _tokenize_arrays,
-)
+from ..core.oracle import E_TAG_MISMATCH, STATUS_ERROR, STATUS_OK
+from ..kernels.extract import _Fail, _T_END, _T_OPEN, _T_TEXT, _T_VOID, _tokens
 from .arrow_rows import map_rows
 
 SERIALIZE_SCHEMA = StructType(
@@ -44,7 +40,7 @@ SERIALIZE_SCHEMA = StructType(
 )
 
 
-def _attrs_code(attrs: list[tuple[str, Optional[str]]]) -> str:
+def _attrs_code(attrs: tuple[tuple[str, Optional[str]], ...]) -> str:
     if not attrs:
         return ""
     return " " + " ".join(
@@ -55,26 +51,25 @@ def _attrs_code(attrs: list[tuple[str, Optional[str]]]) -> str:
 def serialize_one(html: str) -> tuple[Optional[str], str, Optional[str]]:
     """Parse + generate one string. Returns (html_out, status, error)."""
     try:
-        types, tags, payloads, attrs_col = _tokenize_arrays(html, want_attrs=True)
+        tokens = list(_tokens(html))  # a tokenizer failure outranks a mismatch
     except _Fail as f:
         return None, f.status, f.error
     parts: list[str] = []
     stack: list[str] = []
-    for i, t in enumerate(types):
-        if t == _T_TEXT:
-            parts.append(payloads[i])
-        elif t == _T_OPEN:
-            parts.append(f"<{tags[i]}{_attrs_code(attrs_col[i])}>")
-            stack.append(tags[i])
-        elif t == _T_VOID:
+    for code, name, payload, attrs in tokens:
+        if code == _T_TEXT:
+            parts.append(payload)
+        elif code == _T_OPEN:
+            parts.append(f"<{name}{_attrs_code(attrs)}>")
+            stack.append(name)
+        elif code == _T_VOID:
             # reference generate.ts:11 emits a paired close tag for unary too
-            parts.append(f"<{tags[i]}{_attrs_code(attrs_col[i])}></{tags[i]}>")
-        else:  # _T_END
-            if not stack or stack[-1] != tags[i]:
-                from ..core.oracle import E_TAG_MISMATCH, STATUS_ERROR
-
+            parts.append(f"<{name}{_attrs_code(attrs)}></{name}>")
+        elif code == _T_END:
+            if not stack or stack[-1] != name:
                 return None, STATUS_ERROR, E_TAG_MISMATCH
             parts.append(f"</{stack.pop()}>")
+        # else comment / CDATA / interpolation: generate emits ''
     # unclosed elements at EOF: reference keeps them and generate still emits
     # close tags during the recursive serialization (children end at EOF)
     while stack:

@@ -2,25 +2,30 @@
 oracle on strings built from pieces that the hypothesis soup alphabet
 rarely or never produces (JS-only whitespace, comment and end-tag edges,
 brace edges, doctype / processing-instruction openers, case-sensitive void
-tags). Runs every way of draining the scanner: the TOKEN_RE path's findall
-list used for ordinary documents and its token stream used above
-_FINDALL_MAX_CHARS, and the split path with its chunk shrunk to 1 and to 7
-chars (every cut lands just after a '>'). The corpus must send documents
-down both the split path and the TOKEN_RE fallback, each in volume.
+tags). Runs the scanner at its default split chunk and with the chunk
+shrunk to 1 and to 7 chars (every cut lands just after a '>'). The corpus
+must send documents down both the split path and the TOKEN_RE fallback,
+each in volume.
 
-Also pins the memory bound on a mega-doc, on both paths.
+Also pins the memory bound on a mega-doc, on both paths, the error
+precedence of every tokenizer consumer, and that TOKEN_RE has one drain.
 """
 
 from __future__ import annotations
 
+import ast
 import random
+import re
 import tracemalloc
+from pathlib import Path
 
 import pytest
 
 from html_parser_spark.core import oracle
 from html_parser_spark.kernels import extract as kext
+from html_parser_spark.kernels.heuristics import extract_main_spans
 from html_parser_spark.operators.parse import NODE_STRUCT, parse_one, parse_one_flat
+from html_parser_spark.operators.serialize import serialize_one
 
 EDGE_PIECES = (
     # JS \s whitespace, spelled out in core/jsre (Python's \s lacks U+FEFF)
@@ -66,11 +71,9 @@ def _flat_rows(html: str):
     return rows, status, error
 
 
-@pytest.fixture(params=["findall", "stream", "split1", "split7"])
+@pytest.fixture(params=["default", "split1", "split7"])
 def drain(request, monkeypatch):
-    if request.param == "stream":
-        monkeypatch.setattr(kext, "_FINDALL_MAX_CHARS", -1)
-    elif request.param.startswith("split"):
+    if request.param.startswith("split"):
         monkeypatch.setattr(kext, "_SPLIT_CHUNK_CHARS", int(request.param[5:]))
     return request.param
 
@@ -147,3 +150,48 @@ def _assert_bounded(html: str) -> None:
         tracemalloc.stop()
     assert status == "ok" and len(spans) > 30_000
     assert peak < 2 * retained, (peak, retained)
+
+
+@pytest.mark.parametrize(
+    "consumer",
+    [kext.extract_doc_spans, parse_one_flat, serialize_one, extract_main_spans],
+    ids=lambda f: f.__name__,
+)
+@pytest.mark.parametrize(
+    "html",
+    ["<div></p><![CDATA[x", "<div></p><br/ >x<b/>", "<a></b>x</a", "<p></i> a > b"],
+)
+def test_tokenizer_failure_outranks_earlier_mismatch(consumer, html):
+    """The reference tokenizes the whole source before it builds the tree,
+    so a tokenizer failure after a tag mismatch is the error every
+    consumer reports."""
+    want = oracle.parse_and_extract(html)
+    assert consumer(html)[1:] == (want.status, want.error)
+
+
+def test_one_token_re_drain():
+    """`TOKEN_RE.` (finditer, findall, match, ...) is used only inside
+    kernels/extract._tokens, and the package has no second drain or code
+    set."""
+
+    def uses(node):
+        return sum(
+            isinstance(n, ast.Attribute)
+            and isinstance(n.value, ast.Name)
+            and n.value.id == "TOKEN_RE"
+            for n in ast.walk(node)
+        )
+
+    total = inside = 0
+    for path in Path(kext.__file__).parents[1].rglob("*.py"):
+        src = path.read_text()
+        assert "_tokenize_arrays" not in src and not re.search(r"\b_P_[A-Z]", src), path
+        tree = ast.parse(src)
+        total += uses(tree)
+        if path.name == "extract.py":
+            inside += sum(
+                uses(fn)
+                for fn in ast.walk(tree)
+                if isinstance(fn, ast.FunctionDef) and fn.name == "_tokens"
+            )
+    assert total == inside == 1, (total, inside)

@@ -7,7 +7,8 @@ Two generators:
   - adversarial soup: strings over the tokenizer's alphabet of significant
     characters (hits every FSM branch: tags, comments, CDATA, interpolation,
     the '/'-second-char quirk, '>'-in-text divergence, EOF edges)
-  - structured documents: recursively generated nested/void/attributed HTML
+  - structured documents: recursively generated nested/void/attributed HTML,
+    with an arm that closes a different tag than it opened
 """
 
 from __future__ import annotations
@@ -40,7 +41,7 @@ texts = st.text(alphabet="abc 汉&;", min_size=0, max_size=12)
 def html_doc(draw, depth=0):
     parts = []
     for _ in range(draw(st.integers(0, 3))):
-        kind = draw(st.integers(0, 5))
+        kind = draw(st.integers(0, 6))
         if kind == 0:
             parts.append(draw(texts))
         elif kind == 1:
@@ -53,8 +54,11 @@ def html_doc(draw, depth=0):
             parts.append(f"<!-- {draw(texts)} -->")
         elif kind == 4:
             parts.append(f"<![CDATA[{draw(texts)}]]")
-        else:
+        elif kind == 5:
             parts.append("{{ expr }}")
+        else:  # a tag mismatch: close a different tag than the one opened
+            t, u = draw(st.lists(tag_names, min_size=2, max_size=2, unique=True))
+            parts.append(f"<{t}>{draw(texts)}</{u}>")
     return "".join(parts)
 
 
@@ -113,10 +117,11 @@ def test_parse_nodes_roundtrip_document_order(html):
 @settings(max_examples=300, deadline=None)
 @given(st.one_of(soup, html_doc()))
 def test_parse_flat_equals_dict_fuzz(html):
-    """parse_one_flat (the parse kernel's tuple form, running on the keep_all
-    array tokenizer) must agree with parse_one (oracle.tokenize dict form)
-    on ARBITRARY inputs — statuses, node rows, attrs, the [raw, inner]
-    interpolation pair, and None on failure."""
+    """parse_one_flat (the parse kernel's tuple form, running on the
+    kernel's token records) must agree with parse_one (oracle.tokenize
+    dict form) on ARBITRARY inputs — statuses, node rows, attrs, the
+    [raw, inner] interpolation pair, and None on failure (html_doc's
+    mismatch arm reaches the tag-mismatch exit)."""
     from tests.test_kernel_edges import _flat_rows
 
     assert _flat_rows(html) == parse_one(html), repr(html)
