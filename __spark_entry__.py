@@ -5,6 +5,8 @@ training-data-pipeline operators) as (spark, sf_dir) -> DataFrame. Each
 call opens a fresh cache scope (html_parser_spark/cache.py) that holds
 the query's persisted intermediates until the next entry is called, so
 run one query at a time and act on its result before calling the next;
+`plan_pins()` and `PYTHON_CROSSINGS` hold each query's physical-plan
+contract (checked by tests/test_gate_oracles.py on the unexecuted plan);
 `oracle_sql()` holds the DuckDB-runnable reconstruction of the SAME answer
 from first principles, so the Spark kernels are verified end-to-end:
 
@@ -40,9 +42,12 @@ from first principles, so the Spark kernels are verified end-to-end:
 from __future__ import annotations
 
 import functools
+import io
 import os
+import re
 import sys
 from collections.abc import Callable
+from contextlib import redirect_stdout
 
 # the package lives next to this file; make imports robust to the caller's cwd
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -4961,4 +4966,612 @@ def oracle_sql() -> dict[str, str]:
             "concat(CAST(user_id AS VARCHAR), '-', "
             "CAST(epoch_us(ts) // 60000000 AS VARCHAR))"
         ),
+    }
+
+
+# ---------------------------------------------------------------------------
+# plan_pins() — the physical-plan contract of each query, checked on the
+# unexecuted plan's explain('formatted') text (tests/test_gate_oracles.py;
+# tools/plan_audit.py writes the record to PLANS_AUDIT.md). Formatted explain
+# lists each node twice: once in the tree, once in the numbered details.
+# ---------------------------------------------------------------------------
+
+
+def explain_str(df: DataFrame) -> str:
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+# Python-crossing nodes per query (MapInArrow, ArrowEvalPython,
+# FlatMapGroupsInPandas, ...), counted on the numbered detail lines of the
+# formatted explain. A query not listed crosses zero times; adding or
+# removing a crossing edits this table in the same change.
+CROSSING_RE = re.compile(r"\(\d+\) \w*(?:Python|InPandas|InArrow)\w*\b")
+PYTHON_CROSSINGS = {
+    "multimodal_webp_meta": 2,
+    "multimodal_avif_meta": 2,
+    "multimodal_webp_frames": 2,
+    "pipeline_extract_bpe": 1,
+    "web_sitemap_frontier": 1,
+    "web_anchor_text": 1,
+    "source_warc_roundtrip": 2,
+    "transform_plugins": 2,
+    "parse_nodes": 1,
+    "parse_attrs": 1,
+    "extract_quirks": 1,
+    "extract_html_tables": 3,
+    "diff_transform": 1,
+    "diff_attrs": 1,
+    "multimodal_meta": 1,
+    "multimodal_image_decode": 2,
+    "extract_flagship": 1,
+    "extract_errors": 1,
+    "extract_metrics": 1,
+    "extract_main": 1,
+    "extract_main_boilerplate": 1,
+    "generate_roundtrip": 1,
+    "multimodal_exif_meta": 2,
+    "multimodal_id3_meta": 2,
+    "extract_links": 1,
+    "graph_domain_pagerank": 1,
+    "multimodal_png_decode": 2,
+    "multimodal_gif_decode": 2,
+    "multimodal_gif_frames": 2,
+    "multimodal_jpeg_decode": 2,
+    "multimodal_jpeg_progressive": 2,
+    "multimodal_audio_meta": 2,
+    "multimodal_video_frames": 2,
+    "multimodal_mp3_meta": 2,
+    "multimodal_mp4_meta": 2,
+    "layout_pdf_text": 2,
+    "pipeline_clean_corpus": 1,
+    "pipeline_training_batches": 1,
+}
+
+
+def plan_pins() -> dict[str, list[tuple[str, Callable[[str], bool]]]]:
+    """{query name: [(description, predicate over the explain text)]}."""
+    return {
+        "extract_flagship": [
+            ("scan reads only doc_id,text,source (column pruning through the wrap)",
+             lambda p: "ReadSchema: struct<doc_id:bigint,text:string,source:string>" in p),
+            ("no exchange before the kernel (unsalted path is shuffle-free)",
+             lambda p: "Exchange" not in p),
+            # formatted explain lists each node twice (tree + details)
+            ("single Python crossing (one MapInArrow, no pandas round-trip)",
+             lambda p: p.count("MapInArrow") <= 2 and "MapInPandas" not in p),
+        ],
+        "text_fingerprint": [
+            ("scan pruned to doc_id,text",
+             lambda p: "ReadSchema: struct<doc_id:bigint,text:string>" in p),
+            ("no shuffle (narrow projection)", lambda p: "Exchange" not in p),
+            ("whole-stage codegen", lambda p: "codegen id" in p),
+        ],
+        "similarity_topk": [
+            ("query side broadcast (corpus never shuffled for the join)",
+             lambda p: "BroadcastHashJoin" in p or "BroadcastNestedLoopJoin" in p),
+            ("pushed filter on vec_id for the query side",
+             lambda p: "PushedFilters: [IsNotNull(vec_id), LessThan(vec_id," in p),
+        ],
+        "dedup_simhash": [
+            ("shuffle-free: all 32 bit-sums fold in one narrow projection",
+             lambda p: "Exchange" not in p),
+            ("no row amplification (no Generate/explode in the plan)",
+             lambda p: "Generate" not in p),
+            ("scan pruned to doc_id,text",
+             lambda p: "ReadSchema: struct<doc_id:bigint,text:string>" in p),
+        ],
+        "extract_metrics": [
+            ("map-side partial aggregation before the exchange",
+             lambda p: "partial_count" in p or "Functions [partial_" in p),
+        ],
+        "text_tfidf": [
+            ("four shuffles total (tf agg, df agg, corpus count, ONE window "
+             "Exchange) — the doc_len and rank windows share theirs",
+             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 4
+             and len(re.findall(r"\(\d+\) Window\b", p)) == 2),
+            ("df and corpus-count join sides broadcast",
+             lambda p: len(re.findall(r"\(\d+\) BroadcastExchange\b", p)) == 2),
+            ("map-side partial aggregation for tf",
+             lambda p: "partial_count" in p),
+        ],
+        "dedup_minhash_lsh": [
+            ("TWO shuffles total (bucket groupBy + pair distinct): "
+             "signatures and sizes are narrow array projections, never an "
+             "explode + groupBy",
+             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 2),
+            ("verification is candidate-bounded: broadcast semi-join shrink "
+             "+ broadcast array attach (the corpus-wide shingle set is "
+             "never shuffled or joined wide)",
+             lambda p: p.count("BroadcastHashJoin") >= 2 and "LeftSemi" in p),
+            ("one shingle pass over the corpus: the array table is computed "
+             "once per union leg and cached (no expression re-inlining)",
+             lambda p: p.count("conv(substr(md5") <= 3),
+            ("candidates from one groupBy on (band,key), not a bands "
+             "self-join (no join of the band table with itself)",
+             lambda p: "collect_list" in p),
+            ("small candidate set: AQE's join selection broadcasts both "
+             "attach joins (no hint; both are BroadcastHashJoin, no "
+             "SortMergeJoin)",
+             lambda p: p.count("BroadcastHashJoin") >= 2
+             and "SortMergeJoin" not in p),
+            ("candidate pairs and candidate arrays read from cache in the "
+             "verify plan (no recompute per consumer branch)",
+             lambda p: "InMemoryTableScan" in p),
+            ("shingle expression still never re-inlined per consumer "
+             "branch (md5 passes bounded by the 3 union legs)",
+             lambda p: p.count("conv(substr(md5") <= 3),
+        ],
+        "decontaminate_overlap": [
+            ("bench shingles broadcast into the overlap probe; the corpus "
+             "is never shuffled wide (two Exchanges: overlap groupBy + "
+             "bench distinct)",
+             lambda p: p.count("BroadcastHashJoin") >= 2
+             and len(re.findall(r"\(\d+\) Exchange\b", p)) <= 2),
+            ("map-side partial overlap counts", lambda p: "partial_count" in p),
+            ("the all-docs left side prunes to doc_id only",
+             lambda p: "ReadSchema: struct<doc_id:bigint>" in p),
+        ],
+        "pipeline_clean_corpus": [
+            ("one wide op total: the dedup groupBy's Exchange "
+             "(extract -> reassemble -> quality gate are all narrow)",
+             lambda p: len(re.findall(r"\(\d+\) Exchange", p)) == 1),
+            ("map-side partial aggregation before the exchange",
+             lambda p: "partial_" in p),
+            ("one Python crossing (MapInArrow); quality gate fused JVM-side",
+             lambda p: p.count("MapInArrow") <= 2 and "MapInPandas" not in p),
+        ],
+        "dedup_chunks": [
+            ("two exchanges total: the first-occurrence window on chunk "
+             "and the per-doc reassembly groupBy",
+             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 2),
+            ("map-side partial aggregation for the reassembly",
+             lambda p: "partial_collect_list" in p),
+            ("chunking is one regex Generate, no indexing lambda over a "
+             "split array (the per-element re-evaluation trap)",
+             lambda p: "posexplode(regexp_extract_all" in p
+             and "transform(sequence" not in p),
+        ],
+        "dedup_repeated_spans": [
+            ("two WIDE exchanges: the corpus-wide gram-count window on the "
+             "60-bit hash and the per-doc islands merge on doc_id (the "
+             "final groupBy reuses the doc_id partitioning); plus only the "
+             "round-robin input spread",
+             lambda p: p.count("hashpartitioning") == 2
+             and len(re.findall(r"\(\d+\) Exchange\b", p)) == 3),
+            ("no count-table join-back: the repeat filter is a window "
+             "count, not a join",
+             lambda p: "Join" not in p),
+            ("gram strings never cross the wide stage: the shuffle keys "
+             "are bigint hashes (gram dropped before the first exchange)",
+             lambda p: "hashpartitioning(g#" in p),
+            ("grams built by zip_with cascade, no indexing lambda over a "
+             "split array (the per-element re-evaluation trap)",
+             lambda p: "transform(sequence" not in p),
+        ],
+        "tpch_top_orders": [
+            ("dimension sides broadcast; no cartesian/nested-loop join",
+             lambda p: len(re.findall(r"BroadcastHashJoin", p)) >= 2
+             and "CartesianProduct" not in p
+             and "BroadcastNestedLoopJoin" not in p),
+            ("at most one wide exchange beyond the joins (the revenue "
+             "groupBy; at bench sf even orders broadcasts)",
+             lambda p: len(re.findall(r"Exchange hashpartitioning", p)) <= 2),
+            ("top-10 runs as TakeOrdered, never a full sort",
+             lambda p: "TakeOrderedAndProject" in p),
+            ("revenue aggregation is map-side partial",
+             lambda p: "partial_sum" in p),
+            ("date filters push to the scans",
+             lambda p: "PushedFilters: [IsNotNull(l_shipdate)" in p
+             or "GreaterThan(l_shipdate" in p),
+        ],
+        "events_mad_outliers": [
+            ("ONE exchange on event_type shared by both rank passes, both "
+             "window MAX attaches, and the final groupBy — no join-back",
+             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 1
+             and "Join" not in p),
+            ("final aggregate is map-side partial",
+             lambda p: "partial_max" in p or "partial_sum" in p),
+        ],
+        "tpch_late_orders": [
+            ("existence probe plans as a SEMI join (LeftSemi), never "
+             "join+distinct",
+             lambda p: "LeftSemi" in p),
+            ("no cartesian: the date inequality rides the equi-join",
+             lambda p: "CartesianProduct" not in p),
+            ("priority counts are map-side partial",
+             lambda p: "partial_count" in p),
+        ],
+        "tpch_inactive_customers": [
+            ("absence probe plans as an ANTI join (LeftAnti), never "
+             "outer-join + null-filter",
+             lambda p: "LeftAnti" in p),
+            ("no cartesian anywhere", lambda p: "CartesianProduct" not in p),
+        ],
+        "tpch_regional_revenue": [
+            ("all five dimension chains broadcast (region->nation->supplier "
+             "and customer): the only wide work is lineitem x orders",
+             lambda p: len(re.findall(r"BroadcastHashJoin", p)) >= 4
+             and "CartesianProduct" not in p),
+            ("at most one wide exchange beyond the joins",
+             lambda p: len(re.findall(r"Exchange hashpartitioning", p)) <= 2),
+            ("revenue aggregation is map-side partial",
+             lambda p: "partial_sum" in p),
+        ],
+        "text_phrase_search": [
+            ("zero shuffles: pure narrow projection, adjacency is doc-local "
+             "shift-and-intersect algebra",
+             lambda p: "Exchange" not in p),
+            ("scan pruned to doc_id,text",
+             lambda p: "ReadSchema: struct<doc_id:bigint,text:string>" in p),
+        ],
+        "corpus_pack_sequences": [
+            ("ONE exchange on source: the cumulative window and the bin "
+             "arithmetic are in-partition",
+             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 1),
+            ("token counting is a narrow aggregate() fold, no explode",
+             lambda p: "Generate" not in p),
+        ],
+        "pipeline_training_batches": [
+            ("one Python crossing for the whole composed pipeline",
+             lambda p: len(re.findall(r"\(\d+\) (MapInArrow|MapInPandas)\b", p)) == 1),
+            ("two wide stages: the md5 survivor window and the shard pack "
+             "window (no groupBy+join-back for survivor selection)",
+             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 2
+             and "Join" not in p),
+        ],
+        "events_funnel": [
+            ("ONE exchange on user_id: the three chained stage-min windows "
+             "and the final groupBy all share it — no join chain",
+             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 1
+             and "Join" not in p),
+        ],
+        "events_retention_cohorts": [
+            ("two exchanges: the per-user cohort window and the "
+             "(cohort, offset) distinct-count groupBy",
+             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 2),
+        ],
+        "events_scd2_history": [
+            ("ONE exchange on user_id for the lead window; no join",
+             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 1
+             and "Join" not in p),
+            ("scan pruned to the four needed columns",
+             lambda p: "ReadSchema: struct<event_id:bigint,ts:timestamp" in p),
+        ],
+        "events_json_props": [
+            ("JSON parse happens in the scan projection; stats are "
+             "map-side partial",
+             lambda p: "from_json" in p and "partial_count" in p),
+            ("scan pruned to event_type,props",
+             lambda p: "ReadSchema: struct<event_type:string,props:string>"
+             in p),
+        ],
+        "events_gapfill": [
+            ("join-free with ONE exchange: the user_id repartition is "
+             "reused by the hourly agg and the per-user pack",
+             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 1
+             and "Join" not in p),
+            ("both aggregations are map-side partial",
+             lambda p: "partial_count" in p),
+            ("the fill is a narrow zip_with fold, no indexing lambda over "
+             "a built array",
+             lambda p: "zip_with" in p.lower() or "ZipWith" in p),
+        ],
+        "source_warc_roundtrip": [
+            ("one exchange total: the pack-into-files groupBy (the record "
+             "splitter adds no shuffle)",
+             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 1),
+            ("record packing is map-side partial (collect_list partials "
+             "before the exchange)",
+             lambda p: "partial_collect_list" in p),
+            ("exactly two Python crossings: the gzip writer and the record "
+             "scanner (one ArrowEvalPython + one MapInArrow, no MapInPandas)",
+             lambda p: len(re.findall(r"\(\d+\) ArrowEvalPython\b", p)) == 1
+             and len(re.findall(r"\(\d+\) MapInArrow\b", p)) == 1
+             and "MapInPandas" not in p),
+        ],
+        "text_bm25_search": [
+            ("zero wide shuffles: no hash-partition Exchange anywhere (the "
+             "only Exchange is the SinglePartition reduce of the 1-row "
+             "totals aggregate)",
+             lambda p: "Exchange hashpartitioning" not in p),
+            ("totals attach by broadcast, corpus never shuffles for the join",
+             lambda p: "BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p),
+            ("top-k runs as TakeOrdered, never a full sort",
+             lambda p: "TakeOrderedAndProject" in p),
+            ("totals pass reads only the text column",
+             lambda p: "ReadSchema: struct<text:string>" in p),
+        ],
+        "text_repetition": [
+            ("shuffle-free: the top-bigram fold is a narrow projection",
+             lambda p: "Exchange" not in p),
+            ("no row amplification (no Generate/explode)",
+             lambda p: "Generate" not in p),
+            ("scan pruned to doc_id,text",
+             lambda p: "ReadSchema: struct<doc_id:bigint,text:string>" in p),
+        ],
+        "corpus_filter_funnel": [
+            ("TWO Exchanges total: the md5 keep-window partition + the "
+             "funnel groupBy(source); all four gate signals are one "
+             "narrow projection (no Generate/explode, no join)",
+             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 2
+             and "Generate" not in p and "Join" not in p),
+            ("funnel aggregate is map-side combinable (partial "
+             "HashAggregate below its Exchange)",
+             lambda p: re.search(
+                 r"HashAggregate[\s\S]*Exchange[\s\S]*HashAggregate"
+                 r"[\s\S]*Window", p) is not None),
+            ("scan pruned to doc_id,text,source",
+             lambda p: "ReadSchema: struct<doc_id:bigint,text:string,"
+             "source:string>" in p),
+        ],
+        "text_pii_redact": [
+            ("shuffle-free narrow projection (regex scrub is JVM-side)",
+             lambda p: "Exchange" not in p),
+            ("scan pruned to doc_id,text",
+             lambda p: "ReadSchema: struct<doc_id:bigint,text:string>" in p),
+        ],
+        "events_hourly": [
+            ("map-side partial aggregation", lambda p: "partial_" in p),
+            ("scan pruned to event_type,ts,value",
+             lambda p: "ReadSchema: struct<ts:timestamp_ntz,event_type:string,value:double>" in p),
+        ],
+        "events_sessionize": [
+            ("single exchange: lag + running-sum windows and the session "
+             "groupBy all reuse the user_id hash partitioning",
+             lambda p: len(re.findall(r"\(\d+\) Exchange", p)) == 1
+             and "hashpartitioning(user_id" in p),
+            ("scan pruned to the four needed columns",
+             lambda p: "ReadSchema: struct<event_id:bigint,ts:timestamp_ntz,user_id:bigint,value:double>" in p),
+        ],
+        "corpus_mix": [
+            ("rate table re-joins via broadcast (heavy side never shuffles "
+             "for the join)", lambda p: "BroadcastHashJoin" in p),
+            ("no window / no global sort (hash-threshold mixing, not "
+             "rank-and-cut)", lambda p: "Window" not in p
+             and "Sort [" not in p),
+            ("per-source totals are map-side partial aggregation",
+             lambda p: "partial_sum" in p),
+        ],
+        "events_asof_attribution": [
+            ("single exchange: the union-window as-of plan shuffles once on "
+             "user_id (no join, no pair blowup)",
+             lambda p: len(re.findall(r"\(\d+\) Exchange", p)) == 1
+             and "hashpartitioning(user_id" in p),
+        ],
+        "events_error_burst": [
+            ("banded range join is a real equi-join, never a nested-loop/"
+             "cartesian fallback",
+             lambda p: "NestedLoop" not in p and "CartesianProduct" not in p
+             and ("SortMergeJoin" in p or "ShuffledHashJoin" in p
+                  or "BroadcastHashJoin" in p)),
+            ("bounded fan-out: the only row amplification is the 2-band "
+             "Generate on the right side",
+             lambda p: p.count("Generate explode") <= 2),
+        ],
+        "sketch_hll_users": [
+            ("register fold is map-side partial aggregation (executors ship "
+             "<= groups x 256 rows)", lambda p: "partial_max" in p),
+            ("scan pruned to event_type,user_id",
+             lambda p: "ReadSchema: struct<user_id:bigint,event_type:string>" in p),
+        ],
+        "sketch_countmin_words": [
+            ("cell counts are map-side partial aggregation",
+             lambda p: "partial_count" in p or "partial_" in p),
+            ("the probe joins the d*w-cell sketch via broadcast",
+             lambda p: "BroadcastHashJoin" in p),
+        ],
+        "sketch_bloom_decontaminate": [
+            ("the 16-word filter reaches the probe side via broadcast "
+             "(probe side never shuffles for the membership test)",
+             lambda p: "BroadcastHashJoin" in p),
+            ("bit fold is map-side partial aggregation",
+             lambda p: "partial_bit_or" in p),
+        ],
+        "kmeans_embeddings": [
+            ("centroids broadcast to the assignment step (corpus never "
+             "shuffles for the distance join; BNLJ build side is k rows)",
+             lambda p: re.search(r"BroadcastNestedLoopJoin \w+ BuildRight", p)
+             is not None),
+            ("per-dim centroid sums are map-side partial aggregation",
+             lambda p: "partial_sum" in p),
+        ],
+        "events_quantiles": [
+            ("rank window, count window, and final groupBy all share ONE "
+             "event_type exchange",
+             lambda p: len(re.findall(r"\(\d+\) Exchange", p)) == 1
+             and "hashpartitioning(event_type" in p),
+        ],
+        "similarity_quantized_topk": [
+            ("quantized query side broadcast (corpus codes scanned once, "
+             "never shuffled for the join)",
+             lambda p: "BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p),
+        ],
+        "dedup_fuzzy_join": [
+            ("cross-corpus candidates come from ONE (band,key) groupBy — "
+             "no bands self-join, no cartesian",
+             lambda p: "CartesianProduct" not in p and "NestedLoop" not in p),
+            ("verify sides attach via broadcast (shingle arrays never "
+             "shuffle wide)", lambda p: "BroadcastHashJoin" in p),
+        ],
+        "events_hist_quantiles": [
+            ("bin counts are map-side partial aggregation (<= 1024 cells "
+             "per group cross the wire)", lambda p: "partial_count" in p),
+            ("scan pruned to event_type,value",
+             lambda p: "ReadSchema: struct<event_type:string,value:double>" in p),
+        ],
+        "graph_pagerank": [
+            ("out-degree table joins broadcast (edge table never shuffles "
+             "for the degree attach)", lambda p: "BroadcastHashJoin" in p),
+            ("per-round contribution sums are map-side partial aggregation",
+             lambda p: "partial_sum" in p),
+        ],
+        "url_canonical_dedup": [
+            ("ONE Exchange total: group size and representative attach as "
+             "window aggregates over the same url_canon partitioning, "
+             "never a groupBy + join-back",
+             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 1),
+            ("scan pruned to doc_id,text",
+             lambda p: "ReadSchema: struct<doc_id:bigint,text:string>" in p),
+        ],
+        "text_langid_multiscript": [
+            ("pure narrow projection: ZERO Exchanges (synth + classify are "
+             "row-local expressions)",
+             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 0),
+            ("no Python crossing: classification is JVM char-range algebra "
+             "(no MapInArrow/MapInPandas node)",
+             lambda p: "MapInArrow" not in p and "MapInPandas" not in p),
+        ],
+        "multimodal_exif_meta": [
+            ("exactly one round-robin spread Exchange feeds the Python "
+             "kernels (single-split serialization defense), nothing wide",
+             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 1
+             and "roundrobin" in p.lower()),
+        ],
+        "text_bpe_tokens": [
+            ("corpus side is ROW-LOCAL (bloom-probe shape): the only "
+             "Exchange is the SinglePartition vocab-map fold; per-doc "
+             "token counts come from one broadcast map row, the corpus "
+             "never shuffles",
+             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 1
+             and "BroadcastExchange" in p
+             and "BroadcastNestedLoopJoin Cross" in p),
+            ("scan pruned to doc_id,text",
+             lambda p: "ReadSchema: struct<doc_id:bigint,text:string>" in p),
+        ],
+        "multimodal_webp_meta": [
+            ("exactly one round-robin spread Exchange feeds the Python "
+             "kernels (single-split serialization defense), nothing wide",
+             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 1
+             and "roundrobin" in p.lower()),
+        ],
+        "dedup_semantic": [
+            ("cluster-BLOCKED pair join: an equi-join keyed on cluster id, "
+             "never a cartesian over the corpus (quadratic only within a "
+             "cluster — the SemDeDup contract; k is the scale knob)",
+             lambda p: "CartesianProduct" not in p
+             and "SortMergeJoin" in p),
+            ("assignment+embedding base is cached once and read by the "
+             "self-join's both sides plus the final keep projection",
+             lambda p: "InMemoryTableScan" in p),
+            ("kmeans inside keeps its row-local shape: centroids broadcast, "
+             "corpus never shuffles for the distance step",
+             lambda p: re.search(r"BroadcastNestedLoopJoin \w+ BuildRight", p)
+             is not None),
+        ],
+        "sample_importance": [
+            ("TWO Exchanges only: the map-side-combinable bucket-count agg "
+             "and the SinglePartition weight-map fold (<= 256 rows); the "
+             "scoring pass is row-local over ONE broadcast map row and the "
+             "top-k is a TakeOrdered, never a global sort",
+             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 2
+             and "BroadcastExchange" in p
+             and "TakeOrderedAndProject" in p),
+            ("scans pruned: the count pass reads text+source only",
+             lambda p: "ReadSchema: struct<text:string,source:string>" in p),
+        ],
+        "multimodal_avif_meta": [
+            ("exactly one round-robin spread Exchange feeds the Python "
+             "kernels (single-split serialization defense), nothing wide",
+             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 1
+             and "roundrobin" in p.lower()),
+        ],
+        "web_robots_decisions": [
+            ("URL corpus never shuffles: the ONLY Exchange is the tiny "
+             "host distinct (8 rows) feeding the rule synth; the per-host "
+             "rule arrays broadcast and the RFC 9309 longest-match is a "
+             "row-local filter/array_max inside the scan stage",
+             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 1
+             and "BroadcastExchange" in p
+             and "BroadcastHashJoin LeftOuter BuildRight" in p),
+            ("scan pruned to doc_id,text",
+             lambda p: "ReadSchema: struct<doc_id:bigint,text:string>" in p),
+        ],
+        "web_crawl_schedule": [
+            ("TWO Exchanges: the tiny host distinct + ONE URL-side shuffle "
+             "(the per-host FIFO window); the robots decision stays "
+             "broadcast-row-local and the allowed=1 filter sits BELOW the "
+             "window Exchange, shrinking the only wide shuffle",
+             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 2
+             and "BroadcastExchange" in p
+             and re.search(r"Window[\s\S]*Exchange[\s\S]*Filter[\s\S]*"
+                           r"BroadcastHashJoin", p) is not None),
+        ],
+        "web_sitemap_frontier": [
+            ("the only two Exchanges are the tiny host-distinct "
+             "aggregations (one per branch: sitemap synth + robots synth), "
+             "each map-side partial — the URL corpus never shuffles",
+             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 2
+             and len(re.findall(
+                 r"HashAggregate[\s\S]{0,400}?Exchange[\s\S]{0,400}?"
+                 r"HashAggregate", p)) >= 2),
+            ("sitemap XML goes through the REAL parse kernel (MapInArrow), "
+             "and the robots rule arrays attach by broadcast",
+             lambda p: "MapInArrow" in p
+             and "BroadcastHashJoin LeftOuter BuildRight" in p),
+            ("the posexplode Generate is the output stage, above the "
+             "kernel, not a shuffled intermediate",
+             lambda p: re.search(r"Generate[\s\S]*MapInArrow", p)
+             is not None),
+        ],
+        "extract_links": [
+            ("ONE Exchange total (the link_idx window); anchor/href/text "
+             "assembly joins all broadcast",
+             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 1
+             and p.count("BroadcastHashJoin") >= 2),
+            ("parse kernel behind a cache barrier (node AND attr consumers "
+             "read the same materialized parse, not two kernel runs)",
+             lambda p: "InMemoryTableScan" in p),
+        ],
+        "graph_domain_pagerank": [
+            ("per-round contribution sums are map-side partial aggregation "
+             "and the degree attach broadcasts (edge table never shuffles "
+             "for it)",
+             lambda p: "partial_sum" in p and "BroadcastHashJoin" in p),
+            ("parse kernel behind the cache barrier (every per-round edge "
+             "reference reads the materialized parse; ONE MapInArrow in "
+             "the whole composed plan, not one per lineage embed)",
+             lambda p: "InMemoryTableScan" in p
+             and len(re.findall(r"\(\d+\) MapInArrow", p)) <= 1),
+        ],
+        "graph_hits": [
+            ("per-round contribution sums are map-side partial aggregation",
+             lambda p: "partial_sum" in p),
+            ("L-inf norm scalars attach as broadcast one-row cross joins, "
+             "never a single-partition window",
+             lambda p: "BroadcastNestedLoopJoin" in p
+             and "SinglePartition" not in p.split("AdaptiveSparkPlan")[0]),
+        ],
+        "web_anchor_text": [
+            ("two Exchanges, both map-side combined: (target, anchor) pair "
+             "combine before the first shuffle (hot-anchor skew guard), "
+             "then only the combined pair table shuffles per target",
+             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 2
+             and "partial_count" in p),
+            ("modal-anchor min(struct) plans as a partial+final "
+             "SortAggregate pair (still map-side combined)",
+             lambda p: len(re.findall(r"\(\d+\) SortAggregate", p)) == 2),
+            ("parse kernel behind the cache barrier (links keepalive holds "
+             "the persist across the aggregation)",
+             lambda p: "InMemoryTableScan" in p
+             and len(re.findall(r"\(\d+\) MapInArrow", p)) <= 1),
+        ],
+        "web_crawl_delta": [
+            ("three Exchanges: the two full-outer SMJ sides plus the tiny "
+             "(source, status) rollup — nothing else shuffles",
+             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 3
+             and "SortMergeJoin" in p and "FullOuter" in p),
+            ("text never crosses the shuffle: both sides reduce to the "
+             "md5/length digest projection scan-side (h_a/h_b/len_a/len_b "
+             "are the join payload)",
+             lambda p: "md5" in p and "h_a" in p and "h_b" in p
+             and "len_a" in p and "len_b" in p),
+            ("scan pruned to (doc_id, text, source)",
+             lambda p: "ReadSchema: struct<doc_id:bigint,text:string,"
+             "source:string>" in p),
+            ("rollup is map-side combined",
+             lambda p: "partial_count" in p or "partial_sum" in p),
+        ],
     }

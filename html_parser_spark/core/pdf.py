@@ -41,7 +41,6 @@ _KIDS_RE = re.compile(rb"/Kids\s*\[(.*?)\]", re.DOTALL)
 _CONTENTS_RE = re.compile(rb"/Contents\s*(?:(\d+)\s+\d+\s+R|\[(.*?)\])", re.DOTALL)
 _TYPE_RE = re.compile(rb"/Type\s*/(\w+)")
 _FILTER_RE = re.compile(rb"/Filter\s*/(\w+)")
-_DO_RE = re.compile(rb"/(\w+)\s+Do\b")
 
 
 class _Obj:

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import cache
+from .similarity import _DOT, _NORM2
 
 K_DEFAULT = 8
 SCALE = 1000.0
@@ -229,8 +230,6 @@ def semantic_dedup(
     uses the same regime; AQE skew-join splits any runaway cluster). The
     corpus-side join of assignments back to embeddings is one
     co-partitioned shuffle; everything downstream touches only pairs."""
-    from .dedup import _DOT, _NORM2
-
     assigned = kmeans_assign(embs, k, n_iter, dim)
     # persisted: the pair step reads base twice (self-join) and the final
     # keep projection a third time; released, with kmeans_assign's caches,

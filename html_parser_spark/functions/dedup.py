@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .. import cache
+from .similarity import _DOT, _NORM2
 from .text import WORD_HASH
 
 
@@ -513,16 +514,6 @@ def plant_embedding_dups(embs: DataFrame) -> DataFrame:
             (F.col("vec_id") + EMB_OFFSET).alias("vec_id"), "embedding", "label"
         )
     )
-
-
-_DOT = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)), "
-    "cast(0.0 as double), (acc, v) -> acc + v)"
-)
-_NORM2 = (
-    "aggregate(transform({a}, x -> cast(x as double) * cast(x as double)), "
-    "cast(0.0 as double), (acc, v) -> acc + v)"
-)
 
 
 def sign_bucket_expr(col: str, bits: int = 16) -> str:

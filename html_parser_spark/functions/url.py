@@ -29,8 +29,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-URL_TLDS = ("com", "org", "net", "io")
-
 
 def synth_urls(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, url): deterministic synthetic URL per document from the

@@ -1,8 +1,9 @@
 """In-suite version of the driver's correctness gate: every
 __spark_entry__.queries() entry vs its oracle_sql() via DuckDB at sf0.001 —
 row count, column names, order-insensitive exact values (doubles by repr,
-i.e. bit-exact). Keeps `python -m pytest -x -q` self-contained as the full
-correctness gate between driver rounds."""
+i.e. bit-exact). Each frame's unexecuted plan must first hold the query's
+plan_pins() and its declared count of Python crossings. Keeps
+`python -m pytest -x -q` self-contained as the full correctness gate."""
 
 from __future__ import annotations
 
@@ -47,9 +48,24 @@ def _multiset(cols, rows):
     return sorted("\1".join(_norm(r[i]) for i in idx) for r in rows)
 
 
+PINS = entrymod.plan_pins()
+
+
+def test_plan_tables_name_registry_queries():
+    names = set(entrymod.queries())
+    assert set(PINS) <= names
+    assert set(entrymod.PYTHON_CROSSINGS) <= names
+
+
 @pytest.mark.parametrize("name", sorted(entrymod.queries().keys()))
 def test_query_matches_oracle(spark, con, name):
     df = entrymod.queries()[name](spark, SF_DIR)
+    # the pins were written against the unexecuted (initial AQE) plan
+    plan = entrymod.explain_str(df)
+    for desc, pin in PINS.get(name, []):
+        assert pin(plan), desc
+    crossings = entrymod.CROSSING_RE.findall(plan)
+    assert len(crossings) == entrymod.PYTHON_CROSSINGS.get(name, 0), crossings
     rows = [tuple(r) for r in df.collect()]
     oracles = entrymod.oracle_sql()
     if name not in oracles:

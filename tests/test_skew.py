@@ -4,12 +4,18 @@ uniformly under salted repartitioning — never concentrate in one task."""
 
 from __future__ import annotations
 
+import os
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
+from __spark_entry__ import explain_str
 from html_parser_spark.core import oracle
 from html_parser_spark.operators.extract import INPUT_SCHEMA, extract_spans
 from html_parser_spark.sources.fixtures import synth_docs
+from html_parser_spark.sources.interleave import interleaved_from_documents
+from tests.test_gate_oracles import SF_DIR
 
 
 @pytest.fixture(scope="module")
@@ -55,6 +61,21 @@ def test_salting_spreads_docs_uniformly(skewed):
     counts = [r["count"] for r in dist]
     assert len(counts) >= 12  # salting actually fanned out of the single slab
     assert max(counts) < 2.5 * (sum(counts) / len(counts))
+
+
+@pytest.mark.skipif(
+    not os.path.exists(f"{SF_DIR}/documents.parquet"), reason="testdata unavailable"
+)
+def test_salted_plan_shuffles_once(spark):
+    """The salt is the extract path's one opt-in shuffle (the unsalted
+    extract_flagship plan pins zero Exchanges)."""
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    plan = explain_str(
+        extract_spans(interleaved_from_documents(docs), salt_partitions=64)
+    )
+    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1 and "xxhash64" in plan, (
+        "exactly one exchange: the salt repartition"
+    )
 
 
 def test_bytes_salting_isolates_mega_doc(spark):
