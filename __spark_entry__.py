@@ -4989,6 +4989,24 @@ def explain_str(df: DataFrame) -> str:
 # formatted explain. A query not listed crosses zero times; adding or
 # removing a crossing edits this table in the same change.
 CROSSING_RE = re.compile(r"\(\d+\) \w*(?:Python|InPandas|InArrow)\w*\b")
+
+
+def detail_blocks(plan: str, node: str) -> list[str]:
+    """The numbered detail block of each `node` operator in a formatted
+    plan: its '(N) node' line and the lines up to the next blank one.
+    Only these blocks print a node's arguments (an Exchange's
+    partitioning, a Generate's generator); tree lines print the bare name."""
+    return re.findall(
+        rf"^\(\d+\) {node}(?: \[codegen id : \d+\])?\n(?:.+\n?)*", plan, re.M
+    )
+
+
+def _hash_exchanges(plan: str) -> int:
+    return sum(
+        "Arguments: hashpartitioning(" in b for b in detail_blocks(plan, "Exchange")
+    )
+
+
 PYTHON_CROSSINGS = {
     "multimodal_webp_meta": 2,
     "multimodal_avif_meta": 2,
@@ -5158,7 +5176,7 @@ def plan_pins() -> dict[str, list[tuple[str, Callable[[str], bool]]]]:
              and "BroadcastNestedLoopJoin" not in p),
             ("at most one wide exchange beyond the joins (the revenue "
              "groupBy; at bench sf even orders broadcasts)",
-             lambda p: len(re.findall(r"Exchange hashpartitioning", p)) <= 2),
+             lambda p: _hash_exchanges(p) <= 2),
             ("top-10 runs as TakeOrdered, never a full sort",
              lambda p: "TakeOrderedAndProject" in p),
             ("revenue aggregation is map-side partial",
@@ -5196,7 +5214,7 @@ def plan_pins() -> dict[str, list[tuple[str, Callable[[str], bool]]]]:
              lambda p: len(re.findall(r"BroadcastHashJoin", p)) >= 4
              and "CartesianProduct" not in p),
             ("at most one wide exchange beyond the joins",
-             lambda p: len(re.findall(r"Exchange hashpartitioning", p)) <= 2),
+             lambda p: _hash_exchanges(p) <= 2),
             ("revenue aggregation is map-side partial",
              lambda p: "partial_sum" in p),
         ],
@@ -5276,7 +5294,7 @@ def plan_pins() -> dict[str, list[tuple[str, Callable[[str], bool]]]]:
             ("zero wide shuffles: no hash-partition Exchange anywhere (the "
              "only Exchange is the SinglePartition reduce of the 1-row "
              "totals aggregate)",
-             lambda p: "Exchange hashpartitioning" not in p),
+             lambda p: _hash_exchanges(p) == 0),
             ("totals attach by broadcast, corpus never shuffles for the join",
              lambda p: "BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p),
             ("top-k runs as TakeOrdered, never a full sort",
@@ -5331,7 +5349,7 @@ def plan_pins() -> dict[str, list[tuple[str, Callable[[str], bool]]]]:
              "for the join)", lambda p: "BroadcastHashJoin" in p),
             ("no window / no global sort (hash-threshold mixing, not "
              "rank-and-cut)", lambda p: "Window" not in p
-             and "Sort [" not in p),
+             and not detail_blocks(p, "Sort")),
             ("per-source totals are map-side partial aggregation",
              lambda p: "partial_sum" in p),
         ],
@@ -5349,7 +5367,8 @@ def plan_pins() -> dict[str, list[tuple[str, Callable[[str], bool]]]]:
                   or "BroadcastHashJoin" in p)),
             ("bounded fan-out: the only row amplification is the 2-band "
              "Generate on the right side",
-             lambda p: p.count("Generate explode") <= 2),
+             lambda p: sum("Arguments: explode(" in b
+                           for b in detail_blocks(p, "Generate")) <= 2),
         ],
         "sketch_hll_users": [
             ("register fold is map-side partial aggregation (executors ship "

@@ -340,29 +340,31 @@ def synth_mp3(
 # on object storage that is a few range-reads regardless of file size.
 
 
-def _walk_boxes(data: bytes, start: int, end: int):
+def walk_boxes(data: bytes, start: int, end: int):
     """Yield (fourcc, body_start, body_end) for each box in [start, end);
-    handles 64-bit largesize and size=0 (to end). Stops on malformed."""
+    handles 64-bit largesize and size=0 (to end). Degrades, never raises:
+    a truncated box, or one whose size does not cover its own header,
+    ends the walk."""
     pos = start
     while pos + 8 <= end:
-        size = int.from_bytes(data[pos : pos + 4], "big")
+        (size,) = struct.unpack_from(">I", data, pos)
         four = data[pos + 4 : pos + 8]
         body = pos + 8
         if size == 1:
             if pos + 16 > end:
                 return
-            size = int.from_bytes(data[pos + 8 : pos + 16], "big")
+            (size,) = struct.unpack_from(">Q", data, pos + 8)
             body = pos + 16
         elif size == 0:
             size = end - pos
-        if size < 8 or pos + size > end:
+        if size < body - pos or pos + size > end:
             return
         yield four, body, pos + size
         pos += size
 
 
-def _find_box(data: bytes, start: int, end: int, four: bytes):
-    for f, b, e in _walk_boxes(data, start, end):
+def find_box(data: bytes, start: int, end: int, four: bytes):
+    for f, b, e in walk_boxes(data, start, end):
         if f == four:
             return b, e
     return None
@@ -377,13 +379,13 @@ def mp4_info(data: bytes) -> Optional[dict]:
         if len(data) < 16:
             return None
         brand = ""
-        ft = _find_box(data, 0, len(data), b"ftyp")
+        ft = find_box(data, 0, len(data), b"ftyp")
         if ft is not None and ft[1] - ft[0] >= 4:
             brand = data[ft[0] : ft[0] + 4].decode("latin-1").strip()
-        mv = _find_box(data, 0, len(data), b"moov")
+        mv = find_box(data, 0, len(data), b"moov")
         if mv is None:
             return None
-        mh = _find_box(data, mv[0], mv[1], b"mvhd")
+        mh = find_box(data, mv[0], mv[1], b"mvhd")
         if mh is None:
             return None
         ver = data[mh[0]]
@@ -397,11 +399,11 @@ def mp4_info(data: bytes) -> Optional[dict]:
             return None
         width = height = n_samples = 0
         n_tracks = 0
-        for f, b, e in _walk_boxes(data, mv[0], mv[1]):
+        for f, b, e in walk_boxes(data, mv[0], mv[1]):
             if f != b"trak":
                 continue
             n_tracks += 1
-            tk = _find_box(data, b, e, b"tkhd")
+            tk = find_box(data, b, e, b"tkhd")
             if tk is not None and not width and not height:
                 tv = data[tk[0]]
                 # width/height follow version+flags(4) + times(8|16) +
@@ -413,13 +415,13 @@ def mp4_info(data: bytes) -> Optional[dict]:
                     h = int.from_bytes(data[off + 4 : off + 8], "big") >> 16
                     if w and h:
                         width, height = w, h
-            md = _find_box(data, b, e, b"mdia")
+            md = find_box(data, b, e, b"mdia")
             if md is not None and not n_samples:
-                mi = _find_box(data, md[0], md[1], b"minf")
+                mi = find_box(data, md[0], md[1], b"minf")
                 if mi is not None:
-                    st = _find_box(data, mi[0], mi[1], b"stbl")
+                    st = find_box(data, mi[0], mi[1], b"stbl")
                     if st is not None:
-                        sz = _find_box(data, st[0], st[1], b"stsz")
+                        sz = find_box(data, st[0], st[1], b"stsz")
                         if sz is not None and sz[1] - sz[0] >= 12:
                             n_samples = int.from_bytes(
                                 data[sz[0] + 8 : sz[0] + 12], "big"
@@ -437,8 +439,8 @@ def mp4_info(data: bytes) -> Optional[dict]:
         return None
 
 
-def _box(four: bytes, body: bytes) -> bytes:
-    return (len(body) + 8).to_bytes(4, "big") + four + body
+def box(four: bytes, body: bytes) -> bytes:
+    return struct.pack(">I", 8 + len(body)) + four + body
 
 
 def synth_mp4(
@@ -473,15 +475,15 @@ def synth_mp4(
     ).to_bytes(4, "big")
     stsz = bytes(4) + sample_size.to_bytes(4, "big") + n_samples.to_bytes(4, "big")
     stco = bytes(4) + (0).to_bytes(4, "big")
-    stbl = _box(b"stsd", stsd) + _box(b"stts", stts) + _box(b"stsz", stsz) + _box(
+    stbl = box(b"stsd", stsd) + box(b"stts", stts) + box(b"stsz", stsz) + box(
         b"stco", stco
     )
-    minf = _box(b"stbl", stbl)
-    mdia = _box(b"mdhd", mdhd) + _box(b"hdlr", hdlr) + _box(b"minf", minf)
-    trak = _box(b"tkhd", tkhd) + _box(b"mdia", mdia)
-    moov = _box(b"mvhd", mvhd) + _box(b"trak", trak)
+    minf = box(b"stbl", stbl)
+    mdia = box(b"mdhd", mdhd) + box(b"hdlr", hdlr) + box(b"minf", minf)
+    trak = box(b"tkhd", tkhd) + box(b"mdia", mdia)
+    moov = box(b"mvhd", mvhd) + box(b"trak", trak)
     return (
-        _box(b"ftyp", b"isom" + (0).to_bytes(4, "big") + b"isomiso2")
-        + _box(b"moov", moov)
-        + _box(b"mdat", b"\x00" * (sample_size * n_samples))
+        box(b"ftyp", b"isom" + (0).to_bytes(4, "big") + b"isomiso2")
+        + box(b"moov", moov)
+        + box(b"mdat", b"\x00" * (sample_size * n_samples))
     )

@@ -3,7 +3,8 @@ header-only walk.
 
 AVIF is the other post-JPEG image format real web corpora carry in bulk
 (alongside WebP, core/webp.py). Like the MP4 walk (core/av.py — AVIF and
-MP4 share the ISO base-media box grammar), everything a metadata pass
+MP4 share the ISO base-media box grammar and one box walker,
+core/av.walk_boxes), everything a metadata pass
 needs lives in the `ftyp` and `meta` boxes at the front of the file:
 brand, item layout, spatial extents, bit depth, rotation, alpha
 auxiliary. The AV1 coefficient payload in `mdat` is a genuine codec seam
@@ -32,15 +33,13 @@ from __future__ import annotations
 import struct
 from typing import Optional
 
+from .av import box, find_box, walk_boxes
+
 _ALPHA_URN = b"urn:mpeg:mpegB:cicp:systems:auxiliary:alpha\x00"
 
 
-def _box(four: bytes, body: bytes) -> bytes:
-    return struct.pack(">I", 8 + len(body)) + four + body
-
-
 def _full(four: bytes, body: bytes, version: int = 0, flags: int = 0) -> bytes:
-    return _box(four, bytes([version]) + flags.to_bytes(3, "big") + body)
+    return box(four, bytes([version]) + flags.to_bytes(3, "big") + body)
 
 
 def synth_avif(
@@ -65,7 +64,7 @@ def synth_avif(
     `rotation` is the irot angle in counter-clockwise quarter turns
     (0..3); `bit_depth` goes into pixi for all 3 channels."""
     n_items = 1 + (1 if alpha else 0)
-    ftyp = _box(b"ftyp", b"avif" + struct.pack(">I", 0) + b"avif" + b"mif1")
+    ftyp = box(b"ftyp", b"avif" + struct.pack(">I", 0) + b"avif" + b"mif1")
 
     hdlr = _full(b"hdlr", struct.pack(">I", 0) + b"pict" + b"\x00" * 12 + b"\x00")
     pitm = _full(b"pitm", struct.pack(">H", 1))
@@ -81,18 +80,18 @@ def synth_avif(
     props += _full(b"pixi", bytes([3, bit_depth, bit_depth, bit_depth]))
     # marker 0x81 + seq_profile/level byte + two flag bytes: a header walk
     # reports presence (codec binding), never decodes the config
-    props += _box(b"av1C", bytes([0x81, 0x00, 0x00, 0x00]))
-    props += _box(b"irot", bytes([rotation & 3]))
+    props += box(b"av1C", bytes([0x81, 0x00, 0x00, 0x00]))
+    props += box(b"irot", bytes([rotation & 3]))
     if alpha:
         props += _full(b"auxC", _ALPHA_URN)
-    ipco = _box(b"ipco", props)
+    ipco = box(b"ipco", props)
 
     # associations: item 1 -> ispe,pixi,av1C,irot; item 2 -> ispe,auxC
     entries = struct.pack(">H", 1) + bytes([4, 1, 2, 3, 4])
     if alpha:
         entries += struct.pack(">H", 2) + bytes([2, 1, 5])
     ipma = _full(b"ipma", struct.pack(">I", n_items) + entries)
-    iprp = _box(b"iprp", ipco + ipma)
+    iprp = box(b"iprp", ipco + ipma)
 
     def iloc_box(offsets_lengths):
         body = bytes([0x44, 0x00]) + struct.pack(">H", len(offsets_lengths))
@@ -115,35 +114,7 @@ def synth_avif(
     payload = bytes((3 * i + 7) % 256 for i in range(filler))
     if alpha:
         payload += bytes((11 * i + 5) % 256 for i in range(alpha_filler))
-    return ftyp + meta + _box(b"mdat", payload)
-
-
-def _walk(data: bytes, start: int, end: int):
-    """Yield (fourcc, body_start, body_end) for each box in [start, end).
-    Degrades, never raises: a truncated or undersized box ends the walk."""
-    pos = start
-    while pos + 8 <= end:
-        (size,) = struct.unpack_from(">I", data, pos)
-        four = data[pos + 4 : pos + 8]
-        body = pos + 8
-        if size == 1:
-            if pos + 16 > end:
-                return
-            (size,) = struct.unpack_from(">Q", data, pos + 8)
-            body = pos + 16
-        elif size == 0:
-            size = end - pos
-        if size < body - pos or pos + size > end:
-            return
-        yield four, body, pos + size
-        pos += size
-
-
-def _find(data: bytes, start: int, end: int, four: bytes):
-    for f, b, e in _walk(data, start, end):
-        if f == four:
-            return b, e
-    return None
+    return ftyp + meta + box(b"mdat", payload)
 
 
 def avif_info(data: bytes) -> Optional[dict]:
@@ -157,7 +128,7 @@ def avif_info(data: bytes) -> Optional[dict]:
     accounting, which a range-reader trusts over the blob length."""
     if len(data) < 16:
         return None
-    first = next(_walk(data, 0, len(data)), None)
+    first = next(walk_boxes(data, 0, len(data)), None)
     if first is None or first[0] != b"ftyp" or first[2] - first[1] < 8:
         return None
     brand = data[first[1] : first[1] + 4]
@@ -174,7 +145,7 @@ def avif_info(data: bytes) -> Optional[dict]:
         "has_alpha": 0, "mdat_bytes": None, "file_bytes": 0,
     }
     meta_span = None
-    for four, b, e in _walk(data, 0, len(data)):
+    for four, b, e in walk_boxes(data, 0, len(data)):
         # top-level boxes are contiguous from offset 0, so the container's
         # own accounting of total length is the last box's end offset
         out["file_bytes"] = e
@@ -186,7 +157,7 @@ def avif_info(data: bytes) -> Optional[dict]:
         return None
     ms, me = meta_span
 
-    iinf = _find(data, ms, me, b"iinf")
+    iinf = find_box(data, ms, me, b"iinf")
     if iinf is not None and iinf[1] - iinf[0] >= 6:
         version = data[iinf[0]]
         if version == 0:
@@ -194,11 +165,11 @@ def avif_info(data: bytes) -> Optional[dict]:
         else:
             out["n_items"] = struct.unpack_from(">I", data, iinf[0] + 4)[0]
 
-    iprp = _find(data, ms, me, b"iprp")
+    iprp = find_box(data, ms, me, b"iprp")
     if iprp is not None:
-        ipco = _find(data, iprp[0], iprp[1], b"ipco")
+        ipco = find_box(data, iprp[0], iprp[1], b"ipco")
         if ipco is not None:
-            for four, b, e in _walk(data, ipco[0], ipco[1]):
+            for four, b, e in walk_boxes(data, ipco[0], ipco[1]):
                 if four == b"ispe" and e - b >= 12 and out["width"] is None:
                     out["width"], out["height"] = struct.unpack_from(
                         ">II", data, b + 4

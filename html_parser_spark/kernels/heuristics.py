@@ -7,15 +7,18 @@ classification. Runs entirely inside the extraction kernel (no extra
 JVM<->Python crossing): it walks the strict kernel's token records,
 ``kernels.extract._tokens`` (one TOKEN_RE drain; each distinct tag's
 name, media span and attrs decoded once by the shared tag memo), with a
-scored walk instead of the strict span walk.
+scored walk (``_main_walk``) instead of the strict span walk. Main
+mode's row function, ``process_document_main``, tokenizes an ok document
+once and hands a failing one whole to the strict kernel.
 
-This branch is NOT covered by the reference-equality contract (the reference
-has no main-content notion — SURVEY.md §2.1 'extraction semantics'); it is a
-deterministic, documented heuristic validated by its own fixture tests
+The main-content spans of an ok document are NOT covered by the
+reference-equality contract (the reference has no main-content notion —
+SURVEY.md §2.1 'extraction semantics'); they are a deterministic,
+documented heuristic validated by its own fixture tests
 (tests/test_heuristics.py).
 
 Pipeline per text span:
-  1. tokenize (shared kernel's token records, attrs included);
+  1. tokenize: one ``list(_tokens(html))`` drain, attrs included;
   2. subtree prune: drop everything under STRIP_TAGS (script/style/template/
      noscript/iframe/svg) and BOILERPLATE_TAGS (nav/header/footer/aside/form/
      ... — unconditionally: semantic chrome tags are chrome wherever they
@@ -43,7 +46,7 @@ from __future__ import annotations
 import re
 from typing import Any, Optional
 
-from .extract import _Fail, _T_END, _T_OPEN, _T_TEXT, _T_VOID, _tokens
+from .extract import _Fail, _T_END, _T_OPEN, _T_TEXT, _T_VOID, _tokens, process_document_flat
 from ..core.oracle import E_TAG_MISMATCH, STATUS_ERROR, STATUS_OK
 
 # Subtrees that never contain main content.
@@ -70,6 +73,8 @@ POSITIVE_RE = re.compile(
     re.IGNORECASE,
 )
 
+Span = tuple[str, Optional[str], Optional[str]]  # (kind, text, media_ref)
+
 MAX_LINK_DENSITY = 0.333
 MIN_BLOCK_WORDS = 3
 MIN_TEXT_DENSITY = 2.0  # words per (1 + inline tag): below = markup soup
@@ -86,19 +91,18 @@ def _class_id_signal(attrs: tuple[tuple[str, Optional[str]], ...]) -> int:
     return 0
 
 
-def extract_main_spans(
-    html: str,
-) -> tuple[list[tuple[str, Optional[str], Optional[str]]], str, Optional[str]]:
-    """Main-content spans of one HTML string: (kind, text, media_ref) triples.
-
-    Parse errors/divergences surface exactly as in the strict kernel (same
-    tokenizer), so status semantics stay aligned with the contract.
-    """
+def extract_main_spans(html: str) -> tuple[list[Span], str, Optional[str]]:
+    """Main-content spans of one HTML string, with the strict kernel's
+    status and error (same tokenizer, same tag-mismatch rule)."""
     try:
-        tokens = list(_tokens(html))  # a tokenizer failure outranks a mismatch
+        # drained whole first: a tokenizer failure outranks a mismatch
+        return _main_walk(list(_tokens(html)))
     except _Fail as f:
         return [], f.status, f.error
 
+
+def _main_walk(tokens: list[tuple]) -> tuple[list[Span], str, Optional[str]]:
+    """The scored walk over one document's drained token records."""
     # --- scored walk -------------------------------------------------------
     # Stack entries: (tag, dropped: bool, protected: bool)
     # Blocks: list of dicts {spans: [(kind,text,mref)], words, link_words}
@@ -208,7 +212,7 @@ def extract_main_spans(
         if is_content[i] and b["words"]:
             seen_content = True
 
-    out: list[tuple[str, Optional[str], Optional[str]]] = []
+    out: list[Span] = []
     seen_content = False
     for i, b in enumerate(blocks):
         if is_content[i]:
@@ -224,30 +228,51 @@ def extract_main_spans(
     return out, STATUS_OK, None
 
 
+def process_document_main(
+    kinds: list[str],
+    texts: list[Optional[str]],
+    media_refs: list[Optional[str]],
+    out_kinds: list[str],
+    out_texts: list[Optional[str]],
+    out_mrefs: list[Optional[str]],
+) -> tuple[int, str, Optional[str], int]:
+    """process_document_flat's signature and contract, main-content spans:
+    each text span is drained once and walked once; n_text_chars sums the
+    drained text tokens (the strict text spans). At the first failing text
+    span the document's rows roll back and it goes to process_document_flat."""
+    n0, n_chars = len(out_kinds), 0
+    for kind, text, mref in zip(kinds, texts, media_refs):
+        if kind == "media":
+            spans = [("media", None, mref)]
+        else:
+            try:
+                tokens = list(_tokens(text or ""))
+                spans, status, _err = _main_walk(tokens)
+            except _Fail:
+                status = None
+            if status != STATUS_OK:
+                del out_kinds[n0:], out_texts[n0:], out_mrefs[n0:]
+                return process_document_flat(
+                    kinds, texts, media_refs, out_kinds, out_texts, out_mrefs
+                )
+            n_chars += sum(len(p) for code, _n, p, _a in tokens if code == _T_TEXT)
+        for k, t, mr in spans:
+            out_kinds.append(k)
+            out_texts.append(t)
+            out_mrefs.append(mr)
+    return len(out_kinds) - n0, STATUS_OK, None, n_chars
+
+
 def extract_main_content(
     kinds: list[str],
     texts: list[Optional[str]],
     media_refs: list[Optional[str]],
 ) -> list[dict[str, Any]]:
-    """Document-level main-content extraction over interleaved input spans.
-
-    Same interleaving contract as kernels.extract.process_document_flat:
-    input media spans pass through; text spans are reduced to their main
-    content.
-    Failing text spans contribute nothing (the strict pipeline already
-    reported their status; the heuristic branch is best-effort per span).
-    """
-    out: list[dict[str, Any]] = []
-    order = 0
-    for kind, text, mref in zip(kinds, texts, media_refs):
-        if kind == "media":
-            out.append({"kind": "media", "text": None, "media_ref": mref, "order": order})
-            order += 1
-            continue
-        spans, status, _err = extract_main_spans(text if text is not None else "")
-        if status != STATUS_OK:
-            continue
-        for k, t, mr in spans:
-            out.append({"kind": k, "text": t, "media_ref": mr, "order": order})
-            order += 1
-    return out
+    """process_document_main's spans of one document as
+    {kind, text, media_ref, order} dicts."""
+    out: tuple[list, list, list] = ([], [], [])
+    process_document_main(kinds, texts, media_refs, *out)
+    return [
+        {"kind": k, "text": t, "media_ref": m, "order": i}
+        for i, (k, t, m) in enumerate(zip(*out))
+    ]

@@ -11,9 +11,10 @@ Output table:
 
 Scale notes (100 TB / 1000 executors):
 - Exactly ONE JVM->Python Arrow crossing on the hot path: tokenize + tree
-  build + extraction are fused in a single mapInArrow stage (SURVEY.md §7.3),
-  one compiled token scan plus a tag-stack walk per document
-  (kernels/extract.py);
+  build + extraction are fused in a single mapInArrow stage (SURVEY.md §7.3):
+  the worker calls the mode's row function per document, picked once
+  (strict: kernels/extract.process_document_flat; main:
+  kernels/heuristics.process_document_main, strict on a failing document);
   the crossing moves flat Arrow child arrays, never per-span Python dicts
   (this is the package's only hand-built Arrow rebuild: its list<struct>
   input is decomposed without per-span objects, which measured faster than
@@ -35,9 +36,10 @@ Scale notes (100 TB / 1000 executors):
   spark.sql.adaptive.advisoryPartitionSizeInBytes (size it to the per-task
   byte budget), not salt_partitions; sizes are COMPRESSED shuffle bytes,
   so low-entropy payloads pack denser than their logical size.
-- partition_id = pmod(xxhash64(doc_id), n_buckets) is derived from doc_id, so
-  re-runs produce identical bucket assignment -> idempotent per-partition
-  lineage commits (resume support; see sources/checkpoint.py).
+- partition_id = crc32(doc_id) % N_BUCKETS (1024; a null doc_id lands in
+  bucket 0) is derived from doc_id, so re-runs produce identical bucket
+  assignment -> idempotent per-partition lineage commits (resume support;
+  see sources/checkpoint.py).
 """
 
 from __future__ import annotations
@@ -57,6 +59,8 @@ from pyspark.sql.types import (
 )
 
 from ..kernels.extract import ExtractOptions
+
+N_BUCKETS = 1024  # partition_id = crc32(doc_id) % N_BUCKETS
 
 SPAN_STRUCT = StructType(
     [
@@ -96,39 +100,36 @@ INPUT_SCHEMA = StructType(
 )
 
 
-def _arrow_kernel_factory(options: ExtractOptions, n_buckets: int):
-    heur = None
+def _arrow_kernel_factory(options: ExtractOptions):
     if options.mode == "main":
-        from ..kernels.heuristics import extract_main_content as heur  # noqa: F811
+        from ..kernels.heuristics import process_document_main as doc_fn
+    else:
+        from ..kernels.extract import process_document_flat as doc_fn
 
     def kernel(batches):
-        import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
 
         schema = to_arrow_schema(EXTRACT_SCHEMA)
         for batch in batches:
-            yield _process_arrow_batch(pa, batch, heur, n_buckets, schema)
+            yield _process_arrow_batch(batch, doc_fn, schema)
 
     return kernel
 
 
-def _process_arrow_batch(pa, batch, heur, n_buckets, schema):
-    """One Arrow batch through the kernel WITHOUT materializing per-span
-    Python dicts on either side of the JVM<->Python crossing: the input
-    list<struct> column is decomposed into its flat child arrays (one C
-    pass per column), per-document slices are cut by the list offsets, and
-    the output list<struct> is rebuilt from flat arrays + offsets. This
-    roughly halved crossing overhead vs the former pandas path (measured in
-    BASELINE.md); the output is pinned to core/oracle by
-    tests/test_spark_extract.py."""
-    from ..kernels.extract import process_document_flat
+def _process_arrow_batch(batch, doc_fn, schema):
+    """One Arrow batch through the mode's row function doc_fn with no
+    per-span Python dicts on either side of the crossing: the input
+    list<struct> column is decomposed into flat child arrays (one C pass
+    per column) and cut per document by its offsets; doc_fn appends each
+    document's spans to flat output lists, from which the output
+    list<struct> is rebuilt (measured against the pandas path in
+    BASELINE.md). Pinned to core/oracle by tests/test_spark_extract.py."""
+    import pyarrow as pa
 
-    idx_doc = batch.schema.get_field_index("doc_id")
-    idx_spans = batch.schema.get_field_index("spans")
-    doc_arr = batch.column(idx_doc)
+    doc_arr = batch.column("doc_id")
     if doc_arr.type != pa.string():
         doc_arr = doc_arr.cast(pa.string())
-    spans_arr = batch.column(idx_spans)
+    spans_arr = batch.column("spans")
     n = batch.num_rows
     doc_ids = doc_arr.to_pylist()
 
@@ -143,39 +144,26 @@ def _process_arrow_batch(pa, batch, heur, n_buckets, schema):
     else:
         offs, kinds_f, texts_f, mrefs_f, nulls = [0], [], [], [], None
 
-    out_kinds: list = []
-    out_texts: list = []
-    out_mrefs: list = []
-    out_orders: list = []
+    out_kinds, out_texts, out_mrefs, out_orders = [], [], [], []
     out_offsets = [0]
-    statuses, errors, n_spans_l, n_chars_l, part_ids = [], [], [], [], []
+    statuses, errors, n_spans_l, n_chars_l = [], [], [], []
     for i in range(n):
         if nulls is not None and nulls[i]:
             a = b = 0  # null spans column == no input spans (dirty upstream)
         else:
             a, b = offs[i], offs[i + 1]
-        n_sp, status, error, n_chars = process_document_flat(
+        n_sp, status, error, n_chars = doc_fn(
             kinds_f[a:b], texts_f[a:b], mrefs_f[a:b], out_kinds, out_texts, out_mrefs
         )
-        if heur is not None and status == "ok":
-            # heuristic branch: replace this doc's strict spans
-            del out_kinds[len(out_kinds) - n_sp :]
-            del out_texts[len(out_texts) - n_sp :]
-            del out_mrefs[len(out_mrefs) - n_sp :]
-            hs = heur(kinds_f[a:b], texts_f[a:b], mrefs_f[a:b])
-            for s in hs:
-                out_kinds.append(s["kind"])
-                out_texts.append(s["text"])
-                out_mrefs.append(s["media_ref"])
-            n_sp = len(hs)
         out_orders.extend(range(n_sp))
         out_offsets.append(out_offsets[-1] + n_sp)
         statuses.append(status)
         errors.append(error)
         n_spans_l.append(n_sp)
         n_chars_l.append(n_chars)
-        part_ids.append(_stable_bucket(doc_ids[i], n_buckets))
 
+    # crc32, not the per-process seeded hash(); a null doc_id -> bucket 0
+    part_ids = [0 if d is None else zlib.crc32(d.encode()) % N_BUCKETS for d in doc_ids]
     spans_t = schema.field("spans").type
     span_struct = pa.StructArray.from_arrays(
         [
@@ -203,19 +191,10 @@ def _process_arrow_batch(pa, batch, heur, n_buckets, schema):
     )
 
 
-def _stable_bucket(doc_id: Optional[str], n_buckets: int) -> int:
-    # Stable across runs and Python processes (NOT hash(), which is seeded).
-    # Null doc_ids (dirty upstream data) deterministically land in bucket 0.
-    if doc_id is None:
-        return 0
-    return zlib.crc32(doc_id.encode("utf-8")) % n_buckets
-
-
 def extract_spans(
     df: DataFrame,
     options: Optional[ExtractOptions] = None,
     salt_partitions: Optional[int] = None,
-    n_buckets: int = 1024,
     salt_by: str = "hash",
 ) -> DataFrame:
     """The flagship operator: interleaved docs -> ordered extracted spans.
@@ -225,7 +204,7 @@ def extract_spans(
     variant instead (AQE REBALANCE on doc_id: partitions sized by measured
     shuffle bytes, mega-docs isolated; partition count follows
     spark.sql.adaptive.advisoryPartitionSizeInBytes rather than
-    salt_partitions). n_buckets: lineage bucket count.
+    salt_partitions).
     """
     options = options or ExtractOptions()
     missing = {"doc_id", "spans"} - set(df.columns)
@@ -252,7 +231,7 @@ def extract_spans(
         # leave ~1/e of the partitions empty (verified) — hash the raw
         # 64-bit doc hash instead
         df = df.repartition(salt_partitions, F.xxhash64(F.col("doc_id")))
-    return df.mapInArrow(_arrow_kernel_factory(options, n_buckets), schema=EXTRACT_SCHEMA)
+    return df.mapInArrow(_arrow_kernel_factory(options), schema=EXTRACT_SCHEMA)
 
 
 def exploded_spans(df_extracted: DataFrame) -> DataFrame:

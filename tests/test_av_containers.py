@@ -8,6 +8,7 @@ import hashlib
 
 from html_parser_spark.core.av import (
     mp3_info,
+    walk_boxes,
     mp4_info,
     synth_mp3,
     synth_mp4,
@@ -77,6 +78,15 @@ def test_mp4_largesize_box_and_unknown_boxes():
     junk = (16).to_bytes(4, "big") + b"skip" + b"\x00" * 8
     d = mp4_info(junk + m[:i] + large)
     assert d is not None and d["width"] == 32 and d["n_samples"] == 2
+
+
+def test_box_size_below_its_header_ends_the_walk():
+    """A largesize box (size field 1) whose 64-bit size, 12, does not
+    cover its own 16-byte header ends the walk: no box whose body starts
+    past its end, and no phantom box read from inside the largesize."""
+    data = (1).to_bytes(4, "big") + b"ftyp" + (12).to_bytes(8, "big") + b"isom" + bytes(4)
+    assert list(walk_boxes(data, 0, len(data))) == []
+    assert mp4_info(data + synth_mp4(32, 32, 600, 600, 2)) is None
 
 
 def test_spark_mp3_mp4_end_to_end(spark):

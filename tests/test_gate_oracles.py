@@ -1,8 +1,9 @@
 """In-suite version of the driver's correctness gate: every
 __spark_entry__.queries() entry vs its oracle_sql() via DuckDB at sf0.001 —
-row count, column names, order-insensitive exact values (doubles by repr,
-i.e. bit-exact). Each frame's unexecuted plan must first hold the query's
-plan_pins() and its declared count of Python crossings. Keeps
+row count, column names, oracle column types and order-insensitive exact
+values (doubles by repr, i.e. bit-exact), through tools/gate_check's own
+type_drift and row normaliser. Each frame's unexecuted plan must first hold
+the query's plan_pins() and its declared count of Python crossings. Keeps
 `python -m pytest -x -q` self-contained as the full correctness gate."""
 
 from __future__ import annotations
@@ -13,16 +14,13 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
+from tools.gate_check import TABLES, rows_to_multiset, type_drift
 
 SF_DIR = os.environ.get("SPARK_GRAFT_GATE_SF", "/root/testdata/sf0.001")
 
 pytestmark = pytest.mark.skipif(
     not os.path.exists(f"{SF_DIR}/documents.parquet"), reason="testdata unavailable"
 )
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 
 @pytest.fixture(scope="module")
@@ -33,19 +31,6 @@ def con():
         if os.path.exists(p):
             c.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     return c
-
-
-def _norm(v):
-    if v is None:
-        return "\0N"
-    if isinstance(v, float):
-        return repr(v)
-    return repr(v)
-
-
-def _multiset(cols, rows):
-    idx = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted("\1".join(_norm(r[i]) for i in idx) for r in rows)
 
 
 PINS = entrymod.plan_pins()
@@ -75,8 +60,9 @@ def test_query_matches_oracle(spark, con, name):
     ocols = [d[0] for d in res.description]
     orows = res.fetchall()
     assert sorted(df.columns) == sorted(ocols)
+    assert type_drift(df, con, oracles[name]) == []
     assert len(rows) == len(orows)
-    assert _multiset(df.columns, rows) == _multiset(ocols, orows)
+    assert rows_to_multiset(df.columns, rows) == rows_to_multiset(ocols, orows)
 
 
 def test_entry_smoke(spark):

@@ -4,7 +4,12 @@ contract (SURVEY.md §2.1) — these are its own goldens."""
 
 from __future__ import annotations
 
-from html_parser_spark.kernels.heuristics import extract_main_content, extract_main_spans
+from html_parser_spark.kernels.extract import process_document_flat
+from html_parser_spark.kernels.heuristics import (
+    extract_main_content,
+    extract_main_spans,
+    process_document_main,
+)
 
 ARTICLE = (
     '<div class="page">'
@@ -109,11 +114,62 @@ def test_document_level_interleaving_and_order():
     assert out[0]["media_ref"] == "a.pdf" and out[2]["media_ref"] == "b.jpg"
 
 
-def test_failing_text_span_is_skipped_best_effort():
-    out = extract_main_content(
-        ["text", "text"],
-        ["<p>a > b</p>", "<p>good words arrive in this span</p>"],
-        [None, None],
+def test_failing_document_takes_the_strict_contract():
+    """A failing text span rolls back this document's main-mode rows and
+    hands the whole document to the strict kernel: the strict spans
+    before the failing span (nav text included), its status and error,
+    and their text length. Rows of earlier documents are kept."""
+    kinds = ["text", "media", "text", "text"]
+    texts = [
+        "<nav>menu</nav><p>first words here now</p>",
+        None,
+        "<p>a > b</p>",
+        "<p>good words arrive in this span</p>",
+    ]
+    mrefs = [None, "x.png", None, None]
+    got_out = (["text"], ["earlier doc"], [None])
+    want_out = (["text"], ["earlier doc"], [None])
+    got = process_document_main(kinds, texts, mrefs, *got_out)
+    want = process_document_flat(kinds, texts, mrefs, *want_out)
+    assert got == want == (3, "divergent", "divergent_nontermination", 24)
+    assert got_out == want_out == (
+        ["text", "text", "text", "media"],
+        ["earlier doc", "menu", "first words here now", None],
+        [None, None, None, "x.png"],
     )
-    assert [o["kind"] for o in out] == ["text"]
-    assert "good words" in out[0]["text"]
+    assert [o["text"] for o in extract_main_content(kinds, texts, mrefs)] == [
+        "menu", "first words here now", None,
+    ]
+
+
+def test_ok_main_document_is_tokenized_once(monkeypatch):
+    """The extract worker in main mode drains an ok document once, through
+    the heuristics: the strict kernel runs only for a failing document."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from html_parser_spark.kernels import extract as kext
+    from html_parser_spark.kernels.extract import ExtractOptions
+    from html_parser_spark.operators.extract import INPUT_SCHEMA, _arrow_kernel_factory
+
+    calls = []
+    strict = kext.extract_doc_spans
+
+    def counted(html):
+        calls.append(html)
+        return strict(html)
+
+    monkeypatch.setattr(kext, "extract_doc_spans", counted)
+    kernel = _arrow_kernel_factory(ExtractOptions(mode="main"))
+
+    def run(html):
+        rows = [{"doc_id": "d", "spans": [
+            {"kind": "text", "text": html, "media_ref": None, "offset": 0},
+        ]}]
+        batch = pa.RecordBatch.from_pylist(rows, schema=to_arrow_schema(INPUT_SCHEMA))
+        return [b.to_pylist()[0] for b in kernel(iter([batch]))][0]
+
+    row = run(ARTICLE)
+    assert row["status"] == "ok" and row["n_text_chars"] > 0 and calls == []
+    row = run("<p>a > b</p>")
+    assert row["status"] == "divergent" and calls == ["<p>a > b</p>"]

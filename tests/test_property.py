@@ -142,17 +142,36 @@ def test_flat_kernel_equals_dict_kernel(spans):
     """process_document_flat (the mapInArrow crossing's form) must agree with
     core/oracle.process_document on arbitrary interleaved documents: same
     spans in the same order, same status/error, and n_chars equal to the
-    total text length of the spans it kept."""
+    total text length of the spans it kept. Main mode's row function,
+    process_document_main, keeps the strict status, error and n_chars;
+    its spans are the strict ones on a failing document and, on an ok one,
+    the per-span extract_main_spans composition (media passes through)."""
     from html_parser_spark.kernels.extract import process_document_flat
+    from html_parser_spark.kernels.heuristics import (
+        extract_main_spans,
+        process_document_main,
+    )
 
     kinds = [k for k, _, _ in spans]
     texts = [t for _, t, _ in spans]
     mrefs = [m for _, _, m in spans]
     want_spans, want_status, want_error = oracle.process_document(spans)
+    want_chars = sum(len(t) for _k, t, _m, _o in want_spans if t is not None)
     fk, ft, fm = [], [], []
     n_sp, status, error, n_chars = process_document_flat(kinds, texts, mrefs, fk, ft, fm)
     assert (status, error) == (want_status, want_error)
     assert n_sp == len(want_spans) == len(fk)
     got = [(k, t, m, i) for i, (k, t, m) in enumerate(zip(fk, ft, fm))]
     assert got == want_spans
-    assert n_chars == sum(len(t) for t in ft if t is not None)
+    assert n_chars == sum(len(t) for t in ft if t is not None) == want_chars
+
+    if want_status == "ok":
+        main = []
+        for k, t, m in spans:
+            main += [(k, t, m)] if k == "media" else extract_main_spans(t or "")[0]
+        want_spans = [(k, t, m, i) for i, (k, t, m) in enumerate(main)]
+    mk, mt, mm = [], [], []
+    n_sp, status, error, n_chars = process_document_main(kinds, texts, mrefs, mk, mt, mm)
+    assert (status, error, n_chars) == (want_status, want_error, want_chars)
+    assert n_sp == len(want_spans) == len(mk)
+    assert [(k, t, m, i) for i, (k, t, m) in enumerate(zip(mk, mt, mm))] == want_spans

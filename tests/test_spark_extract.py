@@ -82,22 +82,20 @@ def test_partition_metrics_totals(extracted):
 def _oracle_row(doc_id, in_spans, main):
     """The extract_spans row core/oracle predicts for one input row: spans,
     status and error from oracle.process_document (main mode: the spans of
-    an ok document come from extract_main_content instead), n_text_chars =
-    the strict spans' text length, partition_id = crc32(doc_id) % 1024 with
-    a null id in bucket 0."""
-    from html_parser_spark.kernels.heuristics import extract_main_content
+    an ok document are each text span's extract_main_spans, media passing
+    through), n_text_chars = the strict spans' text length, partition_id =
+    crc32(doc_id) % 1024 with a null id in bucket 0."""
+    from html_parser_spark.kernels.heuristics import extract_main_spans
 
     in_spans = in_spans or []
-    kinds = [s["kind"] for s in in_spans]
-    texts = [s["text"] for s in in_spans]
-    mrefs = [s["media_ref"] for s in in_spans]
-    spans, status, error = oracle.process_document(list(zip(kinds, texts, mrefs)))
+    triples = [(s["kind"], s["text"], s["media_ref"]) for s in in_spans]
+    spans, status, error = oracle.process_document(triples)
     n_chars = sum(len(t) for _k, t, _m, _o in spans if t is not None)
     if main and status == "ok":
-        spans = [
-            (s["kind"], s["text"], s["media_ref"], s["order"])
-            for s in extract_main_content(kinds, texts, mrefs)
-        ]
+        main_spans = []
+        for k, t, m in triples:
+            main_spans += [(k, t, m)] if k == "media" else extract_main_spans(t or "")[0]
+        spans = [(k, t, m, i) for i, (k, t, m) in enumerate(main_spans)]
     bucket = 0 if doc_id is None else zlib.crc32(doc_id.encode("utf-8")) % 1024
     return (doc_id, status, error, len(spans), n_chars, bucket, tuple(spans))
 
