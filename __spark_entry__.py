@@ -3,8 +3,9 @@
 `queries()` exposes every implemented capability (SURVEY.md §2 + the
 training-data-pipeline operators) as (spark, sf_dir) -> DataFrame. Each
 call opens a fresh cache scope (html_parser_spark/cache.py) that holds
-the query's persisted intermediates until the next entry is called, so
-run one query at a time and act on its result before calling the next;
+the query's persisted and checkpointed intermediates until the next entry
+is called, so run one query at a time and act on its result before calling
+the next;
 `plan_pins()` and `PYTHON_CROSSINGS` hold each query's physical-plan
 contract (checked by tests/test_gate_oracles.py on the unexecuted plan);
 `oracle_sql()` holds the DuckDB-runnable reconstruction of the SAME answer
@@ -5572,8 +5573,8 @@ def plan_pins() -> dict[str, list[tuple[str, Callable[[str], bool]]]]:
             ("modal-anchor min(struct) plans as a partial+final "
              "SortAggregate pair (still map-side combined)",
              lambda p: len(re.findall(r"\(\d+\) SortAggregate", p)) == 2),
-            ("parse kernel behind the cache barrier (links keepalive holds "
-             "the persist across the aggregation)",
+            ("parse kernel behind the cache barrier (the entry's cache "
+             "scope holds the persist across the aggregation)",
              lambda p: "InMemoryTableScan" in p
              and len(re.findall(r"\(\d+\) MapInArrow", p)) <= 1),
         ],

@@ -64,6 +64,7 @@ def _synth_headline(spark, cpus: int, n_docs: int, noop) -> dict:
     section 1 shape), in total and per core."""
     from pyspark.sql import functions as F
 
+    from html_parser_spark import cache
     from html_parser_spark.operators.extract import INPUT_SCHEMA, extract_spans
     from html_parser_spark.sources.fixtures import synth_docs
 
@@ -76,16 +77,16 @@ def _synth_headline(spark, cpus: int, n_docs: int, noop) -> dict:
             yield f"{p}-{doc_id}", spans
 
     rdd = spark.sparkContext.parallelize(range(parts), parts).flatMap(gen)
-    docs = spark.createDataFrame(rdd, INPUT_SCHEMA).cache()
-    n = docs.count()
-    n_bytes = docs.select(
-        F.aggregate(
-            "spans", F.lit(0).cast("long"),
-            lambda acc, s: acc + F.coalesce(F.length(s.text), F.lit(0)),
-        ).alias("b")
-    ).agg(F.sum("b")).collect()[0][0] or 0
-    wall, walls = _min_wall(lambda: noop(extract_spans(docs)))
-    docs.unpersist()
+    with cache.scope(spark):
+        docs = cache.persist(spark.createDataFrame(rdd, INPUT_SCHEMA))
+        n = docs.count()
+        n_bytes = docs.select(
+            F.aggregate(
+                "spans", F.lit(0).cast("long"),
+                lambda acc, s: acc + F.coalesce(F.length(s.text), F.lit(0)),
+            ).alias("b")
+        ).agg(F.sum("b")).collect()[0][0] or 0
+        wall, walls = _min_wall(lambda: noop(extract_spans(docs)))
     return {
         "n_docs": n,
         "mb": round(n_bytes / 1e6, 1),
@@ -110,6 +111,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     import __spark_entry__ as entrymod
+    from html_parser_spark import cache
     from html_parser_spark.operators.extract import extract_spans
     from html_parser_spark.sources.interleave import interleaved_from_documents
 
@@ -141,13 +143,15 @@ def main() -> None:
             "source",
         )
     # spread the amplified corpus before caching: the crossJoin inherits the
-    # single-file scan's partitioning, which would starve the kernel stage
-    docs = docs.repartition(cpus * 4).cache()
-    n_docs = docs.count()
-    total_bytes = docs.agg(F.sum(F.length("text"))).collect()[0][0] or 0
+    # single-file scan's partitioning, which would starve the kernel stage;
+    # each headline's scope releases its corpus before the query sweep
+    with cache.scope(spark):
+        docs = cache.persist(docs.repartition(cpus * 4))
+        n_docs = docs.count()
+        total_bytes = docs.agg(F.sum(F.length("text"))).collect()[0][0] or 0
 
-    interleaved = interleaved_from_documents(docs)
-    extract_sec, walls = _min_wall(lambda: noop(extract_spans(interleaved)))
+        interleaved = interleaved_from_documents(docs)
+        extract_sec, walls = _min_wall(lambda: noop(extract_spans(interleaved)))
     n_spans = 5 * n_docs  # closed-form for the wrap (sources/interleave.py)
     synth = _synth_headline(spark, cpus, SYNTH_DOCS, noop)
 

@@ -11,7 +11,7 @@ Public surface:
   operators.diff.diff_documents        BFS positional pair diff (full outer
                                        join + one mapInArrow)
   operators.arrow_rows.map_rows        the one row-at-a-time Python crossing
-  cache.persist / cache.scope          owner-scoped cache lifetimes
+  cache.persist / checkpoint / scope   owner-scoped lifetimes
   operators.multimodal.media_metadata  binary-column metadata kernel
   operators.layout.route_media/parse_layout   PDF/layout branch
   functions.text                       lang-ID / quality / tokens / fingerprint

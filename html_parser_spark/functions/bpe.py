@@ -30,8 +30,9 @@ Scale shape (10^12 docs):
     touched again during training;
   * each round runs on the distinct-word table only: a combinable pair
     groupBy, a TakeOrdered(1) argmax (no full sort), ONE collected row
-    (bounded control-plane, the kmeans convention), and a localCheckpoint
-    to keep round r+1's plan from re-deriving rounds 1..r;
+    (bounded control-plane, the kmeans convention), and a `cache.checkpoint`
+    that keeps round r+1's plan from re-deriving rounds 1..r (the round it
+    replaces is released at once);
   * token counting is the bloom-probe shape (functions/sketch.py): the
     per-word token lengths fold into ONE broadcast map row, and each
     document counts its tokens ROW-LOCALLY — zero wide shuffle on the
@@ -45,6 +46,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .. import cache
 
 BPE_MERGES = 16  # gate default: enough rounds to build multi-char subwords
 EOW = "</w>"
@@ -100,8 +103,9 @@ def bpe_train(
     training segmentation. Deterministic: ties break (count DESC, left,
     right). Raises if the corpus runs out of adjacent pairs before
     n_merges rounds — a silent short vocab would desync every consumer
-    that inlines the merge list."""
-    words = (
+    that inlines the merge list. Each round's table is a `cache.checkpoint`,
+    so the caller holds a cache scope; `words` is returned still held."""
+    words = cache.checkpoint(
         docs.select(
             F.explode(
                 F.expr(f"filter(split({text_col}, ' '), w -> w <> '')")
@@ -110,7 +114,6 @@ def bpe_train(
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))
         .withColumn("syms", F.expr(chars_expr("word")))
-        .localCheckpoint()
     )
     merges: list = []
     for _r in range(n_merges):
@@ -137,9 +140,10 @@ def bpe_train(
             )
         a, b, pcnt = best[0]["a"], best[0]["b"], int(best[0]["pcnt"])
         merges.append((a, b, pcnt))
-        words = words.withColumn(
-            "syms", F.expr(merge_fold_expr("syms", a, b))
-        ).localCheckpoint()
+        prev, words = words, cache.checkpoint(
+            words.withColumn("syms", F.expr(merge_fold_expr("syms", a, b)))
+        )
+        cache.release(prev)
     return merges, words
 
 

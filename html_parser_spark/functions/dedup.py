@@ -628,14 +628,14 @@ def connected_components(
     the min, never collecting a neighbor list.
 
     Driver loop mechanics (all bounded control-plane work): each round
-    localCheckpoints the new edge set — MANDATORY, not an optimization:
+    `cache.checkpoint`s the new edge set — MANDATORY, not an optimization:
     one star round references its input ~4 times (union+swap, join back),
     so without truncation the logical plan grows ~16x per round and
     Catalyst analysis OOMs by round 4 (observed). Checkpointing resets
-    the plan to a scan, keeping analysis O(1) per round. (On a real
-    cluster, set a reliable `spark.sparkContext.setCheckpointDir` and
-    swap to `checkpoint()` if executor loss must be survivable
-    mid-computation.) Convergence = the (count, bit_xor(xxhash64))
+    the plan to a scan, keeping analysis O(1) per round. The previous
+    round's edge set is released once the new one is materialised, so the
+    caller's cache scope (which it must hold) keeps one edge set: the
+    returned labels' input. Convergence = the (count, bit_xor(xxhash64))
     signature repeating — exact on count, collision-free on the checksum
     to ~2^-64 per round (xor is safe: the edge set is distinct so no pair
     self-cancels, and unlike sum it cannot overflow under ANSI
@@ -643,16 +643,16 @@ def connected_components(
 
     No reference analogue (the reference dedups nothing); public
     algorithm, built from scratch on the DataFrame API."""
-    edges = (
+    edges = cache.checkpoint(
         pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
         .where(F.col("u").isNotNull() & F.col("v").isNotNull())
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     sig = None
     for _ in range(max_rounds):
-        edges = _small_star(_large_star(edges)).localCheckpoint(eager=True)
+        prev, edges = edges, cache.checkpoint(_small_star(_large_star(edges)))
+        cache.release(prev)
         cnt, chk = edges.agg(
             F.count("*").alias("c"), F.expr("bit_xor(xxhash64(u, v))").alias("h")
         ).first()

@@ -2,12 +2,15 @@
 Sennrich-2016 reference loop, the encode-reproduces-training-segmentation
 property, out-of-vocabulary encode, and token-count accounting. The
 end-to-end train replay is pinned by the text_bpe_vocab / text_bpe_tokens
-gate oracles (DuckDB re-runs every round in SQL)."""
+gate oracles (DuckDB re-runs every round in SQL). Training checkpoints
+each round through `cache.checkpoint`, so every test holds a cache
+scope."""
 
 from __future__ import annotations
 
 from collections import Counter
 
+from html_parser_spark import cache
 from html_parser_spark.functions import bpe as B
 
 
@@ -69,9 +72,10 @@ def test_train_matches_python_reference(spark):
     docs = spark.createDataFrame(CORPUS, "doc_id bigint, text string")
     wc = Counter(w for _i, t in CORPUS for w in t.split() if w)
     ref_merges, ref_segs = _python_bpe(wc, 10)
-    merges, words = B.bpe_train(docs, n_merges=10)
-    assert merges == ref_merges
-    got = {r.word: list(r.syms) for r in words.collect()}
+    with cache.scope(spark):
+        merges, words = B.bpe_train(docs, n_merges=10)
+        assert merges == ref_merges
+        got = {r.word: list(r.syms) for r in words.collect()}
     assert got == ref_segs
 
 
@@ -79,16 +83,18 @@ def test_encode_reproduces_training_segmentation(spark):
     """The standard BPE property: applying the merge list in rank order to
     a training word reproduces its training segmentation exactly."""
     docs = spark.createDataFrame(CORPUS, "doc_id bigint, text string")
-    merges, words = B.bpe_train(docs, n_merges=10)
-    vocab = words.select("word")
-    enc = {r.word: list(r.syms) for r in B.bpe_encode_words(vocab, merges).collect()}
-    train = {r.word: list(r.syms) for r in words.collect()}
+    with cache.scope(spark):
+        merges, words = B.bpe_train(docs, n_merges=10)
+        vocab = words.select("word")
+        enc = {r.word: list(r.syms) for r in B.bpe_encode_words(vocab, merges).collect()}
+        train = {r.word: list(r.syms) for r in words.collect()}
     assert enc == train
 
 
 def test_encode_out_of_vocabulary(spark):
     docs = spark.createDataFrame(CORPUS, "doc_id bigint, text string")
-    merges, _words = B.bpe_train(docs, n_merges=10)
+    with cache.scope(spark):
+        merges, _words = B.bpe_train(docs, n_merges=10)
     oov = spark.createDataFrame(
         [("lowest",), ("slow",), ("zzz",), ("newestlow",)], "word string"
     )
@@ -99,14 +105,15 @@ def test_encode_out_of_vocabulary(spark):
 
 def test_token_counts_accounting(spark):
     docs = spark.createDataFrame(CORPUS, "doc_id bigint, text string")
-    merges, words = B.bpe_train(docs, n_merges=10)
-    rows = {r.doc_id: r for r in B.bpe_token_counts(docs, n_merges=10).collect()}
+    with cache.scope(spark):
+        merges, words = B.bpe_train(docs, n_merges=10)
+        rows = {r.doc_id: r for r in B.bpe_token_counts(docs, n_merges=10).collect()}
+        by_words = sum(r.cnt * len(r.syms) for r in words.collect())
     # every doc keeps a row; empty doc counts (0, 0)
     assert set(rows) == {i for i, _t in CORPUS}
     assert (rows[5].n_words, rows[5].n_tokens) == (0, 0)
     # corpus-total tokens == sum over the word table of cnt * len(syms)
     total = sum(r.n_tokens for r in rows.values())
-    by_words = sum(r.cnt * len(r.syms) for r in words.collect())
     assert total == by_words
     # per-doc spot check against the Python encoder
     for doc_id, text in CORPUS[:3]:
@@ -118,7 +125,7 @@ def test_train_raises_when_corpus_exhausts(spark):
     docs = spark.createDataFrame([(0, "ab ab")], "doc_id bigint, text string")
     import pytest
 
-    with pytest.raises(ValueError, match="exhausted"):
+    with cache.scope(spark), pytest.raises(ValueError, match="exhausted"):
         # 'ab' has 2 pairs -> fully merged after 2 rounds; round 3 must not
         # silently return a short vocabulary
         B.bpe_train(docs, n_merges=3)
@@ -132,7 +139,8 @@ def test_stream_encode_equals_batch(spark, tmp_path):
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     docs = spark.createDataFrame(CORPUS, "doc_id bigint, text string")
-    merges, _words = B.bpe_train(docs, n_merges=10)
+    with cache.scope(spark):
+        merges, _words = B.bpe_train(docs, n_merges=10)
 
     schema = StructType(
         [StructField("doc_id", LongType()), StructField("text", StringType())]
@@ -163,8 +171,9 @@ def test_stream_encode_equals_batch(spark, tmp_path):
     }
     assert got == exp
     # in-vocab rows also match the broadcast-map batch path exactly
-    batch = {
-        r.doc_id: (r.n_words, r.n_tokens)
-        for r in B.bpe_token_counts(docs, n_merges=10).collect()
-    }
+    with cache.scope(spark):
+        batch = {
+            r.doc_id: (r.n_words, r.n_tokens)
+            for r in B.bpe_token_counts(docs, n_merges=10).collect()
+        }
     assert all(got[i] == batch[i] for i, _t in CORPUS)

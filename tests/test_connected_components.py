@@ -5,6 +5,7 @@ against a plain union-find over the same edge lists — crafted shapes that
 stress the algorithm (long chains, where naive min-propagation would need
 O(diameter) rounds; hub stars, where neighbor-collecting designs blow up;
 multiple components; reversed/duplicated edges) plus a seeded random graph.
+Each round is a `cache.checkpoint`, so every call holds a cache scope.
 """
 
 from __future__ import annotations
@@ -13,6 +14,7 @@ import random
 
 import pytest
 
+from html_parser_spark import cache
 from html_parser_spark.functions import dedup as DD
 
 
@@ -41,13 +43,17 @@ def _uf_clusters(edges):
     return out
 
 
+def _clusters(df) -> dict:
+    with cache.scope(df.sparkSession):
+        return {
+            r.doc_id: (r.rep_doc_id, r.cluster_size)
+            for r in DD.connected_components(df).collect()
+        }
+
+
 def _run(spark, edges):
     df = spark.createDataFrame(edges, "doc_a: long, doc_b: long")
-    got = {
-        r.doc_id: (r.rep_doc_id, r.cluster_size)
-        for r in DD.connected_components(df).collect()
-    }
-    assert got == _uf_clusters(edges)
+    assert _clusters(df) == _uf_clusters(edges)
 
 
 def test_chain_and_star_and_components(spark):
@@ -78,14 +84,10 @@ def test_self_and_null_edges_ignored(spark):
     df = spark.createDataFrame(
         [(1, 1), (2, 3), (None, 4), (5, None)], "doc_a: long, doc_b: long"
     )
-    got = {
-        r.doc_id: (r.rep_doc_id, r.cluster_size)
-        for r in DD.connected_components(df).collect()
-    }
-    assert got == {2: (2, 2), 3: (2, 2)}
+    assert _clusters(df) == {2: (2, 2), 3: (2, 2)}
 
 
 def test_no_fixpoint_raises(spark):
     df = spark.createDataFrame([(2, 1)], "doc_a: long, doc_b: long")
-    with pytest.raises(RuntimeError):
+    with cache.scope(spark), pytest.raises(RuntimeError, match="fixpoint"):
         DD.connected_components(df, max_rounds=0)

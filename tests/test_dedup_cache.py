@@ -1,9 +1,11 @@
-"""Owner-scoped cache lifetimes (html_parser_spark/cache.py): library code
-persists through `cache.persist`, the code that runs the action owns the
-scope, and every intermediate persisted inside it is released when the scope
-exits — no garbage-collector timing involved. A driver loop calling
-jaccard_pairs / minhash_lsh_pairs per input slice must not accumulate cached
-tables, and the composed registry queries must run their parse kernel once."""
+"""Owner-scoped lifetimes (html_parser_spark/cache.py): library code
+persists through `cache.persist` and truncates lineage through
+`cache.checkpoint`, the code that runs the action owns the scope, and every
+intermediate held inside it is released when the scope exits — no
+garbage-collector timing involved. A driver loop calling jaccard_pairs /
+minhash_lsh_pairs per input slice must not accumulate cached tables, an
+iterative operator holds one round at a time, and the composed registry
+queries must run their parse kernel once."""
 
 from __future__ import annotations
 
@@ -15,6 +17,7 @@ import pytest
 
 import __spark_entry__ as entrymod
 from html_parser_spark import cache
+from html_parser_spark.functions import bpe as B
 from html_parser_spark.functions import dedup as DD
 from tests.test_gate_oracles import SF_DIR
 
@@ -31,9 +34,8 @@ def _persistent_ids(spark) -> set:
 
 def _fresh(spark) -> set:
     """Close any scope a registry entry left open, drop stray caches, and
-    return the persistent RDD ids that remain. Those are local checkpoints
-    of earlier tests (Spark's ContextCleaner releases them, not a scope),
-    so a released scope must leave exactly these behind."""
+    return the persistent RDD ids that remain, which a released scope must
+    leave exactly as they are."""
     with cache.scope(spark):
         pass
     spark.catalog.clearCache()
@@ -53,7 +55,7 @@ def test_jaccard_cache_released_on_scope_exit(spark):
         assert not _cache_empty(spark), "shingle table should be cached during use"
         assert _persistent_ids(spark) - before, "cached rows should be materialized"
     assert _cache_empty(spark), "scope exit must drop the cache entry"
-    assert _persistent_ids(spark) <= before, "scope exit must unpersist its RDDs"
+    assert _persistent_ids(spark) == before, "scope exit must unpersist its RDDs"
 
 
 def test_same_plan_twins_cached_until_scope_exit(spark):
@@ -73,7 +75,7 @@ def test_same_plan_twins_cached_until_scope_exit(spark):
             assert "InMemoryTableScan" in plan
         assert not _cache_empty(spark), "twins must stay cached inside the scope"
     assert _cache_empty(spark), "scope exit must release the shared entry"
-    assert _persistent_ids(spark) <= before
+    assert _persistent_ids(spark) == before
 
 
 def test_minhash_lsh_cache_released_in_loop(spark):
@@ -86,7 +88,7 @@ def test_minhash_lsh_cache_released_in_loop(spark):
             held.append(len(_persistent_ids(spark) - before))
     assert held[0] > 0 and held == [held[0]] * 3, f"caches accumulate: {held}"
     assert _cache_empty(spark), "repeated calls must not accumulate cached tables"
-    assert _persistent_ids(spark) <= before
+    assert _persistent_ids(spark) == before
 
 
 def test_no_scope_caches_nothing(spark):
@@ -98,8 +100,74 @@ def test_no_scope_caches_nothing(spark):
     before = _fresh(spark)
     got = sorted(DD.jaccard_pairs(corpus, threshold_permille=300).collect())
     assert _cache_empty(spark)
-    assert _persistent_ids(spark) <= before
+    assert _persistent_ids(spark) == before
     assert got == want and len(got) == 190
+
+
+def _checkpoint_rdd_id(df) -> int:
+    return df._jdf.queryExecution().logical().rdd().id()
+
+
+def test_checkpoint_needs_a_scope(spark):
+    """A checkpoint's truncation is not optional, so with no owner to
+    release it `cache.checkpoint` raises instead of leaving it to the GC."""
+    _fresh(spark)
+    with pytest.raises(RuntimeError, match="cache.scope"):
+        cache.checkpoint(spark.range(3))
+
+
+def test_release_frees_a_held_checkpoint(spark):
+    before = _fresh(spark)
+    with cache.scope(spark):
+        df = cache.checkpoint(spark.range(5))
+        assert _persistent_ids(spark) - before == {_checkpoint_rdd_id(df)}
+        cache.release(spark.range(5))  # not held: left alone
+        assert _persistent_ids(spark) - before == {_checkpoint_rdd_id(df)}
+        cache.release(df)
+        assert _persistent_ids(spark) == before
+        with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+            df.collect()  # a read after release fails, never returns rows
+    assert _persistent_ids(spark) == before
+
+
+def test_loops_hold_one_round(spark):
+    """connected_components and bpe_train release each round once the next
+    is materialised: on return exactly one of their checkpoints is live
+    (bpe_train's is the word table it returns), and the scope exit frees it."""
+    before = _fresh(spark)
+    chain = [(i + 1, i) for i in range(40)]  # several star rounds
+    with cache.scope(spark):
+        DD.connected_components(
+            spark.createDataFrame(chain, "doc_a long, doc_b long")
+        ).collect()
+        assert len(_persistent_ids(spark) - before) == 1
+    assert _persistent_ids(spark) == before
+    with cache.scope(spark):
+        _merges, words = B.bpe_train(_corpus(spark), n_merges=6)
+        assert _persistent_ids(spark) - before == {_checkpoint_rdd_id(words)}
+        assert words.count() > 0
+    assert _persistent_ids(spark) == before
+
+
+@pytest.mark.skipif(
+    not os.path.exists(f"{SF_DIR}/documents.parquet"), reason="testdata unavailable"
+)
+def test_registry_scope_exit_leaves_nothing(spark):
+    """The queries whose operators checkpoint (BPE training, connected
+    components) leave no persistent RDD once their entry's scope closes."""
+    before = _fresh(spark)
+    names = [
+        "text_bpe_vocab",
+        "text_bpe_tokens",
+        "corpus_pack_bpe",
+        "pipeline_extract_bpe",
+        "dedup_clusters",
+    ]
+    for name in names:
+        assert entrymod.queries()[name](spark, SF_DIR).collect()
+        with cache.scope(spark):
+            pass
+        assert _persistent_ids(spark) == before, name
 
 
 def _seq(s) -> list:
@@ -145,11 +213,18 @@ def test_parse_kernel_runs_once_per_registry_call(spark, name):
 
 
 def test_one_cache_site():
-    """`.persist(` / `.cache(` appear in the package and the registry only
-    inside cache.py (callers write `cache.persist(`): every cache has an
-    owner."""
-    files = [*(REPO / "html_parser_spark").rglob("*.py"), REPO / "__spark_entry__.py"]
-    direct = re.compile(r"(?<!\bcache)\.(?:persist|cache)\(")
+    """`.persist(` / `.cache(` / `localCheckpoint(` appear in the package,
+    the registry, bench.py, jobs/ and tools/ only inside cache.py (callers
+    write `cache.persist(` / `cache.checkpoint(`): every materialised
+    intermediate has an owner."""
+    files = [
+        *(REPO / "html_parser_spark").rglob("*.py"),
+        REPO / "__spark_entry__.py",
+        REPO / "bench.py",
+        *(REPO / "jobs").glob("*.py"),
+        *(REPO / "tools").glob("*.py"),
+    ]
+    direct = re.compile(r"(?<!\bcache)\.(?:persist|cache)\(|localCheckpoint\(")
     offenders = [
         str(p.relative_to(REPO))
         for p in files

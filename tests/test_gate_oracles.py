@@ -65,6 +65,13 @@ def test_query_matches_oracle(spark, con, name):
     assert rows_to_multiset(df.columns, rows) == rows_to_multiset(ocols, orows)
 
 
+def test_type_drift_reports_a_describe_error(con):
+    """An oracle DuckDB cannot DESCRIBE is a drift entry, never a skipped
+    type check."""
+    drift = type_drift(None, con, "SELECT * FROM no_such_table")
+    assert len(drift) == 1 and drift[0].startswith("DESCRIBE raised")
+
+
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0

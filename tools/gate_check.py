@@ -73,11 +73,12 @@ def rows_to_multiset(cols, rows):
 
 def type_drift(spark_df, con, sql) -> list[str]:
     """Column-type mismatches between the Spark schema and the oracle's
-    DESCRIBE output (planning only — the query is not executed)."""
+    DESCRIBE output (planning only — the query is not executed). A DESCRIBE
+    that raises is one drift entry: the types went unchecked."""
     try:
         desc = con.execute(f"DESCRIBE ({sql})").fetchall()
-    except Exception:
-        return []  # DESCRIBE unsupported for this statement: skip the check
+    except Exception as e:
+        return [f"DESCRIBE raised {type(e).__name__}: {str(e)[:200]}"]
     otypes = {r[0]: r[1] for r in desc}
     out = []
     for f in spark_df.schema.fields:
