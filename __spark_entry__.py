@@ -5,2246 +5,90 @@ training-data-pipeline operators) as (spark, sf_dir) -> DataFrame. Each
 call opens a fresh cache scope (html_parser_spark/cache.py) that holds
 the query's persisted and checkpointed intermediates until the next entry
 is called, so run one query at a time and act on its result before calling
-the next;
-`plan_pins()` and `PYTHON_CROSSINGS` hold each query's physical-plan
-contract (checked by tests/test_gate_oracles.py on the unexecuted plan);
-`oracle_sql()` holds the DuckDB-runnable reconstruction of the SAME answer
-from first principles, so the Spark kernels are verified end-to-end:
+the next.
+`oracle_sql()` holds each query's DuckDB-runnable reconstruction of the
+SAME answer from first principles, so the Spark kernels are verified
+end-to-end; `plan_pins()` and `PYTHON_CROSSINGS` hold its physical-plan
+contract (checked by tests/test_gate_oracles.py on the unexecuted plan).
 
-  - extract_*        : the HTML tokenizer/tree/span kernel over an interleaved
-                       table derived from `documents` (text is pure [a-z ] at
-                       every sf, so wrapped HTML has a closed-form expected
-                       extraction an ANSI-SQL oracle can reconstruct).
-  - generate_*       : the reference's serializer quirks (</img>, 'undefined').
-  - dedup_*          : exact md5, n-gram Jaccard, MinHash+LSH, SimHash,
-                       embedding-cosine (sign-bucketed) — planted duplicates.
-  - text_*           : language-ID, quality metrics, token counts, rolling-
-                       hash fingerprint (integer/md5-exact arithmetic).
-  - similarity_*     : brute-force cosine top-k + hyperplane-LSH ANN. Cosines
-                       are deterministic left-folds — bit-identical doubles
-                       in Spark and DuckDB (verified), no tolerance needed.
-  - multimodal_*     : binary-column metadata + REAL pure-Python decodes
-                       (BMP/PNG/GIF/baseline+progressive JPEG/WAV/Y4M) and
-                       container walks (MP3 frames, MP4 boxes).
-  - events_*         : rollup, sessionize, as-of join (DuckDB native ASOF
-                       as the oracle), banded range join, rolling window,
-                       pivot, ROLLUP, exact + histogram quantiles.
-  - sketch_*         : HyperLogLog / Count-Min / Bloom with cell-exact
-                       oracles (md5-derived state, integer folds).
-  - kmeans/pagerank  : fixed-round iterative algorithms made
-                       associative-exact (integer/quantized arithmetic)
-                       so the oracle replays every round bit-for-bit.
-  - layout_*         : PDF text extraction; Z-order bucket stats.
-  - extract_main     : boilerplate-strip heuristics branch; the wrap's
-                       main-content output has a closed form, so it IS
-                       oracle-checked (as is extract_main_boilerplate).
+All four are views of the `Query` records in registry/ (one module per
+domain: extract, dedup, vectors, text, corpus, multimodal, events, web,
+tpch), where each query's builder, oracle, pins and crossings are
+declared together.
 """
 
 from __future__ import annotations
 
 import functools
-import io
 import os
-import re
 import sys
 from collections.abc import Callable
-from contextlib import redirect_stdout
 
 # the package lives next to this file; make imports robust to the caller's cwd
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from html_parser_spark import cache
-from html_parser_spark.functions import dedup as DD
-from html_parser_spark.functions import joins as JN
-from html_parser_spark.functions.clustering import (
-    kmeans_oracle_sql as _kmeans_oracle_sql,
-    semantic_dedup_oracle_sql as _semantic_dedup_oracle_sql,
-)
-from html_parser_spark.functions import similarity as SIM
-from html_parser_spark.functions import sketch as SK
-from html_parser_spark.functions import text as TXT
-from html_parser_spark.kernels.extract import ExtractOptions
-from html_parser_spark.sources import warc as WARC
-from html_parser_spark.operators.extract import (
-    exploded_spans,
-    extract_spans,
-)
-from html_parser_spark.operators.multimodal import attach_payload, media_metadata
-from html_parser_spark.operators.serialize import serialize_html
-from html_parser_spark.sources.interleave import (
-    interleave_with_errors,
-    interleaved_from_documents,
+from html_parser_spark.operators.extract import exploded_spans, extract_spans
+from html_parser_spark.sources.interleave import interleaved_from_documents
+
+from registry import RECORDS, documents
+from registry import (  # noqa: F401  (importing a domain module records its queries)
+    corpus, dedup, events, extract, multimodal, text, tpch, vectors, web,
 )
 
+# queries() order; the driver samples a 50-entry prefix (the first block)
+ORDER = """
+    kmeans_embeddings sketch_bloom_decontaminate dedup_minhash_lsh
+    multimodal_webp_meta multimodal_avif_meta text_bpe_vocab text_bpe_tokens
+    dedup_semantic sample_importance corpus_pack_bpe multimodal_webp_frames
+    pipeline_extract_bpe web_robots_decisions web_crawl_schedule
+    corpus_filter_funnel web_sitemap_frontier web_anchor_text
+    web_crawl_delta graph_hits dedup_exact dedup_ngram_jaccard
+    dedup_fuzzy_join dedup_clusters dedup_chunks dedup_repeated_spans
+    dedup_simhash dedup_embedding_cosine text_pii_redact text_card_redact
+    text_tfidf text_bm25_search source_warc_roundtrip decontaminate_overlap
+    text_bigram_lm sample_stratified corpus_mix corpus_pack_sequences
+    similarity_topk similarity_lsh_topk similarity_ivf_topk
+    embedding_quantize similarity_quantized_topk graph_pagerank
+    sketch_countmin_words transform_plugins parse_nodes parse_attrs
+    extract_quirks extract_html_tables diff_transform diff_attrs
+    multimodal_meta multimodal_image_decode
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _docs_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents, repartitioned to the session's parallelism — for the
-    CPU-bound Python-kernel queries (media synth/decode, PDF parse): the
-    small-sf table is a single parquet split, which would run the whole
-    mapInArrow chain in ONE task; the round-robin Exchange costs ~nothing
-    against a 32x kernel speedup and is exactly what a production run over
-    few-but-huge input files needs too."""
-    return _docs(spark, sf_dir).repartition(spark.sparkContext.defaultParallelism)
-
-
-def _embs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    text_repetition text_topk_terms source_jsonl_roundtrip text_fingerprint
+    text_phrase_search text_langid text_quality extract_flagship
+    extract_errors extract_metrics extract_main extract_main_boilerplate
+    generate_roundtrip text_langid_multiscript multimodal_exif_meta
+    url_canonical_dedup url_domain_stats multimodal_id3_meta extract_links
+    text_tokens_multiscript graph_domain_pagerank corpus_chunk_windows
+    multimodal_png_decode multimodal_gif_decode multimodal_gif_frames
+    multimodal_jpeg_decode multimodal_jpeg_progressive multimodal_audio_meta
+    multimodal_video_frames multimodal_mp3_meta multimodal_mp4_meta
+    layout_pdf_text pipeline_clean_corpus pipeline_training_batches
+    tpch_pricing_summary tpch_top_orders tpch_regional_revenue
+    tpch_late_orders tpch_inactive_customers events_hourly events_sessionize
+    events_asof_attribution events_error_burst events_rolling_value
+    events_gapfill events_json_props events_funnel events_retention_cohorts
+    events_scd2_history events_pivot_hourly events_rollup_totals
+    events_quantiles events_hist_quantiles events_mad_outliers
+    layout_zorder_stats sketch_hll_users sketch_hll_user_minutes
+""".split()
+if sorted(ORDER) != sorted(RECORDS):
+    raise RuntimeError(f"ORDER and the records differ: {set(ORDER) ^ set(RECORDS)}")
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full extraction over the interleaved table at sf0.001."""
-    docs = _docs(spark, "/root/testdata/sf0.001")
+    docs = documents(spark, "/root/testdata/sf0.001")
     return exploded_spans(extract_spans(interleaved_from_documents(docs)))
-
-
-# ---------------------------------------------------------------------------
-# queries()
-# ---------------------------------------------------------------------------
-
-def q_extract_flagship(spark, sf_dir):
-    out = extract_spans(interleaved_from_documents(_docs(spark, sf_dir)))
-    return exploded_spans(out)
-
-
-def q_extract_errors(spark, sf_dir):
-    out = extract_spans(interleave_with_errors(_docs(spark, sf_dir)))
-    return out.select("doc_id", "status", "error", "n_spans")
-
-
-def q_extract_metrics(spark, sf_dir):
-    ex = q_extract_flagship(spark, sf_dir)
-    return ex.groupBy("kind").agg(
-        F.count("*").alias("n_spans"),
-        F.sum(F.expr("coalesce(length(text), 0)")).alias("total_chars"),
-    )
-
-
-def q_generate_roundtrip(spark, sf_dir):
-    did = F.col("doc_id").cast("string")
-    df = _docs(spark, sf_dir).select(
-        did.alias("doc_id"),
-        F.concat(
-            F.lit("<p>"), F.col("text"), F.lit('</p><img src="thumb-'), did, F.lit('.png"/>')
-        ).alias("html"),
-    )
-    return serialize_html(df)
-
-
-def q_extract_main(spark, sf_dir):
-    """Heuristics branch on the standard wrap. Closed form: the h1 title
-    (3 words >= MIN_BLOCK_WORDS, zero link density) and body paragraphs are
-    all content blocks, media is adjacent to content — so the output equals
-    the strict extraction here, and the SAME recon oracle applies. The
-    boilerplate-dropping behavior is gated by extract_main_boilerplate."""
-    out = extract_spans(
-        interleaved_from_documents(_docs(spark, sf_dir)),
-        options=ExtractOptions(mode="main"),
-    )
-    return exploded_spans(out)
-
-
-def q_extract_main_boilerplate(spark, sf_dir):
-    """Boilerplate strip, oracle-checked: nav + footer + link-farm sidebar
-    wrap the body; main-content extraction must emit ONLY the body text."""
-    did = F.col("doc_id").cast("string")
-    df = _docs(spark, sf_dir).select(
-        did.alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("text").alias("kind"),
-                F.concat(
-                    F.lit(
-                        '<div class="page"><nav><a href=h>home link</a>'
-                        "<a href=a>about link</a></nav><p>"
-                    ),
-                    F.col("text"),
-                    F.lit(
-                        '</p><div class="sidebar"><a href=x>promo one</a></div>'
-                        "<footer><p>site footer boilerplate words</p></footer></div>"
-                    ),
-                ).alias("text"),
-                F.lit(None).cast("string").alias("media_ref"),
-                F.lit(0).alias("offset"),
-            )
-        ).alias("spans"),
-    )
-    return exploded_spans(extract_spans(df, options=ExtractOptions(mode="main")))
-
-
-def q_dedup_exact(spark, sf_dir):
-    return DD.exact_groups(DD.plant_dups(_docs(spark, sf_dir)))
-
-
-def q_dedup_jaccard(spark, sf_dir):
-    return DD.jaccard_pairs(DD.plant_dups(_docs(spark, sf_dir)))
-
-
-def q_dedup_minhash_lsh(spark, sf_dir):
-    # minhash_lsh_pairs runs no job while its plan is built; AQE picks the
-    # verify joins' strategy from the cached stage sizes when it executes
-    return DD.minhash_lsh_pairs(DD.plant_dups(_docs(spark, sf_dir)))
-
-
-def q_fuzzy_join(spark, sf_dir):
-    """Cross-TABLE near-duplicate join (functions/dedup.fuzzy_join): the
-    planted copies (doc_id >= 1e6) as an 'incoming batch' fuzzy-joined
-    against the original corpus as the 'lake' — every planted exact copy
-    must match its original at 1000 permille and every near copy above
-    threshold. Same banded two-shuffle machinery as dedup_minhash_lsh;
-    bucket expansion is left-ids x right-ids only."""
-    corpus = DD.plant_dups(_docs(spark, sf_dir))
-    return DD.fuzzy_join(
-        corpus.where(f"doc_id < {DD.EXACT_OFFSET}"),
-        corpus.where(f"doc_id >= {DD.EXACT_OFFSET}"),
-    )
-
-
-def q_dedup_clusters(spark, sf_dir):
-    """Pairs -> duplicate clusters: transitive closure of the LSH near-dup
-    pairs via alternating large-star/small-star connected components
-    (O(log n) rounds). rep_doc_id = component min = canonical survivor;
-    the oracle mirrors it with a DuckDB recursive CTE over the same
-    pair set."""
-    pairs = DD.minhash_lsh_pairs(DD.plant_dups(_docs(spark, sf_dir)))
-    return DD.connected_components(pairs)
-
-
-def q_dedup_chunks(spark, sf_dir):
-    """C4/RefinedWeb-style sub-document dedup: 5-word-aligned chunks,
-    global first-occurrence survives, documents reassembled from surviving
-    chunks (a fully-duplicate doc keeps a row with n_kept=0, text_dedup='').
-    Runs over the planted corpus so exact copies exercise the empty path."""
-    return DD.chunk_dedup(DD.plant_dups(_docs(spark, sf_dir)))
-
-
-def q_dedup_repeated_spans(spark, sf_dir):
-    """Lee-et-al-style sub-document dedup: maximal word spans whose every
-    10-gram occurs >= 2 times corpus-wide (functions/dedup.repeated_spans —
-    two shuffles: one window count on the 60-bit gram hash, one islands
-    merge on doc_id). Runs over the planted corpus so exact copies mine
-    whole-document spans and near copies mine all-but-the-tail spans.
-    The spread repartition sits AFTER the plant-dups union: the gram-build
-    + md5 projection is the CPU-heavy stage and a single parquet split
-    would run it in ONE task (the PNG-query lesson); spreading before the
-    union would clone the exchange into all three legs."""
-    corpus = DD.plant_dups(_docs(spark, sf_dir)).repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    return DD.repeated_spans(corpus)
-
-
-def q_dedup_simhash(spark, sf_dir):
-    return DD.simhash(_docs(spark, sf_dir))
-
-
-def q_dedup_embedding(spark, sf_dir):
-    return DD.embedding_dups(DD.plant_embedding_dups(_embs(spark, sf_dir)))
-
-
-def q_dedup_semantic(spark, sf_dir):
-    """SemDeDup end-to-end (Abbas et al. 2023): k-means-blocked cosine
-    dedup over the planted-duplicate embedding corpus — cluster with the
-    bit-exact quantized kmeans, compare pairs only within a cluster, keep
-    each duplicate pair's farther-from-centroid member. The oracle replays
-    clustering AND the keep rule (the kmeans chain is MATERIALIZED so the
-    pair self-join doesn't re-expand it — the CLAUDE.md CTE invariant)."""
-    from html_parser_spark.functions.clustering import semantic_dedup
-
-    return semantic_dedup(DD.plant_embedding_dups(_embs(spark, sf_dir)))
-
-
-def q_text_langid(spark, sf_dir):
-    return TXT.lang_id(_docs(spark, sf_dir))
-
-
-def q_corpus_chunk_windows(spark, sf_dir):
-    """Sliding-window chunking (functions/sampling.chunk_windows): 16-word
-    windows at stride 12 (4-word overlap) — the context-window prep for
-    long-document training. Word-aligned, every word in >=1 chunk, short
-    docs yield exactly one chunk. Narrow posexplode projection, no
-    shuffle."""
-    from html_parser_spark.functions.sampling import chunk_windows
-
-    return chunk_windows(_docs(spark, sf_dir), window=16, stride=12)
-
-
-def q_graph_domain_pagerank(spark, sf_dir):
-    """The composed web-pipeline story end-to-end: synth_urls gives each
-    doc its own page URL, extract_links runs the REAL parser over anchor
-    HTML, both canonicalize through functions/url.py, hosts map to stable
-    ids (site_number * 2 + tld), and the resulting domain edge list feeds
-    the fixed-round integer PageRank — extraction -> canonical link graph
-    -> iterative algorithm in one plan, every stage exact (the oracle
-    replays the synth closed-form and then the SAME integer rounds via
-    the shared _pagerank_rounds_sql chain)."""
-    from html_parser_spark.functions.graph import pagerank
-    from html_parser_spark.functions.url import canonicalize_urls, synth_urls
-
-    hid = (
-        "cast(regexp_extract({h}, 'site([0-9]+)', 1) as bigint) * 2 "
-        "+ if({h} like '%.org', 1, 0)"
-    )
-    src = canonicalize_urls(synth_urls(_docs(spark, sf_dir))).select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.expr(hid.format(h="host_canon")).alias("src"),
-    )
-    dst = q_extract_links(spark, sf_dir).select(
-        "doc_id",
-        F.expr(
-            hid.format(h="regexp_extract(href_canon, '://([^/]*)', 1)")
-        ).alias("dst"),
-    )
-    edges = src.join(dst, "doc_id").select("src", "dst")
-    nodes = spark.range(10).select(F.col("id").alias("node"))
-    return pagerank(nodes, edges)
-
-
-def q_text_tokens_multiscript(spark, sf_dir):
-    """Script-aware token counting over the multiscript unicode corpus
-    (functions/text.token_count_script_aware): CJK/kana/Hangul characters
-    count one token each (unsegmented scripts), everything else counts
-    whitespace words — the budget-correct number a multilingual pipeline
-    needs (whitespace tokens undercount CJK ~10x). Closed forms on the
-    synth corpus: space-delimited scripts -> 6 words both columns;
-    cjk/hangul (doc_id % 8 in (6,7)) -> 6 ws words but 24 aware tokens."""
-    from html_parser_spark.functions.text import (
-        synth_multiscript,
-        token_count_script_aware,
-    )
-
-    uni = synth_multiscript(_docs(spark, sf_dir))
-    return token_count_script_aware(uni, "utext")
-
-
-def q_extract_links(spark, sf_dir):
-    """Link-graph extraction — THE web-pipeline operator between parsing
-    and PageRank: each doc gets deterministic <a href> anchors (messy raw
-    URLs: uppercase scheme/host, www., explicit default port, utm param,
-    trailing slash), the REAL parser kernel builds node + attr tables,
-    and (doc_id, link_idx, href, href_canon, anchor_text) is assembled
-    relationally — anchors from the node table, hrefs from the attr
-    table, anchor text from child Text nodes, canonical form via
-    functions/url.canonicalize_urls. The oracle replays the synth
-    closed-form, so the parser+attr-quirk+canonicalizer composition is
-    pinned end-to-end."""
-    from pyspark.sql import Window
-
-    from html_parser_spark.functions.url import canonicalize_urls
-    from html_parser_spark.operators.parse import (
-        exploded_attrs,
-        exploded_nodes,
-        parse_nodes,
-    )
-
-    w = "split(text, ' ')"
-    k_eff = f"least(1 + pmod(doc_id, 3), size({w}) div 2)"
-    anchors_html = (
-        f"transform(sequence(0, {k_eff} - 1), j -> concat("
-        "'<a href=\"HTTP://WWW.Site', pmod(doc_id + j, 5), '.COM:80/p', j, "
-        f"'/?utm_source=x&q=', j % 2, '\">', element_at({w}, cast(2*j+2 as int)), "
-        "'</a>'))"
-    )
-    df = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.expr(
-            f"concat('<div><p>', element_at({w}, 1), '</p>', "
-            f"array_join(if({k_eff} > 0, {anchors_html}, array()), ''), '</div>')"
-        ).alias("html"),
-    )
-    # persisted: the parse kernel feeds the node table AND the attr table;
-    # without the barrier each consumer re-runs the Python crossing
-    parsed = cache.persist(parse_nodes(df))
-    nodes = exploded_nodes(parsed).where("status = 'ok'")
-    anchors = nodes.where("tag = 'a'").select(
-        "doc_id",
-        F.col("node_id").alias("a_id"),
-        (
-            F.row_number()
-            .over(Window.partitionBy("doc_id").orderBy("node_id"))
-            .cast("int")
-            - 1
-        ).alias("link_idx"),
-    )
-    hrefs = (
-        exploded_attrs(parsed)
-        .where("name = 'href'")
-        .select("doc_id", F.col("node_id").alias("a_id"), F.col("value").alias("href"))
-    )
-    texts = nodes.where("kind = 'Text'").select(
-        "doc_id", F.col("pid").alias("a_id"), F.col("content").alias("anchor_text")
-    )
-    links = (
-        anchors.join(hrefs, ["doc_id", "a_id"])
-        .join(texts, ["doc_id", "a_id"])
-        .select("doc_id", "link_idx", "href", "anchor_text")
-    )
-    return canonicalize_urls(links, "href").select(
-        "doc_id",
-        "link_idx",
-        "href",
-        F.col("url_canon").alias("href_canon"),
-        "anchor_text",
-    )
-
-
-def q_web_anchor_text(spark, sf_dir):
-    """Anchor-text aggregation per canonical target URL
-    (functions/url.anchor_stats) over the REAL-parser link table from
-    q_extract_links — the link-derived target-page representation (modal
-    anchor + anchor vocabulary + in-link count) that search and pretraining
-    pipelines attach to every URL. Two map-side-combined Exchanges; the
-    oracle replays the extract_links closed form and re-derives the modal
-    anchor with an explicit (cnt DESC, anchor ASC) row_number so the
-    min(struct(-cnt, anchor)) tie-break is pinned exactly."""
-    from html_parser_spark.functions.url import anchor_stats
-
-    return anchor_stats(q_extract_links(spark, sf_dir))
-
-
-def q_web_crawl_delta(spark, sf_dir):
-    """Incremental-recrawl snapshot delta (functions/crawl.crawl_delta):
-    documents as snapshot A, a deterministic synth_snapshot2 as snapshot B
-    (doc_id%17 lanes: ==3 gone, in(1,5) edited, ==7 spawns a new page),
-    full-outer join on doc_id over ~50-byte scan-side digests (text never
-    shuffles), rolled up to per-(source, status) doc and char budgets —
-    the operator that decides which documents re-enter the extraction
-    kernel each day. Oracle replays the synth lanes and the join in SQL."""
-    from html_parser_spark.functions.crawl import crawl_delta, synth_snapshot2
-
-    docs = _docs(spark, sf_dir).select("doc_id", "source", "text")
-    return crawl_delta(docs, synth_snapshot2(docs))
-
-
-def q_url_canonical_dedup(spark, sf_dir):
-    """URL canonicalization + canonical-key dedup (functions/url.py): the
-    first dedup pass of a web corpus. Synthetic URLs from the fresh
-    md5(text||'url') stream plant real canonical collisions (case, www.,
-    default ports, utm params, param order, trailing slash, fragments all
-    vary per doc); the GENERIC regexp canonicalizer collapses them and
-    ONE window Exchange attaches group size + min-doc_id representative.
-    The oracle derives the canonical form CLOSED-FORM from the same md5
-    bytes — parser pinned against constructor, never parse-vs-parse."""
-    from html_parser_spark.functions.url import canonical_dedup, synth_urls
-
-    return canonical_dedup(synth_urls(_docs(spark, sf_dir)))
-
-
-def q_url_domain_stats(spark, sf_dir):
-    """Per-domain crawl profile over the canonicalized URLs: page count,
-    distinct canonical pages, and the duplicate-crawl excess per
-    host_canon — the groupBy(domain) shape every crawl scheduler runs.
-    Map-side combinable count + distinct-agg on the canonical key."""
-    from html_parser_spark.functions.url import canonicalize_urls, synth_urls
-
-    return (
-        canonicalize_urls(synth_urls(_docs(spark, sf_dir)))
-        .groupBy("host_canon")
-        .agg(
-            F.expr("count(*)").alias("n_urls"),
-            F.expr("count(distinct url_canon)").alias("n_pages"),
-            F.expr("count(*) - count(distinct url_canon)").alias("n_dup_crawls"),
-        )
-    )
-
-
-def q_web_robots(spark, sf_dir):
-    """Robots-exclusion audit (functions/robots.py): RFC 9309 longest-match
-    allow/disallow per URL — the crawl-governance pass a compliance audit
-    re-runs over the corpus ("was this URL allowed when fetched?"). Each
-    canonical host gets a deterministic robots.txt from the fresh
-    md5(host||'robots') stream (1-4 rules over four path shapes: prefix,
-    $-anchored exact, * wildcard, root); the GENERIC path-pattern -> regex
-    translator + row-local filter/array_max evaluate the decision against
-    the BROADCAST per-host rule arrays — the URL corpus never shuffles.
-    The oracle re-derives rules and the longest-match winner CLOSED-FORM
-    from the same md5 bytes (constructor pins parser, like url.py)."""
-    from html_parser_spark.functions.robots import robots_decisions, synth_robots
-    from html_parser_spark.functions.url import canonicalize_urls, synth_urls
-
-    urls = synth_urls(_docs(spark, sf_dir))
-    hosts = canonicalize_urls(urls, "url").select("host_canon").distinct()
-    return robots_decisions(urls, synth_robots(hosts, "host_canon"))
-
-
-def q_web_crawl_schedule(spark, sf_dir):
-    """Politeness-scheduled crawl frontier composed from the robots pass:
-    the ALLOWED URLs, sequenced per host FIFO (by doc_id) with the host's
-    crawl_delay as inter-fetch spacing -> eta_sec, the earliest time each
-    fetch may start under RFC 9309 politeness (delay defaults to 1 s when
-    the robots.txt sets none). The schedule is the per-host work queue a
-    distributed fetcher shards by host — exactly ONE URL-side Exchange
-    (the host window; the robots decision itself is broadcast-row-local),
-    so frontier construction at crawl scale is a single shuffle."""
-    from pyspark.sql import Window
-
-    from html_parser_spark.functions.robots import robots_decisions, synth_robots
-    from html_parser_spark.functions.url import canonicalize_urls, synth_urls
-
-    urls = synth_urls(_docs(spark, sf_dir))
-    hosts = canonicalize_urls(urls, "url").select("host_canon").distinct()
-    dec = robots_decisions(urls, synth_robots(hosts, "host_canon"))
-    w = Window.partitionBy("host_canon").orderBy("doc_id")
-    return (
-        dec.where("allowed = 1")
-        .withColumn("fetch_seq", F.row_number().over(w).cast("int"))
-        .withColumn(
-            "eta_sec",
-            F.expr(
-                "cast((fetch_seq - 1) * coalesce(crawl_delay, 1) as bigint)"
-            ),
-        )
-        .select("doc_id", "url", "host_canon", "fetch_seq", "eta_sec")
-    )
-
-
-def q_web_sitemap_frontier(spark, sf_dir):
-    """Sitemap-discovery frontier (functions/robots.py sitemap half): a
-    deterministic <urlset> XML document per canonical host (fresh
-    md5(host||'sitemap') stream, 1-4 <url> entries over the SAME /p<d>
-    path space the robots rules target), parsed back with the REAL tree
-    kernel — not a regex — then each recovered (loc, lastmod, priority)
-    entry is annotated with the host's RFC 9309 longest-match decision
-    via the broadcast rule arrays. Sitemap discovery + robots governance
-    are the two halves of crawl-frontier construction; this query pins
-    their composition AND the parser's behavior on non-HTML markup. The
-    oracle re-derives entries and winners closed-form from the same md5
-    bytes (constructor pins parser)."""
-    from html_parser_spark.functions.robots import (
-        sitemap_entries,
-        sitemap_frontier,
-        synth_robots,
-        synth_sitemaps,
-    )
-    from html_parser_spark.functions.url import canonicalize_urls, synth_urls
-
-    urls = synth_urls(_docs(spark, sf_dir))
-    hosts = canonicalize_urls(urls, "url").select("host_canon").distinct()
-    ent = sitemap_entries(synth_sitemaps(hosts, "host_canon"))
-    return sitemap_frontier(ent, synth_robots(hosts, "host_canon"))
-
-
-def q_text_langid_multiscript(spark, sf_dir):
-    """Unicode script identification (functions/text.synth_multiscript +
-    script_profile): documents.text is pure [a-z ] by pinned invariant, so
-    this derives a deterministic UNICODE column from a fresh
-    md5(text||'uni<i>') stream — one writing system per doc_id % 8 (Latin,
-    accented, Greek, Cyrillic, Hebrew/RTL, Arabic/RTL, CJK, Hangul) — and
-    runs the generic per-codepoint-range classifier over it. The oracle
-    rebuilds the identical string with chr()+array_to_string and replays
-    the counts/argmax from the codepoint list, pinning both engines'
-    unicode plumbing (UTF-16BE decode vs chr) against each other."""
-    return TXT.script_profile(TXT.synth_multiscript(_docs(spark, sf_dir)))
-
-
-def q_text_quality(spark, sf_dir):
-    return TXT.quality(_docs(spark, sf_dir))
-
-
-def q_text_repetition(spark, sf_dir):
-    """Gopher-style repetition filter signals, shuffle-free per doc."""
-    return TXT.repetition(_docs(spark, sf_dir))
-
-
-def q_corpus_filter_funnel(spark, sf_dir):
-    """The curation funnel a pretraining pipeline runs on a new crawl
-    snapshot, composed end-to-end in one plan: language-ID -> quality
-    gate -> repetition gate -> exact-dedup keep-rule, reported as
-    per-source cumulative survivor counts + the kept token budget.
-    Every stage reuses the standalone operators' exact expressions
-    (functions/text.py shares the fragments), so this one driver row
-    pins all four gates AND their composition. Two Exchanges total:
-    the md5 keep-window and the map-side-combinable groupBy(source)."""
-    return TXT.filter_funnel(_docs(spark, sf_dir))
-
-
-def q_text_pii_redact(spark, sf_dir):
-    """PII scrubbing over deterministically planted synthetic PII (the
-    corpus text is pure [a-z ], so emails/ids are injected from md5
-    streams first — same fixture style as plant_dups/multimodal)."""
-    return TXT.pii_redact(TXT.plant_pii(_docs(spark, sf_dir)))
-
-
-def q_text_card_redact(spark, sf_dir):
-    """Checksum-gated PII: 16-digit card candidates planted from md5
-    streams (Luhn-valid for even doc_ids, plus an always-invalid second
-    candidate every 4th doc); only candidates passing the Luhn checksum
-    redact to '<CARD>' — invalid digit runs must survive verbatim
-    (functions/text.plant_cards / card_redact)."""
-    return TXT.card_redact(TXT.plant_cards(_docs(spark, sf_dir)))
-
-
-def q_text_fingerprint(spark, sf_dir):
-    return TXT.fingerprint(_docs(spark, sf_dir))
-
-
-def q_text_topk_terms(spark, sf_dir):
-    """Corpus-level term document-frequency, top-20 by (df desc, term) —
-    a deterministic cut even with ties (the corpus vocabulary is larger
-    than the cut, so the tie-break genuinely decides the boundary)."""
-    return TXT.doc_frequency(_docs(spark, sf_dir), top_n=20)
-
-
-def q_text_tfidf(spark, sf_dir):
-    """Per-doc top-3 salient terms by the integer TF-IDF ratio."""
-    return TXT.tf_idf_topk(_docs(spark, sf_dir), k=3)
-
-
-def q_source_warc(spark, sf_dir):
-    """WARC container round trip (sources/warc.py): pack the documents
-    table into multi-record gzipped WARC files (one groupBy), split them
-    back into records with one mapInArrow crossing, and emit per-record
-    facts — the header-declared length and the md5 of the actual payload
-    BYTES, so the oracle's closed-form (length(text), md5(text)) verifies
-    both the container writer and the reader end-to-end."""
-    files = WARC.synth_warc_files(_docs(spark, sf_dir), compress=True)
-    recs = WARC.warc_records(files).where("status = 'ok'")
-    return recs.select(
-        F.expr("cast(regexp_extract(url, '/([0-9]+)$', 1) as bigint)").alias(
-            "doc_id"
-        ),
-        "url",
-        "content_length",
-        "payload_md5",
-    )
-
-
-def q_source_jsonl(spark, sf_dir):
-    """JSONL ingestion with corrupt-record tolerance: serialize each doc
-    to a JSON line (to_json), corrupt every doc_id%10==7 line by
-    truncation, and parse back with strict-schema from_json — malformed
-    lines surface as null rows (counted, never raised), the
-    permissive-ingest contract every crawl pipeline needs. All JVM-side."""
-    lines = _docs(spark, sf_dir).select(
-        F.expr(
-            "case when doc_id % 10 = 7 "
-            "then substr(to_json(struct(doc_id, text)), 1, "
-            "     length(to_json(struct(doc_id, text))) - 2) "
-            "else to_json(struct(doc_id, text)) end"
-        ).alias("line")
-    )
-    parsed = lines.select(
-        F.expr("from_json(line, 'doc_id bigint, text string')").alias("r")
-    )
-    return parsed.select(
-        F.col("r.doc_id").alias("doc_id"),
-        F.expr("cast(r.doc_id is not null as int)").alias("parsed_ok"),
-        F.expr("cast(length(r.text) as int)").alias("text_len"),
-    )
-
-
-def q_text_bm25(spark, sf_dir):
-    """Top-10 documents for the fixed query ('join','hash','scan') under
-    log-free integer BM25 (functions/text.bm25_topk — zero wide shuffles:
-    narrow per-doc tf projections, one broadcast totals row, TakeOrdered)."""
-    return TXT.bm25_topk(_docs(spark, sf_dir))
-
-
-def q_text_phrase(spark, sf_dir):
-    """Exact-phrase matches for '"hash join"' (functions/text.phrase_search
-    — zero shuffles: indexed-transform position sets + shift-and-intersect
-    adjacency, all scan-side)."""
-    return TXT.phrase_search(_docs(spark, sf_dir))
-
-
-def q_corpus_pack(spark, sf_dir):
-    """Sequence packing — the training-batch prep step: assign documents
-    to fixed 512-token bins, greedy in doc_id order WITHIN each source
-    (bin_id = floor(cumulative tokens before this doc / 512)), using the
-    same BPE-ish subword count as text.quality. One Exchange on source;
-    the cumulative window and the bin arithmetic are in-partition. At
-    100 TB the packing key widens to (source, shard) so no single window
-    partition holds a whole source — the assignment stays deterministic
-    because the cumsum is per-key."""
-    from pyspark.sql import Window
-
-    toks = TXT.with_words(_docs(spark, sf_dir)).select(
-        "doc_id",
-        "source",
-        F.expr("aggregate(words, 0L, (s, w) -> s + div(length(w) + 3, 4))").alias(
-            "n_tokens"
-        ),
-    )
-    w = (
-        Window.partitionBy("source")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return (
-        toks.withColumn(
-            "cum_before", F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
-        )
-        .withColumn("bin_id", F.expr("cast(div(cum_before, 512) as bigint)"))
-        .withColumn("bin_offset", F.expr("cast(cum_before % 512 as bigint)"))
-        .select("doc_id", "source", "n_tokens", "bin_id", "bin_offset")
-    )
-
-
-def q_pipeline_extract_bpe(spark, sf_dir):
-    """The engine's actual end-use composed into ONE pipeline: web corpus
-    -> interleaved wrap -> REAL extraction kernel -> per-doc clean text
-    (text spans re-joined in span order) -> BPE vocabulary trained on the
-    EXTRACTED corpus -> per-document real subword token budget
-    (doc_id, n_words, n_tokens). The oracle rebuilds the extracted text
-    closed-form (title + text + text, per the _RECON contract) and replays
-    the 16 training rounds in SQL over that derived corpus — so one gate
-    row pins parser kernel, reassembly, trainer, and encoder end-to-end.
-    One Python crossing, train-side shuffles only; the counting side stays
-    the row-local broadcast-map projection."""
-    from html_parser_spark.functions.bpe import bpe_token_counts
-    from html_parser_spark.operators.extract import extract_spans
-    from html_parser_spark.operators.pipeline import reassembled_documents
-
-    ex = extract_spans(interleaved_from_documents(_docs(spark, sf_dir)))
-    return bpe_token_counts(reassembled_documents(ex))
-
-
-def q_corpus_pack_bpe(spark, sf_dir):
-    """Sequence packing on REAL subword counts: same greedy 512-token
-    binning as corpus_pack_sequences, but n_tokens is the trained-BPE
-    count (functions/bpe.py) instead of the length//4 word proxy — the
-    packing a production batch-prep job would actually run (VERDICT r04
-    item 3). Corpus side stays row-local (broadcast vocab map) + the ONE
-    window Exchange on source."""
-    from pyspark.sql import Window
-
-    from html_parser_spark.functions.bpe import bpe_token_counts
-
-    toks = bpe_token_counts(
-        _docs(spark, sf_dir), extra_cols=("source",)
-    ).select("doc_id", "source", "n_tokens")
-    w = (
-        Window.partitionBy("source")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return (
-        toks.withColumn(
-            "cum_before", F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
-        )
-        .withColumn("bin_id", F.expr("cast(div(cum_before, 512) as bigint)"))
-        .withColumn("bin_offset", F.expr("cast(cum_before % 512 as bigint)"))
-        .select("doc_id", "source", "n_tokens", "bin_id", "bin_offset")
-    )
-
-
-def q_decontaminate(spark, sf_dir):
-    """Benchmark decontamination over the documents table: the benchmark is
-    every 50th doc (a deterministic eval split), and a training doc is
-    contaminated when it shares >= 5 distinct 3-gram shingles with any
-    benchmark doc. Benchmark members flag themselves; near/exact planted
-    copies of benchmark docs flag too (that is the point of the step)."""
-    docs = _docs(spark, sf_dir)
-    return DD.decontaminate(docs, docs.where(F.expr("doc_id % 50 = 0")))
-
-
-def q_text_bigram_lm(spark, sf_dir):
-    """Corpus-trained bigram LM fluency score (log-free integer ratios —
-    IEEE ln is not cross-engine bit-exact, the same move as text_tfidf)."""
-    return TXT.bigram_lm_score(_docs(spark, sf_dir))
-
-
-def q_sample_importance(spark, sf_dir):
-    """DSIR-shaped importance resampling end-to-end (Xie et al. 2023):
-    hashed-bigram buckets, target = the src0..src3 slice (a 'curated
-    quality' stand-in), Laplace-smoothed integer micro-ratio weights,
-    row-local broadcast-map scoring (corpus never shuffles), deterministic
-    top-120 selection with (score DESC, doc_id ASC) tie-break. The oracle
-    replays the exact bucket counts, clamped weights, and fold —
-    all-integer arithmetic, so both engines agree bit-for-bit."""
-    from html_parser_spark.functions.sampling import importance_resample
-
-    return importance_resample(
-        _docs(spark, sf_dir),
-        "source in ('src0', 'src1', 'src2', 'src3')",
-        top_k=120,
-    ).select(
-        "doc_id", "source",
-        F.expr(
-            "cast(case when source in ('src0','src1','src2','src3') "
-            "then 1 else 0 end as int)"
-        ).alias("is_target"),
-        "n_grams", "score", "rank",
-    )
-
-
-def q_sample_stratified(spark, sf_dir):
-    """Deterministic hash-based stratified sampling: each source strata
-    keeps permille = 100 + 40 * (source_number % 10) of its docs by md5
-    bucket — reproducible row-for-row by the SQL oracle (no RNG), stable
-    under re-runs (lineage-friendly)."""
-    from html_parser_spark.functions.sampling import (
-        keep_bucket_expr,
-        stratified_sample,
-    )
-
-    docs = _docs(spark, sf_dir).select("doc_id", "source")
-    permille = "100 + 40 * (cast(substr(source, 4) as int) % 10)"
-    return stratified_sample(docs, permille).select(
-        "doc_id", "source", F.expr(keep_bucket_expr()).alias("bucket")
-    )
-
-
-def q_corpus_mix(spark, sf_dir):
-    """Token-budget corpus mixing (data recipes): weight w_s = 1 + src# % 4,
-    budget = the corpus's own total token count, so at any sf some sources
-    down-sample (rate < 1) and some up-sample (epoch repeats, rate > 1).
-    Weights/budget come from two bounded control-plane actions (a distinct
-    over ~20 sources, a 1-row sum); the oracle recomputes both in SQL."""
-    from html_parser_spark.functions.sampling import corpus_mix
-
-    docs = _docs(spark, sf_dir).select("doc_id", "source", "text")
-    srcs = [r.source for r in docs.select("source").distinct().collect()]
-    weights = {s: 1 + int(s[3:]) % 4 for s in srcs}
-    budget = docs.agg(
-        F.expr("cast(sum(size(split(text, ' '))) as bigint)").alias("b")
-    ).first().b
-    return corpus_mix(docs, weights, int(budget))
-
-
-def q_similarity_topk(spark, sf_dir):
-    return SIM.brute_force_topk(_embs(spark, sf_dir))
-
-
-def q_similarity_lsh(spark, sf_dir):
-    return SIM.hyperplane_lsh_topk(_embs(spark, sf_dir))
-
-
-def q_embedding_quantize(spark, sf_dir):
-    """int8 scalar quantization of the embedding corpus: per-vector scale
-    plus a base-31 mod-p fold hash that pins EVERY code element (arrays
-    themselves stay out of the compare surface)."""
-    q = SIM.quantize_int8(_embs(spark, sf_dir))
-    return q.select(
-        "vec_id",
-        "scale",
-        "code_hash",
-        F.expr("cast(size(filter(codes, c -> abs(c) = 127L)) as int)").alias(
-            "n_sat"
-        ),
-    )
-
-
-def q_similarity_quantized(spark, sf_dir):
-    return SIM.quantized_topk(_embs(spark, sf_dir))
-
-
-def q_sketch_countmin(spark, sf_dir):
-    """Count-Min frequency sketch over every word occurrence in the
-    corpus (functions/sketch.countmin_cells/estimate): d=4 rows x 16
-    buckets, estimate = min over rows, probes = the top-20 exact terms.
-    w=16 against the 31-term vocabulary forces real collisions, so the
-    gate pins the OVERestimates too, not just the happy path."""
-    docs = _docs(spark, sf_dir)
-    terms = docs.selectExpr("explode(split(text, ' ')) as term").where(
-        "term <> ''"
-    )
-    cells = SK.countmin_cells(terms, "term")
-    exact = terms.groupBy("term").agg(
-        F.expr("cast(count(*) as bigint)").alias("exact")
-    )
-    probes = exact.orderBy(F.desc("exact"), "term").limit(20)
-    return SK.countmin_estimate(cells, probes)
-
-
-_BLOOM_W = "split(text, ' ')"
-_BLOOM_BIGRAMS = (
-    f"zip_with({_BLOOM_W}, slice({_BLOOM_W}, 2, greatest(size({_BLOOM_W}) - 1, 0)), "
-    "(x, y) -> concat(x, ' ', y))"
-)
-_BLOOM_TRIGRAMS = (
-    f"filter(zip_with({_BLOOM_BIGRAMS}, "
-    f"slice({_BLOOM_W}, 3, greatest(size({_BLOOM_W}) - 2, 0)), "
-    "(xy, z) -> concat(xy, ' ', z)), s -> s is not null)"
-)
-
-
-def q_sketch_bloom(spark, sf_dir):
-    """Bloom-filter membership pruning (functions/sketch.bloom_build/
-    probe): the reference set (trigram shingles of every 200th doc) folds
-    into 16 int64 words that BROADCAST to the probe side — the shuffle
-    join becomes a map-side test. The gate pins the probe counts AND the
-    exact-join counts, so the false-positive excess is verified
-    cell-for-cell, not just bounded. Trigrams via zip_with-over-slices
-    (the O(n^2) lambda-index trap does not apply — CLAUDE.md)."""
-    docs = _docs(spark, sf_dir)
-    # persisted: the trigram table feeds the filter build, the probe, AND
-    # the exact-count join — without the barrier the explode+md5 chain
-    # runs three times over the corpus
-    tri = cache.persist(
-        docs.selectExpr("doc_id", f"explode(array_distinct({_BLOOM_TRIGRAMS})) as g")
-    )
-    bench = tri.where("doc_id % 200 = 0").select("g").distinct()
-    bloom = SK.bloom_build(bench, "g")
-    # ONE pass over the trigram table serves all three counts: the exact
-    # membership is a broadcast-left-join marker and the bloom test is a
-    # row-local forall over the broadcast filter words, so a single
-    # groupBy(doc_id) Exchange remains (the previous shape ran a separate
-    # semi-join branch + second groupBy + second join-back — VERDICT r03 #4)
-    marked = SK.bloom_probe(tri, "g", bloom).join(
-        F.broadcast(bench.withColumn("_inb", F.lit(1))), on="g", how="left"
-    )
-    per_doc = marked.groupBy("doc_id").agg(
-        F.expr("cast(count(*) as int)").alias("n_shingles"),
-        F.expr("cast(sum(bloom_hit) as int)").alias("n_bloom_hits"),
-        F.expr("cast(sum(coalesce(_inb, 0)) as int)").alias("n_exact"),
-    )
-    return (
-        docs.select("doc_id")
-        .join(per_doc, on="doc_id", how="left")
-        .na.fill({"n_shingles": 0, "n_bloom_hits": 0, "n_exact": 0})
-    )
-
-
-def q_graph_pagerank(spark, sf_dir):
-    """Fixed-round integer PageRank (functions/graph.py) over a
-    deterministic 2-out synthetic graph on the documents ids (doc i ->
-    (31i+7) mod N and (17i+3) mod N). Integer micro-units + floored
-    divisions make every round associative-exact, so the oracle replays
-    the iterations EXACTLY — same trick as kmeans_embeddings."""
-    from html_parser_spark.functions.graph import pagerank
-
-    docs = _docs(spark, sf_dir).select(F.col("doc_id").alias("node"))
-    n = docs.count()  # control-plane scalar (bounded, like checkpoint IO)
-    edges = docs.selectExpr(
-        "node as src",
-        f"explode(array((node * 31 + 7) % {n}, (node * 17 + 3) % {n})) as dst",
-    )
-    return pagerank(docs, edges)
-
-
-def q_graph_hits(spark, sf_dir):
-    """Fixed-round integer HITS (functions/graph.hits) over the same
-    deterministic 2-out graph as q_graph_pagerank — hubs vs authorities as
-    the crawl-prioritization twin of PageRank. L-infinity (max) integer
-    normalization instead of L2 keeps every round associative-exact, so
-    the oracle replays the iterations bit-for-bit (_hits_rounds_sql);
-    per-round CTEs are AS MATERIALIZED per the CLAUDE.md re-expansion
-    invariant (each round references the previous one three times)."""
-    from html_parser_spark.functions.graph import hits
-
-    docs = _docs(spark, sf_dir).select(F.col("doc_id").alias("node"))
-    n = docs.count()  # control-plane scalar (bounded, like checkpoint IO)
-    edges = docs.selectExpr(
-        "node as src",
-        f"explode(array((node * 31 + 7) % {n}, (node * 17 + 3) % {n})) as dst",
-    )
-    return hits(docs, edges)
-
-
-def q_text_bpe_vocab(spark, sf_dir):
-    """BPE vocabulary training (functions/bpe.py): 16 deterministic merge
-    rounds over the corpus word-count table — Sennrich-2016 exactly, ties
-    (count DESC, left, right). Output (rank, left, right, merged,
-    pair_count) is the artifact a pipeline persists to encode future
-    shards. The oracle replays every round in SQL (pair-count groupBy +
-    argmax + list_reduce re-segmentation), so the whole iterative train
-    is bit-exact-checked, kmeans-style."""
-    from html_parser_spark.functions.bpe import bpe_vocab
-
-    return bpe_vocab(_docs(spark, sf_dir))
-
-
-def q_text_bpe_tokens(spark, sf_dir):
-    """Per-document REAL subword token counts (doc_id, n_words, n_tokens)
-    under the BPE vocabulary trained on the same corpus — the count a
-    training pipeline budgets sequence packing with (the old word-proxy
-    undercounts long words). Corpus side is row-local: per-word token
-    lengths fold into ONE broadcast map row (the bloom-probe shape), no
-    wide shuffle beyond training's distinct-word groupBy."""
-    from html_parser_spark.functions.bpe import bpe_token_counts
-
-    return bpe_token_counts(_docs(spark, sf_dir))
-
-
-def _bpe_rounds_sql(
-    n_merges: int = 16, source: str = "documents", lead_ctes: str = ""
-) -> str:
-    """The fixed-round BPE train replay as chained CTEs: w0 = the
-    distinct-word table with initial char+'</w>' symbol arrays; each round
-    r = pair-count groupBy (p{r}) + deterministic argmax (m{r}) +
-    list_reduce re-segmentation (w{r}) — the left-to-right non-overlapping
-    merge fold mirrors functions/bpe.merge_fold_expr exactly (DuckDB list
-    slices are INCLUSIVE, hence acc[:-2] to drop the merged-away tail).
-    Ends without a final SELECT so every BPE oracle shares the chain.
-    `source` names the (doc_id, text) table the train reads; `lead_ctes`
-    injects derived-corpus CTEs (e.g. the extraction reconstruction)
-    between WITH and w0."""
-    sql = f"""
-        WITH {lead_ctes} w0 AS MATERIALIZED (
-          SELECT word, CAST(COUNT(*) AS BIGINT) AS cnt,
-                 list_transform(range(1, length(word) + 1),
-                                i -> substr(word, CAST(i AS INT), 1))
-                   || ['</w>'] AS syms
-          FROM (SELECT unnest(string_split(text, ' ')) AS word FROM {source})
-          WHERE word <> '' GROUP BY word
-        )"""
-    for r in range(1, n_merges + 1):
-        sql += f""",
-        p{r} AS (
-          SELECT s.a AS a, s.b AS b, SUM(cnt) AS pcnt FROM (
-            SELECT cnt, unnest(list_transform(range(1, len(syms)),
-              i -> struct_pack(a := syms[CAST(i AS INT)],
-                               b := syms[CAST(i AS INT) + 1]))) AS s
-            FROM w{r - 1} WHERE len(syms) > 1
-          ) GROUP BY s.a, s.b
-        ),
-        m{r} AS (
-          SELECT CAST({r} AS INTEGER) AS rank, a, b, pcnt FROM p{r}
-          ORDER BY pcnt DESC, a, b LIMIT 1
-        ),
-        w{r} AS MATERIALIZED (
-          SELECT word, cnt,
-            list_reduce(list_transform(syms, s -> [s]),
-              (acc, x) -> CASE WHEN acc[-1] = m.a AND x[1] = m.b
-                          THEN acc[:-2] || [m.a || m.b]
-                          ELSE acc || x END) AS syms
-          FROM w{r - 1} CROSS JOIN m{r} m
-        )"""
-    return sql
-
-
-def _pagerank_rounds_sql(n_iter: int = 3) -> str:
-    """The fixed-round integer PageRank replay, generic over upstream CTEs
-    `v(node)` and `e(src, dst)` — shared by the synthetic-graph oracle and
-    the extracted-domain-graph oracle (same rounds, different edges)."""
-    sql = """,
-        dg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS out_deg
-               FROM e GROUP BY 1),
-        p0 AS (SELECT node, CAST(1000000 AS BIGINT) AS pr FROM v)"""
-    prev = "p0"
-    for it in range(1, n_iter + 1):
-        sql += f""",
-        c{it} AS (
-          SELECT e.dst, CAST(SUM(p.pr // d.out_deg) AS BIGINT) AS s
-          FROM e JOIN dg d USING (src)
-          JOIN {prev} p ON p.node = e.src
-          GROUP BY 1
-        ),
-        p{it} AS (
-          SELECT v.node,
-                 CAST(150000 + (850 * COALESCE(c.s, 0)) // 1000 AS BIGINT)
-                   AS pr
-          FROM v LEFT JOIN c{it} c ON c.dst = v.node
-        )"""
-        prev = f"p{it}"
-    sql += f"""
-        SELECT p.node, p.pr AS pr_micro,
-               CAST(COALESCE(i.in_deg, 0) AS INTEGER) AS in_deg
-        FROM {prev} p
-        LEFT JOIN (SELECT dst, CAST(COUNT(*) AS INTEGER) AS in_deg
-                   FROM e GROUP BY 1) i ON i.dst = p.node
-    """
-    return sql
-
-
-def _hits_rounds_sql(n_iter: int = 2) -> str:
-    """Fixed-round integer HITS replay, generic over upstream CTEs
-    `v(node)` and `e(src, dst)` — mirror of functions/graph.hits. Each
-    round's auth/hub CTEs are referenced multiple times downstream, so
-    every per-round CTE is AS MATERIALIZED (the CLAUDE.md BPE-replay
-    invariant: un-materialized chains re-expand exponentially)."""
-    sql = """,
-        h0 AS MATERIALIZED (
-          SELECT node, CAST(1000000 AS BIGINT) AS h FROM v)"""
-    for it in range(1, n_iter + 1):
-        sql += f""",
-        ar{it} AS MATERIALIZED (
-          SELECT e.dst, CAST(SUM(p.h) AS BIGINT) AS ar
-          FROM e JOIN h{it - 1} p ON p.node = e.src GROUP BY 1
-        ),
-        a{it} AS MATERIALIZED (
-          SELECT v.node,
-                 CAST(COALESCE(c.ar, 0) * 1000000 //
-                      (SELECT greatest(max(ar), 1) FROM ar{it})
-                      AS BIGINT) AS a
-          FROM v LEFT JOIN ar{it} c ON c.dst = v.node
-        ),
-        hr{it} AS MATERIALIZED (
-          SELECT e.src, CAST(SUM(p.a) AS BIGINT) AS hr
-          FROM e JOIN a{it} p ON p.node = e.dst GROUP BY 1
-        ),
-        h{it} AS MATERIALIZED (
-          SELECT v.node,
-                 CAST(COALESCE(c.hr, 0) * 1000000 //
-                      (SELECT greatest(max(hr), 1) FROM hr{it})
-                      AS BIGINT) AS h
-          FROM v LEFT JOIN hr{it} c ON c.src = v.node
-        )"""
-    sql += f"""
-        SELECT a.node, a.a AS auth_micro, h.h AS hub_micro
-        FROM a{n_iter} a JOIN h{n_iter} h USING (node)
-    """
-    return sql
-
-
-def _pagerank_oracle_sql(n_iter: int = 3) -> str:
-    """DuckDB mirror of q_graph_pagerank (same integer rounds)."""
-    return (
-        """
-        WITH cnt AS (SELECT COUNT(*) AS n FROM documents),
-        v AS (SELECT doc_id AS node FROM documents),
-        e AS (
-          SELECT node AS src,
-                 unnest([(node * 31 + 7) % (SELECT n FROM cnt),
-                         (node * 17 + 3) % (SELECT n FROM cnt)]) AS dst
-          FROM v
-        )"""
-        + _pagerank_rounds_sql(n_iter)
-    )
-
-
-def _domain_pagerank_oracle_sql(n_iter: int = 3) -> str:
-    """DuckDB mirror of q_graph_domain_pagerank: the edge set replays the
-    extract_links + synth_urls closed forms (src = the doc's own
-    canonical host, dst = each link's canonical host; host id =
-    site_number * 2 + (tld = org)), then the SAME integer rounds."""
-    return (
-        """
-        WITH t AS (
-          SELECT doc_id,
-                 CAST('0x' || substr(md5(text || 'url'), 7, 2) AS INTEGER)
-                   AS b3,
-                 CAST('0x' || substr(md5(text || 'url'), 9, 2) AS INTEGER)
-                   AS b4,
-                 least(1 + doc_id % 3,
-                       len(string_split(text, ' ')) // 2) AS k_eff
-          FROM documents
-        ),
-        l AS (SELECT doc_id, b3, b4, unnest(range(0, k_eff)) AS j FROM t),
-        e AS (
-          SELECT (b3 % 4) * 2 + (b4 % 2) AS src,
-                 ((doc_id + j) % 5) * 2 AS dst
-          FROM l
-        ),
-        v AS (SELECT unnest(range(0, 10)) AS node)"""
-        + _pagerank_rounds_sql(n_iter)
-    )
-
-
-def q_kmeans_embeddings(spark, sf_dir):
-    """Fixed-round Lloyd k-means over the embedding corpus
-    (functions/clustering.py): the ITERATIVE-algorithm shape with a FULL
-    bit-exact SQL oracle (quantized integer-valued doubles + left-fold
-    distances + (dist, cid) tie-breaks — see module docstring). k=8
-    broadcast centroids, map-side per-dim-sum updates, 2 rounds."""
-    from html_parser_spark.functions.clustering import kmeans_assign
-
-    return kmeans_assign(_embs(spark, sf_dir))
-
-
-def q_transform_plugins(spark, sf_dir):
-    """Plugin pipeline (SURVEY §2 X1-X3 as span-stream rewrites): drop media,
-    cap at 3 spans, reassign dense order — closed form on the wrap."""
-    from html_parser_spark.operators.transform import (
-        drop_kind,
-        transform_spans,
-        truncate_spans,
-    )
-
-    out = extract_spans(interleaved_from_documents(_docs(spark, sf_dir)))
-    return exploded_spans(transform_spans(out, [drop_kind("media"), truncate_spans(3)]))
-
-
-def q_parse_nodes(spark, sf_dir):
-    """Full id/pid flat-node table for the wrapped docs (parser parity P1-P7:
-    ids in tokenization order, root=1 omitted, end tags emit no rows). The
-    wrap has a closed-form node table the SQL oracle reconstructs."""
-    from html_parser_spark.operators.parse import exploded_nodes, parse_nodes
-
-    did = F.col("doc_id").cast("string")
-    title = F.array_join(F.slice(F.split(F.col("text"), " "), 1, 3), " ")
-    df = _docs(spark, sf_dir).select(
-        did.alias("doc_id"),
-        F.concat(
-            F.lit("<div><h1>"), title, F.lit("</h1><p>"), F.col("text"), F.lit("</p></div>")
-        ).alias("html"),
-    )
-    return exploded_nodes(parse_nodes(df))
-
-
-def q_extract_html_tables(spark, sf_dir):
-    """Structured extraction: HTML TABLES to relational rows. Each doc gets
-    a deterministic <table> (3 cells per <tr>, one word per <td>, up to 4
-    rows), the REAL parser kernel builds the flat node table, and the cell
-    grid (doc_id, row_idx, col_idx, cell_text) is reconstructed
-    RELATIONALLY from (node_id, pid) — the point being that the parser
-    output is an ordinary DataFrame you can join/window over, no tree
-    walking outside the kernel. row/col come from row_number() over
-    node_id order (tokenization order = document order, parity P1-P7)."""
-    from pyspark.sql import Window
-
-    from html_parser_spark.operators.parse import exploded_nodes, parse_nodes
-
-    w = "split(text, ' ')"
-    n_cells = f"least(12, (size({w}) div 3) * 3)"
-    cells = (
-        f"transform(slice({w}, 1, {n_cells}), (x, i) -> concat("
-        "case when i % 3 = 0 then '<tr>' else '' end, "
-        "'<td>', x, '</td>', "
-        "case when i % 3 = 2 then '</tr>' else '' end))"
-    )
-    df = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.expr(f"concat('<table>', array_join({cells}, ''), '</table>')").alias(
-            "html"
-        ),
-    )
-    nodes = exploded_nodes(parse_nodes(df)).where("status = 'ok'")
-    trs = nodes.where("tag = 'tr'").select(
-        "doc_id",
-        F.col("node_id").alias("tr_id"),
-        (
-            F.row_number()
-            .over(Window.partitionBy("doc_id").orderBy("node_id"))
-            .cast("int")
-            - 1
-        ).alias("row_idx"),
-    )
-    tds = nodes.where("tag = 'td'").select(
-        "doc_id",
-        F.col("node_id").alias("td_id"),
-        F.col("pid").alias("tr_id"),
-    )
-    texts = nodes.where("kind = 'Text'").select(
-        "doc_id", F.col("pid").alias("td_id"), F.col("content").alias("cell_text")
-    )
-    grid = (
-        tds.join(trs, ["doc_id", "tr_id"])
-        .join(texts, ["doc_id", "td_id"])
-        .withColumn(
-            "col_idx",
-            (
-                F.row_number()
-                .over(Window.partitionBy("doc_id", "tr_id").orderBy("td_id"))
-                .cast("int")
-                - 1
-            ),
-        )
-    )
-    return grid.select("doc_id", "row_idx", "col_idx", "cell_text")
-
-
-def q_extract_quirks(spark, sf_dir):
-    """Reference quirks, end-to-end: entities NOT decoded, comments/CDATA/
-    interpolation dropped, `]]` CDATA close, whitespace-only text kept."""
-    did = F.col("doc_id").cast("string")
-    df = _docs(spark, sf_dir).select(
-        did.alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("text").alias("kind"),
-                F.concat(
-                    F.lit("<p>&amp; "),
-                    F.col("text"),
-                    F.lit("</p><!-- c --><div><![CDATA[x]] </div>{{ v }}"),
-                ).alias("text"),
-                F.lit(None).cast("string").alias("media_ref"),
-                F.lit(0).alias("offset"),
-            )
-        ).alias("spans"),
-    )
-    return exploded_spans(extract_spans(df))
-
-
-def q_diff_transform(spark, sf_dir):
-    """Pair each document with a planted old version (doc_id%3==0: last word
-    dropped) and run the reference-exact BFS positional diff. For the
-    single-text wrap the actual reference behavior has a closed form: the
-    <del> is clobbered by the <ins> (insert splice(-1) quirk), leaving
-    '<p><ins>new</ins></p>' — which the SQL oracle reconstructs."""
-    from html_parser_spark.operators.diff import diff_documents
-
-    did = F.col("doc_id").cast("string")
-    docs = _docs(spark, sf_dir)
-    df_new = docs.select(
-        did.alias("doc_id"),
-        F.concat(F.lit("<p>"), F.col("text"), F.lit("</p>")).alias("html"),
-    )
-    old_text = F.when(
-        F.expr("doc_id % 3 = 0"),
-        F.expr("array_join(slice(split(text, ' '), 1, size(split(text, ' ')) - 1), ' ')"),
-    ).otherwise(F.col("text"))
-    df_old = docs.select(
-        did.alias("doc_id"),
-        F.concat(F.lit("<p>"), old_text, F.lit("</p>")).alias("html"),
-    )
-    return diff_documents(df_new, df_old).select(
-        "doc_id", "diff_html", "status", "error", "n_ins", "n_del"
-    )
-
-
-def q_parse_attrs(spark, sf_dir):
-    """Attribute table end-to-end, exercising the reference's four attr
-    quirks (tokenize.ts:103-120) as output columns: `data-x-id` truncates to
-    name `id` (last \\w+ run before =), valueless `nameonly` is dropped,
-    quoted-empty `class=""` -> NULL value, unquoted-empty `alt=` -> ''."""
-    from html_parser_spark.operators.parse import exploded_attrs, parse_nodes
-
-    did = F.col("doc_id").cast("string")
-    df = _docs(spark, sf_dir).select(
-        did.alias("doc_id"),
-        F.concat(
-            F.lit('<div data-x-id="a'), did, F.lit('" keep="k"><p class="" nameonly>'),
-            F.col("text"),
-            F.lit("</p><img src=u alt=/></div>"),
-        ).alias("html"),
-    )
-    return exploded_attrs(parse_nodes(df))
-
-
-def q_diff_attrs(spark, sf_dir):
-    """diffAttributes as queryable output (transformDiff.ts:84-125): pair
-    each doc with an old version whose <p> carries different attributes —
-    equal tag, equal text, so the BFS diff only annotates. Closed form per
-    doc: added q (data-q truncates to q), removed id, updated class->new
-    value 'b', in the annotation dict's construction order."""
-    from html_parser_spark.operators.diff import (
-        diff_documents,
-        exploded_attr_changes,
-    )
-
-    did = F.col("doc_id").cast("string")
-    docs = _docs(spark, sf_dir)
-    df_new = docs.select(
-        did.alias("doc_id"),
-        F.concat(
-            F.lit('<p class="b" data-q="y'), did, F.lit('">'), F.col("text"), F.lit("</p>")
-        ).alias("html"),
-    )
-    df_old = docs.select(
-        did.alias("doc_id"),
-        F.concat(
-            F.lit('<p class="a" id="x'), did, F.lit('">'), F.col("text"), F.lit("</p>")
-        ).alias("html"),
-    )
-    return exploded_attr_changes(diff_documents(df_new, df_old))
-
-
-def q_similarity_ivf(spark, sf_dir):
-    return SIM.ivf_topk(_embs(spark, sf_dir))
-
-
-def q_multimodal_meta(spark, sf_dir):
-    return media_metadata(attach_payload(_docs(spark, sf_dir)))
-
-
-def q_multimodal_image(spark, sf_dir):
-    """REAL image decode end-to-end: synthesize a 24-bit BMP per document
-    (dimensions + fill from md5(text), one white corner pixel) and decode
-    it with the pure-Python kernel (core/image.py). Closed form: n_px = w*h,
-    per-channel sum = fill*(n_px-1) + 255."""
-    from html_parser_spark.operators.multimodal import attach_bmp, image_features
-
-    return image_features(attach_bmp(_docs_spread(spark, sf_dir)))
-
-
-def q_multimodal_png(spark, sf_dir):
-    """REAL PNG decode end-to-end: synthesize an 8-bit truecolor PNG per
-    document (params from the FRESH stream md5(text||'png'): dims c0/c1,
-    fill c2..c4, RGBA iff c5 odd; rows cycle all five PNG filters) and
-    decode it fully in pure Python + stdlib zlib (core/image.py: chunk walk,
-    CRC check, inflate, Sub/Up/Average/Paeth unfiltering). Closed form as
-    for BMP: n_px = w*h, per-RGB-channel sum = fill*(n_px-1) + 255 (alpha
-    excluded from sums)."""
-    from html_parser_spark.operators.multimodal import attach_png, image_features
-
-    return image_features(attach_png(_docs_spread(spark, sf_dir)))
-
-
-def q_multimodal_gif(spark, sf_dir):
-    """REAL GIF decode end-to-end: synthesize a GIF89a per document (params
-    from the FRESH stream md5(text||'gif'): dims d0/d1, fill d2..d4,
-    interlaced iff d5 odd) and decode it fully in pure Python (core/gif.py:
-    LZW with variable-width codes + clear/EOI, sub-block reassembly,
-    palette mapping, 4-pass interlace reorder). Closed form as for BMP/PNG:
-    n_px = w*h, per-channel sum = fill*(n_px-1) + 255."""
-    from html_parser_spark.operators.multimodal import attach_gif, image_features
-
-    return image_features(attach_gif(_docs_spread(spark, sf_dir)))
-
-
-def q_multimodal_gif_frames(spark, sf_dir):
-    """GIF animation metadata: frame count via the sub-block walk (no pixel
-    decompression — the Y4M-style only-touch-what-you-need property) plus
-    first-frame dims. Closed form: n_frames = 1 + d6 % 4, dims as in
-    multimodal_gif_decode."""
-    from html_parser_spark.operators.multimodal import attach_gif, gif_frame_stats
-
-    return gif_frame_stats(attach_gif(_docs_spread(spark, sf_dir)))
-
-
-def q_multimodal_jpeg(spark, sf_dir):
-    """REAL baseline-JPEG decode end-to-end: synthesize a baseline 4:4:4
-    JPEG per document (params from the FRESH stream md5(text||'jpg'):
-    8-multiple dims 8*(1+e0%6) x 8*(1+e1%6), fill e2..e4) and decode it
-    fully in pure Python (core/jpeg.py: marker walk, DQT/DHT canonical
-    Huffman, entropy decode with unstuffing, dequant + dezigzag, float
-    IDCT, JFIF color). Constant-fill blocks make the LOSSY round trip
-    closed-form (DC-only quantization with tie-free Q multiples of 8), so
-    the oracle checks dimensions AND the exact decoded channel sums."""
-    from html_parser_spark.operators.multimodal import attach_jpeg, image_features
-
-    return image_features(attach_jpeg(_docs_spread(spark, sf_dir)))
-
-
-def q_multimodal_exif(spark, sf_dir):
-    """Header-only EXIF/APP1 metadata walk end-to-end: synthesize a real
-    baseline JPEG with a spec-correct Exif APP1 (TIFF IFD0 + GPS sub-IFD,
-    BOTH byte orders across the corpus — core/exif.py) per document and
-    walk orientation / make / timestamp / GPS micro-degrees / SOF dims
-    without touching entropy-coded data (range-read posture at 100 TB).
-    Params from md5(text||'exif0') e0..e13 and md5(text||'exif1') f0..f7;
-    every field has the closed form in attach_exif_jpeg's docstring."""
-    from html_parser_spark.operators.multimodal import attach_exif_jpeg, exif_meta_stats
-
-    return exif_meta_stats(attach_exif_jpeg(_docs_spread(spark, sf_dir)))
-
-
-def q_multimodal_webp(spark, sf_dir):
-    """Header-only WebP container walk end-to-end: synthesize a
-    spec-correct WebP (RFC 9649) per document — all three container
-    variants across the corpus (simple lossy VP8 frame-tag dims, simple
-    lossless VP8L signature bitstream, extended VP8X flags + canvas) —
-    and walk variant / dimensions / feature flags / container length
-    without decoding coefficient data (range-read posture at 100 TB;
-    real web corpora are full of WebP). Params from the fresh stream
-    md5(text||'webp') w0..w10; every field has the closed form in
-    attach_webp's docstring."""
-    from html_parser_spark.operators.multimodal import attach_webp, webp_meta_stats
-
-    return webp_meta_stats(attach_webp(_docs_spread(spark, sf_dir)))
-
-
-def q_multimodal_avif(spark, sf_dir):
-    """Header-only AVIF (ISO-BMFF) walk end-to-end: synthesize a
-    spec-correct single-image AVIF per document (core/avif.synth_avif —
-    ftyp + meta box tree with ispe/pixi/av1C/irot properties, alpha docs
-    carry a second av01 item + auxC) and walk brand / codec binding /
-    extents / bit depth / rotation / item count / payload accounting
-    from ftyp + meta + the mdat size field only (range-read posture at
-    100 TB; the AV1 payload is the documented codec seam). Params from
-    the fresh stream md5(text||'avif') v0..v8; every field has the
-    closed form in attach_avif's docstring."""
-    from html_parser_spark.operators.multimodal import attach_avif, avif_meta_stats
-
-    return avif_meta_stats(attach_avif(_docs_spread(spark, sf_dir)))
-
-
-def q_multimodal_webp_frames(spark, sf_dir):
-    """Animated-WebP frame walk end-to-end: a mixed corpus (every 5th-ish
-    doc static, the rest VP8X+ANIM+ANMF animations with 1-4 frames) walked
-    via the 16-byte ANMF headers only — frame count, loop count, total
-    duration, blend/dispose accounting, offset checksum. Params from the
-    fresh streams md5(text||'webpa') / md5(text||'webpf'); closed forms in
-    attach_webp_anim's docstring."""
-    from html_parser_spark.operators.multimodal import (
-        attach_webp_anim,
-        webp_frame_stats,
-    )
-
-    return webp_frame_stats(attach_webp_anim(_docs_spread(spark, sf_dir)))
-
-
-def q_multimodal_id3(spark, sf_dir):
-    """Header-only ID3v2 text-frame walk end-to-end: a spec-correct
-    ID3v2.3/2.4 tag (both frame-size formats, all three text encodings
-    across the corpus) prepended to a real CBR MP3 stream per document
-    (core/av.synth_id3v2 + id3v2_text_frames); title/artist/album/year/
-    track + tag size + frame count, audio payload never read. Params from
-    md5(text||'id3') g0..g11; tag_bytes has the closed form
-    10 + sum(10 + 1 + enclen) + padding where enclen doubles (+BOM) for
-    the UTF-16 encoding."""
-    from html_parser_spark.operators.multimodal import attach_mp3_id3, id3_meta_stats
-
-    return id3_meta_stats(attach_mp3_id3(_docs_spread(spark, sf_dir)))
-
-
-def q_multimodal_jpeg_progressive(spark, sf_dir):
-    """REAL progressive-JPEG (SOF2) decode end-to-end: synthesize a
-    five-scan progressive JPEG per document (params from the FRESH stream
-    md5(text||'jpp'): 8-multiple dims 8*(1+f0%6) x 8*(1+f1%6), fill
-    f2..f4) and decode it in pure Python (core/jpeg.py `_Progressive`:
-    DC-first + DC-refinement successive approximation, per-component
-    EOB-run AC scans, coefficient accumulation, one IDCT at EOI). Same
-    quant tables and rounding contract as the baseline, so the oracle's
-    closed form checks the multi-scan reconstruction exactly — including
-    that the refinement scan restores the DC low bit."""
-    from html_parser_spark.operators.multimodal import (
-        attach_progressive_jpeg,
-        image_features,
-    )
-
-    return image_features(attach_progressive_jpeg(_docs_spread(spark, sf_dir)))
-
-
-def q_multimodal_audio(spark, sf_dir):
-    """REAL audio decode end-to-end: synthesize a PCM16 WAV per document
-    (square wave; params from md5(text) bytes 5..8) and decode with the
-    pure-Python RIFF kernel. Closed form: sum_abs = amp * n_samples * ch."""
-    from html_parser_spark.operators.multimodal import attach_wav, audio_features
-
-    return audio_features(attach_wav(_docs_spread(spark, sf_dir)))
-
-
-def q_multimodal_video(spark, sf_dir):
-    """REAL video frame-sampling end-to-end: synthesize a YUV4MPEG2 stream
-    per document (constant-luma frames from md5(text) bytes 9..12), sample
-    every 2nd frame by offset arithmetic. Closed form per sampled frame:
-    sum_y = luma_f * width * height, luma_f = (b12 + 40*f) % 256."""
-    from html_parser_spark.operators.multimodal import attach_y4m, video_frame_sample
-
-    return video_frame_sample(attach_y4m(_docs_spread(spark, sf_dir)), every=2)
-
-
-def q_multimodal_mp3(spark, sf_dir):
-    """REAL MP3 frame-header walk end-to-end: synthesize a structurally
-    correct CBR MPEG-1 Layer III stream per document (params from the
-    fresh md5(text||'mp3') byte stream f0..f4) and walk its frame headers
-    (core/av.mp3_info). Closed forms: frame_len = 144000*kbps//rate,
-    duration_us = n_frames*1152*1e6//rate. Payload audio stays
-    codec_unavailable by design — this is the header-cost metadata pass."""
-    from html_parser_spark.operators.multimodal import attach_mp3, mp3_frame_stats
-
-    return mp3_frame_stats(attach_mp3(_docs_spread(spark, sf_dir)))
-
-
-def q_multimodal_mp4(spark, sf_dir):
-    """REAL ISO-BMFF box-tree walk end-to-end: synthesize a
-    single-video-track MP4 per document (params from md5(text||'mp4')
-    g0..g4) and walk ftyp/moov/trak/stbl (core/av.mp4_info) — mdat is
-    never read (range-read cost at scale). Closed forms in the params."""
-    from html_parser_spark.operators.multimodal import attach_mp4, mp4_box_stats
-
-    return mp4_box_stats(attach_mp4(_docs_spread(spark, sf_dir)))
-
-
-def q_layout_pdf(spark, sf_dir):
-    """REAL PDF text extraction end-to-end: synthesize a valid 2-page PDF
-    per document (title page + body page; half the corpus FlateDecode-
-    compressed, Tj and split-TJ emission both exercised), then run the
-    pure-Python extractor (core/pdf.py) over the binary column. Closed form:
-    page 0 block = the 3-word title, page 1 block = the body text."""
-    from html_parser_spark.operators.layout import attach_pdf, parse_layout_payloads
-
-    return parse_layout_payloads(attach_pdf(_docs_spread(spark, sf_dir)))
-
-
-def q_pipeline_clean_corpus(spark, sf_dir):
-    """The composed end-to-end pipeline (operators/pipeline.py): planted-dup
-    corpus -> wrap -> extraction kernel -> reassembled text -> quality gate
-    -> exact-dedup manifest, one Spark plan with a single wide operation
-    (the final groupBy). Closed form: reassembled text = title + text + text,
-    exact copies (doc_id%5) collapse onto their base (rep = base id,
-    n_copies=2), near copies (doc_id%7, last word dropped) stay distinct."""
-    from html_parser_spark.operators.pipeline import clean_corpus
-
-    return clean_corpus(
-        interleaved_from_documents(DD.plant_dups(_docs(spark, sf_dir)))
-    )
-
-
-def q_pipeline_training_batches(spark, sf_dir):
-    """The full training-data prep composed into ONE plan
-    (operators/pipeline.training_batches): planted corpus -> wrap ->
-    extraction kernel -> reassembly -> quality gate -> exact-dedup
-    survivor window -> per-shard 512-token bin packing. One Python
-    crossing, two wide stages (md5 survivor window + shard pack window)."""
-    from html_parser_spark.operators.pipeline import training_batches
-
-    return training_batches(
-        interleaved_from_documents(DD.plant_dups(_docs(spark, sf_dir)))
-    )
-
-
-# integer money arithmetic shared by the TPC-H-style queries (mirrored
-# literally in the oracles): cents + ppm keep every product in int64 and
-# every division a deterministic floor — cross-engine bit-exact, where
-# double SUMs would be fold-order-dependent
-_PRICE_C = "cast(round(l_extendedprice * 100) as bigint)"
-_DISC_PPM = "cast(round(l_discount * 1000000) as bigint)"
-_TAX_PPM = "cast(round(l_tax * 1000000) as bigint)"
-_DISC_PRICE_C = f"div({_PRICE_C} * (1000000 - {_DISC_PPM}), 1000000)"
-_CHARGE_C = f"div({_DISC_PRICE_C} * (1000000 + {_TAX_PPM}), 1000000)"
-
-
-def q_tpch_pricing(spark, sf_dir):
-    """TPC-H Q1-style pricing summary over lineitem: per (returnflag,
-    linestatus), quantity/price/discounted/charged totals in exact integer
-    cents. ONE map-side-combinable groupBy over a pruned scan with the
-    shipdate filter pushed down — the canonical wide-scan aggregate."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return (
-        li.where(F.col("l_shipdate") <= F.lit("2001-09-01").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.expr("cast(sum(cast(round(l_quantity) as bigint)) as bigint)").alias(
-                "sum_qty"
-            ),
-            F.expr(f"cast(sum({_PRICE_C}) as bigint)").alias("sum_base_c"),
-            F.expr(f"cast(sum({_DISC_PRICE_C}) as bigint)").alias("sum_disc_c"),
-            F.expr(f"cast(sum({_CHARGE_C}) as bigint)").alias("sum_charge_c"),
-            F.count("*").alias("n_rows"),
-        )
-        .withColumn("avg_qty_milli", F.expr("div(1000 * sum_qty, n_rows)"))
-    )
-
-
-def q_tpch_top_orders(spark, sf_dir):
-    """TPC-H Q3-style shipping-priority top-10: BUILDING-segment customers,
-    orders placed before / lines shipped after the cutoff, by discounted
-    revenue. Plan: the segment-filtered customer KEY projection broadcasts
-    (never shuffles the fact side), lineitem joins orders on the natural
-    orderkey co-partition, the revenue groupBy reuses that partitioning,
-    and the top-10 is a TakeOrdered."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    cutoff = F.lit("1998-06-01").cast("timestamp")
-    cust = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
-        .where("c_mktsegment = 'BUILDING'")
-        .select("c_custkey")
-    )
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").where(
-        F.col("o_orderdate") < cutoff
-    )
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").where(
-        F.col("l_shipdate") > cutoff
-    )
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.expr(f"cast(sum({_DISC_PRICE_C}) as bigint)").alias("revenue_c"))
-        .select(
-            "l_orderkey",
-            F.expr("substr(cast(o_orderdate as string), 1, 10)").alias(
-                "order_date"
-            ),
-            "o_orderpriority",
-            "revenue_c",
-        )
-        .orderBy(F.desc("revenue_c"), "l_orderkey")
-        .limit(10)
-    )
-
-
-def q_tpch_regional_revenue(spark, sf_dir):
-    """TPC-H Q5-style local-supplier revenue by nation for one region and
-    order year: a SIX-table join where every dimension chain (region ->
-    nation -> supplier, plus customer) broadcasts, so the only wide work is
-    lineitem x orders on orderkey; the customer/supplier nation-match
-    condition rides the broadcast joins."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    sup = (
-        spark.read.parquet(f"{sf_dir}/supplier.parquet")
-        .join(
-            spark.read.parquet(f"{sf_dir}/nation.parquet"),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .join(
-            spark.read.parquet(f"{sf_dir}/region.parquet").where(
-                "r_name = 'ASIA'"
-            ),
-            F.col("n_regionkey") == F.col("r_regionkey"),
-        )
-        .select("s_suppkey", "s_nationkey", "n_name")
-    )
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
-        "c_custkey", "c_nationkey"
-    )
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").where(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
-    )
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(
-            F.broadcast(sup),
-            (li.l_suppkey == sup.s_suppkey)
-            & (F.col("c_nationkey") == F.col("s_nationkey")),
-        )
-        .groupBy("n_name")
-        .agg(
-            F.expr(f"cast(sum({_DISC_PRICE_C}) as bigint)").alias("revenue_c"),
-            F.count("*").alias("n_lineitems"),
-        )
-    )
-
-
-def q_tpch_late_orders(spark, sf_dir):
-    """TPC-H Q4-style order-priority check, the SEMI-join shape: count
-    orders per priority having AT LEAST ONE line shipped > 90 days after
-    the order date. The existence probe is a left-semi join on orderkey —
-    one bit per order crosses the join, the lineitem side is never
-    duplicated into the aggregate (the EXISTS-subquery plan, not a
-    join+distinct)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").where(
-        (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
-    )
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_shipdate"
-    )
-    late = orders.join(
-        li,
-        (orders.o_orderkey == li.l_orderkey)
-        & (li.l_shipdate > F.expr("o_orderdate + interval 90 days")),
-        "left_semi",
-    )
-    return late.groupBy("o_orderpriority").agg(F.count("*").alias("n_late_orders"))
-
-
-def q_tpch_inactive_customers(spark, sf_dir):
-    """Churn query, the ANTI-join shape: per market segment, how many
-    customers placed NO order in the window (plus the segment's total).
-    NOT EXISTS plans as LeftAnti on custkey — the complement of
-    tpch_late_orders' semi probe; together they pin both existence
-    shapes the engine must never rewrite into join+distinct."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
-        "c_custkey", "c_mktsegment"
-    )
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").where(
-        (F.col("o_orderdate") >= F.lit("2000-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("2001-01-01").cast("timestamp"))
-    )
-    inactive = cust.join(
-        orders, cust.c_custkey == orders.o_custkey, "left_anti"
-    ).groupBy("c_mktsegment").agg(F.count("*").alias("n_inactive"))
-    totals = cust.groupBy("c_mktsegment").agg(F.count("*").alias("n_customers"))
-    return totals.join(inactive, "c_mktsegment", "left").select(
-        "c_mktsegment",
-        "n_customers",
-        F.expr("coalesce(n_inactive, 0L)").alias("n_inactive"),
-    )
-
-
-def q_events_hourly(spark, sf_dir):
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return ev.groupBy(
-        "event_type", F.expr("substr(cast(ts as string), 1, 13)").alias("hour_str")
-    ).agg(
-        F.count("*").alias("n_events"),
-        F.expr("cast(sum(cast(round(value * 100) as bigint)) as bigint)").alias(
-            "value_cents"
-        ),
-    )
-
-
-def q_events_sessionize(spark, sf_dir):
-    """Gap-based sessionization: a session ends after 30 min of inactivity.
-
-    Standard training-pipeline op (the reference has no aggregation at all —
-    SURVEY.md §2.2 — so this is pipeline capability, not parity). Scale
-    posture: ONE shuffle on user_id for the two stacked window functions
-    (lag + running sum share the frame) and the session groupBy reuses the
-    same partitioning, so Catalyst plans a single Exchange. Second-precision
-    epoch arithmetic keeps both engines integer-exact.
-    """
-    from pyspark.sql import Window
-
-    # ts is TIMESTAMP_NTZ: interpret the wall-clock as UTC (same convention
-    # as DuckDB's epoch()) so both engines compute identical integer seconds
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "user_id",
-        "event_id",
-        "value",
-        F.unix_seconds(F.col("ts").cast("timestamp")).alias("tsec"),
-    )
-    w = Window.partitionBy("user_id").orderBy("tsec", "event_id")
-    gap = F.col("tsec") - F.lag("tsec").over(w)
-    mark = F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
-    sess = ev.withColumn(
-        "session_seq",
-        F.sum(mark).over(w.rowsBetween(Window.unboundedPreceding, 0)).cast("int"),
-    )
-    return sess.groupBy("user_id", "session_seq").agg(
-        F.count("*").alias("n_events"),
-        F.min("tsec").alias("start_epoch"),
-        F.expr("cast(max(tsec) - min(tsec) as bigint)").alias("duration_secs"),
-        F.expr("cast(sum(cast(round(value * 100) as bigint)) as bigint)").alias(
-            "value_cents"
-        ),
-    )
-
-
-def _hll_oracle(key_sql: str) -> str:
-    """DuckDB mirror of functions/sketch.hll_distinct over events grouped
-    by event_type: recomputes the sketch REGISTER-FOR-REGISTER (same md5
-    bits, same integer fold, same single-division estimate — see the
-    sketch.py module docstring for the ln/rounding determinism argument)."""
-    return f"""
-        WITH k AS (
-          SELECT event_type, md5({key_sql}) AS h FROM events
-        ), p AS (
-          SELECT event_type,
-                 (instr('0123456789abcdef', substr(h, 1, 1)) - 1) * 16
-                 + (instr('0123456789abcdef', substr(h, 2, 1)) - 1) AS reg,
-                 substr(h, 3, 14) AS rest,
-                 length(regexp_extract(substr(h, 3, 14), '^0*', 0)) AS z
-          FROM k
-        ), r AS (
-          SELECT event_type, reg,
-                 LEAST(CASE WHEN z = 14 THEN 57
-                       ELSE 4 * z
-                            + (CASE WHEN iv >= 8 THEN 0 WHEN iv >= 4 THEN 1
-                                    WHEN iv >= 2 THEN 2 ELSE 3 END) + 1
-                       END, 40) AS rho
-          FROM (SELECT event_type, reg, z,
-                       instr('0123456789abcdef', substr(rest, z + 1, 1)) - 1
-                         AS iv
-                FROM p)
-        ), m AS (
-          SELECT event_type, reg, MAX(rho) AS mrho FROM r GROUP BY 1, 2
-        ), f AS (
-          SELECT event_type,
-                 CAST(COUNT(*) AS INTEGER) AS n_reg,
-                 CAST(256 - COUNT(*) AS INTEGER) AS v_zero,
-                 CAST(CAST(SUM(1::BIGINT << (40 - mrho)) AS BIGINT)
-                      + CAST(256 - COUNT(*) AS BIGINT) * (1::BIGINT << 40)
-                      AS BIGINT) AS s_fold
-          FROM m GROUP BY 1
-        ), est AS (
-          SELECT *,
-                 0.7213e0 / (1.0e0 + 1.079e0 / 256.0e0) * 256.0e0 * 256.0e0
-                 * CAST(1::BIGINT << 40 AS DOUBLE) / CAST(s_fold AS DOUBLE)
-                   AS raw_est
-          FROM f
-        ), x AS (
-          SELECT event_type,
-                 CAST(COUNT(DISTINCT {key_sql}) AS BIGINT) AS exact_distinct
-          FROM events GROUP BY 1
-        )
-        SELECT est.event_type, n_reg, v_zero, s_fold, raw_est,
-               CAST(round(CASE WHEN raw_est <= 2.5e0 * 256.0e0 AND v_zero > 0
-                          THEN 256.0e0 * ln(256.0e0 / CAST(v_zero AS DOUBLE))
-                          ELSE raw_est END) AS BIGINT) AS est_rounded,
-               exact_distinct
-        FROM est JOIN x USING (event_type)
-    """
-
-
-def _events_utc(spark, sf_dir):
-    """events with the session clock pinned to UTC so epoch arithmetic
-    matches DuckDB's (same convention as q_events_sessionize); ts is cast
-    NTZ -> TIMESTAMP (wall-clock preserving under UTC) because
-    unix_micros() rejects TIMESTAMP_NTZ."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return spark.read.parquet(f"{sf_dir}/events.parquet").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-
-
-def q_events_asof(spark, sf_dir):
-    """As-of attribution: every purchase joined to the user's LATEST click
-    at-or-before it (functions/joins.asof_join — union-window plan, ONE
-    Exchange, no pair blowup). Oracle: DuckDB's native ASOF JOIN — a real
-    cross-engine check of the operator's semantics (tie-free at every sf,
-    verified)."""
-    ev = _events_utc(spark, sf_dir)
-    left = ev.where("event_type = 'purchase'").select("event_id", "user_id", "ts")
-    right = ev.where("event_type = 'click'").select(
-        "user_id", "ts", F.col("event_id").alias("click_event_id")
-    )
-    res = JN.asof_join(left, right, on="user_id", right_cols=["click_event_id"])
-    return res.select(
-        "event_id",
-        "user_id",
-        F.unix_micros(F.col("ts")).alias("purchase_us"),
-        F.col("asof_click_event_id").alias("click_event_id"),
-        F.unix_micros(F.col("asof_ts")).alias("click_us"),
-        (F.unix_micros(F.col("ts")) - F.unix_micros(F.col("asof_ts"))).alias(
-            "wait_us"
-        ),
-    )
-
-
-def q_events_error_burst(spark, sf_dir):
-    """Range (proximity) join: clicks of the same user within the 120 s
-    BEFORE each error (functions/joins.range_join_count — banded equi-join,
-    bounded 2x fan-out, never an inequality/cartesian join)."""
-    ev = _events_utc(spark, sf_dir)
-    left = ev.where("event_type = 'error'").select("event_id", "user_id", "ts")
-    right = ev.where("event_type = 'click'").select("user_id", "ts")
-    res = JN.range_join_count(
-        left, right, on="user_id", window_secs=120, count_alias="n_clicks_2m"
-    )
-    return res.select(
-        "event_id",
-        "user_id",
-        F.unix_micros(F.col("ts")).alias("err_us"),
-        "n_clicks_2m",
-    )
-
-
-def q_events_rolling(spark, sf_dir):
-    """Rolling-window analytics: per user, trailing-10-event sum of value
-    (integer cents — exact) plus the in-window count. ONE Exchange on
-    user_id; the frame is rows-based so state is O(10) per row."""
-    from pyspark.sql import Window
-
-    ev = _events_utc(spark, sf_dir)
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-9, Window.currentRow)
-    )
-    cents = F.expr("cast(round(value * 100) as bigint)")
-    return ev.select(
-        "user_id",
-        "event_id",
-        F.unix_micros(F.col("ts")).alias("ts_us"),
-        F.sum(cents).over(w).cast("bigint").alias("roll_cents"),
-        F.count("*").over(w).cast("int").alias("n_in_window"),
-    )
-
-
-def q_events_funnel(spark, sf_dir):
-    """Funnel analysis — signup -> click -> purchase, each stage within 7
-    days of the previous, greedy-earliest semantics (stage k anchors on the
-    EARLIEST qualifying stage-(k-1) time; the standard product-analytics
-    funnel definition, deterministic on both engines).
-
-    Scale shape: ONE Exchange on user_id; the three stage times are
-    chained conditional window MINs over the same partitioning (each
-    stage's predicate references the previous stage's window result — a
-    projection chain, not a join chain)."""
-    from pyspark.sql import Window
-
-    ev = _events_utc(spark, sf_dir).select(
-        "user_id",
-        "event_type",
-        F.unix_seconds(F.col("ts")).alias("tsec"),
-    )
-    wn = Window.partitionBy("user_id")
-    week = 7 * 86400
-    s1 = ev.withColumn(
-        "s1",
-        F.expr("min(case when event_type = 'signup' then tsec end)").over(wn),
-    )
-    s2 = s1.withColumn(
-        "s2",
-        F.expr(
-            "min(case when event_type = 'click' and tsec >= s1 "
-            f"and tsec <= s1 + {week} then tsec end)"
-        ).over(wn),
-    )
-    s3 = s2.withColumn(
-        "s3",
-        F.expr(
-            "min(case when event_type = 'purchase' and tsec >= s2 "
-            f"and tsec <= s2 + {week} then tsec end)"
-        ).over(wn),
-    )
-    return (
-        s3.groupBy("user_id")
-        .agg(
-            F.expr("cast(max(s1) as bigint)").alias("signup_s"),
-            F.expr("cast(max(s2) as bigint)").alias("click_s"),
-            F.expr("cast(max(s3) as bigint)").alias("purchase_s"),
-        )
-        .withColumn(
-            "stage_reached",
-            F.expr(
-                "cast(case when purchase_s is not null then 3 "
-                "when click_s is not null then 2 "
-                "when signup_s is not null then 1 else 0 end as int)"
-            ),
-        )
-    )
-
-
-def q_events_retention(spark, sf_dir):
-    """Cohort retention matrix — the canonical growth-analytics query:
-    users grouped by first-activity week (cohort), counted distinct in
-    each subsequent week offset. TWO exchanges: the per-user first-week
-    window on user_id, then the (cohort, offset) distinct-count groupBy.
-    Weeks are integer epoch-days div 7 — engine-exact."""
-    from pyspark.sql import Window
-
-    ev = _events_utc(spark, sf_dir).select(
-        "user_id",
-        F.expr("cast(unix_seconds(ts) div 604800 as bigint)").alias("week"),
-    )
-    wn = Window.partitionBy("user_id")
-    cohorts = ev.withColumn("cohort_week", F.min("week").over(wn))
-    return (
-        cohorts.groupBy(
-            "cohort_week",
-            F.expr("cast(week - cohort_week as bigint)").alias("week_offset"),
-        )
-        .agg(F.expr("cast(count(distinct user_id) as bigint)").alias("n_users"))
-    )
-
-
-def q_events_scd2(spark, sf_dir):
-    """SCD-2 history build — change records to validity intervals: per
-    user, each event's value becomes current from its timestamp until the
-    next event (lead window), the last interval open-ended (null). ONE
-    Exchange on user_id; the dimension-table pattern every warehouse merge
-    implements."""
-    from pyspark.sql import Window
-
-    ev = _events_utc(spark, sf_dir).select(
-        "user_id",
-        "event_id",
-        F.unix_micros(F.col("ts")).alias("valid_from_us"),
-        F.expr("cast(round(value * 100) as bigint)").alias("value_cents"),
-    )
-    w = Window.partitionBy("user_id").orderBy("valid_from_us", "event_id")
-    return ev.withColumn(
-        "valid_to_us", F.lead("valid_from_us").over(w)
-    ).withColumn("is_current", F.expr("cast(valid_to_us is null as int)"))
-
-
-def q_events_json_props(spark, sf_dir):
-    """Schema-on-read over the semi-structured props column: `from_json`
-    with an explicit schema (the strict API — malformed rows become null,
-    never a crash) feeding per-type stats on the extracted field. All
-    JVM-side; at 100 TB this is the 'late-binding JSON payload' pattern —
-    parse once in the scan projection, aggregate map-side."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_type", F.expr("from_json(props, 'k int').k").alias("k")
-    )
-    return ev.groupBy("event_type").agg(
-        F.count("*").alias("n_events"),
-        F.expr("cast(count(k) as bigint)").alias("n_parsed"),
-        F.expr("cast(sum(k) as bigint)").alias("sum_k"),
-        F.expr("cast(min(k) as int)").alias("min_k"),
-        F.expr("cast(max(k) as int)").alias("max_k"),
-        F.expr("cast(count(distinct k) as bigint)").alias("n_distinct_k"),
-    )
-
-
-def q_events_gapfill(spark, sf_dir):
-    """Time-series gap-fill: per user, the hourly activity series with
-    every missing hour between the user's first and last active hour
-    materialized (n_events = 0) and value carried forward from the last
-    observed hour — the dense-series prep step for rate/retention models.
-
-    Scale shape: join-free and ONE Exchange total. An explicit
-    repartition on user_id starts the wide stage; the per-(user, hour)
-    aggregate and the per-user pack both reuse that partitioning
-    (HashPartitioning(user_id) satisfies both groupings), and the fill is
-    a narrow array fold — each observed hour is zip_with-paired with its
-    successor and expands to the gap rows it covers, carrying its cents
-    value. No spine join, no IGNORE-NULLS window, no second shuffle. Per-
-    user state is bounded by the user's active-hour RANGE (a year-long
-    user is ~9k structs); range-skewed keys would salt by hour-block.
-    """
-    ev = _events_utc(spark, sf_dir)
-    hourly = (
-        ev.repartition("user_id")
-        .groupBy(
-            "user_id",
-            F.expr("unix_micros(ts) div 3600000000").alias("hr"),
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            F.expr("cast(sum(cast(round(value * 100) as bigint)) as bigint)").alias(
-                "cents"
-            ),
-        )
-    )
-    packed = hourly.groupBy("user_id").agg(
-        F.expr("array_sort(collect_list(struct(hr, n_events, cents)))").alias("obs")
-    )
-    fill = """
-      flatten(zip_with(obs, slice(obs, 2, size(obs)), (a, b) ->
-        transform(sequence(a.hr, coalesce(b.hr, a.hr + 1) - 1), h ->
-          struct(h as hr,
-                 case when h = a.hr then a.n_events else 0L end as n_events,
-                 a.cents as value_cents_filled,
-                 cast(h <> a.hr as int) as is_gap))))
-    """
-    return packed.select(
-        "user_id", F.explode(F.expr(fill)).alias("c")
-    ).select("user_id", "c.hr", "c.n_events", "c.value_cents_filled", "c.is_gap")
-
-
-def q_events_pivot(spark, sf_dir):
-    """Pivot: hourly event counts spread into one column per event type
-    (Spark relational pivot; oracle = conditional aggregation). Missing
-    cells are 0, not null, so the surface is total."""
-    ev = _events_utc(spark, sf_dir).withColumn(
-        "hour_str", F.expr("substr(cast(ts as string), 1, 13)")
-    )
-    types = ["click", "error", "purchase", "signup", "view"]
-    piv = ev.groupBy("hour_str").pivot("event_type", types).count()
-    return piv.select(
-        "hour_str",
-        *[
-            F.coalesce(F.col(t), F.lit(0)).cast("bigint").alias(f"n_{t}")
-            for t in types
-        ],
-    )
-
-
-def q_events_rollup(spark, sf_dir):
-    """ROLLUP totals: (event_type, day) -> per-day, per-type subtotals and
-    the grand total in one pass (partial-aggregatable grouping sets).
-    NULL grouping markers are coalesced to '<all>' so both engines emit
-    identical label rows."""
-    ev = _events_utc(spark, sf_dir).withColumn(
-        "day_str", F.expr("substr(cast(ts as string), 1, 10)")
-    )
-    return (
-        ev.rollup("event_type", "day_str")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.expr("cast(sum(cast(round(value * 100) as bigint)) as bigint)").alias(
-                "value_cents"
-            ),
-        )
-        .select(
-            F.coalesce("event_type", F.lit("<all>")).alias("event_type"),
-            F.coalesce("day_str", F.lit("<all>")).alias("day_str"),
-            "n_events",
-            "value_cents",
-        )
-    )
-
-
-def q_events_quantiles(spark, sf_dir):
-    """EXACT order-statistic quantiles per event type (median as the sum
-    of the two middle elements — stays integer — and the p90 element).
-    Deterministic tie-break by event_id; no interpolation formula to
-    drift between engines. One Exchange; the rank pass and the aggregate
-    share the event_type partitioning."""
-    from pyspark.sql import Window
-
-    ev = _events_utc(spark, sf_dir).select(
-        "event_type",
-        "event_id",
-        F.expr("cast(round(value * 100) as bigint)").alias("cents"),
-    )
-    w = Window.partitionBy("event_type").orderBy("cents", "event_id")
-    wn = Window.partitionBy("event_type")
-    ranked = ev.withColumn("rk", F.row_number().over(w)).withColumn(
-        "n", F.count("*").over(wn)
-    )
-    return ranked.groupBy("event_type").agg(
-        F.expr("cast(max(n) as bigint)").alias("n"),
-        F.expr(
-            "cast(sum(case when rk = (n + 1) div 2 then cents else 0 end) + "
-            "sum(case when rk = (n + 2) div 2 then cents else 0 end) "
-            "as bigint)"
-        ).alias("med_cents_x2"),
-        F.expr(
-            "cast(max(case when rk = (9 * n + 9) div 10 then cents end) "
-            "as bigint)"
-        ).alias("p90_cents"),
-    )
-
-
-def q_events_mad_outliers(spark, sf_dir):
-    """Robust outlier detection per event type: median / MAD (median
-    absolute deviation) as EXACT lower-median order statistics in integer
-    cents — no mean/stddev (one mega-value corrupts both; sqrt is not
-    cross-engine bit-stable) — and the count of events beyond 5 x MAD.
-
-    Scale shape: ONE Exchange on event_type, shared by everything. The
-    per-type median and MAD never leave the partition: each is a window
-    MAX over the same event_type partitioning (no groupBy + join-back,
-    which would plan extra exchanges per attach), the two rank passes are
-    in-partition sorts, and the final groupBy reuses the partitioning."""
-    from pyspark.sql import Window
-
-    ev = _events_utc(spark, sf_dir).select(
-        "event_type",
-        "event_id",
-        F.expr("cast(round(value * 100) as bigint)").alias("cents"),
-    )
-    w = Window.partitionBy("event_type").orderBy("cents", "event_id")
-    wn = Window.partitionBy("event_type")
-    ranked = ev.withColumn("rk", F.row_number().over(w)).withColumn(
-        "n", F.count("*").over(wn)
-    )
-    d = ranked.withColumn(
-        "med_c",
-        F.expr("max(case when rk = (n + 1) div 2 then cents end)").over(wn),
-    ).withColumn("dev", F.expr("abs(cents - med_c)"))
-    w2 = Window.partitionBy("event_type").orderBy("dev", "event_id")
-    d2 = d.withColumn("rk2", F.row_number().over(w2)).withColumn(
-        "mad_c",
-        F.expr("max(case when rk2 = (n + 1) div 2 then dev end)").over(wn),
-    )
-    return d2.groupBy("event_type").agg(
-        F.expr("cast(max(n) as bigint)").alias("n"),
-        F.expr("cast(max(med_c) as bigint)").alias("med_c"),
-        F.expr("cast(max(mad_c) as bigint)").alias("mad_c"),
-        F.expr(
-            "cast(sum(case when dev > 5 * mad_c then 1 else 0 end) as bigint)"
-        ).alias("n_outliers"),
-    )
-
-
-def q_layout_zorder(spark, sf_dir):
-    """Z-order layout stats (functions/zorder.py): Morton-interleave
-    (user_id, value_cents), slice the sorted table into 16 buckets, emit
-    each bucket's min/max on BOTH dims — the footer stats that drive file
-    pruning. The unit test asserts the pruning win vs a one-column sort;
-    the gate pins keys/buckets/stats bit-for-bit."""
-    from html_parser_spark.functions import zorder as ZO
-
-    ev = _events_utc(spark, sf_dir).selectExpr(
-        "user_id", "cast(round(value * 100) as bigint) as cents", "event_id"
-    )
-    return ZO.zorder_bucket_stats(ev, "user_id", "cents", "event_id")
-
-
-def q_events_hist_quantiles(spark, sf_dir):
-    """Histogram quantiles (functions/sketch.histogram_quantiles): the
-    SCALE path for percentiles — additive $1 bin counts (map-side
-    combinable, merge = add, <= 1024 cells/group) instead of the exact
-    query's per-group sort; answers are bin upper edges, within one bin
-    width of q_events_quantiles' exact order statistics."""
-    return SK.histogram_quantiles(
-        _events_utc(spark, sf_dir),
-        "cast(round(value * 100) as bigint)",
-        ["event_type"],
-    )
-
-
-def q_sketch_hll_users(spark, sf_dir):
-    """Deterministic HLL distinct users per event type (functions/sketch.py
-    — md5-derived registers, integer-exact fold, O(256) state per group;
-    the oracle recomputes the sketch register-for-register). The ~150-user
-    groups exercise the small-range linear-counting branch."""
-    return SK.hll_distinct(
-        _events_utc(spark, sf_dir),
-        "cast(user_id as string)",
-        ["event_type"],
-    )
-
-
-def q_sketch_hll_user_minutes(spark, sf_dir):
-    """HLL over the higher-cardinality key (user, activity-minute) —
-    exercises the raw-estimator branch at sf >= 0.01 (cardinality per
-    group > 2.5*m) and linear counting at sf0.001."""
-    key = (
-        "concat(cast(user_id as string), '-', "
-        "cast(unix_micros(ts) div 60000000 as string))"
-    )
-    return SK.hll_distinct(_events_utc(spark, sf_dir), key, ["event_type"])
 
 
 def _scoped(fn: Callable[[SparkSession, str], DataFrame]):
     """A registry entry owns its query's cache scope: each call closes the
     session's open scope (releasing the previous query's caches) and opens
     a fresh one, which stays open after the call returns so the caller's
-    action on the lazy result reads live caches. Composed q_ functions call
+    action on the lazy result reads live caches. Composed builders call
     each other directly and share the caller's scope."""
 
     @functools.wraps(fn)
@@ -2256,3342 +100,17 @@ def _scoped(fn: Callable[[SparkSession, str], DataFrame]):
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    registry = {
-        # Round-5 rotation (VERDICT r04 item 1): the driver samples a
-        # 50-entry PREFIX of this dict. The prefix holds, in order:
-        # (a) the three plans RESHAPED in round 4 (kmeans row-local argmin,
-        # bloom broadcast word-map probe, LSH auto verify-path) whose r03
-        # rows predate the reshape; (b) the sixteen queries NEW in round 5
-        # (no driver row at all yet); (c) 31 of the 41 entries whose newest
-        # driver row is r03. The remaining 10 standing entries
-        # (text_repetition, text_topk_terms, source_jsonl_roundtrip,
-        # text_fingerprint, text_phrase_search, text_langid, text_quality,
-        # diff_attrs, multimodal_meta, multimodal_image_decode
-        # — zero/one-Exchange
-        # plans, unchanged since their r03 rows; the text module is freshly
-        # covered by the r04 text_langid_multiscript row) sit just below
-        # the boundary: first-ever rows for new operators outrank a
-        # third-round re-confirmation, and all five stay green in
-        # CORRECTNESS_local.json at both sfs and in-suite.
-        "kmeans_embeddings": q_kmeans_embeddings,
-        "sketch_bloom_decontaminate": q_sketch_bloom,
-        "dedup_minhash_lsh": q_dedup_minhash_lsh,
-        # --- new in round 5 ---
-        "multimodal_webp_meta": q_multimodal_webp,
-        "multimodal_avif_meta": q_multimodal_avif,
-        "text_bpe_vocab": q_text_bpe_vocab,
-        "text_bpe_tokens": q_text_bpe_tokens,
-        "dedup_semantic": q_dedup_semantic,
-        "sample_importance": q_sample_importance,
-        "corpus_pack_bpe": q_corpus_pack_bpe,
-        "multimodal_webp_frames": q_multimodal_webp_frames,
-        "pipeline_extract_bpe": q_pipeline_extract_bpe,
-        "web_robots_decisions": q_web_robots,
-        "web_crawl_schedule": q_web_crawl_schedule,
-        "corpus_filter_funnel": q_corpus_filter_funnel,
-        "web_sitemap_frontier": q_web_sitemap_frontier,
-        "web_anchor_text": q_web_anchor_text,
-        "web_crawl_delta": q_web_crawl_delta,
-        "graph_hits": q_graph_hits,
-        # --- standing r03 rows, re-verify this round ---
-        "dedup_exact": q_dedup_exact,
-        "dedup_ngram_jaccard": q_dedup_jaccard,
-        "dedup_fuzzy_join": q_fuzzy_join,
-        "dedup_clusters": q_dedup_clusters,
-        "dedup_chunks": q_dedup_chunks,
-        "dedup_repeated_spans": q_dedup_repeated_spans,
-        "dedup_simhash": q_dedup_simhash,
-        "dedup_embedding_cosine": q_dedup_embedding,
-        "text_pii_redact": q_text_pii_redact,
-        "text_card_redact": q_text_card_redact,
-        "text_tfidf": q_text_tfidf,
-        "text_bm25_search": q_text_bm25,
-        "source_warc_roundtrip": q_source_warc,
-        "decontaminate_overlap": q_decontaminate,
-        "text_bigram_lm": q_text_bigram_lm,
-        "sample_stratified": q_sample_stratified,
-        "corpus_mix": q_corpus_mix,
-        "corpus_pack_sequences": q_corpus_pack,
-        "similarity_topk": q_similarity_topk,
-        "similarity_lsh_topk": q_similarity_lsh,
-        "similarity_ivf_topk": q_similarity_ivf,
-        "embedding_quantize": q_embedding_quantize,
-        "similarity_quantized_topk": q_similarity_quantized,
-        "graph_pagerank": q_graph_pagerank,
-        "sketch_countmin_words": q_sketch_countmin,
-        "transform_plugins": q_transform_plugins,
-        "parse_nodes": q_parse_nodes,
-        "parse_attrs": q_parse_attrs,
-        "extract_quirks": q_extract_quirks,
-        "extract_html_tables": q_extract_html_tables,
-        "diff_transform": q_diff_transform,
-        "diff_attrs": q_diff_attrs,
-        "multimodal_meta": q_multimodal_meta,
-        "multimodal_image_decode": q_multimodal_image,
-        # ---- 50-entry driver prefix ends here (3 reshaped + 13 new + 34
-        # standing). The seven demoted standing entries lead the tail
-        # (text_repetition's exact expression fragments are re-verified
-        # transitively by corpus_filter_funnel's driver row — text.py
-        # shares _BIGRAMS/_RUN_BEST between the two — and text_topk_terms'
-        # doc_frequency machinery by text_tfidf, which stays in). ----
-        "text_repetition": q_text_repetition,
-        "text_topk_terms": q_text_topk_terms,
-        "source_jsonl_roundtrip": q_source_jsonl,
-        "text_fingerprint": q_text_fingerprint,
-        "text_phrase_search": q_text_phrase,
-        "text_langid": q_text_langid,
-        "text_quality": q_text_quality,
-        # --- fresh CORRECTNESS_r04 rows below this line ---
-        "extract_flagship": q_extract_flagship,
-        "extract_errors": q_extract_errors,
-        "extract_metrics": q_extract_metrics,
-        "extract_main": q_extract_main,
-        "extract_main_boilerplate": q_extract_main_boilerplate,
-        "generate_roundtrip": q_generate_roundtrip,
-        "text_langid_multiscript": q_text_langid_multiscript,
-        "multimodal_exif_meta": q_multimodal_exif,
-        "url_canonical_dedup": q_url_canonical_dedup,
-        "url_domain_stats": q_url_domain_stats,
-        "multimodal_id3_meta": q_multimodal_id3,
-        "extract_links": q_extract_links,
-        "text_tokens_multiscript": q_text_tokens_multiscript,
-        "graph_domain_pagerank": q_graph_domain_pagerank,
-        "corpus_chunk_windows": q_corpus_chunk_windows,
-        "multimodal_png_decode": q_multimodal_png,
-        "multimodal_gif_decode": q_multimodal_gif,
-        "multimodal_gif_frames": q_multimodal_gif_frames,
-        "multimodal_jpeg_decode": q_multimodal_jpeg,
-        "multimodal_jpeg_progressive": q_multimodal_jpeg_progressive,
-        "multimodal_audio_meta": q_multimodal_audio,
-        "multimodal_video_frames": q_multimodal_video,
-        "multimodal_mp3_meta": q_multimodal_mp3,
-        "multimodal_mp4_meta": q_multimodal_mp4,
-        "layout_pdf_text": q_layout_pdf,
-        "pipeline_clean_corpus": q_pipeline_clean_corpus,
-        "pipeline_training_batches": q_pipeline_training_batches,
-        "tpch_pricing_summary": q_tpch_pricing,
-        "tpch_top_orders": q_tpch_top_orders,
-        "tpch_regional_revenue": q_tpch_regional_revenue,
-        "tpch_late_orders": q_tpch_late_orders,
-        "tpch_inactive_customers": q_tpch_inactive_customers,
-        "events_hourly": q_events_hourly,
-        "events_sessionize": q_events_sessionize,
-        "events_asof_attribution": q_events_asof,
-        "events_error_burst": q_events_error_burst,
-        "events_rolling_value": q_events_rolling,
-        "events_gapfill": q_events_gapfill,
-        "events_json_props": q_events_json_props,
-        "events_funnel": q_events_funnel,
-        "events_retention_cohorts": q_events_retention,
-        "events_scd2_history": q_events_scd2,
-        "events_pivot_hourly": q_events_pivot,
-        "events_rollup_totals": q_events_rollup,
-        "events_quantiles": q_events_quantiles,
-        "events_hist_quantiles": q_events_hist_quantiles,
-        "events_mad_outliers": q_events_mad_outliers,
-        "layout_zorder_stats": q_layout_zorder,
-        "sketch_hll_users": q_sketch_hll_users,
-        "sketch_hll_user_minutes": q_sketch_hll_user_minutes,
-    }
-    return {name: _scoped(fn) for name, fn in registry.items()}
-
-
-# ---------------------------------------------------------------------------
-# oracle_sql() — DuckDB reconstructions. Shared CTE fragments below; every
-# aggregate is cast to match Spark's output types (count->BIGINT, size->INT,
-# div->BIGINT, row_number->INT).
-# ---------------------------------------------------------------------------
-
-# expected extraction of the interleaved wrap (sources/interleave.py)
-_RECON = """
-  WITH d AS (
-    SELECT CAST(doc_id AS VARCHAR) AS doc_id, text, source,
-           array_to_string((string_split(text, ' '))[1:3], ' ') AS title
-    FROM documents
-  ), recon AS (
-    SELECT doc_id, 'ok' AS status, 'text' AS kind, title AS text,
-           CAST(NULL AS VARCHAR) AS media_ref, 0 AS span_order FROM d
-    UNION ALL SELECT doc_id, 'ok', 'text', text, NULL, 1 FROM d
-    UNION ALL SELECT doc_id, 'ok', 'media', NULL,
-           'media://' || source || '/' || doc_id || '.jpg', 2 FROM d
-    UNION ALL SELECT doc_id, 'ok', 'text', text, NULL, 3 FROM d
-    UNION ALL SELECT doc_id, 'ok', 'media', NULL,
-           'thumb-' || doc_id || '.png', 4 FROM d
-  )
-"""
-
-# planted-duplicate corpus (functions/dedup.py plant_dups)
-_CORPUS = f"""
-  corpus AS (
-    SELECT doc_id, text, source FROM documents
-    UNION ALL
-    SELECT doc_id + {DD.EXACT_OFFSET}, text, source FROM documents WHERE doc_id % 5 = 0
-    UNION ALL
-    SELECT doc_id + {DD.NEAR_OFFSET},
-           array_to_string(
-             (string_split(text, ' '))[1:len(string_split(text, ' ')) - 1], ' '),
-           source
-    FROM documents WHERE doc_id % 7 = 0
-  )
-"""
-
-# distinct 3-gram shingles + per-doc set sizes + pairwise Jaccard (blocked on
-# source), mirroring functions/dedup.py exactly
-_JACCARD_CTES = f"""
-  {_CORPUS},
-  sh AS (
-    SELECT DISTINCT doc_id, source, g FROM (
-      SELECT doc_id, source,
-             unnest(CASE WHEN len(w) < 3 THEN []::BIGINT[]
-                    ELSE list_transform(range(1, len(w) - 1),
-                         i -> CAST('0x' || substr(md5(w[i] || ' ' || w[i+1] || ' ' || w[i+2]), 1, 15)
-                              AS BIGINT)) END) AS g
-      FROM (SELECT doc_id, source, string_split(text, ' ') AS w FROM corpus)
-    )
-  ),
-  sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-  inter AS (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-    FROM sh a JOIN sh b
-      ON a.g = b.g AND a.source = b.source AND a.doc_id < b.doc_id
-    GROUP BY 1, 2
-  ),
-  jpairs AS (
-    SELECT doc_a, doc_b, inter,
-           sa.sz + sb.sz - inter AS union_sz,
-           (1000 * inter) // (sa.sz + sb.sz - inter) AS jacc_permille
-    FROM inter
-    JOIN sizes sa ON sa.doc_id = doc_a
-    JOIN sizes sb ON sb.doc_id = doc_b
-  )
-"""
-
-_DOT_D = (
-    "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-    "list_transform(range(1, len({a}) + 1), "
-    "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE))), (acc, v) -> acc + v)"
-)
-_NORM2_D = (
-    "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-    "list_transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), "
-    "(acc, v) -> acc + v)"
-)
-
-
-def _cos_d(a: str, b: str) -> str:
-    return (
-        f"{_DOT_D.format(a=a, b=b)} / "
-        f"(sqrt({_NORM2_D.format(a=a)}) * sqrt({_NORM2_D.format(a=b)}))"
-    )
-
-
-def _plane_lit_d(plane) -> str:
-    return "([" + ", ".join(repr(v) for v in plane) + "]::DOUBLE[])"
-
-
-def _lsh_bucket_d(col: str) -> str:
-    terms = []
-    for j, plane in enumerate(SIM.hyperplanes()):
-        dot = _DOT_D.format(a=col, b=_plane_lit_d(plane))
-        terms.append(
-            f"(CASE WHEN {dot} > CAST(0.0 AS DOUBLE) "
-            f"THEN CAST({1 << j} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-        )
-    return " + ".join(terms)
-
-
-def _sign_bucket_d(col: str, bits: int = 16) -> str:
-    terms = [
-        f"(CASE WHEN CAST({col}[{d + 1}] AS DOUBLE) > 0.0 "
-        f"THEN CAST({1 << d} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-        for d in range(bits)
-    ]
-    return " + ".join(terms)
-
-
-def _minhash_select_d(k: int) -> str:
-    """Mirror of the min-hashes in functions/dedup.band_key_exprs:
-    linear-permutation MinHash mins as one aggregation over the exploded
-    shingles (identical int64 arithmetic)."""
-    p = DD.MINHASH_P
-    cols = [
-        f"MIN(({a} * (g % {p}) + {b}) % {p}) AS mh{i}"
-        for i, (a, b) in enumerate(DD.minhash_params(k))
-    ]
-    return ",\n                     ".join(cols)
-
-
-def _bands_union_d(k: int, rows_per_band: int) -> str:
-    parts = []
-    for band in range(k // rows_per_band):
-        cols = " || '|' || ".join(
-            f"CAST(mh{band * rows_per_band + r} AS VARCHAR)" for r in range(rows_per_band)
-        )
-        parts.append(f"SELECT doc_id, {band} AS band, md5({cols}) AS key FROM mhw")
-    return "\n              UNION ALL ".join(parts)
-
-
-_WORD_HASH_D = "CAST('0x' || substr(md5({w}), 1, 8) AS BIGINT)"
-
-_STOP_LIST_D = "[" + ", ".join(f"'{w}'" for w in TXT.STOPWORDS) + "]"
-
-
-# extract_links closed form, shared by the extract_links oracle and the
-# web_anchor_text aggregation oracle (single source of truth — the
-# _pagerank_rounds_sql pattern).
-_LINKS_SQL = """
-            WITH t AS (
-              SELECT doc_id, string_split(text, ' ') AS w FROM documents
-            ), k AS (
-              SELECT doc_id, w,
-                     least(1 + doc_id % 3, len(w) // 2) AS k_eff
-              FROM t
-            ), l AS (
-              SELECT doc_id, w, unnest(range(0, k_eff)) AS j FROM k
-            )
-            SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-                   CAST(j AS INTEGER) AS link_idx,
-                   concat('HTTP://WWW.Site', (doc_id + j) % 5, '.COM:80/p',
-                          j, '/?utm_source=x&q=', j % 2) AS href,
-                   concat('http://site', (doc_id + j) % 5, '.com/p', j,
-                          '?q=', j % 2) AS href_canon,
-                   w[CAST(2 * j + 2 AS INTEGER)] AS anchor_text
-            FROM l
-"""
-
-_URL_CTES = """
-            WITH h AS (
-              SELECT doc_id, md5(text || 'url') AS hx FROM documents
-            ), b AS (
-              SELECT doc_id,
-                     CAST('0x' || substr(hx, 1, 2) AS INTEGER) AS b0,
-                     CAST('0x' || substr(hx, 3, 2) AS INTEGER) AS b1,
-                     CAST('0x' || substr(hx, 5, 2) AS INTEGER) AS b2,
-                     CAST('0x' || substr(hx, 7, 2) AS INTEGER) AS b3,
-                     CAST('0x' || substr(hx, 9, 2) AS INTEGER) AS b4,
-                     CAST('0x' || substr(hx, 11, 2) AS INTEGER) AS b5,
-                     CAST('0x' || substr(hx, 13, 2) AS INTEGER) AS b6,
-                     CAST('0x' || substr(hx, 15, 2) AS INTEGER) AS b7,
-                     CAST('0x' || substr(hx, 17, 2) AS INTEGER) AS b8,
-                     CAST('0x' || substr(hx, 19, 2) AS INTEGER) AS b9,
-                     CAST('0x' || substr(hx, 21, 2) AS INTEGER) AS b10,
-                     CAST('0x' || substr(hx, 23, 2) AS INTEGER) AS b11,
-                     CAST('0x' || substr(hx, 25, 2) AS INTEGER) AS b12,
-                     CAST('0x' || substr(hx, 27, 2) AS INTEGER) AS b13
-              FROM h
-            ), parts AS (
-              SELECT doc_id,
-                CASE WHEN b0 % 2 = 0 THEN 'http' ELSE 'https' END AS scheme,
-                concat('site', b3 % 4, '.',
-                       CASE WHEN b4 % 2 = 0 THEN 'com' ELSE 'org' END)
-                  AS host_canon,
-                concat(CASE WHEN b2 % 2 = 0 THEN 'www.' ELSE '' END,
-                       CASE WHEN b1 % 2 = 0 THEN 'SITE' ELSE 'site' END,
-                       b3 % 4, '.',
-                       CASE WHEN b4 % 2 = 0 THEN 'com' ELSE 'org' END)
-                  AS host_raw,
-                CASE b5 % 3
-                  WHEN 0 THEN CASE WHEN b0 % 2 = 0 THEN ':80' ELSE ':443' END
-                  WHEN 1 THEN ':8080' ELSE '' END AS port_raw,
-                CASE WHEN b5 % 3 = 1 THEN ':8080' ELSE '' END AS port_canon,
-                concat('/p', b6 % 2,
-                       CASE WHEN b7 % 2 = 0 THEN '/' ELSE '' END) AS path_raw,
-                concat('/p', b6 % 2) AS path_canon,
-                CASE b8 % 3
-                  WHEN 0 THEN concat('?b=', b10 % 2, '&utm_campaign=c',
-                                     b11 % 3, '&a=', b9 % 2)
-                  WHEN 1 THEN concat('?a=', b9 % 2, '&b=', b10 % 2)
-                  ELSE '' END AS query_raw,
-                CASE WHEN b8 % 3 = 2 THEN ''
-                     ELSE concat('?a=', b9 % 2, '&b=', b10 % 2) END
-                  AS query_canon,
-                CASE WHEN b12 % 2 = 0 THEN concat('#s', b13 % 4) ELSE '' END
-                  AS frag_raw
-              FROM b
-            ), u AS (
-              SELECT doc_id,
-                concat(scheme, '://', host_raw, port_raw, path_raw,
-                       query_raw, frag_raw) AS url,
-                host_canon,
-                concat(scheme, '://', host_canon, port_canon, path_canon,
-                       query_canon) AS url_canon
-              FROM parts
-            )
-"""
-
-
-# robots: rules re-derived CLOSED-FORM from md5(host||'robots') (byte j at
-# substr 2j+1; rule i uses bytes 2+3i..4+3i). cpath is always '/p'||(b6%2),
-# so shape s=0/1 ('/p<d>' prefix and exact) matches iff d%4 equals the path
-# digit, s=2 ('/p*') and s=3 ('/') always match. Longest-match winner =
-# row_number over (l DESC, allow DESC, path DESC) — the lexicographic
-# struct order Spark's array_max(struct(l, allow, path)) implements.
-_ROBOTS_CTES = _URL_CTES + """
-            , uu AS (
-              SELECT u.doc_id, u.url, u.host_canon,
-                     p.path_canon AS cpath
-              FROM u JOIN parts p ON u.doc_id = p.doc_id
-            ), hb AS (
-              SELECT host, md5(host || 'robots') AS hr
-              FROM (SELECT DISTINCT host_canon AS host FROM uu)
-            ), rule_raw AS (
-              SELECT host,
-                CAST('0x' || substr(hr, 2*(2+3*i)+1, 2) AS INT) % 3 AS a3,
-                CAST('0x' || substr(hr, 2*(3+3*i)+1, 2) AS INT) % 4 AS d,
-                CAST('0x' || substr(hr, 2*(4+3*i)+1, 2) AS INT) % 4 AS s
-              FROM hb, (SELECT unnest([0, 1, 2, 3]) AS i)
-              WHERE i < 1 + CAST('0x' || substr(hr, 1, 2) AS INT) % 4
-            ), rules AS (
-              SELECT host,
-                CASE s WHEN 0 THEN concat('/p', d)
-                       WHEN 1 THEN concat('/p', d, '$')
-                       WHEN 2 THEN '/p*' ELSE '/' END AS path,
-                CASE WHEN a3 = 2 THEN 1 ELSE 0 END AS allow,
-                CASE s WHEN 0 THEN 3 WHEN 1 THEN 4
-                       WHEN 2 THEN 3 ELSE 1 END AS l,
-                d, s
-              FROM rule_raw
-            ), m AS (
-              SELECT uu.doc_id, r.path, r.allow,
-                row_number() OVER (PARTITION BY uu.doc_id
-                  ORDER BY r.l DESC, r.allow DESC, r.path DESC) AS rn
-              FROM uu JOIN rules r ON uu.host_canon = r.host
-              WHERE r.s IN (2, 3) OR concat('/p', r.d) = uu.cpath
-            ), dec AS (
-              SELECT uu.doc_id, uu.url, uu.host_canon, uu.cpath,
-                     m.path AS matched_path,
-                     CAST(coalesce(m.allow, 1) AS INT) AS allowed,
-                     nullif(CAST('0x' || substr(hb.hr, 3, 2) AS INT) % 5, 0)
-                       AS crawl_delay
-              FROM uu
-              LEFT JOIN (SELECT doc_id, path, allow FROM m WHERE rn = 1) m
-                ON uu.doc_id = m.doc_id
-              LEFT JOIN hb ON uu.host_canon = hb.host
-            )
-"""
-
-
-def _multiscript_oracle() -> str:
-    """DuckDB mirror of q_text_langid_multiscript, generated from the SAME
-    SCRIPT_BLOCKS/SCRIPT_RANGES tables the Spark operator uses (single
-    source of truth: a block edit shows up on both sides or neither)."""
-    blocks = TXT.SCRIPT_BLOCKS
-    ranges = TXT.SCRIPT_RANGES
-    case = " ".join(
-        f"WHEN {i} THEN {b} + "
-        f"(CAST('0x' || substr(hx, CAST(2*i+1 AS INT), 2) AS INT) % {s})"
-        for i, (_n, b, s) in enumerate(blocks)
-    )
-    cnts = ", ".join(
-        "CAST(len(list_filter(cps, c -> "
-        + " OR ".join(f"(c BETWEEN {lo} AND {hi})" for lo, hi in rs)
-        + f")) AS INTEGER) AS n_{n}"
-        for n, rs in ranges
-    )
-    structs = ", ".join("{'cnt': n_%s, 's': '%s'}" % (n, n) for n, _r in ranges)
-    names = ", ".join(f"n_{n}" for n, _r in ranges)
-    total = " + ".join(f"n_{n}" for n, _r in ranges)
-    return f"""
-        WITH h AS (
-          SELECT doc_id, md5(text || 'uni0') || md5(text || 'uni1') AS hx
-          FROM documents
-        ), cp AS (
-          SELECT doc_id, list_transform(range(0, {TXT.MULTISCRIPT_CHARS}),
-            i -> CASE WHEN (i % 5) = 4 THEN 32
-                      ELSE (CASE doc_id % {len(blocks)} {case} END) END) AS cps
-          FROM h
-        ), s AS (
-          SELECT doc_id,
-                 array_to_string(list_transform(cps, c -> chr(CAST(c AS INT))),
-                                 '') AS utext,
-                 CAST(len(cps) AS INTEGER) AS n_chars,
-                 CAST(len(list_filter(cps, c -> c = 32)) AS INTEGER) AS n_space,
-                 {cnts}
-          FROM cp
-        )
-        SELECT doc_id, utext, n_chars, n_space, {names},
-               n_chars - n_space - ({total}) AS n_other,
-               list_reduce(
-                   list_prepend({{'cnt': 0, 's': 'none'}}, [{structs}]),
-                   (a, b) -> CASE WHEN b.cnt > a.cnt THEN b ELSE a END
-               ).s AS script_pred
-        FROM s
-    """
+    return {name: _scoped(RECORDS[name].build) for name in ORDER}
 
 
 def oracle_sql() -> dict[str, str]:
-    k, r = DD.MINHASH_K, DD.LSH_ROWS_PER_BAND
-    thr = DD.JACCARD_THRESHOLD_PERMILLE
-    wh = _WORD_HASH_D.format(w="w")
-    # shared CTE chain ending in `lsh_pairs` — used verbatim by both the
-    # pair query (dedup_minhash_lsh) and the cluster query (dedup_clusters)
-    lsh_ctes = f"""{_JACCARD_CTES.strip().lstrip(',').strip()},
-            mhw AS (
-              SELECT doc_id, {_minhash_select_d(k)}
-              FROM sh GROUP BY doc_id
-            ),
-            bands AS (
-              {_bands_union_d(k, r)}
-            ),
-            cand AS (
-              SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-              FROM bands a JOIN bands b
-                ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
-            ),
-            -- candidate-restricted GLOBAL verification (no source blocking:
-            -- LSH finds genuine cross-source dups the blocked join misses)
-            vinter AS (
-              SELECT c.doc_a, c.doc_b, COUNT(*) AS inter
-              FROM cand c
-              JOIN sh a ON a.doc_id = c.doc_a
-              JOIN sh b ON b.doc_id = c.doc_b AND b.g = a.g
-              GROUP BY c.doc_a, c.doc_b
-            ),
-            lsh_pairs AS (
-              SELECT v.doc_a, v.doc_b, v.inter,
-                     sa.sz + sb.sz - v.inter AS union_sz,
-                     (1000 * v.inter) // (sa.sz + sb.sz - v.inter) AS jacc_permille
-              FROM vinter v
-              JOIN sizes sa ON sa.doc_id = v.doc_a
-              JOIN sizes sb ON sb.doc_id = v.doc_b
-              WHERE (1000 * v.inter) // (sa.sz + sb.sz - v.inter) >= {thr}
-            )"""
-    return {
-        "corpus_chunk_windows": """
-            WITH t AS (
-              SELECT doc_id, string_split(text, ' ') AS w FROM documents
-            ), n AS (
-              SELECT doc_id, w,
-                     1 + greatest((len(w) - 16 + 12 - 1) // 12, 0) AS nc
-              FROM t
-            ), c AS (
-              SELECT doc_id, w, unnest(range(0, nc)) AS i FROM n
-            )
-            SELECT doc_id,
-                   CAST(i AS INTEGER) AS chunk_idx,
-                   CAST(len(w[CAST(i * 12 + 1 AS INTEGER)
-                              : CAST(least(i * 12 + 16, len(w)) AS INTEGER)])
-                        AS INTEGER) AS n_tokens,
-                   array_to_string(
-                       w[CAST(i * 12 + 1 AS INTEGER)
-                         : CAST(least(i * 12 + 16, len(w)) AS INTEGER)],
-                       ' ') AS chunk
-            FROM c
-        """,
-        "text_tokens_multiscript": """
-            SELECT doc_id,
-                   CAST(6 AS INTEGER) AS n_ws_tokens,
-                   CAST(CASE WHEN doc_id % 8 IN (6, 7) THEN 24 ELSE 6 END
-                        AS INTEGER) AS n_tokens_aware
-            FROM documents
-        """,
-        "extract_links": _LINKS_SQL,
-        # modal anchor pinned with an explicit (cnt DESC, anchor ASC)
-        # row_number — the SQL spelling of min(struct(-cnt, anchor)).
-        "web_anchor_text": f"""
-            WITH pairs AS (
-              SELECT href_canon, anchor_text, COUNT(*) AS cnt
-              FROM ({_LINKS_SQL}) GROUP BY 1, 2
-            ), tops AS (
-              SELECT href_canon, anchor_text, cnt,
-                     row_number() OVER (PARTITION BY href_canon
-                       ORDER BY cnt DESC, anchor_text) AS rn
-              FROM pairs
-            )
-            SELECT p.href_canon,
-                   CAST(SUM(p.cnt) AS BIGINT) AS in_links,
-                   CAST(COUNT(*) AS BIGINT) AS n_anchors,
-                   t.anchor_text AS top_anchor,
-                   CAST(t.cnt AS BIGINT) AS top_anchor_links
-            FROM pairs p
-            JOIN (SELECT * FROM tops WHERE rn = 1) t
-              ON p.href_canon = t.href_canon
-            GROUP BY 1, 4, 5
-        """,
-        # snapshot-B lanes replayed closed-form (doc_id%17: 3 gone,
-        # 1/5 edited, 7 spawns doc_id+1e9); md5 equality == text equality.
-        "web_crawl_delta": """
-            WITH a AS (
-              SELECT doc_id, source, md5(text) AS h, len(text) AS l
-              FROM documents
-            ), b0 AS (
-              SELECT doc_id, source,
-                     CASE WHEN doc_id % 17 IN (1, 5) THEN text || ' rev'
-                          ELSE text END AS text
-              FROM documents WHERE doc_id % 17 != 3
-              UNION ALL
-              SELECT doc_id + 1000000000, source, 'fresh ' || text
-              FROM documents WHERE doc_id % 17 = 7
-            ), b AS (
-              SELECT doc_id, source, md5(text) AS h, len(text) AS l FROM b0
-            ), j AS (
-              SELECT coalesce(b.source, a.source) AS source,
-                     CASE WHEN b.doc_id IS NULL THEN 'gone'
-                          WHEN a.doc_id IS NULL THEN 'new'
-                          WHEN a.h = b.h THEN 'unchanged'
-                          ELSE 'changed' END AS status,
-                     coalesce(b.l, a.l) AS l
-              FROM a FULL OUTER JOIN b ON a.doc_id = b.doc_id
-            )
-            SELECT source, status,
-                   CAST(COUNT(*) AS BIGINT) AS n_docs,
-                   CAST(SUM(l) AS BIGINT) AS n_chars
-            FROM j GROUP BY 1, 2
-        """,
-        "url_canonical_dedup": _URL_CTES + """
-            SELECT doc_id, url, host_canon, url_canon,
-                   COUNT(*) OVER (PARTITION BY url_canon) AS n_same,
-                   MIN(doc_id) OVER (PARTITION BY url_canon) AS rep_doc_id
-            FROM u
-        """,
-        "url_domain_stats": _URL_CTES + """
-            SELECT host_canon,
-                   COUNT(*) AS n_urls,
-                   COUNT(DISTINCT url_canon) AS n_pages,
-                   COUNT(*) - COUNT(DISTINCT url_canon) AS n_dup_crawls
-            FROM u GROUP BY host_canon
-        """,
-        # robots: rules re-derived CLOSED-FORM from md5(host||'robots')
-        # (see _ROBOTS_CTES).
-        "web_robots_decisions": _ROBOTS_CTES + """
-            SELECT doc_id, url, host_canon, cpath, matched_path, allowed,
-                   crawl_delay
-            FROM dec
-        """,
-        "web_crawl_schedule": _ROBOTS_CTES + """
-            SELECT doc_id, url, host_canon,
-                   CAST(row_number() OVER w AS INT) AS fetch_seq,
-                   CAST((row_number() OVER w - 1)
-                        * coalesce(crawl_delay, 1) AS BIGINT) AS eta_sec
-            FROM dec WHERE allowed = 1
-            WINDOW w AS (PARTITION BY host_canon ORDER BY doc_id)
-        """,
-        # sitemap entries re-derived CLOSED-FORM from md5(host||'sitemap')
-        # (entry i uses bytes 1+3i..3+3i); the Spark side recovers them by
-        # PARSING the synthesized <urlset> XML with the real tree kernel,
-        # so a value mismatch here means the parser mangled the markup.
-        # Robots winner logic shared with _ROBOTS_CTES' `rules`.
-        "web_sitemap_frontier": _ROBOTS_CTES + """
-            , hs AS (SELECT DISTINCT host_canon AS host FROM u)
-            , smb AS (SELECT host, md5(host || 'sitemap') AS ms FROM hs)
-            , ent AS (
-              SELECT host, CAST(i + 1 AS INT) AS seq,
-                CAST('0x' || substr(ms, 2*(1+3*i)+1, 2) AS INT) % 4 AS pd,
-                1 + CAST('0x' || substr(ms, 2*(2+3*i)+1, 2) AS INT) % 28
-                  AS day,
-                CAST('0x' || substr(ms, 2*(3+3*i)+1, 2) AS INT) % 10 AS pr
-              FROM smb, (SELECT unnest([0, 1, 2, 3]) AS i)
-              WHERE i < 1 + CAST('0x' || substr(ms, 1, 2) AS INT) % 4
-            ), sm_m AS (
-              SELECT e.host, e.seq, r.path, r.allow,
-                row_number() OVER (PARTITION BY e.host, e.seq
-                  ORDER BY r.l DESC, r.allow DESC, r.path DESC) AS rn
-              FROM ent e JOIN rules r ON e.host = r.host
-              WHERE r.s IN (2, 3) OR r.d = e.pd
-            )
-            SELECT e.host, e.seq,
-              concat('https://', e.host, '/p', e.pd) AS loc,
-              concat('2026-01-', lpad(CAST(e.day AS VARCHAR), 2, '0'))
-                AS lastmod,
-              CAST(e.pr * 100 AS INT) AS priority_permille,
-              m.path AS matched_path,
-              CAST(coalesce(m.allow, 1) AS INT) AS allowed
-            FROM ent e
-            LEFT JOIN (SELECT host, seq, path, allow
-                       FROM sm_m WHERE rn = 1) m
-              ON e.host = m.host AND e.seq = m.seq
-        """,
-        "text_langid_multiscript": _multiscript_oracle(),
-        "extract_flagship": _RECON
-        + "SELECT doc_id, status, kind, text, media_ref, span_order FROM recon",
-        "extract_errors": """
-            SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-              CASE doc_id % 10 WHEN 0 THEN 'divergent'
-                               WHEN 1 THEN 'error'
-                               WHEN 2 THEN 'error' ELSE 'ok' END AS status,
-              CASE doc_id % 10 WHEN 0 THEN 'divergent_nontermination'
-                               WHEN 1 THEN 'tag_mismatch'
-                               WHEN 2 THEN 'illegal_self_close'
-                               ELSE NULL END AS error,
-              CASE WHEN doc_id % 10 <= 2 THEN 0 ELSE 5 END AS n_spans
-            FROM documents
-        """,
-        "extract_metrics": _RECON
-        + """
-            SELECT kind, COUNT(*) AS n_spans,
-                   CAST(SUM(coalesce(length(text), 0)) AS BIGINT) AS total_chars
-            FROM recon GROUP BY kind
-        """,
-        "extract_main": _RECON
-        + "SELECT doc_id, status, kind, text, media_ref, span_order FROM recon",
-        "extract_main_boilerplate": """
-            SELECT CAST(doc_id AS VARCHAR) AS doc_id, 'ok' AS status,
-                   'text' AS kind, text,
-                   CAST(NULL AS VARCHAR) AS media_ref, 0 AS span_order
-            FROM documents
-        """,
-        "generate_roundtrip": """
-            SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-              '<p>' || text || '</p><img src="thumb-' || CAST(doc_id AS VARCHAR)
-                || '.png"></img>' AS html_out,
-              'ok' AS status, CAST(NULL AS VARCHAR) AS error
-            FROM documents
-        """,
-        "dedup_exact": f"""
-            WITH {_CORPUS.strip()}
-            SELECT md5(text) AS text_md5, MIN(doc_id) AS rep_doc_id,
-                   COUNT(*) AS n_copies
-            FROM corpus GROUP BY md5(text) HAVING COUNT(*) > 1
-        """,
-        "dedup_chunks": f"""
-            WITH {_CORPUS.strip()},
-            ch AS (
-              SELECT doc_id, i - 1 AS chunk_idx, chunks[i] AS chunk
-              FROM (SELECT doc_id,
-                           regexp_extract_all(text, '[a-z]+( [a-z]+){{0,4}}') AS chunks
-                    FROM corpus),
-                   LATERAL (SELECT unnest(generate_series(1, len(chunks))) AS i)
-            ),
-            r AS (
-              SELECT doc_id, chunk_idx, chunk,
-                     row_number() OVER (PARTITION BY chunk
-                                        ORDER BY doc_id, chunk_idx) AS rn
-              FROM ch
-            )
-            SELECT doc_id,
-                   COUNT(*) AS n_chunks,
-                   CAST(SUM(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-                   COALESCE(string_agg(CASE WHEN rn = 1 THEN chunk END,
-                                       ' ' ORDER BY chunk_idx), '') AS text_dedup
-            FROM r GROUP BY doc_id
-        """,
-        "dedup_repeated_spans": f"""
-            WITH {_CORPUS.strip()},
-            wd AS (SELECT doc_id, string_split(text, ' ') AS w FROM corpus),
-            gr AS (
-              SELECT doc_id, i - 1 AS pos,
-                     array_to_string(w[i:i+9], ' ') AS gram
-              FROM wd, LATERAL (SELECT unnest(generate_series(1, len(w) - 9)) AS i)
-              WHERE len(w) >= 10
-            ),
-            rep AS (
-              SELECT doc_id, pos FROM (
-                SELECT doc_id, pos, COUNT(*) OVER (PARTITION BY gram) AS n_occ
-                FROM gr)
-              WHERE n_occ >= 2
-            ),
-            isl AS (
-              SELECT doc_id, pos,
-                     CAST(SUM(CASE WHEN prev IS NULL OR pos - prev > 10
-                              THEN 1 ELSE 0 END)
-                       OVER (PARTITION BY doc_id ORDER BY pos) AS INTEGER)
-                       AS span_seq
-              FROM (SELECT doc_id, pos,
-                           lag(pos) OVER (PARTITION BY doc_id ORDER BY pos)
-                             AS prev
-                    FROM rep)
-            )
-            SELECT doc_id, span_seq,
-                   CAST(MIN(pos) AS INTEGER) AS span_start,
-                   CAST(MAX(pos) + 9 AS INTEGER) AS span_end,
-                   CAST(MAX(pos) - MIN(pos) + 10 AS INTEGER) AS span_words,
-                   COUNT(*) AS n_rep_grams
-            FROM isl GROUP BY doc_id, span_seq
-        """,
-        "dedup_ngram_jaccard": f"""
-            WITH {_JACCARD_CTES.strip().lstrip(',').strip()}
-            SELECT doc_a, doc_b, inter, union_sz, jacc_permille
-            FROM jpairs WHERE jacc_permille >= {thr}
-        """,
-        "dedup_minhash_lsh": f"""
-            WITH {lsh_ctes}
-            SELECT doc_a, doc_b, inter, union_sz, jacc_permille FROM lsh_pairs
-        """,
-        "dedup_fuzzy_join": f"""
-            WITH {lsh_ctes},
-            fcand AS (
-              SELECT DISTINCT a.doc_id AS left_id, b.doc_id AS right_id
-              FROM bands a JOIN bands b
-                ON a.band = b.band AND a.key = b.key
-              WHERE a.doc_id < 1000000 AND b.doc_id >= 1000000
-            ),
-            fvin AS (
-              SELECT c.left_id, c.right_id, COUNT(*) AS inter
-              FROM fcand c
-              JOIN sh a ON a.doc_id = c.left_id
-              JOIN sh b ON b.doc_id = c.right_id AND b.g = a.g
-              GROUP BY 1, 2
-            ),
-            fuzzy AS (
-              SELECT v.left_id, v.right_id, v.inter,
-                     sa.sz + sb.sz - v.inter AS union_sz,
-                     (1000 * v.inter) // (sa.sz + sb.sz - v.inter)
-                       AS jacc_permille
-              FROM fvin v
-              JOIN sizes sa ON sa.doc_id = v.left_id
-              JOIN sizes sb ON sb.doc_id = v.right_id
-              WHERE (1000 * v.inter) // (sa.sz + sb.sz - v.inter) >= {thr}
-            )
-            SELECT left_id, right_id, inter, union_sz, jacc_permille
-            FROM fuzzy
-        """,
-        "dedup_clusters": f"""
-            WITH RECURSIVE {lsh_ctes},
-            e AS (
-              SELECT doc_a AS u, doc_b AS v FROM lsh_pairs
-              UNION
-              SELECT doc_b AS u, doc_a AS v FROM lsh_pairs
-            ),
-            n AS (SELECT DISTINCT u AS node FROM e),
-            reach(node, label) AS (
-              SELECT node, node FROM n
-              UNION
-              SELECT e.v, r.label FROM reach r JOIN e ON e.u = r.node
-            ),
-            lab AS (
-              SELECT node AS doc_id, MIN(label) AS rep_doc_id
-              FROM reach GROUP BY node
-            ),
-            sz AS (
-              SELECT rep_doc_id, COUNT(*) AS cluster_size
-              FROM lab GROUP BY rep_doc_id
-            )
-            SELECT l.doc_id, l.rep_doc_id, s.cluster_size
-            FROM lab l JOIN sz s USING (rep_doc_id)
-        """,
-        "dedup_simhash": f"""
-            WITH wd AS (
-              SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS w
-              FROM documents
-            ),
-            wh AS (SELECT doc_id, {wh} AS h FROM wd),
-            bits AS (
-              SELECT doc_id, i AS j,
-                     SUM(CASE WHEN ((h >> i) & 1) = 1 THEN 1 ELSE -1 END) AS s
-              FROM wh CROSS JOIN range(32) t(i) GROUP BY doc_id, i
-            )
-            SELECT doc_id,
-                   CAST(SUM(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << j)
-                            ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS simhash
-            FROM bits GROUP BY doc_id
-        """,
-        "dedup_embedding_cosine": f"""
-            WITH ecorpus AS (
-              SELECT vec_id, embedding, label FROM embeddings
-              UNION ALL
-              SELECT vec_id + {DD.EMB_OFFSET}, embedding, label
-              FROM embeddings WHERE vec_id % 4 = 0
-            ),
-            bucketed AS (
-              SELECT vec_id, embedding, {_sign_bucket_d('embedding')} AS bucket
-              FROM ecorpus
-            )
-            SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-                   {_cos_d('a.embedding', 'b.embedding')} AS cos
-            FROM bucketed a JOIN bucketed b
-              ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-            WHERE {_cos_d('a.embedding', 'b.embedding')} >= 0.999
-        """,
-        "dedup_semantic": _semantic_dedup_oracle_sql(
-            source="ecorpus",
-            lead_ctes=f"""ecorpus AS (
-              SELECT vec_id, embedding FROM embeddings
-              UNION ALL
-              SELECT vec_id + {DD.EMB_OFFSET}, embedding
-              FROM embeddings WHERE vec_id % 4 = 0
-            ),""",
-        ),
-        "text_langid": f"""
-            WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
-            SELECT doc_id,
-              CAST(len(w) AS INTEGER) AS n_words,
-              CAST(len(list_filter(w, x -> list_contains({_STOP_LIST_D}, x)))
-                   AS INTEGER) AS n_stop,
-              CASE WHEN 1000 * len(list_filter(w, x -> list_contains({_STOP_LIST_D}, x)))
-                        >= 30 * len(w)
-                   THEN 'en' ELSE 'unk' END AS lang_pred
-            FROM t
-        """,
-        "text_quality": """
-            WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS w FROM documents),
-            m AS (
-              SELECT doc_id,
-                CAST(length(text) AS INTEGER) AS n_chars,
-                CAST(len(w) AS INTEGER) AS n_words,
-                CAST(len(list_distinct(w)) AS INTEGER) AS n_distinct_words,
-                CAST(list_aggregate(list_transform(w, x -> length(x)), 'max')
-                     AS INTEGER) AS max_word_len,
-                CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-                       list_transform(w, x -> (length(x) + 3) // 4)),
-                       (a, b) -> a + b) AS BIGINT) AS n_tokens_bpe,
-                (1000 * length(text)) // len(w) AS chars_per_word_permille
-              FROM t
-            )
-            SELECT *,
-              CAST(CASE WHEN n_words >= 5 AND n_words <= 100000
-                         AND max_word_len <= 40
-                         AND 3 * n_distinct_words >= n_words
-                    THEN 1 ELSE 0 END AS INTEGER) AS quality_ok
-            FROM m
-        """,
-        # Composes the text_langid / text_quality / text_repetition /
-        # dedup_exact oracle fragments into the one funnel the Spark side
-        # computes in a single pass. Sums CAST to BIGINT (DuckDB SUM(int)
-        # is HUGEINT); intermediate len() stays native since only the
-        # seven output columns are type-compared.
-        "corpus_filter_funnel": """
-            WITH t AS (SELECT doc_id, source, text,
-                              string_split(text, ' ') AS w FROM documents),
-            bgc AS (
-              SELECT doc_id, CAST(MAX(c) AS BIGINT) AS top_bigram_count,
-                     CAST(SUM(c) AS BIGINT) AS n_bigrams
-              FROM (
-                SELECT doc_id, bg, COUNT(*) AS c
-                FROM (SELECT doc_id, w[i] || ' ' || w[i+1] AS bg
-                      FROM t, LATERAL (SELECT unnest(generate_series(1, len(w) - 1)) AS i))
-                GROUP BY doc_id, bg)
-              GROUP BY doc_id
-            ),
-            sig AS (
-              SELECT t.doc_id, t.source, md5(t.text) AS text_md5,
-                len(w) AS n_words,
-                len(list_filter(w, x -> list_contains(
-                  ['the', 'a', 'of', 'and', 'to', 'in', 'is', 'it', 'on', 'for'], x)))
-                  AS n_stop,
-                len(list_distinct(w)) AS n_distinct_words,
-                list_aggregate(list_transform(w, x -> length(x)), 'max')
-                  AS max_word_len,
-                CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-                       list_transform(w, x -> (length(x) + 3) // 4)),
-                       (a, b) -> a + b) AS BIGINT) AS n_tokens_bpe,
-                COALESCE(bgc.n_bigrams, 0) AS n_bigrams,
-                COALESCE(bgc.top_bigram_count, 0) AS top_bigram_count,
-                (1000 * (len(w) - len(list_distinct(w)))) // len(w)
-                  AS dup_word_permille
-              FROM t LEFT JOIN bgc ON t.doc_id = bgc.doc_id
-            ),
-            f1 AS (
-              SELECT *, CASE WHEN 1000 * n_stop >= 30 * n_words
-                             THEN 1 ELSE 0 END AS pass_lang
-              FROM sig
-            ),
-            f2 AS (
-              SELECT *, CASE WHEN pass_lang = 1 AND n_words >= 5
-                              AND n_words <= 100000 AND max_word_len <= 40
-                              AND 3 * n_distinct_words >= n_words
-                             THEN 1 ELSE 0 END AS pass_quality
-              FROM f1
-            ),
-            f3 AS (
-              SELECT *, CASE WHEN pass_quality = 1
-                              AND (CASE WHEN n_bigrams = 0 THEN CAST(0 AS BIGINT)
-                                        ELSE (1000 * top_bigram_count) // n_bigrams
-                                   END) <= 66
-                              AND dup_word_permille <= 600
-                             THEN 1 ELSE 0 END AS pass_rep
-              FROM f2
-            ),
-            staged AS (
-              SELECT *, MIN(CASE WHEN pass_rep = 1 THEN doc_id END)
-                          OVER (PARTITION BY text_md5) AS keep_min
-              FROM f3
-            )
-            SELECT source,
-              CAST(COUNT(*) AS BIGINT) AS n_docs,
-              CAST(SUM(pass_lang) AS BIGINT) AS n_lang,
-              CAST(SUM(pass_quality) AS BIGINT) AS n_quality,
-              CAST(SUM(pass_rep) AS BIGINT) AS n_rep,
-              CAST(SUM(CASE WHEN pass_rep = 1 AND doc_id = keep_min
-                            THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-              CAST(SUM(CASE WHEN pass_rep = 1 AND doc_id = keep_min
-                            THEN n_tokens_bpe ELSE 0 END) AS BIGINT) AS tokens_kept
-            FROM staged GROUP BY source
-        """,
-        "text_repetition": """
-            WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-            b AS (
-              SELECT doc_id, ws[i] || ' ' || ws[i+1] AS bg
-              FROM w, LATERAL (SELECT unnest(generate_series(1, len(ws) - 1)) AS i)
-            ),
-            c AS (SELECT doc_id, bg, COUNT(*) AS c FROM b GROUP BY doc_id, bg),
-            m AS (
-              SELECT doc_id,
-                     CAST(MAX(c) AS INTEGER) AS top_bigram_count,
-                     CAST(CAST(SUM(c) AS BIGINT) AS INTEGER) AS n_bigrams
-              FROM c GROUP BY doc_id
-            ),
-            j AS (
-              SELECT w.doc_id,
-                     CAST(len(ws) AS INTEGER) AS n_words,
-                     COALESCE(m.n_bigrams, 0) AS n_bigrams,
-                     COALESCE(m.top_bigram_count, 0) AS top_bigram_count,
-                     (1000 * (len(ws) - len(list_distinct(ws)))) // len(ws)
-                       AS dup_word_permille
-              FROM w LEFT JOIN m ON w.doc_id = m.doc_id
-            )
-            SELECT doc_id, n_words, n_bigrams, top_bigram_count, dup_word_permille,
-                   CASE WHEN n_bigrams = 0 THEN CAST(0 AS BIGINT)
-                        ELSE (1000 * top_bigram_count) // n_bigrams
-                   END AS top_bigram_permille,
-                   CAST(CASE WHEN (CASE WHEN n_bigrams = 0 THEN CAST(0 AS BIGINT)
-                                        ELSE (1000 * top_bigram_count) // n_bigrams
-                                   END) <= 66
-                              AND dup_word_permille <= 600
-                         THEN 1 ELSE 0 END AS INTEGER) AS rep_ok
-            FROM j
-        """,
-        "text_card_redact": """
-            WITH base AS (
-              SELECT doc_id, text,
-                     lpad(CAST(CAST('0x' || substr(md5(text || 'card'), 1, 12)
-                          AS BIGINT) AS VARCHAR), 15, '0') AS p1,
-                     lpad(CAST(CAST('0x' || substr(md5(text || 'card'), 13, 12)
-                          AS BIGINT) AS VARCHAR), 15, '0') AS p2
-              FROM documents
-            ),
-            s AS (
-              SELECT *,
-                     list_sum(list_transform(string_split(p1, ''), (d, i) ->
-                       CASE WHEN i % 2 = 1 THEN
-                         CASE WHEN 2 * CAST(d AS INTEGER) > 9
-                              THEN 2 * CAST(d AS INTEGER) - 9
-                              ELSE 2 * CAST(d AS INTEGER) END
-                       ELSE CAST(d AS INTEGER) END)) AS s1,
-                     list_sum(list_transform(string_split(p2, ''), (d, i) ->
-                       CASE WHEN i % 2 = 1 THEN
-                         CASE WHEN 2 * CAST(d AS INTEGER) > 9
-                              THEN 2 * CAST(d AS INTEGER) - 9
-                              ELSE 2 * CAST(d AS INTEGER) END
-                       ELSE CAST(d AS INTEGER) END)) AS s2
-              FROM base
-            ),
-            cards AS (
-              SELECT doc_id, text, p1, p2,
-                     CASE WHEN doc_id % 2 = 0
-                          THEN (10 - s1 % 10) % 10
-                          ELSE ((10 - s1 % 10) % 10 + 5) % 10 END AS c1,
-                     ((10 - s2 % 10) % 10 + 3) % 10 AS c2
-              FROM s
-            )
-            SELECT doc_id,
-                   CAST(1 + CASE WHEN doc_id % 4 = 0 THEN 1 ELSE 0 END
-                        AS INTEGER) AS n_candidates,
-                   CAST(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END
-                        AS INTEGER) AS n_valid,
-                   text || ' pay '
-                     || CASE WHEN doc_id % 2 = 0 THEN '<CARD>'
-                             ELSE p1 || CAST(c1 AS VARCHAR) END
-                     || CASE WHEN doc_id % 4 = 0
-                             THEN ' alt ' || p2 || CAST(c2 AS VARCHAR)
-                             ELSE '' END AS text_clean
-            FROM cards
-        """,
-        "text_pii_redact": """
-            WITH p AS (
-              SELECT doc_id,
-                     text || ' contact ' || substr(md5(text), 1, 6) || '@example.com'
-                          || CASE WHEN doc_id % 3 = 0
-                                  THEN ' or ' || substr(md5(text), 9, 4) || '@mail.net'
-                                  ELSE '' END
-                          || ' ref '
-                          || CAST(CAST('0x' || substr(md5(text), 7, 6) AS BIGINT)
-                                  AS VARCHAR) AS text_pii
-              FROM documents
-            ),
-            e AS (
-              SELECT doc_id, text_pii,
-                     regexp_replace(text_pii, '[a-z0-9]+@[a-z]+[.][a-z]+',
-                                    '<EMAIL>', 'g') AS t1
-              FROM p
-            )
-            SELECT doc_id,
-                   CAST(len(regexp_extract_all(text_pii,
-                        '[a-z0-9]+@[a-z]+[.][a-z]+')) AS INTEGER) AS n_emails,
-                   CAST(len(regexp_extract_all(t1, '[0-9]{4,}')) AS INTEGER) AS n_ids,
-                   regexp_replace(t1, '[0-9]{4,}', '<ID>', 'g') AS text_clean
-            FROM e
-        """,
-        "text_fingerprint": f"""
-            SELECT doc_id,
-              list_reduce(
-                list_prepend(CAST(0 AS BIGINT),
-                  list_transform(string_split(text, ' '),
-                    w -> {wh} % {TXT.FP_MOD})),
-                (acc, v) -> (acc * {TXT.FP_BASE} + v) % {TXT.FP_MOD}) AS fingerprint
-            FROM documents
-        """,
-        "text_topk_terms": """
-            WITH t AS (
-              SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS term
-              FROM documents
-            )
-            SELECT term, COUNT(*) AS df
-            FROM t GROUP BY term
-            ORDER BY df DESC, term LIMIT 20
-        """,
-        "text_tfidf": """
-            WITH w AS (
-              SELECT doc_id, unnest(string_split(text, ' ')) AS term
-              FROM documents
-            ),
-            tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM w GROUP BY 1, 2),
-            dft AS (SELECT term, COUNT(DISTINCT doc_id) AS df FROM w GROUP BY 1),
-            tot AS (SELECT COUNT(*) AS n_docs FROM documents),
-            dl AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS doc_len FROM tf GROUP BY 1),
-            s AS (
-              SELECT tf.doc_id, tf.term, tf.tf, dft.df,
-                     (1000000 * tf.tf * tot.n_docs)
-                       // (dl.doc_len * dft.df) AS score_micro
-              FROM tf
-              CROSS JOIN tot
-              JOIN dft USING (term)
-              JOIN dl ON dl.doc_id = tf.doc_id
-            ),
-            r AS (
-              SELECT *, row_number() OVER (PARTITION BY doc_id
-                        ORDER BY score_micro DESC, term) AS rk
-              FROM s
-            )
-            SELECT doc_id, term, tf, df, score_micro, CAST(rk AS INTEGER) AS rank
-            FROM r WHERE rk <= 3
-        """,
-        "text_phrase_search": """
-            WITH wd AS (SELECT doc_id, string_split(text, ' ') AS w
-                        FROM documents),
-            ps AS (
-              SELECT doc_id,
-                     list_intersect(
-                       list_transform(
-                         list_filter(
-                           list_transform(w, (x, i) ->
-                             CASE WHEN x = 'hash' THEN i - 1 ELSE -1 END),
-                           p -> p >= 0),
-                         p -> p + 1),
-                       list_filter(
-                         list_transform(w, (x, i) ->
-                           CASE WHEN x = 'join' THEN i - 1 ELSE -1 END),
-                         p -> p >= 0)) AS s
-              FROM wd
-            )
-            SELECT doc_id, CAST(len(s) AS INTEGER) AS n_phrase,
-                   CAST(list_min(s) - 1 AS INTEGER) AS first_pos
-            FROM ps WHERE len(s) > 0
-        """,
-        "source_jsonl_roundtrip": """
-            SELECT CASE WHEN doc_id % 10 = 7 THEN NULL ELSE doc_id END
-                     AS doc_id,
-                   CAST(doc_id % 10 <> 7 AS INTEGER) AS parsed_ok,
-                   CASE WHEN doc_id % 10 = 7 THEN NULL
-                        ELSE CAST(length(text) AS INTEGER) END AS text_len
-            FROM documents
-        """,
-        "source_warc_roundtrip": """
-            SELECT doc_id,
-                   'https://corpus.example/' || source || '/'
-                     || CAST(doc_id AS VARCHAR) AS url,
-                   CAST(length(text) AS INTEGER) AS content_length,
-                   md5(text) AS payload_md5
-            FROM documents
-        """,
-        "text_bm25_search": """
-            WITH wd AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-            base AS (
-              SELECT doc_id, CAST(len(w) AS BIGINT) AS dl,
-                     CAST(len(list_filter(w, x -> x = 'join')) AS BIGINT) AS tf0,
-                     CAST(len(list_filter(w, x -> x = 'hash')) AS BIGINT) AS tf1,
-                     CAST(len(list_filter(w, x -> x = 'scan')) AS BIGINT) AS tf2
-              FROM wd
-            ),
-            tot AS (
-              SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-                     CAST(SUM(dl) AS BIGINT) AS total_len,
-                     CAST(SUM(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df0,
-                     CAST(SUM(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df1,
-                     CAST(SUM(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df2
-              FROM base
-            ),
-            sc AS (
-              SELECT doc_id, dl,
-                     CAST((CASE WHEN tf0 > 0 THEN 1 ELSE 0 END)
-                        + (CASE WHEN tf1 > 0 THEN 1 ELSE 0 END)
-                        + (CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS INTEGER)
-                       AS n_hit,
-                     CAST(
-                       (CASE WHEN tf0 > 0 THEN
-                         (((22000000 * tf0 * total_len)
-                            // (10 * tf0 * total_len + 3 * total_len
-                                + 9 * dl * n_docs))
-                          * ((1000 * (2 * (n_docs - df0) + 1)) // (2 * df0 + 1)))
-                         // 1000 ELSE 0 END)
-                     + (CASE WHEN tf1 > 0 THEN
-                         (((22000000 * tf1 * total_len)
-                            // (10 * tf1 * total_len + 3 * total_len
-                                + 9 * dl * n_docs))
-                          * ((1000 * (2 * (n_docs - df1) + 1)) // (2 * df1 + 1)))
-                         // 1000 ELSE 0 END)
-                     + (CASE WHEN tf2 > 0 THEN
-                         (((22000000 * tf2 * total_len)
-                            // (10 * tf2 * total_len + 3 * total_len
-                                + 9 * dl * n_docs))
-                          * ((1000 * (2 * (n_docs - df2) + 1)) // (2 * df2 + 1)))
-                         // 1000 ELSE 0 END)
-                     AS BIGINT) AS bm25_micro
-              FROM base CROSS JOIN tot
-            )
-            SELECT doc_id, CAST(dl AS INTEGER) AS dl, n_hit, bm25_micro,
-                   CAST(row_number() OVER (ORDER BY bm25_micro DESC, doc_id)
-                        AS INTEGER) AS rank
-            FROM sc WHERE n_hit > 0
-            ORDER BY bm25_micro DESC, doc_id LIMIT 10
-        """,
-        "decontaminate_overlap": """
-            WITH wd AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-            sh AS (
-              SELECT DISTINCT doc_id, g FROM (
-                SELECT doc_id,
-                       unnest(CASE WHEN len(w) < 3 THEN []::BIGINT[]
-                              ELSE list_transform(range(1, len(w) - 1),
-                                   i -> CAST('0x' || substr(md5(w[i] || ' ' || w[i+1] || ' ' || w[i+2]), 1, 15)
-                                        AS BIGINT)) END) AS g
-                FROM wd
-              )
-            ),
-            bench AS (SELECT DISTINCT g FROM sh WHERE doc_id % 50 = 0),
-            hits AS (
-              SELECT s.doc_id, COUNT(*) AS n_overlap
-              FROM sh s JOIN bench b ON s.g = b.g GROUP BY 1
-            )
-            SELECT d.doc_id,
-                   CAST(COALESCE(h.n_overlap, 0) AS BIGINT) AS n_overlap,
-                   CAST(CASE WHEN COALESCE(h.n_overlap, 0) >= 5
-                        THEN 1 ELSE 0 END AS INTEGER) AS is_contaminated
-            FROM documents d LEFT JOIN hits h ON d.doc_id = h.doc_id
-        """,
-        "text_bigram_lm": """
-            WITH wd AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-            occ AS (
-              SELECT doc_id,
-                     unnest(CASE WHEN len(w) < 2 THEN []::VARCHAR[]
-                            ELSE list_transform(range(1, len(w)),
-                                 i -> w[i] || ' ' || w[i+1]) END) AS bigram
-              FROM wd
-            ),
-            bg AS (SELECT bigram, COUNT(*) AS c_bigram FROM occ GROUP BY 1),
-            pre AS (SELECT split_part(bigram, ' ', 1) AS prefix,
-                           COUNT(*) AS c_prefix FROM occ GROUP BY 1),
-            voc AS (SELECT COUNT(DISTINCT wrd) AS v
-                    FROM (SELECT unnest(w) AS wrd FROM wd)),
-            j AS (
-              SELECT o.doc_id,
-                     (1000000 * (b.c_bigram + 1)) // (p.c_prefix + voc.v) AS p_micro
-              FROM occ o
-              JOIN bg b USING (bigram)
-              JOIN pre p ON split_part(o.bigram, ' ', 1) = p.prefix
-              CROSS JOIN voc
-            )
-            SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-                   CAST(CAST(SUM(p_micro) AS BIGINT) // COUNT(*) AS BIGINT) AS score_micro
-            FROM j GROUP BY 1
-        """,
-        "sample_importance": f"""
-            WITH ws AS (
-              SELECT doc_id, source,
-                     CASE WHEN source IN ('src0','src1','src2','src3')
-                          THEN 1 ELSE 0 END AS is_target,
-                     list_filter(string_split(text, ' '),
-                                 x -> x <> '') AS w
-              FROM documents
-            ), g AS (
-              SELECT doc_id, source, is_target,
-                     list_transform(range(1, len(w)),
-                       i -> {_WORD_HASH_D.format(w="w[i] || ' ' || w[i+1]")}
-                            % 256) AS buckets
-              FROM ws
-            ), occ AS (
-              SELECT is_target, unnest(buckets) AS bucket FROM g
-            ), cnt AS (
-              SELECT bucket,
-                     CAST(SUM(is_target) AS BIGINT) AS c_t,
-                     CAST(SUM(1 - is_target) AS BIGINT) AS c_r
-              FROM occ GROUP BY 1
-            ), wt AS (
-              SELECT bucket,
-                     LEAST(1000000 * (c_t + 1) // (c_r + 1),
-                           1000000000000) AS wgt
-              FROM cnt
-            ), docc AS (
-              SELECT doc_id, unnest(buckets) AS bucket FROM g
-            ), sc AS (
-              SELECT d.doc_id,
-                     CAST(SUM(COALESCE(wt.wgt, 1000000)) AS BIGINT) AS score
-              FROM docc d LEFT JOIN wt USING (bucket)
-              GROUP BY 1
-            ), full_sc AS (
-              SELECT g.doc_id, g.source, CAST(g.is_target AS INTEGER)
-                       AS is_target,
-                     CAST(len(g.buckets) AS INTEGER) AS n_grams,
-                     COALESCE(sc.score, 0) AS score
-              FROM g LEFT JOIN sc USING (doc_id)
-            )
-            SELECT doc_id, source, is_target, n_grams, score,
-                   CAST(ROW_NUMBER() OVER (ORDER BY score DESC, doc_id ASC)
-                        AS INTEGER) AS rank
-            FROM full_sc
-            ORDER BY score DESC, doc_id ASC
-            LIMIT 120
-        """,
-        "sample_stratified": f"""
-            SELECT doc_id, source,
-                   {_WORD_HASH_D.format(w="CAST(doc_id AS VARCHAR)")} % 1000
-                     AS bucket
-            FROM documents
-            WHERE {_WORD_HASH_D.format(w="CAST(doc_id AS VARCHAR)")} % 1000
-                  < 100 + 40 * (CAST(substr(source, 4, 10) AS INTEGER) % 10)
-        """,
-        "corpus_pack_sequences": """
-            WITH t AS (
-              SELECT doc_id, source,
-                     CAST(list_sum(list_transform(string_split(text, ' '),
-                          w -> (length(w) + 3) // 4)) AS BIGINT) AS n_tokens
-              FROM documents
-            ),
-            c AS (
-              SELECT doc_id, source, n_tokens,
-                     COALESCE(SUM(n_tokens) OVER (PARTITION BY source
-                       ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING
-                       AND 1 PRECEDING), 0) AS cum_before
-              FROM t
-            )
-            SELECT doc_id, source, n_tokens,
-                   CAST(cum_before // 512 AS BIGINT) AS bin_id,
-                   CAST(cum_before % 512 AS BIGINT) AS bin_offset
-            FROM c
-        """,
-        "pipeline_extract_bpe": _bpe_rounds_sql(
-            16,
-            source="bdocs",
-            lead_ctes="""bdocs AS (
-              SELECT doc_id,
-                     array_to_string((string_split(text, ' '))[1:3], ' ')
-                       || ' ' || text || ' ' || text AS text
-              FROM documents
-            ),""",
-        )
-        + """,
-            wt AS (SELECT word, CAST(len(syms) AS BIGINT) AS ntok FROM w16),
-            dw AS (
-              SELECT doc_id,
-                     unnest(list_filter(string_split(text, ' '),
-                                        w -> w <> '')) AS word
-              FROM bdocs
-            ),
-            agg AS (
-              SELECT dw.doc_id, CAST(COUNT(*) AS INTEGER) AS n_words,
-                     CAST(SUM(wt.ntok) AS BIGINT) AS n_tokens
-              FROM dw JOIN wt USING (word) GROUP BY dw.doc_id
-            )
-            SELECT d.doc_id, COALESCE(a.n_words, 0) AS n_words,
-                   COALESCE(a.n_tokens, 0) AS n_tokens
-            FROM bdocs d LEFT JOIN agg a USING (doc_id)
-        """,
-        "corpus_pack_bpe": _bpe_rounds_sql(16)
-        + """,
-            wt AS (SELECT word, CAST(len(syms) AS BIGINT) AS ntok FROM w16),
-            dw AS (
-              SELECT doc_id,
-                     unnest(list_filter(string_split(text, ' '),
-                                        w -> w <> '')) AS word
-              FROM documents
-            ),
-            agg AS (
-              SELECT dw.doc_id, CAST(SUM(wt.ntok) AS BIGINT) AS n_tokens
-              FROM dw JOIN wt USING (word) GROUP BY dw.doc_id
-            ),
-            t AS (
-              SELECT d.doc_id, d.source,
-                     COALESCE(a.n_tokens, 0) AS n_tokens
-              FROM documents d LEFT JOIN agg a USING (doc_id)
-            ),
-            c AS (
-              SELECT doc_id, source, n_tokens,
-                     COALESCE(SUM(n_tokens) OVER (PARTITION BY source
-                       ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING
-                       AND 1 PRECEDING), 0) AS cum_before
-              FROM t
-            )
-            SELECT doc_id, source, n_tokens,
-                   CAST(cum_before // 512 AS BIGINT) AS bin_id,
-                   CAST(cum_before % 512 AS BIGINT) AS bin_offset
-            FROM c
-        """,
-        "corpus_mix": f"""
-            WITH t AS (
-              SELECT doc_id, source,
-                     CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-              FROM documents
-            ),
-            w AS (
-              SELECT DISTINCT source,
-                     CAST(1 + (CAST(substr(source, 4, 10) AS INTEGER) % 4)
-                          AS BIGINT) AS w
-              FROM documents
-            ),
-            wsum AS (SELECT CAST(SUM(w) AS BIGINT) AS ws FROM w),
-            budget AS (SELECT CAST(SUM(n_tokens) AS BIGINT) AS b FROM t),
-            tot AS (
-              SELECT source, CAST(SUM(n_tokens) AS BIGINT) AS total_tokens
-              FROM t GROUP BY source
-            ),
-            rates AS (
-              SELECT tot.source,
-                     (budget.b * w.w * 1000000) // (wsum.ws * tot.total_tokens)
-                       AS rate_ppm
-              FROM tot JOIN w USING (source)
-              CROSS JOIN wsum CROSS JOIN budget
-              WHERE tot.total_tokens > 0
-            ),
-            c AS (
-              SELECT t.doc_id, t.source, t.n_tokens, r.rate_ppm,
-                     r.rate_ppm // 1000000
-                     + (CASE WHEN ({_WORD_HASH_D.format(w="CAST(t.doc_id AS VARCHAR) || ':' || t.source")}
-                              % 1000000) < r.rate_ppm % 1000000
-                        THEN 1 ELSE 0 END) AS n_copies
-              FROM t JOIN rates r USING (source)
-            )
-            SELECT doc_id, source,
-                   CAST(unnest(generate_series(1, n_copies)) AS BIGINT)
-                     AS copy_idx,
-                   n_tokens, rate_ppm
-            FROM c WHERE n_copies >= 1
-        """,
-        "embedding_quantize": """
-            WITH m AS (
-              SELECT vec_id,
-                     list_max(list_transform(embedding,
-                              x -> abs(CAST(x AS DOUBLE)))) AS mx
-              FROM embeddings
-            ),
-            c AS (
-              SELECT e.vec_id, m.mx,
-                     CASE WHEN m.mx = 0.0e0
-                          THEN list_transform(e.embedding, x -> CAST(0 AS BIGINT))
-                          ELSE list_transform(e.embedding,
-                               x -> CAST(floor(CAST(x AS DOUBLE) * 127.0e0 / m.mx
-                                          + 0.5e0) AS BIGINT))
-                     END AS codes
-              FROM embeddings e JOIN m USING (vec_id)
-            )
-            SELECT vec_id, mx / 127.0e0 AS scale,
-                   list_reduce(list_prepend(CAST(0 AS BIGINT), codes),
-                       (acc, cd) -> (acc * 31 + cd + 1000000007) % 1000000007)
-                     AS code_hash,
-                   CAST(len(list_filter(codes, cd -> abs(cd) = 127))
-                        AS INTEGER) AS n_sat
-            FROM c
-        """,
-        "similarity_quantized_topk": """
-            WITH m AS (
-              SELECT vec_id,
-                     list_max(list_transform(embedding,
-                              x -> abs(CAST(x AS DOUBLE)))) AS mx
-              FROM embeddings
-            ),
-            c AS (
-              SELECT e.vec_id,
-                     CASE WHEN m.mx = 0.0e0
-                          THEN list_transform(e.embedding, x -> CAST(0 AS BIGINT))
-                          ELSE list_transform(e.embedding,
-                               x -> CAST(floor(CAST(x AS DOUBLE) * 127.0e0 / m.mx
-                                          + 0.5e0) AS BIGINT))
-                     END AS codes
-              FROM embeddings e JOIN m USING (vec_id)
-            ),
-            q AS (
-              SELECT vec_id AS query_id, codes AS q_codes FROM c
-              WHERE vec_id < 10
-            ),
-            p AS (
-              SELECT q.query_id, c.vec_id AS neighbor_id,
-                     CAST(list_dot_product(q.q_codes, c.codes) AS DOUBLE)
-                     / (sqrt(CAST(list_dot_product(q.q_codes, q.q_codes)
-                                  AS DOUBLE))
-                        * sqrt(CAST(list_dot_product(c.codes, c.codes)
-                                    AS DOUBLE))) AS qcos
-              FROM c, q WHERE c.vec_id <> q.query_id
-            ),
-            r AS (
-              SELECT query_id, neighbor_id, qcos,
-                     row_number() OVER (PARTITION BY query_id
-                                        ORDER BY qcos DESC, neighbor_id) AS rk
-              FROM p
-            )
-            SELECT query_id, neighbor_id, CAST(rk AS INTEGER) AS rank, qcos
-            FROM r WHERE rk <= 5
-        """,
-        "kmeans_embeddings": _kmeans_oracle_sql(),
-        "graph_pagerank": _pagerank_oracle_sql(),
-        "graph_domain_pagerank": _domain_pagerank_oracle_sql(),
-        # same synthetic 2-out edges as graph_pagerank, HITS rounds
-        "graph_hits": """
-        WITH cnt AS (SELECT COUNT(*) AS n FROM documents),
-        v AS (SELECT doc_id AS node FROM documents),
-        e AS (
-          SELECT node AS src,
-                 unnest([(node * 31 + 7) % (SELECT n FROM cnt),
-                         (node * 17 + 3) % (SELECT n FROM cnt)]) AS dst
-          FROM v
-        )"""
-        + _hits_rounds_sql(),
-        "sketch_bloom_decontaminate": """
-            WITH wd AS (
-              SELECT doc_id, string_split(text, ' ') AS w FROM documents
-            ), sh AS (
-              SELECT DISTINCT doc_id, g FROM (
-                SELECT doc_id,
-                       unnest(CASE WHEN len(w) < 3 THEN []::VARCHAR[]
-                              ELSE list_transform(range(1, len(w) - 1),
-                                   i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])
-                              END) AS g
-                FROM wd
-              )
-            ), bench AS (
-              SELECT DISTINCT g FROM sh WHERE doc_id % 200 = 0
-            ), hr AS (
-              SELECT unnest([0, 1, 2, 3]) AS i
-            ), bloom AS (
-              SELECT p // 60 AS word_idx, bit_or(1::BIGINT << (p % 60)) AS bits
-              FROM (
-                SELECT CAST('0x' || substr(md5(g || '@' || hr.i), 1, 3)
-                            AS INTEGER) % 960 AS p
-                FROM bench CROSS JOIN hr
-              ) GROUP BY 1
-            ), probe AS (
-              SELECT s.doc_id, s.g,
-                     CAST('0x' || substr(md5(s.g || '@' || hr.i), 1, 3)
-                          AS INTEGER) % 960 AS p
-              FROM sh s CROSS JOIN hr
-            ), pb AS (
-              SELECT doc_id, g,
-                     SUM(CASE WHEN b.bits IS NOT NULL
-                              AND ((b.bits >> (p.p % 60)) % 2) != 0
-                         THEN 1 ELSE 0 END) AS nh
-              FROM probe p LEFT JOIN bloom b ON b.word_idx = p.p // 60
-              GROUP BY 1, 2
-            ), hits AS (
-              SELECT doc_id, COUNT(*) AS n_shingles,
-                     SUM(CASE WHEN nh = 4 THEN 1 ELSE 0 END) AS n_bloom
-              FROM pb GROUP BY 1
-            ), ex AS (
-              SELECT s.doc_id, COUNT(*) AS n_exact
-              FROM sh s JOIN bench b USING (g) GROUP BY 1
-            )
-            SELECT d.doc_id,
-                   CAST(COALESCE(h.n_shingles, 0) AS INTEGER) AS n_shingles,
-                   CAST(COALESCE(h.n_bloom, 0) AS INTEGER) AS n_bloom_hits,
-                   CAST(COALESCE(e.n_exact, 0) AS INTEGER) AS n_exact
-            FROM documents d
-            LEFT JOIN hits h ON d.doc_id = h.doc_id
-            LEFT JOIN ex e ON d.doc_id = e.doc_id
-        """,
-        "sketch_countmin_words": """
-            WITH t AS (
-              SELECT unnest(string_split(text, ' ')) AS term FROM documents
-            ), tt AS (
-              SELECT term FROM t WHERE term <> ''
-            ), occ AS (
-              SELECT term, CAST(COUNT(*) AS BIGINT) AS exact
-              FROM tt GROUP BY term
-            ), hr AS (
-              SELECT unnest([0, 1, 2, 3]) AS i
-            ), cells AS (
-              SELECT hr.i AS hrow,
-                     CAST('0x' || substr(md5(term || '#' || hr.i), 1, 1)
-                          AS INTEGER) AS bucket,
-                     CAST(COUNT(*) AS BIGINT) AS cnt
-              FROM tt CROSS JOIN hr GROUP BY 1, 2
-            ), probes AS (
-              SELECT term, exact FROM occ ORDER BY exact DESC, term LIMIT 20
-            )
-            SELECT p.term, p.exact,
-                   CAST(MIN(COALESCE(c.cnt, 0)) AS BIGINT) AS est
-            FROM probes p
-            CROSS JOIN hr
-            LEFT JOIN cells c
-              ON c.hrow = hr.i
-             AND c.bucket = CAST('0x' || substr(md5(p.term || '#' || hr.i),
-                                 1, 1) AS INTEGER)
-            GROUP BY 1, 2
-        """,
-        "similarity_topk": f"""
-            WITH q AS (
-              SELECT vec_id AS query_id, embedding AS q_emb
-              FROM embeddings WHERE vec_id < 10
-            ),
-            p AS (
-              SELECT q.query_id, e.vec_id AS neighbor_id,
-                     {_cos_d('q.q_emb', 'e.embedding')} AS cos
-              FROM embeddings e, q WHERE e.vec_id <> q.query_id
-            ),
-            r AS (
-              SELECT query_id, neighbor_id, cos,
-                     row_number() OVER (PARTITION BY query_id
-                                        ORDER BY cos DESC, neighbor_id) AS rk
-              FROM p
-            )
-            SELECT query_id, neighbor_id, CAST(rk AS INTEGER) AS rank, cos
-            FROM r WHERE rk <= 5
-        """,
-        "similarity_lsh_topk": f"""
-            WITH bucketed AS (
-              SELECT vec_id, embedding, {_lsh_bucket_d('embedding')} AS bucket
-              FROM embeddings
-            ),
-            q AS (
-              SELECT vec_id AS query_id, embedding AS q_emb, bucket AS q_bucket
-              FROM bucketed WHERE vec_id < 10
-            ),
-            p AS (
-              SELECT q.query_id, e.vec_id AS neighbor_id,
-                     {_cos_d('q.q_emb', 'e.embedding')} AS cos
-              FROM bucketed e, q
-              WHERE e.bucket = q.q_bucket AND e.vec_id <> q.query_id
-            ),
-            r AS (
-              SELECT query_id, neighbor_id, cos,
-                     row_number() OVER (PARTITION BY query_id
-                                        ORDER BY cos DESC, neighbor_id) AS rk
-              FROM p
-            )
-            SELECT query_id, neighbor_id, CAST(rk AS INTEGER) AS rank, cos
-            FROM r WHERE rk <= 5
-        """,
-        "transform_plugins": """
-            WITH d AS (
-              SELECT CAST(doc_id AS VARCHAR) AS doc_id, text,
-                     array_to_string((string_split(text, ' '))[1:3], ' ') AS title
-              FROM documents
-            )
-            SELECT doc_id, 'ok' AS status, 'text' AS kind, title AS text,
-                   CAST(NULL AS VARCHAR) AS media_ref, 0 AS span_order FROM d
-            UNION ALL SELECT doc_id, 'ok', 'text', text, NULL, 1 FROM d
-            UNION ALL SELECT doc_id, 'ok', 'text', text, NULL, 2 FROM d
-        """,
-        "parse_nodes": """
-            WITH d AS (
-              SELECT CAST(doc_id AS VARCHAR) AS doc_id, text,
-                     array_to_string((string_split(text, ' '))[1:3], ' ') AS title
-              FROM documents
-            )
-            SELECT doc_id, 'ok' AS status, 2 AS node_id, 1 AS pid,
-                   'Element' AS kind, 'div' AS tag, CAST(NULL AS VARCHAR) AS content,
-                   CAST(FALSE AS BOOLEAN) AS unary FROM d
-            UNION ALL SELECT doc_id, 'ok', 3, 2, 'Element', 'h1', NULL, FALSE FROM d
-            UNION ALL SELECT doc_id, 'ok', 4, 3, 'Text', NULL, title,
-                   CAST(NULL AS BOOLEAN) FROM d
-            UNION ALL SELECT doc_id, 'ok', 5, 2, 'Element', 'p', NULL, FALSE FROM d
-            UNION ALL SELECT doc_id, 'ok', 6, 5, 'Text', NULL, text,
-                   CAST(NULL AS BOOLEAN) FROM d
-        """,
-        "parse_attrs": """
-            WITH d AS (SELECT CAST(doc_id AS VARCHAR) AS doc_id FROM documents)
-            SELECT doc_id, CAST(2 AS INTEGER) AS node_id, 'div' AS tag,
-                   CAST(0 AS INTEGER) AS attr_pos, 'id' AS name,
-                   'a' || doc_id AS value FROM d
-            UNION ALL SELECT doc_id, 2, 'div', 1, 'keep', 'k' FROM d
-            UNION ALL SELECT doc_id, 3, 'p', 0, 'class',
-                   CAST(NULL AS VARCHAR) FROM d
-            UNION ALL SELECT doc_id, 5, 'img', 0, 'src', 'u' FROM d
-            UNION ALL SELECT doc_id, 5, 'img', 1, 'alt', '' FROM d
-        """,
-        "diff_attrs": """
-            WITH d AS (SELECT CAST(doc_id AS VARCHAR) AS doc_id FROM documents)
-            SELECT doc_id, CAST(2 AS INTEGER) AS node_id,
-                   CAST(0 AS INTEGER) AS change_pos, 'added' AS change,
-                   'q' AS name, 'y' || doc_id AS value FROM d
-            UNION ALL SELECT doc_id, 2, 1, 'removed', 'id', 'x' || doc_id FROM d
-            UNION ALL SELECT doc_id, 2, 2, 'updated', 'class', 'b' FROM d
-        """,
-        "extract_html_tables": """
-            WITH wd AS (
-              SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-                     string_split(text, ' ') AS w,
-                     LEAST(12, (len(string_split(text, ' ')) // 3) * 3)
-                       AS n_cells
-              FROM documents
-            )
-            SELECT doc_id,
-                   CAST((i - 1) // 3 AS INTEGER) AS row_idx,
-                   CAST((i - 1) % 3 AS INTEGER) AS col_idx,
-                   w[i] AS cell_text
-            FROM wd, LATERAL (SELECT unnest(generate_series(1, n_cells)) AS i)
-            WHERE n_cells > 0
-        """,
-        "extract_quirks": """
-            WITH d AS (SELECT CAST(doc_id AS VARCHAR) AS doc_id, text FROM documents)
-            SELECT doc_id, 'ok' AS status, 'text' AS kind,
-                   '&amp; ' || text AS text, CAST(NULL AS VARCHAR) AS media_ref,
-                   0 AS span_order FROM d
-            UNION ALL SELECT doc_id, 'ok', 'text', ' ', NULL, 1 FROM d
-        """,
-        "diff_transform": """
-            SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-              CASE WHEN doc_id % 3 = 0
-                   THEN '<p><ins>' || text || '</ins></p>'
-                   ELSE '<p>' || text || '</p>' END AS diff_html,
-              'ok' AS status, CAST(NULL AS VARCHAR) AS error,
-              CAST(CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END AS INTEGER) AS n_ins,
-              CAST(0 AS INTEGER) AS n_del
-            FROM documents
-        """,
-        "similarity_ivf_topk": f"""
-            WITH cents AS (
-              SELECT vec_id AS cent_id, embedding AS cent_emb
-              FROM embeddings WHERE vec_id < {SIM.N_IVF_CELLS}
-            ),
-            scored AS (
-              SELECT e.vec_id, e.embedding, c.cent_id,
-                     {_cos_d('e.embedding', 'c.cent_emb')} AS cent_cos
-              FROM embeddings e, cents c
-            ),
-            assigned AS (
-              SELECT vec_id, embedding, cent_id AS cell FROM (
-                SELECT *, row_number() OVER (PARTITION BY vec_id
-                          ORDER BY cent_cos DESC, cent_id) AS rn
-                FROM scored
-              ) WHERE rn = 1
-            ),
-            q AS (
-              SELECT vec_id AS query_id, embedding AS q_emb, cell AS q_cell
-              FROM assigned WHERE vec_id < 10
-            ),
-            p AS (
-              SELECT q.query_id, e.vec_id AS neighbor_id,
-                     {_cos_d('q.q_emb', 'e.embedding')} AS cos
-              FROM assigned e, q
-              WHERE e.cell = q.q_cell AND e.vec_id <> q.query_id
-            ),
-            r AS (
-              SELECT query_id, neighbor_id, cos,
-                     row_number() OVER (PARTITION BY query_id
-                                        ORDER BY cos DESC, neighbor_id) AS rk
-              FROM p
-            )
-            SELECT query_id, neighbor_id, CAST(rk AS INTEGER) AS rank, cos
-            FROM r WHERE rk <= 5
-        """,
-        "multimodal_meta": """
-            SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-              CAST(16 AS INTEGER) AS n_bytes,
-              substr(md5(text), 1, 8) AS magic,
-              CAST(CAST('0x' || substr(md5(text), 1, 2) AS INTEGER) AS INTEGER) AS width,
-              CAST(CAST('0x' || substr(md5(text), 3, 2) AS INTEGER) AS INTEGER) AS height,
-              CAST('0x' || substr(md5(text), 1, 8) AS BIGINT) AS checksum
-            FROM documents
-        """,
-        "multimodal_image_decode": """
-            WITH d AS (
-              SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-                     4 + CAST('0x' || substr(md5(text), 1, 2) AS INTEGER) % 13 AS w,
-                     4 + CAST('0x' || substr(md5(text), 3, 2) AS INTEGER) % 13 AS h,
-                     CAST('0x' || substr(md5(text), 5, 2) AS INTEGER) AS fr,
-                     CAST('0x' || substr(md5(text), 7, 2) AS INTEGER) AS fg,
-                     CAST('0x' || substr(md5(text), 9, 2) AS INTEGER) AS fb
-              FROM documents
-            )
-            SELECT doc_id, 'bmp' AS format, 'decoded' AS outcome,
-                   CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-                   CAST(w * h AS INTEGER) AS n_px,
-                   CAST(fr * (w * h - 1) + 255 AS BIGINT) AS sum_r,
-                   CAST(fg * (w * h - 1) + 255 AS BIGINT) AS sum_g,
-                   CAST(fb * (w * h - 1) + 255 AS BIGINT) AS sum_b
-            FROM d
-        """,
-        "multimodal_png_decode": """
-            WITH d AS (
-              SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-                     4 + CAST('0x' || substr(md5(text || 'png'), 1, 2) AS INTEGER) % 13 AS w,
-                     4 + CAST('0x' || substr(md5(text || 'png'), 3, 2) AS INTEGER) % 13 AS h,
-                     CAST('0x' || substr(md5(text || 'png'), 5, 2) AS INTEGER) AS fr,
-                     CAST('0x' || substr(md5(text || 'png'), 7, 2) AS INTEGER) AS fg,
-                     CAST('0x' || substr(md5(text || 'png'), 9, 2) AS INTEGER) AS fb
-              FROM documents
-            )
-            SELECT doc_id, 'png' AS format, 'decoded' AS outcome,
-                   CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-                   CAST(w * h AS INTEGER) AS n_px,
-                   CAST(fr * (w * h - 1) + 255 AS BIGINT) AS sum_r,
-                   CAST(fg * (w * h - 1) + 255 AS BIGINT) AS sum_g,
-                   CAST(fb * (w * h - 1) + 255 AS BIGINT) AS sum_b
-            FROM d
-        """,
-        "multimodal_gif_decode": """
-            WITH d AS (
-              SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-                     4 + CAST('0x' || substr(md5(text || 'gif'), 1, 2) AS INTEGER) % 13 AS w,
-                     4 + CAST('0x' || substr(md5(text || 'gif'), 3, 2) AS INTEGER) % 13 AS h,
-                     CAST('0x' || substr(md5(text || 'gif'), 5, 2) AS INTEGER) AS fr,
-                     CAST('0x' || substr(md5(text || 'gif'), 7, 2) AS INTEGER) AS fg,
-                     CAST('0x' || substr(md5(text || 'gif'), 9, 2) AS INTEGER) AS fb
-              FROM documents
-            )
-            SELECT doc_id, 'gif' AS format, 'decoded' AS outcome,
-                   CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-                   CAST(w * h AS INTEGER) AS n_px,
-                   CAST(fr * (w * h - 1) + 255 AS BIGINT) AS sum_r,
-                   CAST(fg * (w * h - 1) + 255 AS BIGINT) AS sum_g,
-                   CAST(fb * (w * h - 1) + 255 AS BIGINT) AS sum_b
-            FROM d
-        """,
-        "multimodal_gif_frames": """
-            SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-                   'decoded' AS outcome,
-                   CAST(1 + CAST('0x' || substr(md5(text || 'gif'), 13, 2) AS INTEGER) % 4 AS INTEGER) AS n_frames,
-                   CAST(4 + CAST('0x' || substr(md5(text || 'gif'), 1, 2) AS INTEGER) % 13 AS INTEGER) AS width,
-                   CAST(4 + CAST('0x' || substr(md5(text || 'gif'), 3, 2) AS INTEGER) % 13 AS INTEGER) AS height
-            FROM documents
-        """,
-        "multimodal_jpeg_decode": """
-            WITH p AS (
-              SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-                     8 * (1 + CAST('0x' || substr(md5(text || 'jpg'), 1, 2) AS INTEGER) % 6) AS w,
-                     8 * (1 + CAST('0x' || substr(md5(text || 'jpg'), 3, 2) AS INTEGER) % 6) AS h,
-                     CAST('0x' || substr(md5(text || 'jpg'), 5, 2) AS INTEGER) AS fr,
-                     CAST('0x' || substr(md5(text || 'jpg'), 7, 2) AS INTEGER) AS fg,
-                     CAST('0x' || substr(md5(text || 'jpg'), 9, 2) AS INTEGER) AS fb
-              FROM documents
-            ),
-            -- forward JFIF + DC-only quant round trip (core/jpeg.py contract:
-            -- every rounding is floor(x + 0.5), Q = 16 luma / 24 chroma)
-            -- every fractional literal is written in e-notation so DuckDB
-            -- parses it as DOUBLE: bare 0.299 is DECIMAL, whose EXACT
-            -- arithmetic lands ties (…= .500) that float64 misses by 1 ulp —
-            -- observed on ~1/1000 fills as a one-quant-step luma shift
-            ycc AS (
-              SELECT *,
-                floor(0.299e0 * fr + 0.587e0 * fg + 0.114e0 * fb + 0.5e0) AS y,
-                floor(-0.168736e0 * fr - 0.331264e0 * fg + 0.5e0 * fb + 128 + 0.5e0) AS cb,
-                floor(0.5e0 * fr - 0.418688e0 * fg - 0.081312e0 * fb + 128 + 0.5e0) AS cr
-              FROM p
-            ),
-            rt AS (
-              SELECT *,
-                least(255, greatest(0, floor(16 * floor(8 * (y - 128) / 16 + 0.5e0) / 8 + 128 + 0.5e0))) AS y2,
-                least(255, greatest(0, floor(24 * floor(8 * (cb - 128) / 24 + 0.5e0) / 8 + 128 + 0.5e0))) AS cb2,
-                least(255, greatest(0, floor(24 * floor(8 * (cr - 128) / 24 + 0.5e0) / 8 + 128 + 0.5e0))) AS cr2
-              FROM ycc
-            ),
-            rgb AS (
-              SELECT *,
-                least(255, greatest(0, floor(y2 + 1.402e0 * (cr2 - 128) + 0.5e0))) AS r2,
-                least(255, greatest(0, floor(y2 - 0.344136e0 * (cb2 - 128) - 0.714136e0 * (cr2 - 128) + 0.5e0))) AS g2,
-                least(255, greatest(0, floor(y2 + 1.772e0 * (cb2 - 128) + 0.5e0))) AS b2
-              FROM rt
-            )
-            SELECT doc_id, 'jpeg' AS format, 'decoded' AS outcome,
-                   CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-                   CAST(w * h AS INTEGER) AS n_px,
-                   CAST(r2 * w * h AS BIGINT) AS sum_r,
-                   CAST(g2 * w * h AS BIGINT) AS sum_g,
-                   CAST(b2 * w * h AS BIGINT) AS sum_b
-            FROM rgb
-        """,
-        "multimodal_jpeg_progressive": """
-            WITH p AS (
-              SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-                     8 * (1 + CAST('0x' || substr(md5(text || 'jpp'), 1, 2) AS INTEGER) % 6) AS w,
-                     8 * (1 + CAST('0x' || substr(md5(text || 'jpp'), 3, 2) AS INTEGER) % 6) AS h,
-                     CAST('0x' || substr(md5(text || 'jpp'), 5, 2) AS INTEGER) AS fr,
-                     CAST('0x' || substr(md5(text || 'jpp'), 7, 2) AS INTEGER) AS fg,
-                     CAST('0x' || substr(md5(text || 'jpp'), 9, 2) AS INTEGER) AS fb
-              FROM documents
-            ),
-            -- forward JFIF + DC-only quant round trip (core/jpeg.py contract:
-            -- every rounding is floor(x + 0.5), Q = 16 luma / 24 chroma)
-            -- every fractional literal is written in e-notation so DuckDB
-            -- parses it as DOUBLE: bare 0.299 is DECIMAL, whose EXACT
-            -- arithmetic lands ties (…= .500) that float64 misses by 1 ulp —
-            -- observed on ~1/1000 fills as a one-quant-step luma shift
-            ycc AS (
-              SELECT *,
-                floor(0.299e0 * fr + 0.587e0 * fg + 0.114e0 * fb + 0.5e0) AS y,
-                floor(-0.168736e0 * fr - 0.331264e0 * fg + 0.5e0 * fb + 128 + 0.5e0) AS cb,
-                floor(0.5e0 * fr - 0.418688e0 * fg - 0.081312e0 * fb + 128 + 0.5e0) AS cr
-              FROM p
-            ),
-            rt AS (
-              SELECT *,
-                least(255, greatest(0, floor(16 * floor(8 * (y - 128) / 16 + 0.5e0) / 8 + 128 + 0.5e0))) AS y2,
-                least(255, greatest(0, floor(24 * floor(8 * (cb - 128) / 24 + 0.5e0) / 8 + 128 + 0.5e0))) AS cb2,
-                least(255, greatest(0, floor(24 * floor(8 * (cr - 128) / 24 + 0.5e0) / 8 + 128 + 0.5e0))) AS cr2
-              FROM ycc
-            ),
-            rgb AS (
-              SELECT *,
-                least(255, greatest(0, floor(y2 + 1.402e0 * (cr2 - 128) + 0.5e0))) AS r2,
-                least(255, greatest(0, floor(y2 - 0.344136e0 * (cb2 - 128) - 0.714136e0 * (cr2 - 128) + 0.5e0))) AS g2,
-                least(255, greatest(0, floor(y2 + 1.772e0 * (cb2 - 128) + 0.5e0))) AS b2
-              FROM rt
-            )
-            SELECT doc_id, 'jpeg' AS format, 'decoded' AS outcome,
-                   CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-                   CAST(w * h AS INTEGER) AS n_px,
-                   CAST(r2 * w * h AS BIGINT) AS sum_r,
-                   CAST(g2 * w * h AS BIGINT) AS sum_g,
-                   CAST(b2 * w * h AS BIGINT) AS sum_b
-            FROM rgb
-        """,
-        "multimodal_audio_meta": """
-            WITH d AS (
-              SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-                     500 + 4 * CAST('0x' || substr(md5(text), 11, 2) AS INTEGER) AS ns,
-                     CAST('0x' || substr(md5(text), 13, 2) AS INTEGER) % 3 AS ri,
-                     1 + 4 * CAST('0x' || substr(md5(text), 15, 2) AS INTEGER) AS amp,
-                     1 + CAST('0x' || substr(md5(text), 17, 2) AS INTEGER) % 2 AS ch
-              FROM documents
-            )
-            SELECT doc_id, 'wav' AS format, 'decoded' AS outcome,
-                   CAST(CASE ri WHEN 0 THEN 8000 WHEN 1 THEN 16000
-                        ELSE 44100 END AS INTEGER) AS rate,
-                   CAST(ch AS INTEGER) AS channels,
-                   CAST(ns AS INTEGER) AS n_samples,
-                   CAST(amp * ns * ch AS BIGINT) AS sum_abs
-            FROM d
-        """,
-        "multimodal_video_frames": """
-            WITH d AS (
-              SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-                     2 + CAST('0x' || substr(md5(text), 19, 2) AS INTEGER) % 4 AS nf,
-                     2 * (2 + CAST('0x' || substr(md5(text), 21, 2) AS INTEGER) % 7) AS w,
-                     2 * (2 + CAST('0x' || substr(md5(text), 23, 2) AS INTEGER) % 5) AS h,
-                     CAST('0x' || substr(md5(text), 25, 2) AS INTEGER) AS l0
-              FROM documents
-            )
-            SELECT doc_id, CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-                   CAST(nf AS INTEGER) AS n_frames, CAST(f AS INTEGER) AS frame,
-                   CAST(((l0 + 40 * f) % 256) * w * h AS BIGINT) AS sum_y
-            FROM d, range(6) t(f)
-            WHERE f < nf AND f % 2 = 0
-        """,
-        "layout_pdf_text": """
-            WITH d AS (
-              SELECT CAST(doc_id AS VARCHAR) AS doc_id, text,
-                     array_to_string((string_split(text, ' '))[1:3], ' ') AS title
-              FROM documents
-            )
-            SELECT doc_id, 'synth://' || doc_id || '.pdf' AS media_ref,
-                   CAST(0 AS INTEGER) AS page, CAST(0 AS INTEGER) AS block_order,
-                   'text' AS block_kind, title AS content FROM d
-            UNION ALL
-            SELECT doc_id, 'synth://' || doc_id || '.pdf', 1, 1, 'text', text FROM d
-        """,
-        "pipeline_clean_corpus": f"""
-            WITH {_CORPUS.strip()},
-            rec AS (
-              SELECT doc_id,
-                     array_to_string((string_split(text, ' '))[1:3], ' ')
-                       || ' ' || text || ' ' || text AS rtext
-              FROM corpus
-            ),
-            m AS (
-              SELECT doc_id, rtext,
-                     len(string_split(rtext, ' ')) AS n_words,
-                     len(list_distinct(string_split(rtext, ' '))) AS n_distinct,
-                     list_aggregate(list_transform(string_split(rtext, ' '),
-                                                   x -> length(x)), 'max') AS maxw
-              FROM rec
-            )
-            SELECT md5(rtext) AS text_md5, MIN(doc_id) AS rep_doc_id,
-                   COUNT(*) AS n_copies
-            FROM m
-            WHERE n_words >= 5 AND n_words <= 100000 AND maxw <= 40
-              AND 3 * n_distinct >= n_words
-            GROUP BY md5(rtext)
-        """,
-        "pipeline_training_batches": f"""
-            WITH {_CORPUS.strip()},
-            rec AS (
-              SELECT doc_id,
-                     array_to_string((string_split(text, ' '))[1:3], ' ')
-                       || ' ' || text || ' ' || text AS rtext
-              FROM corpus
-            ),
-            m AS (
-              SELECT doc_id, rtext,
-                     len(string_split(rtext, ' ')) AS n_words,
-                     len(list_distinct(string_split(rtext, ' '))) AS n_distinct,
-                     list_aggregate(list_transform(string_split(rtext, ' '),
-                                                   x -> length(x)), 'max') AS maxw,
-                     CAST(list_aggregate(list_transform(string_split(rtext, ' '),
-                            x -> (length(x) + 3) // 4), 'sum') AS BIGINT)
-                       AS n_tokens
-              FROM rec
-            ),
-            q AS (
-              SELECT * FROM m
-              WHERE n_words >= 5 AND n_words <= 100000 AND maxw <= 40
-                AND 3 * n_distinct >= n_words
-            ),
-            surv AS (
-              SELECT doc_id, n_tokens,
-                     MIN(doc_id) OVER (PARTITION BY md5(rtext)) AS rep
-              FROM q QUALIFY doc_id = rep
-            ),
-            sh AS (
-              SELECT doc_id, CAST(doc_id % 8 AS INTEGER) AS shard, n_tokens
-              FROM surv
-            )
-            SELECT doc_id, shard, n_tokens,
-                   CAST(COALESCE(SUM(n_tokens) OVER (PARTITION BY shard
-                          ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING
-                          AND 1 PRECEDING), 0) // 512 AS BIGINT) AS bin_id,
-                   CAST(COALESCE(SUM(n_tokens) OVER (PARTITION BY shard
-                          ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING
-                          AND 1 PRECEDING), 0) % 512 AS BIGINT) AS bin_offset
-            FROM sh
-        """,
-        "events_hourly": """
-            SELECT event_type,
-                   substr(CAST(ts AS VARCHAR), 1, 13) AS hour_str,
-                   COUNT(*) AS n_events,
-                   CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-                     AS value_cents
-            FROM events GROUP BY 1, 2
-        """,
-        "events_sessionize": """
-            WITH e AS (
-              SELECT user_id, event_id, value,
-                     CAST(floor(epoch(ts)) AS BIGINT) AS tsec
-              FROM events
-            ), m AS (
-              SELECT *,
-                     CASE WHEN lag(tsec) OVER w IS NULL
-                               OR tsec - lag(tsec) OVER w > 1800
-                          THEN 1 ELSE 0 END AS mark
-              FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tsec, event_id)
-            ), s AS (
-              SELECT *,
-                     CAST(SUM(mark) OVER (PARTITION BY user_id
-                                          ORDER BY tsec, event_id
-                                          ROWS UNBOUNDED PRECEDING) AS INT)
-                       AS session_seq
-              FROM m
-            )
-            SELECT user_id, session_seq,
-                   COUNT(*) AS n_events,
-                   CAST(MIN(tsec) AS BIGINT) AS start_epoch,
-                   CAST(MAX(tsec) - MIN(tsec) AS BIGINT) AS duration_secs,
-                   CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-                     AS value_cents
-            FROM s GROUP BY 1, 2
-        """,
-        "multimodal_mp3_meta": """
-            WITH d AS (
-              SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-                     CAST('0x' || substr(md5(text || 'mp3'), 1, 2) AS INTEGER) AS f0,
-                     CAST('0x' || substr(md5(text || 'mp3'), 3, 2) AS INTEGER) AS f1,
-                     CAST('0x' || substr(md5(text || 'mp3'), 5, 2) AS INTEGER) AS f2,
-                     CAST('0x' || substr(md5(text || 'mp3'), 7, 2) AS INTEGER) AS f3
-              FROM documents
-            ), p AS (
-              SELECT doc_id,
-                     3 + f0 % 6 AS n_frames,
-                     ([32,40,48,56,64,80,96,112,128,160,192,224,256,320])[1 + f1 % 14]
-                       AS kbps,
-                     ([44100,48000,32000])[1 + f2 % 3] AS rate,
-                     f3 % 2 AS has_id3
-              FROM d
-            )
-            SELECT doc_id, 'mp3' AS format, 'parsed' AS outcome,
-                   CAST(kbps AS INTEGER) AS bitrate_kbps,
-                   CAST(rate AS INTEGER) AS sample_rate,
-                   CAST(n_frames AS INTEGER) AS n_frames,
-                   CAST(CAST(n_frames AS BIGINT) * 1152 * 1000000 // rate AS BIGINT) AS duration_us,
-                   CAST(CAST(n_frames AS BIGINT) * (144000 * kbps // rate) AS BIGINT) AS n_bytes,
-                   CAST(has_id3 AS INTEGER) AS has_id3,
-                   CAST(1 AS INTEGER) AS is_cbr
-            FROM p
-        """,
-        "multimodal_exif_meta": """
-            WITH e AS (
-              SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-                     md5(text || 'exif0') AS he, md5(text || 'exif1') AS hf
-              FROM documents
-            ), b AS (
-              SELECT doc_id,
-                     CAST('0x' || substr(he, 1, 2) AS INTEGER) AS e0,
-                     CAST('0x' || substr(he, 3, 2) AS INTEGER) AS e1,
-                     substr(he, 5, 2) AS e2hex,
-                     CAST('0x' || substr(he, 7, 2) AS INTEGER) AS e3,
-                     CAST('0x' || substr(he, 9, 2) AS INTEGER) AS e4,
-                     CAST('0x' || substr(he, 11, 2) AS INTEGER) AS e5,
-                     CAST('0x' || substr(he, 13, 2) AS INTEGER) AS e6,
-                     CAST('0x' || substr(he, 15, 2) AS INTEGER) AS e7,
-                     CAST('0x' || substr(he, 17, 2) AS INTEGER) AS e8,
-                     CAST('0x' || substr(he, 19, 2) AS INTEGER) AS e9,
-                     CAST('0x' || substr(he, 21, 2) AS INTEGER) AS e10,
-                     CAST('0x' || substr(hf, 1, 2) AS INTEGER) AS f0,
-                     CAST('0x' || substr(hf, 3, 2) AS INTEGER) AS f1,
-                     CAST('0x' || substr(hf, 5, 2) AS INTEGER) AS f2,
-                     CAST('0x' || substr(hf, 7, 2) AS INTEGER) AS f3,
-                     CAST('0x' || substr(hf, 9, 2) AS INTEGER) AS f4,
-                     CAST('0x' || substr(hf, 11, 2) AS INTEGER) AS f5,
-                     CAST('0x' || substr(hf, 13, 2) AS INTEGER) AS f6,
-                     CAST('0x' || substr(hf, 15, 2) AS INTEGER) AS f7
-              FROM e
-            )
-            SELECT doc_id, 'jpeg' AS format, 'parsed' AS outcome,
-                   CASE WHEN e0 % 2 = 0 THEN 'II' ELSE 'MM' END AS byte_order,
-                   CAST(1 + e1 % 8 AS INTEGER) AS orientation,
-                   'cam-' || e2hex AS make,
-                   printf('%04d:%02d:%02d %02d:%02d:%02d',
-                          2000 + e3 % 26, 1 + e4 % 12, 1 + e5 % 28,
-                          e6 % 24, e7 % 60, e8 % 60) AS dt,
-                   CAST((CASE WHEN f0 % 2 = 0 THEN 1 ELSE -1 END)
-                        * ((CAST(f1 % 90 AS BIGINT) * 3600
-                            + (f2 % 60) * 60 + f3 % 60) * 1000000 // 3600)
-                        AS BIGINT) AS lat_udeg,
-                   CAST((CASE WHEN f4 % 2 = 0 THEN 1 ELSE -1 END)
-                        * ((CAST(f5 % 180 AS BIGINT) * 3600
-                            + (f6 % 60) * 60 + f7 % 60) * 1000000 // 3600)
-                        AS BIGINT) AS lon_udeg,
-                   CAST(4 AS INTEGER) AS n_ifd0,
-                   CAST(8 * (1 + e9 % 6) AS INTEGER) AS width,
-                   CAST(8 * (1 + e10 % 6) AS INTEGER) AS height
-            FROM b
-        """,
-        "text_bpe_vocab": _bpe_rounds_sql(16)
-        + f"""
-            SELECT rank, a AS "left", b AS "right", a || b AS merged,
-                   CAST(pcnt AS BIGINT) AS pair_count
-            FROM ({" UNION ALL ".join(f"SELECT * FROM m{r}" for r in range(1, 17))})
-        """,
-        "text_bpe_tokens": _bpe_rounds_sql(16)
-        + """,
-            wt AS (SELECT word, CAST(len(syms) AS BIGINT) AS ntok FROM w16),
-            dw AS (
-              SELECT doc_id,
-                     unnest(list_filter(string_split(text, ' '),
-                                        w -> w <> '')) AS word
-              FROM documents
-            ),
-            agg AS (
-              SELECT dw.doc_id, CAST(COUNT(*) AS INTEGER) AS n_words,
-                     CAST(SUM(wt.ntok) AS BIGINT) AS n_tokens
-              FROM dw JOIN wt USING (word) GROUP BY dw.doc_id
-            )
-            SELECT d.doc_id, COALESCE(a.n_words, 0) AS n_words,
-                   COALESCE(a.n_tokens, 0) AS n_tokens
-            FROM documents d LEFT JOIN agg a USING (doc_id)
-        """,
-        "multimodal_webp_meta": """
-            WITH w AS (
-              SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-                     md5(text || 'webp') AS hw
-              FROM documents
-            ), b AS (
-              SELECT doc_id,
-                     CAST('0x' || substr(hw, 1, 2) AS INTEGER) AS w0,
-                     CAST('0x' || substr(hw, 3, 2) AS INTEGER) AS w1,
-                     CAST('0x' || substr(hw, 5, 2) AS INTEGER) AS w2,
-                     CAST('0x' || substr(hw, 7, 2) AS INTEGER) AS w3,
-                     CAST('0x' || substr(hw, 9, 2) AS INTEGER) AS w4,
-                     CAST('0x' || substr(hw, 11, 2) AS INTEGER) AS w5,
-                     CAST('0x' || substr(hw, 13, 2) AS INTEGER) AS w6,
-                     CAST('0x' || substr(hw, 15, 2) AS INTEGER) AS w7,
-                     CAST('0x' || substr(hw, 17, 2) AS INTEGER) AS w8,
-                     CAST('0x' || substr(hw, 19, 2) AS INTEGER) AS w9,
-                     CAST('0x' || substr(hw, 21, 2) AS INTEGER) AS w10
-              FROM w
-            ), p AS (
-              SELECT doc_id, w0 % 3 AS v,
-                     1 + w1 + 256 * (w2 % 63) AS width,
-                     1 + w3 + 256 * (w4 % 63) AS height,
-                     w5 % 2 AS alpha, w6 % 2 AS anim, w7 % 2 AS exif,
-                     w8 % 2 AS icc, w9 % 2 AS xmp, w10 % 64 AS filler
-              FROM b
-            )
-            SELECT doc_id, 'webp' AS format, 'parsed' AS outcome,
-                   CASE v WHEN 0 THEN 'vp8' WHEN 1 THEN 'vp8l'
-                          ELSE 'vp8x' END AS variant,
-                   CAST(width AS INTEGER) AS width,
-                   CAST(height AS INTEGER) AS height,
-                   CAST(CASE WHEN v = 0 THEN 0 ELSE alpha END
-                        AS INTEGER) AS has_alpha,
-                   CAST(CASE WHEN v = 2 THEN anim ELSE 0 END
-                        AS INTEGER) AS has_anim,
-                   CAST(CASE WHEN v = 2 THEN exif ELSE 0 END
-                        AS INTEGER) AS has_exif,
-                   CAST(CASE WHEN v = 2 THEN icc ELSE 0 END
-                        AS INTEGER) AS has_icc,
-                   CAST(CASE WHEN v = 2 THEN xmp ELSE 0 END
-                        AS INTEGER) AS has_xmp,
-                   CAST(CASE WHEN v = 0 THEN 30 + filler + (filler % 2)
-                             WHEN v = 1 THEN 25 + filler + ((5 + filler) % 2)
-                             ELSE 48 + filler + (filler % 2)
-                        END AS INTEGER) AS riff_bytes
-            FROM p
-        """,
-        "multimodal_avif_meta": """
-            WITH w AS (
-              SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-                     md5(text || 'avif') AS hv
-              FROM documents
-            ), b AS (
-              SELECT doc_id,
-                     CAST('0x' || substr(hv, 1, 2) AS INTEGER) AS v0,
-                     CAST('0x' || substr(hv, 3, 2) AS INTEGER) AS v1,
-                     CAST('0x' || substr(hv, 5, 2) AS INTEGER) AS v2,
-                     CAST('0x' || substr(hv, 7, 2) AS INTEGER) AS v3,
-                     CAST('0x' || substr(hv, 9, 2) AS INTEGER) AS v4,
-                     CAST('0x' || substr(hv, 11, 2) AS INTEGER) AS v5,
-                     CAST('0x' || substr(hv, 13, 2) AS INTEGER) AS v6,
-                     CAST('0x' || substr(hv, 15, 2) AS INTEGER) AS v7,
-                     CAST('0x' || substr(hv, 17, 2) AS INTEGER) AS v8
-              FROM w
-            ), p AS (
-              SELECT doc_id,
-                     1 + v0 + 256 * (v1 % 64) AS width,
-                     1 + v2 + 256 * (v3 % 64) AS height,
-                     CASE v4 % 3 WHEN 0 THEN 8 WHEN 1 THEN 10
-                          ELSE 12 END AS bit_depth,
-                     v5 % 4 AS rotation,
-                     v6 % 2 AS alpha,
-                     v7 % 64 AS filler,
-                     CASE WHEN v6 % 2 = 1 THEN v8 % 32 ELSE 0 END AS afill
-              FROM b
-            )
-            SELECT doc_id, 'avif' AS format, 'parsed' AS outcome,
-                   'avif' AS brand, 'av01' AS codec,
-                   CAST(width AS INTEGER) AS width,
-                   CAST(height AS INTEGER) AS height,
-                   CAST(bit_depth AS INTEGER) AS bit_depth,
-                   CAST(rotation AS INTEGER) AS rotation,
-                   CAST(1 + alpha AS INTEGER) AS n_items,
-                   CAST(alpha AS INTEGER) AS has_alpha,
-                   CAST(filler + afill AS INTEGER) AS mdat_bytes,
-                   CAST(CASE WHEN alpha = 1 THEN 348 + filler + afill
-                             ELSE 252 + filler END AS INTEGER) AS file_bytes
-            FROM p
-        """,
-        "multimodal_webp_frames": """
-            WITH w AS (
-              SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-                     md5(text || 'webpa') AS ha, md5(text || 'webpf') AS hb
-              FROM documents
-            ), b AS (
-              SELECT doc_id, ha, hb,
-                     CAST('0x' || substr(ha, 1, 2) AS INTEGER) AS a0,
-                     CAST('0x' || substr(ha, 19, 2) AS INTEGER) AS a9,
-                     CAST('0x' || substr(ha, 21, 2) AS INTEGER) AS a10,
-                     CAST('0x' || substr(ha, 23, 2) AS INTEGER) AS a11,
-                     CAST('0x' || substr(ha, 25, 2) AS INTEGER) AS a12
-              FROM w
-            ), p AS (
-              SELECT doc_id, ha, hb, a0, a9, a10, a11,
-                     1 + a12 % 4 AS nf
-              FROM b
-            )
-            SELECT doc_id, 'webp' AS format,
-                   CASE WHEN a0 % 5 = 0 THEN 'not_animated'
-                        ELSE 'animated' END AS outcome,
-                   CAST(CASE WHEN a0 % 5 = 0 THEN NULL ELSE nf END
-                        AS INTEGER) AS n_frames,
-                   CAST(CASE WHEN a0 % 5 = 0 THEN NULL ELSE a9 % 10 END
-                        AS INTEGER) AS loop_count,
-                   CAST(CASE WHEN a0 % 5 = 0 THEN NULL ELSE
-                     list_sum(list_transform(range(0, nf), i ->
-                       10 * (1 + CAST('0x' || substr(ha, 11 + 2 * CAST(i AS INT), 2)
-                                   AS INTEGER) % 25)))
-                   END AS INTEGER) AS total_duration_ms,
-                   CAST(CASE WHEN a0 % 5 = 0 THEN NULL ELSE
-                     list_sum(list_transform(range(0, nf), i ->
-                       (a10 >> CAST(i AS INT)) & 1))
-                   END AS INTEGER) AS n_blend,
-                   CAST(CASE WHEN a0 % 5 = 0 THEN NULL ELSE
-                     list_sum(list_transform(range(0, nf), i ->
-                       (a11 >> CAST(i AS INT)) & 1))
-                   END AS INTEGER) AS n_dispose,
-                   CAST(CASE WHEN a0 % 5 = 0 THEN NULL ELSE
-                     list_sum(list_transform(range(0, nf), i ->
-                       2 * (CAST('0x' || substr(hb, 1 + 4 * CAST(i AS INT), 2)
-                                 AS INTEGER) % 128)
-                       + 2 * (CAST('0x' || substr(hb, 3 + 4 * CAST(i AS INT), 2)
-                                   AS INTEGER) % 128)))
-                   END AS INTEGER) AS sum_xy
-            FROM p
-        """,
-        "multimodal_id3_meta": """
-            WITH g AS (
-              SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-                     md5(text || 'id3') AS hg
-              FROM documents
-            ), b AS (
-              SELECT doc_id, hg,
-                     CAST('0x' || substr(hg, 1, 2) AS INTEGER) AS g0,
-                     CAST('0x' || substr(hg, 3, 2) AS INTEGER) AS g1,
-                     CAST('0x' || substr(hg, 9, 2) AS INTEGER) AS g4,
-                     CAST('0x' || substr(hg, 11, 2) AS INTEGER) AS g5,
-                     CAST('0x' || substr(hg, 13, 2) AS INTEGER) AS g6,
-                     CAST('0x' || substr(hg, 15, 2) AS INTEGER) AS g7,
-                     CAST('0x' || substr(hg, 17, 2) AS INTEGER) AS g8,
-                     CAST('0x' || substr(hg, 19, 2) AS INTEGER) AS g9
-              FROM g
-            ), s AS (
-              SELECT doc_id,
-                     CASE WHEN g0 % 2 = 0 THEN 3 ELSE 4 END AS version,
-                     (g1 % 3 = 1) AS utf16,
-                     concat('trk-', substr(hg, 5, 4)) AS title,
-                     concat('artist-', g4 % 40) AS artist,
-                     concat('alb-', g5 % 12) AS album,
-                     1970 + g6 % 55 AS year,
-                     1 + g7 % 20 AS track,
-                     g8 % 50 AS padding,
-                     1 + g9 % 40 AS n_frames
-              FROM b
-            ), t AS (
-              SELECT *,
-                     length(title) + length(artist) + length(album)
-                       + length(CAST(year AS VARCHAR))
-                       + length(CAST(track AS VARCHAR)) AS total_chars
-              FROM s
-            )
-            SELECT doc_id, 'mp3' AS format, 'parsed' AS outcome,
-                   CAST(version AS INTEGER) AS version,
-                   CAST(10 + padding + 55
-                        + CASE WHEN utf16 THEN 10 + 2 * total_chars
-                               ELSE total_chars END AS INTEGER) AS tag_bytes,
-                   title, artist, album,
-                   CAST(year AS INTEGER) AS year,
-                   CAST(track AS INTEGER) AS track,
-                   CAST(n_frames AS INTEGER) AS n_frames
-            FROM t
-        """,
-        "multimodal_mp4_meta": """
-            WITH d AS (
-              SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-                     CAST('0x' || substr(md5(text || 'mp4'), 1, 2) AS INTEGER) AS g0,
-                     CAST('0x' || substr(md5(text || 'mp4'), 3, 2) AS INTEGER) AS g1,
-                     CAST('0x' || substr(md5(text || 'mp4'), 5, 2) AS INTEGER) AS g2,
-                     CAST('0x' || substr(md5(text || 'mp4'), 7, 2) AS INTEGER) AS g3,
-                     CAST('0x' || substr(md5(text || 'mp4'), 9, 2) AS INTEGER) AS g4
-              FROM documents
-            ), p AS (
-              SELECT doc_id,
-                     16 * (1 + g0 % 40) AS width,
-                     16 * (1 + g1 % 30) AS height,
-                     ([600,1000,90000])[1 + g2 % 3] AS timescale,
-                     100 + 10 * g3 AS duration,
-                     1 + g4 % 50 AS n_samples
-              FROM d
-            )
-            SELECT doc_id, 'mp4' AS format, 'parsed' AS outcome,
-                   'isom' AS brand,
-                   CAST(width AS INTEGER) AS width,
-                   CAST(height AS INTEGER) AS height,
-                   CAST(timescale AS INTEGER) AS timescale,
-                   CAST(CAST(duration AS BIGINT) * 1000000 // timescale AS BIGINT) AS duration_us,
-                   CAST(1 AS INTEGER) AS n_tracks,
-                   CAST(n_samples AS INTEGER) AS n_samples
-            FROM p
-        """,
-        # cross-engine check of the as-of operator itself: DuckDB's NATIVE
-        # ASOF JOIN vs our union-window plan ((user_id, ts) is tie-free at
-        # every sf — verified — so both semantics are identical)
-        "events_asof_attribution": """
-            WITH l AS (
-              SELECT event_id, user_id, ts FROM events
-              WHERE event_type = 'purchase'
-            ), r AS (
-              SELECT user_id, ts, event_id AS click_event_id FROM events
-              WHERE event_type = 'click'
-            )
-            SELECT l.event_id, l.user_id,
-                   epoch_us(l.ts) AS purchase_us,
-                   r.click_event_id,
-                   epoch_us(r.ts) AS click_us,
-                   epoch_us(l.ts) - epoch_us(r.ts) AS wait_us
-            FROM l ASOF LEFT JOIN r
-              ON l.user_id = r.user_id AND l.ts >= r.ts
-        """,
-        "events_error_burst": """
-            WITH l AS (
-              SELECT event_id, user_id, ts FROM events
-              WHERE event_type = 'error'
-            ), r AS (
-              SELECT user_id, ts FROM events WHERE event_type = 'click'
-            )
-            SELECT l.event_id, l.user_id, epoch_us(l.ts) AS err_us,
-                   CAST(COUNT(r.ts) AS INTEGER) AS n_clicks_2m
-            FROM l LEFT JOIN r
-              ON l.user_id = r.user_id
-             AND epoch_us(l.ts) - epoch_us(r.ts) BETWEEN 0 AND 120000000
-            GROUP BY 1, 2, 3
-        """,
-        "tpch_pricing_summary": """
-            WITH s AS (
-              SELECT l_returnflag, l_linestatus,
-                     CAST(round(l_quantity) AS BIGINT) AS qty,
-                     CAST(round(l_extendedprice * 100) AS BIGINT) AS price_c,
-                     CAST(round(l_discount * 1000000) AS BIGINT) AS disc_ppm,
-                     CAST(round(l_tax * 1000000) AS BIGINT) AS tax_ppm
-              FROM lineitem WHERE l_shipdate <= TIMESTAMP '2001-09-01'
-            )
-            SELECT l_returnflag, l_linestatus,
-                   CAST(SUM(qty) AS BIGINT) AS sum_qty,
-                   CAST(SUM(price_c) AS BIGINT) AS sum_base_c,
-                   CAST(SUM((price_c * (1000000 - disc_ppm)) // 1000000)
-                        AS BIGINT) AS sum_disc_c,
-                   CAST(SUM((((price_c * (1000000 - disc_ppm)) // 1000000)
-                             * (1000000 + tax_ppm)) // 1000000)
-                        AS BIGINT) AS sum_charge_c,
-                   COUNT(*) AS n_rows,
-                   (1000 * CAST(SUM(qty) AS BIGINT)) // COUNT(*)
-                     AS avg_qty_milli
-            FROM s GROUP BY 1, 2
-        """,
-        "tpch_top_orders": """
-            SELECT l.l_orderkey,
-                   substr(CAST(o.o_orderdate AS VARCHAR), 1, 10) AS order_date,
-                   o.o_orderpriority,
-                   CAST(SUM((CAST(round(l.l_extendedprice * 100) AS BIGINT)
-                             * (1000000 - CAST(round(l.l_discount * 1000000)
-                                              AS BIGINT))) // 1000000)
-                        AS BIGINT) AS revenue_c
-            FROM lineitem l
-            JOIN orders o ON l.l_orderkey = o.o_orderkey
-            JOIN customer c ON o.o_custkey = c.c_custkey
-            WHERE c.c_mktsegment = 'BUILDING'
-              AND o.o_orderdate < TIMESTAMP '1998-06-01'
-              AND l.l_shipdate > TIMESTAMP '1998-06-01'
-            GROUP BY 1, 2, 3
-            ORDER BY revenue_c DESC, l.l_orderkey LIMIT 10
-        """,
-        "tpch_regional_revenue": """
-            SELECT n.n_name,
-                   CAST(SUM((CAST(round(l.l_extendedprice * 100) AS BIGINT)
-                             * (1000000 - CAST(round(l.l_discount * 1000000)
-                                              AS BIGINT))) // 1000000)
-                        AS BIGINT) AS revenue_c,
-                   COUNT(*) AS n_lineitems
-            FROM lineitem l
-            JOIN orders o ON l.l_orderkey = o.o_orderkey
-            JOIN customer c ON o.o_custkey = c.c_custkey
-            JOIN supplier s ON l.l_suppkey = s.s_suppkey
-                           AND c.c_nationkey = s.s_nationkey
-            JOIN nation n ON s.s_nationkey = n.n_nationkey
-            JOIN region r ON n.n_regionkey = r.r_regionkey
-            WHERE r.r_name = 'ASIA'
-              AND o.o_orderdate >= TIMESTAMP '1996-01-01'
-              AND o.o_orderdate < TIMESTAMP '1997-01-01'
-            GROUP BY 1
-        """,
-        "tpch_late_orders": """
-            SELECT o.o_orderpriority, COUNT(*) AS n_late_orders
-            FROM orders o
-            WHERE o.o_orderdate >= TIMESTAMP '1997-01-01'
-              AND o.o_orderdate < TIMESTAMP '1998-01-01'
-              AND EXISTS (
-                SELECT 1 FROM lineitem l
-                WHERE l.l_orderkey = o.o_orderkey
-                  AND l.l_shipdate > o.o_orderdate + INTERVAL 90 DAY)
-            GROUP BY 1
-        """,
-        "tpch_inactive_customers": """
-            SELECT c.c_mktsegment,
-                   COUNT(*) AS n_customers,
-                   CAST(SUM(CASE WHEN NOT EXISTS (
-                     SELECT 1 FROM orders o
-                     WHERE o.o_custkey = c.c_custkey
-                       AND o.o_orderdate >= TIMESTAMP '2000-01-01'
-                       AND o.o_orderdate < TIMESTAMP '2001-01-01')
-                   THEN 1 ELSE 0 END) AS BIGINT) AS n_inactive
-            FROM customer c GROUP BY 1
-        """,
-        "events_retention_cohorts": """
-            WITH e AS (
-              SELECT user_id,
-                     CAST(epoch_us(ts) // 1000000 // 604800 AS BIGINT)
-                       AS week
-              FROM events
-            ),
-            c AS (
-              SELECT *, MIN(week) OVER (PARTITION BY user_id) AS cohort_week
-              FROM e
-            )
-            SELECT cohort_week,
-                   CAST(week - cohort_week AS BIGINT) AS week_offset,
-                   COUNT(DISTINCT user_id) AS n_users
-            FROM c GROUP BY 1, 2
-        """,
-        "events_scd2_history": """
-            SELECT user_id, event_id,
-                   epoch_us(ts) AS valid_from_us,
-                   CAST(round(value * 100) AS BIGINT) AS value_cents,
-                   lead(epoch_us(ts)) OVER (PARTITION BY user_id
-                     ORDER BY epoch_us(ts), event_id) AS valid_to_us,
-                   CAST(lead(epoch_us(ts)) OVER (PARTITION BY user_id
-                     ORDER BY epoch_us(ts), event_id) IS NULL AS INTEGER)
-                     AS is_current
-            FROM events
-        """,
-        "events_funnel": """
-            WITH e AS (
-              SELECT user_id, event_type,
-                     epoch_us(ts) // 1000000 AS tsec
-              FROM events
-            ),
-            a AS (
-              SELECT *,
-                     MIN(CASE WHEN event_type = 'signup' THEN tsec END)
-                       OVER (PARTITION BY user_id) AS s1
-              FROM e
-            ),
-            b AS (
-              SELECT *,
-                     MIN(CASE WHEN event_type = 'click' AND tsec >= s1
-                              AND tsec <= s1 + 604800 THEN tsec END)
-                       OVER (PARTITION BY user_id) AS s2
-              FROM a
-            ),
-            c AS (
-              SELECT *,
-                     MIN(CASE WHEN event_type = 'purchase' AND tsec >= s2
-                              AND tsec <= s2 + 604800 THEN tsec END)
-                       OVER (PARTITION BY user_id) AS s3
-              FROM b
-            ),
-            g AS (
-              SELECT user_id,
-                     CAST(MAX(s1) AS BIGINT) AS signup_s,
-                     CAST(MAX(s2) AS BIGINT) AS click_s,
-                     CAST(MAX(s3) AS BIGINT) AS purchase_s
-              FROM c GROUP BY 1
-            )
-            SELECT *,
-                   CAST(CASE WHEN purchase_s IS NOT NULL THEN 3
-                             WHEN click_s IS NOT NULL THEN 2
-                             WHEN signup_s IS NOT NULL THEN 1
-                             ELSE 0 END AS INTEGER) AS stage_reached
-            FROM g
-        """,
-        "events_json_props": """
-            WITH p AS (
-              SELECT event_type,
-                     CAST(json_extract_string(props, '$.k') AS INTEGER) AS k
-              FROM events
-            )
-            SELECT event_type,
-                   COUNT(*) AS n_events,
-                   COUNT(k) AS n_parsed,
-                   CAST(SUM(k) AS BIGINT) AS sum_k,
-                   CAST(MIN(k) AS INTEGER) AS min_k,
-                   CAST(MAX(k) AS INTEGER) AS max_k,
-                   COUNT(DISTINCT k) AS n_distinct_k
-            FROM p GROUP BY 1
-        """,
-        "events_gapfill": """
-            WITH hourly AS (
-              SELECT user_id, epoch_us(ts) // 3600000000 AS hr,
-                     COUNT(*) AS n_events,
-                     CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-                       AS cents
-              FROM events GROUP BY 1, 2
-            ),
-            spine AS (
-              SELECT user_id, unnest(generate_series(mn, mx)) AS hr
-              FROM (SELECT user_id, MIN(hr) AS mn, MAX(hr) AS mx
-                    FROM hourly GROUP BY 1)
-            )
-            SELECT s.user_id, s.hr,
-                   COALESCE(h.n_events, 0) AS n_events,
-                   last_value(h.cents IGNORE NULLS)
-                     OVER (PARTITION BY s.user_id ORDER BY s.hr)
-                     AS value_cents_filled,
-                   CAST(h.n_events IS NULL AS INTEGER) AS is_gap
-            FROM spine s LEFT JOIN hourly h USING (user_id, hr)
-        """,
-        "events_mad_outliers": """
-            WITH e AS (
-              SELECT event_type, event_id,
-                     CAST(round(value * 100) AS BIGINT) AS c
-              FROM events
-            ),
-            r AS (
-              SELECT *,
-                     row_number() OVER (PARTITION BY event_type
-                                        ORDER BY c, event_id) AS rk,
-                     COUNT(*) OVER (PARTITION BY event_type) AS n
-              FROM e
-            ),
-            med AS (
-              SELECT event_type,
-                     MAX(CASE WHEN rk = (n + 1) // 2 THEN c END) AS med_c
-              FROM r GROUP BY 1
-            ),
-            d AS (
-              SELECT r.*, med_c, abs(c - med_c) AS dev
-              FROM r JOIN med USING (event_type)
-            ),
-            r2 AS (
-              SELECT *, row_number() OVER (PARTITION BY event_type
-                                           ORDER BY dev, event_id) AS rk2
-              FROM d
-            ),
-            mad AS (
-              SELECT event_type,
-                     MAX(CASE WHEN rk2 = (n + 1) // 2 THEN dev END) AS mad_c
-              FROM r2 GROUP BY 1
-            )
-            SELECT d.event_type,
-                   CAST(MAX(d.n) AS BIGINT) AS n,
-                   CAST(MAX(d.med_c) AS BIGINT) AS med_c,
-                   CAST(MAX(mad.mad_c) AS BIGINT) AS mad_c,
-                   CAST(SUM(CASE WHEN dev > 5 * mad.mad_c THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_outliers
-            FROM d JOIN mad USING (event_type) GROUP BY 1
-        """,
-        "events_rolling_value": """
-            SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-                   CAST(SUM(CAST(round(value * 100) AS BIGINT))
-                        OVER (PARTITION BY user_id ORDER BY ts, event_id
-                              ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)
-                        AS BIGINT) AS roll_cents,
-                   CAST(COUNT(*)
-                        OVER (PARTITION BY user_id ORDER BY ts, event_id
-                              ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)
-                        AS INTEGER) AS n_in_window
-            FROM events
-        """,
-        "events_pivot_hourly": """
-            SELECT substr(CAST(ts AS VARCHAR), 1, 13) AS hour_str,
-                   CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_click,
-                   CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_error,
-                   CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_purchase,
-                   CAST(SUM(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_signup,
-                   CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_view
-            FROM events GROUP BY 1
-        """,
-        "events_rollup_totals": """
-            SELECT COALESCE(event_type, '<all>') AS event_type,
-                   COALESCE(day_str, '<all>') AS day_str,
-                   COUNT(*) AS n_events,
-                   CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-                     AS value_cents
-            FROM (SELECT event_type,
-                         substr(CAST(ts AS VARCHAR), 1, 10) AS day_str,
-                         value
-                  FROM events)
-            GROUP BY ROLLUP(event_type, day_str)
-        """,
-        "events_quantiles": """
-            WITH e AS (
-              SELECT event_type, event_id,
-                     CAST(round(value * 100) AS BIGINT) AS cents
-              FROM events
-            ), r AS (
-              SELECT *,
-                     row_number() OVER (PARTITION BY event_type
-                                        ORDER BY cents, event_id) AS rk,
-                     COUNT(*) OVER (PARTITION BY event_type) AS n
-              FROM e
-            )
-            SELECT event_type, CAST(MAX(n) AS BIGINT) AS n,
-                   CAST(SUM(CASE WHEN rk = (n + 1) // 2 THEN cents ELSE 0 END)
-                      + SUM(CASE WHEN rk = (n + 2) // 2 THEN cents ELSE 0 END)
-                        AS BIGINT) AS med_cents_x2,
-                   CAST(MAX(CASE WHEN rk = (9 * n + 9) // 10 THEN cents END)
-                        AS BIGINT) AS p90_cents
-            FROM r GROUP BY 1
-        """,
-        "layout_zorder_stats": """
-            WITH k AS (
-              SELECT user_id AS _a,
-                     CAST(round(value * 100) AS BIGINT) AS _b,
-                     event_id,
-                     list_reduce(list_prepend(0::BIGINT, list_transform(
-                       range(0, 16),
-                       i -> (((LEAST(user_id, 65535) >> i) & 1) << (2 * i))
-                          + (((LEAST(CAST(round(value * 100) AS BIGINT),
-                                     65535) >> i) & 1) << (2 * i + 1)))),
-                       (acc, v) -> acc + v) AS _zkey
-              FROM events
-            ), r AS (
-              SELECT _a, _b,
-                     row_number() OVER (ORDER BY _zkey, event_id) AS rn,
-                     COUNT(*) OVER () AS n
-              FROM k
-            ), bkt AS (
-              SELECT _a, _b,
-                     CAST(((rn - 1) * 16) // n AS INTEGER) AS bucket
-              FROM r
-            )
-            SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(MIN(_a) AS BIGINT) AS min_a,
-                   CAST(MAX(_a) AS BIGINT) AS max_a,
-                   CAST(MIN(_b) AS BIGINT) AS min_b,
-                   CAST(MAX(_b) AS BIGINT) AS max_b
-            FROM bkt GROUP BY 1
-        """,
-        "events_hist_quantiles": """
-            WITH b AS (
-              SELECT event_type,
-                     LEAST(CAST(CAST(round(value * 100) AS BIGINT) // 100
-                                AS INTEGER), 1023) AS bin
-              FROM events
-            ), c AS (
-              SELECT event_type, bin, CAST(COUNT(*) AS BIGINT) AS cnt
-              FROM b GROUP BY 1, 2
-            ), cc AS (
-              SELECT *,
-                     SUM(cnt) OVER (PARTITION BY event_type ORDER BY bin
-                                    ROWS UNBOUNDED PRECEDING) AS cum,
-                     SUM(cnt) OVER (PARTITION BY event_type) AS n
-              FROM c
-            )
-            SELECT event_type, CAST(MAX(n) AS BIGINT) AS n,
-                   CAST(MIN(CASE WHEN cum >= ((500 * n) + 999) // 1000
-                            THEN (bin + 1) * 100 END) AS BIGINT) AS hq500_cents,
-                   CAST(MIN(CASE WHEN cum >= ((900 * n) + 999) // 1000
-                            THEN (bin + 1) * 100 END) AS BIGINT) AS hq900_cents,
-                   CAST(MIN(CASE WHEN cum >= ((990 * n) + 999) // 1000
-                            THEN (bin + 1) * 100 END) AS BIGINT) AS hq990_cents
-            FROM cc GROUP BY 1
-        """,
-        "sketch_hll_users": _hll_oracle("CAST(user_id AS VARCHAR)"),
-        "sketch_hll_user_minutes": _hll_oracle(
-            "concat(CAST(user_id AS VARCHAR), '-', "
-            "CAST(epoch_us(ts) // 60000000 AS VARCHAR))"
-        ),
-    }
-
-
-# ---------------------------------------------------------------------------
-# plan_pins() — the physical-plan contract of each query, checked on the
-# unexecuted plan's explain('formatted') text (tests/test_gate_oracles.py;
-# tools/plan_audit.py writes the record to PLANS_AUDIT.md). Formatted explain
-# lists each node twice: once in the tree, once in the numbered details.
-# ---------------------------------------------------------------------------
-
-
-def explain_str(df: DataFrame) -> str:
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
-
-
-# Python-crossing nodes per query (MapInArrow, ArrowEvalPython,
-# FlatMapGroupsInPandas, ...), counted on the numbered detail lines of the
-# formatted explain. A query not listed crosses zero times; adding or
-# removing a crossing edits this table in the same change.
-CROSSING_RE = re.compile(r"\(\d+\) \w*(?:Python|InPandas|InArrow)\w*\b")
-
-
-def detail_blocks(plan: str, node: str) -> list[str]:
-    """The numbered detail block of each `node` operator in a formatted
-    plan: its '(N) node' line and the lines up to the next blank one.
-    Only these blocks print a node's arguments (an Exchange's
-    partitioning, a Generate's generator); tree lines print the bare name."""
-    return re.findall(
-        rf"^\(\d+\) {node}(?: \[codegen id : \d+\])?\n(?:.+\n?)*", plan, re.M
-    )
-
-
-def _hash_exchanges(plan: str) -> int:
-    return sum(
-        "Arguments: hashpartitioning(" in b for b in detail_blocks(plan, "Exchange")
-    )
-
-
-PYTHON_CROSSINGS = {
-    "multimodal_webp_meta": 2,
-    "multimodal_avif_meta": 2,
-    "multimodal_webp_frames": 2,
-    "pipeline_extract_bpe": 1,
-    "web_sitemap_frontier": 1,
-    "web_anchor_text": 1,
-    "source_warc_roundtrip": 2,
-    "transform_plugins": 2,
-    "parse_nodes": 1,
-    "parse_attrs": 1,
-    "extract_quirks": 1,
-    "extract_html_tables": 3,
-    "diff_transform": 1,
-    "diff_attrs": 1,
-    "multimodal_meta": 1,
-    "multimodal_image_decode": 2,
-    "extract_flagship": 1,
-    "extract_errors": 1,
-    "extract_metrics": 1,
-    "extract_main": 1,
-    "extract_main_boilerplate": 1,
-    "generate_roundtrip": 1,
-    "multimodal_exif_meta": 2,
-    "multimodal_id3_meta": 2,
-    "extract_links": 1,
-    "graph_domain_pagerank": 1,
-    "multimodal_png_decode": 2,
-    "multimodal_gif_decode": 2,
-    "multimodal_gif_frames": 2,
-    "multimodal_jpeg_decode": 2,
-    "multimodal_jpeg_progressive": 2,
-    "multimodal_audio_meta": 2,
-    "multimodal_video_frames": 2,
-    "multimodal_mp3_meta": 2,
-    "multimodal_mp4_meta": 2,
-    "layout_pdf_text": 2,
-    "pipeline_clean_corpus": 1,
-    "pipeline_training_batches": 1,
-}
+    return {name: RECORDS[name].oracle for name in ORDER}
 
 
 def plan_pins() -> dict[str, list[tuple[str, Callable[[str], bool]]]]:
     """{query name: [(description, predicate over the explain text)]}."""
-    return {
-        "extract_flagship": [
-            ("scan reads only doc_id,text,source (column pruning through the wrap)",
-             lambda p: "ReadSchema: struct<doc_id:bigint,text:string,source:string>" in p),
-            ("no exchange before the kernel (unsalted path is shuffle-free)",
-             lambda p: "Exchange" not in p),
-            # formatted explain lists each node twice (tree + details)
-            ("single Python crossing (one MapInArrow, no pandas round-trip)",
-             lambda p: p.count("MapInArrow") <= 2 and "MapInPandas" not in p),
-        ],
-        "text_fingerprint": [
-            ("scan pruned to doc_id,text",
-             lambda p: "ReadSchema: struct<doc_id:bigint,text:string>" in p),
-            ("no shuffle (narrow projection)", lambda p: "Exchange" not in p),
-            ("whole-stage codegen", lambda p: "codegen id" in p),
-        ],
-        "similarity_topk": [
-            ("query side broadcast (corpus never shuffled for the join)",
-             lambda p: "BroadcastHashJoin" in p or "BroadcastNestedLoopJoin" in p),
-            ("pushed filter on vec_id for the query side",
-             lambda p: "PushedFilters: [IsNotNull(vec_id), LessThan(vec_id," in p),
-        ],
-        "dedup_simhash": [
-            ("shuffle-free: all 32 bit-sums fold in one narrow projection",
-             lambda p: "Exchange" not in p),
-            ("no row amplification (no Generate/explode in the plan)",
-             lambda p: "Generate" not in p),
-            ("scan pruned to doc_id,text",
-             lambda p: "ReadSchema: struct<doc_id:bigint,text:string>" in p),
-        ],
-        "extract_metrics": [
-            ("map-side partial aggregation before the exchange",
-             lambda p: "partial_count" in p or "Functions [partial_" in p),
-        ],
-        "text_tfidf": [
-            ("four shuffles total (tf agg, df agg, corpus count, ONE window "
-             "Exchange) — the doc_len and rank windows share theirs",
-             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 4
-             and len(re.findall(r"\(\d+\) Window\b", p)) == 2),
-            ("df and corpus-count join sides broadcast",
-             lambda p: len(re.findall(r"\(\d+\) BroadcastExchange\b", p)) == 2),
-            ("map-side partial aggregation for tf",
-             lambda p: "partial_count" in p),
-        ],
-        "dedup_minhash_lsh": [
-            ("TWO shuffles total (bucket groupBy + pair distinct): "
-             "signatures and sizes are narrow array projections, never an "
-             "explode + groupBy",
-             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 2),
-            ("verification is candidate-bounded: broadcast semi-join shrink "
-             "+ broadcast array attach (the corpus-wide shingle set is "
-             "never shuffled or joined wide)",
-             lambda p: p.count("BroadcastHashJoin") >= 2 and "LeftSemi" in p),
-            ("one shingle pass over the corpus: the array table is computed "
-             "once per union leg and cached (no expression re-inlining)",
-             lambda p: p.count("conv(substr(md5") <= 3),
-            ("candidates from one groupBy on (band,key), not a bands "
-             "self-join (no join of the band table with itself)",
-             lambda p: "collect_list" in p),
-            ("small candidate set: AQE's join selection broadcasts both "
-             "attach joins (no hint; both are BroadcastHashJoin, no "
-             "SortMergeJoin)",
-             lambda p: p.count("BroadcastHashJoin") >= 2
-             and "SortMergeJoin" not in p),
-            ("candidate pairs and candidate arrays read from cache in the "
-             "verify plan (no recompute per consumer branch)",
-             lambda p: "InMemoryTableScan" in p),
-            ("shingle expression still never re-inlined per consumer "
-             "branch (md5 passes bounded by the 3 union legs)",
-             lambda p: p.count("conv(substr(md5") <= 3),
-        ],
-        "decontaminate_overlap": [
-            ("bench shingles broadcast into the overlap probe; the corpus "
-             "is never shuffled wide (two Exchanges: overlap groupBy + "
-             "bench distinct)",
-             lambda p: p.count("BroadcastHashJoin") >= 2
-             and len(re.findall(r"\(\d+\) Exchange\b", p)) <= 2),
-            ("map-side partial overlap counts", lambda p: "partial_count" in p),
-            ("the all-docs left side prunes to doc_id only",
-             lambda p: "ReadSchema: struct<doc_id:bigint>" in p),
-        ],
-        "pipeline_clean_corpus": [
-            ("one wide op total: the dedup groupBy's Exchange "
-             "(extract -> reassemble -> quality gate are all narrow)",
-             lambda p: len(re.findall(r"\(\d+\) Exchange", p)) == 1),
-            ("map-side partial aggregation before the exchange",
-             lambda p: "partial_" in p),
-            ("one Python crossing (MapInArrow); quality gate fused JVM-side",
-             lambda p: p.count("MapInArrow") <= 2 and "MapInPandas" not in p),
-        ],
-        "dedup_chunks": [
-            ("two exchanges total: the first-occurrence window on chunk "
-             "and the per-doc reassembly groupBy",
-             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 2),
-            ("map-side partial aggregation for the reassembly",
-             lambda p: "partial_collect_list" in p),
-            ("chunking is one regex Generate, no indexing lambda over a "
-             "split array (the per-element re-evaluation trap)",
-             lambda p: "posexplode(regexp_extract_all" in p
-             and "transform(sequence" not in p),
-        ],
-        "dedup_repeated_spans": [
-            ("two WIDE exchanges: the corpus-wide gram-count window on the "
-             "60-bit hash and the per-doc islands merge on doc_id (the "
-             "final groupBy reuses the doc_id partitioning); plus only the "
-             "round-robin input spread",
-             lambda p: p.count("hashpartitioning") == 2
-             and len(re.findall(r"\(\d+\) Exchange\b", p)) == 3),
-            ("no count-table join-back: the repeat filter is a window "
-             "count, not a join",
-             lambda p: "Join" not in p),
-            ("gram strings never cross the wide stage: the shuffle keys "
-             "are bigint hashes (gram dropped before the first exchange)",
-             lambda p: "hashpartitioning(g#" in p),
-            ("grams built by zip_with cascade, no indexing lambda over a "
-             "split array (the per-element re-evaluation trap)",
-             lambda p: "transform(sequence" not in p),
-        ],
-        "tpch_top_orders": [
-            ("dimension sides broadcast; no cartesian/nested-loop join",
-             lambda p: len(re.findall(r"BroadcastHashJoin", p)) >= 2
-             and "CartesianProduct" not in p
-             and "BroadcastNestedLoopJoin" not in p),
-            ("at most one wide exchange beyond the joins (the revenue "
-             "groupBy; at bench sf even orders broadcasts)",
-             lambda p: _hash_exchanges(p) <= 2),
-            ("top-10 runs as TakeOrdered, never a full sort",
-             lambda p: "TakeOrderedAndProject" in p),
-            ("revenue aggregation is map-side partial",
-             lambda p: "partial_sum" in p),
-            ("date filters push to the scans",
-             lambda p: "PushedFilters: [IsNotNull(l_shipdate)" in p
-             or "GreaterThan(l_shipdate" in p),
-        ],
-        "events_mad_outliers": [
-            ("ONE exchange on event_type shared by both rank passes, both "
-             "window MAX attaches, and the final groupBy — no join-back",
-             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 1
-             and "Join" not in p),
-            ("final aggregate is map-side partial",
-             lambda p: "partial_max" in p or "partial_sum" in p),
-        ],
-        "tpch_late_orders": [
-            ("existence probe plans as a SEMI join (LeftSemi), never "
-             "join+distinct",
-             lambda p: "LeftSemi" in p),
-            ("no cartesian: the date inequality rides the equi-join",
-             lambda p: "CartesianProduct" not in p),
-            ("priority counts are map-side partial",
-             lambda p: "partial_count" in p),
-        ],
-        "tpch_inactive_customers": [
-            ("absence probe plans as an ANTI join (LeftAnti), never "
-             "outer-join + null-filter",
-             lambda p: "LeftAnti" in p),
-            ("no cartesian anywhere", lambda p: "CartesianProduct" not in p),
-        ],
-        "tpch_regional_revenue": [
-            ("all five dimension chains broadcast (region->nation->supplier "
-             "and customer): the only wide work is lineitem x orders",
-             lambda p: len(re.findall(r"BroadcastHashJoin", p)) >= 4
-             and "CartesianProduct" not in p),
-            ("at most one wide exchange beyond the joins",
-             lambda p: _hash_exchanges(p) <= 2),
-            ("revenue aggregation is map-side partial",
-             lambda p: "partial_sum" in p),
-        ],
-        "text_phrase_search": [
-            ("zero shuffles: pure narrow projection, adjacency is doc-local "
-             "shift-and-intersect algebra",
-             lambda p: "Exchange" not in p),
-            ("scan pruned to doc_id,text",
-             lambda p: "ReadSchema: struct<doc_id:bigint,text:string>" in p),
-        ],
-        "corpus_pack_sequences": [
-            ("ONE exchange on source: the cumulative window and the bin "
-             "arithmetic are in-partition",
-             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 1),
-            ("token counting is a narrow aggregate() fold, no explode",
-             lambda p: "Generate" not in p),
-        ],
-        "pipeline_training_batches": [
-            ("one Python crossing for the whole composed pipeline",
-             lambda p: len(re.findall(r"\(\d+\) (MapInArrow|MapInPandas)\b", p)) == 1),
-            ("two wide stages: the md5 survivor window and the shard pack "
-             "window (no groupBy+join-back for survivor selection)",
-             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 2
-             and "Join" not in p),
-        ],
-        "events_funnel": [
-            ("ONE exchange on user_id: the three chained stage-min windows "
-             "and the final groupBy all share it — no join chain",
-             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 1
-             and "Join" not in p),
-        ],
-        "events_retention_cohorts": [
-            ("two exchanges: the per-user cohort window and the "
-             "(cohort, offset) distinct-count groupBy",
-             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 2),
-        ],
-        "events_scd2_history": [
-            ("ONE exchange on user_id for the lead window; no join",
-             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 1
-             and "Join" not in p),
-            ("scan pruned to the four needed columns",
-             lambda p: "ReadSchema: struct<event_id:bigint,ts:timestamp" in p),
-        ],
-        "events_json_props": [
-            ("JSON parse happens in the scan projection; stats are "
-             "map-side partial",
-             lambda p: "from_json" in p and "partial_count" in p),
-            ("scan pruned to event_type,props",
-             lambda p: "ReadSchema: struct<event_type:string,props:string>"
-             in p),
-        ],
-        "events_gapfill": [
-            ("join-free with ONE exchange: the user_id repartition is "
-             "reused by the hourly agg and the per-user pack",
-             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 1
-             and "Join" not in p),
-            ("both aggregations are map-side partial",
-             lambda p: "partial_count" in p),
-            ("the fill is a narrow zip_with fold, no indexing lambda over "
-             "a built array",
-             lambda p: "zip_with" in p.lower() or "ZipWith" in p),
-        ],
-        "source_warc_roundtrip": [
-            ("one exchange total: the pack-into-files groupBy (the record "
-             "splitter adds no shuffle)",
-             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 1),
-            ("record packing is map-side partial (collect_list partials "
-             "before the exchange)",
-             lambda p: "partial_collect_list" in p),
-            ("exactly two Python crossings: the gzip writer and the record "
-             "scanner (one ArrowEvalPython + one MapInArrow, no MapInPandas)",
-             lambda p: len(re.findall(r"\(\d+\) ArrowEvalPython\b", p)) == 1
-             and len(re.findall(r"\(\d+\) MapInArrow\b", p)) == 1
-             and "MapInPandas" not in p),
-        ],
-        "text_bm25_search": [
-            ("zero wide shuffles: no hash-partition Exchange anywhere (the "
-             "only Exchange is the SinglePartition reduce of the 1-row "
-             "totals aggregate)",
-             lambda p: _hash_exchanges(p) == 0),
-            ("totals attach by broadcast, corpus never shuffles for the join",
-             lambda p: "BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p),
-            ("top-k runs as TakeOrdered, never a full sort",
-             lambda p: "TakeOrderedAndProject" in p),
-            ("totals pass reads only the text column",
-             lambda p: "ReadSchema: struct<text:string>" in p),
-        ],
-        "text_repetition": [
-            ("shuffle-free: the top-bigram fold is a narrow projection",
-             lambda p: "Exchange" not in p),
-            ("no row amplification (no Generate/explode)",
-             lambda p: "Generate" not in p),
-            ("scan pruned to doc_id,text",
-             lambda p: "ReadSchema: struct<doc_id:bigint,text:string>" in p),
-        ],
-        "corpus_filter_funnel": [
-            ("TWO Exchanges total: the md5 keep-window partition + the "
-             "funnel groupBy(source); all four gate signals are one "
-             "narrow projection (no Generate/explode, no join)",
-             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 2
-             and "Generate" not in p and "Join" not in p),
-            ("funnel aggregate is map-side combinable (partial "
-             "HashAggregate below its Exchange)",
-             lambda p: re.search(
-                 r"HashAggregate[\s\S]*Exchange[\s\S]*HashAggregate"
-                 r"[\s\S]*Window", p) is not None),
-            ("scan pruned to doc_id,text,source",
-             lambda p: "ReadSchema: struct<doc_id:bigint,text:string,"
-             "source:string>" in p),
-        ],
-        "text_pii_redact": [
-            ("shuffle-free narrow projection (regex scrub is JVM-side)",
-             lambda p: "Exchange" not in p),
-            ("scan pruned to doc_id,text",
-             lambda p: "ReadSchema: struct<doc_id:bigint,text:string>" in p),
-        ],
-        "events_hourly": [
-            ("map-side partial aggregation", lambda p: "partial_" in p),
-            ("scan pruned to event_type,ts,value",
-             lambda p: "ReadSchema: struct<ts:timestamp_ntz,event_type:string,value:double>" in p),
-        ],
-        "events_sessionize": [
-            ("single exchange: lag + running-sum windows and the session "
-             "groupBy all reuse the user_id hash partitioning",
-             lambda p: len(re.findall(r"\(\d+\) Exchange", p)) == 1
-             and "hashpartitioning(user_id" in p),
-            ("scan pruned to the four needed columns",
-             lambda p: "ReadSchema: struct<event_id:bigint,ts:timestamp_ntz,user_id:bigint,value:double>" in p),
-        ],
-        "corpus_mix": [
-            ("rate table re-joins via broadcast (heavy side never shuffles "
-             "for the join)", lambda p: "BroadcastHashJoin" in p),
-            ("no window / no global sort (hash-threshold mixing, not "
-             "rank-and-cut)", lambda p: "Window" not in p
-             and not detail_blocks(p, "Sort")),
-            ("per-source totals are map-side partial aggregation",
-             lambda p: "partial_sum" in p),
-        ],
-        "events_asof_attribution": [
-            ("single exchange: the union-window as-of plan shuffles once on "
-             "user_id (no join, no pair blowup)",
-             lambda p: len(re.findall(r"\(\d+\) Exchange", p)) == 1
-             and "hashpartitioning(user_id" in p),
-        ],
-        "events_error_burst": [
-            ("banded range join is a real equi-join, never a nested-loop/"
-             "cartesian fallback",
-             lambda p: "NestedLoop" not in p and "CartesianProduct" not in p
-             and ("SortMergeJoin" in p or "ShuffledHashJoin" in p
-                  or "BroadcastHashJoin" in p)),
-            ("bounded fan-out: the only row amplification is the 2-band "
-             "Generate on the right side",
-             lambda p: sum("Arguments: explode(" in b
-                           for b in detail_blocks(p, "Generate")) <= 2),
-        ],
-        "sketch_hll_users": [
-            ("register fold is map-side partial aggregation (executors ship "
-             "<= groups x 256 rows)", lambda p: "partial_max" in p),
-            ("scan pruned to event_type,user_id",
-             lambda p: "ReadSchema: struct<user_id:bigint,event_type:string>" in p),
-        ],
-        "sketch_countmin_words": [
-            ("cell counts are map-side partial aggregation",
-             lambda p: "partial_count" in p or "partial_" in p),
-            ("the probe joins the d*w-cell sketch via broadcast",
-             lambda p: "BroadcastHashJoin" in p),
-        ],
-        "sketch_bloom_decontaminate": [
-            ("the 16-word filter reaches the probe side via broadcast "
-             "(probe side never shuffles for the membership test)",
-             lambda p: "BroadcastHashJoin" in p),
-            ("bit fold is map-side partial aggregation",
-             lambda p: "partial_bit_or" in p),
-        ],
-        "kmeans_embeddings": [
-            ("centroids broadcast to the assignment step (corpus never "
-             "shuffles for the distance join; BNLJ build side is k rows)",
-             lambda p: re.search(r"BroadcastNestedLoopJoin \w+ BuildRight", p)
-             is not None),
-            ("per-dim centroid sums are map-side partial aggregation",
-             lambda p: "partial_sum" in p),
-        ],
-        "events_quantiles": [
-            ("rank window, count window, and final groupBy all share ONE "
-             "event_type exchange",
-             lambda p: len(re.findall(r"\(\d+\) Exchange", p)) == 1
-             and "hashpartitioning(event_type" in p),
-        ],
-        "similarity_quantized_topk": [
-            ("quantized query side broadcast (corpus codes scanned once, "
-             "never shuffled for the join)",
-             lambda p: "BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p),
-        ],
-        "dedup_fuzzy_join": [
-            ("cross-corpus candidates come from ONE (band,key) groupBy — "
-             "no bands self-join, no cartesian",
-             lambda p: "CartesianProduct" not in p and "NestedLoop" not in p),
-            ("verify sides attach via broadcast (shingle arrays never "
-             "shuffle wide)", lambda p: "BroadcastHashJoin" in p),
-        ],
-        "events_hist_quantiles": [
-            ("bin counts are map-side partial aggregation (<= 1024 cells "
-             "per group cross the wire)", lambda p: "partial_count" in p),
-            ("scan pruned to event_type,value",
-             lambda p: "ReadSchema: struct<event_type:string,value:double>" in p),
-        ],
-        "graph_pagerank": [
-            ("out-degree table joins broadcast (edge table never shuffles "
-             "for the degree attach)", lambda p: "BroadcastHashJoin" in p),
-            ("per-round contribution sums are map-side partial aggregation",
-             lambda p: "partial_sum" in p),
-        ],
-        "url_canonical_dedup": [
-            ("ONE Exchange total: group size and representative attach as "
-             "window aggregates over the same url_canon partitioning, "
-             "never a groupBy + join-back",
-             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 1),
-            ("scan pruned to doc_id,text",
-             lambda p: "ReadSchema: struct<doc_id:bigint,text:string>" in p),
-        ],
-        "text_langid_multiscript": [
-            ("pure narrow projection: ZERO Exchanges (synth + classify are "
-             "row-local expressions)",
-             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 0),
-            ("no Python crossing: classification is JVM char-range algebra "
-             "(no MapInArrow/MapInPandas node)",
-             lambda p: "MapInArrow" not in p and "MapInPandas" not in p),
-        ],
-        "multimodal_exif_meta": [
-            ("exactly one round-robin spread Exchange feeds the Python "
-             "kernels (single-split serialization defense), nothing wide",
-             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 1
-             and "roundrobin" in p.lower()),
-        ],
-        "text_bpe_tokens": [
-            ("corpus side is ROW-LOCAL (bloom-probe shape): the only "
-             "Exchange is the SinglePartition vocab-map fold; per-doc "
-             "token counts come from one broadcast map row, the corpus "
-             "never shuffles",
-             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 1
-             and "BroadcastExchange" in p
-             and "BroadcastNestedLoopJoin Cross" in p),
-            ("scan pruned to doc_id,text",
-             lambda p: "ReadSchema: struct<doc_id:bigint,text:string>" in p),
-        ],
-        "multimodal_webp_meta": [
-            ("exactly one round-robin spread Exchange feeds the Python "
-             "kernels (single-split serialization defense), nothing wide",
-             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 1
-             and "roundrobin" in p.lower()),
-        ],
-        "dedup_semantic": [
-            ("cluster-BLOCKED pair join: an equi-join keyed on cluster id, "
-             "never a cartesian over the corpus (quadratic only within a "
-             "cluster — the SemDeDup contract; k is the scale knob)",
-             lambda p: "CartesianProduct" not in p
-             and "SortMergeJoin" in p),
-            ("assignment+embedding base is cached once and read by the "
-             "self-join's both sides plus the final keep projection",
-             lambda p: "InMemoryTableScan" in p),
-            ("kmeans inside keeps its row-local shape: centroids broadcast, "
-             "corpus never shuffles for the distance step",
-             lambda p: re.search(r"BroadcastNestedLoopJoin \w+ BuildRight", p)
-             is not None),
-        ],
-        "sample_importance": [
-            ("TWO Exchanges only: the map-side-combinable bucket-count agg "
-             "and the SinglePartition weight-map fold (<= 256 rows); the "
-             "scoring pass is row-local over ONE broadcast map row and the "
-             "top-k is a TakeOrdered, never a global sort",
-             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 2
-             and "BroadcastExchange" in p
-             and "TakeOrderedAndProject" in p),
-            ("scans pruned: the count pass reads text+source only",
-             lambda p: "ReadSchema: struct<text:string,source:string>" in p),
-        ],
-        "multimodal_avif_meta": [
-            ("exactly one round-robin spread Exchange feeds the Python "
-             "kernels (single-split serialization defense), nothing wide",
-             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 1
-             and "roundrobin" in p.lower()),
-        ],
-        "web_robots_decisions": [
-            ("URL corpus never shuffles: the ONLY Exchange is the tiny "
-             "host distinct (8 rows) feeding the rule synth; the per-host "
-             "rule arrays broadcast and the RFC 9309 longest-match is a "
-             "row-local filter/array_max inside the scan stage",
-             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 1
-             and "BroadcastExchange" in p
-             and "BroadcastHashJoin LeftOuter BuildRight" in p),
-            ("scan pruned to doc_id,text",
-             lambda p: "ReadSchema: struct<doc_id:bigint,text:string>" in p),
-        ],
-        "web_crawl_schedule": [
-            ("TWO Exchanges: the tiny host distinct + ONE URL-side shuffle "
-             "(the per-host FIFO window); the robots decision stays "
-             "broadcast-row-local and the allowed=1 filter sits BELOW the "
-             "window Exchange, shrinking the only wide shuffle",
-             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 2
-             and "BroadcastExchange" in p
-             and re.search(r"Window[\s\S]*Exchange[\s\S]*Filter[\s\S]*"
-                           r"BroadcastHashJoin", p) is not None),
-        ],
-        "web_sitemap_frontier": [
-            ("the only two Exchanges are the tiny host-distinct "
-             "aggregations (one per branch: sitemap synth + robots synth), "
-             "each map-side partial — the URL corpus never shuffles",
-             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 2
-             and len(re.findall(
-                 r"HashAggregate[\s\S]{0,400}?Exchange[\s\S]{0,400}?"
-                 r"HashAggregate", p)) >= 2),
-            ("sitemap XML goes through the REAL parse kernel (MapInArrow), "
-             "and the robots rule arrays attach by broadcast",
-             lambda p: "MapInArrow" in p
-             and "BroadcastHashJoin LeftOuter BuildRight" in p),
-            ("the posexplode Generate is the output stage, above the "
-             "kernel, not a shuffled intermediate",
-             lambda p: re.search(r"Generate[\s\S]*MapInArrow", p)
-             is not None),
-        ],
-        "extract_links": [
-            ("ONE Exchange total (the link_idx window); anchor/href/text "
-             "assembly joins all broadcast",
-             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 1
-             and p.count("BroadcastHashJoin") >= 2),
-            ("parse kernel behind a cache barrier (node AND attr consumers "
-             "read the same materialized parse, not two kernel runs)",
-             lambda p: "InMemoryTableScan" in p),
-        ],
-        "graph_domain_pagerank": [
-            ("per-round contribution sums are map-side partial aggregation "
-             "and the degree attach broadcasts (edge table never shuffles "
-             "for it)",
-             lambda p: "partial_sum" in p and "BroadcastHashJoin" in p),
-            ("parse kernel behind the cache barrier (every per-round edge "
-             "reference reads the materialized parse; ONE MapInArrow in "
-             "the whole composed plan, not one per lineage embed)",
-             lambda p: "InMemoryTableScan" in p
-             and len(re.findall(r"\(\d+\) MapInArrow", p)) <= 1),
-        ],
-        "graph_hits": [
-            ("per-round contribution sums are map-side partial aggregation",
-             lambda p: "partial_sum" in p),
-            ("L-inf norm scalars attach as broadcast one-row cross joins, "
-             "never a single-partition window",
-             lambda p: "BroadcastNestedLoopJoin" in p
-             and "SinglePartition" not in p.split("AdaptiveSparkPlan")[0]),
-        ],
-        "web_anchor_text": [
-            ("two Exchanges, both map-side combined: (target, anchor) pair "
-             "combine before the first shuffle (hot-anchor skew guard), "
-             "then only the combined pair table shuffles per target",
-             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 2
-             and "partial_count" in p),
-            ("modal-anchor min(struct) plans as a partial+final "
-             "SortAggregate pair (still map-side combined)",
-             lambda p: len(re.findall(r"\(\d+\) SortAggregate", p)) == 2),
-            ("parse kernel behind the cache barrier (the entry's cache "
-             "scope holds the persist across the aggregation)",
-             lambda p: "InMemoryTableScan" in p
-             and len(re.findall(r"\(\d+\) MapInArrow", p)) <= 1),
-        ],
-        "web_crawl_delta": [
-            ("three Exchanges: the two full-outer SMJ sides plus the tiny "
-             "(source, status) rollup — nothing else shuffles",
-             lambda p: len(re.findall(r"\(\d+\) Exchange\b", p)) == 3
-             and "SortMergeJoin" in p and "FullOuter" in p),
-            ("text never crosses the shuffle: both sides reduce to the "
-             "md5/length digest projection scan-side (h_a/h_b/len_a/len_b "
-             "are the join payload)",
-             lambda p: "md5" in p and "h_a" in p and "h_b" in p
-             and "len_a" in p and "len_b" in p),
-            ("scan pruned to (doc_id, text, source)",
-             lambda p: "ReadSchema: struct<doc_id:bigint,text:string,"
-             "source:string>" in p),
-            ("rollup is map-side combined",
-             lambda p: "partial_count" in p or "partial_sum" in p),
-        ],
-    }
+    return {n: list(RECORDS[n].pins) for n in ORDER if RECORDS[n].pins}
+
+
+# {query name: names of its Python-crossing nodes}; absent = crosses zero times
+PYTHON_CROSSINGS = {n: RECORDS[n].crossings for n in ORDER if RECORDS[n].crossings}

@@ -12,6 +12,8 @@ The stdout line is kept under the driver's 2000-char tail buffer by
 truncating the per-query dict to the slowest cells when needed; the FULL
 result (all queries) is always written to BENCH_QUERIES.json and echoed
 to stderr.
+The record holds only what this run measured: N vs 4N scaling
+efficiency comes from tools/scaling_bench.py (BENCH_SCALING.json).
 
 Env:
   SPARK_GRAFT_SF_DIR   input tables dir   (default /root/testdata/sf0.1)
@@ -230,22 +232,6 @@ def main() -> None:
             sum(t for n, t in q_times.items() if t > 0 and n not in reference_paths), 3
         ),
     }
-    # attach the latest two-cluster-size scaling evidence if recorded
-    scaling_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_SCALING.json")
-    if os.path.exists(scaling_path):
-        try:
-            with open(scaling_path) as f:
-                s = json.load(f)
-            result["scaling_efficiency_N_to_4N"] = s["value"]
-            result["scaling_throughput_N"] = s["throughput_N_docs_per_sec"]
-            result["scaling_throughput_4N"] = s["throughput_4N_docs_per_sec"]
-            if "ops" in s:  # per-op efficiencies (extract / parse / minhash)
-                result["scaling_efficiency_per_op"] = {
-                    k: v["scaling_efficiency"] for k, v in s["ops"].items()
-                }
-        except Exception:
-            pass
-
     # The driver keeps only the LAST 2000 chars of stdout and json-parses
     # the final '{'-line inside it (observed: BENCH_r03 recorded
     # parsed=None because the 87-query line grew past the buffer and the

@@ -1,8 +1,8 @@
 """Distributed k-means over the embedding corpus — the ITERATIVE-algorithm
 shape (fixed-round Lloyd iterations) expressed as pure DataFrame ops, with
-every arithmetic step engine-portable so an ANSI-SQL oracle reproduces the
-assignments BIT-EXACTLY (most engines can only property-test k-means; this
-one is gate-hashable).
+every arithmetic step engine-portable so an ANSI-SQL oracle
+(registry/vectors.py) reproduces the assignments BIT-EXACTLY (most
+engines can only property-test k-means; this one is gate-hashable).
 
 Determinism recipe (each step is exact or a single IEEE op):
   1. coordinates quantize to integer-VALUED doubles: round(x * 1000) —
@@ -125,74 +125,6 @@ def kmeans_assign(
     return final.select("vec_id", F.col("cid").alias("cluster"), "dist")
 
 
-def kmeans_chain_sql(
-    k: int = K_DEFAULT,
-    n_iter: int = 2,
-    dim: int = 64,
-    source: str = "embeddings",
-    final_name: str = "asg",
-) -> str:
-    """DuckDB mirror of kmeans_assign as a composable WITH-chain ending in
-    CTE `final_name` (vec_id, cluster INTEGER, dist DOUBLE). The final CTE
-    is MATERIALIZED (the CLAUDE.md re-expansion invariant: a consumer that
-    references it twice — e.g. semantic_dedup's pair self-join — must not
-    replay the whole iteration chain per reference)."""
-    sq = (
-        "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-        f"list_transform(range(1, {dim + 1}), "
-        "i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i]))), (acc, v) -> acc + v)"
-    )
-    sums = ", ".join(f"SUM(codes[{d + 1}]) AS s{d}" for d in range(dim))
-    means = ", ".join(f"m.s{d} / CAST(m.n AS DOUBLE)" for d in range(dim))
-    sql = f"""
-        WITH v AS (
-          SELECT vec_id,
-                 list_transform(embedding,
-                     x -> round(CAST(x AS DOUBLE) * {SCALE}e0)) AS codes
-          FROM {source}
-        ), c0 AS (
-          SELECT CAST(vec_id AS INTEGER) AS cid, codes AS cent
-          FROM v WHERE vec_id < {k}
-        )"""
-    prev = "c0"
-    for it in range(n_iter):
-        d = sq.format(a="v.codes", b="c.cent")
-        sql += f""", a{it} AS (
-          SELECT * FROM (
-            SELECT v.vec_id, v.codes, c.cid, {d} AS dist,
-                   row_number() OVER (PARTITION BY v.vec_id
-                                      ORDER BY {d}, c.cid) AS rk
-            FROM v, {prev} c
-          ) WHERE rk = 1
-        ), m{it} AS (
-          SELECT cid, COUNT(*) AS n, {sums} FROM a{it} GROUP BY cid
-        ), c{it + 1} AS (
-          SELECT s.cid,
-                 CASE WHEN m.cid IS NULL THEN s.cent
-                      ELSE [{means}] END AS cent
-          FROM {prev} s LEFT JOIN m{it} m USING (cid)
-        )"""
-        prev = f"c{it + 1}"
-    d = sq.format(a="v.codes", b="c.cent")
-    sql += f""", {final_name} AS MATERIALIZED (
-        SELECT vec_id, CAST(cid AS INTEGER) AS cluster, dist FROM (
-          SELECT v.vec_id, c.cid, {d} AS dist,
-                 row_number() OVER (PARTITION BY v.vec_id
-                                    ORDER BY {d}, c.cid) AS rk
-          FROM v, {prev} c
-        ) WHERE rk = 1
-        )"""
-    return sql
-
-
-def kmeans_oracle_sql(k: int = K_DEFAULT, n_iter: int = 2, dim: int = 64) -> str:
-    """DuckDB mirror of kmeans_assign (same ops in the same order)."""
-    return (
-        kmeans_chain_sql(k, n_iter, dim)
-        + "\n        SELECT vec_id, cluster, dist FROM asg\n    "
-    )
-
-
 # ---------------------------------------------------------------------------
 # SemDeDup — semantic deduplication via cluster-blocked cosine
 # ---------------------------------------------------------------------------
@@ -282,69 +214,4 @@ def semantic_dedup(
         "dist",
         F.coalesce("n_dups", F.lit(0)).cast("int").alias("n_dups"),
         (1 - F.coalesce("lost", F.lit(0))).cast("int").alias("keep"),
-    )
-
-
-def semantic_dedup_oracle_sql(
-    k: int = K_DEFAULT,
-    n_iter: int = 2,
-    dim: int = 64,
-    min_cos: str = "0.999e0",
-    source: str = "embeddings",
-    lead_ctes: str = "",
-) -> str:
-    """DuckDB mirror of semantic_dedup. `min_cos` is a string in
-    e-notation (the CLAUDE.md DECIMAL-literal invariant). `lead_ctes`
-    lets the caller prepend e.g. a planted-duplicate corpus CTE;
-    `source` must then name that CTE."""
-    cos = (
-        "(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-        f"list_transform(range(1, {dim + 1}), "
-        "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE))), "
-        "(acc, v) -> acc + v))"
-    )
-    norm2 = (
-        "(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-        f"list_transform(range(1, {dim + 1}), "
-        "i -> CAST({a}[i] AS DOUBLE) * CAST({a}[i] AS DOUBLE))), "
-        "(acc, v) -> acc + v))"
-    )
-    cos_ab = (
-        cos.format(a="a.embedding", b="b.embedding")
-        + " / (sqrt(" + norm2.format(a="a.embedding") + ") * sqrt("
-        + norm2.format(a="b.embedding") + "))"
-    )
-    chain = kmeans_chain_sql(k, n_iter, dim, source=source)
-    if lead_ctes:
-        chain = chain.replace("WITH v AS (", f"WITH {lead_ctes} v AS (", 1)
-    return (
-        chain
-        + f""", base AS MATERIALIZED (
-          SELECT g.vec_id, g.cluster, g.dist, e.embedding
-          FROM asg g JOIN {source} e USING (vec_id)
-        ), prs AS MATERIALIZED (
-          SELECT a.vec_id AS va, b.vec_id AS vb, a.dist AS da, b.dist AS db
-          FROM base a JOIN base b
-            ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-          WHERE {cos_ab} >= {min_cos}
-        ), st AS (
-          SELECT vec_id, CAST(COUNT(*) AS INTEGER) AS n_dups,
-                 MAX(lost) AS lost
-          FROM (
-            SELECT va AS vec_id,
-                   CASE WHEN da < db OR (da = db AND va > vb)
-                        THEN 1 ELSE 0 END AS lost
-            FROM prs
-            UNION ALL
-            SELECT vb,
-                   CASE WHEN db < da OR (da = db AND vb > va)
-                        THEN 1 ELSE 0 END
-            FROM prs
-          ) GROUP BY 1
-        )
-        SELECT b.vec_id, b.cluster, b.dist,
-               COALESCE(st.n_dups, 0) AS n_dups,
-               CAST(1 - COALESCE(st.lost, 0) AS INTEGER) AS keep
-        FROM base b LEFT JOIN st USING (vec_id)
-    """
     )

@@ -9,7 +9,7 @@ codegen — no Python UDFs):
 
 Every function is engine-portable by construction: the arithmetic is integer
 or md5-based so an ANSI-SQL oracle (DuckDB) reproduces values exactly (see
-__spark_entry__.oracle_sql). At 100 TB these are single-pass narrow
+registry/text.py). At 100 TB these are single-pass narrow
 projections — no shuffle, full predicate/column pushdown.
 """
 

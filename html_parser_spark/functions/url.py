@@ -7,7 +7,7 @@ content-based dedup runs).
 All pure JVM string/array expressions (regexp_extract + split +
 array_sort inside whole-stage codegen) — a narrow projection at 100 TB,
 with ONE Exchange for the canonical-key grouping. The gate oracle
-(__spark_entry__.py `url_canonical_dedup`) synthesizes URLs from a fresh
+(registry/web.py `url_canonical_dedup`) synthesizes URLs from a fresh
 md5(text||'url') stream and derives the expected canonical form
 CLOSED-FORM from the same bytes, so the generic parser here is pinned
 against the constructor — the multiscript/EXIF pattern.
@@ -118,7 +118,7 @@ def anchor_stats(links: DataFrame) -> DataFrame:
     not the source page).
 
     Input: the link table from extraction — (doc_id, link_idx, href,
-    href_canon, anchor_text) as produced by `__spark_entry__.q_extract_links`
+    href_canon, anchor_text) as produced by `registry/web.py` `q_extract_links`
     or any extractor + `canonicalize_urls` composition.
 
     Output per href_canon:

@@ -12,8 +12,8 @@ filter -> one exchange.
 Stage reuse, not reimplementation: the quality gate IS functions/text.quality
 (same expressions, same thresholds) and the grouping mirrors
 functions/dedup.exact_groups; the gate query's DuckDB oracle reconstructs
-the whole composition from first principles (__spark_entry__.oracle_sql
-['pipeline_clean_corpus']).
+the whole composition from first principles (the `pipeline_clean_corpus`
+record in registry/dedup.py).
 """
 
 from __future__ import annotations

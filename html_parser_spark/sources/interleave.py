@@ -3,7 +3,7 @@ driver's `documents` parquet — deterministically and SQL-mirrorably.
 
 `documents.text` is pure ``[a-z ]`` word soup at every sf (verified), so a
 document wrapped in fixed HTML has a closed-form expected extraction that an
-ANSI-SQL oracle can reconstruct (see __spark_entry__.oracle_sql): the Spark
+ANSI-SQL oracle can reconstruct (see registry/extract.py): the Spark
 side runs the REAL tokenizer/tree kernel, the oracle recomputes the answer
 from first principles — a genuine end-to-end correctness gate.
 

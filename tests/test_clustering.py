@@ -1,6 +1,7 @@
 """Fixed-round Lloyd k-means (functions/clustering.py): hand-checkable
 geometry, the empty-cluster carryover rule, and oracle-SQL equivalence on
-a seeded random corpus (the gate re-checks on the real tables)."""
+a seeded random corpus (the gate re-checks on the real tables; the oracle
+builders live with their records in registry/vectors.py)."""
 
 from __future__ import annotations
 
@@ -8,10 +9,8 @@ import duckdb
 import pytest
 
 from html_parser_spark import cache
-from html_parser_spark.functions.clustering import (
-    kmeans_assign,
-    kmeans_oracle_sql,
-)
+from html_parser_spark.functions.clustering import kmeans_assign
+from registry.vectors import kmeans_oracle_sql, semantic_dedup_oracle_sql
 
 
 def _embs(spark, rows, dim):
@@ -114,10 +113,7 @@ def test_semantic_dedup_keep_rule(spark):
 def test_semantic_dedup_matches_oracle_on_seeded_corpus(spark):
     import random
 
-    from html_parser_spark.functions.clustering import (
-        semantic_dedup,
-        semantic_dedup_oracle_sql,
-    )
+    from html_parser_spark.functions.clustering import semantic_dedup
 
     rnd = random.Random(7)
     dim = 8

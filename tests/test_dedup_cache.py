@@ -220,6 +220,7 @@ def test_one_cache_site():
     files = [
         *(REPO / "html_parser_spark").rglob("*.py"),
         REPO / "__spark_entry__.py",
+        *(REPO / "registry").rglob("*.py"),
         REPO / "bench.py",
         *(REPO / "jobs").glob("*.py"),
         *(REPO / "tools").glob("*.py"),

@@ -3,8 +3,9 @@ __spark_entry__.queries() entry vs its oracle_sql() via DuckDB at sf0.001 —
 row count, column names, oracle column types and order-insensitive exact
 values (doubles by repr, i.e. bit-exact), through tools/gate_check's own
 type_drift and row normaliser. Each frame's unexecuted plan must first hold
-the query's plan_pins() and its declared count of Python crossings. Keeps
-`python -m pytest -x -q` self-contained as the full correctness gate."""
+the query's plan_pins() and cross into Python through exactly the nodes its
+PYTHON_CROSSINGS entry names. Keeps `python -m pytest -x -q`
+self-contained as the full correctness gate."""
 
 from __future__ import annotations
 
@@ -14,6 +15,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
+from registry.plans import crossings, explain_str
 from tools.gate_check import TABLES, rows_to_multiset, type_drift
 
 SF_DIR = os.environ.get("SPARK_GRAFT_GATE_SF", "/root/testdata/sf0.001")
@@ -36,31 +38,21 @@ def con():
 PINS = entrymod.plan_pins()
 
 
-def test_plan_tables_name_registry_queries():
-    names = set(entrymod.queries())
-    assert set(PINS) <= names
-    assert set(entrymod.PYTHON_CROSSINGS) <= names
-
-
 @pytest.mark.parametrize("name", sorted(entrymod.queries().keys()))
 def test_query_matches_oracle(spark, con, name):
     df = entrymod.queries()[name](spark, SF_DIR)
     # the pins were written against the unexecuted (initial AQE) plan
-    plan = entrymod.explain_str(df)
+    plan = explain_str(df)
     for desc, pin in PINS.get(name, []):
         assert pin(plan), desc
-    crossings = entrymod.CROSSING_RE.findall(plan)
-    assert len(crossings) == entrymod.PYTHON_CROSSINGS.get(name, 0), crossings
+    assert crossings(plan) == tuple(sorted(entrymod.PYTHON_CROSSINGS.get(name, ())))
     rows = [tuple(r) for r in df.collect()]
-    oracles = entrymod.oracle_sql()
-    if name not in oracles:
-        assert len(rows) > 0  # rows-only contract
-        return
-    res = con.execute(oracles[name])
+    oracle = entrymod.oracle_sql()[name]
+    res = con.execute(oracle)
     ocols = [d[0] for d in res.description]
     orows = res.fetchall()
     assert sorted(df.columns) == sorted(ocols)
-    assert type_drift(df, con, oracles[name]) == []
+    assert type_drift(df, con, oracle) == []
     assert len(rows) == len(orows)
     assert rows_to_multiset(df.columns, rows) == rows_to_multiset(ocols, orows)
 

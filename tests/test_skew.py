@@ -10,7 +10,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from __spark_entry__ import explain_str
+from registry.plans import explain_str
 from html_parser_spark.core import oracle
 from html_parser_spark.operators.extract import INPUT_SCHEMA, extract_spans
 from html_parser_spark.sources.fixtures import synth_docs

@@ -146,19 +146,6 @@ def run_gate(spark, sf_dir: str, only: set[str], records: dict | None = None) ->
             record(name, err=f"spark {type(e).__name__}: {str(e)[:200]}")
             failures += 1
             continue
-        if name not in oracles:
-            print(f"ok?  {name}: rows-only ({len(rows)} rows, {time.time()-t0:.1f}s)")
-            if len(rows) == 0:
-                print(f"WARN {name}: zero rows")
-            record(
-                name,
-                rows_match=len(rows) > 0,
-                schema_match=True,
-                hash_match=False,
-                spark_rows=len(rows),
-                err=None if rows else "zero rows (rows-only check)",
-            )
-            continue
         try:
             res = con.execute(oracles[name])
             ocols = [d[0] for d in res.description]

@@ -1,7 +1,8 @@
-"""Physical-plan record: capture .explain('formatted') for every query that
-declares plan pins (`__spark_entry__.plan_pins()`), check each pin, and write
-the plans with their PASS/FAIL lines to PLANS_AUDIT.md. The same pins run in
-the test suite (tests/test_gate_oracles.py); this tool only writes the record.
+"""Physical-plan record: capture .explain('formatted') for every query whose
+`Query` record (registry/) declares plan pins, check each pin and the
+record's Python-crossing node names, and write the plans with their
+PASS/FAIL lines to PLANS_AUDIT.md. The same checks run in the test suite
+(tests/test_gate_oracles.py); this tool only writes the record.
 
 Usage: python tools/plan_audit.py [sf_dir]   (a directory path, or a scale
 factor such as '0.01' / 'sf0.01' naming a sibling of the default sf0.01
@@ -46,6 +47,7 @@ def main() -> int:
     import __spark_entry__ as E
 
     from html_parser_spark.session import apply_scale_confs
+    from registry.plans import crossings, explain_str
 
     spark = (
         apply_scale_confs(
@@ -60,14 +62,17 @@ def main() -> int:
 
     qs = E.queries()
     out = [
-        "# Physical-plan audit (tools/plan_audit.py over __spark_entry__.plan_pins())\n",
+        "# Physical-plan audit (tools/plan_audit.py over the registry's plan pins)\n",
         f"sf_dir: {sf_dir}; Spark {spark.version}\n",
     ]
     failures = 0
     for name, pins in E.plan_pins().items():
-        plan = E.explain_str(qs[name](spark, sf_dir))
+        plan = explain_str(qs[name](spark, sf_dir))
         out.append(f"\n## {name}\n")
-        for desc, pin in pins:
+        want = tuple(sorted(E.PYTHON_CROSSINGS.get(name, ())))
+        checks = [*pins, (f"Python crossings are exactly {list(want)}",
+                          lambda p: crossings(p) == want)]
+        for desc, pin in checks:
             ok = pin(plan)
             failures += not ok
             out.append(f"- {'PASS' if ok else 'FAIL'}: {desc}")
