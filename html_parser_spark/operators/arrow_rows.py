@@ -16,6 +16,13 @@ list<struct>>> nodes column is built this way by pyarrow, in C++.
 Only operators/extract keeps a hand-built flat child-array rebuild (its
 input is a list<struct> column it decomposes without per-span objects);
 every other kernel goes through here.
+
+Both hand the kernel to Spark as `worker.on_worker(kernel)`, as every
+Python entry point of the package does: pyspark's worker calls
+`importlib.invalidate_caches()` before every task (`worker_util.py`), and
+CPython 3.11's zipimporter then re-reads pyspark.zip, py4j and the
+spark-core jar in full (106-206 ms of CPU per task, measured in a local[4]
+worker). The bootstrap re-reads an archive only when it changed.
 """
 
 from __future__ import annotations
@@ -24,6 +31,8 @@ from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
+
+from ..worker import on_worker
 
 
 def map_rows(
@@ -49,4 +58,4 @@ def map_rows(
                 schema=arrow_schema,
             )
 
-    return df.mapInArrow(kernel, schema)
+    return df.mapInArrow(on_worker(kernel), schema)

@@ -28,7 +28,9 @@ Scale notes (100 TB / 1000 executors):
   into the hottest task (measured: 10 MB doc among 10k -> co-resident
   light bytes on the hottest task drop from ~670 KB to ~0; BASELINE.md) —
   and (b) byte-bounded Arrow batches (set
-  spark.sql.execution.arrow.maxRecordsPerBatch down for mega-doc corpora).
+  spark.sql.execution.arrow.maxBytesPerBatch for mega-doc corpora; Spark
+  4.1 applies it to Python UDF input, and a record count does not bound
+  bytes; session.py says why it is not set globally).
   Salting is a full shuffle of the input bytes — leave salt_partitions=None
   when the upstream layout is already uniform (e.g. sized parquet row
   groups + AQE); pass an int (or salt_by='bytes') when the source is
@@ -59,6 +61,7 @@ from pyspark.sql.types import (
 )
 
 from ..kernels.extract import ExtractOptions
+from ..worker import on_worker
 
 N_BUCKETS = 1024  # partition_id = crc32(doc_id) % N_BUCKETS
 
@@ -231,7 +234,7 @@ def extract_spans(
         # leave ~1/e of the partitions empty (verified) — hash the raw
         # 64-bit doc hash instead
         df = df.repartition(salt_partitions, F.xxhash64(F.col("doc_id")))
-    return df.mapInArrow(_arrow_kernel_factory(options), schema=EXTRACT_SCHEMA)
+    return df.mapInArrow(on_worker(_arrow_kernel_factory(options)), schema=EXTRACT_SCHEMA)
 
 
 def exploded_spans(df_extracted: DataFrame) -> DataFrame:

@@ -20,8 +20,9 @@ Flow:
 is known and bytes live elsewhere; its default kernel is the deterministic
 md5-fake. When the bytes are in reach, parse_layout_payloads is the real
 path. At 100 TB the binary column rides the same Arrow batches as
-everything else — cap spark.sql.execution.arrow.maxRecordsPerBatch for
-multi-MB documents (same mega-row guidance as the extraction kernel).
+everything else — cap spark.sql.execution.arrow.maxBytesPerBatch for
+multi-MB documents (same mega-row guidance as the extraction kernel; a
+record count does not bound bytes).
 """
 
 from __future__ import annotations

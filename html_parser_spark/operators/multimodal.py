@@ -436,9 +436,10 @@ def media_metadata(
     decode paths are image_features / audio_features / video_frame_sample).
 
     One mapInArrow crossing (map_rows): the bytes move in Arrow batches
-    and become Python bytes once per batch. Batch size is governed by
-    spark.sql.execution.arrow.maxRecordsPerBatch — size it down for
-    multi-MB media blobs (same mega-row guidance as the extraction kernel).
+    and become Python bytes once per batch. For multi-MB media blobs cap
+    the batch bytes with spark.sql.execution.arrow.maxBytesPerBatch (same
+    mega-row guidance as the extraction kernel; a record count does not
+    bound bytes).
     """
 
     def rows(b):

@@ -38,6 +38,16 @@ SCALE_CONFS: dict[str, str] = {
     # local[16] / 8 MB-split shape (10.7 -> 12.1 s median, interleaved).
     # Batch size interacts with split sizing and worker count; leave the
     # default and tune per deployment, not globally.
+    # Nor spark.sql.execution.arrow.maxBytesPerBatch, the byte cap the
+    # mega-doc advice names (Spark 4.1 applies it to Python UDF input in
+    # BatchedPythonArrowInput.writeSizedBatch). perfbench markup_spans,
+    # local[4], 4-vCPU VM, interleaved pairs against the default: before
+    # the worker bootstrap (worker.py) a 1 MiB cap lost 4 of 4 pairs
+    # (9,551 vs 11,262 docs/s median, cpu_s_per_kdoc +22%) and 4 MiB won
+    # 1 of 4; after it, 1 MiB won 6 of 10 on docs/s (13,561 vs 13,016
+    # median, ratios 0.81-1.56) and cut peak RSS 5% in 10 of 10, and
+    # 4 MiB won 2 of 4. No throughput gain holds, so the cap stays a
+    # per-deployment memory bound for mega-doc corpora.
 }
 
 

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from ..operators.arrow_rows import map_rows
+from ..worker import on_worker
 
 URL_PREFIX = "https://corpus.example"
 
@@ -94,6 +95,7 @@ def synth_warc_files(
     )
     if compress:
         @F.pandas_udf("binary")
+        @on_worker
         def _gz(s: pd.Series) -> pd.Series:
             return s.map(lambda b: gzip.compress(b, 6, mtime=0))
 

@@ -32,6 +32,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions.sketch import RHO_CAP, _register_rho_exprs, fold_registers
+from ..worker import on_worker
 
 HLL_STREAM_OUT_SCHEMA = StructType(
     [
@@ -77,7 +78,7 @@ def hll_stream(
         f"least({rho}, {RHO_CAP}) as _rho",
     )
     return keyed.groupBy("group_key", "_reg").applyInPandasWithState(
-        _hll_fn,
+        on_worker(_hll_fn),
         outputStructType=HLL_STREAM_OUT_SCHEMA,
         stateStructType=HLL_STREAM_STATE_SCHEMA,
         outputMode="append",
@@ -157,7 +158,7 @@ def countmin_stream(
         f"i -> {_cm_bucket('_t', 'i', hex_chars)})) as (hrow, bucket)",
     )
     return keyed.groupBy("group_key", "hrow", "bucket").applyInPandasWithState(
-        _cm_fn,
+        on_worker(_cm_fn),
         outputStructType=CM_STREAM_OUT_SCHEMA,
         stateStructType=CM_STREAM_STATE_SCHEMA,
         outputMode="append",

@@ -35,6 +35,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..worker import on_worker
+
 DEDUP_OUT_SCHEMA = StructType(
     [
         StructField("content_key", StringType()),
@@ -88,7 +90,7 @@ def dedup_stream(stream_df: DataFrame, key_expr: str = "md5(text)") -> DataFrame
         F.col("doc_id").alias("doc_id"),
     )
     return keyed.groupBy("content_key").applyInPandasWithState(
-        _dedup_fn,
+        on_worker(_dedup_fn),
         outputStructType=DEDUP_OUT_SCHEMA,
         stateStructType=DEDUP_STATE_SCHEMA,
         outputMode="append",
@@ -173,7 +175,7 @@ def dedup_stream_banded(
     groupBy, so no executor ever holds the global seen-set."""
     keyed = band_rows(stream_df, k, rows_per_band)
     return keyed.groupBy("band", "content_key").applyInPandasWithState(
-        _banded_fn,
+        on_worker(_banded_fn),
         outputStructType=BANDED_OUT_SCHEMA,
         stateStructType=BANDED_STATE_SCHEMA,
         outputMode="append",

@@ -152,7 +152,7 @@ def q_dedup_jaccard(spark, sf_dir):
     ("verification is candidate-bounded: broadcast semi-join shrink "
      "+ broadcast array attach (the corpus-wide shingle set is "
      "never shuffled or joined wide)",
-     lambda p: p.count("BroadcastHashJoin") >= 2 and "LeftSemi" in p),
+     lambda p: nodes(p, "BroadcastHashJoin") >= 2 and "LeftSemi" in p),
     ("one shingle pass over the corpus: the array table is computed "
      "once per union leg and cached (no expression re-inlining)",
      lambda p: p.count("conv(substr(md5") <= 3),
@@ -162,7 +162,7 @@ def q_dedup_jaccard(spark, sf_dir):
     ("small candidate set: AQE's join selection broadcasts both "
      "attach joins (no hint; both are BroadcastHashJoin, no "
      "SortMergeJoin)",
-     lambda p: p.count("BroadcastHashJoin") >= 2
+     lambda p: nodes(p, "BroadcastHashJoin") >= 2
      and "SortMergeJoin" not in p),
     ("candidate pairs and candidate arrays read from cache in the "
      "verify plan (no recompute per consumer branch)",
@@ -395,7 +395,7 @@ def q_dedup_simhash(spark, sf_dir):
     ("bench shingles broadcast into the overlap probe; the corpus "
      "is never shuffled wide (two Exchanges: overlap groupBy + "
      "bench distinct)",
-     lambda p: p.count("BroadcastHashJoin") >= 2
+     lambda p: nodes(p, "BroadcastHashJoin") >= 2
      and nodes(p, "Exchange") <= 2),
     ("map-side partial overlap counts", lambda p: "partial_count" in p),
     ("the all-docs left side prunes to doc_id only",

@@ -3,12 +3,10 @@
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import functions as F
 
 from registry import query
-from registry.plans import hash_exchanges
+from registry.plans import hash_exchanges, nodes
 
 
 # integer money arithmetic shared by the TPC-H-style queries (mirrored
@@ -69,7 +67,7 @@ def q_tpch_pricing(spark, sf_dir):
 
 @query("tpch_top_orders", pins=(
     ("dimension sides broadcast; no cartesian/nested-loop join",
-     lambda p: len(re.findall(r"BroadcastHashJoin", p)) >= 2
+     lambda p: nodes(p, "BroadcastHashJoin") >= 2
      and "CartesianProduct" not in p
      and "BroadcastNestedLoopJoin" not in p),
     ("at most one wide exchange beyond the joins (the revenue "
@@ -140,7 +138,7 @@ def q_tpch_top_orders(spark, sf_dir):
 @query("tpch_regional_revenue", pins=(
     ("all five dimension chains broadcast (region->nation->supplier "
      "and customer): the only wide work is lineitem x orders",
-     lambda p: len(re.findall(r"BroadcastHashJoin", p)) >= 4
+     lambda p: nodes(p, "BroadcastHashJoin") >= 4
      and "CartesianProduct" not in p),
     ("at most one wide exchange beyond the joins",
      lambda p: hash_exchanges(p) <= 2),

@@ -323,7 +323,7 @@ def q_graph_domain_pagerank(spark, sf_dir):
     ("ONE Exchange total (the link_idx window); anchor/href/text "
      "assembly joins all broadcast",
      lambda p: nodes(p, "Exchange") == 1
-     and p.count("BroadcastHashJoin") >= 2),
+     and nodes(p, "BroadcastHashJoin") >= 2),
     ("parse kernel behind a cache barrier (node AND attr consumers "
      "read the same materialized parse, not two kernel runs)",
      lambda p: "InMemoryTableScan" in p),

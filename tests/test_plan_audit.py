@@ -24,3 +24,10 @@ def test_main_exits_2_on_missing_sf(monkeypatch, tmp_path, capsys, arg):
     monkeypatch.setattr(sys, "argv", ["plan_audit.py", arg.format(tmp=tmp_path)])
     assert plan_audit.main() == 2
     assert "no such sf directory" in capsys.readouterr().err
+
+
+def test_stable_ids_blanks_only_the_session_zone():
+    plan = "sequence(0, n#12L, None, Some(Etc/UTC)), from_json(s, j#3, Some(UTC))"
+    assert plan_audit.stable_ids(plan, "Etc/UTC") == (
+        "sequence(0, n#_L, None, Some(_)), from_json(s, j#_, Some(UTC))"
+    )
