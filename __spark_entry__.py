@@ -5,7 +5,8 @@ training-data-pipeline operators) as (spark, sf_dir) -> DataFrame. Each
 call opens a fresh cache scope (html_parser_spark/cache.py) that holds
 the query's persisted and checkpointed intermediates until the next entry
 is called, so run one query at a time and act on its result before calling
-the next.
+the next. Each call also sets the session time zone to UTC, the clock
+every oracle's timestamp arithmetic assumes.
 `oracle_sql()` holds each query's DuckDB-runnable reconstruction of the
 SAME answer from first principles, so the Spark kernels are verified
 end-to-end; `plan_pins()` and `PYTHON_CROSSINGS` hold its physical-plan
@@ -85,15 +86,19 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def _scoped(fn: Callable[[SparkSession, str], DataFrame]):
-    """A registry entry owns its query's cache scope: each call closes the
-    session's open scope (releasing the previous query's caches) and opens
-    a fresh one, which stays open after the call returns so the caller's
-    action on the lazy result reads live caches. Composed builders call
-    each other directly and share the caller's scope."""
+    """A registry entry owns its query's per-session state. Each call
+    closes the session's open cache scope (releasing the previous query's
+    caches) and opens a fresh one, which stays open after the call returns
+    so the caller's action on the lazy result reads live caches. Each call
+    also sets `spark.sql.session.timeZone` to UTC: DuckDB's epoch() reads
+    a timestamp's wall-clock as UTC, and a zone set by one builder would
+    otherwise leak into every plan built after it. Composed builders call
+    each other directly and share the caller's scope and zone."""
 
     @functools.wraps(fn)
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         cache.open_scope(spark)
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
         return fn(spark, sf_dir)
 
     return run

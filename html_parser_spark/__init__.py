@@ -13,7 +13,7 @@ Public surface:
   operators.arrow_rows.map_rows        the one row-at-a-time Python crossing
   cache.persist / checkpoint / scope   owner-scoped lifetimes
   operators.multimodal.media_metadata  binary-column metadata kernel
-  operators.layout.route_media/parse_layout   PDF/layout branch
+  operators.layout.route_media/parse_layout_payloads   PDF/layout branch
   functions.text                       lang-ID / quality / tokens / fingerprint
   functions.dedup                      exact / Jaccard / MinHash-LSH / SimHash /
                                        embedding near-dup

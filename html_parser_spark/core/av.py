@@ -449,10 +449,9 @@ def synth_mp4(
     timescale: int,
     duration: int,
     n_samples: int,
-    sample_size: int = 16,
 ) -> bytes:
     """A structurally correct single-video-track MP4 (ftyp + moov box tree
-    + mdat of zeroed samples — deliberately NOT decodable media). All
+    + mdat of zeroed 16-byte samples — deliberately NOT decodable media). All
     mp4_info outputs have closed forms in the arguments."""
     mvhd = bytes(12) + timescale.to_bytes(4, "big") + duration.to_bytes(4, "big")
     mvhd += b"\x00\x01\x00\x00" + b"\x01\x00" + bytes(10) + (
@@ -473,7 +472,7 @@ def synth_mp4(
     stts = bytes(4) + (1).to_bytes(4, "big") + n_samples.to_bytes(4, "big") + (
         max(duration // max(n_samples, 1), 1)
     ).to_bytes(4, "big")
-    stsz = bytes(4) + sample_size.to_bytes(4, "big") + n_samples.to_bytes(4, "big")
+    stsz = bytes(4) + (16).to_bytes(4, "big") + n_samples.to_bytes(4, "big")
     stco = bytes(4) + (0).to_bytes(4, "big")
     stbl = box(b"stsd", stsd) + box(b"stts", stts) + box(b"stsz", stsz) + box(
         b"stco", stco
@@ -485,5 +484,5 @@ def synth_mp4(
     return (
         box(b"ftyp", b"isom" + (0).to_bytes(4, "big") + b"isomiso2")
         + box(b"moov", moov)
-        + box(b"mdat", b"\x00" * (sample_size * n_samples))
+        + box(b"mdat", b"\x00" * (16 * n_samples))
     )

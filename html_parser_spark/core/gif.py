@@ -243,7 +243,6 @@ def synth_gif(
     width: int,
     height: int,
     fill_rgb: tuple[int, int, int],
-    corner_white: bool = True,
     interlace: bool = False,
     frames: int = 1,
 ) -> bytes:
@@ -257,7 +256,7 @@ def synth_gif(
 
     def frame_pixels() -> bytes:
         idx = np.zeros((height, width), dtype=np.uint8)
-        if corner_white and width and height:
+        if width and height:
             idx[0, 0] = 1
         if interlace:
             h = height

@@ -209,11 +209,10 @@ def synth_png(
     width: int,
     height: int,
     fill_rgb: tuple[int, int, int],
-    corner_white: bool = True,
     rgba: bool = False,
 ) -> bytes:
     """A correct 8-bit truecolor PNG (RGB, or RGBA with opaque alpha):
-    constant fill, optionally one white pixel at (0, 0). Row y uses filter
+    constant fill, one white pixel at (0, 0). Row y uses filter
     type y % 5, so a round-trip exercises every unfilter path (incl. the
     Paeth corner cases). Deterministic bytes (fixed-level zlib)."""
     bpp = 4 if rgba else 3
@@ -221,7 +220,7 @@ def synth_png(
     img[:, :, :3] = fill_rgb
     if rgba:
         img[:, :, 3] = 255
-    if corner_white and width and height:
+    if width and height:
         img[0, 0, :3] = (255, 255, 255)
     flat = img.reshape(height, width * bpp)
     lines = []
@@ -287,16 +286,14 @@ def resize_nearest(img: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
     return img[ys][:, xs]
 
 
-def synth_bmp(
-    width: int, height: int, fill_rgb: tuple[int, int, int], corner_white: bool = True
-) -> bytes:
-    """A correct bottom-up 24-bit BMP: constant fill color, optionally one
-    white pixel at (0, 0) top-left (so decoders that flip rows or swap
+def synth_bmp(width: int, height: int, fill_rgb: tuple[int, int, int]) -> bytes:
+    """A correct bottom-up 24-bit BMP: constant fill color, one white
+    pixel at (0, 0) top-left (so decoders that flip rows or swap
     channels fail the tests loudly). Deterministic bytes."""
     stride = (width * 3 + 3) & ~3
     img = np.zeros((height, width, 3), dtype=np.uint8)
     img[:, :] = fill_rgb
-    if corner_white and width and height:
+    if width and height:
         img[0, 0] = (255, 255, 255)
     rows = np.zeros((height, stride), dtype=np.uint8)
     rows[:, : width * 3] = img[::-1, :, ::-1].reshape(height, width * 3)  # RGB->BGR, bottom-up

@@ -94,9 +94,7 @@ def encode_expr(word_col: str, merges, uid: int = 0) -> str:
     return expr
 
 
-def bpe_train(
-    docs: DataFrame, text_col: str = "text", n_merges: int = BPE_MERGES
-) -> tuple[list, DataFrame]:
+def bpe_train(docs: DataFrame, n_merges: int = BPE_MERGES) -> tuple[list, DataFrame]:
     """Train `n_merges` BPE merges on the corpus. Returns (merges, words):
     merges = [(left, right, pair_count), ...] in rank order; words = the
     distinct-word DataFrame (word, cnt, syms) where syms is the final
@@ -108,7 +106,7 @@ def bpe_train(
     words = cache.checkpoint(
         docs.select(
             F.explode(
-                F.expr(f"filter(split({text_col}, ' '), w -> w <> '')")
+                F.expr("filter(split(text, ' '), w -> w <> '')")
             ).alias("word")
         )
         .groupBy("word")
@@ -147,21 +145,21 @@ def bpe_train(
     return merges, words
 
 
-def bpe_encode_words(words: DataFrame, merges, word_col: str = "word") -> DataFrame:
+def bpe_encode_words(words: DataFrame, merges) -> DataFrame:
     """Attach the exact BPE segmentation (`syms`, `n_tokens`) to any word
     table — including out-of-vocabulary words, which the merge folds
     handle by construction. This is the encode-distinct-words-once
     building block for vocabularies too large to broadcast as one map."""
-    return words.withColumn("syms", F.expr(encode_expr(word_col, merges))).withColumn(
+    return words.withColumn("syms", F.expr(encode_expr("word", merges))).withColumn(
         "n_tokens", F.expr("cast(size(syms) as bigint)")
     )
 
 
-def bpe_vocab(docs: DataFrame, text_col: str = "text", n_merges: int = BPE_MERGES) -> DataFrame:
+def bpe_vocab(docs: DataFrame) -> DataFrame:
     """The learned merge table as a DataFrame: (rank, left, right, merged,
     pair_count) in rank order — the artifact a pipeline persists to encode
     future shards with the same vocabulary."""
-    merges, _words = bpe_train(docs, text_col, n_merges)
+    merges, _words = bpe_train(docs)
     spark = docs.sparkSession
     return spark.createDataFrame(
         [
@@ -174,7 +172,6 @@ def bpe_vocab(docs: DataFrame, text_col: str = "text", n_merges: int = BPE_MERGE
 
 def bpe_token_counts(
     docs: DataFrame,
-    text_col: str = "text",
     n_merges: int = BPE_MERGES,
     extra_cols: tuple = (),
 ) -> DataFrame:
@@ -185,7 +182,7 @@ def bpe_token_counts(
     the training side's distinct-word groupBy. Words outside the map (none
     when training corpus == counting corpus) fall back to the exact merge
     folds inside a lazily-evaluated CASE branch."""
-    merges, words = bpe_train(docs, text_col, n_merges)
+    merges, words = bpe_train(docs, n_merges)
     vmap = words.agg(
         F.map_from_entries(
             F.collect_list(F.struct("word", F.expr("cast(size(syms) as bigint)")))
@@ -194,7 +191,7 @@ def bpe_token_counts(
     enc_fallback = encode_expr("w0", merges, uid=1)
     return (
         docs.crossJoin(F.broadcast(vmap))
-        .withColumn("wlist", F.expr(f"filter(split({text_col}, ' '), w -> w <> '')"))
+        .withColumn("wlist", F.expr("filter(split(text, ' '), w -> w <> '')"))
         .select(
             "doc_id",
             *extra_cols,
@@ -210,9 +207,7 @@ def bpe_token_counts(
     )
 
 
-def bpe_token_counts_encoded(
-    docs: DataFrame, merges, text_col: str = "text"
-) -> DataFrame:
+def bpe_token_counts_encoded(docs: DataFrame, merges) -> DataFrame:
     """(doc_id, n_words, n_tokens) under a PRE-TRAINED merge list, computed
     by the exact merge-fold encode per word — a pure row-local projection,
     so it runs identically over a batch DataFrame and a streaming one (the
@@ -224,7 +219,7 @@ def bpe_token_counts_encoded(
     enc = encode_expr("w0", merges, uid=1)
     return (
         docs.withColumn(
-            "wlist", F.expr(f"filter(split({text_col}, ' '), w -> w <> '')")
+            "wlist", F.expr("filter(split(text, ' '), w -> w <> '')")
         )
         .select(
             "doc_id",

@@ -48,13 +48,13 @@ SQDIST = (
 )
 
 
-def quantized_vectors(embs: DataFrame, col: str = "embedding") -> DataFrame:
+def quantized_vectors(embs: DataFrame) -> DataFrame:
     """(vec_id, codes array<double>) with integer-valued coordinates
     round(x * 1000) — the exactness foundation (module docstring #1)."""
     return embs.select(
         "vec_id",
         F.expr(
-            f"transform({col}, x -> round(cast(x as double) * {SCALE}d))"
+            f"transform(embedding, x -> round(cast(x as double) * {SCALE}d))"
         ).alias("codes"),
     )
 
@@ -137,11 +137,10 @@ def semantic_dedup(
     k: int = K_DEFAULT,
     n_iter: int = 2,
     dim: int = 64,
-    min_cos: float = SEM_MIN_COS,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
     web-scale through semantic deduplication"): k-means the embedding
-    corpus, compare pairs ONLY within a cluster, call cos >= min_cos a
+    corpus, compare pairs ONLY within a cluster, call cos >= SEM_MIN_COS a
     semantic duplicate, and within each duplicate pair KEEP the member
     farther from its centroid (the paper's low-centroid-similarity keep
     rule — it preserves the cluster's outskirts, dropping redundant
@@ -149,7 +148,7 @@ def semantic_dedup(
 
     Returns one row per input vector:
       (vec_id, cluster int, dist double, n_dups int, keep int)
-    n_dups = how many same-cluster vectors sit within min_cos of this one;
+    n_dups = how many same-cluster vectors sit within SEM_MIN_COS of this one;
     keep = 0 iff some duplicate pair elected this vector its loser.
 
     Every arithmetic step is engine-portable (quantized kmeans + left-fold
@@ -189,7 +188,7 @@ def semantic_dedup(
             F.col("b.dist").alias("db"),
             F.expr(f"{dot} / (sqrt(a.n2) * sqrt(b.n2))").alias("cos"),
         )
-        .where(F.col("cos") >= min_cos)
+        .where(F.col("cos") >= SEM_MIN_COS)
     )
     # per-vector duplicate stats: one explode of the (small) pair set —
     # loser = the near-centroid member (drop), ties drop the larger id

@@ -40,6 +40,7 @@ NEAR_OFFSET = 2_000_000  # doc_id offset for planted near copies (last word drop
 MINHASH_K = 8
 LSH_ROWS_PER_BAND = 2  # 4 bands of 2 rows
 JACCARD_THRESHOLD_PERMILLE = 600
+LSH_MAX_BUCKET = 10_000  # larger buckets are boilerplate, dropped
 
 
 def plant_dups(docs: DataFrame) -> DataFrame:
@@ -75,14 +76,14 @@ def exact_groups(corpus: DataFrame) -> DataFrame:
     )
 
 
-CHUNK_WORDS = 5
+CHUNK_WORDS = 5  # oracle SQL is written for this value
 
 
-def chunk_dedup(corpus: DataFrame, chunk_words: int = CHUNK_WORDS) -> DataFrame:
+def chunk_dedup(corpus: DataFrame) -> DataFrame:
     """Sub-document (line-level) corpus dedup, the C4/RefinedWeb move:
     drop every repetition of a text span that occurs anywhere earlier in
     the corpus and reassemble the surviving document text. This corpus has
-    no newlines, so a 'line' is a word-aligned run of ``chunk_words``
+    no newlines, so a 'line' is a word-aligned run of ``CHUNK_WORDS``
     consecutive words (last chunk ragged) — chunked by ONE greedy regex
     pass (`[a-z]+( [a-z]+){k}`) that both engines (Java regex / RE2)
     tokenize identically; no lambda touches a split array (the
@@ -101,8 +102,7 @@ def chunk_dedup(corpus: DataFrame, chunk_words: int = CHUNK_WORDS) -> DataFrame:
     O(copies log copies)."""
     from pyspark.sql import Window
 
-    assert chunk_words == 5, "oracle SQL is written for chunk_words=5"
-    pat = "[a-z]+( [a-z]+){0,%d}" % (chunk_words - 1)
+    pat = "[a-z]+( [a-z]+){0,%d}" % (CHUNK_WORDS - 1)
     chunks = corpus.select(
         "doc_id",
         F.expr(f"posexplode(regexp_extract_all(text, '{pat}', 0))").alias(
@@ -124,8 +124,8 @@ def chunk_dedup(corpus: DataFrame, chunk_words: int = CHUNK_WORDS) -> DataFrame:
     )
 
 
-def shingle_array_expr(n: int = 3) -> str:
-    """SQL expression: the distinct HASHED word n-gram shingle set of `text`
+def shingle_array_expr() -> str:
+    """SQL expression: the distinct HASHED word 3-gram shingle set of `text`
     as an array<bigint> — the narrow-projection building block shared by the
     exploded `shingles` table and the projection-only LSH path.
 
@@ -135,7 +135,6 @@ def shingle_array_expr(n: int = 3) -> str:
     shuffle + compare at 100 TB), at a vanishing collision rate (~1e-9 for
     1e5-shingle docs). The SQL oracle applies the identical hash, so results
     stay exactly comparable."""
-    assert n == 3, "oracle SQL is written for n=3"
     # zip_with over shifted slices, NOT transform(sequence, i -> w[i]):
     # indexing the split inside a lambda re-evaluates the split PER ELEMENT
     # (O(words^2) per doc — measured 10x slower); zip_with arguments are
@@ -156,11 +155,11 @@ def shingle_array_expr(n: int = 3) -> str:
     )
 
 
-def shingles(corpus: DataFrame, n: int = 3) -> DataFrame:
+def shingles(corpus: DataFrame) -> DataFrame:
     """(doc_id, source, g): distinct hashed shingles, one row per shingle —
     the exploded form used by the join-based Jaccard reference path."""
     return corpus.select(
-        "doc_id", "source", F.explode(F.expr(shingle_array_expr(n))).alias("g")
+        "doc_id", "source", F.explode(F.expr(shingle_array_expr())).alias("g")
     )
 
 
@@ -269,8 +268,6 @@ def _lsh_candidates(
     garr: DataFrame,
     ids: Column,
     pair_expr: str,
-    k: int,
-    rows_per_band: int,
     max_bucket: int,
     observation=None,
 ) -> DataFrame:
@@ -282,7 +279,7 @@ def _lsh_candidates(
     (boilerplate docs sharing a signature would expand quadratically) and
     counted by `observation` when one is given. Persisted: the pairs feed
     the candidate-array shrink and the verify join."""
-    keys = band_key_exprs("garr", k, rows_per_band)
+    keys = band_key_exprs("garr")
     cells = ", ".join(f"{band}, {key}" for band, key in enumerate(keys))
     buckets = (
         garr.select("*", F.expr(f"stack({len(keys)}, {cells}) as (band, key)"))
@@ -369,10 +366,8 @@ def _verify_candidates(
 
 def minhash_lsh_pairs(
     corpus: DataFrame,
-    k: int = MINHASH_K,
-    rows_per_band: int = LSH_ROWS_PER_BAND,
     threshold_permille: int = JACCARD_THRESHOLD_PERMILLE,
-    max_bucket: int = 10_000,
+    max_bucket: int = LSH_MAX_BUCKET,
     observation=None,
 ) -> DataFrame:
     """MinHash+LSH near-dup detection (the 100 TB scale path): banded bucket
@@ -421,8 +416,6 @@ def minhash_lsh_pairs(
         garr,
         F.array_sort(F.collect_list("doc_id")),
         pair_expr,
-        k,
-        rows_per_band,
         max_bucket,
         observation,
     )
@@ -516,20 +509,20 @@ def plant_embedding_dups(embs: DataFrame) -> DataFrame:
     )
 
 
-def sign_bucket_expr(col: str, bits: int = 16) -> str:
-    """Integer bucket from the sign pattern of the first `bits` dims."""
+def sign_bucket_expr(col: str) -> str:
+    """Integer bucket from the sign pattern of the first 16 dims."""
     return (
-        f"aggregate(sequence(0, {bits - 1}), 0L, "
+        "aggregate(sequence(0, 15), 0L, "
         f"(acc, d) -> acc + case when cast({col}[d] as double) > 0.0 "
         f"then shiftleft(1L, d) else 0L end)"
     )
 
 
-def embedding_dups(corpus: DataFrame, min_cos: float = 0.999) -> DataFrame:
+def embedding_dups(corpus: DataFrame) -> DataFrame:
     """Embedding-cosine near-dup pairs via sign-bit bucketing:
-    (vec_a, vec_b, cos). Buckets on the 16 leading sign bits (identical
-    vectors always collide), verifies cosine inside buckets — linear shuffle,
-    no quadratic cross join. Cosine is a deterministic left-fold (bit-equal
+    (vec_a, vec_b, cos >= 0.999). Buckets on the 16 leading sign bits
+    (identical vectors always collide), verifies cosine inside buckets —
+    linear shuffle, no quadratic cross join. Cosine is a deterministic left-fold (bit-equal
     across engines)."""
     bucketed = corpus.withColumn("bucket", F.expr(sign_bucket_expr("embedding")))
     a, b = bucketed.alias("a"), bucketed.alias("b")
@@ -547,7 +540,7 @@ def embedding_dups(corpus: DataFrame, min_cos: float = 0.999) -> DataFrame:
             F.col("b.vec_id").alias("vec_b"),
             F.expr(f"{dot} / (sqrt({na2}) * sqrt({nb2}))").alias("cos"),
         )
-        .where(F.col("cos") >= min_cos)
+        .where(F.col("cos") >= 0.999)
     )
 
 
@@ -603,12 +596,7 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_rounds: int = CC_MAX_ROUNDS,
-) -> DataFrame:
+def connected_components(pairs: DataFrame, max_rounds: int = CC_MAX_ROUNDS) -> DataFrame:
     """Duplicate-CLUSTER resolution — the transitive-closure step between
     "near-dup pairs" and "drop list". Near-dup detection emits pairs
     (A~B, B~C); keeping one survivor per group needs the connected
@@ -644,7 +632,7 @@ def connected_components(
     No reference analogue (the reference dedups nothing); public
     algorithm, built from scratch on the DataFrame API."""
     edges = cache.checkpoint(
-        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
+        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
         .where(F.col("u").isNotNull() & F.col("v").isNotNull())
         .where(F.col("u") != F.col("v"))
         .distinct()
@@ -677,14 +665,7 @@ def connected_components(
     )
 
 
-def fuzzy_join(
-    left: DataFrame,
-    right: DataFrame,
-    k: int = MINHASH_K,
-    rows_per_band: int = LSH_ROWS_PER_BAND,
-    threshold_permille: int = JACCARD_THRESHOLD_PERMILLE,
-    max_bucket: int = 10_000,
-) -> DataFrame:
+def fuzzy_join(left: DataFrame, right: DataFrame) -> DataFrame:
     """Near-duplicate JOIN between two corpora by text similarity — the
     cross-TABLE face of minhash_lsh_pairs (same banded machinery, same
     two-shuffle scale shape) for "which rows of B match rows of A"
@@ -718,9 +699,7 @@ def fuzzy_join(
         garr,
         F.collect_list(F.struct("side", "doc_id")),
         pair_expr,
-        k,
-        rows_per_band,
-        max_bucket,
+        LSH_MAX_BUCKET,
     )
     return _verify_candidates(
         candidates,
@@ -728,7 +707,7 @@ def fuzzy_join(
         "right_id",
         garr.where("side = 0"),
         garr.where("side = 1"),
-        threshold_permille,
+        JACCARD_THRESHOLD_PERMILLE,
     )
 
 
@@ -739,9 +718,9 @@ def fuzzy_join(
 REP_SPAN_N = 10  # words per n-gram; oracle SQL is written for this value
 
 
-def ngram_string_array_expr(n: int = REP_SPAN_N) -> str:
-    """SQL expression: the word ``n``-gram STRINGS of `text`, position-
-    aligned — element ``i`` is ``words[i..i+n-1]`` joined by single spaces,
+def ngram_string_array_expr() -> str:
+    """SQL expression: the word REP_SPAN_N-gram STRINGS of `text`, position-
+    aligned — element ``i`` is ``words[i..i+9]`` joined by single spaces,
     so the array index IS the word offset of the gram (the property the
     span-merge step needs).
 
@@ -752,7 +731,6 @@ def ngram_string_array_expr(n: int = REP_SPAN_N) -> str:
     shingle_array_expr). Out-of-range zip positions pad null and null
     propagates through concat, so trailing invalid windows filter away and
     the surviving prefix stays position-aligned."""
-    assert n == 10, "oracle SQL is written for n=10"
     w = "split(text, ' ')"
 
     def merge(a: str, b: str, off: int) -> str:
@@ -769,16 +747,17 @@ def ngram_string_array_expr(n: int = REP_SPAN_N) -> str:
     return f"filter({s10}, s -> s is not null)"
 
 
-def repeated_spans(corpus: DataFrame, n: int = REP_SPAN_N) -> DataFrame:
+def repeated_spans(corpus: DataFrame) -> DataFrame:
     """Cross-document repeated n-gram SPAN mining — the sub-document
     exact-substring dedup of Lee et al., "Deduplicating Training Data Makes
     Language Models Better" (arXiv:2107.06499), re-expressed for Spark:
     instead of a suffix array (sequential, memory-bound), every word
-    ``n``-gram occurrence is counted corpus-wide, and per document the
-    positions whose gram occurs >= 2 times anywhere are merged into maximal
-    spans (positions p, q merge while q - p <= n, i.e. their windows overlap
-    or touch). A downstream cleaner can cut exactly these spans, which is
-    the paper's remove-every-duplicated-50-gram rule at n words.
+    ``REP_SPAN_N``-gram occurrence is counted corpus-wide, and per document
+    the positions whose gram occurs >= 2 times anywhere are merged into
+    maximal spans (positions p, q merge while q - p <= REP_SPAN_N, i.e.
+    their windows overlap or touch). A downstream cleaner can cut exactly
+    these spans, which is the paper's remove-every-duplicated-50-gram rule
+    at REP_SPAN_N words.
 
     Output, one row per maximal repeated span:
       (doc_id, span_seq, span_start, span_end, span_words, n_rep_grams)
@@ -805,7 +784,7 @@ def repeated_spans(corpus: DataFrame, n: int = REP_SPAN_N) -> DataFrame:
 
     occ = corpus.select(
         "doc_id",
-        F.posexplode(F.expr(ngram_string_array_expr(n))).alias("pos", "gram"),
+        F.posexplode(F.expr(ngram_string_array_expr())).alias("pos", "gram"),
     ).select(
         "doc_id",
         "pos",
@@ -816,7 +795,7 @@ def repeated_spans(corpus: DataFrame, n: int = REP_SPAN_N) -> DataFrame:
     ).where("n_occ >= 2")
     w = Window.partitionBy("doc_id").orderBy("pos")
     prev = F.lag("pos").over(w)
-    brk = F.when(prev.isNull() | (F.col("pos") - prev > n), 1).otherwise(0)
+    brk = F.when(prev.isNull() | (F.col("pos") - prev > REP_SPAN_N), 1).otherwise(0)
     isl = rep.withColumn(
         "span_seq",
         F.sum(brk).over(w.rowsBetween(Window.unboundedPreceding, 0)).cast("int"),
@@ -825,8 +804,8 @@ def repeated_spans(corpus: DataFrame, n: int = REP_SPAN_N) -> DataFrame:
         isl.groupBy("doc_id", "span_seq")
         .agg(
             F.min("pos").alias("span_start"),
-            (F.max("pos") + F.lit(n - 1)).alias("span_end"),
-            (F.max("pos") - F.min("pos") + F.lit(n)).alias("span_words"),
+            (F.max("pos") + F.lit(REP_SPAN_N - 1)).alias("span_end"),
+            (F.max("pos") - F.min("pos") + F.lit(REP_SPAN_N)).alias("span_words"),
             F.count("*").alias("n_rep_grams"),
         )
         .select(

@@ -32,19 +32,19 @@ from .. import cache
 
 PR_SCALE = 1_000_000
 PR_DAMPING_PERMILLE = 850
+HITS_ROUNDS = 2
 
 
 def pagerank(
     nodes: DataFrame,
     edges: DataFrame,
     n_iter: int = 3,
-    damping_permille: int = PR_DAMPING_PERMILLE,
 ) -> DataFrame:
     """nodes: (node bigint); edges: (src, dst), src never null. Returns
     (node, pr_micro bigint, in_deg int) after `n_iter` exact integer
     rounds. Dangling mass is dropped (nodes with no out-edges contribute
     nothing), matching the simple formulation the oracle mirrors."""
-    base = (1000 - damping_permille) * (PR_SCALE // 1000)
+    base = (1000 - PR_DAMPING_PERMILLE) * (PR_SCALE // 1000)
     deg = edges.groupBy("src").agg(
         F.expr("cast(count(*) as bigint)").alias("out_deg")
     )
@@ -65,7 +65,7 @@ def pagerank(
         ).select(
             "node",
             F.expr(
-                f"cast({base} + ({damping_permille} * coalesce(s, 0)) "
+                f"cast({base} + ({PR_DAMPING_PERMILLE} * coalesce(s, 0)) "
                 "div 1000 as bigint)"
             ).alias("pr_micro"),
         )
@@ -77,18 +77,14 @@ def pagerank(
     )
 
 
-def hits(
-    nodes: DataFrame,
-    edges: DataFrame,
-    n_iter: int = 2,
-) -> DataFrame:
+def hits(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """Fixed-round HITS (Kleinberg hubs & authorities) — the second classic
     link-analysis score a web pipeline wants next to PageRank (PageRank
     ranks endorsement mass; HITS separates directories/link-hubs from
     endorsed content, a useful crawl-prioritization and quality signal).
 
     nodes: (node bigint); edges: (src, dst). Returns (node, auth_micro
-    bigint, hub_micro bigint) after `n_iter` exact integer rounds.
+    bigint, hub_micro bigint) after HITS_ROUNDS exact integer rounds.
 
     Exactness: the textbook L2 normalization needs sqrt (not cross-engine
     exact), so each half-round normalizes by the L-infinity norm instead —
@@ -113,7 +109,7 @@ def hits(
         "node", F.lit(PR_SCALE).cast("bigint").alias("hub_micro")
     )
     auth = None
-    for _ in range(n_iter):
+    for _ in range(HITS_ROUNDS):
         a_raw = (
             edges.join(hub, edges["src"] == hub["node"])
             .select("dst", "hub_micro")

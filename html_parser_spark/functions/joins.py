@@ -47,13 +47,11 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     on: str,
-    ts: str = "ts",
     right_cols: Optional[Sequence[str]] = None,
-    prefix: str = "asof_",
     tolerance_secs: Optional[int] = None,
 ) -> DataFrame:
-    """Backward as-of join: every `left` row gains `prefix`-named copies of
-    `right_cols` (plus `prefix+ts`) from the latest right row with
+    """Backward as-of join: every `left` row gains `asof_`-named copies of
+    `right_cols` (plus `asof_ts`) from the latest right row with
     right.ts <= left.ts and the same `on` key; null when no such row (or
     when it is older than `tolerance_secs`, if given).
 
@@ -63,22 +61,22 @@ def asof_join(
     should pre-dedup; the gate data has none (checked at every sf).
     """
     if right_cols is None:
-        right_cols = [c for c in right.columns if c not in (on, ts)]
-    out_cols = {c: prefix + c for c in right_cols}
-    out_cols[ts] = prefix + ts
+        right_cols = [c for c in right.columns if c not in (on, "ts")]
+    out_cols = {c: "asof_" + c for c in right_cols}
+    out_cols["ts"] = "asof_ts"
 
     l_tagged = left.withColumn("_asof_side", F.lit(1))
     r_tagged = right.select(
         F.col(on),
-        F.col(ts).alias(prefix + ts),
-        *[F.col(c).alias(prefix + c) for c in right_cols],
+        F.col("ts").alias("asof_ts"),
+        *[F.col(c).alias("asof_" + c) for c in right_cols],
         F.lit(0).alias("_asof_side"),
     )
     u = l_tagged.unionByName(r_tagged, allowMissingColumns=True)
 
     # right(0) before left(1) at equal ts => ties match; the ts ordering
     # key is coalesce(left ts, right ts) so both sides sort on one column
-    order_ts = F.coalesce(F.col(ts), F.col(prefix + ts))
+    order_ts = F.coalesce(F.col("ts"), F.col("asof_ts"))
     w = (
         Window.partitionBy(on)
         .orderBy(order_ts, F.col("_asof_side"))
@@ -89,7 +87,7 @@ def asof_join(
 
     res = u.where(F.col("_asof_side") == 1).drop("_asof_side")
     if tolerance_secs is not None:
-        age = F.unix_micros(F.col(ts)) - F.unix_micros(F.col(prefix + ts))
+        age = F.unix_micros(F.col("ts")) - F.unix_micros(F.col("asof_ts"))
         stale = age > F.lit(tolerance_secs * US_PER_SEC)
         for out in out_cols.values():
             res = res.withColumn(
@@ -103,7 +101,6 @@ def range_join_count(
     right: DataFrame,
     on: str,
     window_secs: int,
-    ts: str = "ts",
     count_alias: str = "n_in_range",
 ) -> DataFrame:
     """For every `left` row, the number of `right` rows with the same `on`
@@ -119,14 +116,14 @@ def range_join_count(
     re-group keys on a per-row id, not the column values).
     """
     w_us = window_secs * US_PER_SEC
-    l_us = F.unix_micros(F.col(ts))
+    l_us = F.unix_micros(F.col("ts"))
     # per-row identity: grouping on the left columns alone would collapse
     # fully duplicate left rows into one row with a doubled count
     lb = left.withColumn("_lrow", F.monotonically_increasing_id()).withColumn(
         "_band", F.floor(l_us / F.lit(w_us))
     )
 
-    r_us = F.unix_micros(F.col(ts))
+    r_us = F.unix_micros(F.col("ts"))
     rb = (
         right.select(
             F.col(on),
@@ -139,7 +136,7 @@ def range_join_count(
         .drop("_b0")
     )
 
-    dt = F.unix_micros(F.col(ts)) - F.col("_r_us")
+    dt = F.unix_micros(F.col("ts")) - F.col("_r_us")
     joined = lb.join(rb, on=[on, "_band"], how="left").withColumn(
         "_hit",
         F.when((dt >= 0) & (dt <= F.lit(w_us)), F.lit(1)).otherwise(F.lit(0)),

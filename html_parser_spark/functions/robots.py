@@ -99,9 +99,7 @@ def synth_robots(hosts: DataFrame, host_col: str = "host") -> DataFrame:
     )
 
 
-def robots_decisions(
-    urls: DataFrame, robots: DataFrame, url_col: str = "url"
-) -> DataFrame:
+def robots_decisions(urls: DataFrame, robots: DataFrame) -> DataFrame:
     """Per URL: (doc_id, url, host_canon, cpath, matched_path,
     allowed int, crawl_delay int?). The decision joins the BROADCAST
     per-host rule arrays and evaluates RFC 9309 longest-match row-locally:
@@ -111,13 +109,13 @@ def robots_decisions(
     default to allowed when nothing matches. Zero URL-side shuffles."""
     from .url import canonicalize_urls
 
-    path0 = f"regexp_extract({url_col}, '^[a-zA-Z]+://[^/?#]*([^?#]*)', 1)"
+    path0 = "regexp_extract(url, '^[a-zA-Z]+://[^/?#]*([^?#]*)', 1)"
     cpath = (
         f"if({path0} in ('', '/'), '/', "
         f"if(endswith({path0}, '/'), substring({path0}, 1, "
         f"length({path0}) - 1), {path0}))"
     )
-    with_host = canonicalize_urls(urls, url_col).withColumn(
+    with_host = canonicalize_urls(urls).withColumn(
         "cpath", F.expr(cpath)
     )
     joined = with_host.join(
@@ -130,7 +128,7 @@ def robots_decisions(
     )
     return joined.select(
         "doc_id",
-        F.col(url_col).alias("url"),
+        "url",
         "host_canon",
         "cpath",
         F.expr(f"{best}.path").alias("matched_path"),

@@ -26,19 +26,18 @@ from pyspark.sql import functions as F
 from .text import WORD_HASH
 
 
-def keep_bucket_expr(id_col: str = "doc_id") -> str:
-    """The 0..999 sampling bucket of a row (md5-derived, engine-portable)."""
-    h = WORD_HASH.format(w=f"cast({id_col} as string)")
+def keep_bucket_expr() -> str:
+    """The 0..999 sampling bucket of a row's doc_id (md5-derived,
+    engine-portable)."""
+    h = WORD_HASH.format(w="cast(doc_id as string)")
     return f"pmod({h}, 1000)"
 
 
-def stratified_sample(
-    df: DataFrame, permille_expr: str, id_col: str = "doc_id"
-) -> DataFrame:
+def stratified_sample(df: DataFrame, permille_expr: str) -> DataFrame:
     """Keep each row iff its hash bucket < `permille_expr` (any SQL
     expression over the row, e.g. a CASE over `source` or a map lookup —
     0 drops the stratum, 1000 keeps all of it)."""
-    return df.where(F.expr(f"{keep_bucket_expr(id_col)} < ({permille_expr})"))
+    return df.where(F.expr(f"{keep_bucket_expr()} < ({permille_expr})"))
 
 
 # ---------------------------------------------------------------------------
@@ -52,9 +51,6 @@ def corpus_mix(
     docs: DataFrame,
     weights: dict[str, int],
     token_budget: int,
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    text_col: str = "text",
 ) -> DataFrame:
     """Deterministic token-budget corpus mixing — the data-recipe step of a
     pretraining pipeline: give each source a target share of the token
@@ -83,28 +79,28 @@ def corpus_mix(
     wsum = sum(weights.values())
     wdf = spark.createDataFrame(
         [(s, int(w)) for s, w in weights.items()],
-        f"{source_col} string, w bigint",
+        "source string, w bigint",
     )
     toks = docs.select(
-        id_col,
-        source_col,
-        F.expr(f"cast(size(split({text_col}, ' ')) as bigint)").alias("n_tokens"),
+        "doc_id",
+        "source",
+        F.expr("cast(size(split(text, ' ')) as bigint)").alias("n_tokens"),
     )
-    totals = toks.groupBy(source_col).agg(F.sum("n_tokens").alias("total_tokens"))
+    totals = toks.groupBy("source").agg(F.sum("n_tokens").alias("total_tokens"))
     rates = (
-        totals.join(wdf, source_col)
+        totals.join(wdf, "source")
         .where(F.col("total_tokens") > 0)
         .select(
-            source_col,
+            "source",
             F.expr(
                 f"(cast({int(token_budget)} as bigint) * w * {MIX_UNIT}) "
                 f"div (cast({int(wsum)} as bigint) * total_tokens)"
             ).alias("rate_ppm"),
         )
     )
-    bucket = WORD_HASH.format(w=f"cast({id_col} as string) || ':' || {source_col}")
+    bucket = WORD_HASH.format(w="cast(doc_id as string) || ':' || source")
     return (
-        toks.join(F.broadcast(rates), source_col)
+        toks.join(F.broadcast(rates), "source")
         .withColumn(
             "n_copies",
             F.expr(
@@ -114,8 +110,8 @@ def corpus_mix(
         )
         .where(F.col("n_copies") >= 1)
         .select(
-            id_col,
-            source_col,
+            "doc_id",
+            "source",
             F.explode(F.expr("sequence(cast(1 as bigint), n_copies)")).alias(
                 "copy_idx"
             ),
@@ -131,31 +127,27 @@ def corpus_mix(
 
 IMP_UNIT = 1_000_000  # bucket weights carried in integer millionths
 IMP_CLAMP = 1_000_000_000_000  # overflow guard: w <= 1e12 keeps doc sums in int64
+N_BUCKETS = 256  # hashed-bigram buckets
 
 
-def _bigram_buckets(text_col: str, n_buckets: int) -> str:
-    """SQL expr: the hashed-bigram bucket array of a text column.
+def _bigram_buckets() -> str:
+    """SQL expr: the hashed-bigram bucket array of `text`.
     zip_with over two slices, NOT transform-with-indexing (the CLAUDE.md
     O(n^2) re-evaluation trap); empty words from repeated spaces dropped."""
-    ws = f"filter(split({text_col}, ' '), x -> x != '')"
+    ws = "filter(split(text, ' '), x -> x != '')"
     grams = (
         f"case when size({ws}) < 2 then array() else "
         f"zip_with(slice({ws}, 1, size({ws}) - 1), "
         f"slice({ws}, 2, size({ws}) - 1), (a, b) -> concat(a, ' ', b)) end"
     )
     h = WORD_HASH.format(w="g")
-    return f"transform({grams}, g -> cast(pmod({h}, {n_buckets}) as int))"
+    return f"transform({grams}, g -> cast(pmod({h}, {N_BUCKETS}) as int))"
 
 
-def importance_weights(
-    docs: DataFrame,
-    target_expr: str,
-    n_buckets: int = 256,
-    text_col: str = "text",
-) -> DataFrame:
+def importance_weights(docs: DataFrame, target_expr: str) -> DataFrame:
     """Per-bucket importance weights in the DSIR shape (Xie et al. 2023,
     "Data Selection for Language Models via Importance Resampling"):
-    hash every word bigram into `n_buckets` buckets, count OCCURRENCES on
+    hash every word bigram into N_BUCKETS buckets, count OCCURRENCES on
     the target side (`target_expr` rows) and the raw side (the rest), and
     weight each bucket by the Laplace-smoothed count ratio in integer
     micro units:
@@ -170,15 +162,15 @@ def importance_weights(
     zero-raw-count blowup so a 1e5-gram doc sum stays far inside int64.
 
     Output: (bucket int, c_target bigint, c_raw bigint, w bigint),
-    <= n_buckets rows.
+    <= N_BUCKETS rows.
 
     Scale shape: ONE map-side-combinable shuffle — explode collapses to
-    <= n_buckets cells per task before the exchange; both sides counted
+    <= N_BUCKETS cells per task before the exchange; both sides counted
     in the same aggregation (no second corpus pass, no join)."""
     return (
         docs.selectExpr(
             f"case when ({target_expr}) then 1 else 0 end as is_target",
-            f"explode({_bigram_buckets(text_col, n_buckets)}) as bucket",
+            f"explode({_bigram_buckets()}) as bucket",
         )
         .groupBy("bucket")
         .agg(
@@ -198,13 +190,10 @@ def importance_weights(
 def importance_score(
     docs: DataFrame,
     weights: DataFrame,
-    n_buckets: int = 256,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     keep_cols: tuple = ("source",),
 ) -> DataFrame:
     """Per-doc importance score: the sum of bucket weights over the doc's
-    bigram occurrences. The <= n_buckets weights collapse into ONE
+    bigram occurrences. The <= N_BUCKETS weights collapse into ONE
     broadcast map row and the sum is a ROW-LOCAL `aggregate` fold — the
     corpus never shuffles (the bloom-probe shape from functions/sketch).
     A bucket absent from the weight table scores the neutral
@@ -216,13 +205,13 @@ def importance_score(
         F.expr("map_from_entries(collect_list(struct(bucket, w))) as _wm")
     )
     score = (
-        f"aggregate({_bigram_buckets(text_col, n_buckets)}, "
+        f"aggregate({_bigram_buckets()}, "
         f"cast(0 as bigint), (acc, b) -> acc + "
         f"coalesce(_wm[b], cast({IMP_UNIT} as bigint)))"
     )
-    n_grams = f"size({_bigram_buckets(text_col, n_buckets)})"
+    n_grams = f"size({_bigram_buckets()})"
     return docs.crossJoin(F.broadcast(wmap)).selectExpr(
-        id_col,
+        "doc_id",
         *keep_cols,
         f"cast({n_grams} as int) as n_grams",
         f"cast({score} as bigint) as score",
@@ -233,28 +222,21 @@ def importance_resample(
     docs: DataFrame,
     target_expr: str,
     top_k: int,
-    n_buckets: int = 256,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    keep_cols: tuple = ("source",),
 ) -> DataFrame:
     """Deterministic DSIR-shaped selection: estimate bucket weights from
     `target_expr` vs the rest, score every doc, keep the `top_k` most
-    target-like docs (score DESC, `id_col` ASC tie-break — RNG-free, so
+    target-like docs (score DESC, doc_id ASC tie-break — RNG-free, so
     re-runs and the SQL oracle agree row-for-row; DSIR's gumbel-noise
     variant trades that determinism for diversity). The top-k is a
     TakeOrdered (no global sort materialization); the rank window runs
     over the k survivors only, never the corpus."""
-    scored = importance_score(
-        docs, importance_weights(docs, target_expr, n_buckets, text_col),
-        n_buckets, id_col, text_col, keep_cols,
-    )
+    scored = importance_score(docs, importance_weights(docs, target_expr))
     topk = scored.orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
+        F.col("score").desc(), F.col("doc_id").asc()
     ).limit(int(top_k))
     from pyspark.sql import Window
 
-    w = Window.orderBy(F.col("score").desc(), F.col(id_col).asc())
+    w = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
     return topk.withColumn("rank", F.row_number().over(w).cast("int"))
 
 
@@ -262,7 +244,6 @@ def chunk_windows(
     docs: DataFrame,
     window: int = 16,
     stride: int = 12,
-    text_col: str = "text",
 ) -> DataFrame:
     """Sliding-window document chunking — the context-window prep that
     long-document training runs use (stride < window gives overlap so no
@@ -273,7 +254,7 @@ def chunk_windows(
     exactly one chunk). Pure JVM transform-over-sequence + posexplode —
     the explode is the output, not an intermediate; no shuffle."""
     assert 0 < stride <= window
-    w = f"split({text_col}, ' ')"
+    w = "split(text, ' ')"
     n_chunks = (
         f"1 + greatest(div(size({w}) - {window} + {stride} - 1, {stride}), 0)"
     )

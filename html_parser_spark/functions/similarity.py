@@ -27,6 +27,8 @@ from pyspark.sql import functions as F
 
 N_PLANES = 6  # 64 buckets: ~sqrt(corpus) occupancy at the test SFs
 DIM = 64
+N_QUERIES = 10  # queries = vec_id < N_QUERIES
+TOP_K = 5
 
 _DOT = (
     "aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)), "
@@ -46,14 +48,14 @@ def cosine_expr(a: str, b: str) -> str:
 
 
 @lru_cache(maxsize=None)
-def hyperplanes(n_planes: int = N_PLANES, dim: int = DIM) -> tuple[tuple[float, ...], ...]:
+def hyperplanes() -> tuple[tuple[float, ...], ...]:
     """Deterministic pseudo-random hyperplanes: component (j, d) =
     ((md5("j_d") first-32-bits) mod 2001 - 1000) / 1000 — exact thousandths,
     so the decimal literals parse to identical doubles in every engine."""
     planes = []
-    for j in range(n_planes):
+    for j in range(N_PLANES):
         row = []
-        for d in range(dim):
+        for d in range(DIM):
             h = int(hashlib.md5(f"{j}_{d}".encode()).hexdigest()[:8], 16)
             row.append((h % 2001 - 1000) / 1000.0)
         planes.append(tuple(row))
@@ -64,10 +66,10 @@ def plane_sql_literal(plane: tuple[float, ...]) -> str:
     return "array(" + ", ".join(f"cast({v!r} as double)" for v in plane) + ")"
 
 
-def lsh_bucket_expr(col: str, n_planes: int = N_PLANES, dim: int = DIM) -> str:
+def lsh_bucket_expr(col: str) -> str:
     """Bucket id = sum_j (dot(v, plane_j) > 0) << j, as a single expression."""
     terms = []
-    for j, plane in enumerate(hyperplanes(n_planes, dim)):
+    for j, plane in enumerate(hyperplanes()):
         dot = _DOT.format(a=col, b=plane_sql_literal(plane))
         terms.append(f"(case when {dot} > cast(0.0 as double) then {1 << j}L else 0L end)")
     return " + ".join(terms)
@@ -82,12 +84,12 @@ def _ranked_topk(pairs: DataFrame, k: int) -> DataFrame:
     )
 
 
-def brute_force_topk(embs: DataFrame, n_queries: int = 10, k: int = 5) -> DataFrame:
+def brute_force_topk(embs: DataFrame) -> DataFrame:
     """Exact top-k: (query_id, neighbor_id, rank, cos). Queries = vec_id <
-    n_queries; ties broken by neighbor_id. The query side is broadcast —
+    N_QUERIES; ties broken by neighbor_id. The query side is broadcast —
     the corpus is scanned once, no shuffle of the big side before the window."""
     q = F.broadcast(
-        embs.where(F.col("vec_id") < n_queries).select(
+        embs.where(F.col("vec_id") < N_QUERIES).select(
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
         )
     )
@@ -99,20 +101,20 @@ def brute_force_topk(embs: DataFrame, n_queries: int = 10, k: int = 5) -> DataFr
             F.expr(cosine_expr("q_emb", "embedding")).alias("cos"),
         )
     )
-    return _ranked_topk(pairs, k)
+    return _ranked_topk(pairs, TOP_K)
 
 
 N_IVF_CELLS = 16
 
 
-def ivf_assign(embs: DataFrame, n_cells: int = N_IVF_CELLS) -> DataFrame:
+def ivf_assign(embs: DataFrame) -> DataFrame:
     """IVF coarse quantization with deterministic centroids: the first
-    n_cells vectors (vec_id < n_cells) act as centroids (a k-means seeding
+    N_IVF_CELLS vectors (vec_id < N_IVF_CELLS) act as centroids (a k-means seeding
     step stands in for trained centroids — deterministic and oracle-exact);
     every vector is assigned to its max-cosine centroid (ties -> lowest
     centroid id). Adds a `cell` column."""
     cents = F.broadcast(
-        embs.where(F.col("vec_id") < n_cells).select(
+        embs.where(F.col("vec_id") < N_IVF_CELLS).select(
             F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_emb")
         )
     )
@@ -131,15 +133,13 @@ def ivf_assign(embs: DataFrame, n_cells: int = N_IVF_CELLS) -> DataFrame:
     )
 
 
-def ivf_topk(
-    embs: DataFrame, n_queries: int = 10, k: int = 5, n_cells: int = N_IVF_CELLS
-) -> DataFrame:
+def ivf_topk(embs: DataFrame) -> DataFrame:
     """IVF ANN top-k: search only the query's cell (nprobe=1). The inverted
-    lists bound candidate count to ~corpus/n_cells per query — the
+    lists bound candidate count to ~corpus/N_IVF_CELLS per query — the
     clustered-index scale path next to the hyperplane-LSH one."""
-    assigned = ivf_assign(embs, n_cells)
+    assigned = ivf_assign(embs)
     q = F.broadcast(
-        assigned.where(F.col("vec_id") < n_queries).select(
+        assigned.where(F.col("vec_id") < N_QUERIES).select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("q_emb"),
             F.col("cell").alias("q_cell"),
@@ -152,15 +152,15 @@ def ivf_topk(
         F.col("vec_id").alias("neighbor_id"),
         F.expr(cosine_expr("q_emb", "embedding")).alias("cos"),
     )
-    return _ranked_topk(pairs, k)
+    return _ranked_topk(pairs, TOP_K)
 
 
-def hyperplane_lsh_topk(embs: DataFrame, n_queries: int = 10, k: int = 5) -> DataFrame:
+def hyperplane_lsh_topk(embs: DataFrame) -> DataFrame:
     """LSH-bucketed ANN top-k, same output shape as brute_force_topk but
     searching only the query's hyperplane bucket (recall < 1 by design)."""
     bucketed = embs.withColumn("bucket", F.expr(lsh_bucket_expr("embedding")))
     q = F.broadcast(
-        bucketed.where(F.col("vec_id") < n_queries).select(
+        bucketed.where(F.col("vec_id") < N_QUERIES).select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("q_emb"),
             F.col("bucket").alias("q_bucket"),
@@ -177,7 +177,7 @@ def hyperplane_lsh_topk(embs: DataFrame, n_queries: int = 10, k: int = 5) -> Dat
             F.expr(cosine_expr("q_emb", "embedding")).alias("cos"),
         )
     )
-    return _ranked_topk(pairs, k)
+    return _ranked_topk(pairs, TOP_K)
 
 
 # ---------------------------------------------------------------------------
@@ -197,7 +197,7 @@ def maxabs_expr(col: str) -> str:
     )
 
 
-def quantize_int8(embs: DataFrame, col: str = "embedding") -> DataFrame:
+def quantize_int8(embs: DataFrame) -> DataFrame:
     """Symmetric per-vector int8 scalar quantization — the memory-scale
     path for vector search: codes take 8 bits/dim instead of 32, so a
     100 TB embedding corpus's index shrinks 4x (and the hot search loop
@@ -214,10 +214,10 @@ def quantize_int8(embs: DataFrame, col: str = "embedding") -> DataFrame:
     Output: (vec_id, codes array<bigint>, scale double, code_hash) —
     code_hash is a base-31 mod-p left fold over the codes so an oracle
     pins every element, not just aggregates."""
-    mx = maxabs_expr(col)
+    mx = maxabs_expr("embedding")
     codes = (
-        f"case when mx = cast(0.0 as double) then transform({col}, x -> 0L) "
-        f"else transform({col}, x -> cast(floor(cast(x as double) "
+        "case when mx = cast(0.0 as double) then transform(embedding, x -> 0L) "
+        "else transform(embedding, x -> cast(floor(cast(x as double) "
         f"* cast({INT8_MAX}.0 as double) / mx + cast(0.5 as double)) as bigint)) end"
     )
     return (
@@ -250,7 +250,9 @@ def quantized_cos_expr(a: str, b: str) -> str:
     )
 
 
-def quantized_topk(embs: DataFrame, n_queries: int = 10, k: int = 5) -> DataFrame:
+def quantized_topk(
+    embs: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K
+) -> DataFrame:
     """Top-k by SYMMETRIC quantized cosine (both sides int8): the scale
     path where the corpus index holds only codes — 4x less memory traffic
     than float32 and integer dot products in the hot loop; full-precision

@@ -169,14 +169,12 @@ def _cm_bucket(term: str, row: str, hex_chars: int) -> str:
     )
 
 
-def countmin_cells(
-    df: DataFrame, term_expr: str, d: int = CM_D, hex_chars: int = 1
-) -> DataFrame:
+def countmin_cells(df: DataFrame, term_expr: str, hex_chars: int = 1) -> DataFrame:
     """Build the sketch: (hrow int, bucket int, cnt bigint), one increment
     per input ROW (occurrence counting — pre-aggregate upstream for
-    distinct counting). d*16^hex_chars cells max."""
+    distinct counting). CM_D*16^hex_chars cells max."""
     buckets = (
-        f"transform(sequence(0, {d - 1}), "
+        f"transform(sequence(0, {CM_D - 1}), "
         f"i -> {_cm_bucket('_t', 'i', hex_chars)})"
     )
     return (
@@ -188,23 +186,19 @@ def countmin_cells(
 
 
 def countmin_estimate(
-    cells: DataFrame,
-    probes: DataFrame,
-    term_col: str = "term",
-    d: int = CM_D,
-    hex_chars: int = 1,
+    cells: DataFrame, probes: DataFrame, hex_chars: int = 1
 ) -> DataFrame:
-    """Estimate each probe term's count: min over the d cells it hashes
-    to. The tiny probe side fans out to d rows and joins the (broadcast)
-    sketch — the corpus is never touched again."""
+    """Estimate each probe `term`'s count: min over the CM_D cells it
+    hashes to. The tiny probe side fans out to CM_D rows and joins the
+    (broadcast) sketch — the corpus is never touched again."""
+    keep = [c for c in probes.columns if c != "term"]
     p = probes.selectExpr(
-        f"{term_col} as term",
-        *[c for c in probes.columns if c != term_col],
-        f"posexplode(transform(sequence(0, {d - 1}), "
-        f"i -> {_cm_bucket(term_col, 'i', hex_chars)})) as (hrow, bucket)",
+        "term",
+        *keep,
+        f"posexplode(transform(sequence(0, {CM_D - 1}), "
+        f"i -> {_cm_bucket('term', 'i', hex_chars)})) as (hrow, bucket)",
     )
     joined = p.join(F.broadcast(cells), on=["hrow", "bucket"], how="left")
-    keep = [c for c in probes.columns if c != term_col]
     return joined.groupBy("term", *keep).agg(
         F.expr("cast(min(coalesce(cnt, 0)) as bigint)").alias("est")
     )
@@ -292,13 +286,11 @@ def bloom_probe(df: DataFrame, key_col: str, bloom: DataFrame) -> DataFrame:
 
 HIST_BIN_CENTS = 100  # $1 bins
 HIST_N_BINS = 1024
+HIST_PERMILLE = (500, 900, 990)  # the hq{p}_cents columns
 
 
 def histogram_quantiles(
-    df: DataFrame,
-    cents_expr: str,
-    group_cols: Sequence[str],
-    permille: Sequence[int] = (500, 900, 990),
+    df: DataFrame, cents_expr: str, group_cols: Sequence[str]
 ) -> DataFrame:
     """Per-group histogram quantiles of an integer-cents expression.
     Output: group cols + n (bigint) + hq{p}_cents (bigint, the UPPER EDGE
@@ -325,7 +317,7 @@ def histogram_quantiles(
         F.sum("cnt").over(wg.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)),
     ).withColumn("n", F.sum("cnt").over(wg))
     aggs = [F.expr("cast(max(n) as bigint)").alias("n")]
-    for p in permille:
+    for p in HIST_PERMILLE:
         target = f"(({p} * n) + 999) div 1000"
         aggs.append(
             F.expr(

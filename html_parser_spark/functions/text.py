@@ -29,8 +29,8 @@ FP_MOD = 2147483647  # 2^31 - 1: acc*B + h < 2^51, no bigint overflow
 WORD_HASH = "cast(conv(substr(md5({w}),1,8),16,10) as bigint)"
 
 
-def with_words(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.withColumn("words", F.split(F.col(text_col), " "))
+def with_words(df: DataFrame) -> DataFrame:
+    return df.withColumn("words", F.split(F.col("text"), " "))
 
 
 def lang_id(docs: DataFrame) -> DataFrame:
@@ -383,19 +383,20 @@ def plant_pii(docs: DataFrame) -> DataFrame:
     )
 
 
-def pii_redact(docs: DataFrame, text_col: str = "text_pii") -> DataFrame:
-    """PII scrubbing over a text column, entirely JVM-side (regexp_replace
-    / regexp_extract_all inside whole-stage codegen — the 100 TB path is a
-    narrow projection with full pushdown): emails -> '<EMAIL>' first, then
-    4+ digit runs -> '<ID>' (ids are counted AFTER email removal so hex
-    digits inside a redacted local part are never double-counted).
+def pii_redact(docs: DataFrame) -> DataFrame:
+    """PII scrubbing over the `text_pii` column, entirely JVM-side
+    (regexp_replace / regexp_extract_all inside whole-stage codegen — the
+    100 TB path is a narrow projection with full pushdown): emails ->
+    '<EMAIL>' first, then 4+ digit runs -> '<ID>' (ids are counted AFTER
+    email removal so hex digits inside a redacted local part are never
+    double-counted).
 
     Returns (doc_id, n_emails, n_ids, text_clean)."""
-    t1 = f"regexp_replace({text_col}, '{PII_EMAIL_RE}', '<EMAIL>')"
+    t1 = f"regexp_replace(text_pii, '{PII_EMAIL_RE}', '<EMAIL>')"
     return docs.select(
         "doc_id",
         F.expr(
-            f"cast(size(regexp_extract_all({text_col}, '{PII_EMAIL_RE}', 0)) as int)"
+            f"cast(size(regexp_extract_all(text_pii, '{PII_EMAIL_RE}', 0)) as int)"
         ).alias("n_emails"),
         F.expr(
             f"cast(size(regexp_extract_all({t1}, '{PII_NUM_RE}', 0)) as int)"
@@ -595,25 +596,26 @@ def plant_cards(docs: DataFrame) -> DataFrame:
     )
 
 
-def card_redact(docs: DataFrame, text_col: str = "text_cards") -> DataFrame:
-    """Checksum-gated PII scrubbing: find 16-digit runs, validate each with
-    the Luhn checksum, and redact ONLY the valid ones to '<CARD>' — the
-    real-world card-redaction semantics (random digit runs must survive;
-    a blanket digit regex would mangle order ids, hashes, timestamps).
+def card_redact(docs: DataFrame) -> DataFrame:
+    """Checksum-gated PII scrubbing of `text_cards`: find 16-digit runs,
+    validate each with the Luhn checksum, and redact ONLY the valid ones
+    to '<CARD>' — the real-world card-redaction semantics (random digit
+    runs must survive; a blanket digit regex would mangle order ids,
+    hashes, timestamps).
 
     All JVM-side: regexp_extract_all proposes candidates, a transform
     validates, and an aggregate fold string-replaces each valid candidate
     — a narrow projection at 100 TB.
 
     Returns (doc_id, n_candidates, n_valid, text_clean)."""
-    cands = f"regexp_extract_all({text_col}, '(^|[^0-9])([0-9]{{16}})($|[^0-9])', 2)"
+    cands = f"regexp_extract_all(text_cards, '(^|[^0-9])([0-9]{{16}})($|[^0-9])', 2)"
     valid = f"filter({cands}, c -> ({luhn_sum_expr('c')}) % 10 = 0)"
     return docs.select(
         "doc_id",
         F.expr(f"cast(size({cands}) as int)").alias("n_candidates"),
         F.expr(f"cast(size({valid}) as int)").alias("n_valid"),
         F.expr(
-            f"aggregate({valid}, {text_col}, (t, c) -> replace(t, c, '<CARD>'))"
+            f"aggregate({valid}, text_cards, (t, c) -> replace(t, c, '<CARD>'))"
         ).alias("text_clean"),
     )
 
@@ -667,7 +669,7 @@ SCRIPT_RANGES = (
 MULTISCRIPT_CHARS = 30  # 24 letters + 6 spaces per doc
 
 
-def synth_multiscript(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def synth_multiscript(docs: DataFrame) -> DataFrame:
     """(doc_id, script_expected, utext): deterministic unicode text.
 
     Char i of doc d: space when i % 5 = 4, else codepoint
@@ -693,8 +695,7 @@ def synth_multiscript(docs: DataFrame, text_col: str = "text") -> DataFrame:
         docs.withColumn(
             "hx",
             F.expr(
-                f"concat(md5(concat({text_col}, 'uni0')), "
-                f"md5(concat({text_col}, 'uni1')))"
+                "concat(md5(concat(text, 'uni0')), md5(concat(text, 'uni1')))"
             ),
         )
         .select(
@@ -709,19 +710,19 @@ def synth_multiscript(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def script_profile(docs: DataFrame, text_col: str = "utext") -> DataFrame:
-    """Per-document writing-system profile of ANY string column:
-    (doc_id, <text_col>, n_chars, n_space, n_<script> x 8, n_other,
+def script_profile(docs: DataFrame) -> DataFrame:
+    """Per-document writing-system profile of the `utext` column:
+    (doc_id, utext, n_chars, n_space, n_<script> x 8, n_other,
     script_pred). Counts are per-codepoint-range (SCRIPT_RANGES);
     script_pred is the argmax with ties broken by block order (left fold
     over (cnt, name) structs, seeded at (0, 'none') so a doc with no
     letters at all predicts 'none' — the oracle mirrors the fold with
     list_reduce)."""
-    chars = f"filter(split({text_col}, ''), c -> c <> '')"
+    chars = "filter(split(utext, ''), c -> c <> '')"
     out = docs.withColumn("_cs", F.expr(chars)).select(
         "doc_id",
-        text_col,
-        F.expr(f"length({text_col})").alias("n_chars"),
+        "utext",
+        F.expr("length(utext)").alias("n_chars"),
         F.expr("cast(size(filter(_cs, c -> c = ' ')) as int)").alias("n_space"),
         *[
             F.expr(

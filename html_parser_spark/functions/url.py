@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def synth_urls(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def synth_urls(docs: DataFrame) -> DataFrame:
     """(doc_id, url): deterministic synthetic URL per document from the
     fresh byte stream u = md5(text||'url'):
       u0 scheme http/https; u1 host case SITE/site; u2 www. prefix;
@@ -66,7 +66,7 @@ def synth_urls(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
     frag = f"if({b[12]} % 2 = 0, concat('#s', {b[13]} % 4), '')"
     return docs.withColumn(
-        "hx", F.expr(f"md5(concat({text_col}, 'url'))")
+        "hx", F.expr("md5(concat(text, 'url'))")
     ).select(
         "doc_id",
         F.expr(
@@ -163,7 +163,7 @@ def anchor_stats(links: DataFrame) -> DataFrame:
     )
 
 
-def canonical_dedup(df: DataFrame, url_col: str = "url") -> DataFrame:
+def canonical_dedup(df: DataFrame) -> DataFrame:
     """(doc_id, url, host_canon, url_canon, n_same bigint, rep_doc_id):
     group size and canonical representative (min doc_id) per canonical
     URL — attached as window aggregates over the SAME partitioning, so
@@ -172,7 +172,7 @@ def canonical_dedup(df: DataFrame, url_col: str = "url") -> DataFrame:
 
     w = Window.partitionBy("url_canon")
     return (
-        canonicalize_urls(df, url_col)
+        canonicalize_urls(df)
         .withColumn("n_same", F.count("*").over(w))
         .withColumn("rep_doc_id", F.min("doc_id").over(w))
     )

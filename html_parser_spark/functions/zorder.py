@@ -18,21 +18,19 @@ global sort (one shuffle) writing one file per bucket.
 
 from __future__ import annotations
 
-from typing import Sequence
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 Z_BITS = 16
 
 
-def zorder_key_expr(a: str, b: str, bits: int = Z_BITS) -> str:
+def zorder_key_expr(a: str, b: str) -> str:
     """Morton key of two non-negative int expressions (each clamped to
-    bits wide): bit i of `a` lands at position 2i, of `b` at 2i+1."""
-    ac = f"least(cast({a} as bigint), {(1 << bits) - 1})"
-    bc = f"least(cast({b} as bigint), {(1 << bits) - 1})"
+    Z_BITS wide): bit i of `a` lands at position 2i, of `b` at 2i+1."""
+    ac = f"least(cast({a} as bigint), {(1 << Z_BITS) - 1})"
+    bc = f"least(cast({b} as bigint), {(1 << Z_BITS) - 1})"
     return (
-        f"aggregate(sequence(0, {bits - 1}), cast(0 as bigint), (acc, i) -> "
+        f"aggregate(sequence(0, {Z_BITS - 1}), cast(0 as bigint), (acc, i) -> "
         f"acc + shiftleft(shiftright({ac}, i) & 1, 2 * i) "
         f"+ shiftleft(shiftright({bc}, i) & 1, 2 * i + 1))"
     )
@@ -44,7 +42,6 @@ def zorder_bucket_stats(
     b: str,
     tiebreak: str,
     n_buckets: int = 16,
-    bits: int = Z_BITS,
 ) -> DataFrame:
     """Lay the table out in `n_buckets` equal slices of the Z-order sort
     and report each bucket's min/max on BOTH dimensions — the stats a
@@ -53,7 +50,7 @@ def zorder_bucket_stats(
     keyed = df.selectExpr(
         f"cast({a} as bigint) as _a",
         f"cast({b} as bigint) as _b",
-        f"{zorder_key_expr(a, b, bits)} as _zkey",
+        f"{zorder_key_expr(a, b)} as _zkey",
         f"cast({tiebreak} as bigint) as _tb",
     )
     w = Window.orderBy("_zkey", "_tb")

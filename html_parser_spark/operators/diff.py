@@ -107,22 +107,18 @@ def _diff_one(new_html: Optional[str], old_html: Optional[str]):
     return generate_iter(new_root), "ok", None, n_ins, n_del, attr_rows
 
 
-def diff_documents(
-    df_new: DataFrame,
-    df_old: DataFrame,
-    html_col: str = "html",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def diff_documents(df_new: DataFrame, df_old: DataFrame) -> DataFrame:
     """(doc_id, html) x2 -> (doc_id, diff_html, status, error, n_ins, n_del,
     attr_changes)."""
     from pyspark.sql import functions as F
 
     paired = df_new.select(
-        F.col(id_col).cast("string").alias("doc_id"), F.col(html_col).alias("new_html")
+        F.col("doc_id").cast("string").alias("doc_id"),
+        F.col("html").alias("new_html"),
     ).join(
         df_old.select(
-            F.col(id_col).cast("string").alias("doc_id"),
-            F.col(html_col).alias("old_html"),
+            F.col("doc_id").cast("string").alias("doc_id"),
+            F.col("html").alias("old_html"),
         ),
         "doc_id",
         "full_outer",

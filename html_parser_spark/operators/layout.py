@@ -16,19 +16,15 @@ Flow:
                        (page, block_order, block_kind, content) rows
     - image/audio/… -> passthrough rows (decode lives in operators/multimodal)
 
-`parse_layout` (ref-string form) remains for flows where only the reference
-is known and bytes live elsewhere; its default kernel is the deterministic
-md5-fake. When the bytes are in reach, parse_layout_payloads is the real
-path. At 100 TB the binary column rides the same Arrow batches as
-everything else — cap spark.sql.execution.arrow.maxBytesPerBatch for
-multi-MB documents (same mega-row guidance as the extraction kernel; a
-record count does not bound bytes).
+At 100 TB the binary column rides the same Arrow batches as everything
+else — cap spark.sql.execution.arrow.maxBytesPerBatch for multi-MB
+documents (same mega-row guidance as the extraction kernel; a record count
+does not bound bytes).
 """
 
 from __future__ import annotations
 
 import zlib
-from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -118,62 +114,15 @@ def attach_pdf(docs: DataFrame) -> DataFrame:
     )
 
 
-def parse_layout_payloads(
-    df: DataFrame,
-    payload_col: str = "payload",
-    ref_col: str = "media_ref",
-    id_col: str = "doc_id",
-    layout_parser: Callable[[bytes], list[tuple[int, int, str, str]]] = pdf_text_blocks,
-) -> DataFrame:
-    """REAL layout parse over (doc_id, media_ref, payload: binary) rows —
-    the default kernel is the pure-Python PDF text extractor
-    (core/pdf.pdf_text_blocks); swap `layout_parser=` for other formats.
+def parse_layout_payloads(df: DataFrame) -> DataFrame:
+    """REAL layout parse over (doc_id, media_ref, payload: binary) rows with
+    the pure-Python PDF text extractor (core/pdf.pdf_text_blocks).
     One mapInArrow crossing (map_rows): the bytes move in Arrow batches and
     become Python bytes once per batch; malformed payloads yield zero
     block rows (never fail the stage)."""
 
     def rows(doc_id, ref, p):
-        blocks = layout_parser(bytes(p) if p is not None else b"")
+        blocks = pdf_text_blocks(bytes(p) if p is not None else b"")
         return [(str(doc_id), ref) + tuple(b) for b in blocks]
 
-    return map_rows(
-        df.select(
-            F.col(id_col).alias("doc_id"),
-            F.col(ref_col).alias("media_ref"),
-            F.col(payload_col).alias("payload"),
-        ),
-        rows,
-        LAYOUT_SCHEMA,
-    )
-
-
-def fake_layout_parser(media_ref: str) -> list[tuple[int, int, str, str]]:
-    """Deterministic fake: blocks derived from the ref string (md5-seeded),
-    giving the pipeline a stable, testable shape."""
-    import hashlib
-
-    h = hashlib.md5(media_ref.encode("utf-8")).hexdigest()
-    n_pages = 1 + int(h[0], 16) % 3
-    out = []
-    order = 0
-    for page in range(n_pages):
-        for b in range(1 + int(h[1 + page], 16) % 2):
-            kind = "table" if int(h[4 + b], 16) % 4 == 0 else "text"
-            out.append((page, order, kind, f"block:{h[:8]}:{page}:{b}"))
-            order += 1
-    return out
-
-
-def parse_layout(
-    refs: DataFrame,
-    layout_parser: Callable[[str], list[tuple[int, int, str, str]]] = fake_layout_parser,
-) -> DataFrame:
-    """Ref-only layout parse (no payload bytes in reach): Arrow-batched over
-    (doc_id, media_ref) rows with a pluggable kernel (default: the
-    deterministic md5-fake). The REAL byte-level path is
-    parse_layout_payloads."""
-    return map_rows(
-        refs.select("doc_id", "media_ref"),
-        lambda doc_id, ref: [(doc_id, ref) + tuple(b) for b in layout_parser(ref)],
-        LAYOUT_SCHEMA,
-    )
+    return map_rows(df.select("doc_id", "media_ref", "payload"), rows, LAYOUT_SCHEMA)

@@ -46,8 +46,8 @@ MEDIA_META_SCHEMA = StructType(
         StructField("doc_id", StringType()),
         StructField("n_bytes", IntegerType()),
         StructField("magic", StringType()),  # first 4 bytes, lowercase hex
-        StructField("width", IntegerType()),  # fake-decoded: byte 0
-        StructField("height", IntegerType()),  # fake-decoded: byte 1
+        StructField("width", IntegerType()),  # stand-in: byte 0
+        StructField("height", IntegerType()),  # stand-in: byte 1
         StructField("checksum", LongType()),  # first 4 bytes as big-endian uint32
     ]
 )
@@ -72,16 +72,12 @@ def _attach(docs: DataFrame, payload_fn: Callable[[str], bytes]) -> DataFrame:
 
 
 def _decode(
-    df: DataFrame,
-    payload_col: str,
-    id_col: str,
-    rows_fn: Callable[[bytes], Iterable[tuple]],
-    schema: StructType,
+    df: DataFrame, rows_fn: Callable[[bytes], Iterable[tuple]], schema: StructType
 ) -> DataFrame:
-    """(id, payload) -> schema rows: rows_fn(bytes) yields each output row
-    after its leading doc_id; a null payload is read as b''."""
+    """(doc_id, payload) -> schema rows: rows_fn(bytes) yields each output
+    row after its leading doc_id; a null payload is read as b''."""
     return map_rows(
-        df.select(F.col(id_col).alias("doc_id"), F.col(payload_col).alias("payload")),
+        df.select("doc_id", "payload"),
         lambda doc_id, p: [
             (str(doc_id),) + row
             for row in rows_fn(bytes(p) if p is not None else b"")
@@ -95,42 +91,6 @@ def attach_payload(docs: DataFrame) -> DataFrame:
     return docs.select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.unhex(F.md5("text")).alias("payload"),
-    )
-
-
-def real_decoder(payload: bytes) -> dict:
-    """Real decode for formats a pure-Python kernel can honestly handle
-    (24-bit BMP, 8-bit truecolor PNG via core/image.py, GIF via
-    core/gif.py, baseline AND progressive JPEG via core/jpeg.py); a JPEG
-    variant beyond those (arithmetic coding, fractional sampling ratios)
-    raises the explicit stub error — decoding those requires a full codec
-    library. For the graceful (row-outcome) form of the same routing, use
-    image_features()."""
-    from ..core.gif import decode_gif
-    from ..core.image import decode_bmp, decode_png, sniff_format
-    from ..core.jpeg import decode_jpeg
-
-    fmt = sniff_format(payload)
-    if fmt == "jpeg":
-        img = decode_jpeg(payload)
-        if img is None:
-            raise NotImplementedError(
-                "JPEG variant beyond the implemented baseline/progressive "
-                "decoders (arithmetic coding, fractional sampling ratios, "
-                "or malformed) requires a codec library not present in "
-                "this environment"
-            )
-        h, w = img.shape[:2]
-        return {"format": fmt, "width": w, "height": h}
-    if fmt in ("bmp", "png", "gif"):
-        img = {"bmp": decode_bmp, "png": decode_png, "gif": decode_gif}[fmt](payload)
-        if img is None:
-            raise ValueError(f"malformed or unsupported {fmt} payload")
-        h, w = img.shape[:2]
-        return {"format": fmt, "width": w, "height": h}
-    raise NotImplementedError(
-        f"decoding {fmt!r} requires codec libraries not present in this "
-        "environment; wire a decoder via media_metadata(decoder=...)"
     )
 
 
@@ -244,9 +204,7 @@ GIF_FRAME_STATS_SCHEMA = StructType(
 )
 
 
-def gif_frame_stats(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
-) -> DataFrame:
+def gif_frame_stats(df: DataFrame) -> DataFrame:
     """Animation metadata over a GIF binary column (mapInArrow): frame
     count WITHOUT decompressing any pixel data (the sub-block walk skips
     payload by length bytes — the property that matters when only the
@@ -262,7 +220,7 @@ def gif_frame_stats(
             return [("decoded", nf, img.shape[1], img.shape[0])]
         return [("undecodable", 0, 0, 0)]
 
-    return _decode(df, payload_col, id_col, rows, GIF_FRAME_STATS_SCHEMA)
+    return _decode(df, rows, GIF_FRAME_STATS_SCHEMA)
 
 
 IMAGE_FEATURES_SCHEMA = StructType(
@@ -280,9 +238,7 @@ IMAGE_FEATURES_SCHEMA = StructType(
 )
 
 
-def image_features(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
-) -> DataFrame:
+def image_features(df: DataFrame) -> DataFrame:
     """REAL image decode over a binary column (mapInArrow): BMP, 8-bit
     truecolor PNG, GIF, and baseline JPEG decode to dimensions +
     per-channel pixel sums over RGB (integer-exact — the oracle-able
@@ -309,12 +265,7 @@ def image_features(
             return [(fmt, "codec_unavailable", 0, 0, 0, 0, 0, 0)]
         return [(fmt, "undecodable", 0, 0, 0, 0, 0, 0)]
 
-    return _decode(df, payload_col, id_col, rows, IMAGE_FEATURES_SCHEMA)
-
-
-def fake_decoder(payload: bytes) -> dict:
-    """Deterministic fake decode: dimensions from the leading bytes."""
-    return {"width": payload[0] if payload else 0, "height": payload[1] if len(payload) > 1 else 0}
+    return _decode(df, rows, IMAGE_FEATURES_SCHEMA)
 
 
 AUDIO_FEATURES_SCHEMA = StructType(
@@ -350,9 +301,7 @@ def attach_wav(docs: DataFrame) -> DataFrame:
     return _attach(docs, payload)
 
 
-def audio_features(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
-) -> DataFrame:
+def audio_features(df: DataFrame) -> DataFrame:
     """REAL audio decode over a binary column (mapInArrow): RIFF PCM16 WAV
     decodes to rate/channels/sample-count + integer absolute energy; codec
     formats (MP3 magic) surface outcome='codec_unavailable'; garbage
@@ -367,7 +316,7 @@ def audio_features(
             return [("mp3", "codec_unavailable", 0, 0, 0, 0)]
         return [("unknown", "undecodable", 0, 0, 0, 0)]
 
-    return _decode(df, payload_col, id_col, rows, AUDIO_FEATURES_SCHEMA)
+    return _decode(df, rows, AUDIO_FEATURES_SCHEMA)
 
 
 VIDEO_FRAME_SCHEMA = StructType(
@@ -398,12 +347,7 @@ def attach_y4m(docs: DataFrame) -> DataFrame:
     return _attach(docs, payload)
 
 
-def video_frame_sample(
-    df: DataFrame,
-    every: int = 2,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def video_frame_sample(df: DataFrame, every: int = 2) -> DataFrame:
     """REAL video frame-sampling over a binary column (mapInArrow): every
     `every`-th frame of a y4m stream is decoded (luma-plane integer sum);
     the frames in between are skipped by offset arithmetic — the per-frame
@@ -422,18 +366,14 @@ def video_frame_sample(
             for fr in frames
         ]
 
-    return _decode(df, payload_col, id_col, rows, VIDEO_FRAME_SCHEMA)
+    return _decode(df, rows, VIDEO_FRAME_SCHEMA)
 
 
-def media_metadata(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-    decoder: Callable[[bytes], dict] = fake_decoder,
-) -> DataFrame:
-    """Arrow-batched metadata + pluggable decode over a binary column
-    (default: the deterministic fake used by the closed-form gate; the REAL
-    decode paths are image_features / audio_features / video_frame_sample).
+def media_metadata(df: DataFrame) -> DataFrame:
+    """Arrow-batched metadata over a binary column, with the deterministic
+    stand-in dimensions the closed-form gate reads (width = byte 0, height =
+    byte 1); the REAL decode paths are image_features / audio_features /
+    video_frame_sample.
 
     One mapInArrow crossing (map_rows): the bytes move in Arrow batches
     and become Python bytes once per batch. For multi-MB media blobs cap
@@ -443,18 +383,17 @@ def media_metadata(
     """
 
     def rows(b):
-        d = decoder(b)
         return [
             (
                 len(b),
                 b[:4].hex(),
-                int(d.get("width", 0)),
-                int(d.get("height", 0)),
+                b[0] if b else 0,
+                b[1] if len(b) > 1 else 0,
                 int.from_bytes(b[:4], "big") if len(b) >= 4 else 0,
             )
         ]
 
-    return _decode(df, payload_col, id_col, rows, MEDIA_META_SCHEMA)
+    return _decode(df, rows, MEDIA_META_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -498,9 +437,7 @@ def attach_mp3(docs: DataFrame) -> DataFrame:
     return _attach(docs, payload)
 
 
-def mp3_frame_stats(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
-) -> DataFrame:
+def mp3_frame_stats(df: DataFrame) -> DataFrame:
     """REAL MPEG-1 Layer III frame-header walk over a binary column
     (core/av.mp3_info): bitrate / sample rate / frame count / exact
     duration WITHOUT decoding audio (payload Huffman data still needs a
@@ -518,7 +455,7 @@ def mp3_frame_stats(
             d["has_id3"], d["is_cbr"],
         )]
 
-    return _decode(df, payload_col, id_col, rows, MP3_META_SCHEMA)
+    return _decode(df, rows, MP3_META_SCHEMA)
 
 
 MP4_META_SCHEMA = StructType(
@@ -560,9 +497,7 @@ def attach_mp4(docs: DataFrame) -> DataFrame:
     return _attach(docs, payload)
 
 
-def mp4_box_stats(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
-) -> DataFrame:
+def mp4_box_stats(df: DataFrame) -> DataFrame:
     """REAL ISO-BMFF box-tree walk over a binary column (core/av.mp4_info):
     brand / duration / track dims / sample count WITHOUT touching mdat —
     at 100 TB this is a handful of range-reads per object, never a full
@@ -580,7 +515,7 @@ def mp4_box_stats(
             d["n_samples"],
         )]
 
-    return _decode(df, payload_col, id_col, rows, MP4_META_SCHEMA)
+    return _decode(df, rows, MP4_META_SCHEMA)
 
 
 EXIF_META_SCHEMA = StructType(
@@ -638,9 +573,7 @@ def attach_exif_jpeg(docs: DataFrame) -> DataFrame:
     return _attach(docs, payload)
 
 
-def exif_meta_stats(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
-) -> DataFrame:
+def exif_meta_stats(df: DataFrame) -> DataFrame:
     """Header-only EXIF walk over a JPEG binary column (core/exif.exif_info):
     orientation / make / timestamp / GPS micro-degrees / SOF dims without
     ever touching entropy-coded data — a bounded range-read per object at
@@ -661,7 +594,7 @@ def exif_meta_stats(
             d["lon_udeg"], d["n_ifd0"], d["width"], d["height"],
         )]
 
-    return _decode(df, payload_col, id_col, rows, EXIF_META_SCHEMA)
+    return _decode(df, rows, EXIF_META_SCHEMA)
 
 
 ID3_META_SCHEMA = StructType(
@@ -717,9 +650,7 @@ def _int_or_none(s):
         return None
 
 
-def id3_meta_stats(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
-) -> DataFrame:
+def id3_meta_stats(df: DataFrame) -> DataFrame:
     """ID3v2 text-frame walk + MP3 frame count over a binary column
     (core/av.id3v2_text_frames + mp3_info) — header-only, audio payload
     never read. Degrades per row: no MP3 stream at all -> 'unparseable';
@@ -742,7 +673,7 @@ def id3_meta_stats(
             m["n_frames"] if m else 0,
         )]
 
-    return _decode(df, payload_col, id_col, rows, ID3_META_SCHEMA)
+    return _decode(df, rows, ID3_META_SCHEMA)
 
 
 WEBP_META_SCHEMA = StructType(
@@ -795,9 +726,7 @@ def attach_webp(docs: DataFrame) -> DataFrame:
     return _attach(docs, payload)
 
 
-def webp_meta_stats(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
-) -> DataFrame:
+def webp_meta_stats(df: DataFrame) -> DataFrame:
     """Header-only WebP walk over a binary column (core/webp.webp_info):
     variant / dimensions / VP8X feature flags / container length without
     decoding any coefficient data — a bounded range-read per object at
@@ -816,7 +745,7 @@ def webp_meta_stats(
             d["riff_bytes"],
         )]
 
-    return _decode(df, payload_col, id_col, rows, WEBP_META_SCHEMA)
+    return _decode(df, rows, WEBP_META_SCHEMA)
 
 
 WEBP_FRAMES_SCHEMA = StructType(
@@ -871,9 +800,7 @@ def attach_webp_anim(docs: DataFrame) -> DataFrame:
     return _attach(docs, payload)
 
 
-def webp_frame_stats(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
-) -> DataFrame:
+def webp_frame_stats(df: DataFrame) -> DataFrame:
     """Animation walk over a WebP binary column (core/webp.webp_frames):
     frame count, loop count, total duration, blend/dispose accounting, and
     a frame-offset checksum — from the 16-byte ANMF headers only, frame
@@ -896,7 +823,7 @@ def webp_frame_stats(
             return [("webp", "not_animated") + (None,) * 6]
         return [("webp", "unparseable") + (None,) * 6]
 
-    return _decode(df, payload_col, id_col, rows, WEBP_FRAMES_SCHEMA)
+    return _decode(df, rows, WEBP_FRAMES_SCHEMA)
 
 
 AVIF_META_SCHEMA = StructType(
@@ -948,9 +875,7 @@ def attach_avif(docs: DataFrame) -> DataFrame:
     return _attach(docs, payload)
 
 
-def avif_meta_stats(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
-) -> DataFrame:
+def avif_meta_stats(df: DataFrame) -> DataFrame:
     """Header-only AVIF walk over a binary column (core/avif.avif_info):
     brand / codec binding / spatial extents / bit depth / rotation / item
     count / alpha / payload accounting, reading only ftyp + meta + the
@@ -971,4 +896,4 @@ def avif_meta_stats(
             d["file_bytes"],
         )]
 
-    return _decode(df, payload_col, id_col, rows, AVIF_META_SCHEMA)
+    return _decode(df, rows, AVIF_META_SCHEMA)

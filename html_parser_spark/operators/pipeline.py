@@ -54,9 +54,11 @@ def clean_corpus(interleaved: DataFrame) -> DataFrame:
     )
 
 
-def training_batches(
-    interleaved: DataFrame, bin_tokens: int = 512, n_shards: int = 8
-) -> DataFrame:
+BIN_TOKENS = 512  # tokens per training bin
+N_SHARDS = 8  # packing shards (shard = doc_id % N_SHARDS)
+
+
+def training_batches(interleaved: DataFrame) -> DataFrame:
     """The FULL training-data prep as one composed plan: extraction ->
     reassembly -> quality gate -> exact-dedup survivor selection -> token
     packing into fixed bins. Output, one row per surviving document:
@@ -65,9 +67,9 @@ def training_batches(
     Scale shape: one mapInArrow crossing (extraction) + TWO wide stages —
     a window MIN over md5(text) picks each duplicate group's survivor
     (no groupBy + join-back), and the per-shard cumulative token window
-    assigns bins (shard = doc_id % n_shards keeps the packing
+    assigns bins (shard = doc_id % N_SHARDS keeps the packing
     deterministic AND bounded per partition; a trillion-doc run raises
-    n_shards, nothing else changes). Quality/token math reuses
+    N_SHARDS, nothing else changes). Quality/token math reuses
     functions/text.quality verbatim."""
     from pyspark.sql import Window
 
@@ -79,7 +81,7 @@ def training_batches(
     ).where("doc_id = rep_doc_id")
     sharded = surv.select(
         "doc_id",
-        F.expr(f"cast(doc_id % {n_shards} as int)").alias("shard"),
+        F.expr(f"cast(doc_id % {N_SHARDS} as int)").alias("shard"),
         F.col("n_tokens_bpe").alias("n_tokens"),
     )
     w = (
@@ -91,7 +93,7 @@ def training_batches(
         sharded.withColumn(
             "cum_before", F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
         )
-        .withColumn("bin_id", F.expr(f"cast(div(cum_before, {bin_tokens}) as bigint)"))
-        .withColumn("bin_offset", F.expr(f"cast(cum_before % {bin_tokens} as bigint)"))
+        .withColumn("bin_id", F.expr(f"cast(div(cum_before, {BIN_TOKENS}) as bigint)"))
+        .withColumn("bin_offset", F.expr(f"cast(cum_before % {BIN_TOKENS} as bigint)"))
         .select("doc_id", "shard", "n_tokens", "bin_id", "bin_offset")
     )

@@ -77,14 +77,10 @@ def serialize_one(html: str) -> tuple[Optional[str], str, Optional[str]]:
     return "".join(parts), STATUS_OK, None
 
 
-def serialize_html(
-    df: DataFrame,
-    html_col: str = "html",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(id, html) -> (doc_id, html_out, status, error)."""
+def serialize_html(df: DataFrame) -> DataFrame:
+    """(doc_id, html) -> (doc_id, html_out, status, error)."""
     return map_rows(
-        df.select(F.col(id_col).cast("string"), html_col),
+        df.select(F.col("doc_id").cast("string"), "html"),
         lambda doc_id, h: [(doc_id,) + serialize_one(h if h is not None else "")],
         SERIALIZE_SCHEMA,
     )

@@ -7,8 +7,9 @@ containers and INTO the extraction pipeline without a driver-side loop.
 Two halves, mirroring the PDF branch (core/pdf.py synth/read):
 
   synth_warc_files  build deterministic multi-record WARC files FROM a
-                    documents table, entirely in Spark expressions (one
-                    groupBy) — the test/bench fixture, no external data.
+                    documents table in Spark expressions (one groupBy;
+                    gzip, when asked, is one mapInArrow crossing) — the
+                    test/bench fixture, no external data.
   warc_records      split WARC bytes into records distributively via ONE
                     mapInArrow crossing: a pure-Python scanner per file
                     blob — header parse, Content-Length payload slicing,
@@ -32,16 +33,24 @@ import hashlib
 import zlib
 from typing import Iterator
 
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, StringType, StructField, StructType
+from pyspark.sql.types import (
+    BinaryType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from ..operators.arrow_rows import map_rows
-from ..worker import on_worker
 
 URL_PREFIX = "https://corpus.example"
+
+FILE_SCHEMA = StructType(
+    [StructField("file_id", LongType()), StructField("content", BinaryType())]
+)
 
 RECORD_SCHEMA = StructType(
     [
@@ -77,7 +86,7 @@ def synth_warc_files(
     map-side-combinable groupBy; the per-record string is a narrow
     projection. ``compress=True`` gzips each file as ONE member (the
     .warc.gz spec allows member-per-record or whole-file members; the
-    reader handles both)."""
+    reader handles both) in one mapInArrow crossing (map_rows)."""
     recs = docs.select(
         (F.col("doc_id") / docs_per_file).cast("bigint").alias("file_id"),
         "doc_id",
@@ -94,12 +103,11 @@ def synth_warc_files(
         )
     )
     if compress:
-        @F.pandas_udf("binary")
-        @on_worker
-        def _gz(s: pd.Series) -> pd.Series:
-            return s.map(lambda b: gzip.compress(b, 6, mtime=0))
-
-        files = files.select("file_id", _gz("content").alias("content"))
+        files = map_rows(
+            files,
+            lambda file_id, b: [(file_id, gzip.compress(b, 6, mtime=0))],
+            FILE_SCHEMA,
+        )
     return files
 
 
@@ -163,14 +171,14 @@ def _scan_records(blob: bytes) -> Iterator[tuple]:
         pos = min(body_start + clen + 4, n)
 
 
-def warc_records(files: DataFrame, content_col: str = "content") -> DataFrame:
+def warc_records(files: DataFrame) -> DataFrame:
     """Split WARC file blobs into per-record rows (RECORD_SCHEMA) with ONE
-    mapInArrow crossing (map_rows). Input needs only ``content_col``
+    mapInArrow crossing (map_rows). Input needs only ``content``
     (binary); extra columns are dropped (project path/file_id back by
     joining downstream if per-file lineage is needed). A null blob yields
     no rows."""
     return map_rows(
-        files.select(F.col(content_col).alias("content")),
+        files.select("content"),
         lambda blob: _scan_records(bytes(blob)) if blob is not None else (),
         RECORD_SCHEMA,
     )

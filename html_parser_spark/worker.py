@@ -1,7 +1,7 @@
 """The one bootstrap every Python worker entry point of the package runs.
 
-Every `mapInArrow`, `pandas_udf` and `applyInPandasWithState` function is
-passed to Spark as `on_worker(fn)`; a structural test pins that.
+Every `mapInArrow` and `applyInPandasWithState` function is passed to
+Spark as `on_worker(fn)`; a structural test pins that.
 
 Why it exists: pyspark's worker calls `importlib.invalidate_caches()` at
 the start of every task (`pyspark/worker_util.setup_spark_files`), and a

@@ -215,7 +215,7 @@ def q_corpus_filter_funnel(spark, sf_dir):
     return TXT.filter_funnel(documents(spark, sf_dir))
 
 
-@query("source_warc_roundtrip", crossings=("ArrowEvalPython", "MapInArrow"), pins=(
+@query("source_warc_roundtrip", crossings=("MapInArrow", "MapInArrow"), pins=(
     ("one exchange total: the pack-into-files groupBy (the record "
      "splitter adds no shuffle)",
      lambda p: nodes(p, "Exchange") == 1),

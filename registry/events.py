@@ -73,11 +73,10 @@ def _hll_oracle(key_sql: str) -> str:
 
 
 def _events_utc(spark, sf_dir):
-    """events with the session clock pinned to UTC so epoch arithmetic
-    matches DuckDB's (same convention as q_events_sessionize); ts is cast
-    NTZ -> TIMESTAMP (wall-clock preserving under UTC) because
+    """events read under the entry's UTC session clock
+    (__spark_entry__._scoped) so epoch arithmetic matches DuckDB's; ts is
+    cast NTZ -> TIMESTAMP (wall-clock preserving under UTC) because
     unix_micros() rejects TIMESTAMP_NTZ."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return spark.read.parquet(f"{sf_dir}/events.parquet").withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
@@ -151,9 +150,9 @@ def q_events_sessionize(spark, sf_dir):
     same partitioning, so Catalyst plans a single Exchange. Second-precision
     epoch arithmetic keeps both engines integer-exact.
     """
-    # ts is TIMESTAMP_NTZ: interpret the wall-clock as UTC (same convention
-    # as DuckDB's epoch()) so both engines compute identical integer seconds
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    # ts is TIMESTAMP_NTZ: the entry's UTC session clock reads the
+    # wall-clock as UTC (same convention as DuckDB's epoch()) so both
+    # engines compute identical integer seconds
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         "user_id",
         "event_id",

@@ -48,7 +48,6 @@ def q_tpch_pricing(spark, sf_dir):
     cents. ONE map-side-combinable groupBy over a pruned scan with the
     shipdate filter pushed down — the canonical wide-scan aggregate."""
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return (
         li.where(F.col("l_shipdate") <= F.lit("2001-09-01").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -104,7 +103,6 @@ def q_tpch_top_orders(spark, sf_dir):
     (never shuffles the fact side), lineitem joins orders on the natural
     orderkey co-partition, the revenue groupBy reuses that partitioning,
     and the top-10 is a TakeOrdered."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     cutoff = F.lit("1998-06-01").cast("timestamp")
     cust = (
         spark.read.parquet(f"{sf_dir}/customer.parquet")
@@ -169,7 +167,6 @@ def q_tpch_regional_revenue(spark, sf_dir):
     nation -> supplier, plus customer) broadcasts, so the only wide work is
     lineitem x orders on orderkey; the customer/supplier nation-match
     condition rides the broadcast joins."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     sup = (
         spark.read.parquet(f"{sf_dir}/supplier.parquet")
         .join(
@@ -234,7 +231,6 @@ def q_tpch_late_orders(spark, sf_dir):
     one bit per order crosses the join, the lineitem side is never
     duplicated into the aggregate (the EXISTS-subquery plan, not a
     join+distinct)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet").where(
         (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
@@ -273,7 +269,6 @@ def q_tpch_inactive_customers(spark, sf_dir):
     NOT EXISTS plans as LeftAnti on custkey — the complement of
     tpch_late_orders' semi probe; together they pin both existence
     shapes the engine must never rewrite into join+distinct."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
         "c_custkey", "c_mktsegment"
     )

@@ -17,6 +17,7 @@ import pytest
 import __spark_entry__ as entrymod
 from registry.plans import crossings, explain_str
 from tools.gate_check import TABLES, rows_to_multiset, type_drift
+from tools.plan_audit import stable_ids
 
 SF_DIR = os.environ.get("SPARK_GRAFT_GATE_SF", "/root/testdata/sf0.001")
 
@@ -62,6 +63,24 @@ def test_type_drift_reports_a_describe_error(con):
     type check."""
     drift = type_drift(None, con, "SELECT * FROM no_such_table")
     assert len(drift) == 1 and drift[0].startswith("DESCRIBE raised")
+
+
+def test_session_zone_does_not_leak_between_entries(spark):
+    """Every entry sets the UTC session clock itself, so a query's plan does
+    not depend on which entries were built before it: extract_links plans
+    the same in a session whose own zone is not UTC as after an
+    events_gapfill build."""
+    qs = entrymod.queries()
+    own = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        before = stable_ids(explain_str(qs["extract_links"](spark, SF_DIR)))
+        qs["events_gapfill"](spark, SF_DIR)
+        after = stable_ids(explain_str(qs["extract_links"](spark, SF_DIR)))
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", own)
+    assert "Some(UTC)" in before
+    assert before == after
 
 
 def test_entry_smoke(spark):

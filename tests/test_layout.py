@@ -1,4 +1,4 @@
-"""PDF/layout branch: routing, ref-only plumbing, and the REAL pure-Python
+"""PDF/layout branch: routing and the REAL pure-Python
 PDF text extractor (core/pdf.py) — round-trip vs the synthesizer, hand-
 crafted content streams, malformed input, and the Spark binary-column
 path (operators/layout.parse_layout_payloads)."""
@@ -11,8 +11,6 @@ from html_parser_spark.core.pdf import pdf_text_blocks, synth_pdf
 from html_parser_spark.operators.extract import INPUT_SCHEMA, extract_spans
 from html_parser_spark.operators.layout import (
     attach_pdf,
-    fake_layout_parser,
-    parse_layout,
     parse_layout_payloads,
     route_media,
 )
@@ -38,20 +36,6 @@ def test_routing(extracted):
     layout, passthrough = route_media(extracted)
     assert {r["media_ref"] for r in layout.collect()} == {"s3://x/a.pdf", "s3://x/c.DOCX"}
     assert {r["media_ref"] for r in passthrough.collect()} == {"s3://x/b.jpg", "noextension"}
-
-
-def test_layout_parse_deterministic(extracted):
-    layout, _ = route_media(extracted)
-    rows = parse_layout(layout).collect()
-    assert rows, "layout parse produced no blocks"
-    # same input -> same blocks, ordered within a ref
-    again = parse_layout(layout).collect()
-    assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
-    for ref in {r["media_ref"] for r in rows}:
-        blocks = [r for r in rows if r["media_ref"] == ref]
-        orders = sorted(r["block_order"] for r in blocks)
-        assert orders == list(range(len(blocks)))
-        assert fake_layout_parser(ref)  # kernel used the same fake
 
 
 def test_pdf_round_trip_both_filters():

@@ -4,14 +4,7 @@ from __future__ import annotations
 
 import hashlib
 
-import pytest
-
-from html_parser_spark.operators.multimodal import (
-    attach_payload,
-    fake_decoder,
-    media_metadata,
-    real_decoder,
-)
+from html_parser_spark.operators.multimodal import attach_payload, media_metadata
 
 
 def test_metadata_kernel(spark):
@@ -30,26 +23,6 @@ def test_null_payload_safe(spark):
     df = spark.createDataFrame([("x", None)], "doc_id string, payload binary")
     r = media_metadata(df).collect()[0]
     assert (r["n_bytes"], r["magic"], r["checksum"]) == (0, "", 0)
-
-
-def test_real_decoder_decodes_bmp_png_and_stubs_codecs():
-    from html_parser_spark.core.image import synth_bmp, synth_png
-
-    d = real_decoder(synth_bmp(6, 4, (9, 8, 7)))
-    assert d == {"format": "bmp", "width": 6, "height": 4}
-    d = real_decoder(synth_png(7, 5, (9, 8, 7), rgba=True))
-    assert d == {"format": "png", "width": 7, "height": 5}
-    from html_parser_spark.core.gif import synth_gif
-
-    d = real_decoder(synth_gif(3, 8, (1, 2, 3)))
-    assert d == {"format": "gif", "width": 3, "height": 8}
-    # codec formats remain an explicit, clearly-marked stub
-    with pytest.raises(NotImplementedError):
-        real_decoder(b"\xff\xd8\xff\xe0" + b"\x00" * 16)  # JPEG
-    with pytest.raises(ValueError):
-        real_decoder(b"BM" + b"\x00" * 64)  # malformed BMP is loud here
-    with pytest.raises(ValueError):
-        real_decoder(b"\x89PNG\r\n\x1a\n" + b"\x00" * 16)  # malformed PNG too
 
 
 def test_image_features_outcomes(spark):

@@ -26,8 +26,10 @@ def test_main_exits_2_on_missing_sf(monkeypatch, tmp_path, capsys, arg):
     assert "no such sf directory" in capsys.readouterr().err
 
 
-def test_stable_ids_blanks_only_the_session_zone():
-    plan = "sequence(0, n#12L, None, Some(Etc/UTC)), from_json(s, j#3, Some(UTC))"
-    assert plan_audit.stable_ids(plan, "Etc/UTC") == (
-        "sequence(0, n#_L, None, Some(_)), from_json(s, j#_, Some(UTC))"
+def test_stable_ids_blanks_only_counter_ids():
+    """Expression, exchange-plan and RDD ids are blanked; the session zone
+    every entry sets (UTC) prints as it is."""
+    plan = "n#12L, Some(UTC), Exchange (plan_id=7), MapPartitionsRDD[144]"
+    assert plan_audit.stable_ids(plan) == (
+        "n#_L, Some(UTC), Exchange (plan_id=_), MapPartitionsRDD[_]"
     )

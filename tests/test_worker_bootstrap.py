@@ -131,5 +131,5 @@ def test_every_worker_entry_point_runs_the_bootstrap():
                 if not (call.args and isinstance(call.args[0], ast.Call)
                         and _named(call.args[0], "on_worker")):
                     unwrapped.append(f"{path.name}:{call.lineno}")
-    assert len(sites) >= 7, sites  # 2 mapInArrow, 1 pandas_udf, 4 applyInPandasWithState
+    assert len(sites) == 6, sites  # 2 mapInArrow, 4 applyInPandasWithState
     assert not unwrapped, f"worker entry points without on_worker: {unwrapped}"

@@ -20,15 +20,12 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 
-def stable_ids(plan: str, zone: str) -> str:
+def stable_ids(plan: str) -> str:
     """Blank expression ids (`doc_id#123L`), exchange plan ids and RDD ids
     (`MapPartitionsRDD[144]`): all come from JVM-wide counters that shift
     whenever an earlier query builds a node more or less, so PLANS_AUDIT.md
-    would change on every run. Also blank the session time-zone id `zone`
-    that Spark prints inside expressions (`Some(Etc/UTC)` -> `Some(_)`):
-    its spelling follows the host, not the plan."""
-    plan = re.sub(r"(#|plan_id=|RDD\[)\d+", r"\1_", plan)
-    return plan.replace(f"Some({zone})", "Some(_)")
+    would change on every run."""
+    return re.sub(r"(#|plan_id=|RDD\[)\d+", r"\1_", plan)
 
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.01"
@@ -71,7 +68,6 @@ def main() -> int:
     failures = 0
     for name, pins in E.plan_pins().items():
         plan = explain_str(qs[name](spark, sf_dir))
-        zone = spark.conf.get("spark.sql.session.timeZone")  # a builder may set it
         out.append(f"\n## {name}\n")
         want = tuple(sorted(E.PYTHON_CROSSINGS.get(name, ())))
         checks = [*pins, (f"Python crossings are exactly {list(want)}",
@@ -81,7 +77,7 @@ def main() -> int:
             failures += not ok
             out.append(f"- {'PASS' if ok else 'FAIL'}: {desc}")
             print(f"{'PASS' if ok else 'FAIL'} {name}: {desc}")
-        out.append("\n```\n" + stable_ids(plan.strip(), zone)[:4000] + "\n```")
+        out.append("\n```\n" + stable_ids(plan.strip())[:4000] + "\n```")
     with open(os.path.join(ROOT, "PLANS_AUDIT.md"), "w") as f:
         f.write("\n".join(out) + "\n")
     spark.stop()
