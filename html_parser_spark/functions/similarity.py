@@ -109,10 +109,10 @@ N_IVF_CELLS = 16
 
 def ivf_assign(embs: DataFrame) -> DataFrame:
     """IVF coarse quantization with deterministic centroids: the first
-    N_IVF_CELLS vectors (vec_id < N_IVF_CELLS) act as centroids (a k-means seeding
-    step stands in for trained centroids — deterministic and oracle-exact);
-    every vector is assigned to its max-cosine centroid (ties -> lowest
-    centroid id). Adds a `cell` column."""
+    N_IVF_CELLS vectors (vec_id < N_IVF_CELLS) act as centroids (a k-means
+    seeding step stands in for trained centroids — deterministic and
+    oracle-exact); every vector is assigned to its max-cosine centroid
+    (ties -> lowest centroid id). Adds a `cell` column."""
     cents = F.broadcast(
         embs.where(F.col("vec_id") < N_IVF_CELLS).select(
             F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_emb")

@@ -6,6 +6,7 @@ use, and that value belongs in the body as a constant. No Spark."""
 from __future__ import annotations
 
 import ast
+from collections import defaultdict
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
@@ -48,33 +49,30 @@ def options():
 
 
 def _set_by_calls():
-    """{function name: (keywords passed, widest positional count)} over every
+    """(keywords passed, widest positional count) per called name, over every
     call in the callers; a `*args` or `**kwargs` splat counts as setting all."""
-    seen = {}
+    keywords, width = defaultdict(set), defaultdict(int)
     for path in _caller_files():
         for call in ast.walk(ast.parse(path.read_text())):
             if not isinstance(call, ast.Call):
                 continue
             f = call.func
-            name = f.id if isinstance(f, ast.Name) else f.attr if isinstance(f, ast.Attribute) else None
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
             if name is None:
                 continue
-            kws, width = seen.setdefault(name, (set(), [0]))
-            if any(isinstance(x, ast.Starred) for x in call.args):
-                width[0] = 10**6
-            width[0] = max(width[0], len(call.args))
-            for k in call.keywords:
-                kws.add(k.arg if k.arg is not None else "**")
-    return seen
+            splat = any(isinstance(x, ast.Starred) for x in call.args)
+            width[name] = max(width[name], float("inf") if splat else len(call.args))
+            keywords[name] |= {k.arg or "**" for k in call.keywords}
+    return keywords, width
 
 
 def unset_options():
-    seen = _set_by_calls()
+    keywords, width = _set_by_calls()
     missing = []
     for (path, name), opts in options().items():
-        kws, width = seen.get(name, (set(), [0]))
         for opt, idx in opts:
-            if opt in kws or "**" in kws or (idx is not None and idx < width[0]):
+            kws = keywords[name]
+            if opt in kws or "**" in kws or (idx is not None and idx < width[name]):
                 continue
             missing.append(f"{path}:{name}({opt}=)")
     return missing
